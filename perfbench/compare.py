@@ -76,9 +76,9 @@ def main(argv=None) -> int:
               file=sys.stderr)
 
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
-    layers = json.loads((HERE / "layers.json").read_text())["layers"]
     e2e = {m["name"]: m for m in spec["end_to_end"]}
-    higher_better = {m["name"] for m in spec["end_to_end"] + layers if m["better"] == "higher"}
+    # every layer is lower-is-better (layers.py)
+    higher_better = {m["name"] for m in spec["end_to_end"] if m["better"] == "higher"}
     print(f"{shapes.pop()[0]}: {len(seeds)} paired seeds")
     print(f"{'metric':44} {'base median [q1, q3]':>30} {'new median [q1, q3]':>30} "
           f"{'change':>8} {'wins':>6}  verdict")

@@ -15,6 +15,8 @@ from contextlib import contextmanager
 
 from py4j.protocol import Py4JJavaError
 
+from layers import COUNTERS
+
 
 def cores() -> int:
     """Cores this process may run on: the affinity mask, never a default."""
@@ -46,6 +48,20 @@ def host_shape(spark) -> dict:
         "java": spark._jvm.System.getProperty("java.version"),
         "master": spark.sparkContext.master,
     }
+
+
+def cpu_jiffies() -> tuple[int, int]:
+    """(all, steal) jiffies of the machine from /proc/stat. Steal is the
+    time this machine's virtual CPUs waited for the host, so a rise in the
+    steal share over a pass shows a neighbour, not the program, slowed it."""
+    with open("/proc/stat") as f:
+        fields = [int(x) for x in f.readline().split()[1:]]
+    return sum(fields[:8]), fields[7] if len(fields) > 7 else 0
+
+
+def steal_share(before: tuple[int, int], after: tuple[int, int]) -> float:
+    total = after[0] - before[0]
+    return (after[1] - before[1]) / total if total else 0.0
 
 
 # -- peak resident memory of this process, the Spark JVM and the Python workers --
@@ -132,9 +148,6 @@ class Tracer:
 
 
 # -- Spark counters --
-
-COUNTERS = ("jobs", "stages", "tasks", "failed_tasks", "shuffle_bytes", "spill_bytes")
-
 
 def group_counters(spark, group: str) -> dict[str, int]:
     """Counts for every job run under job group ``group``: jobs from the

@@ -41,7 +41,7 @@ HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 
 SIZES = {
-    "full": {"crawl_pages": 16_000, "pipeline_pages": 4_000, "docs": 400, "setup_rounds": 1,
+    "full": {"crawl_pages": 16_000, "pipeline_pages": 8_000, "docs": 400, "setup_rounds": 1,
              "layer_reps": 3, "sample": 200, "core_sample": 300, "core_reps": 5},
     "smoke": {"crawl_pages": 400, "pipeline_pages": 400, "docs": 300, "setup_rounds": 2,
               "layer_reps": 1, "sample": 40, "core_sample": 40, "core_reps": 1},
@@ -111,7 +111,8 @@ def _running(pid: int) -> bool:
 
 
 def bench(args, work: Path) -> dict:
-    from measure import Tracer, host_shape, peak_rss_by_name, process_tree, reset_peak_rss
+    from measure import (Tracer, cpu_jiffies, host_shape, peak_rss_by_name, process_tree,
+                         reset_peak_rss, steal_share)
     from workloads import (WORKLOADS, Pass, Run, core_layers, median, noop, pass_counters,
                            timed)
 
@@ -119,8 +120,11 @@ def bench(args, work: Path) -> dict:
     tracer = Tracer(bool(args.trace))
     wl = WORKLOADS[args.workload]()
     run = Run(spark=None, seed=args.seed, size=size, work=str(work), tracer=tracer)
-    setup_walls, setup_failures = [], []
+    setup_walls, warmup_walls, setup_failures = [], [], []
     session_start_s = None
+    # a traced run warms up once more, so that its first (instrumented)
+    # pass is not slower than the plain ones for want of warm-up
+    warmups = wl.warmup_passes + args.trace
 
     # -- set-up rounds ------------------------------------------------------
     for k in range(size["setup_rounds"]):
@@ -140,10 +144,12 @@ def bench(args, work: Path) -> dict:
             if run.inputs and got != run.inputs:
                 setup_failures.append(f"round {k} input digests {got} != {run.inputs}")
             run.inputs = got
-            for j in range(wl.warmup_passes):
+            for j in range(warmups):
+                t1 = time.perf_counter()
                 with tracer.span("warmup", k):
-                    warm = Pass(-1 - j - k * wl.warmup_passes)
+                    warm = Pass(-1 - j - k * warmups)
                     wl.run_pass(run, warm, instrumented=False)
+                warmup_walls.append(time.perf_counter() - t1)
                 setup_failures += warm.failures
         setup_walls.append(time.perf_counter() - t0)
     spark = run.spark
@@ -158,7 +164,7 @@ def bench(args, work: Path) -> dict:
     measured = 0.0
     while len(passes) + crashed < wl.min_passes or measured < args.seconds:
         p = Pass(len(passes) + crashed)
-        t0 = time.perf_counter()
+        t0, jiffies = time.perf_counter(), cpu_jiffies()
         try:
             wl.run_pass(run, p, instrumented=bool(args.trace) and p.id % 2 == 0)
         except Exception:  # a failed pass is counted, the run goes on
@@ -166,6 +172,7 @@ def bench(args, work: Path) -> dict:
             crashed += 1
             measured += time.perf_counter() - t0
             continue
+        p.steal_share = steal_share(jiffies, cpu_jiffies())
         passes.append(p)
         measured += p.wall
 
@@ -190,6 +197,7 @@ def bench(args, work: Path) -> dict:
     # the JVM's share is printed but carries no bound: its heap grows as G1
     # decides, and the same run's peak varies by a quarter from run to run
     extras = {"peak_rss_mb": (sum(peak_mb.values()), "MiB")}
+    extras["steal_share"] = (median([p.steal_share for p in good]), "ratio")
     if args.workload == "pipeline_resume":
         extras["resume_s"] = (median([p.parts["resume"] for p in good]), "s")
 
@@ -226,7 +234,7 @@ def bench(args, work: Path) -> dict:
     return {
         "workload": args.workload, "seed": args.seed, "size": args.size,
         "seconds": args.seconds, "trace": args.trace, "host": host,
-        "inputs": run.inputs, "setup_walls": setup_walls,
+        "inputs": run.inputs, "setup_walls": setup_walls, "warmup_walls": warmup_walls,
         "passes": [vars(p) | {"failed_ops": sorted(p.failed_ops)} for p in ops],
         "crashed_passes": crashed, "attempted": attempted, "failed": failed,
         "correct": failed == 0 and not setup_failures,
@@ -270,17 +278,8 @@ def main(argv=None) -> int:
     name = f"{args.workload}-seed{args.seed}-trace{args.trace}.json"
     (out / "results" / name).write_text(json.dumps(result, indent=1, default=str))
 
-    if args.trace:
-        listed = {m["name"]: m["unit"] for m in json.loads((HERE / "layers.json").read_text())[
-            "layers"] if args.workload in m["workloads"]}
-        got = {k: unit for k, (_, unit) in result["layers"].items()}
-        if got != listed:
-            raise RuntimeError(f"layers differ from layers.json: measured only "
-                               f"{sorted(got.items() - listed.items())}, listed only "
-                               f"{sorted(listed.items() - got.items())}")
-
-    values = result["end_to_end"] if not args.trace else {
-        k: v for k, (v, _) in result["layers"].items()}
+    values = result["layers"] if args.trace else {
+        m["name"]: (result["end_to_end"][m["name"]], m["unit"]) for m in spec["end_to_end"]}
     wanted = spec["per_layer"] if args.trace else spec["end_to_end"]
     for name, (v, unit) in result["extras"].items():
         print(f"{name} {v:.6g} {unit}")
@@ -292,8 +291,9 @@ def main(argv=None) -> int:
     for m in wanted:
         if m["name"] not in values:  # layer of a workload BENCHMARK.json does not list
             continue
-        metrics[m["name"]] = {"value": values[m["name"]], "unit": m["unit"]}
-        print(f"metric {m['name']} {values[m['name']]:.6g} {m['unit']}")
+        v, unit = values[m["name"]]  # the unit as measured: the tests hold it to m["unit"]
+        metrics[m["name"]] = {"value": v, "unit": unit}
+        print(f"metric {m['name']} {v:.6g} {unit}")
     print(f"operations {result['attempted']} attempted, {result['failed']} failed")
     print(json.dumps({"correct": result["correct"], "attempted": result["attempted"],
                       "failed": result["failed"], "metrics": metrics}), flush=True)

@@ -27,6 +27,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from layers import DEDUP_QUERIES
 from measure import COUNTERS, group_counters, plan_exchanges
 
 from ocr_spark.core.extract import RESULT_COLUMNS, extract_record
@@ -40,8 +41,9 @@ from ocr_spark.plans.partitioning import salted_repartition
 from ocr_spark.sources.iceberg_lite import IcebergLiteTable
 from ocr_spark.sources.pages import synth_pages
 
-DEDUP_QUERIES = ("exact_dedup", "simhash_pairs", "minhash_pairs", "winnow_pairs",
-                 "dedup_clusters")
+CHUNKS = 4  # run_extract's chunks in pipeline_resume
+CORPUS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "corpus",
+                      "documents-sf0.1.parquet")
 
 
 @dataclass
@@ -67,6 +69,7 @@ class Pass:
     failed_ops: set[str] = field(default_factory=set)
     parts: dict[str, float] = field(default_factory=dict)   # op -> timed wall
     counters: dict[str, dict] = field(default_factory=dict)  # instrumented only
+    steal_share: float = 0.0    # share of the machine's CPU time the host stole
 
     def fail(self, op: str, msg: str) -> None:
         self.failed_ops.add(op)
@@ -128,20 +131,28 @@ class Workload:
         """Workload-specific layer metrics, traced runs only."""
         return {}
 
-    def _op(self, run: Run, p: Pass, name: str, instrumented: bool, fn):
-        """Run and time one operation of a pass under its own job group."""
-        group = f"perfbench-{p.id}-{name}"
+    def _op(self, run: Run, p: Pass, name: str, instrumented: bool, fn, plan_of=None):
+        """Run and time one operation of a pass. An instrumented operation
+        runs under its own job group and span, then collects its Spark
+        counters and, if ``plan_of`` maps its result to a DataFrame, that
+        frame's plan exchanges. All of that is inside its timed wall, so
+        instrumented and plain walls differ by what tracing costs."""
+        t0 = time.perf_counter()
         if instrumented:
+            group = f"perfbench-{p.id}-{name}"
             run.spark.sparkContext.setJobGroup(group, name)
-        with run.tracer.span(name, p.id):
-            t0 = time.perf_counter()
+            with run.tracer.span(name, p.id):
+                out = fn()
+            p.counters[name] = group_counters(run.spark, group)
+            run.spark.sparkContext._jsc.clearJobGroup()
+            if plan_of is not None:
+                p.counters[name]["exchanges"] = plan_exchanges(plan_of(out))
+        else:
             out = fn()
-            wall = time.perf_counter() - t0
+        wall = time.perf_counter() - t0
         p.parts[name] = wall
         p.wall += wall
         p.ops += 1
-        if instrumented:
-            p.counters[name] = group_counters(run.spark, group)
         return out
 
 
@@ -191,10 +202,11 @@ class PagesWorkload(Workload):
                              f"differs from serial {want['extract_status']}")
         return fails
 
-    def prefix_walls(self, run, reps: int, stages: tuple[str, ...]) -> dict[str, float]:
+    def prefix_walls(self, run, reps: int) -> dict[str, float]:
         """Median wall of each cumulative prefix of the extraction job,
-        each written to a noop sink; ``parquet`` is the full job. Prefixes
-        run round-robin so drift hits every prefix alike."""
+        each written to a noop sink; ``parquet`` is the full job, whose last
+        output stays in ``ledger-out``. Prefixes run round-robin so drift
+        hits every prefix alike."""
         spark = run.spark
         parts = spark.sparkContext.defaultParallelism * 2  # extract_pages' default
 
@@ -219,19 +231,23 @@ class PagesWorkload(Workload):
         jobs = {"scan": lambda: noop(scan()), "shuffle": lambda: noop(shuffled()),
                 "arrow": lambda: noop(identity()), "parse": lambda: noop(parse()),
                 "parquet": parquet}
-        walls: dict[str, list[float]] = {s: [] for s in stages}
+        walls: dict[str, list[float]] = {s: [] for s in jobs}
         for _ in range(reps):
-            for s in stages:
-                with run.tracer.span(f"ledger.{s}"):
-                    walls[s].append(timed(jobs[s]))
+            for s, job in jobs.items():
                 shutil.rmtree(out_dir, ignore_errors=True)
+                with run.tracer.span(f"ledger.{s}"):
+                    walls[s].append(timed(job))
         return {s: median(w) for s, w in walls.items()}
 
 
 class ExtractCrawl(PagesWorkload):
     name = "extract_crawl"
     pages_key = "crawl_pages"
-    min_passes = 3
+    # one warm-up and the median of four passes: the first, still slow,
+    # falls out of the median, at the run time of two warm-ups and three
+    # passes
+    warmup_passes = 1
+    min_passes = 4
 
     def run_pass(self, run, p, instrumented):
         p.docs = self.n
@@ -242,26 +258,25 @@ class ExtractCrawl(PagesWorkload):
             df.write.parquet(out)
             return df
 
-        df = self._op(run, p, "extract", instrumented, job)
-        if instrumented:
-            self.exchanges = plan_exchanges(df)
-            rows = run.spark.read.parquet(out).groupBy("partition_id").count().collect()
-            counts = [r["count"] for r in rows]
-            self.skew = max(counts) / median(counts)
+        self._op(run, p, "extract", instrumented, job, plan_of=lambda df: df)
         for msg in self.check_extracted(run.spark.read.parquet(out), self.sample):
             p.fail("extract", msg)
         shutil.rmtree(out)
 
     def ledger(self, run, passes):
-        w = self.prefix_walls(run, run.size["layer_reps"],
-                              ("scan", "shuffle", "arrow", "parse", "parquet"))
-        shuffle_bytes = [q.counters["extract"]["shuffle_bytes"] for q in passes if q.counters]
+        w = self.prefix_walls(run, run.size["layer_reps"])
+        out = os.path.join(run.work, "ledger-out")
+        rows = run.spark.read.parquet(out).groupBy("partition_id").count().collect()
+        counts = [r["count"] for r in rows]
+        shutil.rmtree(out)
+        ran = [q.counters["extract"] for q in passes if q.counters]
         return {
             "sources.scan_s": (w["scan"], "s"),
             "plans.partitioning.shuffle_s": (w["shuffle"] - w["scan"], "s"),
-            "plans.partitioning.shuffle_bytes": (median(shuffle_bytes), "bytes"),
-            "plans.partitioning.exchanges": (self.exchanges, "count"),
-            "plans.partitioning.partition_skew": (self.skew, "ratio"),
+            "plans.partitioning.shuffle_bytes": (median([c["shuffle_bytes"] for c in ran]),
+                                                 "bytes"),
+            "plans.partitioning.exchanges": (median([c["exchanges"] for c in ran]), "count"),
+            "plans.partitioning.partition_skew": (max(counts) / median(counts), "ratio"),
             "operators.extract_op.arrow_s": (w["arrow"] - w["shuffle"], "s"),
             "operators.extract_op.parse_s": (w["parse"] - w["arrow"], "s"),
             "sink.parquet_write_s": (w["parquet"] - w["parse"], "s"),
@@ -275,6 +290,10 @@ class PipelineResume(PagesWorkload):
     name = "pipeline_resume"
     pages_key = "pipeline_pages"
     ops_per_pass = 2
+    min_passes = 3
+    # one warm-up: a second would cost a whole pass, and the median of the
+    # timed passes leaves out the first one, still 10-20% slow
+    warmup_passes = 1
 
     def run_pass(self, run, p, instrumented):
         p.docs = self.n
@@ -283,11 +302,11 @@ class PipelineResume(PagesWorkload):
 
         def extract():
             return run_extract(spark, spark.read.parquet(self.pages), root,
-                               run_id=f"run-{p.id}", chunks=4)
+                               run_id=f"run-{p.id}", chunks=CHUNKS)
 
         def resume():
             return run_extract(spark, spark.read.parquet(self.pages), root,
-                               run_id=f"resume-{p.id}", chunks=4)
+                               run_id=f"resume-{p.id}", chunks=CHUNKS)
 
         first = self._op(run, p, "run_extract", instrumented, extract)
         snaps = len(IcebergLiteTable(f"{root}/extracted").snapshots())
@@ -309,10 +328,43 @@ class PipelineResume(PagesWorkload):
         else:
             shutil.rmtree(root)
 
+    def chunk_walls(self, run, reps: int) -> dict[str, float]:
+        """Median wall, summed over the chunks, of each prefix of the chunk
+        jobs ``run_extract`` builds on a fresh table: the chunk filter ->
+        noop (``base``), plus an identity mapInPandas (``arrow``), and
+        ``extract_pages`` with its default ``repartition="auto"`` -> noop
+        (``parse``). Where the auto policy shuffles a chunk, as its executed
+        plan shows, the base and arrow prefixes shuffle it the same way."""
+        spark = run.spark
+        parts = spark.sparkContext.defaultParallelism * 2  # extract_pages' default
+        chunk_col = F.pmod(F.xxhash64("url"), F.lit(CHUNKS))
+
+        def chunk(c):
+            return spark.read.parquet(self.pages).where(chunk_col == c)
+
+        shuffles = [plan_exchanges(extract_pages(chunk(c))) > 0 for c in range(CHUNKS)]
+
+        def base(c):
+            df = chunk(c).select(*INPUT_COLS)
+            return salted_repartition(df, parts) if shuffles[c] else df
+
+        def identity(c):
+            df = base(c)
+            return df.mapInPandas(lambda batches: batches, schema=df.schema)
+
+        prefixes = {"base": base, "arrow": identity,
+                    "parse": lambda c: extract_pages(chunk(c))}
+        walls: dict[str, list[float]] = {s: [] for s in prefixes}
+        for _ in range(reps):
+            for s, frame in prefixes.items():
+                with run.tracer.span(f"ledger.chunks.{s}"):
+                    walls[s].append(sum(timed(lambda: noop(frame(c))) for c in range(CHUNKS)))
+        return {s: median(w) for s, w in walls.items()}
+
     def ledger(self, run, passes):
         spark = run.spark
         reps = run.size["layer_reps"]
-        w = self.prefix_walls(run, reps, ("shuffle", "arrow", "parse"))
+        w = self.chunk_walls(run, reps)
         # extract -> parquet control with run_extract's own partitioning policy
         control = os.path.join(run.work, "control")
 
@@ -343,7 +395,7 @@ class PipelineResume(PagesWorkload):
 
         ran = [q for q in passes if q.counters]
         out = {
-            "operators.extract_op.arrow_s": (w["arrow"] - w["shuffle"], "s"),
+            "operators.extract_op.arrow_s": (w["arrow"] - w["base"], "s"),
             "operators.extract_op.parse_s": (w["parse"] - w["arrow"], "s"),
             "pipeline.overhead_s": (median([q.parts["run_extract"] for q in passes])
                                     - median(control_walls), "s"),
@@ -360,41 +412,34 @@ class PipelineResume(PagesWorkload):
 
 # -- dedup workload ----------------------------------------------------------
 
-DOC_WORDS = ("a agg batch big column customer data fast filter group hash join key "
-             "line merge order part query row scan slow small sort spark stream table "
-             "the value vector window").split()
-DOC_LANGS = ("en", "en", "en", "zh", "de", "fr")
-
-
 def gen_documents(n: int, seed: int) -> pd.DataFrame:
-    """A documents table in the shape of the registry's ``documents``:
-    random word texts, plus planted near-duplicates (~10%, one word
-    replaced, dropped or inserted) and exact duplicates (~2%), shuffled."""
+    """A documents table in the shape of the registry's ``documents``, made
+    from the sf0.1 documents (``corpus/documents-sf0.1.parquet``: text, lang
+    and source of its 5,000 rows): rows resampled with replacement, plus
+    planted near-duplicates (~10%), each a resampled row with one word
+    replaced by, or one inserted as, another word of the same text, or one
+    word dropped; then shuffled and numbered."""
+    src = pq.read_table(CORPUS).to_pylist()
     r = random.Random(seed)
-    n_near, n_exact = n // 10, n // 50
-    base = [" ".join(r.choice(DOC_WORDS) for _ in range(r.randint(5, 90)))
-            for _ in range(n - n_near - n_exact)]
-    texts = list(base)
-    for _ in range(n_near):
-        words = r.choice(base).split()
-        j = r.randrange(len(words))
+    rows = [dict(r.choice(src)) for _ in range(n - n // 10)]
+    for _ in range(n // 10):
+        row = dict(r.choice(rows))
+        words = row["text"].split()
+        j, other = r.randrange(len(words)), r.choice(words)
         edit = r.randrange(3)
         if edit == 0:
-            words[j] = r.choice(DOC_WORDS)
+            words[j] = other
         elif edit == 1:
             del words[j]
         else:
-            words.insert(j, r.choice(DOC_WORDS))
-        texts.append(" ".join(words))
-    texts += [r.choice(base) for _ in range(n_exact)]
-    r.shuffle(texts)
-    return pd.DataFrame({
-        "doc_id": pd.Series(range(n), dtype="int64"),
-        "text": texts,
-        "lang": [r.choice(DOC_LANGS) for _ in range(n)],
-        "source": [f"src{i % 7}" for i in range(n)],
-        "n_chars": pd.Series([len(t) for t in texts], dtype="int64"),
-    })
+            words.insert(j, other)
+        row["text"] = " ".join(words)
+        rows.append(row)
+    r.shuffle(rows)
+    docs = pd.DataFrame(rows, columns=["text", "lang", "source"])
+    docs.insert(0, "doc_id", pd.Series(range(n), dtype="int64"))
+    docs["n_chars"] = docs["text"].str.len().astype("int64")
+    return docs
 
 
 def canon(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -462,9 +507,7 @@ class DedupCorpus(Workload):
                 holder["df"] = build(run.spark, self.sf_dir)
                 return holder["df"].toPandas()
 
-            pdf = self._op(run, p, q, instrumented, query)
-            if instrumented:
-                p.counters[q]["exchanges"] = plan_exchanges(holder["df"])
+            pdf = self._op(run, p, q, instrumented, query, plan_of=lambda _: holder["df"])
             release_cached()
             self.results[q].append((p.id, canon(pdf)))
 

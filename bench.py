@@ -49,7 +49,7 @@ for the whole process tree (JVM + Python workers), not just N task slots.
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     (default 32)
+  SPARK_GRAFT_CPUS     (default: the size of this process's CPU affinity mask)
   OCR_BENCH_PAGES      (default 120000)
   OCR_BENCH_SCALING    (default 1; 0 skips the two-level scaling runs)
   OCR_BENCH_REPS       (default 3; headline + query reps)
@@ -88,7 +88,7 @@ from ocr_spark.session import get_spark  # noqa: E402
 from ocr_spark.sources.pages import synth_pages  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 N_PAGES = int(os.environ.get("OCR_BENCH_PAGES", "120000"))
 DO_SCALING = os.environ.get("OCR_BENCH_SCALING", "1") == "1"
 REPS = int(os.environ.get("OCR_BENCH_REPS", "3"))

@@ -11,7 +11,9 @@ Usage:
     spark-submit ... ocr_spark/jobs.py validate --table-root <root>
 
 The extract job is the full contract: resume from committed snapshots,
-salted repartition, Arrow-batched parse, snapshot commit + metrics rows.
+the "auto" partition policy (salted host shuffle only when the input
+cannot fill the task slots), Arrow-batched parse, snapshot commit +
+metrics rows.
 """
 
 from __future__ import annotations

@@ -6,9 +6,13 @@ UDFs with no per-row Python on the JVM side:
 
 - column pruning up front (only url/html/text/lang cross the Arrow boundary;
   the analog of ROI-only processing, one_key_process.py:476);
-- deterministic salted repartition before the parse (north_rule; the analog
-  of the serial split pre-stage, batch_folder_process.py:824-847, but as a
-  cheap shuffle instead of a serial phase);
+- deterministic salted repartition before the parse when the input cannot
+  fill the task slots, or on request (north_rule; the analog of the serial
+  split pre-stage, batch_folder_process.py:824-847, but as a cheap shuffle
+  instead of a serial phase);
+- one stage for every output shape: the text, markdown and span paths share
+  ``_parse_stage`` (pruning, partition policy, the ``mapInPandas`` call)
+  and one Arrow-batch row loop (``_record_batches``);
 - ``mapInPandas`` iterator: any per-task setup happens once before the batch
   loop (the reference's engine-per-worker amortization,
   one_key_process.py:672-674) — our parser is stateless pure Python, so the
@@ -21,7 +25,7 @@ UDFs with no per-row Python on the JVM side:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -38,10 +42,38 @@ from ..session import EXTRACTED_SCHEMA
 
 INPUT_COLS = ("url", "html", "text", "lang")
 
+RECORD_COLUMNS = (
+    "url", "text", "extract_status", "content_kind", "n_blocks", "bytes_in", "bytes_out"
+)
+
+MARKDOWN_SCHEMA = (
+    "url string, markdown string, extract_status string, "
+    "content_kind string, n_blocks int"
+)
+
 SPANS_SCHEMA = (
     "url string, block_idx int, span_start int, span_end int, "
     "block_text string, heading boolean"
 )
+
+
+def _record_batches(
+    batches: Iterator[pd.DataFrame],
+    record_fn: Callable[..., dict | list[dict]],
+    cols: tuple[str, ...],
+    fan_out: bool = False,
+) -> Iterator[pd.DataFrame]:
+    """The row loop every parse path shares: per Arrow batch, zip the four
+    input columns, map a non-str (NaN/None) ``text`` to None, call
+    ``record_fn`` once per page and lay its records out column-wise.
+    ``record_fn`` returns one dict per page, or with ``fan_out`` a list of
+    dicts (N rows per page)."""
+    for pdf in batches:
+        rows: list[dict] = []
+        add = rows.extend if fan_out else rows.append
+        for url, html, text, lang in zip(*(pdf[c].tolist() for c in INPUT_COLS)):
+            add(record_fn(url, html, text if isinstance(text, str) else None, lang))
+        yield pd.DataFrame({c: [r[c] for r in rows] for c in cols}, copy=False)
 
 
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -51,24 +83,17 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
-    cols = ("url", "text", "extract_status", "content_kind", "n_blocks", "bytes_in", "bytes_out")
-    for pdf in batches:
-        urls = pdf["url"].tolist()
-        htmls = pdf["html"].tolist()
-        texts = pdf["text"].tolist()
-        langs = pdf["lang"].tolist()
-        out: dict[str, list] = {c: [] for c in cols}
-        appends = [out[c].append for c in cols]
-        for i in range(len(urls)):
-            t = texts[i]
-            r = extract_record(
-                urls[i], htmls[i], t if isinstance(t, str) else None, langs[i]
-            )
-            for app, c in zip(appends, cols):
-                app(r[c])
-        frame = pd.DataFrame(out, copy=False)
+    for frame in _record_batches(batches, extract_record, RECORD_COLUMNS):
         frame["partition_id"] = pid
         yield frame
+
+
+def _markdown_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    return _record_batches(batches, extract_markdown_record, MARKDOWN_COLUMNS)
+
+
+def _span_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    return _record_batches(batches, extract_span_rows, SPAN_COLUMNS, fan_out=True)
 
 
 def _bytes_conf(spark, key: str, default: int) -> int:
@@ -111,25 +136,17 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
     return max(1, math.ceil(total / max(max_pb, 1)))
 
 
-def extract_pages(
+def _parse_stage(
     df: DataFrame,
-    num_partitions: int | None = None,
-    salt_buckets: int = 16,
-    repartition: bool | str = "auto",
+    batch_fn: Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]],
+    schema: str,
+    num_partitions: int | None,
+    salt_buckets: int,
+    repartition: bool | str,
 ) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) -> extracted table.
-
-    Returns one row per input row with schema ``EXTRACTED_SCHEMA``.
-
-    ``repartition``: True forces the salted host-hash shuffle (use for
-    host-clustered crawl input — the north_rule skew case); "range" uses
-    ``ranged_repartition`` instead (host-contiguous partitions: better sink
-    compression and shuffle-free per-host downstream at the cost of a
-    sampling pass); False trusts the input partitioning; "auto" shuffles
-    only when the input has fewer partitions than the cluster can run in
-    parallel (uniform, well-split input skips a pointless shuffle of the
-    full payload bytes).
-    """
+    """The one parse stage behind every extraction path: prune to
+    ``INPUT_COLS``, apply the ``repartition`` policy documented on
+    :func:`extract_pages`, then a single ``mapInPandas(batch_fn)``."""
     pruned = df.select(*INPUT_COLS)  # column pruning BEFORE the Arrow boundary
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     if num_partitions is None:
@@ -150,28 +167,30 @@ def extract_pages(
         pruned = ranged_repartition(pruned, num_partitions)
     elif repartition:
         pruned = salted_repartition(pruned, num_partitions, salt_buckets=salt_buckets)
-    return pruned.mapInPandas(_extract_batches, schema=EXTRACTED_SCHEMA)
+    return pruned.mapInPandas(batch_fn, schema=schema)
 
 
-MARKDOWN_SCHEMA = (
-    "url string, markdown string, extract_status string, "
-    "content_kind string, n_blocks int"
-)
+def extract_pages(
+    df: DataFrame,
+    num_partitions: int | None = None,
+    salt_buckets: int = 16,
+    repartition: bool | str = "auto",
+) -> DataFrame:
+    """pages(url, warc_ts, html, text, lang) -> extracted table.
 
+    Returns one row per input row with schema ``EXTRACTED_SCHEMA``.
 
-def _markdown_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        texts = pdf["text"].tolist()
-        rows = [
-            extract_markdown_record(
-                url, html, t if isinstance(t, str) else None, lang
-            )
-            for url, html, t, lang in zip(
-                pdf["url"].tolist(), pdf["html"].tolist(), texts,
-                pdf["lang"].tolist(),
-            )
-        ]
-        yield pd.DataFrame.from_records(rows, columns=list(MARKDOWN_COLUMNS))
+    ``repartition``: True forces the salted host-hash shuffle (use for
+    host-clustered crawl input — the north_rule skew case); "range" uses
+    ``ranged_repartition`` instead (host-contiguous partitions: better sink
+    compression and shuffle-free per-host downstream at the cost of a
+    sampling pass); False trusts the input partitioning; "auto" shuffles
+    only when the input has fewer partitions than the cluster can run in
+    parallel (uniform, well-split input skips a pointless shuffle of the
+    full payload bytes).
+    """
+    return _parse_stage(df, _extract_batches, EXTRACTED_SCHEMA,
+                        num_partitions, salt_buckets, repartition)
 
 
 def extract_page_markdown(
@@ -184,30 +203,8 @@ def extract_page_markdown(
     twin of :func:`extract_pages` — identical keep/drop decisions and
     partitioning policy, but headings/list items/quotes render as markdown
     instead of flattening (core.markdown). One row per input row, P7."""
-    pruned = df.select(*INPUT_COLS)
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if num_partitions is None:
-        num_partitions = parallelism * 2
-    if repartition == "auto":
-        repartition = _estimated_scan_partitions(df) < parallelism
-    if repartition == "range":
-        pruned = ranged_repartition(pruned, num_partitions)
-    elif repartition:
-        pruned = salted_repartition(pruned, num_partitions, salt_buckets=salt_buckets)
-    return pruned.mapInPandas(_markdown_batches, schema=MARKDOWN_SCHEMA)
-
-
-def _span_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        texts = pdf["text"].tolist()
-        rows: list[dict] = []
-        for url, html, t, lang in zip(
-            pdf["url"].tolist(), pdf["html"].tolist(), texts, pdf["lang"].tolist()
-        ):
-            rows.extend(
-                extract_span_rows(url, html, t if isinstance(t, str) else None, lang)
-            )
-        yield pd.DataFrame.from_records(rows, columns=list(SPAN_COLUMNS))
+    return _parse_stage(df, _markdown_batches, MARKDOWN_SCHEMA,
+                        num_partitions, salt_buckets, repartition)
 
 
 def extract_page_spans(
@@ -222,14 +219,5 @@ def extract_page_spans(
     partitioning policy and Arrow batch shape as the text path; the output
     carries (int, int) spans + block text only, so the fan-out rows are
     narrow — at 100 TB the span table is a small fraction of the input."""
-    pruned = df.select(*INPUT_COLS)
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if num_partitions is None:
-        num_partitions = parallelism * 2
-    if repartition == "auto":
-        repartition = _estimated_scan_partitions(df) < parallelism
-    if repartition == "range":
-        pruned = ranged_repartition(pruned, num_partitions)
-    elif repartition:
-        pruned = salted_repartition(pruned, num_partitions, salt_buckets=salt_buckets)
-    return pruned.mapInPandas(_span_batches, schema=SPANS_SCHEMA)
+    return _parse_stage(df, _span_batches, SPANS_SCHEMA,
+                        num_partitions, salt_buckets, repartition)

@@ -3,9 +3,13 @@
 End-to-end lifecycle (the Spark transposition of the reference's
 batch_folder_process.py segment loop, SURVEY §3.2):
 
-    pages ──left_anti(committed urls)──► salted repartition ──mapInPandas──►
-    extracted ──append snapshot──► metrics rows ──append──► metrics table
+    pages ──left_anti(committed urls)──► url-hash chunk filter ──►
+    extract_pages(repartition="auto") ──► extracted ──append snapshot──►
+    metrics rows ──append──► metrics table
 
+- Partitioning: each chunk goes through ``extract_pages``' default "auto"
+  policy — the salted host shuffle runs only when the chunk's scan cannot
+  fill the task slots; a well-split input is parsed where it lies.
 - Resume (north_rule "resumes from the last committed checkpoint"): urls
   already present in committed snapshots are skipped via a broadcast-friendly
   ``left_anti`` join — the analog of the reference's "skip what's done"

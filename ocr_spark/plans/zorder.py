@@ -38,7 +38,8 @@ def zorder_key(
     collected to the driver — len(cols) scalars, the same probe
     discipline as tfidf's corpus count), then bit b of column c lands at
     z-bit ``b*len(cols)+c``. Constant columns normalize to 0. NULLs sort
-    first (normalized 0).
+    first (normalized 0). ``bits * len(cols)`` must be at most 63 (the key
+    is a non-negative long); wider keys raise ValueError.
 
     Safety: only NUMERIC columns are accepted (fail-fast ValueError for
     date/string/etc — their min/max cannot be interpolated into
@@ -51,6 +52,14 @@ def zorder_key(
     rounding at the domain edge cannot escape the key range."""
     if not cols:
         raise ValueError("zorder_key needs at least one column")
+    if bits * len(cols) > 63:
+        # the key is a signed long: z-bit 63 is the sign and shifts past it
+        # wrap, so a wider key would scramble _z instead of failing
+        raise ValueError(
+            f"zorder_key: {len(cols)} columns x {bits} bits = "
+            f"{bits * len(cols)} key bits; at most 63 fit a long key "
+            "(lower bits or cluster on fewer columns)"
+        )
     dtypes = dict(df.dtypes)
     for c in cols:
         if c not in dtypes:

@@ -26,7 +26,8 @@ EXTRACTED_SCHEMA = (
 
 
 # Runtime-settable SQL confs (safe to apply to a spark-submit session that
-# already has its master/resources fixed).
+# already has its master/resources fixed). ``get_spark`` builds with the same
+# dict, so each value lives here only.
 ENGINE_SQL_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
@@ -51,24 +52,18 @@ def get_spark(
 ) -> SparkSession:
     if master is None:
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
-    cores = os.cpu_count() or 8
+    cores = len(os.sched_getaffinity(0))  # the cores this process may run on
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("OCR_SPARK_SHUFFLE_PARTITIONS", cores * 2))
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("OCR_SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**ENGINE_SQL_CONF, **(extra_conf or {})}.items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -17,8 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.extract_op import _extract_batches
-from ..session import EXTRACTED_SCHEMA, PAGES_SCHEMA
+from ..operators.extract_op import extract_pages
+from ..session import PAGES_SCHEMA
 
 
 def read_pages_stream(spark: SparkSession, input_dir: str,
@@ -31,11 +31,11 @@ def read_pages_stream(spark: SparkSession, input_dir: str,
 
 
 def extract_stream(pages: DataFrame) -> DataFrame:
-    """Streaming mapInPandas over the shared extraction core: identical
-    records to the batch path (the golden byte-identity contract holds
-    across batch and streaming execution)."""
-    pruned = pages.select("url", "html", "text", "lang")
-    return pruned.mapInPandas(_extract_batches, schema=EXTRACTED_SCHEMA)
+    """The batch parse stage run on a stream, minus the shuffle (a
+    micro-batch keeps its source partitioning): identical records to the
+    batch path (the golden byte-identity contract holds across batch and
+    streaming execution)."""
+    return extract_pages(pages, repartition=False)
 
 
 def start_extract_stream(

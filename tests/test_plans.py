@@ -4,6 +4,9 @@ the single-exchange parse shape fails CI, not a 100 TB run."""
 
 import contextlib
 import io
+import re
+
+import pytest
 
 import __spark_entry__ as entrymod
 
@@ -11,7 +14,10 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def _plan(spark, name: str) -> str:
-    df = {**entrymod.queries(), **entrymod.extra_queries()}[name](spark, SF_DIR)
+    return _explain({**entrymod.queries(), **entrymod.extra_queries()}[name](spark, SF_DIR))
+
+
+def _explain(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -194,6 +200,32 @@ def test_extract_spans_single_salted_exchange(spark):
     assert _tree(plan).count("Exchange") == 1
     assert "xxhash64" in plan
     assert "_span_batches(url" in plan
+
+
+@pytest.mark.parametrize("repartition", [True, False, "range"])
+def test_parse_entry_points_share_one_partition_policy(spark, repartition):
+    """The text, markdown and span paths are one parse stage: for each
+    repartition policy they plan the same exchanges, and only the four
+    input columns cross into the Python node."""
+    from ocr_spark.operators.extract_op import (
+        extract_page_markdown,
+        extract_page_spans,
+        extract_pages,
+    )
+    from ocr_spark.session import PAGES_SCHEMA
+
+    pages = spark.createDataFrame(
+        [("https://a.example/x", None, b"<p>hi</p>", "hi", "en")], PAGES_SCHEMA
+    )
+    exchanges = set()
+    for entry in (extract_pages, extract_page_markdown, extract_page_spans):
+        plan = _explain(entry(pages, repartition=repartition))
+        exchanges.add(_tree(plan).count("Exchange"))
+        python_input = re.search(r"\) MapInPandas\nInput \[\d+\]: \[(.*?)\]", plan)
+        assert re.sub(r"#\d+L?", "", python_input.group(1)).split(", ") == [
+            "url", "html", "text", "lang"
+        ], entry.__name__
+    assert exchanges == {0 if repartition is False else 1}
 
 
 def test_blockwords_zero_shuffle(spark):

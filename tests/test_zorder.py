@@ -101,3 +101,18 @@ def test_zorder_wide_int64_domain_no_overflow(spark):
     assert z[0] <= z[1] <= z[2] <= z[3]
     assert z[0] < z[3]
     assert all(0 <= v < (1 << 32) for v in z.values())
+
+
+def test_zorder_key_rejects_keys_wider_than_a_long(spark):
+    """4 columns at the default 16 bits need 64 key bits: the shift into
+    the sign bit would scramble _z, so the key must fail fast instead."""
+    import pytest
+
+    df = spark.createDataFrame(
+        [(0, 1, 2, 3), (9, 8, 7, 6)], "a long, b long, c long, d long"
+    )
+    with pytest.raises(ValueError, match="at most 63"):
+        zorder_key(df, ["a", "b", "c", "d"])
+    # 3 x 21 = 63 bits is the widest key that fits: every _z non-negative
+    z = [r["_z"] for r in zorder_key(df, ["a", "b", "c"], bits=21).collect()]
+    assert z == sorted(z) and z[0] == 0 and z[1] > 0

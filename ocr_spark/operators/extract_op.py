@@ -107,11 +107,14 @@ def _bytes_conf(spark, key: str, default: int) -> int:
 
 
 def _estimated_scan_partitions(df: DataFrame) -> int:
-    """Spark file-source bin-packing estimate: effective bytes =
-    sum(file size + openCostInBytes), partitions ~= ceil(effective /
-    maxPartitionBytes). Returns 0 (=> caller shuffles) when the input is
-    not a file scan or sizes are unreachable."""
-    import math
+    """Lower bound on the partitions Spark's file source scans ``df`` in,
+    planned the way ``FilePartition`` plans them: split size
+    ``min(maxPartitionBytes, max(openCostInBytes, sum(size + openCost) /
+    minPartitionNum))``, files packed largest first, next fit, each
+    charged ``size + openCost``. Every file counts as one piece: Spark may
+    cut a file into byte ranges, but a range inside one parquet row group
+    reads no rows, so only a file is sure to carry any. Returns 0 (=> caller
+    shuffles) when the input is not a file scan or sizes are unreachable."""
     import os
     from urllib.parse import urlparse
 
@@ -121,19 +124,30 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
         return 0
     if not files:
         return 0
-    spark = df.sparkSession
-    max_pb = _bytes_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
-    open_cost = _bytes_conf(spark, "spark.sql.files.openCostInBytes", 4 << 20)
-    total = 0
+    sizes = []
     for f in files:
         p = urlparse(f)
         if p.scheme not in ("", "file"):
             return 0  # remote store: sizes not reachable driver-side here
         try:
-            total += os.path.getsize(p.path) + open_cost
+            sizes.append(os.path.getsize(p.path))
         except OSError:
             return 0
-    return max(1, math.ceil(total / max(max_pb, 1)))
+    spark = df.sparkSession
+    max_pb = _bytes_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
+    open_cost = _bytes_conf(spark, "spark.sql.files.openCostInBytes", 4 << 20)
+    min_parts = int(
+        spark.conf.get("spark.sql.files.minPartitionNum", None)
+        or spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    )
+    split = min(max_pb, max(open_cost, sum(s + open_cost for s in sizes) // min_parts))
+    parts, filled = 0, None
+    for size in sorted(sizes, reverse=True):
+        if filled is None or filled + size > split:
+            parts, filled = parts + 1, 0
+        filled += size + open_cost
+    return parts
 
 
 def _parse_stage(
@@ -152,14 +166,12 @@ def _parse_stage(
     if num_partitions is None:
         num_partitions = parallelism * 2
     if repartition == "auto":
-        # Estimate the SCAN partition count the way Spark's file source
-        # bins files — ceil(sum(size + openCost) / maxPartitionBytes) —
-        # and shuffle only when that can't fill the task slots. Raw file
-        # COUNT measures the wrong quantity in both directions: many tiny
-        # files bin-pack into few scan partitions (need the shuffle even
-        # though n_files >= slots), and one huge splittable parquet file
-        # yields many partitions (shuffle pointless even though
-        # n_files == 1). Metadata-only probe: paths + local sizes, no
+        # Shuffle only when the scan cannot fill the task slots, judged by
+        # a lower bound on the scan's partitions that follows Spark's own
+        # file packing (``_estimated_scan_partitions``). Raw file COUNT
+        # measures the wrong quantity: many tiny files pack into few scan
+        # partitions, and one file split into byte ranges yields partitions
+        # that read nothing. Metadata-only probe: paths + local sizes, no
         # DataFrame->RDD conversion, no job. Non-file sources (empty
         # inputFiles) or unreachable sizes shuffle — the safe default.
         repartition = _estimated_scan_partitions(df) < parallelism
@@ -187,7 +199,11 @@ def extract_pages(
     sampling pass); False trusts the input partitioning; "auto" shuffles
     only when the input has fewer partitions than the cluster can run in
     parallel (uniform, well-split input skips a pointless shuffle of the
-    full payload bytes).
+    full payload bytes). "auto" counts the scan partitions from the input's
+    file sizes and Spark's file-packing confs, with each file as one piece.
+    That is a lower bound: Spark may also cut a file into byte ranges, but
+    a range inside one parquet row group reads no rows, so a one-file input
+    still shuffles. A non-file input always shuffles.
     """
     return _parse_stage(df, _extract_batches, EXTRACTED_SCHEMA,
                         num_partitions, salt_buckets, repartition)

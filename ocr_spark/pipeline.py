@@ -3,22 +3,29 @@
 End-to-end lifecycle (the Spark transposition of the reference's
 batch_folder_process.py segment loop, SURVEY §3.2):
 
-    pages ──left_anti(committed urls)──► url-hash chunk filter ──►
-    extract_pages(repartition="auto") ──► extracted ──append snapshot──►
-    metrics rows ──append──► metrics table
+    pages ──left_anti(committed urls)──► todo ──groupBy(chunk).count()──►
+    per chunk with pages left: url-hash filter ──► extract_pages("auto")
+    ──append snapshot(rows=count)──► its files ──► metrics ──append──► table
 
-- Partitioning: each chunk goes through ``extract_pages``' default "auto"
-  policy — the salted host shuffle runs only when the chunk's scan cannot
-  fill the task slots; a well-split input is parsed where it lies.
 - Resume (north_rule "resumes from the last committed checkpoint"): urls
   already present in committed snapshots are skipped via a broadcast-friendly
   ``left_anti`` join — the analog of the reference's "skip what's done"
   segment idempotency (batch_folder_process.py:819-822,873-876).
+- One pre-count per run: a single ``groupBy`` over the anti-join counts the
+  pages left in each chunk (a JVM-only job for file or table input). Chunks
+  with none left build no parse stage, so a no-op resume starts no Python
+  task. The count is each snapshot's ``rows``: the parse emits exactly one
+  row per input row (P7).
 - Chunked commits: the input is split into ``chunks`` deterministic url-hash
   buckets, each committed as its own snapshot — the segment granularity at
-  which a crash loses at most one chunk of work.
+  which a crash loses at most one chunk of work. The append is the chunk's
+  only parse job.
+- Partitioning: each chunk goes through ``extract_pages``' default "auto"
+  policy — the salted host shuffle runs only when the chunk's scan cannot
+  fill the task slots; a well-split input is parsed where it lies.
 - Metrics (FIXTURES.md §4): per-partition docs parsed / failures /
-  bytes in/out — the 识别成功率-and-run-counters analog
+  bytes in/out, read back from the four narrow columns of the files the
+  chunk just committed — the 识别成功率-and-run-counters analog
   (one_key_process.py:890-894; batch_folder_process.py:977-1028).
 
 At 100 TB: chunks map to crawl segments (or partition predicates pushed to
@@ -52,20 +59,17 @@ class ExtractResult:
     docs: int = 0
 
 
-def _partition_metrics(extracted: DataFrame, run_id: str, chunk: int) -> DataFrame:
-    return extracted.groupBy("partition_id").agg(
-        F.count(F.when(~F.col("extract_status").startswith("error"), 1)).alias("docs_parsed"),
-        F.count(F.when(F.col("extract_status").startswith("error"), 1)).alias("parse_failures"),
+def _partition_metrics(written: DataFrame, run_id: str, chunk: int, snap: str) -> DataFrame:
+    failed = F.col("extract_status").startswith("error")
+    return written.groupBy("partition_id").agg(
+        F.count(F.when(~failed, 1)).alias("docs_parsed"),
+        F.count(F.when(failed, 1)).alias("parse_failures"),
         F.sum("bytes_in").alias("bytes_in"),
         F.sum("bytes_out").alias("bytes_out"),
     ).select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(chunk).alias("chunk"),
-        "partition_id",
-        "docs_parsed",
-        "parse_failures",
-        "bytes_in",
-        "bytes_out",
+        F.lit(run_id).alias("run_id"), F.lit(chunk).alias("chunk"), "partition_id",
+        "docs_parsed", "parse_failures", "bytes_in", "bytes_out",
+        F.lit(snap).alias("snapshot_id"),
     )
 
 
@@ -104,27 +108,23 @@ def run_extract(
         todo = pages.join(committed, "url", "left_anti")
 
     chunk_col = F.pmod(F.xxhash64("url"), F.lit(chunks))
+    left = dict(todo.groupBy(chunk_col).count().collect())
     for chunk in range(chunks):
-        chunk_pages = todo.where(chunk_col == chunk)
-        extracted = extract_pages(chunk_pages, num_partitions=num_partitions)
-        # One pass, cached: data commit + metrics derive from the same result.
-        extracted = extracted.persist()
-        n = extracted.count()
+        n = left.get(chunk, 0)
         if n == 0:
-            extracted.unpersist()
             res.chunks_skipped += 1
             continue
+        extracted = extract_pages(todo.where(chunk_col == chunk),
+                                  num_partitions=num_partitions)
         snap = out_table.append(
             extracted,
             properties={"run_id": run_id, "chunk": chunk, "rows": n},
             partition_by=partition_by,
             stats_cols=stats_cols,
         )
-        metrics = _partition_metrics(extracted, run_id, chunk).withColumn(
-            "snapshot_id", F.lit(snap)
-        )
-        metrics_table.append(metrics, properties={"run_id": run_id, "chunk": chunk})
-        extracted.unpersist()
+        written = out_table.read_added(spark, snap, EXTRACTED_SCHEMA)
+        metrics_table.append(_partition_metrics(written, run_id, chunk, snap),
+                             properties={"run_id": run_id, "chunk": chunk})
         res.snapshots.append(snap)
         res.chunks_done += 1
         res.docs += n

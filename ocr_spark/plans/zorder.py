@@ -118,10 +118,11 @@ def write_zordered(
     ``table.select_entries(ranges={col: (lo, hi)})`` prunes on any of
     them. One exchange (the partitioned write), no Python."""
     z = zorder_key(df, cols, bits)
-    span = 1 << (bits * len(cols))
-    z = z.withColumn(
-        "_zb", (F.col("_z") * n_buckets / F.lit(span)).cast("int")
-    ).drop("_z")
+    # integer-divide by the bucket width (rounded up, so _zb < n_buckets):
+    # ``_z * n_buckets`` overflows a long once the key is wider than
+    # 63 - log2(n_buckets) bits
+    width = -(-(1 << (bits * len(cols))) // n_buckets)
+    z = z.withColumn("_zb", F.expr(f"_z div {width}").cast("int")).drop("_z")
     t = IcebergLiteTable(table_root)
     t.overwrite(z, partition_by="_zb", stats_cols=tuple(cols))
     return t

@@ -292,6 +292,11 @@ class IcebergLiteTable:
                     "all entries pruned; pass a schema to get an empty frame"
                 )
             return spark.createDataFrame([], schema)
+        return self._read_entries(spark, entries, schema)
+
+    @staticmethod
+    def _read_entries(spark: SparkSession, entries: list[dict],
+                      schema: str | None) -> DataFrame:
         by_base: dict[str, list[str]] = {}
         for e in entries:
             by_base.setdefault(e.get("base", e["dir"]), []).append(e["dir"])
@@ -321,22 +326,21 @@ class IcebergLiteTable:
         for snap in self.snapshots():
             if snap["sequence"] == sequence:
                 entries = self._entries_of(snap)
-                if not entries:
-                    return None
-                by_base: dict[str, list[str]] = {}
-                for e in entries:
-                    by_base.setdefault(e.get("base", e["dir"]), []).append(e["dir"])
-                parts = []
-                for base, dirs in sorted(by_base.items()):
-                    reader = spark.read.option("basePath", base)
-                    if schema:
-                        reader = reader.schema(schema)
-                    parts.append(reader.parquet(*sorted(dirs)))
-                df = parts[0]
-                for p in parts[1:]:
-                    df = df.unionByName(p, allowMissingColumns=True)
-                return df
+                return self._read_entries(spark, entries, schema) if entries else None
         raise ValueError(f"no snapshot with sequence {sequence}")
+
+    def read_added(self, spark: SparkSession, snapshot_id: str,
+                   schema: str | None = None) -> DataFrame | None:
+        """DataFrame over only the data files that snapshot ``snapshot_id``
+        itself wrote (not its parent chain); None if it wrote none."""
+        name = next((m for m in self._manifests()
+                     if m.endswith(f"-{snapshot_id}.json")), None)
+        if name is None:
+            raise ValueError(f"no snapshot {snapshot_id!r}")
+        base = os.path.join(self._data_dir, snapshot_id)
+        entries = [e for e in self._entries_of(self._load(name))
+                   if e.get("base", e["dir"]) == base]
+        return self._read_entries(spark, entries, schema) if entries else None
 
     def data_bytes(self) -> int:
         """Total on-disk bytes of the current snapshot's data files —

@@ -228,6 +228,43 @@ def test_parse_entry_points_share_one_partition_policy(spark, repartition):
     assert exchanges == {0 if repartition is False else 1}
 
 
+def _pages_files(spark, path: str, n_files: int, rows_per_file: int):
+    """Pages-shaped parquet written as ``n_files`` files of one row group."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.session import PAGES_SCHEMA
+
+    (spark.range(n_files * rows_per_file, numPartitions=n_files)
+     .select(F.format_string("https://h%d.example/%d", F.col("id") % 7, "id").alias("url"),
+             F.lit(None).cast("timestamp").alias("warc_ts"),
+             F.format_string("<p>page %d</p>", "id").cast("binary").alias("html"),
+             F.lit(None).cast("string").alias("text"),
+             F.lit("en").alias("lang"))
+     .write.parquet(path))
+    return spark.read.schema(PAGES_SCHEMA).parquet(path)
+
+
+@pytest.mark.parametrize("layout", ["equal_files", "tiny_files", "one_file"])
+def test_scan_estimate_is_a_lower_bound_that_auto_trusts(spark, tmp_path, layout):
+    """The "auto" probe counts scan partitions the way Spark's file source
+    packs files, each file as one piece: never more than Spark plans, the
+    same for ``defaultParallelism`` equal files and for 4x as many tiny
+    ones, and 1 for one file (whose byte-range splits beyond the first
+    read nothing), which alone still gets the salted shuffle."""
+    from ocr_spark.operators.extract_op import _estimated_scan_partitions, extract_pages
+
+    slots = spark.sparkContext.defaultParallelism
+    n_files, rows = {"equal_files": (slots, 200), "tiny_files": (4 * slots, 5),
+                     "one_file": (1, 800)}[layout]
+    df = _pages_files(spark, str(tmp_path / layout), n_files, rows)
+    assert len(df.inputFiles()) == n_files
+    est = _estimated_scan_partitions(df)
+    assert 1 <= est <= df.rdd.getNumPartitions()
+    assert est == (1 if layout == "one_file" else slots)
+    exchanges = _tree(_explain(extract_pages(df))).count("Exchange")
+    assert exchanges == (1 if layout == "one_file" else 0)
+
+
 def test_blockwords_zero_shuffle(spark):
     # the C4 wordlist gate is a stateless projection: streaming-safe,
     # no exchange at any scale

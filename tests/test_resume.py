@@ -5,6 +5,7 @@ from a crash between data-write and manifest-rename must stay invisible."""
 
 import os
 
+import pyarrow.dataset as pads
 import pytest
 
 from ocr_spark.pipeline import read_extracted, read_metrics, run_extract
@@ -44,12 +45,19 @@ def test_crash_then_resume_matches_uninterrupted(spark, tmp_path):
     assert total == N
 
 
-def test_rerun_after_completion_is_noop(spark, tmp_path):
+def test_rerun_after_completion_is_noop(spark, tmp_path, monkeypatch):
     pages = synth_pages(spark, 100)
     root = str(tmp_path / "t")
     run_extract(spark, pages, root, run_id="a", chunks=2, num_partitions=2)
+
+    # a chunk with nothing left must not even build its parse stage
+    def no_parse(*args, **kwargs):
+        raise AssertionError("extract_pages called on a no-op resume")
+
+    monkeypatch.setattr("ocr_spark.pipeline.extract_pages", no_parse)
     res = run_extract(spark, pages, root, run_id="b", chunks=2, num_partitions=2)
     assert res.chunks_done == 0 and res.docs == 0
+    assert res.chunks_skipped == 2
     assert read_extracted(spark, root).count() == 100
 
 
@@ -79,9 +87,16 @@ def test_metrics_rows_per_partition(spark, tmp_path):
     assert m["bytes_in"].sum() > 0 and m["bytes_out"].sum() > 0
     # metrics cover every extracted row exactly once
     assert int(m["docs_parsed"].sum() + m["parse_failures"].sum()) == 200
-    assert set(m["snapshot_id"]) <= {
-        s["snapshot_id"] for s in IcebergLiteTable(f"{root}/extracted").snapshots()
-    }
+    snaps = IcebergLiteTable(f"{root}/extracted").snapshots()
+    assert len(snaps) == 2
+    assert set(m["snapshot_id"]) <= {s["snapshot_id"] for s in snaps}
+    # each snapshot's `rows` (the run's pre-count of its chunk) equals the
+    # rows it committed and the docs its chunk's metrics account for
+    per_snap = m.groupby("snapshot_id")[["docs_parsed", "parse_failures"]].sum().sum(axis=1)
+    for s in snaps:
+        data = os.path.join(root, "extracted", "data", s["snapshot_id"])
+        table_rows = pads.dataset(data, format="parquet").count_rows()
+        assert s["properties"]["rows"] == table_rows == per_snap[s["snapshot_id"]]
 
 
 def test_time_travel_and_compaction(spark, tmp_path):

@@ -116,3 +116,20 @@ def test_zorder_key_rejects_keys_wider_than_a_long(spark):
     # 3 x 21 = 63 bits is the widest key that fits: every _z non-negative
     z = [r["_z"] for r in zorder_key(df, ["a", "b", "c"], bits=21).collect()]
     assert z == sorted(z) and z[0] == 0 and z[1] > 0
+
+
+def test_write_zordered_wide_key_buckets_without_overflow(spark, tmp_path):
+    """4 columns x 15 bits = a 60-bit key: ``_z * 16`` would not fit a long
+    (ARITHMETIC_OVERFLOW under ANSI), so the bucket is ``_z`` divided by the
+    bucket width. Every bucket lies in [0, 16) and every row is kept."""
+    df = _xy(spark, 2_000).select(
+        "id", "x", "y", (F.col("x") * 7 % 10_000).alias("u"), (F.col("id") % 9_973).alias("v")
+    )
+    cols = ["x", "y", "u", "v"]
+    t = write_zordered(df, str(tmp_path / "zw"), cols, n_buckets=16, bits=15)
+    out = t.read(spark)
+    buckets = {r["_zb"] for r in out.select("_zb").distinct().collect()}
+    assert buckets and all(0 <= b < 16 for b in buckets)
+    assert len(buckets) > 1
+    assert out.count() == 2_000
+    assert sorted(r["id"] for r in out.select("id").collect()) == list(range(2_000))

@@ -2,12 +2,20 @@
 
 The bench artifact is the contract evidence for the BASELINE.json scaling
 criterion, so the pure arithmetic under it (clean-rep selection, level
-merging for the salvage pass, pair efficiency) is pinned here. No Spark
+merging for the salvage pass, pair efficiency) and the values the bench
+derives from the box (the scaling pair and its CPUs, the budget planner,
+the query order, the environment it reads) are pinned here. No Spark
 session needed — these are plain-Python helpers.
 """
 
+import ast
+import os
 import statistics
+import time
 
+import pytest
+
+import __spark_entry__ as entrymod
 import bench
 
 
@@ -195,3 +203,159 @@ class TestMakePair:
         assert not ln["converged"]
         p = bench._make_pair(2, 8, 600_000, ln, l4)
         assert p["converged"] is False
+
+
+class TestDerivedPair:
+    def test_four_cpu_mask_gives_one_to_four(self):
+        assert bench.scaling_pair([0, 1, 2, 3]) == (1, 4, [0, 1, 2, 3])
+
+    def test_pins_to_cpus_of_the_mask_not_from_zero(self):
+        n, n4, pin = bench.scaling_pair([7, 4, 6, 5])
+        assert (n, n4) == (1, 4)
+        assert pin == [4, 5, 6, 7]  # the 4n level
+        assert pin[:n] == [4]  # the n level
+
+    def test_larger_mask_and_no_pair_under_four_cores(self):
+        assert bench.scaling_pair(list(range(8)))[:2] == (2, 8)
+        assert bench.scaling_pair(list(range(32)))[:2] == (8, 32)
+        assert bench.scaling_pair([0, 1, 2]) is None
+
+    def test_scaling_input_keeps_the_4n_level_parse_bound(self):
+        # 5,000 docs/s on 4 cores = 1,250 docs/s/core; at 4 cores the 4n
+        # level then takes ~SCALE_4N_TARGET_S seconds
+        pages = bench.scale_pages(5000.0, 4, 4)
+        assert isinstance(pages, int) and pages % 10_000 == 0
+        assert abs(pages / 5000.0 - bench.SCALE_4N_TARGET_S) <= 1.0
+        # twice the rate, twice the input; the floor holds for slow boxes
+        assert bench.scale_pages(10_000.0, 4, 4) == pytest.approx(2 * pages, rel=0.1)
+        assert bench.scale_pages(1.0, 4, 4) == 10_000
+
+
+class _Clock:
+    def __init__(self):
+        self.t = 0.0
+
+    def __call__(self):
+        return self.t
+
+
+class TestPlanner:
+    def test_box_holds_the_floors_of_later_phases(self):
+        clock = _Clock()
+        plan = bench.Planner(100, clock=clock)
+        plan.owed.update({"a": 10, "b": 20, "c": 30})
+        assert plan.box("a") == 50  # 100 left - (20 + 30) owed after it
+        clock.t = 40
+        assert plan.box("b") == 30  # 60 left - 30
+        clock.t = 70
+        assert plan.box("c") == 30
+        assert plan.skipped == []
+
+    def test_phase_whose_floor_does_not_fit_is_skipped_and_recorded(self):
+        clock = _Clock()
+        plan = bench.Planner(100, clock=clock)
+        plan.owed.update({"a": 10, "b": 50, "c": 30})
+        assert plan.box("a") == 20
+        clock.t = 30  # 70 left: b's box is 40 < its floor 50
+        assert plan.box("b") is None
+        assert plan.box("c") == 70  # a skipped phase frees its floor
+        plan.skip("d")
+        assert plan.skipped == ["b", "d"]
+
+    def test_fit_drops_the_lowest_priority_floors_not_the_first(self):
+        # the query suite: floors owed in priority order; a short box
+        # skips from the tail, and a cheap late query still fits
+        clock = _Clock()
+        plan = bench.Planner(100, clock=clock)
+        floors = {"q1": 30, "q2": 30, "q3": 50, "q4": 10}
+        plan.fit(floors)
+        assert list(plan.owed) == ["q1", "q2", "q4"]
+        assert plan.box("q1") == 60  # 100 - (30 + 10)
+        clock.t = 25
+        plan.fit({q: floors[q] for q in ("q2", "q3", "q4")})
+        assert plan.box("q2") == 65
+        assert plan.box("q3") is None  # never owed: skipped and recorded
+        assert plan.skipped == ["q3"]
+
+    def test_never_boxes_past_the_budget(self):
+        import random
+
+        rng = random.Random(7)
+        for _ in range(200):
+            clock = _Clock()
+            budget = rng.uniform(50, 500)
+            plan = bench.Planner(budget, clock=clock)
+            names = [f"p{i}" for i in range(rng.randint(1, 8))]
+            plan.owed.update({p: rng.uniform(1, 80) for p in names})
+            for p in names:
+                later = sum(v for k, v in plan.owed.items() if k != p)
+                left = budget - clock.t
+                box = plan.box(p)
+                if box is not None:
+                    assert box <= left and box + later <= left + 1e-9
+                    clock.t += rng.uniform(0, box)  # a phase ends inside its box
+                assert clock.t <= budget
+            assert set(plan.skipped) <= set(names)
+
+
+class TestSuiteOrder:
+    def test_covers_the_registry_once_never_benched_first_then_oldest(self):
+        names = list({**entrymod.queries(), **entrymod.extra_queries()})
+        hist = bench._query_history(bench._read_rounds())
+        order = bench.suite_order(names, hist)
+        assert sorted(order) == sorted(names) and len(set(order)) == len(order)
+        rounds = [hist[q][0] if q in hist else 0 for q in order]
+        assert rounds == sorted(rounds)  # never benched (0), then oldest round
+
+    def test_synthetic_history(self):
+        hist = {"a": (5, 1.0), "b": (2, 9.0), "c": (5, 0.5)}
+        assert bench.suite_order(["a", "b", "c", "d", "e"], hist) == [
+            "d", "e", "b", "a", "c"]
+
+    def test_history_reader_is_shared(self):
+        rounds = bench._read_rounds()
+        hist = bench._round_history(rounds)
+        assert list(hist) == [f"r{r}" for r in rounds]
+        qh = bench._query_history(rounds)
+        last = max(r for r, d in rounds.items() if (d.get("parsed") or {}).get("queries"))
+        for q in rounds[last]["parsed"]["queries"]:
+            assert qh[q][0] == last
+
+
+def test_bench_reads_only_three_environment_variables():
+    """Every ``os.environ`` use in bench.py is a ``.get`` of one of the
+    three names, so run-steering knobs cannot creep back in."""
+    tree = ast.parse(open(bench.__file__).read())
+    parents = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and node.id == "getenv":
+            raise AssertionError("os.getenv in bench.py")
+        if isinstance(node, ast.Attribute) and node.attr == "getenv":
+            raise AssertionError("os.getenv in bench.py")
+        if not (isinstance(node, ast.Attribute) and node.attr == "environ"):
+            continue
+        get = parents[node]
+        call = parents.get(get)
+        assert isinstance(get, ast.Attribute) and get.attr == "get"
+        assert isinstance(call, ast.Call) and isinstance(call.args[0], ast.Constant)
+        names.add(call.args[0].value)
+    assert names == {"SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "OCR_BENCH_TOTAL_BUDGET_S"}
+
+
+class TestHostCalibration:
+    @pytest.mark.skipif(len(os.sched_getaffinity(0)) < 4, reason="needs 4 CPUs")
+    def test_derived_pair_calibrates_inside_the_mask(self):
+        n, n4, pin = bench.scaling_pair(bench.MASK)
+        t0 = time.time()
+        hw = bench.run_hw_calibration(bench.MASK, seconds=1.0)
+        assert time.time() - t0 < 30
+        assert hw is not None and hw["cpus"] == pin
+        assert hw["percore_ratio"][f"{n}->{n4}"] > 0
+
+    def test_worker_pinned_outside_the_mask_fails_fast(self):
+        # a CPU number no box has: the worker's sched_setaffinity fails,
+        # and the calibration must report failure instead of hanging
+        t0 = time.time()
+        assert bench.run_hw_calibration([0, 1, 2, 4096], seconds=1.0) is None
+        assert time.time() - t0 < 30

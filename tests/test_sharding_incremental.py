@@ -189,3 +189,32 @@ def test_incremental_band_store_path_row_identical(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bkt_band_eq")
     assert base == stored
     assert any(s == "exact_seen" for _, s in base)  # non-vacuous
+
+
+def test_dedup_increment_reuses_one_band_store(spark, tmp_path, monkeypatch):
+    """The registry's dedup_increment builder writes its band store once
+    per (application, sf_dir): a second call (a timed bench rep) reuses
+    the store instead of writing a new directory and catalog table."""
+    import tempfile
+
+    import __spark_entry__ as entrymod
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def stores():
+        return {
+            t.name for t in spark.catalog.listTables()
+            if t.name.startswith("dedup_increment_band_store_")
+        }
+
+    before = stores()
+    first = entrymod.q_dedup_increment(spark, entrymod.SF0001)
+    second = entrymod.q_dedup_increment(spark, entrymod.SF0001)
+    added = stores() - before
+    try:
+        assert len(added) == 1
+        assert len(list((tmp_path / entrymod.BAND_STORE_ROOT).iterdir())) == 1
+        assert sorted(first.collect()) == sorted(second.collect())
+    finally:
+        for t in added:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")

@@ -1,15 +1,21 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry(spark)``    — flagship: main-content extraction over pages built
-                      deterministically from the sf0.001 documents table.
-``queries()``       — one entry per implemented operator family
-                      (SURVEY.md §2 + training-data ops).
-``oracle_sql()``    — DuckDB twins. Regex dialect notes: patterns restricted
-                      to constructs meaning the same in Java regex and RE2;
-                      every DuckDB regexp_replace uses the 'g' flag because
-                      Spark's replaces all matches by default. Floats are
-                      rounded (4 dp; money 2 dp) on BOTH sides so summation
-                      order can't flip the value hash.
+``entry(spark)``     — flagship: main-content extraction over pages built
+                       deterministically from the sf0.001 documents table.
+``REGISTRY``         — the query table, one row per query: name ->
+                       (builder, witness). witness is None for the queries
+                       in the driver's correctness window; every other row
+                       names the in-window query that runs the same
+                       operator or plan shape.
+``queries()``        — the in-window builders (witness None).
+``extra_queries()``  — the other builders (pytest-checked only).
+``oracle_sql()`` and ``extra_oracle_sql()`` — the DuckDB twins of the two
+                       sets, from ``_oracle_sql_all()`` (keyed like REGISTRY).
+
+Twin dialect notes: regex patterns are restricted to constructs meaning the
+same in Java regex and RE2; every DuckDB regexp_replace uses the 'g' flag
+because Spark's replaces all matches by default. Floats are rounded (4 dp;
+money 2 dp) on BOTH sides so summation order can't flip the value hash.
 """
 
 from __future__ import annotations
@@ -442,11 +448,10 @@ def q_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-window chunking, expression-only: documents fan out to
     overlapping 60-token windows at stride 50 via split/sequence/explode/
-    slice — no Python in the plan (the UDTF LATERAL variant is kept as an
-    alternate demo in operators/chunking.py)."""
+    slice — no Python in the plan."""
     from ocr_spark.operators.chunking import chunk_documents
 
-    return chunk_documents(spark, _t(spark, sf_dir, "documents"))
+    return chunk_documents(_t(spark, sf_dir, "documents"))
 
 
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -455,7 +460,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast per-range offsets — no single-partition sort)."""
     from ocr_spark.operators.chunking import chunk_documents, pack_sequences
 
-    return pack_sequences(chunk_documents(spark, _t(spark, sf_dir, "documents")))
+    return pack_sequences(chunk_documents(_t(spark, sf_dir, "documents")))
 
 
 def q_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -469,12 +474,13 @@ def q_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS through the SQL surface (the one aggregate shape the
     DataFrame API doesn't expose directly): two independent groupings plus
-    the grand total in a single Expand + hash aggregate."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("events_gs")
+    the grand total in a single Expand + hash aggregate. The events frame
+    goes in as a ``spark.sql`` argument, so no view is left in the caller's
+    session."""
     return spark.sql(
         """
         WITH e AS (SELECT event_type, user_id % 2 AS user_bucket, value
-                   FROM events_gs)
+                   FROM {events})
         SELECT event_type, user_bucket,
                count(*) AS n_events,
                round(sum(value), 2) AS sum_value,
@@ -483,7 +489,8 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM e
         GROUP BY GROUPING SETS ((event_type), (user_bucket), ())
         ORDER BY g_type, g_bucket, event_type, user_bucket
-        """
+        """,
+        events=_t(spark, sf_dir, "events"),
     )
 
 
@@ -2813,66 +2820,18 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The driver-facing registry: exactly the entries the correctness gate
-    witnesses (the r2 gate checked only the first 50 registry entries, so
-    the registry is consolidated to 50 — every entry ships driver-checked).
-    Redundant-evidence variants live in :func:`extra_queries`."""
-    return {
-        k: _with_engine_conf(v)
-        for k, v in _QUERIES.items()
-        if k not in _EXTRA_KEYS
-    }
+    """The driver-facing registry: the :data:`REGISTRY` entries without a
+    witness, the ones the driver's correctness gate checks."""
+    return {k: _with_engine_conf(q) for k, (q, w) in REGISTRY.items() if w is None}
 
 
 def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Redundant-evidence queries kept OUT of the driver's 50-entry window:
-    each one's operator is already witnessed by an in-window entry
-    (simhash by simhash_pairs; fingerprint by exact_dedup's fp column;
-    token_jaccard by minhash_pairs' exact-jaccard verification; cosine_topk
-    by knn/ivf_topk; union_branches by flagship+pdf_extract; rollup_events
-    by grouping_sets; moving_avg by top_events_per_user's frame column;
-    epoch_parse by events_hourly/warc_roundtrip timestamp arithmetic;
-    semi_join by dedup_increment's fp semi-join; agg_pricing's multi-agg
-    shape by grouping_sets/group_quantiles; events_hourly's time buckets
-    by sessionize/top_events_per_user — their window slots went to the
-    webtext-native repetition_stats and pii_redact; set_ops' union/
-    intersect/except shapes by resume_antijoin and clean_corpus's staged
-    unions, and image_resize's Arrow mapInPandas plumbing by
-    frame_sample + media_meta — their slots went to the link-graph
-    outlinks and host_degree; pagerank_hosts is iterative and lives here
-    with its unrolled-CTE twin. Round 3 demotions whose slots went to
-    dup_spans / lsh_recall / inverted_index / merge_table: url_parts'
-    canonicalization functions are exercised in-window by host_stats,
-    host_cap, and robots_filter; media_meta's Arrow multimodal plumbing
-    by frame_sample; error_top_fields' validator machinery by
-    validate_docs and its top-N shape by top_customers/knn; outer_join's
-    join family by asof_join + resume_antijoin; top_events_per_user's
-    rank window by sessionize + moving_avg — its slot went to the
-    dup_span_removal rewrite). knn's broadcast-probe batch k-NN is
-    witnessed in-window by ivf_topk (same broadcast-probe + argmax
-    machinery plus the IVF stage) and embedding_neardup — its slot went
-    to the quality_classifier learned gate. pivot_events' conditional-agg
-    pivot and grouping_sets' multi-level agg are witnessed in-window by
-    group_quantiles + corpus_report (same hash-agg machinery) — their
-    slots went to perplexity_buckets (the distributed-ntile CCNet
-    bucketing) and the blocklist gate; soft_sample's sampling family is
-    witnessed in-window by stratified_sample + host_cap. All stay
-    oracle-checked by tests/test_oracle_parity.py at sf0.01."""
-    return {
-        k: _with_engine_conf(v)
-        for k, v in _QUERIES.items()
-        if k in _EXTRA_KEYS
-    }
+    """The :data:`REGISTRY` entries outside the driver's window, each
+    witnessed by the in-window query its table row names. All are checked
+    against their DuckDB twins by tests/test_oracle_parity.py."""
+    return {k: _with_engine_conf(q) for k, (q, w) in REGISTRY.items() if w is not None}
 
 
-# Round-4 window ROTATION (VERDICT r3 item 5): the driver witnesses at most
-# 50 registry entries per round, so entries rotate through the window across
-# rounds until every query has a driver-green CORRECTNESS row. This round the
-# ten highest-value never-witnessed queries moved IN (pagerank_hosts, bm25,
-# signals, bpe_tokens, dsir_sample, token_budget_mix, page_meta,
-# semantic_dedup, decontam_spans, latest_capture) and ten long-green r1/r2
-# entries moved OUT to pytest-oracle-only evidence, each with the in-window
-# witness for its machinery noted below.
 def q_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Int8 scalar-quantized ANN top-k vs the vec_id=0 query embedding,
     with exact-cosine rescore disclosure per hit (operators/similarity.py:
@@ -2920,363 +2879,155 @@ def q_ip_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return region_traffic(_t(spark, sf_dir, "events"), spark)
 
 
-_EXTRA_KEYS_STR = (
-    "lang_distribution "  # groupBy-count-share witnessed by host_stats +
-    # lang_id; its window slot went to extract_spans (the north-rule
-    # text/spans contract, hash-checked against template offset arithmetic)
-    "simhash fingerprint token_jaccard cosine_topk union_branches "
-    "rollup_events moving_avg epoch_parse semi_join "
-    "agg_pricing events_hourly set_ops image_resize "
-    "anchor_terms canonical_groups "
-    "url_parts media_meta error_top_fields outer_join "
-    "top_events_per_user host_quality bloom_gate "
-    "train_eval_split within_doc_dedup "
-    "knn pivot_events grouping_sets "
-    "soft_sample cdx_fetch_plan "
-    # host_boilerplate: the line-dedup family's host-conditional variant
-    # (in-window witness: line_dedup); blockwords: the quality family's C4
-    # wordlist gate (witness: quality_filter) — all oracle-checked by
-    # test_oracle_parity
-    "host_boilerplate blockwords "
-    # cluster_sample: the embedding-curation family's cluster-balanced
-    # selection (in-window witness: semantic_dedup / ivf_topk share its
-    # seeded-Lloyd core); script_stats / code_detect: the quality family's
-    # character-class profile gates (witness: quality_filter / lang_id) —
-    # all oracle-checked by test_oracle_parity
-    # ivf_assign: incremental ANN maintenance on frozen committed
-    # centroids (witness: ivf_topk shares the quantizer + argmax core)
-    # host_quality_eb: the floor-free Beta-Binomial smoothing variant of
-    # host_quality (same witness)
-    # paragraph_dedup / common_ngrams: the dedup family's paragraph
-    # granularity + the gram-threshold tuning profile (witness: line_dedup
-    # / dup_spans share the machinery)
-    # media_hash_gate: the multimodal family's known-bad digest gate
-    # (witness: media_meta replays the same payload digest)
-    "cluster_sample script_stats code_detect "
-    "ivf_assign paragraph_dedup "
-    "common_ngrams media_hash_gate "
-    # --- round-4 demotions (driver-green in r1-r3; machinery witnesses) ---
-    # top_customers: broadcast equi-join + deterministic top-N — witnessed
-    #   by validate_docs' broadcast rules join (J3) + inverted_index's
-    #   ranked top-N; asof_join: join family — resume_antijoin (anti) stays
-    #   in-window, as-of keeps its exact DuckDB twin here
-    "top_customers asof_join "
-    # frame_sample: Arrow mapInPandas 1:N segment sink — media plumbing
-    #   stays pinned by test_multimodal + streaming gates; group_quantiles:
-    #   distributed quantiles — perplexity_buckets (in-window) is the same
-    #   family at production shape
-    "frame_sample group_quantiles "
-    # tfidf_terms -> bm25 (promoted; tf-idf weighting is bm25's core);
-    # stratified_sample -> dsir_sample (promoted; importance sampling) +
-    #   host_cap stays in-window; winnow_pairs: fingerprint-pair machinery
-    #   witnessed by dup_spans + lsh_recall; lm_score: scoring family
-    #   witnessed by perplexity_buckets + quality_classifier
-    "tfidf_terms stratified_sample winnow_pairs lm_score "
-    # shard_assignment: hash-bucket assignment witnessed by host_cap +
-    #   token_budget_mix (promoted); corpus_report: K5 report aggs
-    #   witnessed by validate_docs (in-window) + clean_corpus's audit
-    "shard_assignment corpus_report "
-    # --- round-4 additions (born out-of-window; rotate in next round) ---
-    # pub_date: head-regex machinery witnessed in-window by page_meta;
-    # fix_encoding: projection-layer normalization witnessed by
-    #   flagship_extract's normalize stage + token_stats; sentences:
-    #   regexp split/explode witnessed by token_stats + extract_spans;
-    # snapshot_diff: fp full-outer machinery witnessed by exact_dedup +
-    #   resume_antijoin — all oracle-checked by test_oracle_parity;
-    # sitemap_recrawl: JVM-regex block parsing witnessed by page_meta +
-    #   cdx_fetch_plan (same extract-typed-rows-from-markup machinery),
-    #   max-per-key + equi-join by latest_capture;
-    # cluster_reps: the quality-aware keeper variant of dedup_clusters
-    #   (in-window witness: dedup_clusters shares the pair graph + CC core);
-    # spam_hosts: host-grain agg + full-outer merge witnessed by
-    #   host_stats + host_degree (same shuffle shapes over fp/edge keys)
-    "pub_date fix_encoding sentences "
-    # html_tables / headings_outline: structured-markup 1:N extraction
-    #   (in-window witnesses: extract_spans shares the offset/explode
-    #   contract, page_meta the head-regex machinery); feed_items: the
-    #   push-side frontier source (witness: cdx_fetch_plan + page_meta —
-    #   typed rows from markup); fetch_schedule: per-host politeness
-    #   window (witness: host_cap shares the bounded per-host ranking)
-    "headings_outline "
-    # crawl_delays: the robots politeness directives (Crawl-delay group
-    #   fold + global Sitemap discovery) — in-window witness: robots_filter
-    #   shares the identical RFC 9309 group fold; jsonld: schema.org
-    #   structured-data extraction via JVM regex + get_json_object
-    #   (witness: page_meta shares the bounded-regex markup machinery)
-    "jsonld "
-    # av_meta: audio/video container-header metadata (WAV/MP4/MP3) — the
-    #   A/V twin of media_meta's image-header path; in-window witnesses:
-    #   frame_sample + media_meta share the Arrow mapInPandas multimodal
-    #   plumbing and the deterministic-stub fallback contract
-    "av_meta "
-    # --- round-4 MID-ROUND rotation: the five operators born this round
-    # take driver slots so CORRECTNESS_r04 witnesses them; each displaced
-    # entry was driver-green in r1-r3 and keeps an in-window machinery
-    # witness plus its own exact DuckDB twin in pytest.
-    # warc_roundtrip -> wet_export (same record framing + ts arithmetic;
-    #   wet records re-parse through warc's own splitter in test_warc);
-    # ivf_topk -> sq_topk (ANN quantize-then-rank family; embedding ops
-    #   stay in-window via embedding_neardup + semantic_dedup);
-    # token_budget_mix -> mix_temperature (the budgets token_budget_mix
-    #   consumes ARE these ratios; same token-mass agg core);
-    # sessionize -> ip_range_join (window family stays witnessed by
-    #   perplexity_buckets' frames; the new join shape earns the row);
-    # corr_flags -> markdown_render (V6 stays pytest-checked; validation
-    #   family in-window via validate_docs + doc_assessment)
-    "warc_roundtrip ivf_topk sessionize corr_flags "
-    # heavy_hitters: two-pass Misra-Gries summary + exact recount (born
-    #   out-of-window; in-window witnesses: common-token machinery by
-    #   token_stats, the mapInPandas Arrow path by flagship_extract);
-    # token_fertility: per-language audit over the bpe_tokens encode
-    #   (witness: bpe-apply arithmetic is driver-checked via the
-    #   mix_temperature/token-mass family; exact twin in pytest);
-    # html_sections: heading-delimited section chunks (witnesses:
-    #   extract_spans for the 1:N offset contract, page_meta +
-    #   markdown_render for the markup-regex machinery);
-    # lm_crossentropy: the fit/apply split of the in-window lm_score
-    #   (same smoothed transition arithmetic; the left-join OOV floor is
-    #   the only new surface, oracle-checked in pytest);
-    # rp_project: JL signed random projection (witnesses: embedding_
-    #   neardup + sq_topk share the fold/round float discipline and the
-    #   literal-matrix mechanism)
-    # page_types: URL-shape cascade (witnesses: host_stats / robots_filter
-    #   exercise the same url parse expressions in-window);
-    # burst_detection: trailing-frame window anomaly flags (witness:
-    #   perplexity_buckets' offset frames + sessionize's window machinery)
-    # quality_gate: top-fraction selection on the distributed_ntile
-    #   machinery (witness: perplexity_buckets runs the identical range-
-    #   exchange rank in-window)
-    # trustrank_hosts: seeded-teleport variant of pagerank_hosts (same
-    #   iteration machinery; the teleport CASE is the only new surface)
-    # shard_manifest: the export-integrity artifact over shard_assignment
-    #   (witness: shard_assignment's hash/rank machinery, exact_dedup's fp)
-    # pq_topk: product-quantization ANN (witnesses: ivf_topk shares the
-    #   seeded-Lloyd + broadcast-argmin machinery, sq_topk the
-    #   quantize-then-rank family)
-    # --- round-4 LATE rotation: the two sketch/alignment families born
-    # this round take driver slots so CORRECTNESS_r04 witnesses them.
-    # host_stats -> hll_distinct (host-grain agg family stays in-window
-    #   via host_degree + host_cap; host_stats keeps its exact twin here);
-    # pack_sequences -> bitext_pairs (chunk_documents stays in-window and
-    #   shares the chunk/pack machinery; pack keeps its twin + plan pins)
-    # sketch_quantiles: DDSketch-style bounded-relative-error quantiles
-    #   (born late in r4; in-window witnesses: hll_distinct shares the
-    #   bounded-sketch-state discipline, perplexity_buckets the exact-
-    #   rank family; exact twin in pytest)
-    # phrase_search: positional-postings intersection (in-window
-    #   witnesses: inverted_index shares the token/postings machinery,
-    #   bm25's vocab-prune discipline; independent-construction twin)
-    "token_fertility html_sections lm_crossentropy "
-    "rp_project page_types burst_detection quality_gate "
-    "shard_manifest "
-    # hybrid_search: RRF fusion of bm25 + cosine_topk (in-window
-    #   witnesses: bm25's ranker is driver-checked via inverted_index
-    #   and the embedding family via embedding_neardup; exact twin here)
-    # search_snippets: densest query-window snippet cut (in-window
-    #   witnesses: inverted_index/extract_spans share the token/offset
-    #   machinery; exact twin here)
-    # expansion_terms: RM3 pseudo-relevance feedback (witnesses: the
-    #   bm25/tfidf weighting family in-window via inverted_index +
-    #   token_stats; exact twin here)
-    # more_like_this: sparse tf-idf doc-doc cosine (witnesses: the
-    #   tfidf/bm25 weighting family + cosine_topk's ranked-similarity
-    #   contract; integer-exact arithmetic, exact twin here)
-    "host_stats pack_sequences "
-    "search_snippets expansion_terms more_like_this "
-)
-
-# --- round-5 window ROTATION (VERDICT r4 item 4): the 16 highest-value
-# never-driver-witnessed queries move IN (hybrid_search, phrase_search,
-# pq_topk, heavy_hitters, sketch_quantiles, trustrank_hosts, html_tables,
-# feed_items, fetch_schedule, crawl_delays, snapshot_diff,
-# sitemap_recrawl, spam_hosts, token_budget_mix, host_quality_eb,
-# cluster_reps — the verdict's own priority list). Each displaced entry
-# below was driver-green in r4 (or earlier), keeps its exact DuckDB twin
-# in tests/test_oracle_parity.py, and leaves an in-window machinery
-# witness:
-# bm25 -> hybrid_search carries the bm25 oracle body verbatim;
-# inverted_index -> phrase_search + hybrid_search exercise the postings
-#   machinery (several older comments above still name inverted_index as
-#   the in-window witness — hybrid_search/phrase_search now hold that
-#   role);
-# lsh_recall -> minhash_pairs stays in-window (same LSH band machinery);
-# simhash_pairs -> dedup pair family witnessed by minhash_pairs +
-#   dup_spans; the pigeonhole variant keeps its pytest twin;
-# embedding_neardup -> semantic_dedup (same bucketed-cosine core) +
-#   sq_topk/pq_topk keep the embedding family in-window;
-# latest_capture -> sitemap_recrawl runs the same max-per-key + equi-join
-#   timestamp machinery at production shape;
-# outlinks / host_degree -> pagerank_hosts (consumes the same edge
-#   stream) + trustrank_hosts/spam_hosts cover the host-grain aggs;
-# mix_temperature -> token_budget_mix consumes these ratios (same
-#   token-mass agg core; the r4 rotation in reverse);
-# blocklist -> quality_filter + robots_filter keep the broadcast-gate
-#   family; decontam_spans -> dup_spans + contamination share the capped
-#   gram-join machinery;
-# markdown_render -> flagship_extract witnesses the salted Arrow cascade
-#   (corr_flags' displaced witness comment above moves with it);
-# merge_table -> dedup_increment + snapshot_diff cover the incremental
-#   upsert family; pii_redact / repetition_stats -> quality_filter +
-#   signals keep the zero-shuffle quality projections;
-# bpe_tokens -> token_stats keeps tokenization in-window; the BPE encode
-#   keeps its pytest twin + token_fertility audit.
-_ROUND5_DEMOTIONS = (
-    "bm25 inverted_index lsh_recall simhash_pairs embedding_neardup "
-    "latest_capture outlinks host_degree mix_temperature blocklist "
-    "decontam_spans markdown_render merge_table pii_redact "
-    "repetition_stats bpe_tokens"
-)
-
-# vocab_growth: born round 5, out-of-window (in-window witnesses:
-# token_stats carries the tokenizer, hll_distinct the vocabulary-keyed
-# agg family; exact twin in pytest)
-_ROUND5_BORN = " vocab_growth"
-
-_EXTRA_KEYS = frozenset(
-    (_EXTRA_KEYS_STR + _ROUND5_DEMOTIONS + _ROUND5_BORN).split()
-)
-
-_QUERIES = {
-        "flagship_extract": q_flagship_extract,
-        "extract_spans": q_extract_spans,
-        "exact_dedup": q_exact_dedup,
-        "token_stats": q_token_stats,
-        "lang_id": q_lang_id,
-        "fingerprint": q_fingerprint,
-        "token_jaccard": q_token_jaccard,
-        "minhash_pairs": q_minhash_pairs,
-        "simhash": q_simhash,
-        "simhash_pairs": q_simhash_pairs,
-        "cosine_topk": q_cosine_topk,
-        "embedding_neardup": q_embedding_neardup,
-        "validate_docs": q_validate_docs,
-        "doc_assessment": q_doc_assessment,
-        "corr_flags": q_corr_flags,
-        "agg_pricing": q_agg_pricing,
-        "top_customers": q_top_customers,
-        "lang_distribution": q_lang_distribution,
-        "events_hourly": q_events_hourly,
-        "resume_antijoin": q_resume_antijoin,
-        "top_events_per_user": q_top_events_per_user,
-        "sessionize": q_sessionize,
-        "pivot_events": q_pivot_events,
-        "stratified_sample": q_stratified_sample,
-        "contamination": q_contamination,
-        "tfidf_terms": q_tfidf_terms,
-        "knn": q_knn,
-        "quality_classifier": q_quality_classifier,
-        "perplexity_buckets": q_perplexity_buckets,
-        "soft_sample": q_soft_sample,
-        "blocklist": q_blocklist,
-        "cdx_fetch_plan": q_cdx_fetch_plan,
-        "media_meta": q_media_meta,
-        "av_meta": q_av_meta,
-        "pdf_extract": q_pdf_extract,
-        "union_branches": q_union_branches,
-        "rollup_events": q_rollup_events,
-        "grouping_sets": q_grouping_sets,
-        "group_quantiles": q_group_quantiles,
-        "chunk_documents": q_chunk_documents,
-        "pack_sequences": q_pack_sequences,
-        "moving_avg": q_moving_avg,
-        "set_ops": q_set_ops,
-        "ivf_topk": q_ivf_topk,
-        "error_top_fields": q_error_top_fields,
-        "epoch_parse": q_epoch_parse,
-        "semi_join": q_semi_join,
-        "outer_join": q_outer_join,
-        "asof_join": q_asof_join,
-        "frame_sample": q_frame_sample,
-        "image_resize": q_image_resize,
-        "winnow_pairs": q_winnow_pairs,
-        "dedup_clusters": q_dedup_clusters,
-        "clean_corpus": q_clean_corpus,
-        "corpus_report": q_corpus_report,
-        "shard_assignment": q_shard_assignment,
-        "dedup_increment": q_dedup_increment,
-        "line_dedup": q_line_dedup,
-        "host_boilerplate": q_host_boilerplate,
-        "media_hash_gate": q_media_hash_gate,
-        "paragraph_dedup": q_paragraph_dedup,
-        "common_ngrams": q_common_ngrams,
-        "dsir_sample": q_dsir_sample,
-        "blockwords": q_blockwords,
-        "host_cap": q_host_cap,
-        "robots_filter": q_robots_filter,
-        "warc_roundtrip": q_warc_roundtrip,
-        "wet_export": q_wet_export,
-        "sq_topk": q_sq_topk,
-        "mix_temperature": q_mix_temperature,
-        "ip_range_join": q_ip_range_join,
-        "markdown_render": q_markdown_render,
-        "url_parts": q_url_parts,
-        "host_stats": q_host_stats,
-        "quality_filter": q_quality_filter,
-        "lm_score": q_lm_score,
-        "repetition_stats": q_repetition_stats,
-        "pii_redact": q_pii_redact,
-        "outlinks": q_outlinks,
-        "host_degree": q_host_degree,
-        "pagerank_hosts": q_pagerank_hosts,
-        "anchor_terms": q_anchor_terms,
-        "canonical_groups": q_canonical_groups,
-        "dup_spans": q_dup_spans,
-        "dup_span_removal": q_dup_span_removal,
-        "lsh_recall": q_lsh_recall,
-        "inverted_index": q_inverted_index,
-        "merge_table": q_merge_table,
-        "stream_extract": q_stream_extract,
-        "token_budget_mix": q_token_budget_mix,
-        "host_quality": q_host_quality,
-        "host_quality_eb": q_host_quality_eb,
-        "bloom_gate": q_bloom_gate,
-        "semantic_dedup": q_semantic_dedup,
-        "cluster_sample": q_cluster_sample,
-        "ivf_assign": q_ivf_assign,
-        "decontam_spans": q_decontam_spans,
-        "script_stats": q_script_stats,
-        "vocab_growth": q_vocab_growth,
-        "code_detect": q_code_detect,
-        "signals": q_signals,
-        "bpe_tokens": q_bpe_tokens,
-        "token_fertility": q_token_fertility,
-        "heavy_hitters": q_heavy_hitters,
-        "lm_crossentropy": q_lm_crossentropy,
-        "rp_project": q_rp_project,
-        "page_types": q_page_types,
-        "burst_detection": q_burst_detection,
-        "quality_gate": q_quality_gate,
-        "trustrank_hosts": q_trustrank_hosts,
-        "shard_manifest": q_shard_manifest,
-        "pq_topk": q_pq_topk,
-        "hll_distinct": q_hll_distinct,
-        "bitext_pairs": q_bitext_pairs,
-        "sketch_quantiles": q_sketch_quantiles,
-        "phrase_search": q_phrase_search,
-        "hybrid_search": q_hybrid_search,
-        "search_snippets": q_search_snippets,
-        "expansion_terms": q_expansion_terms,
-        "more_like_this": q_more_like_this,
-        "bm25": q_bm25,
-        "train_eval_split": q_train_eval_split,
-        "within_doc_dedup": q_within_doc_dedup,
-        "latest_capture": q_latest_capture,
-        "page_meta": q_page_meta,
-        "pub_date": q_pub_date,
-        "fix_encoding": q_fix_encoding,
-        "sentences": q_sentences,
-        "snapshot_diff": q_snapshot_diff,
-        "sitemap_recrawl": q_sitemap_recrawl,
-        "cluster_reps": q_cluster_reps,
-        "spam_hosts": q_spam_hosts,
-        "html_tables": q_html_tables,
-        "headings_outline": q_headings_outline,
-        "html_sections": q_html_sections,
-        "feed_items": q_feed_items,
-        "fetch_schedule": q_fetch_schedule,
-        "crawl_delays": q_crawl_delays,
-        "jsonld": q_jsonld,
-    }
+# The query registry, one row per query: name -> (builder, witness).
+# witness is None for the queries the driver's correctness gate checks
+# (queries(); the gate reads at most 50 entries). Every other query names
+# the in-window query that runs the same operator or plan shape
+# (extra_queries()). tests/test_oracle_parity.py checks that every witness
+# is in the window and every query against its DuckDB twin in
+# _oracle_sql_all(). Rotating a query into the window is one edit per
+# entry: its witness becomes None, and the query it displaces gets one.
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
+    "flagship_extract": (q_flagship_extract, None),
+    "extract_spans": (q_extract_spans, None),
+    "exact_dedup": (q_exact_dedup, None),
+    "token_stats": (q_token_stats, None),
+    "lang_id": (q_lang_id, None),
+    "fingerprint": (q_fingerprint, "exact_dedup"),  # groups on the same md5 fingerprint
+    "token_jaccard": (q_token_jaccard, "minhash_pairs"),  # exact-Jaccard pair check
+    "minhash_pairs": (q_minhash_pairs, None),
+    "simhash": (q_simhash, "minhash_pairs"),  # per-doc near-dup signature
+    "simhash_pairs": (q_simhash_pairs, "minhash_pairs"),  # banded near-dup pairs
+    "cosine_topk": (q_cosine_topk, "hybrid_search"),  # cosine_topk is its dense leg
+    "embedding_neardup": (q_embedding_neardup, "semantic_dedup"),  # pairwise cosine
+    "validate_docs": (q_validate_docs, None),
+    "doc_assessment": (q_doc_assessment, None),
+    "corr_flags": (q_corr_flags, "validate_docs"),  # one aggregate + stack unpivot
+    "agg_pricing": (q_agg_pricing, "ip_range_join"),  # count/sum/min/max hash aggregate
+    "top_customers": (q_top_customers, "ip_range_join"),  # broadcast join + agg
+    "lang_distribution": (q_lang_distribution, "hll_distinct"),  # per-lang distinct
+    "events_hourly": (q_events_hourly, "ip_range_join"),  # hash agg over events
+    "resume_antijoin": (q_resume_antijoin, None),
+    "top_events_per_user": (q_top_events_per_user, "host_cap"),  # per-group rank cut
+    "sessionize": (q_sessionize, "token_budget_mix"),  # partitioned running-sum window
+    "pivot_events": (q_pivot_events, "validate_docs"),  # conditional-sum wide aggregate
+    "stratified_sample": (q_stratified_sample, "dsir_sample"),  # seeded md5 keep draw
+    "contamination": (q_contamination, None),
+    "tfidf_terms": (q_tfidf_terms, "hybrid_search"),  # tf-idf inside its BM25 leg
+    "knn": (q_knn, "sq_topk"),  # top-k by cosine to a query vector
+    "quality_classifier": (q_quality_classifier, None),
+    "perplexity_buckets": (q_perplexity_buckets, None),
+    "soft_sample": (q_soft_sample, "quality_classifier"),  # same classifier_score
+    "blocklist": (q_blocklist, "robots_filter"),  # broadcast host-rule join
+    "cdx_fetch_plan": (q_cdx_fetch_plan, "sitemap_recrawl"),  # index rows -> fetch plan
+    "media_meta": (q_media_meta, "pdf_extract"),  # Arrow mapInPandas, binary
+    "av_meta": (q_av_meta, "pdf_extract"),  # Arrow mapInPandas, binary
+    "pdf_extract": (q_pdf_extract, None),
+    "union_branches": (q_union_branches, "flagship_extract"),  # unions it + pdf_extract
+    "rollup_events": (q_rollup_events, "ip_range_join"),  # hash aggregate over events
+    "grouping_sets": (q_grouping_sets, "ip_range_join"),  # hash aggregate over events
+    "group_quantiles": (q_group_quantiles, "sketch_quantiles"),  # per-lang quantiles
+    "chunk_documents": (q_chunk_documents, None),
+    "pack_sequences": (q_pack_sequences, "chunk_documents"),  # packs its chunks
+    "moving_avg": (q_moving_avg, "token_budget_mix"),  # ROWS-frame window
+    "set_ops": (q_set_ops, "resume_antijoin"),  # EXCEPT is its anti-join
+    "ivf_topk": (q_ivf_topk, "pq_topk"),  # seeded-Lloyd quantizer + broadcast argmin
+    "error_top_fields": (q_error_top_fields, "validate_docs"),  # same validator
+    "epoch_parse": (q_epoch_parse, "feed_items"),  # string -> timestamp parsing
+    "semi_join": (q_semi_join, "dedup_increment"),  # fp left-semi join
+    "outer_join": (q_outer_join, "snapshot_diff"),  # full outer join, both null sides
+    "asof_join": (q_asof_join, "sitemap_recrawl"),  # latest capture per key
+    "frame_sample": (q_frame_sample, "pdf_extract"),  # Arrow mapInPandas, binary
+    "image_resize": (q_image_resize, "pdf_extract"),  # Arrow mapInPandas, binary
+    "winnow_pairs": (q_winnow_pairs, "dup_spans"),  # hashed-gram fingerprint joins
+    "dedup_clusters": (q_dedup_clusters, None),
+    "clean_corpus": (q_clean_corpus, None),
+    "corpus_report": (q_corpus_report, "clean_corpus"),  # runs clean_corpus
+    "shard_assignment": (q_shard_assignment, "host_cap"),  # md5 key, rank per group
+    "dedup_increment": (q_dedup_increment, None),
+    "line_dedup": (q_line_dedup, None),
+    "host_boilerplate": (q_host_boilerplate, "line_dedup"),  # line dedup, per host
+    "media_hash_gate": (q_media_hash_gate, "robots_filter"),  # broadcast rule join
+    "paragraph_dedup": (q_paragraph_dedup, "line_dedup"),  # paragraph grain
+    "common_ngrams": (q_common_ngrams, "dup_spans"),  # same gram counting
+    "dsir_sample": (q_dsir_sample, None),
+    "blockwords": (q_blockwords, "quality_filter"),  # C4 wordlist rule
+    "host_cap": (q_host_cap, None),
+    "robots_filter": (q_robots_filter, None),
+    "warc_roundtrip": (q_warc_roundtrip, "wet_export"),  # same record framing
+    "wet_export": (q_wet_export, None),
+    "sq_topk": (q_sq_topk, None),
+    "mix_temperature": (q_mix_temperature, "token_budget_mix"),  # same token-mass agg
+    "ip_range_join": (q_ip_range_join, None),
+    "markdown_render": (q_markdown_render, "flagship_extract"),  # same parse stage
+    "url_parts": (q_url_parts, "robots_filter"),  # same url parse expressions
+    "host_stats": (q_host_stats, "host_quality_eb"),  # per-host aggregate, same urls
+    "quality_filter": (q_quality_filter, None),
+    "lm_score": (q_lm_score, "perplexity_buckets"),  # its bigram LM scoring stage
+    "repetition_stats": (q_repetition_stats, "quality_filter"),  # Gopher repetition
+    "pii_redact": (q_pii_redact, "signals"),  # regex projection + md5 fingerprint
+    "outlinks": (q_outlinks, "pagerank_hosts"),  # consumes outlinks
+    "host_degree": (q_host_degree, "spam_hosts"),  # full-outer host merge of link sides
+    "pagerank_hosts": (q_pagerank_hosts, None),
+    "anchor_terms": (q_anchor_terms, "pagerank_hosts"),  # same link extraction
+    "canonical_groups": (q_canonical_groups, "exact_dedup"),  # keeper per group
+    "dup_spans": (q_dup_spans, None),
+    "dup_span_removal": (q_dup_span_removal, None),
+    "lsh_recall": (q_lsh_recall, "minhash_pairs"),  # same LSH bands
+    "inverted_index": (q_inverted_index, "phrase_search"),  # same token postings
+    "merge_table": (q_merge_table, "resume_antijoin"),  # anti-join + union upsert
+    "stream_extract": (q_stream_extract, None),
+    "token_budget_mix": (q_token_budget_mix, None),
+    "host_quality": (q_host_quality, "host_quality_eb"),  # same per-host kept fraction
+    "host_quality_eb": (q_host_quality_eb, None),
+    "bloom_gate": (q_bloom_gate, "dedup_increment"),  # exact path is its fp semi-join
+    "semantic_dedup": (q_semantic_dedup, None),
+    "cluster_sample": (q_cluster_sample, "semantic_dedup"),  # seeded-Lloyd cells
+    "ivf_assign": (q_ivf_assign, "pq_topk"),  # seeded-Lloyd quantizer + argmax
+    "decontam_spans": (q_decontam_spans, "contamination"),  # benchmark n-gram join
+    "script_stats": (q_script_stats, "signals"),  # fused into its projection
+    "vocab_growth": (q_vocab_growth, "token_stats"),  # same tokenizer
+    "code_detect": (q_code_detect, "signals"),  # fused into its projection
+    "signals": (q_signals, None),
+    "bpe_tokens": (q_bpe_tokens, "token_stats"),  # tokenize projection
+    "token_fertility": (q_token_fertility, "token_stats"),  # tokenize projection
+    "heavy_hitters": (q_heavy_hitters, None),
+    "lm_crossentropy": (q_lm_crossentropy, "perplexity_buckets"),  # bigram LM
+    "rp_project": (q_rp_project, "sq_topk"),  # array arithmetic over embeddings
+    "page_types": (q_page_types, "robots_filter"),  # same url parse expressions
+    "burst_detection": (q_burst_detection, "perplexity_buckets"),  # ROWS-frame window
+    "quality_gate": (q_quality_gate, "perplexity_buckets"),  # same distributed_ntile
+    "trustrank_hosts": (q_trustrank_hosts, None),
+    "shard_manifest": (q_shard_manifest, "exact_dedup"),  # grouped md5 fingerprints
+    "pq_topk": (q_pq_topk, None),
+    "hll_distinct": (q_hll_distinct, None),
+    "bitext_pairs": (q_bitext_pairs, None),
+    "sketch_quantiles": (q_sketch_quantiles, None),
+    "phrase_search": (q_phrase_search, None),
+    "hybrid_search": (q_hybrid_search, None),
+    "search_snippets": (q_search_snippets, "phrase_search"),  # token positions per doc
+    "expansion_terms": (q_expansion_terms, "hybrid_search"),  # its BM25 leg
+    "more_like_this": (q_more_like_this, "hybrid_search"),  # tf-idf weighting
+    "bm25": (q_bm25, "hybrid_search"),  # its lexical leg is bm25_topk
+    "train_eval_split": (q_train_eval_split, "host_cap"),  # canonical host of urls
+    "within_doc_dedup": (q_within_doc_dedup, "line_dedup"),  # repeated-line collapse
+    "latest_capture": (q_latest_capture, "sitemap_recrawl"),  # latest capture per url
+    "page_meta": (q_page_meta, None),
+    "pub_date": (q_pub_date, "page_meta"),  # head-regex extraction
+    "fix_encoding": (q_fix_encoding, "token_stats"),  # zero-shuffle text projection
+    "sentences": (q_sentences, "chunk_documents"),  # split + explode, zero shuffle
+    "snapshot_diff": (q_snapshot_diff, None),
+    "sitemap_recrawl": (q_sitemap_recrawl, None),
+    "cluster_reps": (q_cluster_reps, None),
+    "spam_hosts": (q_spam_hosts, None),
+    "html_tables": (q_html_tables, None),
+    "headings_outline": (q_headings_outline, "html_tables"),  # regex + posexplode
+    "html_sections": (q_html_sections, "html_tables"),  # regex + posexplode
+    "feed_items": (q_feed_items, None),
+    "fetch_schedule": (q_fetch_schedule, None),
+    "crawl_delays": (q_crawl_delays, None),
+    "jsonld": (q_jsonld, "page_meta"),  # head-regex extraction
+}
 
 
 # --------------------------------------------------------------------------
@@ -6529,13 +6280,13 @@ def _corpus_report_oracle() -> str:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB twins for the driver registry (queries())."""
-    return {k: v for k, v in _oracle_sql_all().items() if k not in _EXTRA_KEYS}
+    return {k: v for k, v in _oracle_sql_all().items() if REGISTRY[k][1] is None}
 
 
 def extra_oracle_sql() -> dict[str, str]:
     """DuckDB twins for extra_queries() — pytest-checked, outside the
     driver's 50-entry correctness window."""
-    return {k: v for k, v in _oracle_sql_all().items() if k in _EXTRA_KEYS}
+    return {k: v for k, v in _oracle_sql_all().items() if REGISTRY[k][1] is not None}
 
 
 def _pub_date_oracle() -> str:

@@ -7,10 +7,7 @@ deterministic 1:N doc->chunks operator.
 Production path (``chunk_documents``): pure JVM expressions —
 ``split``/``filter``/``sequence``/``explode``/``slice`` — no Python in the
 plan, whole-stage codegen end to end, no shuffle (chunking is embarrassingly
-parallel over input partitions). A Python-UDTF variant
-(``chunk_documents_udtf``) is kept as the table-function operator-shape demo
-(one input row, a variable number of output rows via SQL LATERAL) and is
-asserted equal to the expression path in tests.
+parallel over input partitions).
 
 Tokenizer contract (shared verbatim by the expression path, the Python
 chunker, and the SQL oracle): tokens are the non-empty pieces of splitting
@@ -27,7 +24,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 WINDOW = 60
@@ -57,7 +54,7 @@ def _token_array(text_col: str):
     return F.filter(F.split(F.col(text_col), WS_CLASS), lambda t: t != F.lit(""))
 
 
-def chunk_documents(spark: SparkSession, docs: DataFrame,
+def chunk_documents(docs: DataFrame,
                     id_col: str = "doc_id", text_col: str = "text",
                     window: int = WINDOW, stride: int = STRIDE) -> DataFrame:
     """docs -> (doc_id, chunk_idx, chunk_text, n_tokens), expression-only.
@@ -65,7 +62,6 @@ def chunk_documents(spark: SparkSession, docs: DataFrame,
     Plan shape: project(tokenize) -> explode(sequence) -> project(slice) —
     all inside whole-stage codegen, zero Python, zero shuffle. The same
     semantics as ``chunk_text`` (asserted against it and the SQL twin).
-    ``spark`` is unused (kept for signature parity with the UDTF variant).
     """
     toks = docs.select(
         F.col(id_col), _token_array(text_col).alias("toks")
@@ -83,31 +79,6 @@ def chunk_documents(spark: SparkSession, docs: DataFrame,
         F.col("chunk_idx").cast("int").alias("chunk_idx"),
         F.concat_ws(" ", F.slice("toks", start + 1, window)).alias("chunk_text"),
         F.least(F.lit(window), F.col("n") - start).cast("int").alias("n_tokens"),
-    )
-
-
-def chunk_documents_udtf(spark: SparkSession, docs: DataFrame,
-                         id_col: str = "doc_id", text_col: str = "text",
-                         window: int = WINDOW, stride: int = STRIDE) -> DataFrame:
-    """UDTF + SQL LATERAL variant of chunk_documents — the table-function
-    operator shape (kept as a demo/alternate; the expression path above is
-    the production plan). Arrow-optimized so batches cross in Arrow form."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="chunk_idx int, chunk_text string, n_tokens int",
-          useArrow=True)
-    class ChunkDoc:
-        def eval(self, text: str):  # noqa: D102 — UDTF contract method
-            for idx, chunk, n in chunk_text(text, window, stride):
-                yield idx, chunk, n
-
-    spark.udtf.register("chunk_doc", ChunkDoc)
-    docs.select(id_col, text_col).createOrReplaceTempView("docs_to_chunk")
-    return spark.sql(
-        f"""
-        SELECT d.{id_col}, c.chunk_idx, c.chunk_text, c.n_tokens
-        FROM docs_to_chunk d, LATERAL chunk_doc(d.{text_col}) c
-        """
     )
 
 

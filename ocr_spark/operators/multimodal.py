@@ -504,11 +504,6 @@ def decode_image_tagged(data: bytes) -> tuple[int, int, str]:
     )
 
 
-def decode_image(data: bytes) -> tuple[int, int]:
-    w, h, _ = decode_image_tagged(data)
-    return w, h
-
-
 def _fake_dimensions(digest: bytes) -> tuple[int, int]:
     """Deterministic fake decoder: dimensions derived from the content hash.
     Keeps batch shape/typing identical to the real path."""

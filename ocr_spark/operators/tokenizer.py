@@ -41,11 +41,9 @@ from itertools import chain
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..core.bpe import build_word_map
 from ..functions.text import TOKEN_PATTERN
 
 UNK = "<unk>"
-DEFAULT_N_MERGES = 40
 DEFAULT_MAX_WORDS = 24
 
 
@@ -66,13 +64,6 @@ def fit_word_counts(df: DataFrame, text_col: str = "text",
         .collect()
     )
     return {r["w"]: r["c"] for r in rows}
-
-
-def fit_bpe_encoder(df: DataFrame, text_col: str = "text",
-                    n_merges: int = DEFAULT_N_MERGES,
-                    max_words: int = DEFAULT_MAX_WORDS) -> dict[str, str]:
-    """Distributed-sample + serial-fit: the word -> token-string map."""
-    return build_word_map(fit_word_counts(df, text_col, max_words), n_merges)
 
 
 def _map_literal(word_map: dict[str, str]) -> Column:

@@ -61,6 +61,30 @@ def test_driver_registry_fits_correctness_window():
     assert set(entrymod.extra_oracle_sql()) == set(entrymod.extra_queries())
 
 
+def test_registry_witnesses_are_in_the_window():
+    """Each query outside the driver's window names, in REGISTRY, the
+    in-window query that runs the same operator or plan shape; the window
+    and the rest split the table in table order."""
+    window = entrymod.queries()
+    for name, (_, witness) in entrymod.REGISTRY.items():
+        if witness is not None:
+            assert witness != name, f"{name} witnesses itself"
+            assert witness in window, f"{name}: witness {witness!r} is not in queries()"
+    names = list(entrymod.REGISTRY)
+    assert list(window) == [k for k in names if entrymod.REGISTRY[k][1] is None]
+    assert list(entrymod.extra_queries()) == [k for k in names if k not in window]
+    assert len(window) <= 50
+
+
+def test_builders_leave_the_session_unchanged(spark):
+    """A builder must not register views in the caller's session
+    (grouping_sets passes its frame to spark.sql as an argument)."""
+    before = {t.name for t in spark.catalog.listTables()}
+    QUERIES["grouping_sets"](spark, SF_DIR).collect()
+    assert not spark.catalog.tableExists("events_gs")
+    assert {t.name for t in spark.catalog.listTables()} == before
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_parity(spark, duck, name):
     got = _canon(QUERIES[name](spark, SF_DIR).toPandas())

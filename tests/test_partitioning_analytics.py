@@ -150,7 +150,7 @@ def test_chunk_documents_expression_matches_pure_chunker(spark):
     docs = _crafted_docs(spark)
     got = {
         (r.doc_id, r.chunk_idx): (r.chunk_text, r.n_tokens)
-        for r in chunk_documents(spark, docs).collect()
+        for r in chunk_documents(docs).collect()
     }
     expected = {}
     for doc_id, text in docs.collect():
@@ -158,15 +158,6 @@ def test_chunk_documents_expression_matches_pure_chunker(spark):
             expected[(doc_id, idx)] = (chunk, n)
     assert got == expected
     assert not any(k[0] in (3, 4) for k in got)
-
-
-def test_chunk_documents_udtf_variant_agrees(spark):
-    from ocr_spark.operators.chunking import chunk_documents, chunk_documents_udtf
-
-    docs = _crafted_docs(spark)
-    expr = sorted(map(tuple, chunk_documents(spark, docs).collect()))
-    udtf = sorted(map(tuple, chunk_documents_udtf(spark, docs).collect()))
-    assert expr == udtf
 
 
 def test_pack_sequences_two_pass_matches_global_cumsum(spark):
@@ -179,7 +170,7 @@ def test_pack_sequences_two_pass_matches_global_cumsum(spark):
          for i in range(200)],
         "doc_id long, text string",
     )
-    chunks = chunk_documents(spark, docs)
+    chunks = chunk_documents(docs)
     got = {
         (r.doc_id, r.chunk_idx): r.seq_id
         for r in pack_sequences(chunks, num_partitions=64).collect()

@@ -1475,7 +1475,7 @@ def q_stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ocr_spark.session import EXTRACTED_SCHEMA, PAGES_SCHEMA
-    from ocr_spark.streaming.extract_stream import extract_stream, read_pages_stream
+    from ocr_spark.streaming.extract_stream import start_extract_stream
 
     # scratch dir keyed by (sf_dir, pid): repeated runs in ONE process reuse
     # a directory (no mkdtemp leak), while concurrent processes (parallel
@@ -1488,14 +1488,7 @@ def q_stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)  # fresh checkpoint each run
     pages = pages_from_documents(spark, sf_dir, max_doc_id=200)
     pages.write.mode("overwrite").parquet(f"{base}/in")
-    q = (
-        extract_stream(read_pages_stream(spark, f"{base}/in"))
-        .writeStream.format("parquet")
-        .option("path", f"{base}/out")
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = start_extract_stream(spark, f"{base}/in", f"{base}/out", f"{base}/ckpt")
     # a silent timeout would read a partial sink as if it were complete
     if not q.awaitTermination(300):
         q.stop()
@@ -1854,11 +1847,10 @@ def q_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The BPE query's training artifact: a fixed exemplar word-count table
 # (the production shape — tokenizers are fit offline on a bounded sample
-# and shipped as an artifact; the DISTRIBUTED fit path,
-# tokenizer.fit_word_counts, is exercised by test_tokenizer). 24 of the
-# corpus's 31 words with stylized descending counts: the 7 absent words
-# exercise the <unk> path corpus-wide. Shared with the oracle so the
-# fitted map cannot drift between engines.
+# and shipped as an artifact). 24 of the corpus's 31 words with stylized
+# descending counts: the 7 absent words exercise the <unk> path
+# corpus-wide. Shared with the oracle so the fitted map cannot drift
+# between engines.
 BPE_TRAIN_COUNTS = {
     "join": 96, "hash": 94, "row": 93, "batch": 92, "scan": 91,
     "customer": 90, "column": 89, "filter": 88, "small": 87, "slow": 86,

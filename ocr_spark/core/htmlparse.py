@@ -341,16 +341,6 @@ def score_blocks(blocks: list[Block],
     return kept
 
 
-def extract_html_text(html_text: str) -> tuple[str, int]:
-    """HTML -> (main-content text, kept-block count), strict strategy only.
-
-    Blocks join with a single newline; normalize_text is applied by the
-    caller-level contract in core.extract (one normalization, one place).
-    """
-    blocks = score_blocks(extract_blocks(html_text))
-    return "\n".join(b.text for b in blocks), len(blocks)
-
-
 def extract_html_text_cascade(html_text: str) -> tuple[str, int, str]:
     """HTML -> (text, kept-block count, strategy) through the two-strategy
     cascade (F14 analog with confidence early-exit):

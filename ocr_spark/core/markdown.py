@@ -27,9 +27,6 @@ from __future__ import annotations
 
 from .htmlparse import Block
 
-_MD_SPECIAL_PREFIX = ("#", "-", ">")
-
-
 def block_to_markdown(b: Block) -> str:
     """One kept block -> one markdown block (no trailing newline)."""
     if b.level:
@@ -46,27 +43,3 @@ def block_to_markdown(b: Block) -> str:
 def blocks_to_markdown(blocks: list[Block]) -> str:
     """Kept blocks -> one markdown document (blank-line separated)."""
     return "\n\n".join(block_to_markdown(b) for b in blocks)
-
-
-def markdown_to_text(md: str) -> str:
-    """Strip the rendering back off: the round-trip check used by tests.
-    Exact inverse of :func:`blocks_to_markdown` for blocks produced by the
-    extraction cascade (block text never starts with a marker the renderer
-    adds, because ``normalize_inline`` strips leading whitespace but keeps
-    content chars — a literal leading '#' in content is ambiguous and
-    therefore NOT claimed; tests pin the cascade outputs, not arbitrary
-    markdown)."""
-    out = []
-    for blk in md.split("\n\n"):
-        while blk[:2] == "> ":
-            blk = blk[2:]
-        if blk[:2] == "- ":
-            blk = blk[2:]
-        else:
-            i = 0
-            while i < len(blk) and blk[i] == "#":
-                i += 1
-            if 0 < i <= 6 and blk[i : i + 1] == " ":
-                blk = blk[i + 1 :]
-        out.append(blk)
-    return "\n".join(out)

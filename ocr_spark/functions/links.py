@@ -34,9 +34,6 @@ from .urls import url_host, url_scheme
 
 # RE2 == Java-regex on this subset. Group 1 is the raw href.
 HREF_RE = r'<a\s[^>]*href="([^"]*)"'
-# Anchor text: the first text run after the opening tag, tags stripped
-# by the non-'<' class — matches the synth and WARC-lite forms.
-ANCHOR_RE = r'<a\s[^>]*href="[^"]*"[^>]*>([^<]*)<'
 # Whole well-formed anchor tag (open tag + text + literal closing </a):
 # matched as group 0 so href and anchor text are pulled from the SAME
 # tag and can never mis-pair. The '</a' terminator (not just any '<') is
@@ -53,12 +50,6 @@ def _col(c) -> Column:
 def extract_hrefs(html_text) -> Column:
     """array<string> of raw href attribute values, document order."""
     return F.regexp_extract_all(_col(html_text), F.lit(HREF_RE), F.lit(1))
-
-
-def extract_anchor_texts(html_text) -> Column:
-    """array<string> of anchor text runs, document order (parallel to
-    ``extract_hrefs`` on well-formed ``<a href="...">text</a>`` tags)."""
-    return F.regexp_extract_all(_col(html_text), F.lit(ANCHOR_RE), F.lit(1))
 
 
 def anchor_pairs(html_text) -> Column:
@@ -107,12 +98,6 @@ def strip_fragment(url) -> Column:
     return F.regexp_replace(_col(url), r"#.*$", "")
 
 
-def page_title(html_text) -> Column:
-    """<title> text, '' when absent; whitespace-collapsed and trimmed."""
-    t = F.regexp_extract(_col(html_text), r"<title[^>]*>([^<]*)</title>", 1)
-    return F.trim(F.regexp_replace(t, r"\s+", " "))
-
-
 def meta_content(html_text, name: str) -> Column:
     """content="..." of <meta name="NAME" ...>, '' when absent. The
     name-first attribute order only (the form every major generator
@@ -136,7 +121,6 @@ def canonical_link(html_text) -> Column:
 # ---------------------------------------------------------------------------
 
 SQL_HREFS = "regexp_extract_all({c}, '<a\\s[^>]*href=\"([^\"]*)\"', 1)"
-SQL_ANCHORS = "regexp_extract_all({c}, '<a\\s[^>]*href=\"[^\"]*\"[^>]*>([^<]*)<', 1)"
 # whole-tag harvest + per-tag field extraction (anchor_pairs' twins):
 # unnest SQL_ANCHOR_TAGS, then apply the two per-tag templates to each
 SQL_ANCHOR_TAGS = (
@@ -144,10 +128,6 @@ SQL_ANCHOR_TAGS = (
 )
 SQL_TAG_HREF = "regexp_extract({t}, '<a\\s[^>]*href=\"([^\"]*)\"', 1)"
 SQL_TAG_ANCHOR = "regexp_extract({t}, '>([^<]*)<', 1)"
-SQL_PAGE_TITLE = (
-    "trim(regexp_replace("
-    "regexp_extract({c}, '<title[^>]*>([^<]*)</title>', 1), '\\s+', ' ', 'g'))"
-)
 
 # base-URL pieces (mirror functions.urls twins, scheme-anchored)
 _SQL_B_SCHEME = "lower(regexp_extract({u}, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1))"

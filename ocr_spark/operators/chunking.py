@@ -9,20 +9,19 @@ Production path (``chunk_documents``): pure JVM expressions —
 plan, whole-stage codegen end to end, no shuffle (chunking is embarrassingly
 parallel over input partitions).
 
-Tokenizer contract (shared verbatim by the expression path, the Python
-chunker, and the SQL oracle): tokens are the non-empty pieces of splitting
-on the explicit ASCII whitespace class ``[ \\t\\n\\r\\f\\v]+`` — an explicit
-class because the three engines' notions of ``\\s`` / ``str.split()``
-whitespace differ (Python's str.split also splits on Unicode whitespace;
-Java's ``\\s`` is ASCII-only); an explicit shared class removes the latent
-divergence. Chunk starts at every ``stride`` tokens from 0 while < n_tokens;
-window ``window`` tokens (trailing chunks shorter); chunks join with single
-spaces; documents with zero tokens produce zero chunks.
+Tokenizer contract (shared verbatim by the expression path, the tests'
+Python chunker, and the SQL oracle): tokens are the non-empty pieces of
+splitting on the explicit ASCII whitespace class ``[ \\t\\n\\r\\f\\v]+``
+— an explicit class because the three engines' notions of ``\\s`` /
+``str.split()`` whitespace differ (Python's str.split also splits on
+Unicode whitespace; Java's ``\\s`` is ASCII-only); an explicit shared
+class removes the latent divergence. Chunk starts at every ``stride``
+tokens from 0 while < n_tokens; window ``window`` tokens (trailing chunks
+shorter); chunks join with single spaces; documents with zero tokens
+produce zero chunks.
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -31,22 +30,8 @@ WINDOW = 60
 STRIDE = 50
 
 # the shared tokenizer class as REAL control characters — identical bytes in
-# the Java regex, the RE2 (DuckDB) regex, and the Python re below
+# the Java regex, the RE2 (DuckDB) regex, and the tests' Python re
 WS_CLASS = "[ \t\n\r\f\x0b]+"
-_WS_RE = re.compile(WS_CLASS)
-
-
-def chunk_text(text: str, window: int = WINDOW, stride: int = STRIDE):
-    """Pure chunker: [(chunk_idx, chunk_text, n_tokens), ...]."""
-    toks = [t for t in _WS_RE.split(text) if t] if text else []
-    n = len(toks)
-    out = []
-    idx = 0
-    for start in range(0, n, stride):
-        sub = toks[start : start + window]
-        out.append((idx, " ".join(sub), len(sub)))
-        idx += 1
-    return out
 
 
 def _token_array(text_col: str):
@@ -61,7 +46,7 @@ def chunk_documents(docs: DataFrame,
 
     Plan shape: project(tokenize) -> explode(sequence) -> project(slice) —
     all inside whole-stage codegen, zero Python, zero shuffle. The same
-    semantics as ``chunk_text`` (asserted against it and the SQL twin).
+    semantics as the tests' pure Python chunker and the SQL twin.
     """
     toks = docs.select(
         F.col(id_col), _token_array(text_col).alias("toks")

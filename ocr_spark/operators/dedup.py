@@ -465,43 +465,6 @@ def token_jaccard_pairs(
     )
 
 
-def token_jaccard_pairs_naive(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """The quadratic join-on-every-shared-token formulation — kept ONLY as
-    the equivalence oracle for :func:`token_jaccard_pairs`' prefix filter
-    (tests assert identical output row-for-row). Never use in production:
-    one common token shared by k docs emits k^2/2 join rows."""
-    toks = _distinct_tokens(df, text_col, id_col)
-    sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("n_tok"))
-    a = toks.alias("a")
-    b = toks.alias("b")
-    shared = (
-        a.join(b, (F.col("a.tok") == F.col("b.tok")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    return (
-        shared.join(sa, F.col("id_a") == F.col("sa.id"))
-        .join(sb, F.col("id_b") == F.col("sb.id"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_shared").cast("double")
-                / (F.col("sa.n_tok") + F.col("sb.n_tok") - F.col("n_shared")).cast("double"),
-                4,
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
 def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """64-bit SimHash per document via one Arrow-vectorized pandas UDF
     (numpy bit voting — the justified Python hot path: 64 bitwise

@@ -122,7 +122,15 @@ def incremental_status_against_state(
     union-wide bucket cap, same exact-jaccard verification — but computes
     the committed side entirely from stored state (plan contains no scan
     of committed text), and skips intra-side pairing up front instead of
-    filtering it out afterwards."""
+    filtering it out afterwards.
+
+    ``band_store`` (a :func:`write_band_store` table), together with
+    ``band_store_tail_state`` when given, must hold exactly
+    ``band_buckets(state_df)``'s rows. Nothing here checks that: a store
+    that is stale against ``state_df`` silently loses near-duplicate
+    recall. The caller owns freshness — ``DedupIngest._band_probe``
+    compares the store's stamp against its meta table and falls back to
+    the full derive on any mismatch."""
     new_state = committed_state(new_df, text_col, id_col, perms)
     new_ids = new_state.select("id")
 
@@ -238,25 +246,6 @@ def incremental_status_against_state(
             .otherwise("new")
             .alias("status"),
         )
-    )
-
-
-def incremental_status(
-    new_df: DataFrame,
-    committed_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Convenience wrapper when no persisted state exists yet: derive the
-    committed state in-session, then run the state-based gate. Production
-    ingest persists :func:`committed_state` once per commit instead."""
-    return incremental_status_against_state(
-        new_df,
-        committed_state(committed_df, text_col, id_col),
-        text_col=text_col,
-        id_col=id_col,
-        threshold=threshold,
     )
 
 

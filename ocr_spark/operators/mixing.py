@@ -11,21 +11,17 @@ filtering:
   report's keep/drop decision (data_validator.py:523-551), lifted from
   per-document to corpus-budgeted.
 
-- ``domain_blocklist`` / ``apply_domain_blocklist``: aggregate the per-doc
-  quality gate to crawl domains and drop WHOLE hosts whose corpus is
-  mostly garbage (UT1/RefinedWeb-style domain filtering). A host serving
-  90% junk pages poisons even its passing pages (templated spam rotates
-  enough to slip per-doc rules); the domain gate is the cheap corpus-level
-  backstop.
+- ``domain_blocklist``: aggregate the per-doc quality gate to crawl
+  domains and flag WHOLE hosts whose corpus is mostly garbage
+  (UT1/RefinedWeb-style domain filtering). A host serving 90% junk pages
+  poisons even its passing pages (templated spam rotates enough to slip
+  per-doc rules); the domain gate is the cheap corpus-level backstop.
 
 Scale: ``token_budget_select`` is ONE shuffle (hash by lang) + a sort-based
 running-sum window per language; languages are few, so the window's
-per-partition sort is the dominant cost for a 100-TB-scale language —
-``token_budget_select_scalable`` computes the SAME output with a
-range-partitioned two-pass cumsum so no language ever sorts in one task
-(tested equal row-for-row). ``domain_blocklist`` is
-a zero-shuffle per-row gate plus one host aggregation; the blocklist it
-returns is hosts-sized (tiny) and applies as a broadcast anti-join.
+per-partition sort is the dominant cost for a 100-TB-scale language.
+``domain_blocklist`` is a zero-shuffle per-row gate plus one host
+aggregation; the blocklist it returns is hosts-sized (tiny).
 """
 
 from __future__ import annotations
@@ -82,90 +78,6 @@ def token_budget_select(
         "quality",
         F.sum("n_tokens").over(w).alias("cum_tokens"),
         (F.sum("n_tokens").over(w) <= F.col("budget")).alias("selected"),
-    )
-
-
-def token_budget_select_scalable(
-    df: DataFrame,
-    budgets: dict[str, int],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """:func:`token_budget_select` with the same output contract, computed
-    without a one-task-per-language sort.
-
-    The windowed form hash-partitions by language, so each language's
-    prefix sum runs in a SINGLE task — and 'en' is half the web: at 100 TB
-    that task sorts ~50 TB alone. This form applies pack_sequences'
-    two-pass range cumsum (operators/chunking.py) with a per-language
-    reset: range-repartition on (lang, quality DESC, id) so one language
-    spans many ordered tasks, take per-(partition, lang) token totals
-    (one tiny row each — the legitimate bounded driver aggregate), turn
-    them into per-(partition, lang) starting offsets, and broadcast them
-    back under a window partitioned by (partition, lang). Skew now only
-    costs what range partitioning charges: proportional shares, not one
-    straggler.
-    """
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 2
-    b = spark.createDataFrame(
-        [(k, int(v)) for k, v in sorted(budgets.items())],
-        f"{lang_col} string, budget long",
-    )
-    scored = df.select(
-        F.col(id_col),
-        F.col(lang_col),
-        token_count(text_col).cast("long").alias("n_tokens"),
-        quality_score(text_col).alias("quality"),
-    ).join(F.broadcast(b), lang_col)
-
-    # persist pins ONE materialized range partitioning across the totals
-    # pass and the final pass (range boundary sampling is not re-run
-    # deterministic — see pack_sequences)
-    from .dedup import _persist_scoped
-
-    ranged = _persist_scoped(
-        "mix_ranged",
-        scored.repartitionByRange(
-            num_partitions,
-            F.asc(lang_col), F.desc("quality"), F.asc(id_col),
-        ).withColumn("_pid", F.spark_partition_id()),
-    )
-    totals = (
-        ranged.groupBy("_pid", lang_col)
-        .agg(F.sum("n_tokens").alias("_tot"))
-        .orderBy(lang_col, "_pid")
-        .collect()
-    )
-    offsets, acc, cur = [], 0, None
-    for r in totals:
-        if r[lang_col] != cur:
-            cur, acc = r[lang_col], 0
-        offsets.append((r["_pid"], r[lang_col], acc))
-        acc += r["_tot"]
-    off_df = spark.createDataFrame(
-        offsets or [(0, "", 0)], f"_pid int, {lang_col} string, _off long"
-    )
-
-    w = (
-        Window.partitionBy("_pid", lang_col)
-        .orderBy(F.desc("quality"), F.asc(id_col))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.col("_off") + F.sum("n_tokens").over(w)
-    return (
-        ranged.join(F.broadcast(off_df), ["_pid", lang_col])
-        .select(
-            id_col,
-            lang_col,
-            "n_tokens",
-            "quality",
-            cum.alias("cum_tokens"),
-            (cum <= F.col("budget")).alias("selected"),
-        )
     )
 
 
@@ -268,19 +180,6 @@ def domain_quality_eb(
         ).alias("kept_frac"),
         smoothed.alias("smoothed_frac"),
         (smoothed < F.lit(min_smoothed_frac)).alias("blocked"),
-    )
-
-
-def apply_domain_blocklist(df: DataFrame, blocklist: DataFrame,
-                           url_col: str = "url") -> DataFrame:
-    """Drop every document whose host is blocked. The blocklist is
-    hosts-sized, so this plans as a broadcast left-anti join — the
-    100-TB side never shuffles."""
-    blocked = blocklist.where("blocked").select("host")
-    return df.join(
-        F.broadcast(blocked),
-        url_host(url_col) == F.col("host"),
-        "left_anti",
     )
 
 

@@ -323,117 +323,6 @@ def parse_av_header(data: bytes) -> dict | None:
     return None
 
 
-def parse_exif(data: bytes) -> dict | None:
-    """Pure-Python EXIF IFD0 metadata from a JPEG APP1 segment — the
-    provenance twin of ``parse_image_header``: orientation (the tag a
-    training pipeline MUST honor before any crop/resize — a value of 6/8
-    means the stored pixels are rotated), capture timestamp, and camera
-    make, read straight from the TIFF structure (both byte orders), no
-    decode library. Returns ``{orientation, captured_at, make}`` with
-    None for absent tags, or None when the payload has no valid Exif
-    APP1 (never throws on truncated/corrupt segments).
-
-    Public layout: JPEG marker walk to APP1 ``Exif\\x00\\x00``, TIFF
-    header (II/MM + 42), IFD0 12-byte entries; SHORT values inline,
-    ASCII values inline when <= 4 bytes else via TIFF-relative offset.
-    Tags: 0x0112 Orientation, 0x0132 DateTime, 0x010F Make."""
-    if data[:3] != b"\xff\xd8\xff":
-        return None
-    i, n = 2, len(data)
-    tiff = None
-    while i + 4 <= n:
-        if data[i] != 0xFF:
-            return None
-        marker = data[i + 1]
-        if marker == 0xFF:
-            i += 1
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        seg_len = int.from_bytes(data[i + 2:i + 4], "big")
-        if seg_len < 2:
-            return None
-        if marker == 0xE1 and data[i + 4:i + 10] == b"Exif\x00\x00":
-            tiff = data[i + 10:i + 2 + seg_len]
-            break
-        if marker == 0xDA:  # start-of-scan: no APP1 ahead of pixel data
-            return None
-        i += 2 + seg_len
-    if tiff is None or len(tiff) < 8:
-        return None
-    if tiff[:2] == b"II":
-        bo = "little"
-    elif tiff[:2] == b"MM":
-        bo = "big"
-    else:
-        return None
-    if int.from_bytes(tiff[2:4], bo) != 42:
-        return None
-    ifd = int.from_bytes(tiff[4:8], bo)
-    if ifd + 2 > len(tiff):
-        return None
-    cnt = int.from_bytes(tiff[ifd:ifd + 2], bo)
-    out = {"orientation": None, "captured_at": None, "make": None}
-    found = False
-    for e in range(cnt):
-        p = ifd + 2 + 12 * e
-        if p + 12 > len(tiff):
-            break
-        tag = int.from_bytes(tiff[p:p + 2], bo)
-        typ = int.from_bytes(tiff[p + 2:p + 4], bo)
-        count = int.from_bytes(tiff[p + 4:p + 8], bo)
-        if tag == 0x0112 and typ == 3:  # Orientation, SHORT (inline)
-            out["orientation"] = int.from_bytes(tiff[p + 8:p + 10], bo)
-            found = True
-        elif tag in (0x0132, 0x010F) and typ == 2:  # ASCII
-            if count <= 4:
-                raw = tiff[p + 8:p + 8 + count]
-            else:
-                off = int.from_bytes(tiff[p + 8:p + 12], bo)
-                raw = tiff[off:off + count]
-            s = raw.split(b"\x00")[0].decode("ascii", "replace").strip()
-            key = "captured_at" if tag == 0x0132 else "make"
-            out[key] = s or None
-            found = True
-    return out if found else None
-
-
-EXIF_META_SCHEMA = ("id string, has_exif boolean, orientation int, "
-                    "captured_at string, make string")
-
-
-def exif_meta(df: DataFrame, binary_col: str = "html",
-              id_col: str = "url") -> DataFrame:
-    """Partition-parallel EXIF extraction over a binary column — one row
-    per input (never-drop: non-JPEG / EXIF-less payloads come back
-    ``has_exif=false`` with NULL fields). Same Arrow ``mapInPandas``
-    shape as ``av_features``; real parsing, no stub needed (absence of
-    EXIF is data, not a decoder gap)."""
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "has_exif", "orientation",
-                                   "captured_at", "make")}
-            for i, blob in enumerate(pdf[binary_col].tolist()):
-                b = blob if blob is not None else b""
-                meta = parse_exif(b)
-                out["id"].append(pdf[id_col].iat[i])
-                out["has_exif"].append(meta is not None)
-                out["orientation"].append(
-                    None if meta is None else meta["orientation"]
-                )
-                out["captured_at"].append(
-                    None if meta is None else meta["captured_at"]
-                )
-                out["make"].append(None if meta is None else meta["make"])
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, binary_col).mapInPandas(
-        feats, schema=EXIF_META_SCHEMA
-    )
-
-
 def _fake_av(digest: bytes) -> dict:
     """Deterministic fake A/V metadata for unparseable payloads — the same
     disclosed-stub contract as ``_fake_dimensions``: batch shape and typing

@@ -19,7 +19,6 @@ real vocabulary sizes. Both operators are exactly SQL-replayable (twins in
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -521,39 +520,4 @@ def bigram_lm_apply(
             F.coalesce("oov_words", F.lit(0)).alias("oov_words"),
             "lm_logprob",
         )
-    )
-
-
-def compression_ratio(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", level: int = 6) -> DataFrame:
-    """zlib-compressibility signal (the Gopher/RefinedWeb gibberish-and-
-    repetition detector): boilerplate-repetitive text compresses far below
-    natural prose, while random character soup barely compresses at all,
-    so both pathologies sit at opposite ends of one cheap scalar. Returns
-    (id, n_bytes, compression_ratio = deflated/original, 4 dp; empty text
-    -> ratio 1.0).
-
-    Arrow-vectorized pandas UDF over zlib (C-speed, no parse); zlib output
-    is deterministic for a fixed level, but not SQL-expressible — this is
-    an engine-native column like the streaming sink, pinned by crafted
-    pytest truths rather than a DuckDB twin."""
-    import zlib
-
-    from pyspark.sql.types import DoubleType
-
-    @F.pandas_udf(DoubleType())
-    def _ratio(texts: "pd.Series") -> "pd.Series":
-        out = []
-        for t in texts:
-            if not t:
-                out.append(1.0)
-                continue
-            raw = t.encode("utf-8")
-            out.append(round(len(zlib.compress(raw, level)) / len(raw), 4))
-        return pd.Series(out, dtype="float64")
-
-    return df.select(
-        F.col(id_col),
-        F.octet_length(text_col).cast("long").alias("n_bytes"),
-        _ratio(F.col(text_col)).alias("compression_ratio"),
     )

@@ -33,12 +33,6 @@ def sample_bucket(key_col, salt: str = "sample") -> Column:
     return F.pmod(h, F.lit(SAMPLE_DENOM))
 
 
-def hash_sample(df: DataFrame, rate: float, key_col: str = "doc_id",
-                salt: str = "sample") -> DataFrame:
-    """Keep a deterministic ``rate`` fraction of rows by key hash."""
-    return df.where(sample_bucket(key_col, salt) < int(rate * SAMPLE_DENOM))
-
-
 def stratified_sample(df: DataFrame, rates: dict[str, float],
                       default_rate: float = 0.0, stratum_col: str = "lang",
                       key_col: str = "doc_id", salt: str = "sample") -> DataFrame:
@@ -62,7 +56,7 @@ def soft_sample(df: DataFrame, weight_col: str, key_col: str = "doc_id",
     resampling preserves the score DISTRIBUTION (the kept corpus's
     expected composition matches the weights exactly). Keep iff
     bucket(key) < clamp(weight, 0, 1) * DENOM — the same portable md5
-    bucket as ``hash_sample``, so the draw is reproducible across runs,
+    ``sample_bucket`` as ``stratified_sample``, so the draw is reproducible across runs,
     partitionings, and engines, and raising a document's score can only
     ever flip it drop->keep (monotone, never resampled). NULL weights
     clamp to 0 (dropped — an unscored doc has no business in a

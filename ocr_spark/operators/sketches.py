@@ -77,26 +77,6 @@ def hll_registers(
     )
 
 
-def hll_merge_registers(stored: DataFrame | None, delta: DataFrame) -> DataFrame:
-    """Fold a new batch's registers into a persisted register table.
-
-    THE incremental-maintenance path: sketch state for an unbounded
-    crawl is ``groups x 256`` rows, and each ingest touches only the
-    batch's own registers plus this max-merge — the corpus text is never
-    re-read (the same never-re-read discipline as
-    operators/incremental.py's signature store). Commutative/idempotent,
-    so replayed batches (foreachBatch crash redelivery) cannot move the
-    estimate.
-    """
-    if stored is None:
-        return delta
-    return (
-        stored.unionByName(delta)
-        .groupBy("grp", "bucket")
-        .agg(F.max("rho").alias("rho"))
-    )
-
-
 def hll_estimate(regs: DataFrame) -> DataFrame:
     """Per-group estimate from a (grp, bucket, rho) register table.
 
@@ -180,22 +160,6 @@ def dd_buckets(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
         )
         .groupBy("grp", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def dd_merge(stored: DataFrame | None, delta: DataFrame) -> DataFrame:
-    """Fold a batch histogram into persisted sketch state (count-sum).
-
-    Unlike the HLL max-merge this is NOT replay-idempotent (a re-summed
-    batch double-counts), so the streaming deployment pairs it with the
-    batch-id commit-or-skip ledger (streaming/ingest.py) exactly like
-    the corpus appends themselves."""
-    if stored is None:
-        return delta
-    return (
-        stored.unionByName(delta)
-        .groupBy("grp", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
     )
 
 

@@ -4,11 +4,6 @@ Production tokenizers are FIT once on a bounded sample (single-node —
 the HF-tokenizers deployment shape) and APPLIED corpus-wide; the apply is
 what must scale. This module does exactly that, Spark-first:
 
-- ``fit_word_counts``: the distributed half of the fit — tokenize, one
-  map-side-combined word-count shuffle, take the top ``max_words`` by
-  (count desc, word asc) through TakeOrderedAndProject. The collected
-  sample is vocabulary-bounded (the legitimate tiny-aggregate class: it
-  IS the training sample, not corpus data).
 - ``core.bpe.build_word_map``: the pure serial fit (golden-pinned).
 - ``bpe_encode``: corpus-wide apply as a ZERO-SHUFFLE stateless
   projection — the fitted word->tokens map rides the task binary as a
@@ -27,7 +22,7 @@ counts; the apply is tokenize + lookup + join, so
 ``__spark_entry__._bpe_tokens_oracle`` replays the WHOLE application —
 the map embedded as VALUES, the same md5 fingerprint over the decoded
 token stream. The fit itself is non-SQL-expressible (iterative) and is
-instead pinned by hand-computed goldens + a distributed==serial test.
+instead pinned by hand-computed goldens.
 
 Reference analog: the engine-init amortization contract (E2) — the
 recognition model is loaded once and served per batch
@@ -44,26 +39,6 @@ from pyspark.sql import functions as F
 from ..functions.text import TOKEN_PATTERN
 
 UNK = "<unk>"
-DEFAULT_MAX_WORDS = 24
-
-
-def fit_word_counts(df: DataFrame, text_col: str = "text",
-                    max_words: int = DEFAULT_MAX_WORDS) -> dict[str, int]:
-    """Top ``max_words`` corpus words by (count desc, word asc) — the
-    deterministic bounded training sample for the serial fit."""
-    toks = F.regexp_extract_all(
-        F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-        F.lit(TOKEN_PATTERN), F.lit(0),
-    )
-    rows = (
-        df.select(F.explode(toks).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), F.asc("w"))
-        .limit(max_words)
-        .collect()
-    )
-    return {r["w"]: r["c"] for r in rows}
 
 
 def _map_literal(word_map: dict[str, str]) -> Column:

@@ -97,25 +97,3 @@ def parse_feed_items(
     rss = _items(feeds, xml_col, _ITEM_RE, "rss", carry)
     atom = _items(feeds, xml_col, _ENTRY_RE, "atom", carry)
     return rss.unionByName(atom)
-
-
-def feed_fetch_plan(items: DataFrame, seen: DataFrame,
-                    guid_col: str = "guid") -> DataFrame:
-    """Parsed feed items x committed guids -> the fetch plan: only items
-    whose guid has never been fetched, newest announcement kept when the
-    same guid appears in multiple polls (``max_by`` on item_ts). The seen
-    side is an anti-join probe — at 10^12 scale it is the committed-guid
-    index, not the corpus."""
-    fresh = items.filter(F.col("feed_ok")).join(
-        seen.select(F.col(guid_col).alias("__seen_guid")).distinct(),
-        on=[F.col(guid_col) == F.col("__seen_guid")],
-        how="left_anti",
-    )
-    return (
-        fresh.groupBy(guid_col)
-        .agg(
-            F.max_by("link", "item_ts").alias("link"),
-            F.max("item_ts").alias("latest_ts"),
-            F.count("*").cast("long").alias("n_announcements"),
-        )
-    )

@@ -337,10 +337,27 @@ class IcebergLiteTable:
                      if m.endswith(f"-{snapshot_id}.json")), None)
         if name is None:
             raise ValueError(f"no snapshot {snapshot_id!r}")
-        base = os.path.join(self._data_dir, snapshot_id)
-        entries = [e for e in self._entries_of(self._load(name))
-                   if e.get("base", e["dir"]) == base]
+        entries = self.added_entries(self._load(name))
         return self._read_entries(spark, entries, schema) if entries else None
+
+    @staticmethod
+    def added_entries(snap: dict) -> list[dict]:
+        """The entries snapshot ``snap`` itself wrote: its data lives under
+        data/<snapshot_id>/, while its manifest also records the entries
+        it carries from its parent chain."""
+        sid = snap["snapshot_id"]
+        return [e for e in IcebergLiteTable._entries_of(snap)
+                if os.path.basename(e.get("base", e["dir"]).rstrip(os.sep)) == sid]
+
+    @staticmethod
+    def is_append(snap: dict, parent: dict | None) -> bool:
+        """Append <=> every parent entry survives into ``snap``;
+        overwrite/compact/merge_into rewrite or drop parent files."""
+        if parent is None:
+            return True
+        cur = {e["dir"] for e in IcebergLiteTable._entries_of(snap)}
+        prev = {e["dir"] for e in IcebergLiteTable._entries_of(parent)}
+        return prev <= cur
 
     def data_bytes(self) -> int:
         """Total on-disk bytes of the current snapshot's data files —

@@ -110,11 +110,9 @@ class DedupIngest:
         parent = None
         for snap in snaps:
             if snap["sequence"] > stamp:
-                from .iceberg_stream import _is_append, _own_entries
-
-                if not _is_append(snap, parent):
+                if not IcebergLiteTable.is_append(snap, parent):
                     return None, None  # compaction rewrote history
-                tail_dirs += [e["dir"] for e in _own_entries(snap)]
+                tail_dirs += [e["dir"] for e in IcebergLiteTable.added_entries(snap)]
             parent = snap
         tail = (
             spark.read.parquet(*tail_dirs) if tail_dirs else None

@@ -5,7 +5,7 @@ No Spark session needed — fast."""
 import pytest
 
 from ocr_spark.core.extract import extract_record
-from ocr_spark.core.htmlparse import extract_blocks, extract_html_text, score_blocks
+from ocr_spark.core.htmlparse import extract_blocks, score_blocks
 from ocr_spark.core.normalize import normalize_inline, normalize_text
 from ocr_spark.core.pdfparse import PdfParseError, extract_pdf_text
 from ocr_spark.core.synth import build_pdf
@@ -39,39 +39,37 @@ class TestNormalize:
 class TestHtmlBlocks:
     def test_boilerplate_tags_blocked(self):
         html = f"<nav>{LONG}</nav><p>{LONG}</p><footer>{LONG}</footer>"
-        text, n = extract_html_text(html)
-        assert n == 1 and text.startswith("word")
+        kept = score_blocks(extract_blocks(html))
+        assert len(kept) == 1 and kept[0].text.startswith("word")
 
     def test_class_blocklist(self):
         html = f'<div class="sidebar left">{LONG}</div><div class="content">{LONG}</div>'
-        text, n = extract_html_text(html)
-        assert n == 1
+        assert len(score_blocks(extract_blocks(html))) == 1
 
     def test_link_density_pruned(self):
         links = "".join(f'<a href="#">link text {i}</a> ' for i in range(10))
         html = f"<p>{links}</p><p>{LONG}</p>"
-        text, n = extract_html_text(html)
-        assert n == 1 and "link text" not in text
+        kept = score_blocks(extract_blocks(html))
+        assert len(kept) == 1 and "link text" not in kept[0].text
 
     def test_short_blocks_dropped_headings_kept(self):
         html = f"<p>tiny</p><h2>Title</h2><p>{LONG}</p>"
-        text, n = extract_html_text(html)
-        assert n == 2 and text.splitlines()[0] == "Title"
+        kept = score_blocks(extract_blocks(html))
+        assert len(kept) == 2 and kept[0].text == "Title"
 
     def test_script_style_skipped(self):
         html = f"<script>{LONG}</script><style>{LONG}</style><p>{LONG}</p>"
-        _, n = extract_html_text(html)
-        assert n == 1
+        assert len(score_blocks(extract_blocks(html))) == 1
 
     def test_malformed_tolerated(self):
         html = f"</div><p>{LONG}<div></span>{LONG}"
-        text, n = extract_html_text(html)
-        assert n >= 1 and "word" in text
+        kept = score_blocks(extract_blocks(html))
+        assert kept and any("word" in b.text for b in kept)
 
     def test_entities_decoded(self):
         html = "<p>" + "fish &amp; chips &lt;tag&gt; café " * 3 + "</p>"
-        text, _ = extract_html_text(html)
-        assert "fish & chips <tag> café" in text
+        kept = score_blocks(extract_blocks(html))
+        assert any("fish & chips <tag> café" in b.text for b in kept)
 
     def test_stats(self):
         blocks = extract_blocks(f'<p><a href="#">half of this</a> and plain rest</p>')

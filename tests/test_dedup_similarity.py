@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.dedup import (
+    _distinct_tokens,
     exact_dedup,
     exact_dedup_groups,
     minhash_lsh_pairs,
@@ -514,17 +515,45 @@ def test_common_ngrams_profile(spark):
     assert out[0].df_docs >= out[1].df_docs >= out[2].df_docs
 
 
+def token_jaccard_pairs_naive(df, text_col="text", id_col="doc_id",
+                              threshold=0.5):
+    """The quadratic join-on-every-shared-token formulation: the
+    equivalence oracle for ``token_jaccard_pairs``' prefix filter. One
+    common token shared by k docs emits k^2/2 join rows, which is why
+    the engine does not use it."""
+    toks = _distinct_tokens(df, text_col, id_col)
+    sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("n_tok"))
+    a = toks.alias("a")
+    b = toks.alias("b")
+    shared = (
+        a.join(b, (F.col("a.tok") == F.col("b.tok")) & (F.col("a.id") < F.col("b.id")))
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+    )
+    sa = sizes.alias("sa")
+    sb = sizes.alias("sb")
+    return (
+        shared.join(sa, F.col("id_a") == F.col("sa.id"))
+        .join(sb, F.col("id_b") == F.col("sb.id"))
+        .select(
+            "id_a",
+            "id_b",
+            F.round(
+                F.col("n_shared").cast("double")
+                / (F.col("sa.n_tok") + F.col("sb.n_tok") - F.col("n_shared")).cast("double"),
+                4,
+            ).alias("jaccard"),
+        )
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
 def test_token_jaccard_prefix_filter_equals_naive(spark):
     """The AllPairs prefix-filtered plan returns EXACTLY the naive
     quadratic join's rows, across thresholds and adversarial shapes:
     ubiquitous stopwords (the blowup driver), docs whose overlap lives
     only in rare tokens, singleton-token docs, and just-below-threshold
     pairs."""
-    from ocr_spark.operators.dedup import (
-        token_jaccard_pairs,
-        token_jaccard_pairs_naive,
-    )
-
     stop = "the of and to in"
     rows = [
         (0, f"{stop} alpha beta gamma delta"),

@@ -8,10 +8,8 @@ from pyspark.sql import functions as F
 
 from ocr_spark.functions.links import (
     canonical_link,
-    extract_anchor_texts,
     extract_hrefs,
     meta_content,
-    page_title,
     resolve_href,
     strip_fragment,
 )
@@ -73,8 +71,6 @@ def test_strip_fragment_and_harvest(spark):
         spark.createDataFrame([Row(h=html)])
         .select(
             extract_hrefs("h").alias("hrefs"),
-            extract_anchor_texts("h").alias("texts"),
-            page_title("h").alias("title"),
             meta_content("h", "robots").alias("robots"),
             canonical_link("h").alias("canon"),
             strip_fragment(F.lit("https://e.org/x#frag")).alias("nofrag"),
@@ -82,8 +78,6 @@ def test_strip_fragment_and_harvest(spark):
         .first()
     )
     assert row["hrefs"] == ["/x#frag", "y.html"]
-    assert row["texts"] == ["one", "two"]
-    assert row["title"] == "A Title"
     assert row["robots"] == "noindex"
     assert row["canon"] == "https://example.org/c"
     assert row["nofrag"] == "https://e.org/x"

@@ -5,11 +5,32 @@ import pytest
 
 from ocr_spark.core.extract import extract_markdown_record, extract_record
 from ocr_spark.core.htmlparse import extract_blocks, extract_kept_blocks_cascade
-from ocr_spark.core.markdown import (
-    block_to_markdown,
-    blocks_to_markdown,
-    markdown_to_text,
-)
+from ocr_spark.core.markdown import block_to_markdown, blocks_to_markdown
+
+
+def markdown_to_text(md: str) -> str:
+    """Strip the rendering back off: the round-trip oracle.
+    Exact inverse of :func:`blocks_to_markdown` for blocks produced by the
+    extraction cascade (block text never starts with a marker the renderer
+    adds, because ``normalize_inline`` strips leading whitespace but keeps
+    content chars — a literal leading '#' in content is ambiguous and
+    therefore NOT claimed; these tests pin the cascade outputs, not
+    arbitrary markdown)."""
+    out = []
+    for blk in md.split("\n\n"):
+        while blk[:2] == "> ":
+            blk = blk[2:]
+        if blk[:2] == "- ":
+            blk = blk[2:]
+        else:
+            i = 0
+            while i < len(blk) and blk[i] == "#":
+                i += 1
+            if 0 < i <= 6 and blk[i : i + 1] == " ":
+                blk = blk[i + 1 :]
+        out.append(blk)
+    return "\n".join(out)
+
 
 # --- parser context stamping -------------------------------------------------
 

@@ -4,15 +4,13 @@ scheduler (operators/frontier.py) — the edge cases the sf0.01 parity run
 can't isolate: unclosed blocks, missing links, guid fallback, delay
 defaulting, and the budget cap."""
 
-from pyspark.sql import functions as F
-
 from ocr_spark.functions.markup import (
     extract_headings,
     extract_sections,
     extract_tables,
 )
 from ocr_spark.operators.frontier import fetch_schedule
-from ocr_spark.sources.feed import feed_fetch_plan, parse_feed_items
+from ocr_spark.sources.feed import parse_feed_items
 
 
 def _rows(df, *order):
@@ -181,25 +179,6 @@ def test_parse_feed_items_rss_and_atom(spark):
     a1 = got[("h2", "a1")]
     assert a1["dialect"] == "atom" and a1["link"] == "https://h/b/1"
     assert str(a1["item_ts"]) == "2024-02-01 06:00:00"
-
-
-def test_feed_fetch_plan_antijoin_and_latest(spark):
-    feeds = spark.createDataFrame([("h1", _RSS)], "host string, feed_xml string")
-    items = parse_feed_items(feeds)
-    # g1 already fetched; re-announcement of g-less item 2 under two polls
-    seen = spark.createDataFrame([("g1",)], "guid string")
-    repoll = items.withColumn(
-        "item_ts", F.col("item_ts") + F.expr("INTERVAL 1 HOUR")
-    ).withColumn("link", F.concat(F.col("link"), F.lit("?v=2")))
-    plan = {r["guid"]: r.asDict()
-            for r in feed_fetch_plan(items.unionByName(repoll), seen).collect()}
-    assert "g1" not in plan  # seen guid anti-joined away
-    two = plan["https://h/a/2"]
-    assert two["n_announcements"] == 2
-    # newest announcement wins the link
-    assert two["link"] == "https://h/a/2?v=2"
-    # the feed_ok=false and NULL-guid rows never reach the plan
-    assert all(k is not None for k in plan)
 
 
 # -------------------------------------------------------------- frontier

@@ -1,15 +1,8 @@
 """Corpus mixing: token-budget mixture selection (greedy cut, allowlist,
-determinism) and domain-level quality gates (support floor, anti-join
-application, broadcast plan)."""
+determinism) and domain-level quality gates (support floor, empirical-Bayes
+shrinkage)."""
 
-from pyspark.sql import functions as F
-
-from ocr_spark.operators.mixing import (
-    apply_domain_blocklist,
-    domain_blocklist,
-    token_budget_select,
-    token_budget_select_scalable,
-)
+from ocr_spark.operators.mixing import domain_blocklist, token_budget_select
 
 
 def _doc(i, lang, words, word="tok"):
@@ -91,61 +84,6 @@ def test_domain_blocklist_support_floor(spark):
     assert bl["badhost.com"]["blocked"] and bl["badhost.com"]["n_docs"] == 6
     # two failing docs but under min_docs -> spared
     assert not bl["smallhost.com"]["blocked"] and bl["smallhost.com"]["kept_frac"] == 0.0
-
-
-def test_apply_domain_blocklist_anti_join(spark):
-    df = spark.createDataFrame(_host_rows(), "doc_id long, url string, text string")
-    bl = domain_blocklist(df, min_docs=5, min_kept_frac=0.5)
-    kept = apply_domain_blocklist(df, bl)
-    hosts = {r[0] for r in kept.select(
-        F.regexp_extract("url", r"://([^/]+)", 1)).distinct().collect()}
-    # the whole bad host vanishes, including its one passing page
-    assert hosts == {"goodhost.com", "smallhost.com"}
-    assert kept.count() == 8
-    plan = kept._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-
-
-def test_scalable_select_equals_windowed(spark):
-    # mixed langs, repeated quality classes, ties on tokens — the scalable
-    # range-cumsum must reproduce the windowed ledger row for row
-    rows = []
-    i = 0
-    for lang in ("en", "de", "fr"):
-        for w in (4, 9, 14, 30, 3, 9):
-            rows.append(_doc(i, lang, w, word=f"{lang}t"))
-            i += 1
-    df = spark.createDataFrame(
-        rows, "doc_id long, lang string, text string"
-    ).repartition(7)
-    budgets = {"en": 40, "de": 25, "fr": 1}
-    base = {
-        r["doc_id"]: tuple(r)
-        for r in token_budget_select(df, budgets).collect()
-    }
-    scal = {
-        r["doc_id"]: tuple(r)
-        for r in token_budget_select_scalable(
-            df, budgets, num_partitions=5
-        ).collect()
-    }
-    assert base == scal
-
-
-def test_scalable_select_plan_has_no_per_lang_partitioning(spark):
-    df = spark.createDataFrame(
-        [_doc(i, "en" if i % 2 else "de", 6) for i in range(20)],
-        "doc_id long, lang string, text string",
-    )
-    out = token_budget_select_scalable(df, {"en": 50, "de": 50},
-                                       num_partitions=4)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the ordering shuffle is a range partitioning over (lang, quality, id),
-    # never a hash partitioning on lang alone (the one-task-per-language
-    # straggler) and never a single partition
-    assert "rangepartitioning" in plan
-    assert "hashpartitioning(lang" not in plan
-    assert "SinglePartition" not in plan
 
 
 def test_token_budget_plan_single_lang_shuffle(spark):

@@ -1,9 +1,12 @@
 """Salted-partitioning skew evidence + window/asof/rollup operator units."""
 
+import re
+
 import pandas as pd
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.analytics import asof_prior_event, rollup_event_stats
+from ocr_spark.operators.chunking import STRIDE, WINDOW, WS_CLASS
 from ocr_spark.operators.extract_op import extract_pages
 from ocr_spark.plans.partitioning import ranged_repartition, salted_repartition
 from ocr_spark.sources.pages import synth_pages
@@ -117,9 +120,18 @@ def test_rollup_grand_total(spark):
     assert set(out[out.is_total == 0].event_type) == {"a", "b"}
 
 
-def test_chunk_text_windows():
-    from ocr_spark.operators.chunking import chunk_text
+def chunk_text(text: str, window: int = WINDOW, stride: int = STRIDE):
+    """Pure chunker, the oracle ``chunk_documents`` is asserted against:
+    [(chunk_idx, chunk_text, n_tokens), ...]."""
+    toks = [t for t in re.split(WS_CLASS, text) if t] if text else []
+    out = []
+    for idx, start in enumerate(range(0, len(toks), stride)):
+        sub = toks[start : start + window]
+        out.append((idx, " ".join(sub), len(sub)))
+    return out
 
+
+def test_chunk_text_windows():
     assert chunk_text("", 4, 3) == []
     assert chunk_text("a b c", 4, 3) == [(0, "a b c", 3)]
     assert chunk_text("a b c d e f g", 4, 3) == [
@@ -145,7 +157,7 @@ def _crafted_docs(spark):
 
 
 def test_chunk_documents_expression_matches_pure_chunker(spark):
-    from ocr_spark.operators.chunking import chunk_documents, chunk_text
+    from ocr_spark.operators.chunking import chunk_documents
 
     docs = _crafted_docs(spark)
     got = {

@@ -6,7 +6,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ocr_spark.core.extract import RESULT_COLUMNS, extract_record
-from ocr_spark.core.htmlparse import extract_html_text
+from ocr_spark.core.htmlparse import extract_blocks, score_blocks
 from ocr_spark.core.normalize import normalize_inline, normalize_text
 
 TEXTS = st.text(max_size=400)
@@ -43,8 +43,8 @@ def test_normalize_output_clean(s):
 @given(TEXTS)
 def test_html_extract_total_on_text(s):
     # never raises, whatever the markup soup looks like
-    text, n = extract_html_text(s)
-    assert isinstance(text, str) and n >= 0
+    kept = score_blocks(extract_blocks(s))
+    assert all(isinstance(b.text, str) for b in kept)
 
 
 @settings(max_examples=200, deadline=None)
@@ -70,7 +70,7 @@ def test_html_output_is_normalize_canonical(s):
         f"<html><body><p>{s}</p><div>{s} tail words enough to keep</div></body></html>",
         s,
     ):
-        text, _ = extract_html_text(markup)
+        text = "\n".join(b.text for b in score_blocks(extract_blocks(markup)))
         assert normalize_text(text) == text
 
 

@@ -106,39 +106,6 @@ def test_quality_filter_partitioning_invariance(spark):
     assert a == b
 
 
-def test_compression_ratio_orders_pathologies(spark):
-    """Repetitive < natural < random in compressibility."""
-    import random
-
-    from ocr_spark.operators.quality import compression_ratio
-
-    rnd = random.Random(3)
-    rows = [
-        (0, "repeat this phrase " * 200),
-        (1, " ".join(f"natural word{i} prose sentence {i % 17}" for i in range(150))),
-        (2, "".join(chr(rnd.randrange(33, 1000)) for _ in range(2000))),
-        (3, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r["compression_ratio"] for r in compression_ratio(df).collect()}
-    assert got[0] < got[1] < got[2]
-    assert got[0] < 0.05          # repetition collapses
-    assert got[2] > 0.5           # randomness resists
-    assert got[3] == 1.0          # empty -> neutral
-
-
-def test_compression_ratio_deterministic(spark):
-    from ocr_spark.operators.quality import compression_ratio
-
-    df = spark.createDataFrame(
-        [(i, f"doc {i} body " * (i + 1)) for i in range(30)],
-        "doc_id long, text string",
-    )
-    a = sorted(compression_ratio(df).collect())
-    b = sorted(compression_ratio(df.repartition(7)).collect())
-    assert a == b
-
-
 def test_repetition_stats_crafted_values(spark):
     from ocr_spark.operators.quality import repetition_stats
 

@@ -3,25 +3,12 @@
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.dedup import contamination_check
-from ocr_spark.operators.sampling import hash_sample, stratified_sample
+from ocr_spark.operators.sampling import stratified_sample
 
 
 def _docs(spark, n=2000):
     rows = [(i, f"text {i}", ["en", "zh", "de"][i % 3]) for i in range(n)]
     return spark.createDataFrame(rows, "doc_id long, text string, lang string")
-
-
-def test_hash_sample_deterministic_and_nested(spark):
-    d = _docs(spark)
-    a1 = {r.doc_id for r in hash_sample(d, 0.2).collect()}
-    a2 = {r.doc_id for r in hash_sample(d.repartition(13), 0.2).collect()}
-    assert a1 == a2                      # partitioning-invariant
-    b = {r.doc_id for r in hash_sample(d, 0.5).collect()}
-    assert a1 <= b                       # nested: smaller rate is a subset
-    assert 0.15 < len(a1) / 2000 < 0.25  # rate is approximately honored
-    # different salts decorrelate
-    c = {r.doc_id for r in hash_sample(d, 0.2, salt="heldout").collect()}
-    assert c != a1
 
 
 def test_stratified_rates(spark):

@@ -1,6 +1,9 @@
 """Shard export determinism/uniformity and incremental-ingest statuses."""
 
-from ocr_spark.operators.incremental import incremental_status
+from ocr_spark.operators.incremental import (
+    committed_state,
+    incremental_status_against_state,
+)
 from ocr_spark.operators.sharding import shard_assignment
 
 BASE = ("the quick brown fox jumps over the lazy dog and keeps going with "
@@ -61,7 +64,7 @@ def test_incremental_statuses(spark):
         "doc_id long, text string",
     )
     got = {r["doc_id"]: r["status"] for r in
-           incremental_status(new, committed).collect()}
+           incremental_status_against_state(new, committed_state(committed)).collect()}
     assert got == {100: "exact_seen", 101: "near_seen",
                    102: "new", 103: "exact_seen"}
 
@@ -113,7 +116,7 @@ def test_intra_batch_duplicates_stay_new(spark):
         [(200, BASE), (201, BASE)], "doc_id long, text string"
     )
     got = {r["doc_id"]: r["status"] for r in
-           incremental_status(new, committed).collect()}
+           incremental_status_against_state(new, committed_state(committed)).collect()}
     assert got == {200: "new", 201: "new"}
 
 

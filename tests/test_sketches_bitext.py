@@ -115,39 +115,6 @@ def test_bitext_zero_length_gated(spark):
     assert bitext_pairs(_bitext_input(spark, rows)).count() == 0
 
 
-def test_hll_incremental_register_table(spark, tmp_path):
-    """The production maintenance loop: batches fold into a PERSISTED
-    register table (corpus text never re-read), a replayed batch is a
-    no-op, and the stored sketch's estimate equals the one-shot estimate
-    over everything ingested so far."""
-    from ocr_spark.operators.sketches import hll_estimate, hll_merge_registers
-    from ocr_spark.sources.iceberg_lite import IcebergLiteTable
-
-    t = IcebergLiteTable(str(tmp_path / "hll_regs"))
-
-    def batch(lo, hi):
-        return spark.range(lo, hi).select(
-            F.lit("g").alias("grp"), F.concat(F.lit("k"), F.col("id")).alias("key")
-        )
-
-    seen = None
-    for lo, hi in ((0, 400), (400, 900), (900, 1500)):
-        stored = t.read(spark) if t.exists() else None
-        merged = hll_merge_registers(stored, hll_registers(batch(lo, hi), "grp", "key"))
-        t.overwrite(merged)
-        seen = (lo, hi)
-    # crash redelivery: folding the LAST batch in again must not move state
-    replay = hll_merge_registers(
-        t.read(spark), hll_registers(batch(*seen), "grp", "key")
-    )
-    assert sorted(map(tuple, replay.collect())) == sorted(
-        map(tuple, t.read(spark).collect())
-    )
-    stored_est = hll_estimate(t.read(spark)).collect()[0]
-    direct_est = hll_distinct(batch(0, 1500), "grp", "key").collect()[0]
-    assert stored_est["est_distinct"] == direct_est["est_distinct"]
-
-
 def test_hll_plan_no_python_partial_max(spark):
     """Plan pin: the sketch is expression-only (no Python eval nodes) and
     the register max partial-aggregates map-side before its exchange."""
@@ -193,20 +160,6 @@ def test_dd_small_values_are_exact(spark):
     got = {r["q"]: r["est_value"] for r in dd_sketch_quantiles(df, "g", "x").collect()}
     assert got[0.5] == 4.0   # ceil(0.5*10) = 5th smallest (inverted CDF) = 4
     assert got[0.99] == 9.0  # ceil(0.99*10) = 10th smallest = 9
-
-
-def test_dd_merge_equals_direct(spark):
-    from ocr_spark.operators.sketches import dd_buckets, dd_merge, dd_quantiles, dd_sketch_quantiles
-
-    whole = spark.range(1, 5000).select(
-        F.lit("g").alias("g"), (F.col("id") * 37 % 9973).alias("x")
-    )
-    a = whole.where(F.col("id") < 2500)
-    b = whole.where(F.col("id") >= 2500)
-    merged = dd_merge(dd_buckets(a, "g", "x"), dd_buckets(b, "g", "x"))
-    got = sorted(map(tuple, dd_quantiles(merged).collect()))
-    want = sorted(map(tuple, dd_sketch_quantiles(whole, "g", "x").collect()))
-    assert got == want
 
 
 def test_dd_nulls_and_negatives_out_of_domain(spark):

@@ -3,17 +3,11 @@ batch/stream byte-identity) and multimodal binary plumbing."""
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from ocr_spark.golden import golden_frame
 from ocr_spark.operators.multimodal import media_features, sniff_kind
-from ocr_spark.session import PAGES_SCHEMA
 from ocr_spark.sources.pages import synth_pages
-from ocr_spark.streaming.extract_stream import (
-    extract_metrics_stream,
-    read_pages_stream,
-    start_extract_stream,
-)
+from ocr_spark.streaming.extract_stream import start_extract_stream
 
 N = 200
 
@@ -58,21 +52,6 @@ def test_stream_restart_is_exactly_once(spark, pages_dir, tmp_path):
     final = spark.read.parquet(out)
     assert final.count() == N + 50
     assert final.select("url").distinct().count() == N + 50
-
-
-def test_metrics_stream_windows(spark, pages_dir, tmp_path):
-    pages = read_pages_stream(spark, pages_dir)
-    agg = extract_metrics_stream(pages, window="1 hour", watermark="2 hours")
-    q = (agg.writeStream.outputMode("append")
-         .format("memory").queryName("metrics_out")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .start())
-    q.processAllAvailable()
-    q.stop()
-    m = spark.sql("select * from metrics_out").toPandas()
-    # append mode only emits windows the watermark has closed; with a bounded
-    # input the final windows stay open, so assert on schema not counts
-    assert set(m.columns) == {"window", "host", "n_pages", "bytes_in"}
 
 
 class TestMultimodal:
@@ -156,160 +135,6 @@ class TestMultimodal:
         pd.testing.assert_frame_equal(a, b)
 
 
-def _exif_jpeg(byte_order: str, orientation: int | None = 6,
-               with_strings: bool = True) -> bytes:
-    """Assemble a minimal JPEG whose APP1 carries a valid Exif TIFF IFD0
-    (public layout, ISO 12234-2 / TIFF 6.0): II or MM byte order,
-    Orientation as inline SHORT, DateTime/Make as offset/inline ASCII."""
-    import struct
-
-    le = byte_order == "II"
-    e = "<" if le else ">"
-    entries = []
-    if orientation is not None:
-        entries.append(struct.pack(e + "HHI", 0x0112, 3, 1)
-                       + struct.pack(e + "H", orientation) + b"\x00\x00")
-    if with_strings:
-        dt = b"2024:05:01 10:00:00\x00"          # 20 bytes, via offset
-        # layout: [2B count][n*12B entries][4B next-IFD][data area]
-        n_entries = len(entries) + 2
-        data_start = 8 + 2 + n_entries * 12 + 4
-        entries.append(struct.pack(e + "HHII", 0x0132, 2, len(dt), data_start))
-        entries.append(struct.pack(e + "HHI", 0x010F, 2, 4) + b"Acm\x00")
-        tail = dt
-    else:
-        n_entries = len(entries)
-        tail = b""
-    tiff = (byte_order.encode() + struct.pack(e + "H", 42)
-            + struct.pack(e + "I", 8)
-            + struct.pack(e + "H", n_entries)
-            + b"".join(entries) + b"\x00\x00\x00\x00" + tail)
-    payload = b"Exif\x00\x00" + tiff
-    return (b"\xff\xd8\xff\xe1" + (len(payload) + 2).to_bytes(2, "big")
-            + payload + b"\xff\xd9")
-
-
-def test_parse_exif_both_byte_orders_and_absence(spark):
-    from ocr_spark.operators.multimodal import exif_meta, parse_exif
-
-    ii = _exif_jpeg("II")
-    mm = _exif_jpeg("MM", orientation=8, with_strings=False)
-    got = parse_exif(ii)
-    assert got == {"orientation": 6, "captured_at": "2024:05:01 10:00:00",
-                   "make": "Acm"}
-    assert parse_exif(mm) == {"orientation": 8, "captured_at": None,
-                              "make": None}
-    assert parse_exif(b"\x89PNG\r\n\x1a\nrest") is None
-    assert parse_exif(ii[:10]) is None  # truncated: never throws
-
-    rows = [("ii", ii), ("mm", mm),
-            ("plain", b"\xff\xd8\xff\xdb\x00\x04aa\xff\xd9"),
-            ("none", None)]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    out = exif_meta(df).toPandas().set_index("id")
-    assert len(out) == 4                       # never-drop
-    assert bool(out.loc["ii", "has_exif"]) and out.loc["ii", "orientation"] == 6
-    assert out.loc["mm", "orientation"] == 8
-    assert not bool(out.loc["plain", "has_exif"])
-    assert out.loc["plain", "orientation"] is None or pd.isna(
-        out.loc["plain", "orientation"])
-    assert not bool(out.loc["none", "has_exif"])
-
-
-def test_stateful_host_totals_accumulate_across_restarts(spark, tmp_path):
-    """applyInPandasWithState: running per-host totals persist in the
-    checkpoint — a second run over NEW files continues from committed
-    state instead of recounting."""
-    from ocr_spark.streaming.stateful import start_host_totals_stream
-
-    indir, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    first = synth_pages(spark, 60, num_partitions=1).limit(60)
-    first.write.mode("overwrite").parquet(indir)
-    q = start_host_totals_stream(spark, indir, out, ckpt)
-    q.awaitTermination(300)
-
-    changelog1 = spark.read.parquet(out).toPandas()
-    assert changelog1.pages.sum() >= 60  # every page counted at least once
-
-    # second wave of files, same checkpoint: totals must ACCUMULATE
-    synth_pages(spark, 120, num_partitions=1).write.mode("append").parquet(indir)
-    q = start_host_totals_stream(spark, indir, out, ckpt)
-    q.awaitTermination(300)
-
-    changelog = spark.read.parquet(out).toPandas()
-    latest = (
-        changelog.sort_values(["host", "batches"])
-        .groupby("host", as_index=False).last()
-    )
-    # 60 + 120 new rows seen overall; final running totals cover all 180
-    assert latest.pages.sum() == 180
-    # at least one host was seen in both waves and kept counting
-    assert (latest.batches >= 2).any()
-
-
-def test_streaming_heavy_hitters_bounded_state_and_guarantee(spark, tmp_path):
-    """Streaming Misra-Gries: per-group state stays <= m counters no
-    matter how many distinct tokens flow by; a token above the n_total/
-    (m+1) threshold is guaranteed present in the latest summary with a
-    lower-bound count; running n_total is exact; restart from the same
-    checkpoint ACCUMULATES (second wave continues, not recounts)."""
-    import pyspark.sql.functions as F
-
-    from ocr_spark.streaming.stateful import streaming_heavy_hitters
-
-    m = 8
-    indir, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-
-    def wave(start, n):
-        # per row: 'hot' x3 + 'warm' x1 + 3 row-unique churn tokens
-        return spark.range(start, start + n).select(
-            F.lit("en").alias("grp"),
-            F.array(
-                F.lit("hot"), F.lit("hot"), F.lit("hot"), F.lit("warm"),
-                F.concat(F.lit("u"), F.col("id").cast("string")),
-                F.concat(F.lit("v"), F.col("id").cast("string")),
-                F.concat(F.lit("w"), F.col("id").cast("string")),
-            ).alias("toks"),
-        )
-
-    def run():
-        stream = (
-            spark.readStream.schema("grp string, toks array<string>")
-            .parquet(indir)
-        )
-        q = (
-            streaming_heavy_hitters(stream, m=m)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return spark.read.parquet(out).toPandas()
-
-    wave(0, 50).coalesce(1).write.mode("overwrite").parquet(indir)
-    log1 = run()
-    latest1 = log1[log1.batch_ord == log1.batch_ord.max()]
-    assert len(latest1) <= m                       # bounded summary
-    assert latest1.n_total.iloc[0] == 50 * 7       # exact running total
-    hot1 = latest1[latest1.token == "hot"]
-    assert len(hot1) == 1                          # guarantee: hot retained
-    assert 0 < hot1.count_lb.iloc[0] <= 150        # lower bound
-
-    # second wave, same checkpoint: state continues across restart
-    wave(50, 50).coalesce(1).write.mode("append").parquet(indir)
-    log = run()
-    latest = log[log.batch_ord == log.batch_ord.max()]
-    assert latest.n_total.iloc[0] == 100 * 7
-    assert latest.batch_ord.iloc[0] > latest1.batch_ord.iloc[0]
-    hot = latest[latest.token == "hot"]
-    assert len(hot) == 1 and hot.count_lb.iloc[0] <= 300
-    # churn actually happened: far more distinct tokens than counters
-    assert log.token.nunique() > m
-
-
 def test_frame_sample_fanout_deterministic(spark):
     from ocr_spark.operators.multimodal import frame_sample
 
@@ -324,32 +149,6 @@ def test_frame_sample_fanout_deterministic(spark):
     assert per_doc.between(1, 8).all() and per_doc.gt(1).any()
     assert (a.decoder == "stub").all()
     assert a.frame_sha.str.len().eq(16).all()
-
-
-def test_stream_dedup_within_watermark(spark, tmp_path):
-    """Duplicate urls in the stream (crawl re-fetches) collapse to their
-    first arrival; distinct urls all survive."""
-    from ocr_spark.streaming.extract_stream import dedup_pages_stream
-
-    indir, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    base = synth_pages(spark, 40, num_partitions=1)
-    base.write.mode("overwrite").parquet(indir)
-    base.write.mode("append").parquet(indir)      # every url duplicated
-
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(indir)
-    q = (
-        dedup_pages_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.read.parquet(out).toPandas()
-    assert len(got) == 40
-    assert got.url.is_unique
 
 
 def test_image_resize_geometry(spark):

@@ -47,17 +47,6 @@ def test_build_word_map_covers_fitted_words():
         assert "".join(t.split(" ")) == w
 
 
-def test_distributed_fit_matches_serial(spark):
-    from ocr_spark.operators.tokenizer import fit_word_counts
-
-    rows = [(0, "spark spark spark merge merge table"),
-            (1, "spark merge value value"),
-            (2, None)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = fit_word_counts(df, max_words=3)
-    assert got == {"spark": 4, "merge": 3, "value": 2}
-
-
 def test_bpe_encode_contracts(spark):
     from ocr_spark.operators.tokenizer import bpe_encode
 

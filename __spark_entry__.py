@@ -1462,6 +1462,35 @@ def q_cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cluster_representatives(clusters, scores)
 
 
+def _scratch_root(kind: str, sf_dir: str) -> str:
+    """Empty scratch dir ``/tmp/ocr_spark_{kind}_q/<key>-<pid>`` for a
+    query that writes its own tables. Keyed by (sf_dir, pid): repeated runs
+    in one process reuse a directory, while concurrent processes (parallel
+    pytest workers, two registry runs) can't clear each other's in-flight
+    files. Siblings left by processes that have exited are removed; a live
+    pid's directory is never touched, because the frames its queries
+    returned read those files lazily."""
+    import hashlib
+    import os
+    import shutil
+
+    parent = f"/tmp/ocr_spark_{kind}_q"
+    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    root = f"{parent}/{key}-{os.getpid()}"
+    shutil.rmtree(root, ignore_errors=True)
+    for name in os.listdir(parent) if os.path.isdir(parent) else ():
+        pid = name.rpartition("-")[2]
+        if not pid.isdigit():
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(f"{parent}/{name}", ignore_errors=True)
+        except PermissionError:
+            pass  # alive, owned by another user
+    return root
+
+
 def q_stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming path: the same extraction core as a file-source
     micro-batch stream with checkpointed exactly-once parquet sink
@@ -1471,21 +1500,10 @@ def q_stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the same subset — and the query itself asserts batch==stream before
     returning (batch-stream byte equivalence witnessed even under a
     rows-only driver check)."""
-    import hashlib
-    import shutil
-
     from ocr_spark.session import EXTRACTED_SCHEMA, PAGES_SCHEMA
     from ocr_spark.streaming.extract_stream import start_extract_stream
 
-    # scratch dir keyed by (sf_dir, pid): repeated runs in ONE process reuse
-    # a directory (no mkdtemp leak), while concurrent processes (parallel
-    # pytest workers, driver + bench) can't rmtree each other's in-flight
-    # checkpoint/sink
-    import os
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    base = f"/tmp/ocr_spark_stream_q/{key}-{os.getpid()}"
-    shutil.rmtree(base, ignore_errors=True)  # fresh checkpoint each run
+    base = _scratch_root("stream", sf_dir)  # fresh checkpoint each run
     pages = pages_from_documents(spark, sf_dir, max_doc_id=200)
     pages.write.mode("overwrite").parquet(f"{base}/in")
     q = start_extract_stream(spark, f"{base}/in", f"{base}/out", f"{base}/ckpt")
@@ -1598,16 +1616,9 @@ def q_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join + union semantics have an exact DuckDB twin; manifest-level
     pruning (untouched files carried verbatim) is pinned by
     tests/test_resume.py."""
-    import os
-
     from ocr_spark.sources.iceberg_lite import IcebergLiteTable
 
-    import hashlib
-    import shutil
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    root = f"/tmp/ocr_spark_merge_q/{key}-{os.getpid()}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("merge", sf_dir)
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
     d = _t(spark, sf_dir, "documents").select(*cols)
     table = IcebergLiteTable(root)

@@ -315,13 +315,14 @@ def extract_blocks(html_text: str) -> list[Block]:
 
 def score_blocks(blocks: list[Block],
                  min_block_chars: int = MIN_BLOCK_CHARS,
-                 min_heading_chars: int = MIN_HEADING_CHARS,
                  max_link_density: float = MAX_LINK_DENSITY,
                  include_class_blocked: bool = False) -> list[Block]:
     """Keep content blocks, prune boilerplate — the best-of cascade analog
     (reference confidence argmax, one_key_process.py:521-560) collapsed into
-    a single deterministic scoring pass. Thresholds are parameters so the
-    lenient retry strategy rescoring reuses the same pass."""
+    a single deterministic scoring pass. The block thresholds are
+    parameters so the lenient retry strategy rescoring reuses the same
+    pass; headings always need ``MIN_HEADING_CHARS``."""
+    min_heading_chars = MIN_HEADING_CHARS
     kept = []
     for b in blocks:
         if b.boiler_blocked:

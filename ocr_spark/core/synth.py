@@ -201,5 +201,5 @@ def gen_page(i: int, seed: int = SEED) -> dict:
     return {"url": url, "warc_ts": ts, "html": html, "text": text_col, "lang": lang}
 
 
-def gen_pages(n: int, seed: int = SEED) -> list[dict]:
-    return [gen_page(i, seed) for i in range(n)]
+def gen_pages(n: int) -> list[dict]:
+    return [gen_page(i, SEED) for i in range(n)]

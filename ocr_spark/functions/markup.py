@@ -47,9 +47,7 @@ def _clean_cell(col):
     )
 
 
-def extract_tables(
-    pages: DataFrame, html_col: str = "html", id_cols: tuple[str, ...] = ("doc_id",)
-) -> DataFrame:
+def extract_tables(pages: DataFrame) -> DataFrame:
     """Pages -> one row per table cell: (id..., table_idx, row_idx,
     col_idx, cell, is_header).
 
@@ -58,12 +56,12 @@ def extract_tables(
     stripping). All indices are 0-based longs so downstream pivots can
     reassemble a row with ``group by table_idx, row_idx``.
     """
-    ids = [F.col(c) for c in id_cols]
+    ids = [F.col("doc_id")]
     tables = pages.select(
         *ids,
         F.posexplode(
             F.regexp_extract_all(
-                F.coalesce(F.col(html_col), F.lit("")),
+                F.coalesce(F.col("html"), F.lit("")),
                 F.lit(TABLE_BLOCK_RE),
                 F.lit(1),
             )
@@ -96,9 +94,7 @@ def extract_tables(
     )
 
 
-def extract_headings(
-    pages: DataFrame, html_col: str = "html", id_cols: tuple[str, ...] = ("doc_id",)
-) -> DataFrame:
+def extract_headings(pages: DataFrame) -> DataFrame:
     """Pages -> one row per heading: (id..., pos, level, heading, n_chars).
 
     ``pos`` is the document-order index (the outline), ``level`` the tag
@@ -106,12 +102,12 @@ def extract_headings(
     the full elements are exploded (group 0) and level/text re-extracted
     per element — still one codegen projection, no Python.
     """
-    ids = [F.col(c) for c in id_cols]
+    ids = [F.col("doc_id")]
     heads = pages.select(
         *ids,
         F.posexplode(
             F.regexp_extract_all(
-                F.coalesce(F.col(html_col), F.lit("")),
+                F.coalesce(F.col("html"), F.lit("")),
                 F.lit(HEADING_RE),
                 F.lit(0),
             )
@@ -129,9 +125,7 @@ def extract_headings(
     )
 
 
-def extract_sections(
-    pages: DataFrame, html_col: str = "html", id_cols: tuple[str, ...] = ("doc_id",)
-) -> DataFrame:
+def extract_sections(pages: DataFrame) -> DataFrame:
     """Pages -> one row per heading-delimited section: (id..., section_idx,
     level, heading, text, n_words) — the structure-aware chunking unit
     (split along the document's own outline instead of a fixed token
@@ -147,14 +141,14 @@ def extract_sections(
     re-extracted per row. Zero Python, zero shuffle, streaming-safe; the
     1:N cost is output width, like the table extractor above.
     """
-    html = F.coalesce(F.col(html_col), F.lit(""))
+    html = F.coalesce(F.col("html"), F.lit(""))
     segs = F.split(html, HEADING_RE)
     heads = F.regexp_extract_all(html, F.lit(HEADING_RE), F.lit(0))
     pairs = F.arrays_zip(
         segs.alias("seg"),
         F.concat(F.array(F.lit(None).cast("string")), heads).alias("helem"),
     )
-    ids = [F.col(c) for c in id_cols]
+    ids = [F.col("doc_id")]
     rows = pages.select(*ids, F.posexplode(pairs).alias("section_idx", "p"))
     helem = F.col("p.helem")
     text = _clean_cell(F.col("p.seg"))

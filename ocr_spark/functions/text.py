@@ -126,5 +126,4 @@ def split_sentences(c) -> Column:
 
 # --- exact SQL twins (kept adjacent so drift is visible in review) ----------
 
-SQL_TOKEN_COUNT = f"length(regexp_extract_all({{c}}, '{TOKEN_PATTERN}'))"
 SQL_STOPWORDS_IN = "(" + ", ".join(f"'{w}'" for w in STOPWORDS) + ")"

@@ -138,13 +138,6 @@ SQL_URL_CANON = (
 )
 
 
-# Precedence order for url_page_type — first match wins; documented as a
-# policy (a /tag/x/page/3 listing IS pagination: it's the paginated tail
-# a crawler prunes first).
-PAGE_TYPES = ("search", "pagination", "tag_listing", "calendar", "feed",
-              "media", "article", "home", "other")
-
-
 def url_page_type(c) -> Column:
     """Crawl-curation page-type classification from URL shape alone — the
     standard frontier-pruning heuristic (search results, paginated
@@ -152,7 +145,10 @@ def url_page_type(c) -> Column:
     assets are crawl-budget sinks and near-empty extraction targets;
     date-slugged or hyphen-slugged paths are the article pages a corpus
     wants). Deterministic first-match cascade over RE2-safe expressions
-    on the parsed path/query; every class name in ``PAGE_TYPES``.
+    on the parsed path/query. The classes, in precedence order (first
+    match wins; a /tag/x/page/3 listing IS pagination: it's the paginated
+    tail a crawler prunes first): search, pagination, tag_listing,
+    calendar, feed, media, article, home, other.
 
     This is a POLICY stack, disclosed as such: real deployments tune the
     lists (search param names, media extensions) per crawl; the cascade

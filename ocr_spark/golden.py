@@ -19,6 +19,6 @@ def golden_records(pages: list[dict]) -> list[dict]:
     return [extract_record(p["url"], p["html"], p["text"], p["lang"]) for p in pages]
 
 
-def golden_frame(n: int, seed: int = 42) -> pd.DataFrame:
-    recs = golden_records(gen_pages(n, seed))
+def golden_frame(n: int) -> pd.DataFrame:
+    recs = golden_records(gen_pages(n))
     return pd.DataFrame.from_records(recs, columns=list(RESULT_COLUMNS))

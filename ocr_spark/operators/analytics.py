@@ -27,13 +27,12 @@ def topk_per_group(df: DataFrame, group_cols: list[str], order_col: str,
     )
 
 
-def sessionize(events: DataFrame, user_col: str = "user_id", ts_col: str = "ts",
-               gap_minutes: int = 30) -> DataFrame:
+def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Assign session ids: a session breaks when the gap to the previous
     event of the same user exceeds ``gap_minutes`` (lag + running sum —
     the standard shuffle-once sessionization)."""
-    w = Window.partitionBy(user_col).orderBy(ts_col)
-    gap = F.unix_timestamp(ts_col) - F.unix_timestamp(F.lag(ts_col).over(w))
+    w = Window.partitionBy("user_id").orderBy("ts")
+    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
     new_session = F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
     return events.withColumn(
         "session_id", F.sum(new_session).over(
@@ -42,12 +41,11 @@ def sessionize(events: DataFrame, user_col: str = "user_id", ts_col: str = "ts",
     )
 
 
-def session_stats(events: DataFrame, user_col: str = "user_id", ts_col: str = "ts",
-                  gap_minutes: int = 30) -> DataFrame:
+def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Per-user session metrics from sessionize()."""
-    s = sessionize(events, user_col, ts_col, gap_minutes)
+    s = sessionize(events, gap_minutes)
     return (
-        s.groupBy(user_col)
+        s.groupBy("user_id")
         .agg(
             F.countDistinct("session_id").alias("n_sessions"),
             F.count(F.lit(1)).alias("n_events"),
@@ -71,27 +69,28 @@ def rollup_event_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def moving_avg(events: DataFrame, partition_col: str = "user_id",
-               value_col: str = "value", window_rows: int = 2) -> DataFrame:
+def moving_avg(events: DataFrame) -> DataFrame:
     """Sliding window-frame aggregate: avg of the current + previous
-    ``window_rows`` events per user (ROWS BETWEEN n PRECEDING AND CURRENT).
+    2 events per user (ROWS BETWEEN 2 PRECEDING AND CURRENT).
     Deterministic order: (ts, event_id). One exchange on the partition key."""
     w = (
-        Window.partitionBy(partition_col)
+        Window.partitionBy("user_id")
         .orderBy(F.asc("ts"), F.asc("event_id"))
-        .rowsBetween(-window_rows, Window.currentRow)
+        .rowsBetween(-2, Window.currentRow)
     )
     return events.select(
-        partition_col,
+        "user_id",
         "event_id",
-        F.round(F.avg(value_col).over(w), 4).alias("mavg_value"),
-        F.round(F.sum(value_col).over(w), 4).alias("msum_value"),
+        F.round(F.avg("value").over(w), 4).alias("mavg_value"),
+        F.round(F.sum("value").over(w), 4).alias("msum_value"),
     )
 
 
-def group_quantiles(df: DataFrame, group_col: str, value_col: str,
-                    qs: tuple[float, ...] = (0.5, 0.9)) -> DataFrame:
-    """Exact per-group quantiles via grouped ``applyInPandas`` — the
+GROUP_QUANTILES = (0.5, 0.9)  # group_quantiles' output columns q50, q90
+
+
+def group_quantiles(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
+    """Exact per-group quantiles (``GROUP_QUANTILES``) via grouped ``applyInPandas`` — the
     operator shape for per-group logic that built-in aggregates can't
     express exactly (Spark's percentile_approx is approximate; numpy's
     linear-interpolation percentile matches SQL ``quantile_cont``).
@@ -104,12 +103,12 @@ def group_quantiles(df: DataFrame, group_col: str, value_col: str,
     # group column keeps its incoming type (an int bucket column must not
     # come back as string)
     group_type = df.schema[group_col].dataType.simpleString()
-    out_cols = ", ".join(f"q{int(q * 100)} double" for q in qs)
+    out_cols = ", ".join(f"q{int(q * 100)} double" for q in GROUP_QUANTILES)
 
     def stats(pdf: pd.DataFrame) -> pd.DataFrame:
         row = {group_col: [pdf[group_col].iloc[0]]}
         vals = pdf[value_col].to_numpy(dtype="float64")
-        for q in qs:
+        for q in GROUP_QUANTILES:
             row[f"q{int(q * 100)}"] = [round(float(np.percentile(vals, q * 100)), 4)]
         return pd.DataFrame(row)
 
@@ -120,10 +119,9 @@ def group_quantiles(df: DataFrame, group_col: str, value_col: str,
     )
 
 
-def asof_prior_event(events: DataFrame, left_type: str = "purchase",
-                     right_type: str = "click") -> DataFrame:
-    """As-of join: each ``left_type`` event matched to the most recent
-    ``right_type`` event of the same user at or before its timestamp.
+def asof_prior_event(events: DataFrame) -> DataFrame:
+    """As-of join: each 'purchase' event matched to the most recent
+    'click' event of the same user at or before its timestamp.
 
     Spark has no native ASOF JOIN; the scalable encoding is union + one
     window pass — tag both sides, sort per user by (ts, side) with the
@@ -133,12 +131,12 @@ def asof_prior_event(events: DataFrame, left_type: str = "purchase",
     re-filters). Outputs epoch seconds (timezone-free compare contract).
     """
     et = F.col("event_type")
-    tagged = events.where(et.isin(left_type, right_type)).select(
+    tagged = events.where(et.isin("purchase", "click")).select(
         "event_id",
         "user_id",
         "ts",
-        F.when(et == right_type, F.col("ts")).alias("right_ts"),
-        F.when(et == left_type, F.lit(1)).otherwise(F.lit(0)).alias("is_left"),
+        F.when(et == "click", F.col("ts")).alias("right_ts"),
+        F.when(et == "purchase", F.lit(1)).otherwise(F.lit(0)).alias("is_left"),
     )
     w = (
         Window.partitionBy("user_id")
@@ -175,19 +173,17 @@ def pivot_event_values(events: DataFrame, event_types: list[str]) -> DataFrame:
     )
 
 
-def burst_detection(events: DataFrame, type_col: str = "event_type",
-                    ts_col: str = "ts", trailing: int = 24,
-                    z_thresh: float = 3.0, min_count: int = 5) -> DataFrame:
+def burst_detection(events: DataFrame) -> DataFrame:
     """Trailing-baseline anomaly flags over an event stream — the crawl/
     ingest monitoring primitive (a host suddenly 10x-ing its error rate,
     a scraper loop flooding one hour): per (type, hour) counts scored
-    against the mean/stddev of the PRECEDING ``trailing`` hour buckets
-    (ROWS BETWEEN n PRECEDING AND 1 PRECEDING — the current hour never
+    against the mean/stddev of the PRECEDING 24 hour buckets
+    (ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING — the current hour never
     contaminates its own baseline). Returns (type, hour, n_events,
     base_avg, base_std, zscore, is_burst).
 
     Decision discipline: is_burst compares the 4-dp ROUNDED z-score
-    (both engines decide on identical digits) and requires ``min_count``
+    (both engines decide on identical digits), requires z > 3 and 5
     events (a 1->2 jump on a quiet type is not a burst). The divisor is
     ``greatest(base_std, 1.0)`` — the count-data floor: a perfectly flat
     baseline has zero variance, and without the floor the clearest burst
@@ -203,13 +199,13 @@ def burst_detection(events: DataFrame, type_col: str = "event_type",
     rows = types x hours, tiny), then a types-partitioned window —
     never a corpus-sized sort."""
     hourly = events.groupBy(
-        F.col(type_col).alias("event_type"),
-        F.date_trunc("hour", F.col(ts_col)).alias("hour"),
+        F.col("event_type"),
+        F.date_trunc("hour", F.col("ts")).alias("hour"),
     ).agg(F.count(F.lit(1)).alias("n_events"))
     w = (
         Window.partitionBy("event_type")
         .orderBy(F.asc("hour"))
-        .rowsBetween(-trailing, -1)
+        .rowsBetween(-24, -1)
     )
     base_avg = F.avg("n_events").over(w)
     base_std = F.stddev_pop("n_events").over(w)
@@ -229,7 +225,7 @@ def burst_detection(events: DataFrame, type_col: str = "event_type",
         F.round(base_std, 4).alias("base_std"),
         z.alias("zscore"),
         (
-            F.coalesce(z > F.lit(z_thresh), F.lit(False))
-            & (F.col("n_events") >= min_count)
+            F.coalesce(z > F.lit(3.0), F.lit(False))
+            & (F.col("n_events") >= 5)
         ).alias("is_burst"),
     )

@@ -32,23 +32,17 @@ RATIO_MIN = 0.5
 RATIO_MAX = 2.0
 
 
-def bitext_pairs(
-    docs: DataFrame,
-    slug_col: str = "slug",
-    lang_col: str = "lang",
-    id_col: str = "doc_id",
-    len_col: str = "n_chars",
-) -> DataFrame:
+def bitext_pairs(docs: DataFrame) -> DataFrame:
     """Align same-template pages across languages with a length gate.
 
     Input: one row per localized page carrying (slug, lang, id, length).
     Output: slug, lang_a < lang_b, doc_a, doc_b, len_ratio (4dp).
     """
     reps = (
-        docs.groupBy(F.col(slug_col).alias("slug"), F.col(lang_col).alias("lang"))
+        docs.groupBy(F.col("slug"), F.col("lang"))
         .agg(
-            F.min(id_col).alias("doc_id"),
-            F.min_by(len_col, id_col).alias("n_chars"),
+            F.min("doc_id").alias("doc_id"),
+            F.min_by("n_chars", "doc_id").alias("n_chars"),
         )
     )
     a = reps.select(

@@ -9,12 +9,12 @@ blocks the exact host AND every subdomain under it ('example.org' blocks
 Scale shape — ZERO shuffle on the corpus side. The tempting relational
 spelling (explode the host's DNS suffix chain, equi-join, re-group by
 doc) pays a corpus-wide shuffle to reassemble documents. Instead the
-suffix chain becomes ``max_depth`` COLUMNS (suffix of the last i labels,
-i = 1..max_depth, NULL when the host is shorter), each probed by its own
-broadcast hash join against the (tiny) rules table — all map-side, the
-same broadcast reused — and the verdict is a most-specific-first
-coalesce. Streaming-safe, no state, no regroup; cost is max_depth probes
-per row against an in-memory hash map.
+suffix chain becomes ``DEFAULT_MAX_DEPTH`` COLUMNS (suffix of the last i
+labels, i = 1..DEFAULT_MAX_DEPTH, NULL when the host is shorter), each
+probed by its own broadcast hash join against the (tiny) rules table — all
+map-side, the same broadcast reused — and the verdict is a
+most-specific-first coalesce. Streaming-safe, no state, no regroup; cost is
+DEFAULT_MAX_DEPTH probes per row against an in-memory hash map.
 
 Rules with duplicate domains are deduped (min category, deterministic)
 on the broadcast side only — a tiny-table shuffle, never the corpus.
@@ -47,18 +47,13 @@ def host_suffix(host: Column, i: int) -> Column:
     )
 
 
-def blocklist_gate(
-    df: DataFrame,
-    rules: DataFrame,
-    url_col: str = "url",
-    max_depth: int = DEFAULT_MAX_DEPTH,
-) -> DataFrame:
+def blocklist_gate(df: DataFrame, rules: DataFrame) -> DataFrame:
     """Gate ``df`` against ``rules`` (domain: string, category: string).
     A row is blocked when any of the last-``i``-label suffixes of its
-    canonical host (i <= max_depth) equals a rule domain; the deepest
+    canonical host (i <= DEFAULT_MAX_DEPTH) equals a rule domain; the deepest
     (most specific) matching rule's category wins. Returns the input +
-    (host, block_category, kept). Hosts deeper than ``max_depth`` labels
-    match on their deepest ``max_depth`` suffixes — list entries are
+    (host, block_category, kept). Hosts deeper than ``DEFAULT_MAX_DEPTH``
+    labels match on their deepest ``DEFAULT_MAX_DEPTH`` suffixes — list entries are
     registrable domains or shallow subdomains in practice, so the cap
     bounds plan width without losing real rules.
     """
@@ -66,9 +61,9 @@ def blocklist_gate(
         rules.groupBy(F.col("domain"))
         .agg(F.min("category").alias("category"))
     )
-    out = df.withColumn("host", U.url_host(url_col))
+    out = df.withColumn("host", U.url_host("url"))
     cats = []
-    for i in range(max_depth, 0, -1):  # most specific first
+    for i in range(DEFAULT_MAX_DEPTH, 0, -1):  # most specific first
         r = F.broadcast(
             canon.select(
                 F.col("domain").alias(f"_d{i}"),
@@ -83,5 +78,5 @@ def blocklist_gate(
         "kept", F.col("block_category").isNull()
     )
     return out.drop(
-        *[c for i in range(1, max_depth + 1) for c in (f"_d{i}", f"_c{i}")]
+        *[c for i in range(1, DEFAULT_MAX_DEPTH + 1) for c in (f"_d{i}", f"_c{i}")]
     )

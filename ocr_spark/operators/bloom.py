@@ -63,8 +63,8 @@ BLOOM_LOAD = 6  # target keys per 64-bit block (~2% fpp at k=4)
 _BB_P = (1 << 31) - 1  # same Mersenne prime as the minhash family
 
 
-def _bb_constants(k: int, seed: int = 424243) -> list[tuple[int, int]]:
-    rng = random.Random(seed)
+def _bb_constants(k: int) -> list[tuple[int, int]]:
+    rng = random.Random(424243)
     # k+1 pairs: index 0 picks the block, 1..k pick bits inside it
     return [(rng.randrange(1, _BB_P), rng.randrange(0, _BB_P))
             for _ in range(k + 1)]
@@ -73,19 +73,19 @@ def _bb_constants(k: int, seed: int = 424243) -> list[tuple[int, int]]:
 BLOOM_AB = _bb_constants(BLOOM_K)
 
 
-def n_blocks_for(n_keys: int, load: int = BLOOM_LOAD) -> int:
+def n_blocks_for(n_keys: int) -> int:
     """Block-count sizing for an expected key count (min 64 blocks so
     toy tables still exercise real block dispersion)."""
-    return max(64, int(n_keys // load) + 1)
+    return max(64, int(n_keys // BLOOM_LOAD) + 1)
 
 
-def _block_and_mask(key_col, n_blocks: int, k: int = BLOOM_K):
+def _block_and_mask(key_col, n_blocks: int):
     """(block, mask) expression pair for one key column. The base hash is
     the first 15 hex digits of md5 (< 2^60, the largest prefix that stays
     signed-64 in both engines, like dedup.py's line hash); all family
     arithmetic stays non-negative so % == pmod in both engines."""
     base = F.conv(F.substring(F.md5(key_col), 1, 15), 16, 10).cast("long") % _BB_P
-    hs = [(F.lit(a) * base + F.lit(b)) % _BB_P for a, b in BLOOM_AB[: k + 1]]
+    hs = [(F.lit(a) * base + F.lit(b)) % _BB_P for a, b in BLOOM_AB]
     block = (hs[0] % F.lit(n_blocks)).alias("block")
     return block, [(h % F.lit(63)).cast("int") for h in hs[1:]]
 
@@ -113,13 +113,12 @@ def bloom_build(
     df: DataFrame,
     key_col: str = "fp",
     n_blocks: int = 1 << 20,
-    k: int = BLOOM_K,
 ) -> DataFrame:
     """Build the (block, bits) filter table from a key column. ONE
     map-side pass plus one hash aggregation on block — the partial
     bit_or combines before the shuffle, so at most n_blocks rows move
     per input partition regardless of key count."""
-    block, pos = _block_and_mask(F.col(key_col), n_blocks, k)
+    block, pos = _block_and_mask(F.col(key_col), n_blocks)
     # keep the key column through the mask build — the position
     # expressions reference it — then project it away before the agg
     masked = _mask_from_positions(df.select(key_col, block), pos)
@@ -134,20 +133,18 @@ def bloom_probe(
     bloom: DataFrame,
     key_col: str = "fp",
     n_blocks: int = 1 << 20,
-    k: int = BLOOM_K,
-    out_col: str = "maybe_seen",
 ) -> DataFrame:
-    """Append ``out_col`` (boolean): False = key DEFINITELY absent from
+    """Append ``maybe_seen`` (boolean): False = key DEFINITELY absent from
     the filter's build set; True = present or false positive (verify with
-    the exact join). ``n_blocks``/``k`` MUST match the build call — they
-    are part of the filter's identity, so persist them next to the
+    the exact join). ``n_blocks`` MUST match the build call — it is part
+    of the filter's identity, so persist it next to the
     filter table (committed_bloom_meta in the ingest pipeline).
 
     The probe side carries (original columns, block, mask) into a LEFT
     join on block; the filter side is n_blocks rows max, so AQE plans a
     broadcast at any realistic size and a shuffle join beyond it — the
     probe payload never amplifies either way."""
-    block, pos = _block_and_mask(F.col(key_col), n_blocks, k)
+    block, pos = _block_and_mask(F.col(key_col), n_blocks)
     probed = _mask_from_positions(df.select("*", block), pos)
     return (
         probed.join(bloom, "block", "left")
@@ -156,7 +153,7 @@ def bloom_probe(
             (
                 F.col("bits").isNotNull()
                 & (F.col("bits").bitwiseAND(F.col("mask")) == F.col("mask"))
-            ).alias(out_col),
+            ).alias("maybe_seen"),
         )
     )
 

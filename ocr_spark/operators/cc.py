@@ -113,9 +113,6 @@ def _star(edges: DataFrame, large: bool) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = CC_MAX_ITER,
     local_threshold: int = CC_LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """(id, component) for every node appearing in ``edges``, where
@@ -134,7 +131,7 @@ def connected_components(
       edges — (count, order-independent xxhash64 checksum) — and only
       when that fingerprint repeats, a single exact ``exceptAll``
       set-equality verify before breaking, then read components off the
-      final star edges. Warns if ``max_iter`` alternations exhaust
+      final star edges. Warns if ``CC_MAX_ITER`` alternations exhaust
       without stabilizing.
 
     Both paths produce the identical (min-reachable-id) labeling
@@ -142,8 +139,8 @@ def connected_components(
     ``local_threshold=0`` to force the distributed path."""
     work = (
         edges.select(
-            F.greatest(F.col(src), F.col(dst)).cast("long").alias("u"),
-            F.least(F.col(src), F.col(dst)).cast("long").alias("v"),
+            F.greatest(F.col("id_a"), F.col("id_b")).cast("long").alias("u"),
+            F.least(F.col("id_a"), F.col("id_b")).cast("long").alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
@@ -160,7 +157,7 @@ def connected_components(
             return out
     prev, prev_fp = None, None
     converged = False
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         # localCheckpoint (eager) BOTH materializes the round and truncates
         # the logical plan — without it each round's plan nests the previous
         # one and the driver OOMs on plan optimization after ~10 rounds (the
@@ -194,7 +191,7 @@ def connected_components(
         import warnings
 
         warnings.warn(
-            f"connected_components: edge set not stable after {max_iter} "
+            f"connected_components: edge set not stable after {CC_MAX_ITER} "
             "alternations; component labels may be non-minimal",
             RuntimeWarning,
             stacklevel=2,
@@ -211,8 +208,6 @@ def dedup_clusters(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    src: str = "id_a",
-    dst: str = "id_b",
 ) -> DataFrame:
     """Cluster assignment + canonical-document selection for every row of
     ``df``: (id_col, component, is_keeper). Documents untouched by any
@@ -220,7 +215,7 @@ def dedup_clusters(
     component is its minimum id (deterministic, join-free: the component
     label IS the min). The pair graph is typically
     ``minhash_lsh_pairs(df)`` but any (id_a, id_b) edge list works."""
-    comps = connected_components(pairs, src=src, dst=dst)
+    comps = connected_components(pairs)
     ids = df.select(F.col(id_col).cast("long").alias("id"))
     return (
         ids.join(comps, "id", "left")
@@ -232,12 +227,7 @@ def dedup_clusters(
     )
 
 
-def cluster_representatives(
-    clusters: DataFrame,
-    scores: DataFrame,
-    id_col: str = "doc_id",
-    score_col: str = "score",
-) -> DataFrame:
+def cluster_representatives(clusters: DataFrame, scores: DataFrame) -> DataFrame:
     """Quality-aware canonical-document selection: ``dedup_clusters``
     keeps each component's MINIMUM id — deterministic, but arbitrary with
     respect to content. Production dedup passes keep the BEST member of
@@ -245,9 +235,9 @@ def cluster_representatives(
     RefinedWeb / FineWeb convention), so this re-labels keepers as the
     component's argmax-score member, ties broken by lowest id.
 
-    ``clusters`` is (id_col, component) — typically ``dedup_clusters``
-    output; ``scores`` is (id_col, score_col). Returns every cluster row
-    with (id_col, component, score_col, is_rep).
+    ``clusters`` is (doc_id, component) — typically ``dedup_clusters``
+    output; ``scores`` is (doc_id, score). Returns every cluster row
+    with (doc_id, component, score, is_rep).
 
     Scale shape: one equi-join on id, then a single hash shuffle on
     component with a partition-local sort (``row_number`` over
@@ -256,13 +246,13 @@ def cluster_representatives(
     corpus-wide sort."""
     from pyspark.sql.window import Window
 
-    scored = clusters.join(scores.select(id_col, score_col), id_col)
+    scored = clusters.join(scores.select("doc_id", "score"), "doc_id")
     w = Window.partitionBy("component").orderBy(
-        F.desc(score_col), F.asc(id_col)
+        F.desc("score"), F.asc("doc_id")
     )
     return scored.select(
-        id_col,
+        "doc_id",
         "component",
-        score_col,
+        "score",
         (F.row_number().over(w) == 1).alias("is_rep"),
     )

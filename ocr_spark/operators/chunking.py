@@ -15,8 +15,8 @@ splitting on the explicit ASCII whitespace class ``[ \\t\\n\\r\\f\\v]+``
 — an explicit class because the three engines' notions of ``\\s`` /
 ``str.split()`` whitespace differ (Python's str.split also splits on
 Unicode whitespace; Java's ``\\s`` is ASCII-only); an explicit shared
-class removes the latent divergence. Chunk starts at every ``stride``
-tokens from 0 while < n_tokens; window ``window`` tokens (trailing chunks
+class removes the latent divergence. Chunk starts at every ``STRIDE``
+tokens from 0 while < n_tokens; window ``WINDOW`` tokens (trailing chunks
 shorter); chunks join with single spaces; documents with zero tokens
 produce zero chunks.
 """
@@ -39,9 +39,7 @@ def _token_array(text_col: str):
     return F.filter(F.split(F.col(text_col), WS_CLASS), lambda t: t != F.lit(""))
 
 
-def chunk_documents(docs: DataFrame,
-                    id_col: str = "doc_id", text_col: str = "text",
-                    window: int = WINDOW, stride: int = STRIDE) -> DataFrame:
+def chunk_documents(docs: DataFrame) -> DataFrame:
     """docs -> (doc_id, chunk_idx, chunk_text, n_tokens), expression-only.
 
     Plan shape: project(tokenize) -> explode(sequence) -> project(slice) —
@@ -49,30 +47,28 @@ def chunk_documents(docs: DataFrame,
     semantics as the tests' pure Python chunker and the SQL twin.
     """
     toks = docs.select(
-        F.col(id_col), _token_array(text_col).alias("toks")
+        F.col("doc_id"), _token_array("text").alias("toks")
     ).withColumn("n", F.size("toks")).where(F.col("n") > 0)
-    n_chunks = F.ceil(F.col("n") / F.lit(float(stride))).cast("int")
+    n_chunks = F.ceil(F.col("n") / F.lit(float(STRIDE))).cast("int")
     exploded = toks.select(
-        id_col,
+        "doc_id",
         "toks",
         "n",
         F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx"),
     )
-    start = F.col("chunk_idx") * stride
+    start = F.col("chunk_idx") * STRIDE
     return exploded.select(
-        id_col,
+        "doc_id",
         F.col("chunk_idx").cast("int").alias("chunk_idx"),
-        F.concat_ws(" ", F.slice("toks", start + 1, window)).alias("chunk_text"),
-        F.least(F.lit(window), F.col("n") - start).cast("int").alias("n_tokens"),
+        F.concat_ws(" ", F.slice("toks", start + 1, WINDOW)).alias("chunk_text"),
+        F.least(F.lit(WINDOW), F.col("n") - start).cast("int").alias("n_tokens"),
     )
 
 
-def pack_sequences(chunks: DataFrame, seq_tokens: int = 256,
-                   id_col: str = "doc_id",
-                   num_partitions: int | None = None) -> DataFrame:
+def pack_sequences(chunks: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """Assign chunks to fixed-budget training sequences: deterministic
     boundary packing — chunks in (doc_id, chunk_idx) order, sequence id =
-    floor(tokens_before / seq_tokens), so every sequence holds ~seq_tokens
+    floor(tokens_before / 256), so every sequence holds ~256
     tokens (a chunk may straddle a boundary; the documented semantics that
     keep packing a pure expression).
 
@@ -105,7 +101,7 @@ def pack_sequences(chunks: DataFrame, seq_tokens: int = 256,
     ranged = _persist_scoped(
         "pack_ranged",
         chunks.repartitionByRange(
-            num_partitions, F.asc(id_col), F.asc("chunk_idx")
+            num_partitions, F.asc("doc_id"), F.asc("chunk_idx")
         ).withColumn("_pid", F.spark_partition_id()),
     )
 
@@ -122,7 +118,7 @@ def pack_sequences(chunks: DataFrame, seq_tokens: int = 256,
 
     w = (
         Window.partitionBy("_pid")
-        .orderBy(F.asc(id_col), F.asc("chunk_idx"))
+        .orderBy(F.asc("doc_id"), F.asc("chunk_idx"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     local_cum = F.sum("n_tokens").over(w)
@@ -130,10 +126,10 @@ def pack_sequences(chunks: DataFrame, seq_tokens: int = 256,
         ranged.withColumn("_cum", local_cum)
         .join(F.broadcast(off_df), "_pid")
         .select(
-            id_col,
+            "doc_id",
             "chunk_idx",
             "n_tokens",
-            F.floor((F.col("_off") + F.col("_cum") - F.col("n_tokens")) / seq_tokens)
+            F.floor((F.col("_off") + F.col("_cum") - F.col("n_tokens")) / 256)
             .cast("long")
             .alias("seq_id"),
         )

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from ..functions.text import TOKEN_PATTERN
 
 DEFAULT_N_BUCKETS = 1 << 18
+CLF_SEED = "qclf-1"  # feature hashing and the synthetic weights share it
 # bias 0 keeps the synthetic model CALIBRATED: mean hashed weight is ~0 by
 # construction, so the default gate splits on its sign instead of dropping
 # (or keeping) everything — the non-vacuity discipline every gate in this
@@ -72,16 +73,14 @@ def synthetic_weight(bucket: Column, seed: str) -> Column:
 
 def hashed_feature_stream(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_buckets: int = DEFAULT_N_BUCKETS,
-    seed: str = "qclf-1",
+    seed: str = CLF_SEED,
 ) -> DataFrame:
-    """(id_col, bucket) rows: the unigram+adjacent-bigram hashed feature
+    """(doc_id, bucket) rows: the unigram+adjacent-bigram hashed feature
     stream shared by the classifier gate and the DSIR importance weights.
     ``explode_outer`` keeps empty/NULL-text documents as one NULL-bucket
     row, so no document ever vanishes from a downstream aggregate."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     toks = F.regexp_extract_all(F.lower(text), F.lit(TOKEN_PATTERN), F.lit(0))
     bigrams = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -89,10 +88,10 @@ def hashed_feature_stream(
         lambda a, b: F.concat(a, F.lit(" "), b),
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode_outer(F.concat(toks, bigrams)).alias("feat"),
     ).select(
-        id_col,
+        "doc_id",
         F.when(
             F.col("feat").isNotNull(),
             feature_bucket(F.col("feat"), n_buckets, seed),
@@ -100,26 +99,17 @@ def hashed_feature_stream(
     )
 
 
-def classifier_score(
-    df: DataFrame,
-    weights_df: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    seed: str = "qclf-1",
-    bias: float = DEFAULT_BIAS,
-    threshold: float = DEFAULT_THRESHOLD,
-) -> DataFrame:
-    """(id_col, n_feats, score, kept): sigmoid(mean hashed-feature weight
-    + bias) per document. Every input row produces exactly one output row."""
-    feats = hashed_feature_stream(df, text_col, id_col, n_buckets, seed)
+def classifier_score(df: DataFrame, weights_df: DataFrame | None = None) -> DataFrame:
+    """(doc_id, n_feats, score, kept): sigmoid(mean hashed-feature weight
+    + DEFAULT_BIAS) per document. Every input row produces exactly one output row."""
+    feats = hashed_feature_stream(df)
 
     if weights_df is None:
         weighted = feats.select(
-            id_col,
+            "doc_id",
             "bucket",
             F.when(
-                F.col("bucket").isNotNull(), synthetic_weight(F.col("bucket"), seed)
+                F.col("bucket").isNotNull(), synthetic_weight(F.col("bucket"), CLF_SEED)
             ).alias("weight"),
         )
     else:
@@ -130,14 +120,14 @@ def classifier_score(
             on="bucket",
             how="left",
         ).select(
-            id_col,
+            "doc_id",
             "bucket",
             F.when(F.col("bucket").isNotNull(), F.coalesce(F.col("_w"), F.lit(0.0))).alias(
                 "weight"
             ),
         )
 
-    agg = weighted.groupBy(id_col).agg(
+    agg = weighted.groupBy("doc_id").agg(
         F.count("bucket").alias("n_feats"),
         F.coalesce(F.sum("weight"), F.lit(0.0)).alias("w_sum"),
     )
@@ -145,11 +135,11 @@ def classifier_score(
         F.col("n_feats") > 0, F.col("w_sum") / F.col("n_feats")
     ).otherwise(F.lit(0.0))
     score = F.round(
-        F.lit(1.0) / (F.lit(1.0) + F.exp(-(mean_w + F.lit(bias)))), 4
+        F.lit(1.0) / (F.lit(1.0) + F.exp(-(mean_w + F.lit(DEFAULT_BIAS)))), 4
     )
     return agg.select(
-        id_col,
+        "doc_id",
         F.col("n_feats").cast("long").alias("n_feats"),
         score.alias("score"),
-        (score >= threshold).alias("kept"),
+        (score >= DEFAULT_THRESHOLD).alias("kept"),
     )

@@ -33,6 +33,7 @@ from ..functions.text import fingerprint_md5, normalized_for_fingerprint
 
 MINHASH_PERMS = 32          # signature length
 LSH_BANDS = 8               # bands of 4 -> catches jaccard >~ 0.6
+LSH_MAX_BUCKET = 256        # larger LSH buckets are dropped before pairing
 SHINGLE_N = 3               # word n-gram shingles
 
 # Keep-latest registry for the signature tables the pair joins persist: a
@@ -115,10 +116,10 @@ def _shingles(text_col: str):
 _MH_P = (1 << 31) - 1
 
 
-def _mh_constants(perms: int, seed: int = 1234567) -> list[tuple[int, int]]:
+def _mh_constants(perms: int) -> list[tuple[int, int]]:
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(1234567)
     return [(rng.randrange(1, _MH_P), rng.randrange(0, _MH_P))
             for _ in range(perms)]
 
@@ -132,8 +133,8 @@ def _base_hash(col):
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                       perms: int = MINHASH_PERMS, extra: tuple = ()) -> DataFrame:
-    """(id, [extra...], shingles, sig: array<long>[perms]) — min over
+                       extra: tuple = ()) -> DataFrame:
+    """(id, [extra...], shingles, sig: array<long>[MINHASH_PERMS]) — min over
     per-perm hashes. ``extra`` columns (e.g. a fingerprint) ride along in
     the same single map pass.
 
@@ -141,7 +142,6 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
     hash. Entirely expression-level: computing a signature is a map stage
     with zero shuffle and zero Python.
     """
-    ab = MINHASH_AB if perms == MINHASH_PERMS else _mh_constants(perms)
     base = df.select(
         F.col(id_col), *extra, _shingles(text_col).alias("shingles")
     ).withColumn("bh", F.transform(F.col("shingles"), _base_hash))
@@ -152,14 +152,13 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
         return lambda h: (F.lit(a) * (h % F.lit(_MH_P)) + F.lit(b)) % F.lit(_MH_P)
 
     sig = F.array(
-        *[F.array_min(F.transform(F.col("bh"), perm(a, b))) for a, b in ab]
+        *[F.array_min(F.transform(F.col("bh"), perm(a, b))) for a, b in MINHASH_AB]
     ).alias("sig")
     keep = [c for c in base.columns if c != "bh"]
     return base.select(*keep, sig)
 
 
-def band_buckets(sigs: DataFrame, id_col: str = "doc_id",
-                 perms: int = MINHASH_PERMS, bands: int = LSH_BANDS) -> DataFrame:
+def band_buckets(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, band, bucket) rows from a signature table (``sig`` array<long>).
 
     Bucket key = xxhash64 over the band's signature slice: ONE long per
@@ -173,7 +172,7 @@ def band_buckets(sigs: DataFrame, id_col: str = "doc_id",
     Works on freshly-computed signatures AND on a signature table read back
     from storage — the incremental-ingest path derives committed buckets
     from persisted ``sig`` arrays without touching committed text."""
-    rows_per_band = perms // bands
+    rows_per_band = MINHASH_PERMS // LSH_BANDS
     return sigs.select(
         F.col(id_col).alias("id"),
         F.explode(
@@ -185,7 +184,7 @@ def band_buckets(sigs: DataFrame, id_col: str = "doc_id",
                             *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
                         ).alias("bucket"),
                     )
-                    for b in range(bands)
+                    for b in range(LSH_BANDS)
                 ]
             )
         ).alias("bb"),
@@ -197,9 +196,6 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    perms: int = MINHASH_PERMS,
-    bands: int = LSH_BANDS,
-    max_bucket: int = 256,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash LSH, verified with
     exact shingle-set jaccard. Returns (id_a, id_b, jaccard) with id_a < id_b
@@ -209,21 +205,21 @@ def minhash_lsh_pairs(
     - the band self-join carries ONLY (id, band, bucket) — the heavy shingle
       arrays never enter the O(pairs) join; they are re-joined afterwards for
       just the deduplicated candidate set;
-    - buckets larger than ``max_bucket`` docs are dropped before pairing
+    - buckets larger than ``LSH_MAX_BUCKET`` docs are dropped before pairing
       (a bucket of k docs contributes k^2 pairs; boilerplate-identical pages
       would otherwise quadratic-bomb one partition). Deterministic cap, and
       near-dup recall for dropped buckets is recovered by their OTHER bands.
     """
     sigs = _persist_scoped(
-        "minhash_sigs", minhash_signatures(df, text_col, id_col, perms)
+        "minhash_sigs", minhash_signatures(df, text_col, id_col)
     )
 
-    banded = band_buckets(sigs, id_col=id_col, perms=perms, bands=bands)
+    banded = band_buckets(sigs, id_col=id_col)
 
     small_buckets = (
         banded.groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
-        .where((F.col("n") > 1) & (F.col("n") <= max_bucket))
+        .where((F.col("n") > 1) & (F.col("n") <= LSH_MAX_BUCKET))
         .select("band", "bucket")
     )
     banded = banded.join(small_buckets, ["band", "bucket"], "left_semi")
@@ -260,15 +256,7 @@ def minhash_lsh_pairs(
     return verified
 
 
-def lsh_recall_audit(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    perms: int = MINHASH_PERMS,
-    bands: int = LSH_BANDS,
-    max_bucket: int = 256,
-) -> DataFrame:
+def lsh_recall_audit(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """One-row self-audit of the banded-LSH candidate generator against
     EXACT shingle-jaccard ground truth: (n_truth, n_cand, n_hit, recall,
     precision). recall = truth pairs the band join surfaced; precision =
@@ -282,14 +270,14 @@ def lsh_recall_audit(
     brute-force baseline the LSH exists to avoid); at corpus scale this
     audit runs on a stratified sample, not the full table. The candidate
     side reuses the production path verbatim (same signatures, bands,
-    and max_bucket cap as ``minhash_lsh_pairs``), so the reported recall
+    and ``LSH_MAX_BUCKET`` cap as ``minhash_lsh_pairs``), so the reported recall
     prices the cap's true cost instead of an idealized uncapped join.
     """
-    sigs = minhash_signatures(df, text_col, id_col, perms)
+    sigs = minhash_signatures(df)
 
     # exact ground truth: inverted index on shingle hashes -> pair gen
     shh = sigs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.explode(
             F.array_distinct(F.transform("shingles", _base_hash))
         ).alias("shh"),
@@ -303,7 +291,7 @@ def lsh_recall_audit(
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
         .distinct()
     )
-    dsh = sigs.select(F.col(id_col).alias("id"), F.array_distinct("shingles").alias("sh"))
+    dsh = sigs.select(F.col("doc_id").alias("id"), F.array_distinct("shingles").alias("sh"))
     jac = F.round(
         F.size(F.array_intersect("a.sh", "b.sh")).cast("double")
         / F.size(F.array_union("a.sh", "b.sh")).cast("double"),
@@ -318,11 +306,11 @@ def lsh_recall_audit(
     )
 
     # production candidate set: same bands + bucket cap as the real path
-    banded = band_buckets(sigs, id_col=id_col, perms=perms, bands=bands)
+    banded = band_buckets(sigs)
     small = (
         banded.groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
-        .where((F.col("n") > 1) & (F.col("n") <= max_bucket))
+        .where((F.col("n") > 1) & (F.col("n") <= LSH_MAX_BUCKET))
         .select("band", "bucket")
     )
     kept = banded.join(small, ["band", "bucket"], "left_semi")
@@ -376,12 +364,7 @@ def _distinct_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     ).where(F.col("tok") != "")
 
 
-def token_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-) -> DataFrame:
+def token_jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """EXACT distinct-token jaccard pairs at ``jaccard >= threshold`` via
     prefix filtering (Bayardo et al. AllPairs / PPJoin): order every
     document's tokens by ascending global document frequency (ties by
@@ -412,7 +395,7 @@ def token_jaccard_pairs(
     candidate pair is the only way this differs from string identity —
     vocabulary-scale probability ~2^-40, and the exact oracle parity test
     would catch it)."""
-    toks = _distinct_tokens(df, text_col, id_col).select(
+    toks = _distinct_tokens(df, "text", "doc_id").select(
         "id", F.xxhash64("tok").alias("tok")
     )
     docfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("tok_df"))
@@ -465,7 +448,7 @@ def token_jaccard_pairs(
     )
 
 
-def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash64(df: DataFrame) -> DataFrame:
     """64-bit SimHash per document via one Arrow-vectorized pandas UDF
     (numpy bit voting — the justified Python hot path: 64 bitwise
     aggregations per token don't fit expression form).
@@ -508,19 +491,18 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         return pd.Series(out)
 
     toks = F.filter(
-        F.split(normalized_for_fingerprint(text_col), " "), lambda x: x != ""
+        F.split(normalized_for_fingerprint("text"), " "), lambda x: x != ""
     )
-    return df.select(F.col(id_col), _simhash(toks).alias("simhash"))
+    return df.select(F.col("doc_id"), _simhash(toks).alias("simhash"))
 
 
 CONTAM_NGRAM = 8            # token n-gram length for decontamination
 
 
 def contamination_check(corpus: DataFrame, benchmark: DataFrame,
-                        n: int = CONTAM_NGRAM, text_col: str = "text",
-                        id_col: str = "doc_id", max_df: int = 64) -> DataFrame:
+                        max_df: int = 64) -> DataFrame:
     """Benchmark decontamination: corpus documents sharing at least one
-    token ``n``-gram with any benchmark document — the standard
+    token ``CONTAM_NGRAM``-gram with any benchmark document — the standard
     training-data hygiene pass (a benchmark answer string memorized
     verbatim in the corpus shows up as a long shared n-gram).
 
@@ -536,14 +518,14 @@ def contamination_check(corpus: DataFrame, benchmark: DataFrame,
     corpus document.
     """
     def grams(df: DataFrame, out_id: str) -> DataFrame:
-        toks = F.split(normalized_for_fingerprint(text_col), " ")
+        toks = F.split(normalized_for_fingerprint("text"), " ")
         cnt = F.size(toks)
-        idx = F.sequence(F.lit(0), F.greatest(cnt - n, F.lit(0)))
-        arr = F.when(cnt < n, F.array().cast("array<string>")).otherwise(
-            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
+        idx = F.sequence(F.lit(0), F.greatest(cnt - CONTAM_NGRAM, F.lit(0)))
+        arr = F.when(cnt < CONTAM_NGRAM, F.array().cast("array<string>")).otherwise(
+            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, CONTAM_NGRAM)))
         )
         return df.select(
-            F.col(id_col).alias(out_id), F.explode(arr).alias("gram")
+            F.col("doc_id").alias(out_id), F.explode(arr).alias("gram")
         ).select(out_id, _base_hash(F.col("gram")).alias("g"))
 
     bench = grams(benchmark, "bench_id").distinct()
@@ -566,27 +548,25 @@ def contamination_check(corpus: DataFrame, benchmark: DataFrame,
 SIMHASH_BANDS = 4           # 16-bit bands: hamming <= 3 guarantees a shared band
 
 
-def simhash_pairs(df: DataFrame, max_hamming: int = 3, text_col: str = "text",
-                  id_col: str = "doc_id", bands: int = SIMHASH_BANDS,
-                  max_bucket: int = 256) -> DataFrame:
+def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate pairs from 64-bit SimHash signatures via hamming-band
-    LSH: the signature splits into ``bands`` equal bit-slices (JVM-side
+    LSH: the signature splits into ``SIMHASH_BANDS`` equal bit-slices (JVM-side
     shiftright + mask), pairs sharing any slice are candidates, and
     candidates are verified with the exact popcount hamming distance
     (``bit_count(a XOR b) <= max_hamming``). Pigeonhole guarantee: any pair
-    with hamming < ``bands`` shares at least one band, so recall is exact
-    for ``max_hamming <= bands - 1`` (the default).
+    with hamming < ``SIMHASH_BANDS`` shares at least one band, so recall is
+    exact for ``max_hamming <= SIMHASH_BANDS - 1`` (the default).
 
     Same shuffle discipline as minhash: the band join carries only
-    (id, band, bucket) longs; buckets with more than ``max_bucket`` members
+    (id, band, bucket) longs; buckets with more than ``LSH_MAX_BUCKET`` members
     are dropped before pairing (identical-signature floods — e.g. empty
     documents, all-zero signatures — are exact-dedup's job, not simhash's).
     Returns (id_a, id_b, hamming) with id_a < id_b.
     """
-    width = 64 // bands
+    width = 64 // SIMHASH_BANDS
     mask = (1 << width) - 1
-    sigs = simhash64(df, text_col, id_col).select(
-        F.col(id_col).alias("id"), F.col("simhash")
+    sigs = simhash64(df).select(
+        F.col("doc_id").alias("id"), F.col("simhash")
     )
     sigs = _persist_scoped("simhash_sigs", sigs)
 
@@ -601,7 +581,7 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 3, text_col: str = "text",
                         .bitwiseAND(F.lit(mask))
                         .alias("bucket"),
                     )
-                    for b in range(bands)
+                    for b in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("bb"),
@@ -610,7 +590,7 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 3, text_col: str = "text",
     small_buckets = (
         banded.groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
-        .where((F.col("n") > 1) & (F.col("n") <= max_bucket))
+        .where((F.col("n") > 1) & (F.col("n") <= LSH_MAX_BUCKET))
         .select("band", "bucket")
     )
     banded = banded.join(small_buckets, ["band", "bucket"], "left_semi")
@@ -646,12 +626,10 @@ _POLY_B = 1_000_003
 _POLY_MASK = (1 << 61) - 1
 
 
-def winnow_fingerprints(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", k: int = WINNOW_K,
-                        window: int = WINNOW_WINDOW) -> DataFrame:
+def winnow_fingerprints(df: DataFrame) -> DataFrame:
     """Rolling-hash document fingerprints via winnowing (Schleimer/Wilkerson/
-    Aiken): polynomial rolling hash over char ``k``-grams, then keep the
-    rightmost minimum of each ``window`` of consecutive hashes. Output one
+    Aiken): polynomial rolling hash over char ``WINNOW_K``-grams, then keep
+    the rightmost minimum of each ``WINNOW_WINDOW`` of consecutive hashes. Output one
     row per document with the sorted distinct fingerprint array — two
     documents sharing any substring of length >= k+window-1 share a
     fingerprint, which is the local-match guarantee exact dedup and token
@@ -669,6 +647,7 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
 
     @F.pandas_udf(ArrayType(LongType()))
     def _winnow(texts: "pd.Series") -> "pd.Series":
+        k, window = WINNOW_K, WINNOW_WINDOW
         out = []
         for t in texts:
             s = t or ""
@@ -701,31 +680,30 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
         return pd.Series(out)
 
     return df.select(
-        F.col(id_col),
-        _winnow(normalized_for_fingerprint(text_col)).alias("fingerprints"),
+        F.col("doc_id"),
+        _winnow(normalized_for_fingerprint("text")).alias("fingerprints"),
     )
 
 
-def winnow_pairs(df: DataFrame, min_shared: int = 2, text_col: str = "text",
-                 id_col: str = "doc_id", max_df: int = 16) -> DataFrame:
+def winnow_pairs(df: DataFrame, min_shared: int = 2) -> DataFrame:
     """Candidate near-dup pairs sharing >= min_shared winnow fingerprints:
     explode -> fingerprint equi-join -> count (the content-overlap join;
     at scale the exploded table is (id, fp) longs only).
 
-    ``max_df`` drops fingerprints present in more than that many documents
+    Fingerprints present in more than 16 documents are dropped
     before the self-join — corpus-common k-grams (boilerplate phrases,
     small shared vocabularies) are not discriminative and their buckets
     join quadratically (the hot-bucket guard, same shape as the capped LSH
     buckets in minhash_lsh_pairs; measured 40x on the sf0.1 suite)."""
-    fps = winnow_fingerprints(df, text_col, id_col)
-    flat = fps.select(F.col(id_col).alias("id"), F.explode("fingerprints").alias("fp"))
+    fps = winnow_fingerprints(df)
+    flat = fps.select(F.col("doc_id").alias("id"), F.explode("fingerprints").alias("fp"))
     # three downstream references (df-count, both join sides) would re-run
     # the fingerprint UDF; persist the (id, fp) longs instead — at corpus
     # scale this is the signatures table you'd materialize anyway
     flat = _persist_scoped("winnow_flat", flat)
     rare = (
         flat.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= max_df)
+        .where(F.col("df") <= 16)
         .select("fp")
     )
     flat = flat.join(rare, "fp")  # semi-shaped: keep discriminative fps only
@@ -741,8 +719,7 @@ def winnow_pairs(df: DataFrame, min_shared: int = 2, text_col: str = "text",
 LINE_MAX_DF = 16        # lines in more docs than this are boilerplate
 
 
-def line_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-               max_df: int = LINE_MAX_DF) -> DataFrame:
+def line_dedup(df: DataFrame, max_df: int = LINE_MAX_DF) -> DataFrame:
     """Sub-document boilerplate removal (the CCNet/RefinedWeb line-dedup
     pass): a LINE that appears in more than ``max_df`` documents is
     boilerplate (nav text, cookie banners, footers) and is removed from
@@ -761,7 +738,7 @@ def line_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     Exactly SQL-replayable (``__spark_entry__._line_dedup_oracle``)."""
     lh = F.conv(F.substring(F.md5(F.trim(F.col("line"))), 1, 15), 16, 10).cast("long")
     lines = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         # \r?\n: CRLF documents would otherwise carry a trailing \r on
         # every line — Spark trim strips spaces only, so "blank" lines
         # ('\r') would count as content and the same line would hash
@@ -769,7 +746,7 @@ def line_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         # posexplodes to zero rows, which would silently DROP a NULL-text
         # document from the output — every document must come back.
         F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), "\r?\n")
+            F.split(F.coalesce(F.col("text"), F.lit("")), "\r?\n")
         ).alias("pos", "line"),
     ).withColumn("lh", lh)
 
@@ -800,17 +777,15 @@ def line_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                     lambda s: s.getField("line"),
                 ),
                 "\n",
-            ).alias(text_col),
+            ).alias("text"),
             F.count(F.lit(1)).alias("n_lines"),
             F.sum(F.col("drop").cast("long")).alias("n_dropped"),
         )
-        .select(F.col("id").alias(id_col), text_col, "n_lines", "n_dropped")
+        .select(F.col("id").alias("doc_id"), "text", "n_lines", "n_dropped")
     )
 
 
-def host_line_dedup(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id", host_col: str = "host",
-                    min_host_pages: int = 5,
+def host_line_dedup(df: DataFrame, min_host_pages: int = 5,
                     min_ratio: float = 0.5) -> DataFrame:
     """PER-HOST boilerplate removal (the site-chrome half of RefinedWeb's
     line cleaning; :func:`line_dedup` is the corpus-GLOBAL half): a line
@@ -830,20 +805,20 @@ def host_line_dedup(df: DataFrame, text_col: str = "text",
     the removal is a left join on the two longs. Host page counts come
     from a countDistinct per host (hosts ≪ documents). Exactly
     SQL-replayable (``__spark_entry__._host_line_dedup_oracle``)."""
-    hh = F.conv(F.substring(F.md5(F.col(host_col)), 1, 15), 16, 10).cast("long")
+    hh = F.conv(F.substring(F.md5(F.col("host")), 1, 15), 16, 10).cast("long")
     lh = F.conv(F.substring(F.md5(F.trim(F.col("line"))), 1, 15), 16, 10).cast("long")
     lines = df.select(
-        F.col(id_col).alias("id"),
-        F.col(host_col).alias("host"),
+        F.col("doc_id").alias("id"),
+        F.col("host"),
         hh.alias("hh"),
         F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), "\r?\n")
+            F.split(F.coalesce(F.col("text"), F.lit("")), "\r?\n")
         ).alias("pos", "line"),
     ).withColumn("lh", lh)
 
     host_pages = (
-        df.groupBy(F.col(host_col).alias("host"))
-        .agg(F.countDistinct(id_col).alias("n_pages"))
+        df.groupBy(F.col("host"))
+        .agg(F.countDistinct("doc_id").alias("n_pages"))
         .select(
             F.conv(F.substring(F.md5(F.col("host")), 1, 15), 16, 10)
             .cast("long").alias("hh"),
@@ -885,24 +860,23 @@ def host_line_dedup(df: DataFrame, text_col: str = "text",
                     lambda s: s.getField("line"),
                 ),
                 "\n",
-            ).alias(text_col),
+            ).alias("text"),
             F.count(F.lit(1)).alias("n_lines"),
             F.sum(F.col("drop").cast("long")).alias("n_dropped"),
         )
         .select(
-            F.col("id").alias(id_col), F.col("host").alias(host_col),
-            text_col, "n_lines", "n_dropped",
+            F.col("id").alias("doc_id"), F.col("host"),
+            "text", "n_lines", "n_dropped",
         )
     )
 
 
-def collapse_repeated_lines(df: DataFrame, text_col: str = "text",
-                            id_col: str = "doc_id") -> DataFrame:
+def collapse_repeated_lines(df: DataFrame) -> DataFrame:
     """WITHIN-document repeated-line removal (the intra-page half of the
     RefinedWeb/C4 line cleaning; :func:`line_dedup` is the cross-corpus
     half): every non-blank line keeps only its FIRST occurrence inside the
     document; blank/whitespace-only lines are structure and always stay.
-    Returns (id_col, text_col, n_lines, n_removed) — one row per input
+    Returns (doc_id, text, n_lines, n_removed) — one row per input
     row, text reassembled in original order.
 
     Shape: a zero-shuffle, zero-Python per-row projection — the dedupe is
@@ -912,7 +886,7 @@ def collapse_repeated_lines(df: DataFrame, text_col: str = "text",
     by document size, embarrassingly parallel, streaming-safe — no state,
     no exchange at any scale. Replayed expression-for-expression in the
     DuckDB twin (same index-lambda + prefix-slice semantics)."""
-    arr = F.split(F.coalesce(F.col(text_col), F.lit("")), "\r?\n")
+    arr = F.split(F.coalesce(F.col("text"), F.lit("")), "\r?\n")
     kept = F.filter(
         arr,
         lambda x, i: (F.trim(x) == "")
@@ -925,18 +899,17 @@ def collapse_repeated_lines(df: DataFrame, text_col: str = "text",
     # size(kept) off by one when kept appears twice in a select) —
     # pinned by test_collapse_repeated_lines_counts
     mid = df.select(
-        F.col(id_col), arr.alias("_lines"), kept.alias("_kept")
+        F.col("doc_id"), arr.alias("_lines"), kept.alias("_kept")
     )
     return mid.select(
-        F.col(id_col),
-        F.array_join("_kept", "\n").alias(text_col),
+        F.col("doc_id"),
+        F.array_join("_kept", "\n").alias("text"),
         F.size("_lines").cast("long").alias("n_lines"),
         (F.size("_lines") - F.size("_kept")).cast("long").alias("n_removed"),
     )
 
 
-def latest_capture(df: DataFrame, url_col: str = "url",
-                   ts_col: str = "warc_ts", id_col: str = "doc_id") -> DataFrame:
+def latest_capture(df: DataFrame) -> DataFrame:
     """Cross-dump recrawl resolution: a crawl corpus holds many CAPTURES
     of the same page (one per dump); training wants exactly one — the
     newest. Group by the CANONICAL url (scheme/host case, www., userinfo,
@@ -952,13 +925,13 @@ def latest_capture(df: DataFrame, url_col: str = "url",
     from ..functions.urls import url_canonicalize
 
     return (
-        df.groupBy(url_canonicalize(F.col(url_col)).alias("url_canon"))
+        df.groupBy(url_canonicalize(F.col("url")).alias("url_canon"))
         .agg(
             F.max_by(
-                F.col(id_col), F.struct(F.col(ts_col), F.col(id_col))
+                F.col("doc_id"), F.struct(F.col("warc_ts"), F.col("doc_id"))
             ).alias("keep_id"),
             F.count(F.lit(1)).cast("long").alias("n_captures"),
-            F.max(ts_col).alias("latest_ts"),
+            F.max("warc_ts").alias("latest_ts"),
         )
     )
 
@@ -966,9 +939,7 @@ def latest_capture(df: DataFrame, url_col: str = "url",
 PARA_MAX_DF = 8         # paragraphs in more docs than this are boilerplate
 
 
-def paragraph_dedup(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id",
-                    max_df: int = PARA_MAX_DF) -> DataFrame:
+def paragraph_dedup(df: DataFrame, max_df: int = PARA_MAX_DF) -> DataFrame:
     """Paragraph-granularity boilerplate removal — the CCNet dedup unit
     (its shard pass hashes PARAGRAPHS, not lines): a paragraph whose
     CANONICAL form (lowercased, whitespace collapsed — reflows and
@@ -990,11 +961,11 @@ def paragraph_dedup(df: DataFrame, text_col: str = "text",
     canon = normalized_for_fingerprint(F.col("para"))
     ph = F.conv(F.substring(F.md5(canon), 1, 15), 16, 10).cast("long")
     paras = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.posexplode(
             F.split(
                 F.regexp_replace(
-                    F.coalesce(F.col(text_col), F.lit("")), "\r", ""
+                    F.coalesce(F.col("text"), F.lit("")), "\r", ""
                 ),
                 "\n{2,}",
             )
@@ -1028,17 +999,15 @@ def paragraph_dedup(df: DataFrame, text_col: str = "text",
                     lambda s: s.getField("para"),
                 ),
                 "\n\n",
-            ).alias(text_col),
+            ).alias("text"),
             F.count(F.lit(1)).alias("n_paras"),
             F.sum(F.col("drop").cast("long")).alias("n_dropped"),
         )
-        .select(F.col("id").alias(id_col), text_col, "n_paras", "n_dropped")
+        .select(F.col("id").alias("doc_id"), "text", "n_paras", "n_dropped")
     )
 
 
-def common_ngrams(df: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id", w: int = 8,
-                  k: int = 20) -> DataFrame:
+def common_ngrams(df: DataFrame, w: int = 8, k: int = 20) -> DataFrame:
     """Corpus n-gram profile: the top ``k`` word ``w``-grams by document
     frequency — the tuning instrument for every gram-threshold in this
     engine (span-dedup min_df, contamination max_df, boilerplate
@@ -1053,12 +1022,12 @@ def common_ngrams(df: DataFrame, text_col: str = "text",
     SQL-replayable (``__spark_entry__._common_ngrams_oracle``)."""
     norm = F.trim(
         F.regexp_replace(
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))), "[ \t\n]+", " "
+            F.lower(F.coalesce(F.col("text"), F.lit(""))), "[ \t\n]+", " "
         )
     )
     toks = F.split(norm, " ")
     grams = (
-        df.select(F.col(id_col).alias("id"), toks.alias("toks"))
+        df.select(F.col("doc_id").alias("id"), toks.alias("toks"))
         .where(F.size("toks") >= w)
         .select(
             "id",

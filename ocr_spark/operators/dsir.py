@@ -55,19 +55,16 @@ _GUMBEL_RES = 1_000_000
 def dsir_log_ratios(
     raw: DataFrame,
     target: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_buckets: int = DSIR_N_BUCKETS,
     seed: str = "dsir-1",
-    alpha: float = DSIR_ALPHA,
 ) -> DataFrame:
     """(bucket, log_ratio): ln(p_target(b)) - ln(p_raw(b)) over the hashed
     feature space, Laplace-smoothed so buckets unseen in the target still
     get finite mass. At most ``n_buckets`` rows — the broadcast side of
     every downstream join. Buckets absent from the RAW stream are omitted:
     no raw document can reference them, so they can never be looked up."""
-    raw_feats = hashed_feature_stream(raw, text_col, id_col, n_buckets, seed)
-    tgt_feats = hashed_feature_stream(target, text_col, id_col, n_buckets, seed)
+    raw_feats = hashed_feature_stream(raw, n_buckets, seed)
+    tgt_feats = hashed_feature_stream(target, n_buckets, seed)
     raw_counts = (
         raw_feats.where(F.col("bucket").isNotNull())
         .groupBy("bucket")
@@ -88,12 +85,12 @@ def dsir_log_ratios(
             "bucket",
             (
                 F.log(
-                    (F.coalesce(F.col("c_tgt"), F.lit(0)) + F.lit(alpha))
-                    / (F.col("t_tgt") + F.lit(alpha * n_buckets))
+                    (F.coalesce(F.col("c_tgt"), F.lit(0)) + F.lit(DSIR_ALPHA))
+                    / (F.col("t_tgt") + F.lit(DSIR_ALPHA * n_buckets))
                 )
                 - F.log(
-                    (F.col("c_raw") + F.lit(alpha))
-                    / (F.col("t_raw") + F.lit(alpha * n_buckets))
+                    (F.col("c_raw") + F.lit(DSIR_ALPHA))
+                    / (F.col("t_raw") + F.lit(DSIR_ALPHA * n_buckets))
                 )
             ).alias("log_ratio"),
         )
@@ -104,8 +101,6 @@ def dsir_apply(
     raw: DataFrame,
     ratios: DataFrame,
     k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_buckets: int = DSIR_N_BUCKETS,
     seed: str = "dsir-1",
 ) -> DataFrame:
@@ -119,10 +114,10 @@ def dsir_apply(
     carry (bucket, log_ratio) and must have been fitted with the same
     ``n_buckets``/``seed`` (bucket ids are hash positions — a mismatch is
     a different feature space)."""
-    feats = hashed_feature_stream(raw, text_col, id_col, n_buckets, seed)
+    feats = hashed_feature_stream(raw, n_buckets, seed)
     weights = (
         feats.join(F.broadcast(ratios), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_feats"),
             F.avg("log_ratio").alias("w_raw"),
@@ -130,23 +125,23 @@ def dsir_apply(
     )
     u = (
         F.pmod(
-            _md5_long(F.concat(F.lit(seed + ":g:"), F.col(id_col).cast("string"))),
+            _md5_long(F.concat(F.lit(seed + ":g:"), F.col("doc_id").cast("string"))),
             F.lit(_GUMBEL_RES),
         ).cast("double")
         + F.lit(0.5)
     ) / F.lit(float(_GUMBEL_RES))
     gumbel = -F.log(-F.log(u))
     return (
-        raw.select(id_col)
+        raw.select("doc_id")
         .distinct()
-        .join(weights, id_col, "left")
+        .join(weights, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_feats", F.lit(0)).cast("long").alias("n_feats"),
             F.round(F.coalesce("w_raw", F.lit(0.0)), 4).alias("log_weight"),
             F.round(F.coalesce("w_raw", F.lit(0.0)) + gumbel, 4).alias("sample_key"),
         )
-        .orderBy(F.col("sample_key").desc(), F.col(id_col))
+        .orderBy(F.col("sample_key").desc(), F.col("doc_id"))
         .limit(k)
     )
 
@@ -155,15 +150,12 @@ def dsir_sample(
     raw: DataFrame,
     target: DataFrame,
     k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_buckets: int = DSIR_N_BUCKETS,
     seed: str = "dsir-1",
-    alpha: float = DSIR_ALPHA,
 ) -> DataFrame:
     """Select ``k`` documents from ``raw`` by importance resampling toward
     ``target``'s hashed-ngram distribution (fit + apply in one shot).
-    Returns (id_col, n_feats, log_weight, sample_key) — the k selected
+    Returns (doc_id, n_feats, log_weight, sample_key) — the k selected
     rows in descending sample_key order.
 
     log_weight = mean feature log-ratio (mean, not sum: document LENGTH
@@ -177,5 +169,5 @@ def dsir_sample(
 
     For repeated ingest batches, fit :func:`dsir_log_ratios` once and call
     :func:`dsir_apply` per batch instead — one corpus scan per batch."""
-    ratios = dsir_log_ratios(raw, target, text_col, id_col, n_buckets, seed, alpha)
-    return dsir_apply(raw, ratios, k, text_col, id_col, n_buckets, seed)
+    ratios = dsir_log_ratios(raw, target, n_buckets, seed)
+    return dsir_apply(raw, ratios, k, n_buckets, seed)

@@ -150,6 +150,18 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
     return parts
 
 
+def auto_repartition(df: DataFrame) -> bool:
+    """The "auto" policy: shuffle only when the scan cannot fill the task
+    slots, judged by a lower bound on the scan's partitions that follows
+    Spark's own file packing (``_estimated_scan_partitions``). Raw file
+    COUNT measures the wrong quantity: many tiny files pack into few scan
+    partitions, and one file split into byte ranges yields partitions that
+    read nothing. Metadata-only probe: paths + local sizes, no
+    DataFrame->RDD conversion, no job. Non-file sources (empty inputFiles)
+    or unreachable sizes shuffle — the safe default."""
+    return _estimated_scan_partitions(df) < df.sparkSession.sparkContext.defaultParallelism
+
+
 def _parse_stage(
     df: DataFrame,
     batch_fn: Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]],
@@ -162,19 +174,10 @@ def _parse_stage(
     ``INPUT_COLS``, apply the ``repartition`` policy documented on
     :func:`extract_pages`, then a single ``mapInPandas(batch_fn)``."""
     pruned = df.select(*INPUT_COLS)  # column pruning BEFORE the Arrow boundary
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
     if num_partitions is None:
-        num_partitions = parallelism * 2
+        num_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
     if repartition == "auto":
-        # Shuffle only when the scan cannot fill the task slots, judged by
-        # a lower bound on the scan's partitions that follows Spark's own
-        # file packing (``_estimated_scan_partitions``). Raw file COUNT
-        # measures the wrong quantity: many tiny files pack into few scan
-        # partitions, and one file split into byte ranges yields partitions
-        # that read nothing. Metadata-only probe: paths + local sizes, no
-        # DataFrame->RDD conversion, no job. Non-file sources (empty
-        # inputFiles) or unreachable sizes shuffle — the safe default.
-        repartition = _estimated_scan_partitions(df) < parallelism
+        repartition = auto_repartition(df)
     if repartition == "range":
         pruned = ranged_repartition(pruned, num_partitions)
     elif repartition:
@@ -209,24 +212,18 @@ def extract_pages(
                         num_partitions, salt_buckets, repartition)
 
 
-def extract_page_markdown(
-    df: DataFrame,
-    num_partitions: int | None = None,
-    salt_buckets: int = 16,
-    repartition: bool | str = "auto",
-) -> DataFrame:
+def extract_page_markdown(df: DataFrame, repartition: bool | str = "auto") -> DataFrame:
     """pages -> markdown records (MARKDOWN_SCHEMA): the structured-output
     twin of :func:`extract_pages` — identical keep/drop decisions and
     partitioning policy, but headings/list items/quotes render as markdown
     instead of flattening (core.markdown). One row per input row, P7."""
     return _parse_stage(df, _markdown_batches, MARKDOWN_SCHEMA,
-                        num_partitions, salt_buckets, repartition)
+                        None, 16, repartition)
 
 
 def extract_page_spans(
     df: DataFrame,
     num_partitions: int | None = None,
-    salt_buckets: int = 16,
     repartition: bool | str = "auto",
 ) -> DataFrame:
     """pages -> per-block span rows (SPANS_SCHEMA): the span-emitting twin
@@ -236,4 +233,4 @@ def extract_page_spans(
     carries (int, int) spans + block text only, so the fan-out rows are
     narrow — at 100 TB the span table is a small fraction of the input."""
     return _parse_stage(df, _span_batches, SPANS_SCHEMA,
-                        num_partitions, salt_buckets, repartition)
+                        num_partitions, 16, repartition)

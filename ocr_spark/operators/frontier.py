@@ -27,10 +27,6 @@ def fetch_schedule(
     candidates: DataFrame,
     host_delays: DataFrame,
     *,
-    host_col: str = "host",
-    url_col: str = "url",
-    priority_col: str = "priority",
-    delay_col: str = "crawl_delay_s",
     default_delay_s: float = 1.0,
     max_per_host: int | None = None,
 ) -> DataFrame:
@@ -45,25 +41,25 @@ def fetch_schedule(
     beyond it belong to the NEXT crawl cycle, so dropping them here is
     the semantics, not a loss.
     """
-    w = Window.partitionBy(host_col).orderBy(
-        F.col(priority_col).desc(), F.col(url_col).asc()
+    w = Window.partitionBy("host").orderBy(
+        F.col("priority").desc(), F.col("url").asc()
     )
     ranked = candidates.select(
-        host_col, url_col, priority_col,
+        "host", "url", "priority",
         (F.row_number().over(w) - F.lit(1)).cast("long").alias("slot"),
     )
     if max_per_host is not None:
         ranked = ranked.filter(F.col("slot") < F.lit(int(max_per_host)))
     delays = host_delays.select(
-        F.col(host_col).alias("__dh"),
-        F.col(delay_col).cast("double").alias("__delay"),
+        F.col("host").alias("__dh"),
+        F.col("crawl_delay_s").cast("double").alias("__delay"),
     )
     return (
-        ranked.join(delays, on=[F.col(host_col) == F.col("__dh")], how="left")
+        ranked.join(delays, on=[F.col("host") == F.col("__dh")], how="left")
         .select(
-            host_col,
-            url_col,
-            priority_col,
+            "host",
+            "url",
+            "priority",
             "slot",
             (
                 F.col("slot")

@@ -61,8 +61,7 @@ def _canon_tokens(text_col: str) -> F.Column:
     return F.split(norm, " ")
 
 
-def mg_candidates(tokens_df: DataFrame, m: int = 32,
-                  tokens_col: str = "toks") -> DataFrame:
+def mg_candidates(tokens_df: DataFrame, m: int = 32) -> DataFrame:
     """Per-partition Misra-Gries summaries over a column of token arrays:
     one bounded table of ``m`` counters per partition, emitted as a
     distinct (token) candidate frame of <= m rows per input partition.
@@ -73,7 +72,7 @@ def mg_candidates(tokens_df: DataFrame, m: int = 32,
     def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         counters: dict[str, int] = {}
         for pdf in batches:
-            for arr in pdf[tokens_col]:
+            for arr in pdf["toks"]:
                 for tok in arr:
                     c = counters.get(tok)
                     if c is not None:
@@ -89,13 +88,12 @@ def mg_candidates(tokens_df: DataFrame, m: int = 32,
                             del counters[t]
         yield pd.DataFrame({"token": pd.Series(list(counters), dtype="str")})
 
-    return tokens_df.select(tokens_col).mapInPandas(
+    return tokens_df.select("toks").mapInPandas(
         summarize, "token string"
     ).distinct()
 
 
-def heavy_hitters(df: DataFrame, text_col: str = "text",
-                  m: int = 32) -> DataFrame:
+def heavy_hitters(df: DataFrame, m: int = 32) -> DataFrame:
     """Every token with frequency > n_total/(m+1), with its EXACT count:
     (token, freq, n_total) ordered by (freq desc, token asc).
 
@@ -103,7 +101,7 @@ def heavy_hitters(df: DataFrame, text_col: str = "text",
     and the candidate-gated exact recount (shuffle carries only candidate
     rows). Output provably equals the exact one-pass SQL answer — the
     DuckDB twin replays ``GROUP BY token HAVING freq*(m+1) > total``."""
-    toks = df.select(_canon_tokens(text_col).alias("toks")).where(
+    toks = df.select(_canon_tokens("text").alias("toks")).where(
         F.array_join("toks", " ") != ""
     )
     cand = mg_candidates(toks, m=m)

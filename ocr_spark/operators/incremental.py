@@ -35,14 +35,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint_md5
-from .dedup import LSH_BANDS, MINHASH_PERMS, band_buckets, minhash_signatures
+from .dedup import LSH_MAX_BUCKET, band_buckets, minhash_signatures
 
 
 def committed_state(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    perms: int = MINHASH_PERMS,
 ) -> DataFrame:
     """The per-document dedup state to persist at ingest-commit time:
     (id, fp, sh: array<string> distinct shingles, sig: array<long>).
@@ -57,7 +56,7 @@ def committed_state(
     drop ``sh`` and verify with signature agreement instead (estimated
     jaccard) — the banding/capping machinery is unchanged."""
     sigs = minhash_signatures(
-        df, text_col, id_col, perms,
+        df, text_col, id_col,
         extra=(fingerprint_md5(text_col).alias("fp"),),
     )
     return sigs.select(
@@ -72,8 +71,6 @@ def write_band_store(
     state_df: DataFrame,
     table_name: str,
     path: str,
-    perms: int = MINHASH_PERMS,
-    bands: int = LSH_BANDS,
     num_buckets: int = 16,
 ) -> None:
     """Persist the committed corpus's LSH (id, band, bucket) rows as a
@@ -93,7 +90,7 @@ def write_band_store(
     readers pass ``spark.table(table_name)`` as ``band_store``."""
     from ..plans.partitioning import write_bucketed
 
-    rows = band_buckets(state_df, id_col="id", perms=perms, bands=bands)
+    rows = band_buckets(state_df, id_col="id")
     write_bucketed(rows, table_name, path, ["band", "bucket"], num_buckets)
 
 
@@ -103,9 +100,6 @@ def incremental_status_against_state(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    perms: int = MINHASH_PERMS,
-    bands: int = LSH_BANDS,
-    max_bucket: int = 256,
     bloom: DataFrame | None = None,
     bloom_n_blocks: int | None = None,
     band_store: DataFrame | None = None,
@@ -131,7 +125,7 @@ def incremental_status_against_state(
     recall. The caller owns freshness — ``DedupIngest._band_probe``
     compares the store's stamp against its meta table and falls back to
     the full derive on any mismatch."""
-    new_state = committed_state(new_df, text_col, id_col, perms)
+    new_state = committed_state(new_df, text_col, id_col)
     new_ids = new_state.select("id")
 
     exact_probe = new_state.select("id", "fp")
@@ -155,7 +149,7 @@ def incremental_status_against_state(
         .withColumn("e", F.lit(True))
     )
 
-    nb = band_buckets(new_state, id_col="id", perms=perms, bands=bands)
+    nb = band_buckets(new_state, id_col="id")
     # scale path: a persisted :func:`write_band_store` table is already
     # laid out (bucketed + sorted) on the band-join key, so the committed
     # side enters the candidate join with NO Exchange — only the batch's
@@ -174,11 +168,10 @@ def incremental_status_against_state(
             sb_parts.append(
                 band_buckets(
                     band_store_tail_state, id_col="id",
-                    perms=perms, bands=bands,
                 )
             )
     else:
-        sb_parts = [band_buckets(state_df, id_col="id", perms=perms, bands=bands)]
+        sb_parts = [band_buckets(state_df, id_col="id")]
     # bucket cap over the UNION (identical semantics to the from-scratch
     # pass over new ∪ committed): a boilerplate bucket is oversized no
     # matter which generation its members arrived in. Counts are taken
@@ -194,7 +187,7 @@ def incremental_status_against_state(
     small = (
         counts.groupBy("band", "bucket")
         .agg(F.sum("n").alias("n"))
-        .where((F.col("n") > 1) & (F.col("n") <= max_bucket))
+        .where((F.col("n") > 1) & (F.col("n") <= LSH_MAX_BUCKET))
         .select("band", "bucket")
     )
     nb = nb.join(small, ["band", "bucket"], "left_semi")
@@ -249,12 +242,7 @@ def incremental_status_against_state(
     )
 
 
-def snapshot_diff(
-    old_df: DataFrame,
-    new_df: DataFrame,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def snapshot_diff(old_df: DataFrame, new_df: DataFrame) -> DataFrame:
     """Diff two crawl snapshots by content fingerprint: one row per key
     in either snapshot with status added / removed / changed / unchanged.
 
@@ -267,15 +255,15 @@ def snapshot_diff(
     removed) for incremental corpus maintenance.
     """
     old_fp = old_df.select(
-        F.col(key_col).alias("k"), fingerprint_md5(text_col).alias("old_fp")
+        F.col("doc_id").alias("k"), fingerprint_md5("text").alias("old_fp")
     )
     new_fp = new_df.select(
-        F.col(key_col).alias("k"), fingerprint_md5(text_col).alias("new_fp")
+        F.col("doc_id").alias("k"), fingerprint_md5("text").alias("new_fp")
     )
     return (
         old_fp.join(new_fp, "k", "full_outer")
         .select(
-            F.col("k").alias(key_col),
+            F.col("k").alias("doc_id"),
             F.when(F.col("old_fp").isNull(), F.lit("added"))
             .when(F.col("new_fp").isNull(), F.lit("removed"))
             .when(F.col("old_fp") == F.col("new_fp"), F.lit("unchanged"))

@@ -34,25 +34,21 @@ from ..functions.text import TOKEN_PATTERN
 
 def inverted_index(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_df: int = 2,
-    max_df: int | None = None,
     max_df_frac: float | None = None,
 ) -> DataFrame:
     """(term, df, cf, postings): documents per term (df), total
     occurrences (cf), and the comma-joined ascending doc-id posting list.
     Terms with df < min_df are dropped (hapax noise); a ceiling comes from
-    ``max_df`` (absolute) or ``max_df_frac`` (fraction of the corpus —
+    ``max_df_frac`` (fraction of the corpus —
     scale-invariant; costs one count() driver scalar, the same probe
     tfidf_top_terms pays)."""
-    if max_df_frac is not None:
-        max_df = int(max_df_frac * df.count())
+    max_df = None if max_df_frac is None else int(max_df_frac * df.count())
     toks = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.explode(
             F.regexp_extract_all(
-                F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+                F.lower(F.coalesce(F.col("text"), F.lit(""))),
                 F.lit(TOKEN_PATTERN),
                 F.lit(0),
             )
@@ -75,22 +71,17 @@ def inverted_index(
     return inv.where(cond).select("term", "df", "cf", "postings")
 
 
-def positional_postings(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    vocab: list[str] | None = None,
-) -> DataFrame:
+def positional_postings(df: DataFrame, vocab: list[str] | None = None) -> DataFrame:
     """(term, id, pos) positional postings — the phrase-query sibling of
     ``inverted_index``. ``vocab`` prunes to the query's own terms BEFORE
     anything shuffles (the bm25 query-vocab-filter discipline): for a
     phrase lookup the corpus contributes only rows for the phrase's
     terms, not its whole token stream."""
     toks = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.posexplode(
             F.regexp_extract_all(
-                F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+                F.lower(F.coalesce(F.col("text"), F.lit(""))),
                 F.lit(TOKEN_PATTERN),
                 F.lit(0),
             )
@@ -101,12 +92,7 @@ def positional_postings(
     return toks.select("term", "id", "pos")
 
 
-def phrase_search(
-    df: DataFrame,
-    phrase: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def phrase_search(df: DataFrame, phrase: list[str]) -> DataFrame:
     """Exact-phrase retrieval: documents containing the token sequence
     ``phrase``, with match counts. Columns: doc_id, n_matches.
 
@@ -121,7 +107,7 @@ def phrase_search(
     if not phrase:
         raise ValueError("phrase must have at least one term")
     terms = [t.lower() for t in phrase]
-    pos = positional_postings(df, text_col, id_col, vocab=terms)
+    pos = positional_postings(df, vocab=terms)
     acc = (
         pos.where(F.col("term") == terms[0])
         .select("id", F.col("pos").alias("start"))
@@ -139,34 +125,29 @@ def phrase_search(
 RRF_K = 60  # the standard reciprocal-rank-fusion damping constant
 
 
-def rrf_fuse(
-    rankings: list[DataFrame],
-    id_col: str = "doc_id",
-    k: int = RRF_K,
-    topk: int = 10,
-) -> DataFrame:
+def rrf_fuse(rankings: list[DataFrame], topk: int = 10) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al., SIGIR'09) of ranked lists.
 
-    Each input carries (id_col, rank); fused score = sum over lists of
-    1/(k + rank) for the lists the doc appears in. The canonical hybrid-
+    Each input carries (doc_id, rank); fused score = sum over lists of
+    1/(RRF_K + rank) for the lists the doc appears in. The canonical hybrid-
     retrieval combiner (lexical BM25 + dense cosine) because it needs no
     score calibration — only ranks. Inputs are top-k lists (tiny), so
     the union + one groupBy is driver-free and broadcast-cheap at any
     corpus scale; determinism: ranks are ints, each doc sums at most
     len(rankings) identical-order dyadic terms, ties break by id.
-    Columns: id_col, rrf_score (6dp), fused_rank."""
+    Columns: doc_id, rrf_score (6dp), fused_rank."""
     from functools import reduce
 
     parts = [
         r.select(
-            F.col(id_col),
-            (F.lit(1.0) / (F.lit(float(k)) + F.col("rank").cast("double"))).alias("s"),
+            F.col("doc_id"),
+            (F.lit(1.0) / (F.lit(float(RRF_K)) + F.col("rank").cast("double"))).alias("s"),
         )
         for r in rankings
     ]
     allp = reduce(lambda a, b: a.unionByName(b), parts)
-    scored = allp.groupBy(id_col).agg(F.round(F.sum("s"), 6).alias("rrf_score"))
-    w = Window.orderBy(F.col("rrf_score").desc(), F.col(id_col).asc())
+    scored = allp.groupBy("doc_id").agg(F.round(F.sum("s"), 6).alias("rrf_score"))
+    w = Window.orderBy(F.col("rrf_score").desc(), F.col("doc_id").asc())
     return (
         scored.withColumn("fused_rank", F.row_number().over(w))
         .where(F.col("fused_rank") <= topk)
@@ -179,8 +160,6 @@ def expansion_terms(
     query_terms: list[str],
     k_docs: int = 10,
     k_terms: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """RM3-style pseudo-relevance-feedback query expansion: terms that
     characterize the seed query's BM25 top-``k_docs`` documents, scored
@@ -196,13 +175,12 @@ def expansion_terms(
     from ..functions.text import STOPWORDS
 
     seed = sorted({t.lower() for t in query_terms})
-    fb_ids = bm25_topk(df, seed, k=k_docs, text_col=text_col,
-                       id_col=id_col).select(id_col)
+    fb_ids = bm25_topk(df, seed, k=k_docs).select("doc_id")
     toks = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.explode(
             F.regexp_extract_all(
-                F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+                F.lower(F.coalesce(F.col("text"), F.lit(""))),
                 F.lit(TOKEN_PATTERN),
                 F.lit(0),
             )
@@ -216,7 +194,7 @@ def expansion_terms(
     )
     fb_tf = (
         toks.join(
-            F.broadcast(fb_ids.select(F.col(id_col).alias("id"))), "id", "left_semi"
+            F.broadcast(fb_ids.select(F.col("doc_id").alias("id"))), "id", "left_semi"
         )
         .where(~F.col("term").isin(*seed) & ~F.col("term").isin(*STOPWORDS))
         .groupBy("term")
@@ -239,15 +217,9 @@ def expansion_terms(
 SNIPPET_WINDOW = 20  # tokens per snippet window
 
 
-def snippets(
-    df: DataFrame,
-    query_terms: list[str],
-    window: int = SNIPPET_WINDOW,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def snippets(df: DataFrame, query_terms: list[str]) -> DataFrame:
     """Search-result snippets: for each document containing any query
-    term, the densest ``window``-token span drawn from the aligned AND
+    term, the densest ``SNIPPET_WINDOW``-token span drawn from the aligned AND
     half-offset window grids (a sliding-span approximation: a dense run
     of hits straddling an aligned boundary — e.g. adjacent hits at
     positions 19 and 20 — lands whole in the half-offset window that
@@ -261,13 +233,13 @@ def snippets(
     map-side combine; each hit fans out to at most 2 candidate starts)
     and the snippet cut (array slice + join — the text never explodes);
     the per-doc argmax runs over span-count rows, bounded by
-    2 * doclen / window. Everything JVM-side."""
+    2 * doclen / SNIPPET_WINDOW. Everything JVM-side."""
     terms = sorted({t.lower() for t in query_terms})
-    half = window // 2
+    half = SNIPPET_WINDOW // 2
     toks = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.regexp_extract_all(
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+            F.lower(F.coalesce(F.col("text"), F.lit(""))),
             F.lit(TOKEN_PATTERN),
             F.lit(0),
         ).alias("tk"),
@@ -275,8 +247,8 @@ def snippets(
     pos = toks.select(
         "id", F.posexplode("tk").alias("pos", "term")
     ).where(F.col("term").isin(terms))
-    aligned = (F.col("pos") / window).cast("int") * window
-    offset = ((F.col("pos") - half) / window).cast("int") * window + half
+    aligned = (F.col("pos") / SNIPPET_WINDOW).cast("int") * SNIPPET_WINDOW
+    offset = ((F.col("pos") - half) / SNIPPET_WINDOW).cast("int") * SNIPPET_WINDOW + half
     starts = pos.select(
         "id",
         "pos",
@@ -305,25 +277,17 @@ def snippets(
     return (
         best.join(toks, "id")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             F.col("start").cast("long").alias("start"),
             F.col("n_hits").cast("long").alias("n_hits"),
             F.array_join(
-                F.slice(F.col("tk"), F.col("start") + 1, window), " "
+                F.slice(F.col("tk"), F.col("start") + 1, SNIPPET_WINDOW), " "
             ).alias("snippet"),
         )
     )
 
 
-def bm25_topk(
-    df: DataFrame,
-    query_terms: list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 10) -> DataFrame:
     """BM25 ranked retrieval: top-``k`` documents for a bag of query terms
     (Robertson/Sparck Jones; the Lucene idf variant
     ln(1 + (N - df + 0.5)/(df + 0.5)), which stays positive for
@@ -340,9 +304,9 @@ def bm25_topk(
     """
     terms = sorted({t.lower() for t in query_terms})
     toks = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.regexp_extract_all(
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+            F.lower(F.coalesce(F.col("text"), F.lit(""))),
             F.lit(TOKEN_PATTERN),
             F.lit(0),
         ).alias("toks"),
@@ -365,8 +329,8 @@ def bm25_topk(
     )
     contrib = idf * (
         F.col("tf")
-        * (k1 + 1)
-        / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
+        * (1.2 + 1)
+        / (F.col("tf") + 1.2 * (1 - 0.75 + 0.75 * F.col("dl") / F.col("avgdl")))
     )
     scored = (
         qtf.join(F.broadcast(dft), "term")
@@ -378,9 +342,9 @@ def bm25_topk(
     top = (
         scored.orderBy(F.desc("score"), F.asc("id"))
         .limit(k)
-        .select(F.col("id").alias(id_col), "score")
+        .select(F.col("id").alias("doc_id"), "score")
     )
     from pyspark.sql.window import Window
 
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))  # k rows: trivial
+    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))  # k rows: trivial
     return top.withColumn("rank", F.row_number().over(w))

@@ -33,7 +33,7 @@ IP_SPACE = 1 << 32
 PREFIX_SHIFT = 24  # /8 buckets
 
 
-def network_ranges(n_ranges: int = 48) -> list[tuple[int, int, str]]:
+def network_ranges() -> list[tuple[int, int, str]]:
     """Deterministic (lo, hi, region) network ranges covering most — not
     all — of the IPv4 space, with deliberate gaps so the unrouted path is
     exercised. Widths vary by a factor of ~6 and some ranges straddle /8
@@ -42,9 +42,10 @@ def network_ranges(n_ranges: int = 48) -> list[tuple[int, int, str]]:
     regions = ["amer", "emea", "apac", "latam", "anz", "mea"]
     out: list[tuple[int, int, str]] = []
     pos = 0
-    for r in range(n_ranges):
-        width = (IP_SPACE // n_ranges) * ((r % 3) + 1) // 2
-        gap = (IP_SPACE // n_ranges) // 4 if r % 5 == 0 else 0
+    step = IP_SPACE // 48  # 48 ranges before the widths vary
+    for r in range(48):
+        width = step * ((r % 3) + 1) // 2
+        gap = step // 4 if r % 5 == 0 else 0
         lo = pos + gap
         hi = min(lo + width - 1, IP_SPACE - 1)
         if lo >= IP_SPACE:
@@ -75,11 +76,7 @@ def explode_range_prefixes(ranges: DataFrame) -> DataFrame:
     )
 
 
-def ip_range_join(
-    events: DataFrame,
-    ranges: DataFrame,
-    ip_col: str = "ip",
-) -> DataFrame:
+def ip_range_join(events: DataFrame, ranges: DataFrame) -> DataFrame:
     """Route each event's IP to its network range via the prefix-bucketed
     equi-join; events whose IP falls in a coverage gap keep a NULL region
     (left join — the P7 never-drop contract applies to routing too).
@@ -87,41 +84,35 @@ def ip_range_join(
     Plan shape: project(prefix) -> BroadcastHashJoin(prefix) -> residual
     BETWEEN filter, zero shuffle of the event side."""
     pref = events.withColumn(
-        "prefix", F.shiftrightunsigned(F.col(ip_col), PREFIX_SHIFT)
+        "prefix", F.shiftrightunsigned(F.col("ip"), PREFIX_SHIFT)
     )
     cand = F.broadcast(explode_range_prefixes(ranges))
     return pref.join(
         cand,
         (pref["prefix"] == cand["prefix"])
-        & (F.col(ip_col) >= cand["lo"])
-        & (F.col(ip_col) <= cand["hi"]),
+        & (F.col("ip") >= cand["lo"])
+        & (F.col("ip") <= cand["hi"]),
         "left",
     ).drop(cand["prefix"]).drop("prefix")
 
 
-def region_traffic(
-    events: DataFrame,
-    spark: SparkSession,
-    ranges: list[tuple[int, int, str]] | None = None,
-    user_col: str = "user_id",
-) -> DataFrame:
+def region_traffic(events: DataFrame, spark: SparkSession) -> DataFrame:
     """Per-region traffic rollup over synthetic per-user IPs: derive a
     deterministic IP from the user id (multiplicative hash — both engines
     agree on BIGINT arithmetic), route via :func:`ip_range_join`, then one
     hash aggregation. Returns (region, n_events, n_users, min_ip, max_ip)
     with coverage gaps surfaced as region ``'unrouted'``."""
-    ranges = ranges if ranges is not None else network_ranges()
     with_ip = events.withColumn(
-        "ip", (F.col(user_col) * F.lit(IP_HASH_A)) % F.lit(IP_SPACE)
+        "ip", (F.col("user_id") * F.lit(IP_HASH_A)) % F.lit(IP_SPACE)
     )
-    routed = ip_range_join(with_ip, _ranges_df(spark, ranges))
+    routed = ip_range_join(with_ip, _ranges_df(spark, network_ranges()))
     return (
         routed.groupBy(
             F.coalesce(F.col("region"), F.lit("unrouted")).alias("region")
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct(user_col).alias("n_users"),
+            F.countDistinct("user_id").alias("n_users"),
             F.min("ip").alias("min_ip"),
             F.max("ip").alias("max_ip"),
         )

@@ -46,26 +46,21 @@ from ..functions.links import (
 from ..functions.urls import url_host
 
 
-def outlinks(
-    pages: DataFrame,
-    html_text_col: str = "html_text",
-    url_col: str = "url",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def outlinks(pages: DataFrame) -> DataFrame:
     """(id, url, pos, href, resolved, dst_host, internal) — one row per
     fetchable anchor; fragment-only / mailto / javascript hrefs resolve
     to NULL and are dropped (they are not crawl edges). ``pos`` is the
     anchor's document-order index, the tie-breaker that keeps every
     downstream ordering deterministic."""
     hrefs = pages.select(
-        F.col(id_col),
-        F.col(url_col).alias("url"),
-        F.posexplode(extract_hrefs(html_text_col)).alias("pos", "href"),
+        F.col("doc_id"),
+        F.col("url"),
+        F.posexplode(extract_hrefs("html_text")).alias("pos", "href"),
     )
     resolved = strip_fragment(resolve_href(F.col("url"), F.col("href")))
     return (
         hrefs.select(
-            id_col,
+            "doc_id",
             "url",
             "pos",
             "href",
@@ -73,7 +68,7 @@ def outlinks(
         )
         .where(F.col("resolved").isNotNull())
         .select(
-            id_col,
+            "doc_id",
             "url",
             "pos",
             "href",
@@ -84,22 +79,17 @@ def outlinks(
     )
 
 
-def outlinks_with_text(
-    pages: DataFrame,
-    html_text_col: str = "html_text",
-    url_col: str = "url",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def outlinks_with_text(pages: DataFrame) -> DataFrame:
     """Like :func:`outlinks` but over WELL-FORMED anchors only, carrying
     the anchor text alongside each edge: (id, url, pos, href, anchor,
     resolved, dst_host, internal). The href and its text come from one
     whole-tag match (``anchor_pairs``) so they cannot mis-pair."""
     pairs = pages.select(
-        F.col(id_col),
-        F.col(url_col).alias("url"),
-        F.posexplode(anchor_pairs(html_text_col)).alias("pos", "pair"),
+        F.col("doc_id"),
+        F.col("url"),
+        F.posexplode(anchor_pairs("html_text")).alias("pos", "pair"),
     ).select(
-        id_col,
+        "doc_id",
         "url",
         "pos",
         F.col("pair.href").alias("href"),
@@ -107,10 +97,10 @@ def outlinks_with_text(
     )
     resolved = strip_fragment(resolve_href(F.col("url"), F.col("href")))
     return (
-        pairs.select(id_col, "url", "pos", "href", "anchor", resolved.alias("resolved"))
+        pairs.select("doc_id", "url", "pos", "href", "anchor", resolved.alias("resolved"))
         .where(F.col("resolved").isNotNull())
         .select(
-            id_col,
+            "doc_id",
             "url",
             "pos",
             "href",
@@ -159,12 +149,7 @@ def anchor_terms(
     )
 
 
-def canonical_groups(
-    pages: DataFrame,
-    html_text_col: str = "html_text",
-    url_col: str = "url",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def canonical_groups(pages: DataFrame) -> DataFrame:
     """rel=canonical grouping — the crawl-side dedup signal that needs no
     content comparison at all: pages declaring the same canonical URL are
     the same logical document (print views, session-id / tracking-param
@@ -175,13 +160,13 @@ def canonical_groups(
     to that canonical, and the keeper is the self-declaring page when one
     exists, else the minimum id (deterministic). One hash aggregation on
     canonical_url + one broadcast-join back — scales."""
-    decl = F.nullif(canonical_link(html_text_col), F.lit(""))
+    decl = F.nullif(canonical_link("html_text"), F.lit(""))
     pages_c = pages.select(
-        F.col(id_col),
-        F.col(url_col).alias("url"),
+        F.col("doc_id"),
+        F.col("url"),
         F.coalesce(
-            strip_fragment(resolve_href(F.col(url_col), decl)),
-            F.col(url_col),
+            strip_fragment(resolve_href(F.col("url"), decl)),
+            F.col("url"),
         ).alias("canonical_url"),
     ).withColumn("is_self", F.col("canonical_url") == F.col("url"))
     groups = pages_c.groupBy("canonical_url").agg(
@@ -191,19 +176,19 @@ def canonical_groups(
         F.min(
             F.struct(
                 (~F.col("is_self")).cast("int").alias("self_last"),
-                F.col(id_col).alias("kid"),
+                F.col("doc_id").alias("kid"),
             )
         )["kid"].alias("keeper_id"),
     )
     return (
         pages_c.join(groups, "canonical_url")
         .select(
-            id_col,
+            "doc_id",
             "url",
             "canonical_url",
             "is_self",
             "group_size",
-            (F.col(id_col) == F.col("keeper_id")).alias("is_keeper"),
+            (F.col("doc_id") == F.col("keeper_id")).alias("is_keeper"),
         )
     )
 
@@ -441,7 +426,6 @@ def trustrank_hosts(
     seeds: list[str],
     iterations: int = 8,
     damping: float = 0.85,
-    checkpoint_every: int = 3,
     local_threshold: int = 500_000,
 ) -> DataFrame:
     """TrustRank (Gyöngyi, Garcia-Molina, Pedersen 2004): PageRank with
@@ -454,7 +438,6 @@ def trustrank_hosts(
         host_edges,
         iterations=iterations,
         damping=damping,
-        checkpoint_every=checkpoint_every,
         local_threshold=local_threshold,
         seeds=seeds,
     )

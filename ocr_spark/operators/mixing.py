@@ -35,13 +35,7 @@ from ..functions.urls import url_host
 from .quality import quality_filter
 
 
-def token_budget_select(
-    df: DataFrame,
-    budgets: dict[str, int],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-) -> DataFrame:
+def token_budget_select(df: DataFrame, budgets: dict[str, int]) -> DataFrame:
     """Greedy per-language mixture selection under token budgets.
 
     Within each language, documents are ranked by ``quality_score``
@@ -58,22 +52,22 @@ def token_budget_select(
     spark = df.sparkSession
     b = spark.createDataFrame(
         [(k, int(v)) for k, v in sorted(budgets.items())],
-        f"{lang_col} string, budget long",
+        "lang string, budget long",
     )
     scored = df.select(
-        F.col(id_col),
-        F.col(lang_col),
-        token_count(text_col).cast("long").alias("n_tokens"),
-        quality_score(text_col).alias("quality"),
-    ).join(F.broadcast(b), lang_col)
+        F.col("doc_id"),
+        F.col("lang"),
+        token_count("text").cast("long").alias("n_tokens"),
+        quality_score("text").alias("quality"),
+    ).join(F.broadcast(b), "lang")
     w = (
-        Window.partitionBy(lang_col)
-        .orderBy(F.desc("quality"), F.asc(id_col))
+        Window.partitionBy("lang")
+        .orderBy(F.desc("quality"), F.asc("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return scored.select(
-        id_col,
-        lang_col,
+        "doc_id",
+        "lang",
         "n_tokens",
         "quality",
         F.sum("n_tokens").over(w).alias("cum_tokens"),
@@ -83,9 +77,6 @@ def token_budget_select(
 
 def domain_blocklist(
     df: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_docs: int = 5,
     min_kept_frac: float = 0.5,
 ) -> DataFrame:
@@ -99,13 +90,12 @@ def domain_blocklist(
 
     Returns (host, n_docs, kept_frac, blocked) for every host.
     """
-    kept = quality_filter(
-        df.select(F.col(id_col), F.col(text_col)), text_col=text_col,
-        id_col=id_col,
-    ).select(id_col, "kept")
-    hosts = df.select(F.col(id_col), url_host(url_col).alias("host"))
+    kept = quality_filter(df.select(F.col("doc_id"), F.col("text"))).select(
+        "doc_id", "kept"
+    )
+    hosts = df.select(F.col("doc_id"), url_host("url").alias("host"))
     return (
-        hosts.join(kept, id_col)
+        hosts.join(kept, "doc_id")
         .groupBy("host")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -125,9 +115,6 @@ def domain_blocklist(
 
 def domain_quality_eb(
     df: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    id_col: str = "doc_id",
     prior_strength: float = 20.0,
     min_smoothed_frac: float = 0.5,
 ) -> DataFrame:
@@ -150,13 +137,12 @@ def domain_quality_eb(
     host aggregation; the global rate is a 1-row broadcast (never a
     driver collect). Exact DuckDB twin
     (``__spark_entry__._host_quality_eb_oracle``)."""
-    kept = quality_filter(
-        df.select(F.col(id_col), F.col(text_col)), text_col=text_col,
-        id_col=id_col,
-    ).select(id_col, "kept")
-    hosts = df.select(F.col(id_col), url_host(url_col).alias("host"))
+    kept = quality_filter(df.select(F.col("doc_id"), F.col("text"))).select(
+        "doc_id", "kept"
+    )
+    hosts = df.select(F.col("doc_id"), url_host("url").alias("host"))
     per_host = (
-        hosts.join(kept, id_col)
+        hosts.join(kept, "doc_id")
         .groupBy("host")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -183,12 +169,7 @@ def domain_quality_eb(
     )
 
 
-def temperature_mixture(
-    df: DataFrame,
-    alpha: float = 0.3,
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
+def temperature_mixture(df: DataFrame, alpha: float = 0.3) -> DataFrame:
     """Temperature-based multinomial mixture weights over languages (the
     mT5/XLM-R sampling rule): ``p_l  ∝  n_l^alpha`` where ``n_l`` is the
     language's token mass. ``alpha < 1`` flattens the natural distribution —
@@ -205,9 +186,9 @@ def temperature_mixture(
     a languages-sized frame, then a broadcast single-row total join — the
     corpus is touched exactly once; everything after the agg is ~10 rows.
     """
-    per_lang = df.groupBy(F.col(lang_col).alias("lang")).agg(
+    per_lang = df.groupBy(F.col("lang")).agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(token_count(F.col(text_col))).alias("n_tokens"),
+        F.sum(token_count(F.col("text"))).alias("n_tokens"),
     )
     powed = per_lang.withColumn(
         "w", F.pow(F.col("n_tokens").cast("double"), F.lit(float(alpha)))

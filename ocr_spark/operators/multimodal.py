@@ -480,8 +480,7 @@ def _fake_frames(digest: bytes, every_ms: int, max_frames: int):
     return frames
 
 
-def frame_sample(df: DataFrame, binary_col: str = "html", id_col: str = "url",
-                 every_ms: int = 1000, max_frames: int = 8) -> DataFrame:
+def frame_sample(df: DataFrame, binary_col: str = "html", id_col: str = "url") -> DataFrame:
     """1:N frame sampling over binary payloads — the multimodal analog of
     the reference's document -> segments relation (one tall image split into
     parts, split_image.py:192-194,302-307): one input row fans out to one
@@ -498,10 +497,10 @@ def frame_sample(df: DataFrame, binary_col: str = "html", id_col: str = "url",
                 b = blob if blob is not None else b""
                 digest = hashlib.sha256(b).digest()
                 try:
-                    frames = decode_frames(b, every_ms, max_frames)
+                    frames = decode_frames(b, 1000, 8)
                     decoder = "pyav"
                 except NotImplementedError:
-                    frames = _fake_frames(digest, every_ms, max_frames)
+                    frames = _fake_frames(digest, 1000, 8)
                     decoder = "stub"
                 rid = pdf[id_col].iat[i]
                 for idx, ts_ms, fh in frames:
@@ -549,8 +548,7 @@ def media_features(df: DataFrame, binary_col: str = "html",
 
 
 def media_hash_gate(df: DataFrame, blocklist: DataFrame,
-                    binary_col: str = "html", id_col: str = "url",
-                    hash_col: str = "sha256") -> DataFrame:
+                    binary_col: str = "html", id_col: str = "url") -> DataFrame:
     """Known-bad media filtering by exact content hash — the mandatory
     safety gate of every production crawl pipeline (industry hash lists
     of prohibited imagery; takedown/copyright lists): a binary payload
@@ -568,12 +566,12 @@ def media_hash_gate(df: DataFrame, blocklist: DataFrame,
     prefilter (operators/bloom.py) in front of the exact join. Exact
     DuckDB twin (``__spark_entry__`` ``media_hash_gate``)."""
     h = F.lower(F.sha2(F.col(binary_col), 256))
-    hashed = df.select(F.col(id_col), h.alias(hash_col))
+    hashed = df.select(F.col(id_col), h.alias("sha256"))
     bl = (
-        blocklist.select(F.lower(F.col(hash_col)).alias(hash_col))
+        blocklist.select(F.lower(F.col("sha256")).alias("sha256"))
         .distinct()
         .withColumn("bad", F.lit(True))
     )
-    return hashed.join(F.broadcast(bl), hash_col, "left").select(
-        id_col, hash_col, F.col("bad").isNotNull().alias("blocked")
+    return hashed.join(F.broadcast(bl), "sha256", "left").select(
+        id_col, "sha256", F.col("bad").isNotNull().alias("blocked")
     )

@@ -77,16 +77,11 @@ def decode_entities(c: Column) -> Column:
     return c
 
 
-def page_meta(
-    df: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    head_bytes: int = HEAD_BYTES,
-) -> DataFrame:
+def page_meta(df: DataFrame, head_bytes: int = HEAD_BYTES) -> DataFrame:
     """(url, title, meta_description, og_title, canonical_href,
     robots_noindex, robots_nofollow, html_lang) — one row per input row,
     zero exchanges, zero Python."""
-    head = F.substring(F.col(html_col).cast("string"), 1, head_bytes)
+    head = F.substring(F.col("html").cast("string"), 1, head_bytes)
     title_raw = F.nullif(
         F.trim(F.regexp_replace(F.regexp_extract(head, _TITLE_RE, 1), r"\s+", " ")),
         F.lit(""),
@@ -95,7 +90,7 @@ def page_meta(
         F.coalesce(_first_match(head, _meta_content_res("name", "robots")), F.lit(""))
     )
     return df.select(
-        F.col(url_col).alias("url"),
+        F.col("url"),
         decode_entities(title_raw).alias("title"),
         _first_match(head, _meta_content_res("name", "description")).alias(
             "meta_description"
@@ -130,12 +125,7 @@ def _valid_date(s: Column) -> Column:
     return F.when(F.try_to_date(s).isNotNull(), s)
 
 
-def pub_date(
-    df: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    head_bytes: int = HEAD_BYTES,
-) -> DataFrame:
+def pub_date(df: DataFrame) -> DataFrame:
     """(url, pub_date, pub_source) — publication date per page, or NULLs.
 
     Precedence: ``article:published_time`` meta > ``<time datetime=>`` >
@@ -145,10 +135,10 @@ def pub_date(
     exact. Zero shuffle, zero Python — head-bounded JVM regex like the
     rest of this module.
     """
-    head = F.substring(F.col(html_col).cast("string"), 1, head_bytes)
+    head = F.substring(F.col("html").cast("string"), 1, HEAD_BYTES)
     meta_d = _valid_date(F.substring(_first_match(head, _PUBTIME_META), 1, 10))
     time_d = _valid_date(F.nullif(F.regexp_extract(head, _TIME_RE, 1), F.lit("")))
-    u = F.col(url_col)
+    u = F.col("url")
     url_raw = F.concat_ws(
         "-",
         F.regexp_extract(u, _URL_DATE_RE, 1),
@@ -157,7 +147,7 @@ def pub_date(
     )
     url_d = _valid_date(F.nullif(url_raw, F.lit("")))
     return df.select(
-        F.col(url_col).alias("url"),
+        F.col("url"),
         F.coalesce(meta_d, time_d, url_d).alias("pub_date"),
         F.when(meta_d.isNotNull(), F.lit("meta"))
         .when(time_d.isNotNull(), F.lit("time"))
@@ -180,12 +170,7 @@ _JSONLD_RE = (
 JSONLD_BYTES = 262144
 
 
-def jsonld_meta(
-    df: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    scan_bytes: int = JSONLD_BYTES,
-) -> DataFrame:
+def jsonld_meta(df: DataFrame) -> DataFrame:
     """(url, has_jsonld, jsonld_type, headline, date_published, author) —
     schema.org JSON-LD record per page, NULLs when absent. One row per
     input row (the P7 never-drop contract), zero exchanges, zero Python.
@@ -208,7 +193,7 @@ def jsonld_meta(
     - ``date_published`` is the declared string as-is (calendar validity
       is :func:`pub_date`'s contract, not this extractor's).
     """
-    page = F.substring(F.col(html_col).cast("string"), 1, scan_bytes)
+    page = F.substring(F.col("html").cast("string"), 1, JSONLD_BYTES)
     block = F.nullif(F.trim(F.regexp_extract(page, _JSONLD_RE, 1)), F.lit(""))
     # top-level array -> take the first node (compact JSON text back out
     # of the path engine re-parses identically on both engines)
@@ -217,7 +202,7 @@ def jsonld_meta(
     )
     author_scalar = F.get_json_object(obj, "$['author']")
     return df.select(
-        F.col(url_col).alias("url"),
+        F.col("url"),
         block.isNotNull().alias("has_jsonld"),
         F.get_json_object(obj, "$['@type']").alias("jsonld_type"),
         F.coalesce(

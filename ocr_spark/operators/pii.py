@@ -34,8 +34,7 @@ IPV4_TOKEN = "<IP>"
 PHONE_TOKEN = "<PHONE>"
 
 
-def pii_redact(df: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def pii_redact(df: DataFrame) -> DataFrame:
     """Per-document PII scrub: (id, n_emails, n_ipv4, n_phones, n_pii,
     red_fp) where ``red_fp`` is the first 16 hex chars of the md5 of the
     REDACTED text — a compact engine-portable witness that the rewrite
@@ -44,7 +43,7 @@ def pii_redact(df: DataFrame, text_col: str = "text",
     NULL text is coalesced to '' so every input row survives to the
     output with zero counts (the family's never-drop contract).
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     redacted = F.regexp_replace(
         F.regexp_replace(
             F.regexp_replace(text, EMAIL_RE, EMAIL_TOKEN),
@@ -56,7 +55,7 @@ def pii_redact(df: DataFrame, text_col: str = "text",
     n_ipv4 = F.size(F.regexp_extract_all(text, F.lit(IPV4_RE), F.lit(0)))
     n_phones = F.size(F.regexp_extract_all(text, F.lit(PHONE_RE), F.lit(0)))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_emails.cast("long").alias("n_emails"),
         n_ipv4.cast("long").alias("n_ipv4"),
         n_phones.cast("long").alias("n_phones"),

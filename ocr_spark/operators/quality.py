@@ -47,12 +47,6 @@ def quality_filter(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_words: int = MIN_WORDS,
-    max_words: int = MAX_WORDS,
-    min_mean_word_len: float = MIN_MEAN_WORD_LEN,
-    max_mean_word_len: float = MAX_MEAN_WORD_LEN,
-    max_symbol_ratio: float = MAX_SYMBOL_RATIO,
-    max_top_word_ratio: float = MAX_TOP_WORD_RATIO,
 ) -> DataFrame:
     """Rule-based document filter with per-rule reason labels:
     (id, n_words, mean_word_len, symbol_ratio, top_word_ratio, kept,
@@ -131,15 +125,15 @@ def quality_filter(
         )
     )
     reason = (
-        F.when(F.col("n_words") < min_words, "too_short")
-        .when(F.col("n_words") > max_words, "too_long")
+        F.when(F.col("n_words") < MIN_WORDS, "too_short")
+        .when(F.col("n_words") > MAX_WORDS, "too_long")
         .when(
-            (F.col("mean_word_len") < min_mean_word_len)
-            | (F.col("mean_word_len") > max_mean_word_len),
+            (F.col("mean_word_len") < MIN_MEAN_WORD_LEN)
+            | (F.col("mean_word_len") > MAX_MEAN_WORD_LEN),
             "word_len",
         )
-        .when(F.col("symbol_ratio") > max_symbol_ratio, "symbol_heavy")
-        .when(F.col("top_word_ratio") > max_top_word_ratio, "repetitive")
+        .when(F.col("symbol_ratio") > MAX_SYMBOL_RATIO, "symbol_heavy")
+        .when(F.col("top_word_ratio") > MAX_TOP_WORD_RATIO, "repetitive")
     )
     return joined.select(
         F.col("id").alias(id_col),
@@ -165,12 +159,7 @@ MAX_TOP_BIGRAM_FRAC = 0.18
 DEFAULT_BLOCKWORDS = ("xbadwordx", "xbannedx", "xforbiddenx")
 
 
-def blockword_filter(
-    df: DataFrame,
-    words: tuple[str, ...] = DEFAULT_BLOCKWORDS,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def blockword_filter(df: DataFrame) -> DataFrame:
     """The C4-style blockword page gate: a page containing ANY listed word
     (token-exact, case-insensitive — substring matches like 'class' for
     'ass' are the documented false-positive this tokenized form avoids) is
@@ -187,13 +176,13 @@ def blockword_filter(
 
     # regex tokens (not the whitespace split): 'xbadwordx.' must still hit
     toks = F.regexp_extract_all(
-        F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+        F.lower(F.coalesce(F.col("text"), F.lit(""))),
         F.lit(TOKEN_PATTERN), F.lit(0),
     )
-    bad = F.array(*[F.lit(w.lower()) for w in words])
+    bad = F.array(*[F.lit(w.lower()) for w in DEFAULT_BLOCKWORDS])
     n_bad = F.size(F.array_intersect(toks, bad))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_bad.cast("long").alias("n_blockwords"),
         (n_bad == 0).alias("kept"),
     )
@@ -212,15 +201,7 @@ def _canon_units(col, sep_pattern: str):
     )
 
 
-def repetition_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_dup_line_frac: float = MAX_DUP_LINE_FRAC,
-    max_dup_line_char_frac: float = MAX_DUP_LINE_CHAR_FRAC,
-    max_dup_para_frac: float = MAX_DUP_PARA_FRAC,
-    max_top_bigram_frac: float = MAX_TOP_BIGRAM_FRAC,
-) -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Within-document repetition signals in the Gopher tradition:
     (id, n_lines, dup_line_frac, dup_line_char_frac, n_paras,
     dup_para_frac, top_bigram_frac, repetitive). ``quality_filter`` grades
@@ -249,7 +230,7 @@ def repetition_stats(
     proves the fold agrees with the relational semantics. NULL text
     coalesces to '' (every row survives with zero counts).
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     lines = _canon_units(text, "\n")
     paras = _canon_units(text, "\n{2,}")
     canon = normalized_for_fingerprint(text)
@@ -317,7 +298,7 @@ def repetition_stats(
     )
 
     measured = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(lines).cast("long").alias("n_lines"),
         F.size(F.array_distinct(lines)).cast("long").alias("n_lines_d"),
         dup_chars(F.array_sort(lines)).alias("dup_chars"),
@@ -330,7 +311,7 @@ def repetition_stats(
         top_bg.getField("best_bg").alias("top_bg"),
         F.length(canon).cast("long").alias("canon_len"),
     ).select(
-        id_col,
+        "doc_id",
         "n_lines",
         F.round(
             (F.col("n_lines") - F.col("n_lines_d"))
@@ -359,22 +340,17 @@ def repetition_stats(
     )
     return measured.withColumn(
         "repetitive",
-        (F.col("dup_line_frac") > max_dup_line_frac)
-        | (F.col("dup_line_char_frac") > max_dup_line_char_frac)
-        | (F.col("dup_para_frac") > max_dup_para_frac)
-        | (F.col("top_bigram_frac") > max_top_bigram_frac),
+        (F.col("dup_line_frac") > MAX_DUP_LINE_FRAC)
+        | (F.col("dup_line_char_frac") > MAX_DUP_LINE_CHAR_FRAC)
+        | (F.col("dup_para_frac") > MAX_DUP_PARA_FRAC)
+        | (F.col("top_bigram_frac") > MAX_TOP_BIGRAM_FRAC),
     )
 
 
-def bigram_lm_scores(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = LM_ALPHA,
-) -> DataFrame:
+def bigram_lm_scores(df: DataFrame) -> DataFrame:
     """Corpus-self-trained bigram LM score per document (CCNet-style
     quality signal without an external model): mean over the document's
-    bigrams of ln((c(w1,w2) + alpha) / (c(w1) + alpha * V)), where counts
+    bigrams of ln((c(w1,w2) + LM_ALPHA) / (c(w1) + LM_ALPHA * V)), where counts
     come from the corpus itself and V is the unigram vocabulary size.
     Natural-sounding documents score high; repetitive or out-of-
     distribution token streams score low. Returns (id, n_bigrams,
@@ -384,7 +360,7 @@ def bigram_lm_scores(
     The count tables are vocabulary-sized (tiny next to the corpus), and
     V reaches the join as a broadcast 1-row aggregate — no driver
     collect anywhere."""
-    toks = df.select(F.col(id_col).alias("id"), _tokens(text_col).alias("toks"))
+    toks = df.select(F.col("doc_id").alias("id"), _tokens("text").alias("toks"))
     bigrams = _explode_bigrams(toks)
 
     unigrams = (
@@ -402,8 +378,8 @@ def bigram_lm_scores(
         .select(
             "id",
             F.log(
-                (F.col("c2") + F.lit(alpha))
-                / (F.col("c1") + F.lit(alpha) * F.col("v"))
+                (F.col("c2") + F.lit(LM_ALPHA))
+                / (F.col("c1") + F.lit(LM_ALPHA) * F.col("v"))
             ).alias("lp"),
         )
         .groupBy("id")
@@ -416,7 +392,7 @@ def bigram_lm_scores(
         toks.select("id")
         .join(scored, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
             "lm_logprob",
         )
@@ -442,9 +418,7 @@ def _explode_bigrams(toks: DataFrame) -> DataFrame:
     ).select("id", "bg.w1", "bg.w2")
 
 
-def fit_bigram_lm(
-    ref: DataFrame, text_col: str = "text"
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def fit_bigram_lm(ref: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Fit the bigram LM on a REFERENCE corpus: (unigram counts, bigram
     counts, 1-row vocab size). This is the CCNet deployment shape —
     train the LM on a trusted corpus (their Wikipedia KenLM), then score
@@ -454,7 +428,7 @@ def fit_bigram_lm(
     ingest batch scores by joining the stored counts — the fit never
     re-runs per batch (the same persisted-model contract as the DSIR
     fit/apply split)."""
-    toks = ref.select(F.lit(0).alias("id"), _tokens(text_col).alias("toks"))
+    toks = ref.select(F.lit(0).alias("id"), _tokens("text").alias("toks"))
     unigrams = (
         toks.select(F.explode("toks").alias("w1"))
         .groupBy("w1")
@@ -472,9 +446,6 @@ def fit_bigram_lm(
 def bigram_lm_apply(
     df: DataFrame,
     model: tuple[DataFrame, DataFrame, DataFrame],
-    alpha: float = LM_ALPHA,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Score a TARGET corpus against a fitted bigram LM — the cross-
     corpus cousin of ``bigram_lm_scores``: same smoothed transition
@@ -490,7 +461,7 @@ def bigram_lm_apply(
     eligible); the corpus side streams through them without a shuffle of
     its own beyond the per-doc aggregation."""
     unigrams, bigram_counts, vocab = model
-    toks = df.select(F.col(id_col).alias("id"), _tokens(text_col).alias("toks"))
+    toks = df.select(F.col("doc_id").alias("id"), _tokens("text").alias("toks"))
     scored = (
         _explode_bigrams(toks)
         .join(bigram_counts, ["w1", "w2"], "left")
@@ -500,8 +471,8 @@ def bigram_lm_apply(
             "id",
             F.col("c1").isNull().cast("long").alias("oov"),
             F.log(
-                (F.coalesce(F.col("c2"), F.lit(0)) + F.lit(alpha))
-                / (F.coalesce(F.col("c1"), F.lit(0)) + F.lit(alpha) * F.col("v"))
+                (F.coalesce(F.col("c2"), F.lit(0)) + F.lit(LM_ALPHA))
+                / (F.coalesce(F.col("c1"), F.lit(0)) + F.lit(LM_ALPHA) * F.col("v"))
             ).alias("lp"),
         )
         .groupBy("id")
@@ -515,7 +486,7 @@ def bigram_lm_apply(
         toks.select("id")
         .join(scored, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
             F.coalesce("oov_words", F.lit(0)).alias("oov_words"),
             "lm_logprob",

@@ -110,13 +110,7 @@ def distributed_ntile(
 PPL_BUCKETS = ["head", "middle", "tail"]
 
 
-def perplexity_buckets(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    num_partitions: int | None = None,
-) -> DataFrame:
+def perplexity_buckets(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """CCNet head/middle/tail corpus bucketing: score every document with
     the corpus-self-trained bigram LM (quality.bigram_lm_scores), rank
     within each language by score (natural-sounding first: lm_logprob
@@ -134,8 +128,8 @@ def perplexity_buckets(
     """
     from .quality import bigram_lm_scores
 
-    scores = bigram_lm_scores(df, text_col=text_col, id_col=id_col).join(
-        df.select(F.col(id_col), F.col(lang_col)), id_col
+    scores = bigram_lm_scores(df).join(
+        df.select(F.col("doc_id"), F.col("lang")), "doc_id"
     )
     scored = scores.where(F.col("lm_logprob").isNotNull())
     unscored = scores.where(F.col("lm_logprob").isNull())
@@ -143,8 +137,8 @@ def perplexity_buckets(
     ranked = distributed_ntile(
         scored,
         n=3,
-        group_col=lang_col,
-        order_cols=[F.desc("lm_logprob"), F.asc(id_col)],
+        group_col="lang",
+        order_cols=[F.desc("lm_logprob"), F.asc("doc_id")],
         rank_col="lang_rank",
         bucket_col="_b",
         num_partitions=num_partitions,
@@ -152,14 +146,14 @@ def perplexity_buckets(
     bucket = F.element_at(
         F.array(*[F.lit(b) for b in PPL_BUCKETS]), F.col("_b") + 1
     )
-    cols = [id_col, lang_col, "lm_logprob", "lang_rank", "bucket"]
+    cols = ["doc_id", "lang", "lm_logprob", "lang_rank", "bucket"]
     return (
         ranked.withColumn("bucket", bucket)
         .select(*cols)
         .unionByName(
             unscored.select(
-                id_col,
-                lang_col,
+                "doc_id",
+                "lang",
                 "lm_logprob",
                 F.lit(None).cast("long").alias("lang_rank"),
                 F.lit("unscored").alias("bucket"),
@@ -168,13 +162,7 @@ def perplexity_buckets(
     )
 
 
-def top_fraction_gate(
-    df: DataFrame,
-    frac: float,
-    score_col: str,
-    id_col: str = "doc_id",
-    num_partitions: int | None = None,
-) -> DataFrame:
+def top_fraction_gate(df: DataFrame, frac: float, score_col: str) -> DataFrame:
     """DCLM/FineWeb-Edu-style top-fraction selection: keep exactly the
     best ``ceil(frac * n)`` documents by ``score_col`` (ties broken by
     id, so the cut is total and reproducible). This is the calibration
@@ -190,22 +178,21 @@ def top_fraction_gate(
     (never-drop: the rejected tail is data for the audit, not deleted).
     """
     ranked = distributed_ntile(
-        df.select(F.col(id_col), F.col(score_col)).withColumn(
+        df.select(F.col("doc_id"), F.col(score_col)).withColumn(
             "_g", F.lit(0)
         ),
         n=2,
         group_col="_g",
-        order_cols=[F.desc(score_col), F.asc(id_col)],
+        order_cols=[F.desc(score_col), F.asc("doc_id")],
         rank_col="rank",
         bucket_col="_b",
-        num_partitions=num_partitions,
     )
     total = df.agg(F.count(F.lit(1)).alias("n_total"))
     cut = F.ceil(F.lit(float(frac)) * F.col("n_total")).cast("long")
     return (
         ranked.crossJoin(F.broadcast(total))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col(score_col),
             F.col("rank"),
             (F.col("rank") <= cut).alias("kept"),

@@ -79,16 +79,11 @@ def _applicable_groups(marked: DataFrame, agent: str) -> DataFrame:
     ).distinct()
 
 
-def robots_disallow_rules(
-    robots: DataFrame,
-    host_col: str = "host",
-    robots_col: str = "robots_txt",
-    agent: str = "*",
-) -> DataFrame:
+def robots_disallow_rules(robots: DataFrame, agent: str = "*") -> DataFrame:
     """(host, prefix) for every non-empty Disallow directive in the
     user-agent group(s) governing ``agent`` (see :func:`_grouped_lines`
     for the line/group fold and the CRLF contract)."""
-    marked = _grouped_lines(robots, host_col, robots_col)
+    marked = _grouped_lines(robots, "host", "robots_txt")
     applicable = _applicable_groups(marked, agent)
     prefix = F.trim(F.substring(F.col("lt"), 10, 1 << 20))
     dis = (
@@ -101,14 +96,12 @@ def robots_disallow_rules(
     return dis.join(applicable, ["host", "gid"]).select("host", "prefix").distinct()
 
 
-def robots_filter(
-    urls: DataFrame, rules: DataFrame, url_col: str = "url"
-) -> DataFrame:
+def robots_filter(urls: DataFrame, rules: DataFrame) -> DataFrame:
     """urls + (host, path, allowed): allowed=false when any of the host's
     disallow prefixes is a prefix of the url path. Anti-join shape with
     the rules side broadcast (hosts x rules is vocabulary-sized)."""
-    u = urls.withColumn("host", url_host(url_col)).withColumn(
-        "path", url_path(url_col)
+    u = urls.withColumn("host", url_host("url")).withColumn(
+        "path", url_path("url")
     )
     hit = (
         u.select("host", "path")
@@ -126,12 +119,7 @@ def robots_filter(
     )
 
 
-def robots_crawl_delays(
-    robots: DataFrame,
-    host_col: str = "host",
-    robots_col: str = "robots_txt",
-    agent: str = "*",
-) -> DataFrame:
+def robots_crawl_delays(robots: DataFrame, agent: str = "*") -> DataFrame:
     """(host, crawl_delay_s) for every host whose governing group(s)
     declare a ``Crawl-delay``; hosts without one are simply absent (the
     frontier's left join supplies the default — operators/frontier.py).
@@ -146,7 +134,7 @@ def robots_crawl_delays(
     schedule built from it is the densest the host has sanctioned under
     any applicable reading, and a tighter-than-necessary delay is always
     polite. Vocabulary-sized all the way down (hosts x robots lines)."""
-    marked = _grouped_lines(robots, host_col, robots_col)
+    marked = _grouped_lines(robots, "host", "robots_txt")
     applicable = _applicable_groups(marked, agent)
     # 'crawl-delay:' is 12 chars -> value starts at 13 (1-based substring);
     # try_cast, not cast: ANSI mode must not let one 'Crawl-delay: soon'
@@ -165,11 +153,7 @@ def robots_crawl_delays(
     )
 
 
-def robots_sitemaps(
-    robots: DataFrame,
-    host_col: str = "host",
-    robots_col: str = "robots_txt",
-) -> DataFrame:
+def robots_sitemaps(robots: DataFrame) -> DataFrame:
     """(host, sitemap_url) for every ``Sitemap:`` directive.
 
     Sitemap is a GLOBAL directive (sitemaps.org protocol; RFC 9309 calls
@@ -183,8 +167,8 @@ def robots_sitemaps(
     Distinct per (host, url): robots.txt files routinely repeat the line
     per group."""
     lines = robots.select(
-        F.col(host_col).alias("host"),
-        F.explode(F.split(F.col(robots_col), "\r?\n")).alias("line"),
+        F.col("host"),
+        F.explode(F.split(F.col("robots_txt"), "\r?\n")).alias("line"),
     )
     lt = F.trim("line")
     # 'sitemap:' is 8 chars -> value starts at 9 (1-based substring)

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 SAMPLE_DENOM = 10_000
 
 
-def sample_bucket(key_col, salt: str = "sample") -> Column:
+def sample_bucket(key_col, salt: str) -> Column:
     """Deterministic bucket in [0, SAMPLE_DENOM) from the row key + salt.
     SQL twin: ('0x' || substr(md5(key || ':' || salt), 1, 8))::BIGINT % 10000.
     """
@@ -34,21 +34,19 @@ def sample_bucket(key_col, salt: str = "sample") -> Column:
 
 
 def stratified_sample(df: DataFrame, rates: dict[str, float],
-                      default_rate: float = 0.0, stratum_col: str = "lang",
-                      key_col: str = "doc_id", salt: str = "sample") -> DataFrame:
+                      default_rate: float = 0.0) -> DataFrame:
     """Per-stratum deterministic sampling: ``rates`` maps stratum values to
     keep fractions; unlisted strata keep ``default_rate``. One map-side
     CASE + filter — the per-language corpus mixing shape."""
     cutoff = F.lit(int(default_rate * SAMPLE_DENOM))
     for value, rate in sorted(rates.items()):
         cutoff = F.when(
-            F.col(stratum_col) == value, F.lit(int(rate * SAMPLE_DENOM))
+            F.col("lang") == value, F.lit(int(rate * SAMPLE_DENOM))
         ).otherwise(cutoff)
-    return df.where(sample_bucket(key_col, salt) < cutoff)
+    return df.where(sample_bucket("doc_id", "sample") < cutoff)
 
 
-def soft_sample(df: DataFrame, weight_col: str, key_col: str = "doc_id",
-                salt: str = "soft", out_col: str = "kept") -> DataFrame:
+def soft_sample(df: DataFrame, weight_col: str, out_col: str = "kept") -> DataFrame:
     """Quality-weighted (soft) sampling — the DCLM/FineWeb-Edu move of
     keeping a document with probability equal to its quality score
     instead of thresholding: a hard cutoff throws away every borderline
@@ -67,14 +65,13 @@ def soft_sample(df: DataFrame, weight_col: str, key_col: str = "doc_id",
         F.greatest(F.coalesce(F.col(weight_col), F.lit(0.0)), F.lit(0.0)),
         F.lit(1.0),
     )
-    b = sample_bucket(key_col, salt)
+    b = sample_bucket("doc_id", "soft")
     return df.withColumn("sample_bucket", b).withColumn(
         out_col, b < (w * SAMPLE_DENOM).cast("long")
     )
 
 
-def leakage_safe_split(df: DataFrame, group_col: str, eval_frac: float = 0.1,
-                       salt: str = "split", out_col: str = "split") -> DataFrame:
+def leakage_safe_split(df: DataFrame, group_col: str, eval_frac: float = 0.1) -> DataFrame:
     """Train/eval assignment at GROUP granularity: every row of a group
     (canonically, a host) lands in the same split, so near-duplicate pages
     from one site can never straddle the train/eval boundary (the
@@ -85,14 +82,13 @@ def leakage_safe_split(df: DataFrame, group_col: str, eval_frac: float = 0.1,
     train->eval, never reshuffles)."""
     cut = int(eval_frac * SAMPLE_DENOM)
     return df.withColumn(
-        out_col,
-        F.when(sample_bucket(group_col, salt) < cut, F.lit("eval"))
+        "split",
+        F.when(sample_bucket(group_col, "split") < cut, F.lit("eval"))
         .otherwise(F.lit("train")),
     )
 
 
-def cap_per_group(df: DataFrame, group_col: str, k: int,
-                  id_col: str = "doc_id", salt: str = "hostcap") -> DataFrame:
+def cap_per_group(df: DataFrame, group_col: str, k: int) -> DataFrame:
     """Deterministic per-group downsampling cap: keep at most ``k`` rows
     per group (the over-represented-host control every crawl mix needs —
     without it one mega-host dominates whatever it touches). Which rows
@@ -103,7 +99,7 @@ def cap_per_group(df: DataFrame, group_col: str, k: int,
     from pyspark.sql.window import Window
 
     w = Window.partitionBy(group_col).orderBy(
-        sample_bucket(id_col, salt), F.col(id_col)
+        sample_bucket("doc_id", "hostcap"), F.col("doc_id")
     )
     return df.withColumn("cap_rank", F.row_number().over(w)).withColumn(
         "kept", F.col("cap_rank") <= k

@@ -38,30 +38,23 @@ def shard_key(c, seed: str = "shard-seed-1") -> "F.Column":
 
 def shard_assignment(
     df: DataFrame,
-    id_col: str = "doc_id",
     n_shards: int = 16,
     seed: str = "shard-seed-1",
 ) -> DataFrame:
-    """(id_col, shard, pos): a seeded global shuffle into ``n_shards``
+    """(doc_id, shard, pos): a seeded global shuffle into ``n_shards``
     shards with a stable in-shard order. Ties in the 32-bit key break on
     id, so the full ordering is total and deterministic."""
-    key = shard_key(id_col, seed)
-    w = Window.partitionBy("shard").orderBy("key", id_col)
+    key = shard_key("doc_id", seed)
+    w = Window.partitionBy("shard").orderBy("key", "doc_id")
     return (
-        df.select(F.col(id_col), key.alias("key"))
+        df.select(F.col("doc_id"), key.alias("key"))
         .withColumn("shard", (F.col("key") % n_shards).cast("int"))
         .withColumn("pos", F.row_number().over(w) - 1)
-        .select(id_col, "shard", "pos")
+        .select("doc_id", "shard", "pos")
     )
 
 
-def shard_manifest(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_shards: int = 16,
-    seed: str = "shard-seed-1",
-) -> DataFrame:
+def shard_manifest(df: DataFrame, n_shards: int = 16) -> DataFrame:
     """The export manifest a training-data release ships next to its
     shards: per shard the doc count, byte total, and an ORDER-SENSITIVE
     content fingerprint (md5 over the in-shard-position-ordered document
@@ -76,11 +69,11 @@ def shard_manifest(
     ordered digest folds inside each group via array_sort over (pos, fp)
     structs (deterministic, no second sort exchange). SQL-replayable:
     md5(string_agg(fp, '' ORDER BY pos))."""
-    fp = F.md5(F.coalesce(F.col(text_col), F.lit("")))
-    nb = F.octet_length(F.coalesce(F.col(text_col), F.lit(""))).cast("long")
-    asg = shard_assignment(df, id_col=id_col, n_shards=n_shards, seed=seed)
+    fp = F.md5(F.coalesce(F.col("text"), F.lit("")))
+    nb = F.octet_length(F.coalesce(F.col("text"), F.lit(""))).cast("long")
+    asg = shard_assignment(df, n_shards=n_shards)
     rows = asg.join(
-        df.select(F.col(id_col), fp.alias("fp"), nb.alias("nb")), id_col
+        df.select(F.col("doc_id"), fp.alias("fp"), nb.alias("nb")), "doc_id"
     )
     ordered_fps = F.transform(
         F.array_sort(F.collect_list(F.struct("pos", "fp"))),

@@ -40,15 +40,13 @@ from ..functions.text import (
 from .textprofile import code_columns, script_columns
 
 
-def quality_signals(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def quality_signals(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """The fused signal projection: one row per input row (NULL text
     behaves as empty) carrying
     (id, n_tokens, n_ws_tokens, punct_ratio, stopword_ratio, quality,
     lang_pred, fp, n_chars, <script>_frac x5, dominant_script, n_lines,
     indent_lines, sym_ratio, kw_hits, is_code) — 19 signals, one scan."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     script = script_columns(text)
     code = code_columns(text)
     return df.select(

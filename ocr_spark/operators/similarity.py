@@ -35,35 +35,32 @@ def cosine_col(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10,
-                vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
+def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10) -> DataFrame:
     """Brute-force cosine top-k against a constant query vector.
 
     Plan shape: scan -> project(score) -> TakeOrderedAndProject (no shuffle
     of the full table; each partition computes local top-k, driver merges).
     """
     q = F.array(*[F.lit(float(v)) for v in query_vec])
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     scored = df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.round(cosine_col(emb, q), 4).alias("cosine"),
     )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
+    return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
 
 
-def hyperplanes(n_planes: int = N_PLANES, dim: int = 64,
-                seed: int = PLANE_SEED) -> list[list[float]]:
+def hyperplanes(n_planes: int = N_PLANES, dim: int = 64) -> list[list[float]]:
     """The seeded pseudo-random hyperplanes as plain Python floats — shared
     by the Spark expression and the SQL oracle (which inlines them as
     literals), so both engines bucket identically."""
     import numpy as np
 
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(PLANE_SEED)
     return [[float(x) for x in row] for row in rng.standard_normal((n_planes, dim))]
 
 
 def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.95,
-                            vec_col: str = "embedding", id_col: str = "vec_id",
                             n_planes: int = N_PLANES, dim: int = 64,
                             max_bucket: int = 256,
                             multiprobe: bool = True) -> DataFrame:
@@ -85,7 +82,7 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.95,
       for the deduplicated candidate set.
     """
     planes = hyperplanes(n_planes, dim)
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     bucket = sum(
         (
             F.when(
@@ -97,7 +94,7 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.95,
         F.lit(0),
     ).cast("long")
 
-    keyed = df.select(F.col(id_col).alias("id"), bucket.alias("bucket"))
+    keyed = df.select(F.col("vec_id").alias("id"), bucket.alias("bucket"))
     ok = (
         keyed.groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -125,8 +122,8 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.95,
         .select(F.col("p.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    va = df.select(F.col(id_col).alias("id_a"), emb.alias("va"))
-    vb = df.select(F.col(id_col).alias("id_b"), emb.alias("vb"))
+    va = df.select(F.col("vec_id").alias("id_a"), emb.alias("va"))
+    vb = df.select(F.col("vec_id").alias("id_b"), emb.alias("vb"))
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
@@ -153,8 +150,7 @@ def _assign_cells(corpus: DataFrame, cents: DataFrame, id_col: str) -> DataFrame
     )
 
 
-def ivf_centroids(df: DataFrame, n_centroids: int = 16, n_iters: int = 1,
-                  vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
+def ivf_centroids(df: DataFrame, n_centroids: int = 16, n_iters: int = 1) -> DataFrame:
     """Coarse quantizer for IVF: seeded with the first ``n_centroids``
     corpus vectors, then refined with ``n_iters`` fixed Lloyd iterations —
     assign every vector to its best-cosine cell, recompute each cell's
@@ -168,13 +164,13 @@ def ivf_centroids(df: DataFrame, n_centroids: int = 16, n_iters: int = 1,
     summation-order differences in the distributed mean cannot flip a
     downstream argmax. Cells that attract no vectors die (standard Lloyd).
     """
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    cents = df.where(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("cent_id"), emb.alias("cv")
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    cents = df.where(F.col("vec_id") < n_centroids).select(
+        F.col("vec_id").alias("cent_id"), emb.alias("cv")
     )
-    corpus = df.select(F.col(id_col), emb.alias("v"))
+    corpus = df.select(F.col("vec_id"), emb.alias("v"))
     for _ in range(n_iters):
-        assigned = _assign_cells(corpus, cents, id_col)
+        assigned = _assign_cells(corpus, cents, "vec_id")
         by_dim = assigned.select(
             "cent_id", F.posexplode("v").alias("pos", "x")
         ).groupBy("cent_id", "pos").agg(F.round(F.avg("x"), 6).alias("m"))
@@ -187,7 +183,6 @@ def ivf_centroids(df: DataFrame, n_centroids: int = 16, n_iters: int = 1,
 
 
 def ivf_topk(df: DataFrame, k: int = 10, n_centroids: int = 16, n_probe: int = 4,
-             vec_col: str = "embedding", id_col: str = "vec_id",
              query_id: int = 0, n_iters: int = 1) -> DataFrame:
     """IVF-style approximate nearest neighbour: the scale path for ANN.
 
@@ -201,11 +196,11 @@ def ivf_topk(df: DataFrame, k: int = 10, n_centroids: int = 16, n_probe: int = 4
 
     Output: (vec_id, cosine, rank) — top-``k`` within the probed cells.
     """
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    cents = ivf_centroids(df, n_centroids, n_iters, vec_col, id_col)
-    qv = df.where(F.col(id_col) == query_id).select(emb.alias("qv"))
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    cents = ivf_centroids(df, n_centroids, n_iters)
+    qv = df.where(F.col("vec_id") == query_id).select(emb.alias("qv"))
 
-    assigned = _assign_cells(df.select(F.col(id_col), emb.alias("v")), cents, id_col)
+    assigned = _assign_cells(df.select(F.col("vec_id"), emb.alias("v")), cents, "vec_id")
 
     # probe selection: the query's n_probe nearest cells (16-row job)
     probes = (
@@ -220,19 +215,17 @@ def ivf_topk(df: DataFrame, k: int = 10, n_centroids: int = 16, n_probe: int = 4
     cand = assigned.join(F.broadcast(probes), "cent_id").join(F.broadcast(qv))
     top = (
         cand.select(
-            F.col(id_col), F.round(cosine_col(F.col("v"), F.col("qv")), 4).alias("cosine")
+            F.col("vec_id"), F.round(cosine_col(F.col("v"), F.col("qv")), 4).alias("cosine")
         )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
-    w = Window.orderBy(F.desc("cosine"), F.asc(id_col))  # k rows: trivial window
+    w = Window.orderBy(F.desc("cosine"), F.asc("vec_id"))  # k rows: trivial window
     return top.withColumn("rank", F.row_number().over(w))
 
 
 def semantic_dedup(df: DataFrame, threshold: float = 0.95,
-                   n_centroids: int = 16, n_iters: int = 1,
-                   vec_col: str = "embedding", id_col: str = "vec_id",
-                   max_cluster: int = 1024) -> DataFrame:
+                   n_centroids: int = 16, max_cluster: int = 1024) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster embeddings with the deterministic seeded-Lloyd
     quantizer (:func:`ivf_centroids` — pure function of the data, so the
@@ -242,7 +235,7 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.95,
     ("keep first" — deterministic, order-free).
 
     Output: one row per input vector (never-drop contract) —
-    (id_col, cent_id, is_dup, dup_of) with dup_of NULL for keepers.
+    (vec_id, cent_id, is_dup, dup_of) with dup_of NULL for keepers.
 
     Scale shape: the quadratic step is per-cluster, so cost is
     sum(c_i^2) — production sizes ``n_centroids ~ N / target_cluster`` so
@@ -253,10 +246,10 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.95,
     contributing k^2 pairs on one partition. The pair join shuffles
     (cent_id, id, vector) once; centroids move only by broadcast.
     """
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    cents = ivf_centroids(df, n_centroids, n_iters, vec_col, id_col)
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    cents = ivf_centroids(df, n_centroids, 1)
     assigned = _assign_cells(
-        df.select(F.col(id_col), emb.alias("v")), cents, id_col
+        df.select(F.col("vec_id"), emb.alias("v")), cents, "vec_id"
     )
 
     ok = (
@@ -267,10 +260,10 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.95,
     )
     in_play = assigned.join(F.broadcast(ok), "cent_id", "left_semi")
     a = in_play.select(
-        "cent_id", F.col(id_col).alias("id_a"), F.col("v").alias("va")
+        "cent_id", F.col("vec_id").alias("id_a"), F.col("v").alias("va")
     )
     b = in_play.select(
-        "cent_id", F.col(id_col).alias("id_b"), F.col("v").alias("vb")
+        "cent_id", F.col("vec_id").alias("id_b"), F.col("v").alias("vb")
     )
     dup_of = (
         a.join(b, "cent_id")
@@ -280,9 +273,9 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.95,
         .agg(F.min("id_a").alias("dup_of"))
     )
     return (
-        assigned.join(dup_of, assigned[id_col] == dup_of["id_b"], "left")
+        assigned.join(dup_of, assigned["vec_id"] == dup_of["id_b"], "left")
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.col("cent_id"),
             F.col("dup_of").isNotNull().alias("is_dup"),
             F.col("dup_of"),
@@ -290,8 +283,7 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.95,
     )
 
 
-def ivf_assign(df: DataFrame, cents: DataFrame,
-               vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
+def ivf_assign(df: DataFrame, cents: DataFrame) -> DataFrame:
     """Assign vectors to FROZEN centroids — the incremental ANN
     maintenance path: at ingest scale the quantizer is fitted once on the
     committed corpus, persisted (iceberg-lite — the centroid table is
@@ -301,7 +293,7 @@ def ivf_assign(df: DataFrame, cents: DataFrame,
     gates on persisted fingerprints, near-dup on persisted signatures
     (operators/incremental.py), ANN on persisted centroids.
 
-    Returns (id_col, cent_id, cosine): the argmax-cosine cell per vector
+    Returns (vec_id, cent_id, cosine): the argmax-cosine cell per vector
     (ties -> lowest cent_id) and the winning cosine rounded to 4 dp — the
     drift signal (falling per-cell mean cosine says the frozen quantizer
     no longer fits the incoming distribution).
@@ -310,10 +302,10 @@ def ivf_assign(df: DataFrame, cents: DataFrame,
     ``max_by`` aggregation — the new batch shuffles once on its id, the
     committed corpus is never read. Exact DuckDB twin
     (``__spark_entry__._ivf_assign_oracle``)."""
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    scored = df.select(F.col(id_col), emb.alias("v")).join(F.broadcast(cents))
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    scored = df.select(F.col("vec_id"), emb.alias("v")).join(F.broadcast(cents))
     cos = cosine_col(F.col("v"), F.col("cv"))
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("vec_id").agg(
         F.max_by(
             F.col("cent_id"), F.struct(cos.alias("c"), (-F.col("cent_id")).alias("t"))
         ).alias("cent_id"),
@@ -322,9 +314,7 @@ def ivf_assign(df: DataFrame, cents: DataFrame,
 
 
 def cluster_balanced_sample(df: DataFrame, per_cluster: int = 8,
-                            n_centroids: int = 16, n_iters: int = 1,
-                            vec_col: str = "embedding", id_col: str = "vec_id",
-                            seed: str = "cbal-1") -> DataFrame:
+                            n_centroids: int = 16) -> DataFrame:
     """Cluster-balanced corpus selection (the DCLM/DataComp curation shape:
     embed -> cluster -> sample per cluster so no dense region of embedding
     space dominates the training mix): assign every vector to its
@@ -334,7 +324,7 @@ def cluster_balanced_sample(df: DataFrame, per_cluster: int = 8,
     reproducible and engine-independent.
 
     Output: one row per input vector (never-drop contract) —
-    (id_col, cent_id, pick_key, pick_rank, picked); ``picked`` marks the
+    (vec_id, cent_id, pick_key, pick_rank, picked); ``picked`` marks the
     selected subset, everything else stays auditable.
 
     Scale shape: clustering is the broadcast-centroid + ``max_by``
@@ -349,53 +339,50 @@ def cluster_balanced_sample(df: DataFrame, per_cluster: int = 8,
     Reference analog: the rule table selecting a bounded subset of
     candidate regions per layout class (one_key_process.py:1146-1165) —
     here the "layout class" is a learned embedding cell."""
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    cents = ivf_centroids(df, n_centroids, n_iters, vec_col, id_col)
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    cents = ivf_centroids(df, n_centroids, 1)
     assigned = _assign_cells(
-        df.select(F.col(id_col), emb.alias("v")), cents, id_col
+        df.select(F.col("vec_id"), emb.alias("v")), cents, "vec_id"
     )
     key = F.pmod(
         F.conv(
             F.substring(
-                F.md5(F.concat(F.lit(seed + ":"), F.col(id_col).cast("string"))),
+                F.md5(F.concat(F.lit("cbal-1:"), F.col("vec_id").cast("string"))),
                 1, 8,
             ),
             16, 10,
         ).cast("long"),
         F.lit(1_000_000),
     )
-    w = Window.partitionBy("cent_id").orderBy(F.asc("pick_key"), F.asc(id_col))
+    w = Window.partitionBy("cent_id").orderBy(F.asc("pick_key"), F.asc("vec_id"))
     return (
-        assigned.select(id_col, "cent_id", key.alias("pick_key"))
+        assigned.select("vec_id", "cent_id", key.alias("pick_key"))
         .withColumn("pick_rank", F.row_number().over(w).cast("long"))
         .withColumn("picked", F.col("pick_rank") <= per_cluster)
     )
 
 
-def knn_brute_force(df: DataFrame, queries: DataFrame, k: int = 5,
-                    vec_col: str = "embedding", id_col: str = "vec_id",
-                    qid_col: str = "q_id", qvec_col: str = "q_vec") -> DataFrame:
+def knn_brute_force(df: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Batch k-NN: broadcast the (small) query set, cross-score, window top-k
     per query. The canonical 'scoring a probe set against the corpus' shape."""
     from pyspark.sql.window import Window
 
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    qemb = F.transform(F.col(qvec_col), lambda x: x.cast("double"))
-    scored = df.select(F.col(id_col), emb.alias("v")).crossJoin(
-        F.broadcast(queries.select(F.col(qid_col), qemb.alias("qv")))
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    qemb = F.transform(F.col("q_vec"), lambda x: x.cast("double"))
+    scored = df.select(F.col("vec_id"), emb.alias("v")).crossJoin(
+        F.broadcast(queries.select(F.col("q_id"), qemb.alias("qv")))
     ).select(
-        qid_col, id_col, F.round(cosine_col(F.col("v"), F.col("qv")), 4).alias("cosine")
+        "q_id", "vec_id", F.round(cosine_col(F.col("v"), F.col("qv")), 4).alias("cosine")
     )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cosine"), F.asc(id_col))
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(qid_col, id_col, "cosine", "rank")
+        .select("q_id", "vec_id", "cosine", "rank")
     )
 
 
-def sq_bounds(df: DataFrame, dim: int = 64,
-              vec_col: str = "embedding") -> tuple[list[float], list[float]]:
+def sq_bounds(df: DataFrame, dim: int = 64) -> tuple[list[float], list[float]]:
     """Per-dimension (min, scale) for int8 scalar quantization, computed in
     ONE pass as 2*dim agg expressions (partial aggregation map-side — no
     explode, no per-dim shuffle; the result is a single driver row of
@@ -403,8 +390,8 @@ def sq_bounds(df: DataFrame, dim: int = 64,
     collect in ``ivf_centroids``). ``scale = (max-min)/255`` per dim; a
     constant dimension gets scale 0 and quantizes to code 0."""
     row = df.agg(
-        *[F.min(F.col(vec_col)[i].cast("double")).alias(f"mn{i}") for i in range(dim)],
-        *[F.max(F.col(vec_col)[i].cast("double")).alias(f"mx{i}") for i in range(dim)],
+        *[F.min(F.col("embedding")[i].cast("double")).alias(f"mn{i}") for i in range(dim)],
+        *[F.max(F.col("embedding")[i].cast("double")).alias(f"mx{i}") for i in range(dim)],
     ).collect()[0]
     mins = [float(row[f"mn{i}"]) for i in range(dim)]
     scales = [(float(row[f"mx{i}"]) - mins[i]) / 255.0 for i in range(dim)]
@@ -412,8 +399,7 @@ def sq_bounds(df: DataFrame, dim: int = 64,
 
 
 def sq_scores(df: DataFrame, query_vec: list[float],
-              mins: list[float], scales: list[float],
-              vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
+              mins: list[float], scales: list[float]) -> DataFrame:
     """Asymmetric scalar-quantized scoring: each corpus vector is encoded
     to int8 codes against broadcast per-dim (min, scale) bounds, then
     scored against the FULL-precision query via the reconstruction
@@ -430,7 +416,7 @@ def sq_scores(df: DataFrame, query_vec: list[float],
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     mn = F.array(*[F.lit(float(v)) for v in mins])
     sc = F.array(*[F.lit(float(v)) for v in scales])
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     # code_d = clamp(round((x_d - mn_d) / sc_d), 0, 255); recon = mn_d + code_d*sc_d
     code = F.zip_with(
         emb,
@@ -452,37 +438,36 @@ def sq_scores(df: DataFrame, query_vec: list[float],
         lambda c, i: F.element_at(mn, i + 1) + c * F.element_at(sc, i + 1),
     )
     return df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.round(_dot(q, recon), 4).alias("score_sq"),
     )
 
 
-def sq_topk(df: DataFrame, query_vec: list[float], k: int = 10, dim: int = 64,
-            vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
+def sq_topk(df: DataFrame, query_vec: list[float], k: int = 10, dim: int = 64) -> DataFrame:
     """Int8 scalar-quantized top-k with exact-rescore disclosure: rank by
     the quantized score (TakeOrderedAndProject — partition-local top-k,
     driver merge, no full-table shuffle), then join the k winners back to
     exact cosine so the output carries the quantization error per hit.
     Two passes over the corpus (bounds, then score) — both full scans with
     map-side-only work, the shape that survives 1000 executors."""
-    mins, scales = sq_bounds(df, dim=dim, vec_col=vec_col)
+    mins, scales = sq_bounds(df, dim=dim)
     approx = (
-        sq_scores(df, query_vec, mins, scales, vec_col=vec_col, id_col=id_col)
-        .orderBy(F.desc("score_sq"), F.asc(id_col))
+        sq_scores(df, query_vec, mins, scales)
+        .orderBy(F.desc("score_sq"), F.asc("vec_id"))
         .limit(k)
     )
     q = F.array(*[F.lit(float(v)) for v in query_vec])
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     exact = df.select(
-        F.col(id_col), F.round(cosine_col(emb, q), 4).alias("cosine_exact")
+        F.col("vec_id"), F.round(cosine_col(emb, q), 4).alias("cosine_exact")
     )
     # rescore join: the k winners are the BROADCAST side of an inner join
     # (every winner exists in the corpus), so the corpus streams map-side —
     # a left join here would force the big side to be the build side
     return (
-        exact.join(F.broadcast(approx), id_col, "inner")
-        .select(id_col, "score_sq", "cosine_exact")
-        .orderBy(F.desc("score_sq"), F.asc(id_col))
+        exact.join(F.broadcast(approx), "vec_id", "inner")
+        .select("vec_id", "score_sq", "cosine_exact")
+        .orderBy(F.desc("score_sq"), F.asc("vec_id"))
     )
 
 
@@ -490,24 +475,21 @@ RP_K = 8            # projected dimensionality for the shipped query
 RP_SEED = 1337      # seed for the shared ±1 projection matrix
 
 
-def rp_matrix(k: int = RP_K, dim: int = 64,
-              seed: int = RP_SEED) -> list[list[float]]:
+def rp_matrix(k: int = RP_K) -> list[list[float]]:
     """The seeded ±1 signed-projection matrix (Achlioptas' database-
     friendly Johnson-Lindenstrauss construction) as plain Python floats —
     shared by the Spark expression and the SQL oracle (inlined as
     literals), so both engines project identically."""
     import numpy as np
 
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(RP_SEED)
     return [
         [1.0 if x >= 0 else -1.0 for x in row]
-        for row in rng.standard_normal((k, dim))
+        for row in rng.standard_normal((k, 64))
     ]
 
 
-def random_projection(df: DataFrame, k: int = RP_K, dim: int = 64,
-                      vec_col: str = "embedding", id_col: str = "vec_id",
-                      seed: int = RP_SEED) -> DataFrame:
+def random_projection(df: DataFrame, k: int = RP_K) -> DataFrame:
     """Johnson-Lindenstrauss dimensionality reduction: project each
     embedding to ``k`` dims via the seeded ±1 matrix, scaled by
     1/sqrt(k) so pairwise distances are preserved in expectation — the
@@ -525,8 +507,8 @@ def random_projection(df: DataFrame, k: int = RP_K, dim: int = 64,
     term (the embedding_neardup float discipline)."""
     import math
 
-    signs = rp_matrix(k, dim, seed)
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    signs = rp_matrix(k)
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     scale = F.lit(math.sqrt(float(k)))
     projs = F.array(
         *[
@@ -536,8 +518,8 @@ def random_projection(df: DataFrame, k: int = RP_K, dim: int = 64,
             for row in signs
         ]
     )
-    return df.select(F.col(id_col), F.posexplode(projs).alias("j", "p")).select(
-        id_col, F.col("j").cast("long").alias("j"), "p"
+    return df.select(F.col("vec_id"), F.posexplode(projs).alias("j", "p")).select(
+        "vec_id", F.col("j").cast("long").alias("j"), "p"
     )
 
 
@@ -585,58 +567,51 @@ def _pq_assign(subs: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def pq_codebooks(df: DataFrame, m: int = PQ_M, k: int = PQ_K,
-                 n_iters: int = 1, dim: int = 64,
-                 vec_col: str = "embedding",
-                 id_col: str = "vec_id") -> DataFrame:
+def pq_codebooks(df: DataFrame) -> DataFrame:
     """Product-quantization codebooks (Jégou et al.): an independent
-    ``k``-entry codebook per contiguous subspace, fit with the engine's
-    deterministic seeded Lloyd (seeds = the first ``k`` vectors'
-    subvectors, ``n_iters`` refinements, 6-dp means) — a pure,
+    ``PQ_K``-entry codebook per contiguous subspace, fit with the engine's
+    deterministic seeded Lloyd (seeds = the first ``PQ_K`` vectors'
+    subvectors, one refinement, 6-dp means) — a pure,
     SQL-replayable function of the data like ``ivf_centroids``, but all
-    ``m`` subspaces train in ONE frame keyed by the sub column (no
+    ``PQ_M`` subspaces train in ONE frame keyed by the sub column (no
     per-subspace jobs). Returns (sub, cent_id, cv)."""
-    sub_dim = dim // m
-    subs = _pq_subvectors(df, m, sub_dim, vec_col, id_col)
-    cents = subs.where(F.col(id_col) < k).select(
-        "sub", F.col(id_col).alias("cent_id"), F.col("sv").alias("cv")
+    sub_dim = 64 // PQ_M
+    subs = _pq_subvectors(df, PQ_M, sub_dim, "embedding", "vec_id")
+    cents = subs.where(F.col("vec_id") < PQ_K).select(
+        "sub", F.col("vec_id").alias("cent_id"), F.col("sv").alias("cv")
     )
-    for _ in range(n_iters):
-        assigned = _pq_assign(subs, cents, id_col)
-        by_dim = assigned.select(
-            "sub", "cent_id", F.posexplode("sv").alias("pos", "x")
-        ).groupBy("sub", "cent_id", "pos").agg(
-            F.round(F.avg("x"), 6).alias("mv")
-        )
-        cents = by_dim.groupBy("sub", "cent_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mv"))),
-                lambda s: s["mv"],
-            ).alias("cv")
-        )
-    return cents
+    assigned = _pq_assign(subs, cents, "vec_id")
+    by_dim = assigned.select(
+        "sub", "cent_id", F.posexplode("sv").alias("pos", "x")
+    ).groupBy("sub", "cent_id", "pos").agg(
+        F.round(F.avg("x"), 6).alias("mv")
+    )
+    return by_dim.groupBy("sub", "cent_id").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "mv"))),
+            lambda s: s["mv"],
+        ).alias("cv")
+    )
 
 
-def pq_topk(df: DataFrame, k: int = 10, m: int = PQ_M, n_codes: int = PQ_K,
-            dim: int = 64, vec_col: str = "embedding",
-            id_col: str = "vec_id", query_id: int = 0) -> DataFrame:
+def pq_topk(df: DataFrame, k: int = 10) -> DataFrame:
     """PQ asymmetric-distance top-k — the memory-scale ANN path: each
-    vector is stored as ``m`` small codes (8 bytes here vs 256 for the
+    vector is stored as ``PQ_M`` small codes (8 bytes here vs 256 for the
     raw floats), and query scoring is a LOOKUP-TABLE sum, never a
-    full-vector dot product. The query builds an (m x n_codes) distance
+    full-vector dot product. The query builds a (PQ_M x PQ_K) distance
     table against the codebooks (tiny, broadcast); each vector's
     approximate distance is the sum of its codes' table entries — at
-    100 TB the scan reads codes, not vectors, and the per-row work is m
+    100 TB the scan reads codes, not vectors, and the per-row work is PQ_M
     additions. Returns (id, adist, rank), ascending approximate squared
     L2, 4-dp, id tie-break. Compose with an exact rescore of the top
     candidates (the sq_topk pattern) when recall matters."""
-    sub_dim = dim // m
-    cents = pq_codebooks(df, m, n_codes, 1, dim, vec_col, id_col)
-    subs = _pq_subvectors(df, m, sub_dim, vec_col, id_col)
-    codes = _pq_assign(subs, cents, id_col).select(
-        id_col, "sub", F.col("cent_id").alias("code")
+    sub_dim = 64 // PQ_M
+    cents = pq_codebooks(df)
+    subs = _pq_subvectors(df, PQ_M, sub_dim, "embedding", "vec_id")
+    codes = _pq_assign(subs, cents, "vec_id").select(
+        "vec_id", "sub", F.col("cent_id").alias("code")
     )
-    qsubs = subs.where(F.col(id_col) == query_id).select(
+    qsubs = subs.where(F.col("vec_id") == 0).select(
         "sub", F.col("sv").alias("qv")
     )
     dtab = cents.join(F.broadcast(qsubs), "sub").select(
@@ -647,9 +622,9 @@ def pq_topk(df: DataFrame, k: int = 10, m: int = PQ_M, n_codes: int = PQ_K,
             F.broadcast(dtab),
             (codes.sub == dtab.sub) & (codes.code == dtab.cent_id),
         )
-        .groupBy(id_col)
+        .groupBy("vec_id")
         .agg(F.round(F.sum("d"), 4).alias("adist"))
     )
-    top = approx.orderBy(F.asc("adist"), F.asc(id_col)).limit(k)
-    w = Window.orderBy(F.asc("adist"), F.asc(id_col))  # k rows: trivial
+    top = approx.orderBy(F.asc("adist"), F.asc("vec_id")).limit(k)
+    w = Window.orderBy(F.asc("adist"), F.asc("vec_id"))  # k rows: trivial
     return top.withColumn("rank", F.row_number().over(w))

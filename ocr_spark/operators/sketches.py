@@ -179,10 +179,9 @@ _DD_EST_SQL = (
 )
 
 
-def dd_quantiles(
-    regs: DataFrame, qs: tuple[float, ...] = (0.5, 0.9, 0.99)
-) -> DataFrame:
-    """Quantile estimates from sketch state: (grp, q, est_value, n).
+def dd_quantiles(regs: DataFrame) -> DataFrame:
+    """Quantile estimates from sketch state: (grp, q, est_value, n), for
+    q in 0.5, 0.9 and 0.99.
 
     For each q the estimate is the midpoint of the first bucket whose
     cumulative count reaches ceil(q*n) (the inverted-CDF rank). The
@@ -194,7 +193,7 @@ def dd_quantiles(
         "cum",
         F.sum("cnt").over(Window.partitionBy("grp").orderBy("bucket")),
     )
-    qlits = F.explode(F.array(*[F.lit(float(q)) for q in qs])).alias("q")
+    qlits = F.explode(F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99))).alias("q")
     ranked = (
         cum.join(totals, "grp")
         .select("grp", "bucket", "cum", "n", qlits)
@@ -210,14 +209,9 @@ def dd_quantiles(
     )
 
 
-def dd_sketch_quantiles(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    qs: tuple[float, ...] = (0.5, 0.9, 0.99),
-) -> DataFrame:
+def dd_sketch_quantiles(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """One-shot: histogram + quantile estimates in a single plan."""
-    return dd_quantiles(dd_buckets(df, group_col, value_col), qs)
+    return dd_quantiles(dd_buckets(df, group_col, value_col))
 
 
 def hll_accuracy(

@@ -5,7 +5,7 @@ family — Lee et al. 2021's ExactSubstr, re-expressed for Spark).
 A true distributed suffix array is not a DataFrame-shaped computation; the
 standard scalable equivalent is gram-level exact matching: any duplicated
 substring of >= w words contains a duplicated w-gram, so marking every
-word covered by a w-gram that occurs in >= min_df documents finds exactly
+word covered by a w-gram that occurs in >= 2 documents finds exactly
 the union of all cross-document duplicated spans of length >= w (plus a
 < w-word fringe at span edges — the usual gram-granularity approximation,
 disclosed).
@@ -18,7 +18,7 @@ granularity):
             index ``sequence`` builds (pos, 60-bit md5 gram hash) structs,
             one ``explode``. No Python, no shuffle.
 2. dup set: groupBy gram hash (ONE shuffle, partial agg; carries only the
-            8-byte hash), keep df >= min_df. This drops the overwhelming
+            8-byte hash), keep df >= 2. This drops the overwhelming
             majority of grams (unique text) before anything else runs.
 3. hits:    semi-join grams against the dup set on the hash — AQE turns
             this into a broadcast join whenever the dup set is small
@@ -56,33 +56,27 @@ def _gram_hash60(g) -> F.Column:
     return F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
 
 
-def dup_gram_positions(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = SPAN_W,
-    min_df: int = 2,
-) -> DataFrame:
-    """(id, pos) of every w-gram occurring in >= min_df distinct docs.
+def dup_gram_positions(df: DataFrame) -> DataFrame:
+    """(id, pos) of every ``SPAN_W``-gram occurring in >= 2 distinct docs.
 
     pos is the 0-based word offset of the gram's first word in the
     normalized tokenization (lowercase, whitespace collapsed — NULL text
     coalesced to '' so no document is silently dropped)."""
-    norm = normalized_for_fingerprint(F.coalesce(F.col(text_col), F.lit("")))
+    norm = normalized_for_fingerprint(F.coalesce(F.col("text"), F.lit("")))
     toks = F.split(norm, " ")
     base = (
-        df.select(F.col(id_col).alias("id"), toks.alias("toks"))
-        .where(F.size("toks") >= w)
+        df.select(F.col("doc_id").alias("id"), toks.alias("toks"))
+        .where(F.size("toks") >= SPAN_W)
     )
     grams = base.select(
         "id",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.size("toks") - w),
+                F.sequence(F.lit(0), F.size("toks") - SPAN_W),
                 lambda i: F.struct(
                     i.cast("long").alias("pos"),
                     _gram_hash60(
-                        F.concat_ws(" ", F.slice(F.col("toks"), i + 1, w))
+                        F.concat_ws(" ", F.slice(F.col("toks"), i + 1, SPAN_W))
                     ).alias("gh"),
                 ),
             )
@@ -91,30 +85,24 @@ def dup_gram_positions(
     dup = (
         grams.groupBy("gh")
         .agg(F.count_distinct("id").alias("gdf"))
-        .where(F.col("gdf") >= min_df)
+        .where(F.col("gdf") >= 2)
         .select("gh")
     )
     return grams.join(dup, "gh", "left_semi").select("id", "pos")
 
 
-def dup_spans(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = SPAN_W,
-    min_df: int = 2,
-) -> DataFrame:
+def dup_spans(df: DataFrame) -> DataFrame:
     """Maximal duplicated word spans per document:
     (id, start_pos, end_pos, span_words, n_dup_grams), word offsets
-    0-based inclusive. Gram intervals [pos, pos+w-1] are merged when they
-    overlap or touch (gap <= w), so spans are disjoint per document."""
-    hits = dup_gram_positions(df, text_col, id_col, w, min_df)
+    0-based inclusive. Gram intervals [pos, pos+SPAN_W-1] are merged when
+    they overlap or touch (gap <= SPAN_W), so spans are disjoint per document."""
+    hits = dup_gram_positions(df)
     win = Window.partitionBy("id").orderBy("pos")
     prev = F.lag("pos").over(win)
     flagged = hits.select(
         "id",
         "pos",
-        F.when(prev.isNull() | (F.col("pos") - prev > w), 1)
+        F.when(prev.isNull() | (F.col("pos") - prev > SPAN_W), 1)
         .otherwise(0)
         .alias("new_seg"),
     )
@@ -127,7 +115,7 @@ def dup_spans(
         .groupBy("id", "seg")
         .agg(
             F.min("pos").alias("start_pos"),
-            (F.max("pos") + w - 1).alias("end_pos"),
+            (F.max("pos") + SPAN_W - 1).alias("end_pos"),
             F.count(F.lit(1)).alias("n_dup_grams"),
         )
         .select(
@@ -169,13 +157,7 @@ def _doc_grams(df: DataFrame, text_col: str, id_col: str,
     return base, grams
 
 
-def remove_dup_spans(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = SPAN_W,
-    min_df: int = 2,
-) -> DataFrame:
+def remove_dup_spans(df: DataFrame) -> DataFrame:
     """The ExactSubstr REWRITE: excise every cross-document duplicated
     span from all documents except the span's owner, keeping exactly one
     copy in the corpus. Returns (doc_id, clean_text, n_words,
@@ -194,15 +176,15 @@ def remove_dup_spans(
 
     At 100 TB the extra cost over :func:`dup_span_stats` is one wider
     aggregate value in the gram groupBy (the min-id owner) and the
-    per-doc span array (bounded by words/w per doc)."""
-    base, grams = _doc_grams(df, text_col, id_col, w)
+    per-doc span array (bounded by words/SPAN_W per doc)."""
+    base, grams = _doc_grams(df, "text", "doc_id", SPAN_W)
     owners = (
         grams.groupBy("gh")
         .agg(
             F.count_distinct("id").alias("gdf"),
             F.min("id").alias("owner"),
         )
-        .where(F.col("gdf") >= min_df)
+        .where(F.col("gdf") >= 2)
         .select("gh", "owner")
     )
     hits = (
@@ -211,7 +193,7 @@ def remove_dup_spans(
         .select("id", "pos")
         .distinct()
     )
-    return _excise_hits(base, hits, w, id_col)
+    return _excise_hits(base, hits, SPAN_W, "doc_id")
 
 
 def _excise_hits(base: DataFrame, hits: DataFrame, w: int,
@@ -266,31 +248,25 @@ def _excise_hits(base: DataFrame, hits: DataFrame, w: int,
     )
 
 
-def dup_span_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = SPAN_W,
-    min_df: int = 2,
-) -> DataFrame:
+def dup_span_stats(df: DataFrame) -> DataFrame:
     """Per-document duplicated-content profile — EVERY input document gets
     a row (the family's never-drop contract): (doc_id, n_words,
     n_dup_spans, dup_words, dup_frac). dup_words is exact (merged
     intervals, no double counting)."""
-    spans = dup_spans(df, text_col, id_col, w, min_df)
+    spans = dup_spans(df)
     per_doc = spans.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_dup_spans"),
         F.sum("span_words").alias("dup_words"),
     )
-    norm = normalized_for_fingerprint(F.coalesce(F.col(text_col), F.lit("")))
+    norm = normalized_for_fingerprint(F.coalesce(F.col("text"), F.lit("")))
     n_words = F.when(F.length(norm) == 0, F.lit(0)).otherwise(
         F.size(F.split(norm, " "))
     ).cast("long")
-    base = df.select(F.col(id_col).alias("id"), n_words.alias("n_words"))
+    base = df.select(F.col("doc_id").alias("id"), n_words.alias("n_words"))
     return (
         base.join(per_doc, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "n_words",
             F.coalesce("n_dup_spans", F.lit(0)).cast("long").alias("n_dup_spans"),
             F.coalesce("dup_words", F.lit(0)).cast("long").alias("dup_words"),
@@ -308,9 +284,6 @@ def dup_span_stats(
 def decontaminate_spans(
     df: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str = "text",
     w: int = SPAN_W,
 ) -> DataFrame:
     """SURGICAL benchmark decontamination: excise from every corpus
@@ -331,9 +304,9 @@ def decontaminate_spans(
     a map-side semi-join — the corpus shuffles only for the per-document
     span union, same as remove_dup_spans. Exact DuckDB twin
     (``__spark_entry__._decontam_spans_oracle``)."""
-    base, grams = _doc_grams(df, text_col, id_col, w)
+    base, grams = _doc_grams(df, "text", "doc_id", w)
     bench_norm = normalized_for_fingerprint(
-        F.coalesce(F.col(bench_text_col), F.lit(""))
+        F.coalesce(F.col("text"), F.lit(""))
     )
     btoks = F.split(bench_norm, " ")
     bench_gh = (
@@ -356,4 +329,4 @@ def decontaminate_spans(
         .select("id", "pos")
         .distinct()
     )
-    return _excise_hits(base, hits, w, id_col)
+    return _excise_hits(base, hits, w, "doc_id")

@@ -92,17 +92,15 @@ def script_columns(text: Column) -> dict[str, Column]:
     return out
 
 
-def script_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def script_stats(df: DataFrame) -> DataFrame:
     """(id, n_chars, latin_frac, cyrillic_frac, cjk_frac, arabic_frac,
     greek_frac, dominant_script): per-document script mix over
     non-whitespace characters. ``dominant_script`` is the max-count range
     (SCRIPT_ORDER tie-break) or 'other' when no listed script occurs.
     One output row per input row; NULL text counts as empty."""
-    cols = script_columns(F.coalesce(F.col(text_col), F.lit("")))
+    cols = script_columns(F.coalesce(F.col("text"), F.lit("")))
     return df.select(
-        F.col(id_col), *[c.alias(name) for name, c in cols.items()]
+        F.col("doc_id"), *[c.alias(name) for name, c in cols.items()]
     )
 
 
@@ -138,34 +136,27 @@ def code_columns(text: Column) -> dict[str, Column]:
     }
 
 
-def code_detect(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def code_detect(df: DataFrame) -> DataFrame:
     """(id, n_chars, n_lines, indent_lines, sym_ratio, kw_hits, is_code):
     code-likeness verdict. is_code when >= MIN_CODE_KEYWORDS distinct
     code keywords co-occur with an indented line, OR symbol density alone
     exceeds MIN_CODE_SYM_RATIO (dense config/JSON with no keywords).
     Keyword matching is token-exact over TOKEN_PATTERN (lowercased), so
     'classic' never hits 'class' — the blockword_filter idiom."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     n_chars = F.length(F.regexp_replace(text, WHITESPACE_CLS, "")).cast("long")
     cols = code_columns(text)
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chars.alias("n_chars"),
         *[cols[k].alias(k) for k in
           ("n_lines", "indent_lines", "sym_ratio", "kw_hits", "is_code")],
     )
 
 
-def vocab_growth(
-    df: DataFrame,
-    checkpoints: list[int] | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def vocab_growth(df: DataFrame, checkpoints: list[int] | None = None) -> DataFrame:
     """Vocabulary growth curve (Heaps'-law checkpoints): for each
-    checkpoint prefix of the corpus in ``id_col`` order, the cumulative
+    checkpoint prefix of the corpus in ``doc_id`` order, the cumulative
     token count and distinct-type count, plus the type/token ratio.
     Columns: n_docs, n_tokens, vocab_size, type_token_ratio (4 dp).
 
@@ -190,10 +181,10 @@ def vocab_growth(
     if checkpoints is None:
         checkpoints = [1 << k for k in range(4, 20)]
     toks = df.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         F.explode(
             F.regexp_extract_all(
-                F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+                F.lower(F.coalesce(F.col("text"), F.lit(""))),
                 F.lit(TOKEN_PATTERN),
                 F.lit(0),
             )

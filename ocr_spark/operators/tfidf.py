@@ -29,32 +29,30 @@ from pyspark.sql.window import Window
 from ..functions.text import TOKEN_PATTERN
 
 
-def tfidf_top_terms(df: DataFrame, k: int = 3, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """(doc_id, term, tfidf, rank): top-``k`` terms per document."""
     n_docs = df.count()  # single aggregate probe; the only driver scalar
     toks = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TOKEN_PATTERN), F.lit(0))
+            F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_PATTERN), F.lit(0))
         ).alias("term"),
     )
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     idf = F.log((F.lit(float(n_docs)) + 1.0) / (F.col("df") + 1.0))
     scored = tf.join(dfreq, "term").select(
-        id_col, "term", F.round(F.col("tf") * idf, 4).alias("tfidf")
+        "doc_id", "term", F.round(F.col("tf") * idf, 4).alias("tfidf")
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(id_col, "term", "tfidf", "rank")
+        .select("doc_id", "term", "tfidf", "rank")
     )
 
 
-def more_like_this(df: DataFrame, query_id, k: int = 10,
-                   text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def more_like_this(df: DataFrame, query_id, k: int = 10) -> DataFrame:
     """Sparse tf-idf "more like this": the ``k`` documents most cosine-
     similar to ``query_id``'s tf-idf vector. Columns: doc_id, cosine
     (4dp), rank.
@@ -70,10 +68,10 @@ def more_like_this(df: DataFrame, query_id, k: int = 10,
     + its norm ride along as broadcast one-sided frames."""
     n_docs = df.count()  # single aggregate probe (tfidf_top_terms discipline)
     toks = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.explode(
             F.regexp_extract_all(
-                F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+                F.lower(F.coalesce(F.col("text"), F.lit(""))),
                 F.lit(TOKEN_PATTERN), F.lit(0),
             )
         ).alias("term"),
@@ -104,9 +102,9 @@ def more_like_this(df: DataFrame, query_id, k: int = 10,
     scored = (
         dots.join(norms, "id")
         .join(F.broadcast(qnorm))
-        .select(F.col("id").alias(id_col), cosine.alias("cosine"))
+        .select(F.col("id").alias("doc_id"), cosine.alias("cosine"))
     )
-    w = Window.orderBy(F.desc("cosine"), F.asc(id_col))
+    w = Window.orderBy(F.desc("cosine"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)

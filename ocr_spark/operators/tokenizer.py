@@ -67,15 +67,14 @@ def _encode_cols(word_map: dict[str, str],
     return full, n_words, n_tokens, n_unk, n_bytes
 
 
-def bpe_encode(df: DataFrame, word_map: dict[str, str],
-               text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def bpe_encode(df: DataFrame, word_map: dict[str, str]) -> DataFrame:
     """Apply a fitted encoder corpus-wide. Returns one row per input row
     (NULL text = empty): (id, n_words, n_tokens, n_unk, tokens_fp) with
     tokens_fp = md5 over the space-joined token stream — the compact
     value-identity the oracle compares."""
-    full, n_words, n_tokens, n_unk, _ = _encode_cols(word_map, text_col)
+    full, n_words, n_tokens, n_unk, _ = _encode_cols(word_map, "text")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_words.alias("n_words"),
         n_tokens.alias("n_tokens"),
         n_unk.alias("n_unk"),
@@ -83,9 +82,7 @@ def bpe_encode(df: DataFrame, word_map: dict[str, str],
     )
 
 
-def fertility_by_lang(df: DataFrame, word_map: dict[str, str],
-                      text_col: str = "text",
-                      lang_col: str = "lang") -> DataFrame:
+def fertility_by_lang(df: DataFrame, word_map: dict[str, str]) -> DataFrame:
     """Per-language tokenizer audit of a fitted encoder — the table a
     multilingual curation pipeline reads before committing to a tokenizer
     (mT5/XLM-R-style fertility comparison): for each language the doc
@@ -99,9 +96,9 @@ def fertility_by_lang(df: DataFrame, word_map: dict[str, str],
     rows = languages, not documents). Ratios divide exact BIGINT sums and
     round to 4 dp, so the DuckDB twin replays them bit-for-bit. Zero-word
     or zero-token groups report 0.0 ratios (never a NULL/NaN division)."""
-    full, n_words, n_tokens, n_unk, n_bytes = _encode_cols(word_map, text_col)
+    full, n_words, n_tokens, n_unk, n_bytes = _encode_cols(word_map, "text")
     per = df.select(
-        F.col(lang_col).alias("lang"),
+        F.col("lang"),
         n_words.alias("n_words"),
         n_tokens.alias("n_tokens"),
         n_unk.alias("n_unk"),

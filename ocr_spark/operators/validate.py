@@ -79,19 +79,18 @@ def validation_report(validated: DataFrame) -> DataFrame:
 DOC_CHECKS = ("chk_text_required", "chk_len_range", "chk_len_identity", "chk_lang")
 
 
-def failing_check_topk(validated: DataFrame, check_cols: tuple[str, ...] = DOC_CHECKS,
-                       k: int = 10) -> DataFrame:
+def failing_check_topk(validated: DataFrame) -> DataFrame:
     """Top-k failing checks (the reference's top-10 error-field report, O2,
     data_validator.py:676-687): one full-table aggregate producing a single
     wide row of failure counts, then a driver-cheap unpivot — no shuffle of
     row-level data beyond the partial-aggregated counts."""
-    aggs = [F.sum((~F.col(c)).cast("long")).alias(c) for c in check_cols]
+    aggs = [F.sum((~F.col(c)).cast("long")).alias(c) for c in DOC_CHECKS]
     wide = validated.agg(*aggs)
-    pairs = ", ".join(f"'{c}', {c}" for c in check_cols)
+    pairs = ", ".join(f"'{c}', {c}" for c in DOC_CHECKS)
     unpivoted = wide.selectExpr(
-        f"stack({len(check_cols)}, {pairs}) as (check_name, n_failed)"
+        f"stack({len(DOC_CHECKS)}, {pairs}) as (check_name, n_failed)"
     )
-    return unpivoted.orderBy(F.desc("n_failed"), F.asc("check_name")).limit(k)
+    return unpivoted.orderBy(F.desc("n_failed"), F.asc("check_name")).limit(10)
 
 
 # V2 warning-range bands (data_validator.py:204-213 classifies values into

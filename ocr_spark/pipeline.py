@@ -20,9 +20,11 @@ batch_folder_process.py segment loop, SURVEY §3.2):
   buckets, each committed as its own snapshot — the segment granularity at
   which a crash loses at most one chunk of work. The append is the chunk's
   only parse job.
-- Partitioning: each chunk goes through ``extract_pages``' default "auto"
-  policy — the salted host shuffle runs only when the chunk's scan cannot
-  fill the task slots; a well-split input is parsed where it lies.
+- Partitioning: ``extract_pages``' "auto" policy, decided once per run on
+  ``pages`` — the salted host shuffle runs only when the pages' scan cannot
+  fill the task slots; a well-split input is parsed where it lies. (A
+  resumed chunk's input also lists the committed table's files behind the
+  anti-join; they hold no page to parse, so they must not count.)
 - Metrics (FIXTURES.md §4): per-partition docs parsed / failures /
   bytes in/out, read back from the four narrow columns of the files the
   chunk just committed — the 识别成功率-and-run-counters analog
@@ -40,7 +42,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.extract_op import extract_pages
+from .operators.extract_op import auto_repartition, extract_pages
 from .session import EXTRACTED_SCHEMA
 from .sources.iceberg_lite import IcebergLiteTable
 
@@ -82,14 +84,12 @@ def run_extract(
     num_partitions: int | None = None,
     resume: bool = True,
     fail_chunk_after: int | None = None,
-    partition_by: str | None = "content_kind",
-    stats_cols: tuple[str, ...] = ("url",),
 ) -> ExtractResult:
     """Run (or resume) the extraction batch over ``pages``.
 
-    Output snapshots are Hive-partitioned by ``partition_by`` (the stated
-    layout column — content kind splits the html/pdf/text branches) and
-    record per-entry min/max ``stats_cols`` in the manifest, so downstream
+    Output snapshots are Hive-partitioned by ``content_kind`` (the stated
+    layout column — it splits the html/pdf/text branches) and record
+    per-entry min/max ``url`` in the manifest, so downstream
     reads prune committed segments at the manifest level (S4).
 
     ``fail_chunk_after``: test hook — raise after committing that many chunks
@@ -107,6 +107,7 @@ def run_extract(
         committed = out_table.read(spark).select("url")
         todo = pages.join(committed, "url", "left_anti")
 
+    shuffle = auto_repartition(pages)
     chunk_col = F.pmod(F.xxhash64("url"), F.lit(chunks))
     left = dict(todo.groupBy(chunk_col).count().collect())
     for chunk in range(chunks):
@@ -115,12 +116,13 @@ def run_extract(
             res.chunks_skipped += 1
             continue
         extracted = extract_pages(todo.where(chunk_col == chunk),
-                                  num_partitions=num_partitions)
+                                  num_partitions=num_partitions,
+                                  repartition=shuffle)
         snap = out_table.append(
             extracted,
             properties={"run_id": run_id, "chunk": chunk, "rows": n},
-            partition_by=partition_by,
-            stats_cols=stats_cols,
+            partition_by="content_kind",
+            stats_cols=("url",),
         )
         written = out_table.read_added(spark, snap, EXTRACTED_SCHEMA)
         metrics_table.append(_partition_metrics(written, run_id, chunk, snap),

@@ -32,20 +32,15 @@ def url_host(col="url"):
 def salted_repartition(
     df: DataFrame,
     num_partitions: int,
-    url_col: str = "url",
     salt_buckets: int = 16,
 ) -> DataFrame:
     """Repartition by salt-hashed url host (deterministic skew-breaker)."""
-    salt = F.pmod(F.xxhash64(F.col(url_col)), F.lit(salt_buckets))
-    key = F.xxhash64(url_host(url_col), salt)
+    salt = F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
+    key = F.xxhash64(url_host("url"), salt)
     return df.repartition(num_partitions, key)
 
 
-def ranged_repartition(
-    df: DataFrame,
-    num_partitions: int,
-    url_col: str = "url",
-) -> DataFrame:
+def ranged_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
     """Repartition-by-range on (host, url) — the north_star's alternative
     pre-parse layout to the salted hash shuffle.
 
@@ -70,7 +65,7 @@ def ranged_repartition(
     matters (the resume/metrics contract), use ``salted_repartition``,
     whose hash key is a pure function of the row.
     """
-    return df.repartitionByRange(num_partitions, url_host(url_col), F.col(url_col))
+    return df.repartitionByRange(num_partitions, url_host("url"), F.col("url"))
 
 
 def write_bucketed(
@@ -79,7 +74,6 @@ def write_bucketed(
     path: str,
     bucket_cols: list[str],
     num_buckets: int = 16,
-    sort_cols: list[str] | None = None,
 ) -> None:
     """Persist ``df`` as a BUCKETED parquet table (external, at ``path``):
     rows are hash-clustered into ``num_buckets`` files per partition by
@@ -104,6 +98,6 @@ def write_bucketed(
     """
     writer = df.write.format("parquet").option("path", path)
     writer = writer.bucketBy(num_buckets, *bucket_cols)
-    writer.sortBy(*(sort_cols or bucket_cols)).mode(
+    writer.sortBy(*bucket_cols).mode(
         "overwrite"
     ).saveAsTable(table_name)

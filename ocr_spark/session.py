@@ -52,9 +52,9 @@ def get_spark(
 ) -> SparkSession:
     if master is None:
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
-    cores = len(os.sched_getaffinity(0))  # the cores this process may run on
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("OCR_SPARK_SHUFFLE_PARTITIONS", cores * 2))
+        # two per core this process may run on
+        shuffle_partitions = len(os.sched_getaffinity(0)) * 2
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)

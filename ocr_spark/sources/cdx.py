@@ -37,13 +37,13 @@ CDX_JSON_SCHEMA = (
 _LINE_RE = r"^(\S+) (\d{14}) (\{.*\})$"
 
 
-def parse_cdxj(lines: DataFrame, col: str = "value") -> DataFrame:
+def parse_cdxj(lines: DataFrame) -> DataFrame:
     """CDXJ lines -> (urlkey, ts, url, status, mime, digest, warc_path,
     warc_offset, warc_length, cdx_ok). ``ts`` is formatted
     'yyyy-MM-dd HH:mm:ss' (engine-portable string form). A line that
     fails the frame regex or whose JSON lacks url/filename is returned
     with cdx_ok=false and NULL capture fields."""
-    line = F.col(col)
+    line = F.col("value")
     surt = F.regexp_extract(line, _LINE_RE, 1)
     ts_raw = F.regexp_extract(line, _LINE_RE, 2)
     blob = F.regexp_extract(line, _LINE_RE, 3)

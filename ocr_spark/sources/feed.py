@@ -85,15 +85,12 @@ def _items(feeds: DataFrame, xml_col: str, block_re: str, dialect: str,
     )
 
 
-def parse_feed_items(
-    feeds: DataFrame, xml_col: str = "feed_xml",
-    carry_cols: tuple[str, ...] = ("host",),
-) -> DataFrame:
+def parse_feed_items(feeds: DataFrame) -> DataFrame:
     """Feed documents -> (carry..., dialect, link, title, item_ts, guid,
     feed_ok), one row per RSS ``<item>`` plus one per Atom ``<entry>``.
     A document carrying both dialects (rare but legal after aggregator
     concatenation) contributes rows from both passes."""
-    carry = list(carry_cols)
-    rss = _items(feeds, xml_col, _ITEM_RE, "rss", carry)
-    atom = _items(feeds, xml_col, _ENTRY_RE, "atom", carry)
+    carry = ["host"]
+    rss = _items(feeds, "feed_xml", _ITEM_RE, "rss", carry)
+    atom = _items(feeds, "feed_xml", _ENTRY_RE, "atom", carry)
     return rss.unionByName(atom)

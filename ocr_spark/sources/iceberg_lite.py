@@ -317,8 +317,7 @@ class IcebergLiteTable:
             df = df.unionByName(p, allowMissingColumns=True)
         return df
 
-    def read_at(self, spark: SparkSession, sequence: int,
-                schema: str | None = None) -> DataFrame | None:
+    def read_at(self, spark: SparkSession, sequence: int) -> DataFrame | None:
         """Time travel: DataFrame over the data visible at snapshot
         ``sequence`` (Iceberg's VERSION AS OF). Snapshots are immutable —
         an old sequence reads identically forever, regardless of appends,
@@ -326,7 +325,7 @@ class IcebergLiteTable:
         for snap in self.snapshots():
             if snap["sequence"] == sequence:
                 entries = self._entries_of(snap)
-                return self._read_entries(spark, entries, schema) if entries else None
+                return self._read_entries(spark, entries, None) if entries else None
         raise ValueError(f"no snapshot with sequence {sequence}")
 
     def read_added(self, spark: SparkSession, snapshot_id: str,
@@ -371,7 +370,6 @@ class IcebergLiteTable:
         return total
 
     def compact(self, spark: SparkSession, target_partitions: int | None = None,
-                schema: str | None = None,
                 partition_by: str | None = None,
                 stats_cols: tuple[str, ...] = (),
                 target_file_mb: int | None = None) -> str | None:
@@ -396,7 +394,7 @@ class IcebergLiteTable:
             target_partitions = max(
                 1, -(-self.data_bytes() // (target_file_mb << 20))
             )
-        df = self.read(spark, schema)
+        df = self.read(spark)
         if df is None:
             return None
         return self.overwrite(
@@ -408,11 +406,9 @@ class IcebergLiteTable:
 
     def merge_into(self, spark: SparkSession, source: DataFrame,
                    key_cols: tuple[str, ...] | list[str],
-                   schema: str | None = None,
                    when_matched: str = "update",
                    partition_by: str | None = None,
-                   stats_cols: tuple[str, ...] = (),
-                   properties: dict | None = None) -> str:
+                   stats_cols: tuple[str, ...] = ()) -> str:
         """Iceberg-style MERGE INTO with copy-on-write at FILE granularity:
         ``when_matched='update'`` upserts (matched target rows replaced by
         the source row, unmatched source rows inserted);
@@ -444,8 +440,8 @@ class IcebergLiteTable:
         if not self.exists():
             if when_matched == "delete":
                 raise ValueError("merge_into(delete) on a table with no snapshot")
-            return self.append(source, properties=properties,
-                               partition_by=partition_by, stats_cols=stats_cols)
+            return self.append(source, partition_by=partition_by,
+                               stats_cols=stats_cols)
 
         # -- manifest pruning: which entries MIGHT hold a matching key? ----
         k0 = key_cols[0]
@@ -474,18 +470,7 @@ class IcebergLiteTable:
         out_dir = os.path.join(self._data_dir, snapshot_id)
         src_keys = source.select(*key_cols).dropDuplicates(key_cols)
         if candidates:
-            by_base: dict[str, list[str]] = {}
-            for e in candidates:
-                by_base.setdefault(e.get("base", e["dir"]), []).append(e["dir"])
-            parts = []
-            for base, dirs in sorted(by_base.items()):
-                reader = spark.read.option("basePath", base)
-                if schema:
-                    reader = reader.schema(schema)
-                parts.append(reader.parquet(*sorted(dirs)))
-            target = parts[0]
-            for p in parts[1:]:
-                target = target.unionByName(p, allowMissingColumns=True)
+            target = self._read_entries(spark, candidates, None)
             survivors = target.join(src_keys, key_cols, "left_anti")
         else:
             survivors = None
@@ -513,7 +498,6 @@ class IcebergLiteTable:
             "key_cols": key_cols,
             "entries_rewritten": len(candidates),
             "entries_untouched": len(untouched),
-            **(properties or {}),
         }
         return self._commit(untouched + new_entries, snapshot_id, props)
 

@@ -70,30 +70,22 @@ def _parse_blocks(df: DataFrame, xml_col: str, block_re: str,
     )
 
 
-def parse_sitemap_entries(
-    sitemaps: DataFrame, xml_col: str = "sitemap_xml",
-    carry_cols: tuple[str, ...] = ("host",),
-) -> DataFrame:
+def parse_sitemap_entries(sitemaps: DataFrame) -> DataFrame:
     """Sitemap documents -> (carry..., entry_type, loc, lastmod,
     changefreq, priority, sitemap_ok), one row per ``<url>`` block plus
     one per ``<sitemapindex>`` member (``entry_type='sitemap'``).
     ``lastmod`` stays the declared string (W3C datetime is a family of
     formats; callers cast at the comparison site). A block without
     ``<loc>`` yields sitemap_ok=false with NULL fields."""
-    carry = list(carry_cols)
-    urls = _parse_blocks(sitemaps, xml_col, _URL_BLOCK_RE, "url", carry)
+    carry = ["host"]
+    urls = _parse_blocks(sitemaps, "sitemap_xml", _URL_BLOCK_RE, "url", carry)
     nested = _parse_blocks(
-        sitemaps, xml_col, _SITEMAP_BLOCK_RE, "sitemap", carry
+        sitemaps, "sitemap_xml", _SITEMAP_BLOCK_RE, "sitemap", carry
     )
     return urls.unionByName(nested)
 
 
-def recrawl_plan(
-    entries: DataFrame,
-    captures: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "capture_date",
-) -> DataFrame:
+def recrawl_plan(entries: DataFrame, captures: DataFrame) -> DataFrame:
     """Parsed ``<url>`` entries x committed captures -> (url, lastmod,
     priority, reason) where reason is ``'new'`` (no capture exists) or
     ``'stale'`` (declared lastmod is strictly after the newest capture).
@@ -103,8 +95,8 @@ def recrawl_plan(
     max), then one equi-join against the entry list — at 10^12 captures
     both sides shuffle on url once; with a small capture table AQE takes
     the broadcast path instead."""
-    latest = captures.groupBy(F.col(url_col).alias("url")).agg(
-        F.max(ts_col).alias("last_capture")
+    latest = captures.groupBy(F.col("url")).agg(
+        F.max("capture_date").alias("last_capture")
     )
     urls = entries.where(F.col("sitemap_ok") & (F.col("entry_type") == "url"))
     joined = urls.join(latest, urls.loc == latest.url, "left")

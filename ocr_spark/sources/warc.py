@@ -97,8 +97,8 @@ def parse_warc_segment(data: bytes) -> list[dict]:
     return records
 
 
-def warc_pages(segments: DataFrame, data_col: str = "data") -> DataFrame:
-    """(segment rows with a binary ``data_col``) -> input_hint-shaped pages
+def warc_pages(segments: DataFrame) -> DataFrame:
+    """(segment rows with a binary ``data`` column) -> input_hint-shaped pages
     (url, warc_ts, html, text=NULL, lang=NULL). One task per partition of
     segments; records fan out 1:N inside the Arrow batch (no explode, no
     shuffle)."""
@@ -106,7 +106,7 @@ def warc_pages(segments: DataFrame, data_col: str = "data") -> DataFrame:
     def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for data in pdf[data_col]:
+            for data in pdf["data"]:
                 for rec in parse_warc_segment(bytes(data)):
                     rows.append(
                         {
@@ -124,11 +124,9 @@ def warc_pages(segments: DataFrame, data_col: str = "data") -> DataFrame:
     return segments.mapInPandas(split, schema=PAGES_SCHEMA)
 
 
-def warc_segments_from_documents(
-    spark: SparkSession, sf_dir: str, docs_per_segment: int = 25
-) -> DataFrame:
+def warc_segments_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic WARC segments synthesized from the shared documents
-    table: documents group into segments by doc_id // docs_per_segment
+    table: documents group into segments by doc_id // 25
     (sorted within), each document becoming one response record with
     url ``warc://docs.example.com/<doc_id>``, a doc_id-derived timestamp,
     and the utf-8 text bytes as payload. Pure function of the table, so
@@ -151,14 +149,13 @@ def warc_segments_from_documents(
         )
 
     return (
-        docs.select("doc_id", "text", (F.col("doc_id") / docs_per_segment).cast("long").alias("seg"))
+        docs.select("doc_id", "text", (F.col("doc_id") / 25).cast("long").alias("seg"))
         .groupBy("seg")
         .applyInPandas(build, schema="segment_id long, data binary")
     )
 
 
-def wet_records(df: DataFrame, url_col: str = "url", ts_col: str = "warc_ts",
-                text_col: str = "text") -> DataFrame:
+def wet_records(df: DataFrame) -> DataFrame:
     """Format extracted pages as WET-style conversion records — the
     text-derivative archive format Common Crawl publishes next to its WARCs
     (WARC/1.0 ``conversion`` records: target URI, date, block digest,
@@ -172,12 +169,12 @@ def wet_records(df: DataFrame, url_col: str = "url", ts_col: str = "warc_ts",
     rather than Common Crawl's sha1-base32 — same role, and portable to
     the SQL twin. NULL text formats as an empty conversion record, so no
     url ever disappears from the archive (the P7 never-drop contract)."""
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    ts = F.date_format(F.col(ts_col), "yyyy-MM-dd'T'HH:mm:ss'Z'")
+    txt = F.coalesce(F.col("text"), F.lit(""))
+    ts = F.date_format(F.col("warc_ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'")
     nbytes = F.octet_length(txt)
     rec = F.concat(
         F.lit("WARC/1.0\r\nWARC-Type: conversion\r\nWARC-Target-URI: "),
-        F.col(url_col),
+        F.col("url"),
         F.lit("\r\nWARC-Date: "), ts,
         F.lit("\r\nWARC-Block-Digest: sha256:"), F.lower(F.sha2(txt, 256)),
         F.lit("\r\nContent-Type: text/plain\r\nContent-Length: "),
@@ -185,7 +182,7 @@ def wet_records(df: DataFrame, url_col: str = "url", ts_col: str = "warc_ts",
         F.lit("\r\n\r\n"), txt, F.lit("\r\n\r\n"),
     )
     return df.select(
-        F.col(url_col).alias("url"),
+        F.col("url"),
         rec.alias("record"),
         nbytes.cast("long").alias("content_length"),
     )

@@ -1,24 +1,37 @@
-"""Every public top-level name in ``ocr_spark/`` has a caller outside tests.
+"""The engine's surface has callers: names, parameters and constants.
 
-A function that only tests reach is either a test oracle, which belongs in
-``tests/``, or dead code. This is a pure AST scan (no Spark): a name counts
-as referenced when an ``ast.Name``, an ``ast.Attribute`` or an import alias
-spells it anywhere in the engine, ``__spark_entry__.py``, ``bench.py`` or the
-non-test ``perfbench/`` modules, outside the definition's own body.
+Three pure AST scans (no Spark), over one parse of the caller files:
+
+- every public top-level def/class in ``ocr_spark/`` is spelt (``ast.Name``,
+  ``ast.Attribute`` or an import alias) by a top-level statement other than
+  its own definition in the engine, ``__spark_entry__.py``, ``bench.py`` or
+  the non-test ``perfbench/`` modules. A function that only tests reach is
+  either a test oracle, which belongs in ``tests/``, or dead code;
+- every defaulted parameter of a def or method in ``ocr_spark/`` is passed
+  by some call site in those files or in ``tests/``. A setting that no
+  caller sets is a constant;
+- every module-level assignment in ``ocr_spark/`` is read by some statement
+  other than its own assignment (its own module counts).
+
+The ``EXEMPT`` modules are left out of the first two scans only.
 """
 
 import ast
+import functools
 import pathlib
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PKG = ROOT / "ocr_spark"
 
-# Modules whose public names may have only test callers, each with its reason.
+# Modules whose public names and parameters may have only test callers, each
+# with its reason.
 EXEMPT = {
     "golden.py": "the serial oracle that the byte-identity tests compare against",
     "streaming/ingest.py": "the streaming dedup ingest, whose job wiring waits "
                            "on the url/doc_id input-key decision",
 }
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
 def _caller_files():
@@ -27,6 +40,21 @@ def _caller_files():
     files += [p for p in sorted((ROOT / "perfbench").glob("*.py"))
               if not p.name.startswith("test_")]
     return files
+
+
+@functools.lru_cache(maxsize=None)
+def _parsed():
+    """``(rel, module)`` for each caller file, then each ``tests/`` file."""
+    files = _caller_files() + sorted((ROOT / "tests").glob("*.py"))
+    return tuple((p.relative_to(ROOT).as_posix(), ast.parse(p.read_text()))
+                 for p in files)
+
+
+def _engine_modules():
+    """``(rel, module)`` of each checked ``ocr_spark/`` module."""
+    return [(rel, tree) for rel, tree in _parsed()
+            if rel.startswith("ocr_spark/")
+            and rel[len("ocr_spark/"):] not in EXEMPT]
 
 
 def _names(node):
@@ -46,21 +74,172 @@ def unreferenced_public_names():
     """``module:line name`` of each public top-level def/class in
     ``ocr_spark/`` that no top-level statement other than its own
     definition references."""
-    statements = []
-    for path in _caller_files():
-        statements += [(path, s) for s in ast.parse(path.read_text()).body]
+    statements = [(rel, s) for rel, tree in _parsed()
+                  if not rel.startswith("tests/") for s in tree.body]
     spelt = [(s, _names(s)) for _, s in statements]
     missing = []
-    for path, node in statements:
-        rel = path.relative_to(ROOT).as_posix()
+    for rel, node in statements:
         if (not rel.startswith("ocr_spark/") or rel[len("ocr_spark/"):] in EXEMPT
-                or not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
-                                         ast.ClassDef))
+                or not isinstance(node, (*_DEFS, ast.ClassDef))
                 or node.name.startswith("_")):
             continue
         if not any(node.name in names for s, names in spelt if s is not node):
             missing.append(f"{rel}:{node.lineno} {node.name}")
     return missing
+
+
+def unread_module_constants():
+    """``module:line name`` of each module-level assignment in ``ocr_spark/``
+    that no statement other than its own assignment reads (dunders such as
+    ``__all__`` are read by the import system)."""
+    statements = [s for rel, tree in _parsed()
+                  if not rel.startswith("tests/") for s in tree.body]
+    read = [(s, _names(s) - {n.id for n in ast.walk(s) if isinstance(n, ast.Name)
+                             and not isinstance(n.ctx, ast.Load)})
+            for s in statements]
+    missing = []
+    for rel, tree in _parsed():
+        if not rel.startswith("ocr_spark/"):
+            continue
+        for node in tree.body:
+            targets = (node.targets if isinstance(node, ast.Assign) else
+                       [node.target] if isinstance(node, ast.AnnAssign) else [])
+            for name in [n.id for t in targets for n in ast.walk(t)
+                         if isinstance(n, ast.Name)
+                         and not n.id.startswith("__")]:
+                if not any(name in names for s, names in read if s is not node):
+                    missing.append(f"{rel}:{node.lineno} {name}")
+    return missing
+
+
+def _functions(tree):
+    """``(def, enclosing class or None)`` for every def in ``tree``."""
+    out = []
+
+    def visit(node, cls):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(child, child)
+            elif isinstance(child, _DEFS):
+                out.append((child, cls))
+                visit(child, None)
+            else:
+                visit(child, cls)
+    visit(tree, None)
+    return out
+
+
+def _is_method(fn, cls):
+    return cls is not None and not any(
+        isinstance(d, ast.Name) and d.id == "staticmethod"
+        for d in fn.decorator_list)
+
+
+def _defaulted(fn, cls):
+    """``(name, positional index past self or None, default)`` of each
+    defaulted parameter of ``fn``."""
+    a = fn.args
+    positional = a.posonlyargs + a.args
+    offset = 1 if _is_method(fn, cls) else 0
+    first = len(positional) - len(a.defaults)
+    out = [(p.arg, i - offset, d)
+           for (i, p), d in zip(list(enumerate(positional))[first:], a.defaults)]
+    out += [(p.arg, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+            if d is not None]
+    return out
+
+
+def defaulted_parameters():
+    """``(module, line, function, parameter)`` of every defaulted parameter
+    of a def or method in ``ocr_spark/``, the exempt modules included."""
+    return [(rel, fn.lineno, fn.name, name)
+            for rel, tree in _parsed() if rel.startswith("ocr_spark/")
+            for fn, cls in _functions(tree)
+            for name, _, _ in _defaulted(fn, cls)]
+
+
+def unpassed_defaulted_parameters():
+    """``module:line function(parameter)`` of each defaulted parameter that
+    no call site passes, by keyword, by position (past ``self`` for
+    methods) or through ``*args``/``**kw``; ``ClassName(...)`` calls
+    ``__init__``. Callees resolve by name. A value forwarded from the
+    caller's own defaulted parameter with the same default counts only once
+    that parameter is itself passed, so the passed set is a fixpoint."""
+    checked = {rel for rel, _ in _engine_modules()}
+    by_callee = {}    # callee name -> [(param, positional index, id, default)]
+    passes = []       # (callee, keywords, positions, forwarded (id, default))
+    for rel, tree in _parsed():
+        for fn, cls in _functions(tree):
+            callee = cls.name if fn.name == "__init__" and cls else fn.name
+            for name, pos, default in _defaulted(fn, cls):
+                by_callee.setdefault(callee, []).append(
+                    (name, pos, (rel, fn.lineno, fn.name, name), ast.dump(default)))
+        _collect_passes(rel, tree, {}, None, passes)
+
+    passed = set()
+    grew = True
+    while grew:
+        grew = False
+        for callee, kw, positions, fwd in passes:
+            for name, pos, pid, default in by_callee.get(callee, ()):
+                if pid in passed or not (
+                        kw is ALL or name in kw
+                        or pos is not None and (positions is ALL or pos in positions)):
+                    continue
+                if fwd is None or fwd[0] in passed or fwd[1] != default:
+                    passed.add(pid)
+                    grew = True
+    return [f"{rel}:{line} {fn}({name})"
+            for entries in by_callee.values()
+            for name, _, (rel, line, fn, _), _ in entries
+            if rel in checked and (rel, line, fn, name) not in passed]
+
+
+ALL = object()   # a ``*args`` / ``**kw`` pass: every position / keyword
+
+
+def _collect_passes(rel, node, own, cls, passes):
+    """Append the passes of every call under ``node``. ``own`` maps each
+    local name to ``(id, default)`` of the enclosing defaulted parameter it
+    holds, or to None. A keyword or position whose value is such a name is
+    its own pass, tagged with what it forwards."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, ast.ClassDef):
+            _collect_passes(rel, child, own, child, passes)
+            continue
+        if isinstance(child, _DEFS):
+            a = child.args
+            inner = {**own, **{p.arg: None for p in a.posonlyargs + a.args + a.kwonlyargs}}
+            inner.update((name, ((rel, child.lineno, child.name, name), ast.dump(d)))
+                         for name, _, d in _defaulted(child, cls))
+            _collect_passes(rel, child, inner, None, passes)
+            continue
+        f = getattr(child, "func", None)
+        callee = getattr(f, "id", None) or getattr(f, "attr", None)
+        if isinstance(child, ast.Call) and callee:
+            kw = ALL if any(k.arg is None for k in child.keywords) else set()
+            positions = set()
+            for k in child.keywords:
+                fwd = _forwarded(k.value, own)
+                if k.arg is not None and fwd is not None:
+                    passes.append((callee, {k.arg}, (), fwd))
+                elif k.arg is not None and kw is not ALL:
+                    kw.add(k.arg)
+            for i, x in enumerate(child.args):
+                if isinstance(x, ast.Starred):
+                    positions = ALL
+                    break
+                fwd = _forwarded(x, own)
+                if fwd is not None:
+                    passes.append((callee, (), {i}, fwd))
+                else:
+                    positions.add(i)
+            passes.append((callee, kw, positions, None))
+        _collect_passes(rel, child, own, cls, passes)
+
+
+def _forwarded(value, own):
+    return own.get(value.id) if isinstance(value, ast.Name) else None
 
 
 def test_every_public_name_has_a_non_test_caller():
@@ -70,3 +249,17 @@ def test_every_public_name_has_a_non_test_caller():
     assert not missing, (
         "public names in ocr_spark/ that only tests reach (move an oracle "
         "into tests/, delete dead code):\n  " + "\n  ".join(missing))
+
+
+def test_every_defaulted_parameter_is_passed():
+    missing = unpassed_defaulted_parameters()
+    assert not missing, (
+        "defaulted parameters in ocr_spark/ that no call site passes (fold "
+        "each into the value it defaults to):\n  " + "\n  ".join(missing))
+
+
+def test_every_module_constant_is_read():
+    missing = unread_module_constants()
+    assert not missing, (
+        "module-level names in ocr_spark/ that nothing reads:\n  "
+        + "\n  ".join(missing))

@@ -61,6 +61,42 @@ def test_rerun_after_completion_is_noop(spark, tmp_path, monkeypatch):
     assert read_extracted(spark, root).count() == 100
 
 
+def test_partial_resume_keeps_the_fresh_run_shuffle(spark, tmp_path, monkeypatch):
+    """The "auto" shuffle is decided on ``pages``, not on a resumed chunk's
+    input: that also lists the committed table's files behind the anti-join,
+    which hold no page. A one-file ``pages`` input shuffles on a fresh run,
+    and still on every chunk of a resume over a many-file committed table."""
+    import ocr_spark.pipeline as pipeline
+
+    src = str(tmp_path / "pages")
+    synth_pages(spark, N).coalesce(1).write.parquet(src)
+    pages = spark.read.parquet(src)
+    assert len(pages.inputFiles()) == 1
+
+    plans = []
+    real = pipeline.extract_pages
+
+    def traced(df, **kw):
+        out = real(df, **kw)
+        plans.append(out._jdf.queryExecution().optimizedPlan().toString())
+        return out
+
+    monkeypatch.setattr("ocr_spark.pipeline.extract_pages", traced)
+    root = str(tmp_path / "t")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_extract(spark, pages, root, run_id="r1", chunks=4,
+                    num_partitions=16, fail_chunk_after=1)
+    assert "RepartitionByExpression" in plans[0]  # the fresh run shuffles
+    committed = IcebergLiteTable(f"{root}/extracted").read(spark).inputFiles()
+    assert len(committed) >= spark.sparkContext.defaultParallelism
+
+    plans.clear()
+    res = run_extract(spark, pages, root, run_id="r2", chunks=4, num_partitions=16)
+    assert res.chunks_done == len(plans) == 3
+    assert all("RepartitionByExpression" in p for p in plans)
+    assert read_extracted(spark, root).count() == N
+
+
 def test_orphan_data_invisible_without_manifest(spark, tmp_path):
     """Crash between parquet write and manifest rename => no partial reads."""
     root = str(tmp_path / "t")

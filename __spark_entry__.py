@@ -65,12 +65,8 @@ from ocr_spark.operators.validate import (
 )
 from ocr_spark.sources.pages import pages_from_documents, pdf_pages_from_documents
 
-EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 SF0001 = "/root/testdata/sf0.001"
-# scratch subdirectory (under the system temp dir) of q_dedup_increment's
-# band stores, one per (Spark application, sf_dir)
-BAND_STORE_ROOT = "ocr_spark_band_store"
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -324,7 +320,7 @@ def q_top_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(-2, Window.currentRow)
     )
     e = e.withColumn("mavg_value", F.round(F.avg("value").over(frame), 4))
-    return topk_per_group(e, ["user_id"], "value", 2, tie_col="event_id").select(
+    return topk_per_group(e).select(
         "user_id", "event_id", F.round(F.col("value"), 2).alias("value"), "rank",
         "mavg_value",
     )
@@ -337,7 +333,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pivot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3-analog pivot: one row per user, one summed column per event type."""
-    return pivot_event_values(_t(spark, sf_dir, "events"), EVENT_TYPES)
+    return pivot_event_values(_t(spark, sf_dir, "events"))
 
 
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -468,7 +464,7 @@ def q_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear interpolation == SQL quantile_cont)."""
     from ocr_spark.operators.analytics import group_quantiles
 
-    return group_quantiles(_t(spark, sf_dir, "documents"), "lang", "n_chars")
+    return group_quantiles(_t(spark, sf_dir, "documents"))
 
 
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -646,7 +642,7 @@ def q_url_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         U.url_scheme("url").alias("scheme"),
         U.url_host("url").alias("host"),
-        U.registered_domain("url").alias("domain"),
+        U.registered_domain().alias("domain"),
         U.url_path("url").alias("path"),
         U.url_query_canonical("url").alias("query_canon"),
         U.url_canonicalize("url").alias("url_canon"),
@@ -1081,7 +1077,7 @@ def q_host_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = _messy_urls(_t(spark, sf_dir, "documents")).select(
         "doc_id", U.url_host("url").alias("host")
     )
-    return cap_per_group(u, "host", k=15)
+    return cap_per_group(u, k=15)
 
 
 def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1377,13 +1373,12 @@ def q_dedup_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries no Exchange on the committed side — same rows, same pair
     set, same exact DuckDB twin as the derive-in-session path.
 
-    The store is written once per (Spark application, ``sf_dir``) under a
-    deterministic scratch path and catalog name; later calls in the same
-    application reuse it, so a repeated call (a timed bench rep) has no
-    write side effect."""
+    The store is written once per (Spark application, ``sf_dir``) under
+    this process's ``_scratch_root("band", sf_dir)`` and a deterministic
+    catalog name; later calls in the same application reuse it, so a
+    repeated call (a timed bench rep) has no write side effect, and a later
+    process removes the directory once this one has exited."""
     import hashlib
-    import os
-    import tempfile
 
     from ocr_spark.operators.incremental import (
         committed_state,
@@ -1412,8 +1407,7 @@ def q_dedup_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = hashlib.md5(f"{app}|{sf_dir}".encode()).hexdigest()[:12]
     table = f"dedup_increment_band_store_{key}"
     if not spark.catalog.tableExists(table):
-        path = os.path.join(tempfile.gettempdir(), BAND_STORE_ROOT, key)
-        write_band_store(state, table, path)
+        write_band_store(state, table, _scratch_root("band", sf_dir))
     return incremental_status_against_state(
         new, state, band_store=spark.table(table)
     )
@@ -1642,7 +1636,6 @@ def q_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     table.merge_into(
         spark,
         updates.unionByName(inserts),
-        key_cols=("doc_id",),
         partition_by="lang",
         stats_cols=("doc_id",),
     )
@@ -1775,7 +1768,7 @@ def q_train_eval_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _messy_urls(_t(spark, sf_dir, "documents"))
     pages = d.select("doc_id", U.url_host("url").alias("host"))
-    return leakage_safe_split(pages, "host", eval_frac=0.1)
+    return leakage_safe_split(pages, eval_frac=0.1)
 
 
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1819,7 +1812,7 @@ def q_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     committed = emb.where(F.col("vec_id") < 1500)
     new_batch = emb.where(F.col("vec_id") >= 1500)
-    cents = ivf_centroids(committed, n_centroids=16, n_iters=1)
+    cents = ivf_centroids(committed, n_centroids=16)
     return ivf_assign(new_batch, cents)
 
 
@@ -1954,7 +1947,7 @@ def q_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", quality_score("text").alias("score")
     )
-    return top_fraction_gate(d, frac=0.25, score_col="score")
+    return top_fraction_gate(d, frac=0.25)
 
 
 def q_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2102,7 +2095,7 @@ def q_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate join is gated to the query doc's own vocabulary."""
     from ocr_spark.operators.tfidf import more_like_this
 
-    return more_like_this(_t(spark, sf_dir, "documents"), 1, k=10)
+    return more_like_this(_t(spark, sf_dir, "documents"), k=10)
 
 
 def q_search_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3080,7 +3073,7 @@ def _embedding_neardup_oracle() -> str:
     uses list_dot_product + round(4), same as the other embedding oracles."""
     from ocr_spark.operators.similarity import N_PLANES, hyperplanes
 
-    planes = hyperplanes(N_PLANES, 64)
+    planes = hyperplanes(64)
 
     def dot(p: list[float]) -> str:
         return " + ".join(f"e[{i + 1}]*{p[i]!r}" for i in range(64))
@@ -6339,7 +6332,7 @@ def _fix_encoding_oracle() -> str:
     so the 105 replace pairs cannot drift."""
     from ocr_spark.functions.encoding import sql_fix_mojibake
 
-    fixed = sql_fix_mojibake("raw")
+    fixed = sql_fix_mojibake()
     return f"""
         WITH g AS (
             SELECT doc_id,
@@ -7445,7 +7438,7 @@ def _oracle_sql_all() -> dict[str, str]:
         # ivf_topk: seeds = first 16 vectors, ONE Lloyd refinement iteration
         # (assign to seeds -> per-cell element-wise mean rounded to 6 dp),
         # then assignment / nprobe / re-rank against the refined centroids —
-        # the exact replay of ivf_centroids(n_iters=1).
+        # the exact replay of ivf_centroids.
         "ivf_topk": """
             WITH corpus AS (
                 SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings

@@ -93,11 +93,11 @@ def mojibake_score(c) -> Column:
 # --- exact SQL twin (DuckDB dialect) ---------------------------------------
 
 
-def sql_fix_mojibake(expr: str) -> str:
-    """The identical replace chain as a DuckDB SQL expression over
-    ``expr``. Generated from the same MOJIBAKE_MAP so engine and oracle
-    cannot drift."""
-    out = expr
+def sql_fix_mojibake() -> str:
+    """The identical replace chain as a DuckDB SQL expression over the
+    ``raw`` column. Generated from the same MOJIBAKE_MAP so engine and
+    oracle cannot drift."""
+    out = "raw"
     for garbled, ch in MOJIBAKE_MAP:
         g = garbled.replace("'", "''")
         f = ch.replace("'", "''")

@@ -78,10 +78,10 @@ def url_query_canonical(c) -> Column:
     return F.array_join(F.array_sort(parts), "&")
 
 
-def registered_domain(c) -> Column:
-    """Last two host labels ('example.org'); the whole host when it has
-    fewer than two labels."""
-    h = url_host(c)
+def registered_domain() -> Column:
+    """Last two host labels of ``url`` ('example.org'); the whole host when
+    it has fewer than two labels."""
+    h = url_host("url")
     d = F.regexp_extract(h, r"[^.]+\.[^.]+$", 0)
     return F.when(d == "", h).otherwise(d)
 

@@ -309,7 +309,7 @@ def cmd_expire(args: argparse.Namespace) -> int:
     return 0
 
 
-def main(argv: list[str] | None = None) -> int:
+def main(argv: list[str]) -> int:
     p = argparse.ArgumentParser(prog="ocr_spark.jobs")
     sub = p.add_subparsers(dest="cmd", required=True)
 
@@ -393,4 +393,4 @@ def main(argv: list[str] | None = None) -> int:
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))

@@ -16,14 +16,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def topk_per_group(df: DataFrame, group_cols: list[str], order_col: str,
-                   k: int, tie_col: str) -> DataFrame:
-    """Top-k rows per group by ``order_col`` desc (deterministic: ties break
-    on ``tie_col`` asc). One exchange on the group key, no self-join."""
-    w = Window.partitionBy(*group_cols).orderBy(F.desc(order_col), F.asc(tie_col))
+def topk_per_group(df: DataFrame) -> DataFrame:
+    """Top-2 events per user by ``value`` desc (deterministic: ties break
+    on ``event_id`` asc). One exchange on the group key, no self-join."""
+    w = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
     return (
         df.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 2)
     )
 
 
@@ -89,10 +88,10 @@ def moving_avg(events: DataFrame) -> DataFrame:
 GROUP_QUANTILES = (0.5, 0.9)  # group_quantiles' output columns q50, q90
 
 
-def group_quantiles(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
-    """Exact per-group quantiles (``GROUP_QUANTILES``) via grouped ``applyInPandas`` — the
-    operator shape for per-group logic that built-in aggregates can't
-    express exactly (Spark's percentile_approx is approximate; numpy's
+def group_quantiles(df: DataFrame) -> DataFrame:
+    """Exact per-language quantiles (``GROUP_QUANTILES``) of ``n_chars`` via
+    grouped ``applyInPandas`` — the operator shape for per-group logic that
+    built-in aggregates can't express exactly (Spark's percentile_approx is approximate; numpy's
     linear-interpolation percentile matches SQL ``quantile_cont``).
     One shuffle on the group key; each group is one Arrow batch, so this
     assumes per-group cardinality fits an executor (true for per-language
@@ -100,22 +99,21 @@ def group_quantiles(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    # group column keeps its incoming type (an int bucket column must not
-    # come back as string)
-    group_type = df.schema[group_col].dataType.simpleString()
+    # the group column keeps its incoming type
+    group_type = df.schema["lang"].dataType.simpleString()
     out_cols = ", ".join(f"q{int(q * 100)} double" for q in GROUP_QUANTILES)
 
     def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        row = {group_col: [pdf[group_col].iloc[0]]}
-        vals = pdf[value_col].to_numpy(dtype="float64")
+        row = {"lang": [pdf["lang"].iloc[0]]}
+        vals = pdf["n_chars"].to_numpy(dtype="float64")
         for q in GROUP_QUANTILES:
             row[f"q{int(q * 100)}"] = [round(float(np.percentile(vals, q * 100)), 4)]
         return pd.DataFrame(row)
 
     return (
-        df.select(group_col, value_col)
-        .groupBy(group_col)
-        .applyInPandas(stats, schema=f"{group_col} {group_type}, {out_cols}")
+        df.select("lang", "n_chars")
+        .groupBy("lang")
+        .applyInPandas(stats, schema=f"lang {group_type}, {out_cols}")
     )
 
 
@@ -162,13 +160,16 @@ def asof_prior_event(events: DataFrame) -> DataFrame:
     )
 
 
-def pivot_event_values(events: DataFrame, event_types: list[str]) -> DataFrame:
+EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
+
+
+def pivot_event_values(events: DataFrame) -> DataFrame:
     """A3-analog pivot: one row per user, one column per event type with the
-    summed value. ``event_types`` is explicit (never inferred) so the plan
+    summed value. ``EVENT_TYPES`` is explicit (never inferred) so the plan
     needs no extra distinct-values job and output schema is deterministic."""
     return (
         events.groupBy("user_id")
-        .pivot("event_type", event_types)
+        .pivot("event_type", EVENT_TYPES)
         .agg(F.round(F.sum("value"), 2))
     )
 

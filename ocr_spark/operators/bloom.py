@@ -63,14 +63,14 @@ BLOOM_LOAD = 6  # target keys per 64-bit block (~2% fpp at k=4)
 _BB_P = (1 << 31) - 1  # same Mersenne prime as the minhash family
 
 
-def _bb_constants(k: int) -> list[tuple[int, int]]:
+def _bb_constants() -> list[tuple[int, int]]:
     rng = random.Random(424243)
-    # k+1 pairs: index 0 picks the block, 1..k pick bits inside it
+    # BLOOM_K+1 pairs: index 0 picks the block, 1..BLOOM_K pick bits inside it
     return [(rng.randrange(1, _BB_P), rng.randrange(0, _BB_P))
-            for _ in range(k + 1)]
+            for _ in range(BLOOM_K + 1)]
 
 
-BLOOM_AB = _bb_constants(BLOOM_K)
+BLOOM_AB = _bb_constants()
 
 
 def n_blocks_for(n_keys: int) -> int:

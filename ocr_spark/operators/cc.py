@@ -111,17 +111,14 @@ def _star(edges: DataFrame, large: bool) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    local_threshold: int = CC_LOCAL_EDGE_THRESHOLD,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """(id, component) for every node appearing in ``edges``, where
     ``component`` is the minimum node id reachable from ``id``.
 
     Adaptive execution, the broadcast-join judgment call applied to graph
     iteration: one count() on the deduplicated edge list decides between
 
-    - LOCAL (edges <= local_threshold): collect the edge list and solve
+    - LOCAL (edges <= CC_LOCAL_EDGE_THRESHOLD): collect the edge list and solve
       with union-find in a single pass. Near-dup pair graphs are tiny
       relative to their corpora (pairs, not documents — bucket caps bound
       them), so this is the common case even at large corpus sizes, and
@@ -135,8 +132,8 @@ def connected_components(
       without stabilizing.
 
     Both paths produce the identical (min-reachable-id) labeling
-    (test_cc pins local == distributed on random graphs). Pass
-    ``local_threshold=0`` to force the distributed path."""
+    (test_cc pins local == distributed on random graphs). A threshold of
+    0 forces the distributed path; it is read at call time."""
     work = (
         edges.select(
             F.greatest(F.col("id_a"), F.col("id_b")).cast("long").alias("u"),
@@ -146,12 +143,12 @@ def connected_components(
         .distinct()
     )
     seed = None
-    if local_threshold:
+    if CC_LOCAL_EDGE_THRESHOLD:
         # persist before counting so neither the local collect nor the
         # first distributed round recomputes the (possibly expensive)
         # upstream pair pipeline
         seed = work = work.persist()
-        if work.count() <= local_threshold:
+        if work.count() <= CC_LOCAL_EDGE_THRESHOLD:
             out = _local_components(work)
             seed.unpersist()
             return out

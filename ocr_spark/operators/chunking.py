@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import session
+
 WINDOW = 60
 STRIDE = 50
 
@@ -34,9 +36,9 @@ STRIDE = 50
 WS_CLASS = "[ \t\n\r\f\x0b]+"
 
 
-def _token_array(text_col: str):
-    """Expression-level tokenizer (the shared contract above)."""
-    return F.filter(F.split(F.col(text_col), WS_CLASS), lambda t: t != F.lit(""))
+def _token_array():
+    """Expression-level tokenizer of ``text`` (the shared contract above)."""
+    return F.filter(F.split(F.col("text"), WS_CLASS), lambda t: t != F.lit(""))
 
 
 def chunk_documents(docs: DataFrame) -> DataFrame:
@@ -47,7 +49,7 @@ def chunk_documents(docs: DataFrame) -> DataFrame:
     semantics as the tests' pure Python chunker and the SQL twin.
     """
     toks = docs.select(
-        F.col("doc_id"), _token_array("text").alias("toks")
+        F.col("doc_id"), _token_array().alias("toks")
     ).withColumn("n", F.size("toks")).where(F.col("n") > 0)
     n_chunks = F.ceil(F.col("n") / F.lit(float(STRIDE))).cast("int")
     exploded = toks.select(
@@ -65,7 +67,7 @@ def chunk_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-def pack_sequences(chunks: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def pack_sequences(chunks: DataFrame) -> DataFrame:
     """Assign chunks to fixed-budget training sequences: deterministic
     boundary packing — chunks in (doc_id, chunk_idx) order, sequence id =
     floor(tokens_before / 256), so every sequence holds ~256
@@ -76,7 +78,7 @@ def pack_sequences(chunks: DataFrame, num_partitions: int | None = None) -> Data
       1. range-repartition on the global order key, partition-local running
          sums via a window PARTITIONED BY the range id;
       2. per-range token totals (one tiny row per partition) are aggregated,
-         brought to the driver (bounded by num_partitions — the legitimate
+         brought to the driver (bounded by the partition count — the legitimate
          tiny-aggregate collect, same class as a query-vector probe), turned
          into cumulative offsets, and broadcast-joined back.
     tokens_before(row) = offset(range) + local_cumsum(row) - n_tokens(row).
@@ -86,8 +88,7 @@ def pack_sequences(chunks: DataFrame, num_partitions: int | None = None) -> Data
     from pyspark.sql.window import Window
 
     spark = chunks.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 2
+    num_partitions = session.default_partitions(spark)
 
     # persist: the totals pass and the final pass are two separate jobs, and
     # without caching each would re-execute the range exchange — whose

@@ -9,18 +9,12 @@ the SERVING side of that design, Spark-first:
     md5-derived, the engine's replayable hash family) -> weight lookup ->
     mean + bias -> sigmoid score -> keep/drop.
 
-Two weight sources:
-- ``weights_df`` (bucket: long, weight: double): the PRODUCTION path — a
-  trained model exported as a table, applied via a broadcast hash join
-  (weight tables are n_buckets rows, tiny next to the corpus; plan-pinned).
-  Buckets absent from the table contribute 0.0 (sparse model convention).
-- ``weights_df=None``: a seeded SYNTHETIC model — weight(bucket) is a pure
-  md5 expression of the bucket id in [-0.5, 0.5) — so tests and the DuckDB
-  twin replay scoring end-to-end without shipping a model artifact.
+The weights are a seeded SYNTHETIC model — weight(bucket) is a pure md5
+expression of the bucket id in [-0.5, 0.5) — so tests and the DuckDB twin
+replay scoring end-to-end without shipping a model artifact.
 
-Scale shape: one explode (feature stream, (id, long) rows), one broadcast
-join (production mode; synthetic mode is join-free), one hash aggregation
-back to documents. No Python, no windows, no driver state. At 100 TB the
+Scale shape: one explode (feature stream, (id, long) rows), no join, one
+hash aggregation back to documents. No Python, no windows, no driver state. At 100 TB the
 explode dominates and is embarrassingly parallel; the aggregate is the
 same map-side-combine groupBy every token op in this engine uses.
 
@@ -49,7 +43,7 @@ CLF_SEED = "qclf-1"  # feature hashing and the synthetic weights share it
 # bias 0 keeps the synthetic model CALIBRATED: mean hashed weight is ~0 by
 # construction, so the default gate splits on its sign instead of dropping
 # (or keeping) everything — the non-vacuity discipline every gate in this
-# engine follows. A trained weights_df ships its own bias.
+# engine follows.
 DEFAULT_BIAS = 0.0
 DEFAULT_THRESHOLD = 0.5
 
@@ -99,33 +93,16 @@ def hashed_feature_stream(
     )
 
 
-def classifier_score(df: DataFrame, weights_df: DataFrame | None = None) -> DataFrame:
+def classifier_score(df: DataFrame) -> DataFrame:
     """(doc_id, n_feats, score, kept): sigmoid(mean hashed-feature weight
     + DEFAULT_BIAS) per document. Every input row produces exactly one output row."""
-    feats = hashed_feature_stream(df)
-
-    if weights_df is None:
-        weighted = feats.select(
-            "doc_id",
-            "bucket",
-            F.when(
-                F.col("bucket").isNotNull(), synthetic_weight(F.col("bucket"), CLF_SEED)
-            ).alias("weight"),
-        )
-    else:
-        # sparse model: absent buckets weigh 0.0; broadcast — the weight
-        # table is bounded by n_buckets, the corpus is not
-        weighted = feats.join(
-            F.broadcast(weights_df.withColumnRenamed("weight", "_w")),
-            on="bucket",
-            how="left",
-        ).select(
-            "doc_id",
-            "bucket",
-            F.when(F.col("bucket").isNotNull(), F.coalesce(F.col("_w"), F.lit(0.0))).alias(
-                "weight"
-            ),
-        )
+    weighted = hashed_feature_stream(df).select(
+        "doc_id",
+        "bucket",
+        F.when(
+            F.col("bucket").isNotNull(), synthetic_weight(F.col("bucket"), CLF_SEED)
+        ).alias("weight"),
+    )
 
     agg = weighted.groupBy("doc_id").agg(
         F.count("bucket").alias("n_feats"),

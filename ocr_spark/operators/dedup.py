@@ -116,15 +116,15 @@ def _shingles(text_col: str):
 _MH_P = (1 << 31) - 1
 
 
-def _mh_constants(perms: int) -> list[tuple[int, int]]:
+def _mh_constants() -> list[tuple[int, int]]:
     import random
 
     rng = random.Random(1234567)
     return [(rng.randrange(1, _MH_P), rng.randrange(0, _MH_P))
-            for _ in range(perms)]
+            for _ in range(MINHASH_PERMS)]
 
 
-MINHASH_AB = _mh_constants(MINHASH_PERMS)
+MINHASH_AB = _mh_constants()
 
 
 def _base_hash(col):
@@ -497,10 +497,10 @@ def simhash64(df: DataFrame) -> DataFrame:
 
 
 CONTAM_NGRAM = 8            # token n-gram length for decontamination
+CONTAM_MAX_DF = 64          # benchmark grams in more docs are boilerplate
 
 
-def contamination_check(corpus: DataFrame, benchmark: DataFrame,
-                        max_df: int = 64) -> DataFrame:
+def contamination_check(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination: corpus documents sharing at least one
     token ``CONTAM_NGRAM``-gram with any benchmark document — the standard
     training-data hygiene pass (a benchmark answer string memorized
@@ -510,7 +510,7 @@ def contamination_check(corpus: DataFrame, benchmark: DataFrame,
     to ONE long (the md5-portable base hash, so the SQL twin replays it),
     equi-join corpus grams against the (small) benchmark gram set —
     broadcast when it fits — and aggregate matches per corpus document.
-    ``max_df`` drops grams that appear in more than that many BENCHMARK
+    ``CONTAM_MAX_DF`` drops grams that appear in more than that many BENCHMARK
     docs first: corpus-common boilerplate phrases are not evidence of
     contamination and would fan the join out quadratically.
 
@@ -531,7 +531,7 @@ def contamination_check(corpus: DataFrame, benchmark: DataFrame,
     bench = grams(benchmark, "bench_id").distinct()
     rare = (
         bench.groupBy("g").agg(F.count(F.lit(1)).alias("bdf"))
-        .where(F.col("bdf") <= max_df)
+        .where(F.col("bdf") <= CONTAM_MAX_DF)
         .select("g")
     )
     bench = bench.join(rare, "g", "left_semi")
@@ -719,9 +719,9 @@ def winnow_pairs(df: DataFrame, min_shared: int = 2) -> DataFrame:
 LINE_MAX_DF = 16        # lines in more docs than this are boilerplate
 
 
-def line_dedup(df: DataFrame, max_df: int = LINE_MAX_DF) -> DataFrame:
+def line_dedup(df: DataFrame) -> DataFrame:
     """Sub-document boilerplate removal (the CCNet/RefinedWeb line-dedup
-    pass): a LINE that appears in more than ``max_df`` documents is
+    pass): a LINE that appears in more than ``LINE_MAX_DF`` documents is
     boilerplate (nav text, cookie banners, footers) and is removed from
     EVERY document; surviving lines reassemble in original order.
     Returns (id, text, n_lines, n_dropped).
@@ -754,7 +754,7 @@ def line_dedup(df: DataFrame, max_df: int = LINE_MAX_DF) -> DataFrame:
         lines.where(F.trim("line") != "")
         .groupBy("lh")
         .agg(F.countDistinct("id").alias("ldf"))
-        .where(F.col("ldf") > max_df)
+        .where(F.col("ldf") > LINE_MAX_DF)
         .select("lh")
     )
     kept = lines.join(

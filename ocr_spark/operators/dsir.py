@@ -49,6 +49,7 @@ from .classifier import _md5_long, hashed_feature_stream
 
 DSIR_N_BUCKETS = 8192
 DSIR_ALPHA = 0.5     # Laplace smoothing mass per bucket
+DSIR_SEED = "dsir-1"  # feature-hash and Gumbel-noise seed
 _GUMBEL_RES = 1_000_000
 
 
@@ -56,15 +57,14 @@ def dsir_log_ratios(
     raw: DataFrame,
     target: DataFrame,
     n_buckets: int = DSIR_N_BUCKETS,
-    seed: str = "dsir-1",
 ) -> DataFrame:
     """(bucket, log_ratio): ln(p_target(b)) - ln(p_raw(b)) over the hashed
     feature space, Laplace-smoothed so buckets unseen in the target still
     get finite mass. At most ``n_buckets`` rows — the broadcast side of
     every downstream join. Buckets absent from the RAW stream are omitted:
     no raw document can reference them, so they can never be looked up."""
-    raw_feats = hashed_feature_stream(raw, n_buckets, seed)
-    tgt_feats = hashed_feature_stream(target, n_buckets, seed)
+    raw_feats = hashed_feature_stream(raw, n_buckets, DSIR_SEED)
+    tgt_feats = hashed_feature_stream(target, n_buckets, DSIR_SEED)
     raw_counts = (
         raw_feats.where(F.col("bucket").isNotNull())
         .groupBy("bucket")
@@ -102,7 +102,6 @@ def dsir_apply(
     ratios: DataFrame,
     k: int,
     n_buckets: int = DSIR_N_BUCKETS,
-    seed: str = "dsir-1",
 ) -> DataFrame:
     """The APPLY half of DSIR against an already-fitted log-ratio table —
     the deploy-scale entry point: fit ``dsir_log_ratios`` once (it is
@@ -112,9 +111,9 @@ def dsir_apply(
     scans its corpus twice: once to fit raw counts, once here). Same
     frozen-artifact pattern as similarity.ivf_assign. ``ratios`` must
     carry (bucket, log_ratio) and must have been fitted with the same
-    ``n_buckets``/``seed`` (bucket ids are hash positions — a mismatch is
-    a different feature space)."""
-    feats = hashed_feature_stream(raw, n_buckets, seed)
+    ``n_buckets`` (bucket ids are hash positions — a mismatch is a
+    different feature space)."""
+    feats = hashed_feature_stream(raw, n_buckets, DSIR_SEED)
     weights = (
         feats.join(F.broadcast(ratios), "bucket")
         .groupBy("doc_id")
@@ -125,7 +124,7 @@ def dsir_apply(
     )
     u = (
         F.pmod(
-            _md5_long(F.concat(F.lit(seed + ":g:"), F.col("doc_id").cast("string"))),
+            _md5_long(F.concat(F.lit(DSIR_SEED + ":g:"), F.col("doc_id").cast("string"))),
             F.lit(_GUMBEL_RES),
         ).cast("double")
         + F.lit(0.5)
@@ -151,7 +150,6 @@ def dsir_sample(
     target: DataFrame,
     k: int,
     n_buckets: int = DSIR_N_BUCKETS,
-    seed: str = "dsir-1",
 ) -> DataFrame:
     """Select ``k`` documents from ``raw`` by importance resampling toward
     ``target``'s hashed-ngram distribution (fit + apply in one shot).
@@ -169,5 +167,5 @@ def dsir_sample(
 
     For repeated ingest batches, fit :func:`dsir_log_ratios` once and call
     :func:`dsir_apply` per batch instead — one corpus scan per batch."""
-    ratios = dsir_log_ratios(raw, target, n_buckets, seed)
-    return dsir_apply(raw, ratios, k, n_buckets, seed)
+    ratios = dsir_log_ratios(raw, target, n_buckets)
+    return dsir_apply(raw, ratios, k, n_buckets)

@@ -37,7 +37,8 @@ from ..core.extract import (
     extract_span_rows,
     SPAN_COLUMNS,
 )
-from ..plans.partitioning import ranged_repartition, salted_repartition
+from .. import session
+from ..plans.partitioning import salted_repartition
 from ..session import EXTRACTED_SCHEMA
 
 INPUT_COLS = ("url", "html", "text", "lang")
@@ -167,7 +168,6 @@ def _parse_stage(
     batch_fn: Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]],
     schema: str,
     num_partitions: int | None,
-    salt_buckets: int,
     repartition: bool | str,
 ) -> DataFrame:
     """The one parse stage behind every extraction path: prune to
@@ -175,31 +175,27 @@ def _parse_stage(
     :func:`extract_pages`, then a single ``mapInPandas(batch_fn)``."""
     pruned = df.select(*INPUT_COLS)  # column pruning BEFORE the Arrow boundary
     if num_partitions is None:
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
+        num_partitions = session.default_partitions(df.sparkSession)
     if repartition == "auto":
         repartition = auto_repartition(df)
-    if repartition == "range":
-        pruned = ranged_repartition(pruned, num_partitions)
-    elif repartition:
-        pruned = salted_repartition(pruned, num_partitions, salt_buckets=salt_buckets)
+    if repartition:
+        pruned = salted_repartition(pruned, num_partitions)
     return pruned.mapInPandas(batch_fn, schema=schema)
 
 
 def extract_pages(
     df: DataFrame,
     num_partitions: int | None = None,
-    salt_buckets: int = 16,
     repartition: bool | str = "auto",
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> extracted table.
 
     Returns one row per input row with schema ``EXTRACTED_SCHEMA``.
 
-    ``repartition``: True forces the salted host-hash shuffle (use for
-    host-clustered crawl input — the north_rule skew case); "range" uses
-    ``ranged_repartition`` instead (host-contiguous partitions: better sink
-    compression and shuffle-free per-host downstream at the cost of a
-    sampling pass); False trusts the input partitioning; "auto" shuffles
+    ``repartition``: True forces the salted host-hash shuffle into
+    ``num_partitions`` partitions (default ``session.default_partitions``;
+    use for host-clustered crawl input — the north_rule skew case); False
+    trusts the input partitioning; "auto" shuffles
     only when the input has fewer partitions than the cluster can run in
     parallel (uniform, well-split input skips a pointless shuffle of the
     full payload bytes). "auto" counts the scan partitions from the input's
@@ -209,7 +205,7 @@ def extract_pages(
     still shuffles. A non-file input always shuffles.
     """
     return _parse_stage(df, _extract_batches, EXTRACTED_SCHEMA,
-                        num_partitions, salt_buckets, repartition)
+                        num_partitions, repartition)
 
 
 def extract_page_markdown(df: DataFrame, repartition: bool | str = "auto") -> DataFrame:
@@ -217,20 +213,14 @@ def extract_page_markdown(df: DataFrame, repartition: bool | str = "auto") -> Da
     twin of :func:`extract_pages` — identical keep/drop decisions and
     partitioning policy, but headings/list items/quotes render as markdown
     instead of flattening (core.markdown). One row per input row, P7."""
-    return _parse_stage(df, _markdown_batches, MARKDOWN_SCHEMA,
-                        None, 16, repartition)
+    return _parse_stage(df, _markdown_batches, MARKDOWN_SCHEMA, None, repartition)
 
 
-def extract_page_spans(
-    df: DataFrame,
-    num_partitions: int | None = None,
-    repartition: bool | str = "auto",
-) -> DataFrame:
+def extract_page_spans(df: DataFrame, repartition: bool | str = "auto") -> DataFrame:
     """pages -> per-block span rows (SPANS_SCHEMA): the span-emitting twin
     of :func:`extract_pages` (1:N rows; N = kept blocks, exactly 1 NULL-span
     row for non-HTML/failed/empty docs so no url ever disappears). Same
     partitioning policy and Arrow batch shape as the text path; the output
     carries (int, int) spans + block text only, so the fan-out rows are
     narrow — at 100 TB the span table is a small fraction of the input."""
-    return _parse_stage(df, _span_batches, SPANS_SCHEMA,
-                        num_partitions, 16, repartition)
+    return _parse_stage(df, _span_batches, SPANS_SCHEMA, None, repartition)

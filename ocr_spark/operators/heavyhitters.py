@@ -50,12 +50,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _canon_tokens(text_col: str) -> F.Column:
-    """The engine's canonical whitespace tokenization (shared with
-    common_ngrams / token_jaccard and their SQL twins)."""
+def _canon_tokens() -> F.Column:
+    """The engine's canonical whitespace tokenization of ``text`` (shared
+    with common_ngrams / token_jaccard and their SQL twins)."""
     norm = F.trim(
         F.regexp_replace(
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))), "[ \t\n]+", " "
+            F.lower(F.coalesce(F.col("text"), F.lit(""))), "[ \t\n]+", " "
         )
     )
     return F.split(norm, " ")
@@ -101,7 +101,7 @@ def heavy_hitters(df: DataFrame, m: int = 32) -> DataFrame:
     and the candidate-gated exact recount (shuffle carries only candidate
     rows). Output provably equals the exact one-pass SQL answer — the
     DuckDB twin replays ``GROUP BY token HAVING freq*(m+1) > total``."""
-    toks = df.select(_canon_tokens("text").alias("toks")).where(
+    toks = df.select(_canon_tokens().alias("toks")).where(
         F.array_join("toks", " ") != ""
     )
     cand = mg_candidates(toks, m=m)

@@ -67,12 +67,7 @@ def committed_state(
     )
 
 
-def write_band_store(
-    state_df: DataFrame,
-    table_name: str,
-    path: str,
-    num_buckets: int = 16,
-) -> None:
+def write_band_store(state_df: DataFrame, table_name: str, path: str) -> None:
     """Persist the committed corpus's LSH (id, band, bucket) rows as a
     parquet table BUCKETED (and sorted) by the band-join key, via
     ``plans.partitioning.write_bucketed``.
@@ -91,7 +86,7 @@ def write_band_store(
     from ..plans.partitioning import write_bucketed
 
     rows = band_buckets(state_df, id_col="id")
-    write_bucketed(rows, table_name, path, ["band", "bucket"], num_buckets)
+    write_bucketed(rows, table_name, path, ["band", "bucket"])
 
 
 def incremental_status_against_state(

@@ -454,7 +454,11 @@ def image_resize(df: DataFrame, binary_col: str = "html", id_col: str = "url",
     return df.select(id_col, binary_col).mapInPandas(resize, schema=RESIZE_SCHEMA)
 
 
-def decode_frames(data: bytes, every_ms: int, max_frames: int):
+FRAME_EVERY_MS = 1000  # frame_sample's sampling interval
+MAX_FRAMES = 8  # frame_sample's frames per payload
+
+
+def decode_frames(data: bytes):
     """Real decode path — requires an ffmpeg binding. STUB in this sandbox."""
     try:
         import av  # noqa: F401  (absent in this sandbox)
@@ -466,17 +470,17 @@ def decode_frames(data: bytes, every_ms: int, max_frames: int):
     raise NotImplementedError("real decoder wiring goes here")
 
 
-def _fake_frames(digest: bytes, every_ms: int, max_frames: int):
+def _fake_frames(digest: bytes):
     """Deterministic fake sampler: pseudo-duration and per-frame hashes are
     pure functions of the content hash, so the 1:N output is replayable."""
     import hashlib
 
     duration_ms = 500 + (digest[4] | (digest[5] << 8)) * 4  # 0.5s .. ~263s
-    n = min(max_frames, max(1, duration_ms // every_ms))
+    n = min(MAX_FRAMES, max(1, duration_ms // FRAME_EVERY_MS))
     frames = []
     for i in range(n):
         fh = hashlib.sha256(digest + i.to_bytes(4, "big")).hexdigest()[:16]
-        frames.append((i, i * every_ms, fh))
+        frames.append((i, i * FRAME_EVERY_MS, fh))
     return frames
 
 
@@ -497,10 +501,10 @@ def frame_sample(df: DataFrame, binary_col: str = "html", id_col: str = "url") -
                 b = blob if blob is not None else b""
                 digest = hashlib.sha256(b).digest()
                 try:
-                    frames = decode_frames(b, 1000, 8)
+                    frames = decode_frames(b)
                     decoder = "pyav"
                 except NotImplementedError:
-                    frames = _fake_frames(digest, 1000, 8)
+                    frames = _fake_frames(digest)
                     decoder = "stub"
                 rid = pdf[id_col].iat[i]
                 for idx, ts_ms, fh in frames:

@@ -77,11 +77,11 @@ def decode_entities(c: Column) -> Column:
     return c
 
 
-def page_meta(df: DataFrame, head_bytes: int = HEAD_BYTES) -> DataFrame:
+def page_meta(df: DataFrame) -> DataFrame:
     """(url, title, meta_description, og_title, canonical_href,
     robots_noindex, robots_nofollow, html_lang) — one row per input row,
     zero exchanges, zero Python."""
-    head = F.substring(F.col("html").cast("string"), 1, head_bytes)
+    head = F.substring(F.col("html").cast("string"), 1, HEAD_BYTES)
     title_raw = F.nullif(
         F.trim(F.regexp_replace(F.regexp_extract(head, _TITLE_RE, 1), r"\s+", " ")),
         F.lit(""),

@@ -37,6 +37,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import session
+
 
 def distributed_ntile(
     df: DataFrame,
@@ -45,7 +47,6 @@ def distributed_ntile(
     order_cols: list[Column],
     rank_col: str = "group_rank",
     bucket_col: str = "bucket_idx",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact ``ntile(n)`` within ``group_col`` under ``order_cols`` (MUST
     end in a unique tie-break), without any per-group global sort. Adds
@@ -54,9 +55,7 @@ def distributed_ntile(
     """
     from .dedup import _persist_scoped
 
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 2
+    num_partitions = session.default_partitions(df.sparkSession)
 
     # Pin one materialized range partitioning: the counts pass and the
     # final pass are separate jobs, and re-sampled range boundaries could
@@ -110,7 +109,7 @@ def distributed_ntile(
 PPL_BUCKETS = ["head", "middle", "tail"]
 
 
-def perplexity_buckets(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def perplexity_buckets(df: DataFrame) -> DataFrame:
     """CCNet head/middle/tail corpus bucketing: score every document with
     the corpus-self-trained bigram LM (quality.bigram_lm_scores), rank
     within each language by score (natural-sounding first: lm_logprob
@@ -141,7 +140,6 @@ def perplexity_buckets(df: DataFrame, num_partitions: int | None = None) -> Data
         order_cols=[F.desc("lm_logprob"), F.asc("doc_id")],
         rank_col="lang_rank",
         bucket_col="_b",
-        num_partitions=num_partitions,
     )
     bucket = F.element_at(
         F.array(*[F.lit(b) for b in PPL_BUCKETS]), F.col("_b") + 1
@@ -162,9 +160,9 @@ def perplexity_buckets(df: DataFrame, num_partitions: int | None = None) -> Data
     )
 
 
-def top_fraction_gate(df: DataFrame, frac: float, score_col: str) -> DataFrame:
+def top_fraction_gate(df: DataFrame, frac: float) -> DataFrame:
     """DCLM/FineWeb-Edu-style top-fraction selection: keep exactly the
-    best ``ceil(frac * n)`` documents by ``score_col`` (ties broken by
+    best ``ceil(frac * n)`` documents by ``score`` (ties broken by
     id, so the cut is total and reproducible). This is the calibration
     primitive behind "keep the top 10% by classifier score" — the
     threshold is discovered from the corpus's own score distribution,
@@ -178,12 +176,12 @@ def top_fraction_gate(df: DataFrame, frac: float, score_col: str) -> DataFrame:
     (never-drop: the rejected tail is data for the audit, not deleted).
     """
     ranked = distributed_ntile(
-        df.select(F.col("doc_id"), F.col(score_col)).withColumn(
+        df.select(F.col("doc_id"), F.col("score")).withColumn(
             "_g", F.lit(0)
         ),
         n=2,
         group_col="_g",
-        order_cols=[F.desc(score_col), F.asc("doc_id")],
+        order_cols=[F.desc("score"), F.asc("doc_id")],
         rank_col="rank",
         bucket_col="_b",
     )
@@ -193,7 +191,7 @@ def top_fraction_gate(df: DataFrame, frac: float, score_col: str) -> DataFrame:
         ranked.crossJoin(F.broadcast(total))
         .select(
             F.col("doc_id"),
-            F.col(score_col),
+            F.col("score"),
             F.col("rank"),
             (F.col("rank") <= cut).alias("kept"),
         )

@@ -31,17 +31,16 @@ from pyspark.sql import functions as F
 from ..functions.urls import url_host, url_path
 
 
-def _grouped_lines(
-    robots: DataFrame, host_col: str, robots_col: str
-) -> DataFrame:
-    """(host, pos, lt, is_ua, gid): the RFC 9309 group fold. Lines split
+def _grouped_lines(robots: DataFrame) -> DataFrame:
+    """(host, pos, lt, is_ua, gid): the RFC 9309 group fold of
+    ``robots_txt`` per ``host``. Lines split
     on ``\\r?\\n``: robots.txt fetched over HTTP is almost always CRLF,
     and Spark's ``trim`` strips spaces only — splitting on bare ``\\n``
     would leave a trailing ``\\r`` on every value and silently defeat
     every rule (pinned by the CRLF test)."""
     lines = robots.select(
-        F.col(host_col).alias("host"),
-        F.posexplode(F.split(F.col(robots_col), "\r?\n")).alias("pos", "line"),
+        F.col("host"),
+        F.posexplode(F.split(F.col("robots_txt"), "\r?\n")).alias("pos", "line"),
     )
     lt = F.trim("line")
     w = Window.partitionBy("host").orderBy("pos")
@@ -83,7 +82,7 @@ def robots_disallow_rules(robots: DataFrame, agent: str = "*") -> DataFrame:
     """(host, prefix) for every non-empty Disallow directive in the
     user-agent group(s) governing ``agent`` (see :func:`_grouped_lines`
     for the line/group fold and the CRLF contract)."""
-    marked = _grouped_lines(robots, "host", "robots_txt")
+    marked = _grouped_lines(robots)
     applicable = _applicable_groups(marked, agent)
     prefix = F.trim(F.substring(F.col("lt"), 10, 1 << 20))
     dis = (
@@ -119,23 +118,23 @@ def robots_filter(urls: DataFrame, rules: DataFrame) -> DataFrame:
     )
 
 
-def robots_crawl_delays(robots: DataFrame, agent: str = "*") -> DataFrame:
-    """(host, crawl_delay_s) for every host whose governing group(s)
-    declare a ``Crawl-delay``; hosts without one are simply absent (the
+def robots_crawl_delays(robots: DataFrame) -> DataFrame:
+    """(host, crawl_delay_s) for every host whose ``*`` group(s) declare a
+    ``Crawl-delay``; hosts without one are simply absent (the
     frontier's left join supplies the default — operators/frontier.py).
 
     Crawl-delay is the de-facto extension (not in RFC 9309) that
     :func:`frontier.fetch_schedule` consumes: this function closes the
     robots.txt -> politeness-schedule loop. Group membership follows the
     same fold as Disallow — an agent-specific group's delay must not leak
-    into ``*`` traffic and vice versa. Values that do not parse as a
+    into ``*`` traffic. Values that do not parse as a
     non-negative number are dropped (cast -> NULL), and when several
     governing groups declare different delays the MINIMUM wins: the
     schedule built from it is the densest the host has sanctioned under
     any applicable reading, and a tighter-than-necessary delay is always
     polite. Vocabulary-sized all the way down (hosts x robots lines)."""
-    marked = _grouped_lines(robots, "host", "robots_txt")
-    applicable = _applicable_groups(marked, agent)
+    marked = _grouped_lines(robots)
+    applicable = _applicable_groups(marked, "*")
     # 'crawl-delay:' is 12 chars -> value starts at 13 (1-based substring);
     # try_cast, not cast: ANSI mode must not let one 'Crawl-delay: soon'
     # line abort the whole job — malformed means dropped

@@ -46,7 +46,7 @@ def stratified_sample(df: DataFrame, rates: dict[str, float],
     return df.where(sample_bucket("doc_id", "sample") < cutoff)
 
 
-def soft_sample(df: DataFrame, weight_col: str, out_col: str = "kept") -> DataFrame:
+def soft_sample(df: DataFrame, weight_col: str) -> DataFrame:
     """Quality-weighted (soft) sampling — the DCLM/FineWeb-Edu move of
     keeping a document with probability equal to its quality score
     instead of thresholding: a hard cutoff throws away every borderline
@@ -67,30 +67,30 @@ def soft_sample(df: DataFrame, weight_col: str, out_col: str = "kept") -> DataFr
     )
     b = sample_bucket("doc_id", "soft")
     return df.withColumn("sample_bucket", b).withColumn(
-        out_col, b < (w * SAMPLE_DENOM).cast("long")
+        "kept", b < (w * SAMPLE_DENOM).cast("long")
     )
 
 
-def leakage_safe_split(df: DataFrame, group_col: str, eval_frac: float = 0.1) -> DataFrame:
-    """Train/eval assignment at GROUP granularity: every row of a group
-    (canonically, a host) lands in the same split, so near-duplicate pages
+def leakage_safe_split(df: DataFrame, eval_frac: float = 0.1) -> DataFrame:
+    """Train/eval assignment at ``host`` granularity: every row of a host
+    lands in the same split, so near-duplicate pages
     from one site can never straddle the train/eval boundary (the
     contamination vector document-level random splits leave open).
-    The verdict hashes the group key — a pure map-side projection, zero
+    The verdict hashes the host — a pure map-side projection, zero
     shuffle, reproducible across runs/partitionings/engines, and nested
     the same way the sampler is (growing eval_frac only moves groups
     train->eval, never reshuffles)."""
     cut = int(eval_frac * SAMPLE_DENOM)
     return df.withColumn(
         "split",
-        F.when(sample_bucket(group_col, "split") < cut, F.lit("eval"))
+        F.when(sample_bucket("host", "split") < cut, F.lit("eval"))
         .otherwise(F.lit("train")),
     )
 
 
-def cap_per_group(df: DataFrame, group_col: str, k: int) -> DataFrame:
-    """Deterministic per-group downsampling cap: keep at most ``k`` rows
-    per group (the over-represented-host control every crawl mix needs —
+def cap_per_group(df: DataFrame, k: int) -> DataFrame:
+    """Deterministic per-host downsampling cap: keep at most ``k`` rows
+    per ``host`` (the over-represented-host control every crawl mix needs —
     without it one mega-host dominates whatever it touches). Which rows
     survive is a pure function of (id, salt): rows rank by the same
     portable md5 bucket ``sample_bucket`` uses (ties by id), and rank > k
@@ -98,7 +98,7 @@ def cap_per_group(df: DataFrame, group_col: str, k: int) -> DataFrame:
     by group size. Returns the input rows + (cap_rank, kept)."""
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(group_col).orderBy(
+    w = Window.partitionBy("host").orderBy(
         sample_bucket("doc_id", "hostcap"), F.col("doc_id")
     )
     return df.withColumn("cap_rank", F.row_number().over(w)).withColumn(

@@ -24,27 +24,22 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def shard_key(c, seed: str = "shard-seed-1") -> "F.Column":
+SHARD_SEED = "shard-seed-1"
+
+
+def shard_key() -> "F.Column":
     """Deterministic 32-bit shuffle key: first 32 bits of
-    md5(seed || ':' || id) — portable (DuckDB:
+    md5(SHARD_SEED || ':' || doc_id) — portable (DuckDB:
     ('0x' || substr(md5(...), 1, 8))::BIGINT)."""
-    col = F.col(c) if isinstance(c, str) else c
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(seed + ":"), col.cast("string"))), 1, 8),
-        16,
-        10,
-    ).cast("long")
+    key = F.concat(F.lit(SHARD_SEED + ":"), F.col("doc_id").cast("string"))
+    return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
 
 
-def shard_assignment(
-    df: DataFrame,
-    n_shards: int = 16,
-    seed: str = "shard-seed-1",
-) -> DataFrame:
+def shard_assignment(df: DataFrame, n_shards: int = 16) -> DataFrame:
     """(doc_id, shard, pos): a seeded global shuffle into ``n_shards``
     shards with a stable in-shard order. Ties in the 32-bit key break on
     id, so the full ordering is total and deterministic."""
-    key = shard_key("doc_id", seed)
+    key = shard_key()
     w = Window.partitionBy("shard").orderBy("key", "doc_id")
     return (
         df.select(F.col("doc_id"), key.alias("key"))

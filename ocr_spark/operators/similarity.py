@@ -19,6 +19,7 @@ from pyspark.sql.window import Window
 
 N_PLANES = 12
 PLANE_SEED = 42
+MAX_BUCKET = 256  # embedding_neardup_pairs' hot-bucket cap
 
 
 def _dot(a, b):
@@ -50,38 +51,36 @@ def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10) -> DataFrame
     return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
 
 
-def hyperplanes(n_planes: int = N_PLANES, dim: int = 64) -> list[list[float]]:
+def hyperplanes(dim: int = 64) -> list[list[float]]:
     """The seeded pseudo-random hyperplanes as plain Python floats — shared
     by the Spark expression and the SQL oracle (which inlines them as
     literals), so both engines bucket identically."""
     import numpy as np
 
     rng = np.random.RandomState(PLANE_SEED)
-    return [[float(x) for x in row] for row in rng.standard_normal((n_planes, dim))]
+    return [[float(x) for x in row] for row in rng.standard_normal((N_PLANES, dim))]
 
 
 def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.95,
-                            n_planes: int = N_PLANES, dim: int = 64,
-                            max_bucket: int = 256,
-                            multiprobe: bool = True) -> DataFrame:
+                            dim: int = 64) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via random-hyperplane LSH.
 
     Bucket key = integer of sign bits of <v, plane_j> for deterministic
     seeded hyperplanes (``hyperplanes()``; ``dim`` is passed in — no driver
     probe of the data). Candidate pairs share a bucket under 1-bit-flip
-    multiprobe (every vector probes its own bucket plus the ``n_planes``
+    multiprobe (every vector probes its own bucket plus the ``N_PLANES``
     buckets one sign-flip away, so any pair whose sign vectors differ in at
     most one plane is found); candidates are verified with exact cosine.
 
     Scale guards (the 100 TB shape):
-    - buckets larger than ``max_bucket`` are dropped before pairing — a
+    - buckets larger than ``MAX_BUCKET`` are dropped before pairing — a
       boilerplate-identical embedding cluster would otherwise contribute k^2
       pairs on one partition; dropped-bucket recall comes back through the
       multiprobe flips (mirror of the minhash cap, dedup.py);
     - the probe join carries only (id, bucket ints); vectors re-join only
       for the deduplicated candidate set.
     """
-    planes = hyperplanes(n_planes, dim)
+    planes = hyperplanes(dim)
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     bucket = sum(
         (
@@ -89,7 +88,7 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.95,
                 _dot(emb, F.array(*[F.lit(p) for p in planes[j]])) >= 0,
                 F.lit(1 << j),
             ).otherwise(F.lit(0))
-            for j in range(n_planes)
+            for j in range(N_PLANES)
         ),
         F.lit(0),
     ).cast("long")
@@ -98,16 +97,14 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.95,
     ok = (
         keyed.groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") <= max_bucket)
+        .where(F.col("n") <= MAX_BUCKET)
         .select("bucket")
     )
     base = keyed.join(ok, "bucket", "left_semi")
 
-    probe_buckets = [F.col("bucket")]
-    if multiprobe:
-        probe_buckets += [
-            F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(n_planes)
-        ]
+    probe_buckets = [F.col("bucket")] + [
+        F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(N_PLANES)
+    ]
     probes = (
         keyed.select("id", F.explode(F.array(*probe_buckets)).alias("bucket"))
         .join(ok, "bucket", "left_semi")
@@ -136,13 +133,13 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.95,
     )
 
 
-def _assign_cells(corpus: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
+def _assign_cells(corpus: DataFrame, cents: DataFrame) -> DataFrame:
     """argmax-cosine cell assignment via broadcast join + max_by partial
     aggregation (map-side combine; ties -> lowest cent_id). corpus shuffles
     once on the id, never N^2."""
     scored = corpus.join(F.broadcast(cents))
     cos = cosine_col(F.col("v"), F.col("cv"))
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("vec_id").agg(
         F.max_by(
             F.col("cent_id"), F.struct(cos.alias("c"), (-F.col("cent_id")).alias("t"))
         ).alias("cent_id"),
@@ -150,11 +147,11 @@ def _assign_cells(corpus: DataFrame, cents: DataFrame, id_col: str) -> DataFrame
     )
 
 
-def ivf_centroids(df: DataFrame, n_centroids: int = 16, n_iters: int = 1) -> DataFrame:
+def ivf_centroids(df: DataFrame, n_centroids: int = 16) -> DataFrame:
     """Coarse quantizer for IVF: seeded with the first ``n_centroids``
-    corpus vectors, then refined with ``n_iters`` fixed Lloyd iterations —
-    assign every vector to its best-cosine cell, recompute each cell's
-    centroid as the element-wise mean. Entirely DataFrame expressions
+    corpus vectors, then refined with one fixed Lloyd iteration — assign
+    every vector to its best-cosine cell, recompute each cell's centroid as
+    the element-wise mean. Entirely DataFrame expressions
     (posexplode -> grouped avg -> array rebuild), so the result is a pure,
     SQL-replayable function of the data (no sampling, no RNG), yet the
     cells track the data distribution instead of whatever the first
@@ -168,28 +165,25 @@ def ivf_centroids(df: DataFrame, n_centroids: int = 16, n_iters: int = 1) -> Dat
     cents = df.where(F.col("vec_id") < n_centroids).select(
         F.col("vec_id").alias("cent_id"), emb.alias("cv")
     )
-    corpus = df.select(F.col("vec_id"), emb.alias("v"))
-    for _ in range(n_iters):
-        assigned = _assign_cells(corpus, cents, "vec_id")
-        by_dim = assigned.select(
-            "cent_id", F.posexplode("v").alias("pos", "x")
-        ).groupBy("cent_id", "pos").agg(F.round(F.avg("x"), 6).alias("m"))
-        cents = by_dim.groupBy("cent_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-            ).alias("cv")
-        )
-    return cents
+    assigned = _assign_cells(df.select(F.col("vec_id"), emb.alias("v")), cents)
+    by_dim = assigned.select(
+        "cent_id", F.posexplode("v").alias("pos", "x")
+    ).groupBy("cent_id", "pos").agg(F.round(F.avg("x"), 6).alias("m"))
+    return by_dim.groupBy("cent_id").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
+        ).alias("cv")
+    )
 
 
-def ivf_topk(df: DataFrame, k: int = 10, n_centroids: int = 16, n_probe: int = 4,
-             query_id: int = 0, n_iters: int = 1) -> DataFrame:
+def ivf_topk(df: DataFrame, k: int = 10, n_centroids: int = 16,
+             n_probe: int = 4) -> DataFrame:
     """IVF-style approximate nearest neighbour: the scale path for ANN.
 
     Coarse quantizer: ``ivf_centroids`` (deterministic seeded Lloyd — a
     pure function of the data, so the oracle replays it exactly). Every
     vector is assigned to its best-cosine cell via a broadcast join +
-    ``max_by`` partial aggregation. The query probes its ``n_probe``
+    ``max_by`` partial aggregation. The query (vector 0) probes its ``n_probe``
     nearest cells and re-ranks exactly within them — at 100 TB only
     ~n_probe/n_centroids of the corpus is scored against the query instead
     of all of it.
@@ -197,10 +191,10 @@ def ivf_topk(df: DataFrame, k: int = 10, n_centroids: int = 16, n_probe: int = 4
     Output: (vec_id, cosine, rank) — top-``k`` within the probed cells.
     """
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    cents = ivf_centroids(df, n_centroids, n_iters)
-    qv = df.where(F.col("vec_id") == query_id).select(emb.alias("qv"))
+    cents = ivf_centroids(df, n_centroids)
+    qv = df.where(F.col("vec_id") == 0).select(emb.alias("qv"))
 
-    assigned = _assign_cells(df.select(F.col("vec_id"), emb.alias("v")), cents, "vec_id")
+    assigned = _assign_cells(df.select(F.col("vec_id"), emb.alias("v")), cents)
 
     # probe selection: the query's n_probe nearest cells (16-row job)
     probes = (
@@ -224,8 +218,11 @@ def ivf_topk(df: DataFrame, k: int = 10, n_centroids: int = 16, n_probe: int = 4
     return top.withColumn("rank", F.row_number().over(w))
 
 
+MAX_CLUSTER = 1024  # semantic_dedup's hot-cluster cap
+
+
 def semantic_dedup(df: DataFrame, threshold: float = 0.95,
-                   n_centroids: int = 16, max_cluster: int = 1024) -> DataFrame:
+                   n_centroids: int = 16) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster embeddings with the deterministic seeded-Lloyd
     quantizer (:func:`ivf_centroids` — pure function of the data, so the
@@ -240,22 +237,20 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.95,
     Scale shape: the quadratic step is per-cluster, so cost is
     sum(c_i^2) — production sizes ``n_centroids ~ N / target_cluster`` so
     clusters stay small (the paper runs 50k clusters for LAION-440M);
-    clusters larger than ``max_cluster`` are excluded from pairing (their
+    clusters larger than ``MAX_CLUSTER`` are excluded from pairing (their
     members all come back as keepers) — the same disclosed hot-bucket cap
     as the minhash/LSH paths, preventing a degenerate cluster from
     contributing k^2 pairs on one partition. The pair join shuffles
     (cent_id, id, vector) once; centroids move only by broadcast.
     """
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    cents = ivf_centroids(df, n_centroids, 1)
-    assigned = _assign_cells(
-        df.select(F.col("vec_id"), emb.alias("v")), cents, "vec_id"
-    )
+    cents = ivf_centroids(df, n_centroids)
+    assigned = _assign_cells(df.select(F.col("vec_id"), emb.alias("v")), cents)
 
     ok = (
         assigned.groupBy("cent_id")
         .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") <= max_cluster)
+        .where(F.col("n") <= MAX_CLUSTER)
         .select("cent_id")
     )
     in_play = assigned.join(F.broadcast(ok), "cent_id", "left_semi")
@@ -340,10 +335,8 @@ def cluster_balanced_sample(df: DataFrame, per_cluster: int = 8,
     candidate regions per layout class (one_key_process.py:1146-1165) —
     here the "layout class" is a learned embedding cell."""
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    cents = ivf_centroids(df, n_centroids, 1)
-    assigned = _assign_cells(
-        df.select(F.col("vec_id"), emb.alias("v")), cents, "vec_id"
-    )
+    cents = ivf_centroids(df, n_centroids)
+    assigned = _assign_cells(df.select(F.col("vec_id"), emb.alias("v")), cents)
     key = F.pmod(
         F.conv(
             F.substring(
@@ -475,7 +468,7 @@ RP_K = 8            # projected dimensionality for the shipped query
 RP_SEED = 1337      # seed for the shared ±1 projection matrix
 
 
-def rp_matrix(k: int = RP_K) -> list[list[float]]:
+def rp_matrix() -> list[list[float]]:
     """The seeded ±1 signed-projection matrix (Achlioptas' database-
     friendly Johnson-Lindenstrauss construction) as plain Python floats —
     shared by the Spark expression and the SQL oracle (inlined as
@@ -485,14 +478,14 @@ def rp_matrix(k: int = RP_K) -> list[list[float]]:
     rng = np.random.RandomState(RP_SEED)
     return [
         [1.0 if x >= 0 else -1.0 for x in row]
-        for row in rng.standard_normal((k, 64))
+        for row in rng.standard_normal((RP_K, 64))
     ]
 
 
-def random_projection(df: DataFrame, k: int = RP_K) -> DataFrame:
+def random_projection(df: DataFrame) -> DataFrame:
     """Johnson-Lindenstrauss dimensionality reduction: project each
-    embedding to ``k`` dims via the seeded ±1 matrix, scaled by
-    1/sqrt(k) so pairwise distances are preserved in expectation — the
+    embedding to ``RP_K`` dims via the seeded ±1 matrix, scaled by
+    1/sqrt(RP_K) so pairwise distances are preserved in expectation — the
     scale path BEFORE the similarity family (project 64 -> 8 once, then
     LSH/IVF/brute-force all read 8-double rows: an 8x smaller scan and
     shuffle for every downstream candidate join, with the JL guarantee
@@ -507,9 +500,9 @@ def random_projection(df: DataFrame, k: int = RP_K) -> DataFrame:
     term (the embedding_neardup float discipline)."""
     import math
 
-    signs = rp_matrix(k)
+    signs = rp_matrix()
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    scale = F.lit(math.sqrt(float(k)))
+    scale = F.lit(math.sqrt(float(RP_K)))
     projs = F.array(
         *[
             F.round(
@@ -533,31 +526,31 @@ def _sq_l2(a, b):
     return _dot(a, a) - 2.0 * _dot(a, b) + _dot(b, b)
 
 
-def _pq_subvectors(df: DataFrame, m: int, sub_dim: int,
-                   vec_col: str, id_col: str) -> DataFrame:
-    """(id, sub, sv): each embedding split into ``m`` contiguous
-    ``sub_dim``-wide subvectors — one generate projection, no shuffle."""
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+def _pq_subvectors(df: DataFrame) -> DataFrame:
+    """(vec_id, sub, sv): each embedding split into ``PQ_M`` contiguous
+    subvectors — one generate projection, no shuffle."""
+    sub_dim = 64 // PQ_M
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     parts = F.array(*[
         F.struct(
             F.lit(mi).alias("sub"),
             F.slice(emb, mi * sub_dim + 1, sub_dim).alias("sv"),
         )
-        for mi in range(m)
+        for mi in range(PQ_M)
     ])
     return df.select(
-        F.col(id_col), F.explode(parts).alias("p")
-    ).select(id_col, F.col("p.sub").alias("sub"), F.col("p.sv").alias("sv"))
+        F.col("vec_id"), F.explode(parts).alias("p")
+    ).select("vec_id", F.col("p.sub").alias("sub"), F.col("p.sv").alias("sv"))
 
 
-def _pq_assign(subs: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
-    """Per (id, sub) the nearest codebook entry (squared-L2 argmin, ties
+def _pq_assign(subs: DataFrame, cents: DataFrame) -> DataFrame:
+    """Per (vec_id, sub) the nearest codebook entry (squared-L2 argmin, ties
     to the lowest cent_id) — broadcast codebook join + min_by partial
     aggregation, the `_assign_cells` discipline per subspace."""
     d = _sq_l2(F.col("sv"), F.col("cv"))
     return (
         subs.join(F.broadcast(cents), "sub")
-        .groupBy(id_col, "sub")
+        .groupBy("vec_id", "sub")
         .agg(
             F.min_by(
                 "cent_id", F.struct(d.alias("d"), F.col("cent_id").alias("t"))
@@ -575,12 +568,11 @@ def pq_codebooks(df: DataFrame) -> DataFrame:
     SQL-replayable function of the data like ``ivf_centroids``, but all
     ``PQ_M`` subspaces train in ONE frame keyed by the sub column (no
     per-subspace jobs). Returns (sub, cent_id, cv)."""
-    sub_dim = 64 // PQ_M
-    subs = _pq_subvectors(df, PQ_M, sub_dim, "embedding", "vec_id")
+    subs = _pq_subvectors(df)
     cents = subs.where(F.col("vec_id") < PQ_K).select(
         "sub", F.col("vec_id").alias("cent_id"), F.col("sv").alias("cv")
     )
-    assigned = _pq_assign(subs, cents, "vec_id")
+    assigned = _pq_assign(subs, cents)
     by_dim = assigned.select(
         "sub", "cent_id", F.posexplode("sv").alias("pos", "x")
     ).groupBy("sub", "cent_id", "pos").agg(
@@ -605,10 +597,9 @@ def pq_topk(df: DataFrame, k: int = 10) -> DataFrame:
     additions. Returns (id, adist, rank), ascending approximate squared
     L2, 4-dp, id tie-break. Compose with an exact rescore of the top
     candidates (the sq_topk pattern) when recall matters."""
-    sub_dim = 64 // PQ_M
     cents = pq_codebooks(df)
-    subs = _pq_subvectors(df, PQ_M, sub_dim, "embedding", "vec_id")
-    codes = _pq_assign(subs, cents, "vec_id").select(
+    subs = _pq_subvectors(df)
+    codes = _pq_assign(subs, cents).select(
         "vec_id", "sub", F.col("cent_id").alias("code")
     )
     qsubs = subs.where(F.col("vec_id") == 0).select(

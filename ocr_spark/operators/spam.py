@@ -27,19 +27,16 @@ from pyspark.sql import functions as F
 from ..functions.text import fingerprint_md5
 
 
-def spam_host_signals(
-    docs: DataFrame,
-    host_edges: DataFrame,
-    host_col: str = "host",
-    text_col: str = "text",
-    min_pages: int = 3,
-    dup_ratio_max: float = 0.5,
-    link_ratio_max: float = 5.0,
-) -> DataFrame:
+SPAM_MIN_PAGES = 3  # hosts with fewer pages are never condemned
+SPAM_DUP_RATIO_MAX = 0.5
+SPAM_LINK_RATIO_MAX = 5.0
+
+
+def spam_host_signals(docs: DataFrame, host_edges: DataFrame) -> DataFrame:
     """Per-host spam profile: (host, n_pages, dup_pages, dup_ratio,
     out_hosts, in_hosts, link_ratio, spam_dup, spam_farm, is_spam).
 
-    ``docs`` is page-grain with a host and a text column; ``host_edges``
+    ``docs`` is page-grain with ``host`` and ``text`` columns; ``host_edges``
     is the host-level edge list from :func:`links.host_graph`
     (src_host, dst_host, n_links).
 
@@ -48,14 +45,13 @@ def spam_host_signals(
       approaches 1.0.
     - ``link_ratio`` = out_hosts / max(in_hosts, 1): fan-out with no
       reciprocation.
-    - ``spam_dup`` / ``spam_farm`` flag each signal past its threshold;
-      ``is_spam`` = either, gated on ``min_pages`` so a two-page host
+    - ``spam_dup`` / ``spam_farm`` flag each signal past its threshold
+      (``SPAM_DUP_RATIO_MAX``, ``SPAM_LINK_RATIO_MAX``); ``is_spam`` =
+      either, gated on ``SPAM_MIN_PAGES`` so a two-page host
       can never be condemned (hosts below the floor get all-false
       flags, not dropped rows). Hosts with pages but no edges (and
       vice versa) still get a row — full-outer on host, coalesced 0s."""
-    fp = docs.select(
-        F.col(host_col).alias("host"), fingerprint_md5(text_col).alias("fp")
-    )
+    fp = docs.select(F.col("host"), fingerprint_md5("text").alias("fp"))
     content = fp.groupBy("host").agg(
         F.count(F.lit(1)).alias("n_pages"),
         (F.count(F.lit(1)) - F.count_distinct("fp")).alias("dup_pages"),
@@ -81,9 +77,9 @@ def spam_host_signals(
         F.col("n_pages") > 0, F.col("dup_pages") / F.col("n_pages")
     ).otherwise(F.lit(0.0))
     link_ratio = F.col("out_hosts") / F.greatest(F.col("in_hosts"), F.lit(1))
-    eligible = F.col("n_pages") >= min_pages
-    spam_dup = eligible & (dup_ratio > dup_ratio_max)
-    spam_farm = eligible & (link_ratio > link_ratio_max)
+    eligible = F.col("n_pages") >= SPAM_MIN_PAGES
+    spam_dup = eligible & (dup_ratio > SPAM_DUP_RATIO_MAX)
+    spam_farm = eligible & (link_ratio > SPAM_LINK_RATIO_MAX)
     return merged.select(
         "host",
         "n_pages",

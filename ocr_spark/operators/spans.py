@@ -62,26 +62,7 @@ def dup_gram_positions(df: DataFrame) -> DataFrame:
     pos is the 0-based word offset of the gram's first word in the
     normalized tokenization (lowercase, whitespace collapsed — NULL text
     coalesced to '' so no document is silently dropped)."""
-    norm = normalized_for_fingerprint(F.coalesce(F.col("text"), F.lit("")))
-    toks = F.split(norm, " ")
-    base = (
-        df.select(F.col("doc_id").alias("id"), toks.alias("toks"))
-        .where(F.size("toks") >= SPAN_W)
-    )
-    grams = base.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("toks") - SPAN_W),
-                lambda i: F.struct(
-                    i.cast("long").alias("pos"),
-                    _gram_hash60(
-                        F.concat_ws(" ", F.slice(F.col("toks"), i + 1, SPAN_W))
-                    ).alias("gh"),
-                ),
-            )
-        ).alias("g"),
-    ).select("id", F.col("g.pos").alias("pos"), F.col("g.gh").alias("gh"))
+    _, grams = _doc_grams(df)
     dup = (
         grams.groupBy("gh")
         .agg(F.count_distinct("id").alias("gdf"))
@@ -128,25 +109,24 @@ def dup_spans(df: DataFrame) -> DataFrame:
     )
 
 
-def _doc_grams(df: DataFrame, text_col: str, id_col: str,
-               w: int) -> tuple[DataFrame, DataFrame]:
+def _doc_grams(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(base, grams): base = every document as (id, toks); grams = one
-    (id, pos, gh) row per w-gram (docs shorter than w emit none) — the
-    shared front half of the span-rewrite family."""
-    norm = normalized_for_fingerprint(F.coalesce(F.col(text_col), F.lit("")))
+    (id, pos, gh) row per ``SPAN_W``-gram (docs shorter than that emit
+    none) — the shared front half of the span-rewrite family."""
+    norm = normalized_for_fingerprint(F.coalesce(F.col("text"), F.lit("")))
     toks = F.split(norm, " ")
-    base = df.select(F.col(id_col).alias("id"), toks.alias("toks"))
+    base = df.select(F.col("doc_id").alias("id"), toks.alias("toks"))
     grams = (
-        base.where(F.size("toks") >= w)
+        base.where(F.size("toks") >= SPAN_W)
         .select(
             "id",
             F.explode(
                 F.transform(
-                    F.sequence(F.lit(0), F.size("toks") - w),
+                    F.sequence(F.lit(0), F.size("toks") - SPAN_W),
                     lambda i: F.struct(
                         i.cast("long").alias("pos"),
                         _gram_hash60(
-                            F.concat_ws(" ", F.slice(F.col("toks"), i + 1, w))
+                            F.concat_ws(" ", F.slice(F.col("toks"), i + 1, SPAN_W))
                         ).alias("gh"),
                     ),
                 )
@@ -177,7 +157,7 @@ def remove_dup_spans(df: DataFrame) -> DataFrame:
     At 100 TB the extra cost over :func:`dup_span_stats` is one wider
     aggregate value in the gram groupBy (the min-id owner) and the
     per-doc span array (bounded by words/SPAN_W per doc)."""
-    base, grams = _doc_grams(df, "text", "doc_id", SPAN_W)
+    base, grams = _doc_grams(df)
     owners = (
         grams.groupBy("gh")
         .agg(
@@ -193,21 +173,20 @@ def remove_dup_spans(df: DataFrame) -> DataFrame:
         .select("id", "pos")
         .distinct()
     )
-    return _excise_hits(base, hits, SPAN_W, "doc_id")
+    return _excise_hits(base, hits)
 
 
-def _excise_hits(base: DataFrame, hits: DataFrame, w: int,
-                 id_col: str) -> DataFrame:
-    """Union the hit windows [pos, pos+w-1] per document (touch-or-overlap
-    merge) and excise every covered word — the shared back half of
-    remove_dup_spans and decontaminate_spans. (id_col, clean_text,
-    n_words, n_removed); every ``base`` document gets a row."""
+def _excise_hits(base: DataFrame, hits: DataFrame) -> DataFrame:
+    """Union the hit windows [pos, pos+SPAN_W-1] per document
+    (touch-or-overlap merge) and excise every covered word — the shared
+    back half of remove_dup_spans and decontaminate_spans. (doc_id,
+    clean_text, n_words, n_removed); every ``base`` document gets a row."""
     win = Window.partitionBy("id").orderBy("pos")
     prev = F.lag("pos").over(win)
     flagged = hits.select(
         "id",
         "pos",
-        F.when(prev.isNull() | (F.col("pos") - prev > w), 1)
+        F.when(prev.isNull() | (F.col("pos") - prev > SPAN_W), 1)
         .otherwise(0)
         .alias("new_seg"),
     )
@@ -219,7 +198,7 @@ def _excise_hits(base: DataFrame, hits: DataFrame, w: int,
         flagged.select("id", "pos", seg.alias("seg"))
         .groupBy("id", "seg")
         .agg(
-            F.array(F.min("pos"), F.max("pos") + w - 1).alias("sp")
+            F.array(F.min("pos"), F.max("pos") + SPAN_W - 1).alias("sp")
         )
         .groupBy("id")
         .agg(F.array_sort(F.collect_list("sp")).alias("spans"))
@@ -239,7 +218,7 @@ def _excise_hits(base: DataFrame, hits: DataFrame, w: int,
         F.length(F.concat_ws(" ", F.col("toks"))) == 0, F.lit(0)
     ).otherwise(F.size("toks")).cast("long")
     return joined.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         F.array_join(kept, " ").alias("clean_text"),
         n_words.alias("n_words"),
         # size(toks) - size(kept), not n_words - size(kept): empty text
@@ -281,13 +260,9 @@ def dup_span_stats(df: DataFrame) -> DataFrame:
     )
 
 
-def decontaminate_spans(
-    df: DataFrame,
-    benchmark: DataFrame,
-    w: int = SPAN_W,
-) -> DataFrame:
+def decontaminate_spans(df: DataFrame, benchmark: DataFrame) -> DataFrame:
     """SURGICAL benchmark decontamination: excise from every corpus
-    document each span covered by a ``w``-gram that occurs anywhere in the
+    document each span covered by a ``SPAN_W``-gram that occurs anywhere in the
     benchmark set, keeping the rest of the document — the span-level
     alternative to doc-level drop/flag decontamination
     (``dedup.contamination``): a 10k-word page that quotes one benchmark
@@ -304,20 +279,20 @@ def decontaminate_spans(
     a map-side semi-join — the corpus shuffles only for the per-document
     span union, same as remove_dup_spans. Exact DuckDB twin
     (``__spark_entry__._decontam_spans_oracle``)."""
-    base, grams = _doc_grams(df, "text", "doc_id", w)
+    base, grams = _doc_grams(df)
     bench_norm = normalized_for_fingerprint(
         F.coalesce(F.col("text"), F.lit(""))
     )
     btoks = F.split(bench_norm, " ")
     bench_gh = (
         benchmark.select(btoks.alias("toks"))
-        .where(F.size("toks") >= w)
+        .where(F.size("toks") >= SPAN_W)
         .select(
             F.explode(
                 F.transform(
-                    F.sequence(F.lit(0), F.size("toks") - w),
+                    F.sequence(F.lit(0), F.size("toks") - SPAN_W),
                     lambda i: _gram_hash60(
-                        F.concat_ws(" ", F.slice(F.col("toks"), i + 1, w))
+                        F.concat_ws(" ", F.slice(F.col("toks"), i + 1, SPAN_W))
                     ),
                 )
             ).alias("gh")
@@ -329,4 +304,4 @@ def decontaminate_spans(
         .select("id", "pos")
         .distinct()
     )
-    return _excise_hits(base, hits, w, "doc_id")
+    return _excise_hits(base, hits)

@@ -52,9 +52,12 @@ def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-def more_like_this(df: DataFrame, query_id, k: int = 10) -> DataFrame:
+MLT_QUERY_ID = 1  # the document more_like_this finds neighbours of
+
+
+def more_like_this(df: DataFrame, k: int = 10) -> DataFrame:
     """Sparse tf-idf "more like this": the ``k`` documents most cosine-
-    similar to ``query_id``'s tf-idf vector. Columns: doc_id, cosine
+    similar to ``MLT_QUERY_ID``'s tf-idf vector. Columns: doc_id, cosine
     (4dp), rank.
 
     Determinism discipline (the HLL lesson applied to sparse vectors):
@@ -84,12 +87,12 @@ def more_like_this(df: DataFrame, query_id, k: int = 10) -> DataFrame:
         F.round(F.round(F.col("tf") * idf, 4) * 10000).cast("long").alias("w"),
     )
     norms = wtab.groupBy("id").agg(F.sum(F.col("w") * F.col("w")).alias("norm2"))
-    qv = wtab.where(F.col("id") == query_id).select("term", F.col("w").alias("qw"))
-    qnorm = norms.where(F.col("id") == query_id).select(
+    qv = wtab.where(F.col("id") == MLT_QUERY_ID).select("term", F.col("w").alias("qw"))
+    qnorm = norms.where(F.col("id") == MLT_QUERY_ID).select(
         F.col("norm2").alias("qnorm2")
     )
     dots = (
-        wtab.where(F.col("id") != query_id)
+        wtab.where(F.col("id") != MLT_QUERY_ID)
         .join(F.broadcast(qv), "term")
         .groupBy("id")
         .agg(F.sum(F.col("w") * F.col("qw")).alias("dot"))

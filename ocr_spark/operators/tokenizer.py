@@ -47,12 +47,11 @@ def _map_literal(word_map: dict[str, str]) -> Column:
     )
 
 
-def _encode_cols(word_map: dict[str, str],
-                 text_col: str) -> tuple[Column, Column, Column, Column, Column]:
+def _encode_cols(word_map: dict[str, str]) -> tuple[Column, Column, Column, Column, Column]:
     """The shared apply expressions: (full token stream, n_words,
-    n_tokens, n_unk, n_bytes) for one document — all pure JVM."""
+    n_tokens, n_unk, n_bytes) for one document's ``text`` — all pure JVM."""
     toks = F.regexp_extract_all(
-        F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+        F.lower(F.coalesce(F.col("text"), F.lit(""))),
         F.lit(TOKEN_PATTERN), F.lit(0),
     )
     m = _map_literal(word_map)
@@ -63,7 +62,7 @@ def _encode_cols(word_map: dict[str, str],
     ).cast("long")
     n_words = F.size(toks).cast("long")
     n_unk = F.size(F.filter(mapped, lambda x: x == UNK)).cast("long")
-    n_bytes = F.octet_length(F.coalesce(F.col(text_col), F.lit(""))).cast("long")
+    n_bytes = F.octet_length(F.coalesce(F.col("text"), F.lit(""))).cast("long")
     return full, n_words, n_tokens, n_unk, n_bytes
 
 
@@ -72,7 +71,7 @@ def bpe_encode(df: DataFrame, word_map: dict[str, str]) -> DataFrame:
     (NULL text = empty): (id, n_words, n_tokens, n_unk, tokens_fp) with
     tokens_fp = md5 over the space-joined token stream — the compact
     value-identity the oracle compares."""
-    full, n_words, n_tokens, n_unk, _ = _encode_cols(word_map, "text")
+    full, n_words, n_tokens, n_unk, _ = _encode_cols(word_map)
     return df.select(
         F.col("doc_id"),
         n_words.alias("n_words"),
@@ -96,7 +95,7 @@ def fertility_by_lang(df: DataFrame, word_map: dict[str, str]) -> DataFrame:
     rows = languages, not documents). Ratios divide exact BIGINT sums and
     round to 4 dp, so the DuckDB twin replays them bit-for-bit. Zero-word
     or zero-token groups report 0.0 ratios (never a NULL/NaN division)."""
-    full, n_words, n_tokens, n_unk, n_bytes = _encode_cols(word_map, "text")
+    full, n_words, n_tokens, n_unk, n_bytes = _encode_cols(word_map)
     per = df.select(
         F.col("lang"),
         n_words.alias("n_words"),

@@ -83,7 +83,6 @@ def run_extract(
     chunks: int = 4,
     num_partitions: int | None = None,
     resume: bool = True,
-    fail_chunk_after: int | None = None,
 ) -> ExtractResult:
     """Run (or resume) the extraction batch over ``pages``.
 
@@ -91,9 +90,6 @@ def run_extract(
     layout column — it splits the html/pdf/text branches) and record
     per-entry min/max ``url`` in the manifest, so downstream
     reads prune committed segments at the manifest level (S4).
-
-    ``fail_chunk_after``: test hook — raise after committing that many chunks
-    (crash injection for the resume property test; SURVEY §5).
     """
     from .core.rules import assert_rules_sane
 
@@ -130,8 +126,6 @@ def run_extract(
         res.snapshots.append(snap)
         res.chunks_done += 1
         res.docs += n
-        if fail_chunk_after is not None and res.chunks_done >= fail_chunk_after:
-            raise RuntimeError(f"injected crash after {res.chunks_done} chunks")
     return res
 
 

@@ -7,7 +7,8 @@ folders, one_key_process.py:728-743; SURVEY §4 "skew" row). A naive
 partition-by-input-split would hand one executor all of the top host.
 
 Strategy (north_rule: "salt-hashed by url host"): partition key =
-``xxhash64(host, salt_bucket)`` where ``salt_bucket = pmod(xxhash64(url), K)``.
+``xxhash64(host, salt_bucket)`` where ``salt_bucket = pmod(xxhash64(url), K)``
+and K = ``SALT_BUCKETS``.
 - Pages of one host spread across exactly K partitions (bounded fan-out keeps
   host locality partially intact for downstream per-host ops),
 - any single host is capped at ~K/N of the cluster, and
@@ -29,43 +30,15 @@ def url_host(col="url"):
     return F.parse_url(F.col(col) if isinstance(col, str) else col, F.lit("HOST"))
 
 
-def salted_repartition(
-    df: DataFrame,
-    num_partitions: int,
-    salt_buckets: int = 16,
-) -> DataFrame:
+SALT_BUCKETS = 16  # salt values per host: the most partitions one host spans
+NUM_BUCKETS = 16  # write_bucketed's bucket files per partition
+
+
+def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
     """Repartition by salt-hashed url host (deterministic skew-breaker)."""
-    salt = F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
+    salt = F.pmod(F.xxhash64(F.col("url")), F.lit(SALT_BUCKETS))
     key = F.xxhash64(url_host("url"), salt)
     return df.repartition(num_partitions, key)
-
-
-def ranged_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Repartition-by-range on (host, url) — the north_star's alternative
-    pre-parse layout to the salted hash shuffle.
-
-    RangePartitioner samples the composite key, so range bounds can cut
-    INSIDE a hot host: the top crawl domain spreads over several adjacent
-    partitions (skew still bounded) while every partition holds contiguous
-    host runs. Choose this over ``salted_repartition`` when the stage's
-    OUTPUT layout matters more than maximal spread: host-sorted partitions
-    RLE-compress host-derived columns in the parquet sink, serve per-host
-    downstream ops (politeness caps, host metrics) without a second
-    shuffle, and give the metrics table a readable host range per
-    partition. The hash path remains the default for pure parse
-    throughput (no sampling pass, no sort).
-
-    Skew bound differs from the salted path: a single host larger than
-    ~rows/num_partitions still splits (url is the tie-breaker key), but
-    its chunks stay adjacent rather than scattering cluster-wide.
-
-    Caveat: RangePartitioner's reservoir sample is seeded per-RDD, so
-    partition MEMBERSHIP can differ between runs (results never do — no
-    row is dropped or duplicated). When replayable per-partition lineage
-    matters (the resume/metrics contract), use ``salted_repartition``,
-    whose hash key is a pure function of the row.
-    """
-    return df.repartitionByRange(num_partitions, url_host("url"), F.col("url"))
 
 
 def write_bucketed(
@@ -73,10 +46,9 @@ def write_bucketed(
     table_name: str,
     path: str,
     bucket_cols: list[str],
-    num_buckets: int = 16,
 ) -> None:
     """Persist ``df`` as a BUCKETED parquet table (external, at ``path``):
-    rows are hash-clustered into ``num_buckets`` files per partition by
+    rows are hash-clustered into ``NUM_BUCKETS`` files per partition by
     ``bucket_cols`` and optionally sorted within each bucket.
 
     Why at 100 TB: two tables bucketed the same way on the same key join
@@ -97,7 +69,7 @@ def write_bucketed(
     ``spark.sql.sources.bucketing.enabled`` (default true).
     """
     writer = df.write.format("parquet").option("path", path)
-    writer = writer.bucketBy(num_buckets, *bucket_cols)
+    writer = writer.bucketBy(NUM_BUCKETS, *bucket_cols)
     writer.sortBy(*bucket_cols).mode(
         "overwrite"
     ).saveAsTable(table_name)

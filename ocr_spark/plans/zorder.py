@@ -29,17 +29,16 @@ from ..sources.iceberg_lite import IcebergLiteTable
 ZORDER_BITS = 16  # per-column resolution; 2 cols x 16 bits = 32-bit z key
 
 
-def zorder_key(
-    df: DataFrame, cols: list[str], bits: int = ZORDER_BITS
-) -> DataFrame:
+def zorder_key(df: DataFrame, cols: list[str]) -> DataFrame:
     """Add a ``_z`` Morton key interleaving the bit patterns of ``cols``.
 
-    Each column is min/max-normalized to ``bits`` bits (one bounded agg
+    Each column is min/max-normalized to ``ZORDER_BITS`` bits (one bounded agg
     collected to the driver — len(cols) scalars, the same probe
     discipline as tfidf's corpus count), then bit b of column c lands at
     z-bit ``b*len(cols)+c``. Constant columns normalize to 0. NULLs sort
-    first (normalized 0). ``bits * len(cols)`` must be at most 63 (the key
-    is a non-negative long); wider keys raise ValueError.
+    first (normalized 0). ``ZORDER_BITS * len(cols)`` must be at most 63
+    (the key is a non-negative long), so more than three columns raise
+    ValueError.
 
     Safety: only NUMERIC columns are accepted (fail-fast ValueError for
     date/string/etc — their min/max cannot be interpolated into
@@ -48,17 +47,17 @@ def zorder_key(
     ``(c - mn) * 65535`` in BIGINT silently overflows for wide int64
     domains (e.g. hash-valued columns) and scrambles the key, while a
     double keeps the 16 bucket bits exact (53-bit mantissa) for any
-    domain width. The result is clamped to [0, 2^bits-1] so float
+    domain width. The result is clamped to [0, 2^ZORDER_BITS-1] so float
     rounding at the domain edge cannot escape the key range."""
     if not cols:
         raise ValueError("zorder_key needs at least one column")
-    if bits * len(cols) > 63:
+    if ZORDER_BITS * len(cols) > 63:
         # the key is a signed long: z-bit 63 is the sign and shifts past it
         # wrap, so a wider key would scramble _z instead of failing
         raise ValueError(
-            f"zorder_key: {len(cols)} columns x {bits} bits = "
-            f"{bits * len(cols)} key bits; at most 63 fit a long key "
-            "(lower bits or cluster on fewer columns)"
+            f"zorder_key: {len(cols)} columns x {ZORDER_BITS} bits = "
+            f"{ZORDER_BITS * len(cols)} key bits; at most 63 fit a long key "
+            "(cluster on fewer columns)"
         )
     dtypes = dict(df.dtypes)
     for c in cols:
@@ -77,7 +76,7 @@ def zorder_key(
         *[F.min(c).alias(f"mn_{c}") for c in cols],
         *[F.max(c).alias(f"mx_{c}") for c in cols],
     ).collect()[0]
-    top = (1 << bits) - 1
+    top = (1 << ZORDER_BITS) - 1
     norm_cols = []
     for c in cols:
         mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
@@ -94,7 +93,7 @@ def zorder_key(
                         F.greatest(F.lit(0).cast("long"), scaled))
             )
     z = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(ZORDER_BITS):
         for ci, nc in enumerate(norm_cols):
             pos = b * len(cols) + ci
             z = z + F.shiftleft(
@@ -108,7 +107,6 @@ def write_zordered(
     table_root: str,
     cols: list[str],
     n_buckets: int = 16,
-    bits: int = ZORDER_BITS,
 ) -> IcebergLiteTable:
     """Write ``df`` z-order-clustered into ``n_buckets`` prunable entries.
 
@@ -117,11 +115,11 @@ def write_zordered(
     every clustered column is recorded in the manifest, so
     ``table.select_entries(ranges={col: (lo, hi)})`` prunes on any of
     them. One exchange (the partitioned write), no Python."""
-    z = zorder_key(df, cols, bits)
+    z = zorder_key(df, cols)
     # integer-divide by the bucket width (rounded up, so _zb < n_buckets):
     # ``_z * n_buckets`` overflows a long once the key is wider than
     # 63 - log2(n_buckets) bits
-    width = -(-(1 << (bits * len(cols))) // n_buckets)
+    width = -(-(1 << (ZORDER_BITS * len(cols))) // n_buckets)
     z = z.withColumn("_zb", F.expr(f"_z div {width}").cast("int")).drop("_z")
     t = IcebergLiteTable(table_root)
     t.overwrite(z, partition_by="_zb", stats_cols=tuple(cols))

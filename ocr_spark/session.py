@@ -38,6 +38,11 @@ ENGINE_SQL_CONF = {
 }
 
 
+def default_partitions(spark: SparkSession) -> int:
+    """Partition count of a stage that sizes itself: two per task slot."""
+    return spark.sparkContext.defaultParallelism * 2
+
+
 def apply_engine_conf(spark: SparkSession) -> SparkSession:
     for k, v in ENGINE_SQL_CONF.items():
         spark.conf.set(k, v)

@@ -43,13 +43,13 @@ _RFC822_FMT = "dd MMM yyyy HH:mm:ss Z"
 _ISO_FMT = "yyyy-MM-dd'T'HH:mm:ssX"
 
 
-def _items(feeds: DataFrame, xml_col: str, block_re: str, dialect: str,
+def _items(feeds: DataFrame, block_re: str, dialect: str,
            carry: list[str]) -> DataFrame:
     exploded = feeds.select(
         *carry,
         F.explode(
             F.regexp_extract_all(
-                F.coalesce(F.col(xml_col), F.lit("")),
+                F.coalesce(F.col("feed_xml"), F.lit("")),
                 F.lit(block_re), F.lit(1),
             )
         ).alias("block"),
@@ -91,6 +91,6 @@ def parse_feed_items(feeds: DataFrame) -> DataFrame:
     A document carrying both dialects (rare but legal after aggregator
     concatenation) contributes rows from both passes."""
     carry = ["host"]
-    rss = _items(feeds, "feed_xml", _ITEM_RE, "rss", carry)
-    atom = _items(feeds, "feed_xml", _ENTRY_RE, "atom", carry)
+    rss = _items(feeds, _ITEM_RE, "rss", carry)
+    atom = _items(feeds, _ENTRY_RE, "atom", carry)
     return rss.unionByName(atom)

@@ -12,11 +12,12 @@ input, a failed segment leaving others unaffected
 (batch_folder_process.py:819-822,853-876; SURVEY §3.2), plus its
 directory-structure work pruning (batch_folder_process.py:763-787,
 one_key_process.py:705-722) transposed to manifest metadata: each manifest
-entry records the data dir's partition values and per-column min/max stats,
-and ``read(partition_eq=..., ranges=...)`` selects data dirs BEFORE
-``spark.read.parquet`` ever sees them. At crawl scale this is the single
-biggest scan lever: a predicate on the partition column or a stats column
-skips whole committed segments without opening a single footer.
+entry records the data dir's partition values and per-column min/max stats.
+A predicate on the partition column prunes in Spark itself (``read`` keeps
+the snapshot basePath, so ``read(spark).where(...)`` plans
+``PartitionFilters``), and ``select_entries(ranges)`` drops entries whose
+stats cannot overlap a range without opening a single footer — at crawl
+scale the single biggest scan lever.
 
 Layout:
     <root>/data/<snapshot_id>/[<col>=<val>/]part-*.parquet  -- written FIRST
@@ -40,6 +41,10 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+MERGE_KEY = "doc_id"  # merge_into's row key
+ORPHAN_AGE_S = 3600.0  # remove_orphans' in-flight guard
 
 
 def _json_safe(v):
@@ -235,61 +240,41 @@ class IcebergLiteTable:
                                     tuple(stats_cols))
         return self._commit(new, snapshot_id, properties)
 
-    def select_entries(self, partition_eq: dict | None = None,
-                       ranges: dict | None = None) -> list[dict]:
-        """Manifest entries that MAY satisfy the predicate — conservative
-        pruning: an entry is dropped only when its recorded metadata proves
-        it cannot match (unknown partition values / missing stats keep it).
+    def select_entries(self, ranges: dict | None) -> list[dict]:
+        """Manifest entries that MAY hold rows inside ``ranges`` —
+        conservative pruning: an entry is dropped only when its recorded
+        stats prove it cannot match (missing stats keep it).
 
-        partition_eq: {col: value} — drop entries whose recorded partition
-          value differs (values compare as strings, the Hive-dir encoding).
         ranges: {col: (lo, hi)} inclusive — drop entries whose recorded
           [min, max] for col does not overlap [lo, hi].
         """
-        from urllib.parse import unquote
-
         keep = []
         for e in self.entries():
             ok = True
-            for col, v in (partition_eq or {}).items():
-                pv = e.get("partition", {}).get(col)
-                # recorded values come from Hive-escaped dir names
-                # ('a b' -> 'a%20b'); compare both forms so escapable
-                # characters never cause a FALSE prune (conservative:
-                # either representation matching keeps the entry)
-                if (
-                    pv is not None
-                    and str(pv) != str(v)
-                    and unquote(str(pv)) != str(v)
-                ):
-                    ok = False
-                    break
-            if ok:
-                for col, (lo, hi) in (ranges or {}).items():
-                    st = e.get("stats", {}).get(col)
-                    if st and st[0] is not None and st[1] is not None:
-                        if st[1] < lo or st[0] > hi:
-                            ok = False
-                            break
+            for col, (lo, hi) in (ranges or {}).items():
+                st = e.get("stats", {}).get(col)
+                if st and st[0] is not None and st[1] is not None:
+                    if st[1] < lo or st[0] > hi:
+                        ok = False
+                        break
             if ok:
                 keep.append(e)
         return keep
 
-    def read(self, spark: SparkSession, schema: str | None = None,
-             partition_eq: dict | None = None,
-             ranges: dict | None = None) -> DataFrame | None:
-        """DataFrame over committed data matching the predicate; None if no
-        snapshot exists, an EMPTY frame (schema required) if everything was
-        pruned. Hive-partitioned entries read with their snapshot basePath so
-        the partition column is restored; dirs group by base to keep one
-        scan per snapshot."""
+    def read(self, spark: SparkSession, schema: str | None = None) -> DataFrame | None:
+        """DataFrame over the committed data; None if no snapshot exists, an
+        EMPTY frame (schema required) if the snapshot holds no data files.
+        Hive-partitioned entries read with their snapshot basePath so the
+        partition column is restored and a filter on it prunes partition
+        dirs in the scan; dirs group by base to keep one scan per
+        snapshot."""
         if not self.exists():
             return None
-        entries = self.select_entries(partition_eq, ranges)
+        entries = self.entries()
         if not entries:
             if schema is None:
                 raise ValueError(
-                    "all entries pruned; pass a schema to get an empty frame"
+                    "the snapshot holds no data; pass a schema to get an empty frame"
                 )
             return spark.createDataFrame([], schema)
         return self._read_entries(spark, entries, schema)
@@ -370,8 +355,6 @@ class IcebergLiteTable:
         return total
 
     def compact(self, spark: SparkSession, target_partitions: int | None = None,
-                partition_by: str | None = None,
-                stats_cols: tuple[str, ...] = (),
                 target_file_mb: int | None = None) -> str | None:
         """Rewrite the table's current contents into one fresh data dir
         (Iceberg's rewrite_data_files). At crawl scale, chunked appends
@@ -382,9 +365,9 @@ class IcebergLiteTable:
         ``target_file_mb`` to size by bytes the way real Iceberg does —
         the file count is computed from the CURRENT snapshot's on-disk
         bytes (directory metadata, no extra scan), so a table that grew
-        10x compacts into 10x more files, not 10x bigger ones. Pass
-        ``partition_by``/``stats_cols`` to (re)build pruning metadata for
-        the compacted layout. Readers are never disturbed: the rewrite is
+        10x compacts into 10x more files, not 10x bigger ones. The compacted
+        snapshot is one unpartitioned entry without stats. Readers are
+        never disturbed: the rewrite is
         just another snapshot commit, and time-travel reads of
         pre-compaction sequences still see the old dirs (nothing is
         deleted)."""
@@ -400,26 +383,21 @@ class IcebergLiteTable:
         return self.overwrite(
             df.coalesce(target_partitions),
             properties={"operation": "compact", "target_partitions": target_partitions},
-            partition_by=partition_by,
-            stats_cols=stats_cols,
         )
 
     def merge_into(self, spark: SparkSession, source: DataFrame,
-                   key_cols: tuple[str, ...] | list[str],
-                   when_matched: str = "update",
                    partition_by: str | None = None,
                    stats_cols: tuple[str, ...] = ()) -> str:
-        """Iceberg-style MERGE INTO with copy-on-write at FILE granularity:
-        ``when_matched='update'`` upserts (matched target rows replaced by
-        the source row, unmatched source rows inserted);
-        ``when_matched='delete'`` deletes matched rows (nothing inserted).
-        ``source`` must be unique on ``key_cols`` (MERGE's standard
-        precondition) and, for 'update', carry the target's columns.
+        """Iceberg-style MERGE INTO with copy-on-write at FILE granularity,
+        keyed on ``MERGE_KEY``: an upsert (matched target rows replaced by
+        the source row, unmatched source rows inserted). ``source`` must be
+        unique on the key (MERGE's standard precondition) and carry the
+        target's columns.
 
         The scale property (Iceberg's copy-on-write MERGE): only data
         files whose recorded metadata MIGHT contain a matching key are
         rewritten. Affected entries are chosen by manifest pruning —
-        min/max stats on the first key column (when recorded via
+        min/max stats on the key (when recorded via
         ``stats_cols``) against the source's key range, plus partition
         values against the source's distinct partition values — and every
         other entry is carried into the new snapshot VERBATIM, untouched
@@ -427,29 +405,22 @@ class IcebergLiteTable:
         segment rewrites that segment's files only; the pruning is
         conservative (entries without stats are treated as affected).
 
-        The rewrite itself is one anti-join (target-survivors) plus, for
-        'update', a unionByName with the source — AQE broadcasts the
+        The rewrite itself is one anti-join (target-survivors) plus a
+        unionByName with the source — AQE broadcasts the
         source keys when the batch is small, which is the common
         ingest-fixup shape. Commit is the same atomic manifest rename as
         append/overwrite; concurrent readers and time travel see either
         the old or the new snapshot, never a mix.
         """
-        if when_matched not in ("update", "delete"):
-            raise ValueError(f"when_matched must be update|delete, got {when_matched!r}")
-        key_cols = list(key_cols)
         if not self.exists():
-            if when_matched == "delete":
-                raise ValueError("merge_into(delete) on a table with no snapshot")
             return self.append(source, partition_by=partition_by,
                                stats_cols=stats_cols)
 
         # -- manifest pruning: which entries MIGHT hold a matching key? ----
-        k0 = key_cols[0]
         ranges = None
-        if k0 in source.columns:
-            lo_hi = source.agg(F.min(k0), F.max(k0)).first()
-            if lo_hi[0] is not None:
-                ranges = {k0: (lo_hi[0], lo_hi[1])}
+        lo_hi = source.agg(F.min(MERGE_KEY), F.max(MERGE_KEY)).first()
+        if lo_hi[0] is not None:
+            ranges = {MERGE_KEY: (lo_hi[0], lo_hi[1])}
         candidates = self.select_entries(ranges=ranges)
         part_col = next(iter(candidates[0]["partition"]), None) if candidates else None
         if part_col and part_col in source.columns:
@@ -468,34 +439,23 @@ class IcebergLiteTable:
         # -- rewrite only the affected files -------------------------------
         snapshot_id = uuid.uuid4().hex[:16]
         out_dir = os.path.join(self._data_dir, snapshot_id)
-        src_keys = source.select(*key_cols).dropDuplicates(key_cols)
+        src_keys = source.select(MERGE_KEY).dropDuplicates([MERGE_KEY])
         if candidates:
             target = self._read_entries(spark, candidates, None)
-            survivors = target.join(src_keys, key_cols, "left_anti")
+            survivors = target.join(src_keys, [MERGE_KEY], "left_anti")
+            result = survivors.unionByName(source.select(*survivors.columns))
         else:
-            survivors = None
-        if when_matched == "update":
-            src_rows = (
-                source.select(*survivors.columns) if survivors is not None else source
-            )
-            result = (
-                survivors.unionByName(src_rows) if survivors is not None else src_rows
-            )
-        else:
-            result = survivors
-        new_entries: list[dict] = []
-        if result is not None:
-            writer = result.write.mode("errorifexists")
-            if partition_by:
-                writer = writer.partitionBy(partition_by)
-            writer.parquet(out_dir)
-            new_entries = self._collect_entries(
-                spark, out_dir, partition_by, tuple(stats_cols)
-            )
+            result = source
+        writer = result.write.mode("errorifexists")
+        if partition_by:
+            writer = writer.partitionBy(partition_by)
+        writer.parquet(out_dir)
+        new_entries = self._collect_entries(
+            spark, out_dir, partition_by, tuple(stats_cols)
+        )
         props = {
             "operation": "merge",
-            "when_matched": when_matched,
-            "key_cols": key_cols,
+            "key_cols": [MERGE_KEY],
             "entries_rewritten": len(candidates),
             "entries_untouched": len(untouched),
         }
@@ -530,13 +490,13 @@ class IcebergLiteTable:
             os.remove(os.path.join(self._manifest_dir, name))
         return {"manifests_removed": len(drop), "dirs_removed": removed_dirs}
 
-    def remove_orphans(self, older_than_s: float = 3600.0) -> list[str]:
+    def remove_orphans(self) -> list[str]:
         """Delete data dirs referenced by NO manifest — the leftovers of a
         crash between data write and manifest rename (the crash-injection
         window tests/test_resume.py exercises). Never touches a referenced
         dir, so it is safe to run concurrently with readers.
 
-        ``older_than_s``: only dirs whose mtime is at least this old are
+        Only dirs whose mtime is at least ``ORPHAN_AGE_S`` old are
         deleted (real Iceberg's remove_orphan_files ``older_than`` guard)
         — an IN-FLIGHT append's data dir is also unreferenced until its
         manifest renames in, and deleting it would destroy data the
@@ -553,7 +513,7 @@ class IcebergLiteTable:
                 # unit of write, so protect each entry's base (and itself)
                 referenced.add(os.path.realpath(e.get("base", e["dir"])))
                 referenced.add(os.path.realpath(e["dir"]))
-        cutoff = time.time() - older_than_s
+        cutoff = time.time() - ORPHAN_AGE_S
         removed = []
         if os.path.isdir(self._data_dir):
             for d in sorted(os.listdir(self._data_dir)):

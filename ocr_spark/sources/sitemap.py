@@ -41,10 +41,10 @@ _CHANGEFREQ_RE = r"(?s)<changefreq>\s*(.*?)\s*</changefreq>"
 _PRIORITY_RE = r"(?s)<priority>\s*(.*?)\s*</priority>"
 
 
-def _parse_blocks(df: DataFrame, xml_col: str, block_re: str,
-                  entry_type: str, carry: list[str]) -> DataFrame:
+def _parse_blocks(df: DataFrame, block_re: str, entry_type: str,
+                  carry: list[str]) -> DataFrame:
     block = F.explode(
-        F.regexp_extract_all(F.coalesce(F.col(xml_col), F.lit("")),
+        F.regexp_extract_all(F.coalesce(F.col("sitemap_xml"), F.lit("")),
                              F.lit(block_re), F.lit(1))
     ).alias("block")
     exploded = df.select(*carry, block)
@@ -78,10 +78,8 @@ def parse_sitemap_entries(sitemaps: DataFrame) -> DataFrame:
     formats; callers cast at the comparison site). A block without
     ``<loc>`` yields sitemap_ok=false with NULL fields."""
     carry = ["host"]
-    urls = _parse_blocks(sitemaps, "sitemap_xml", _URL_BLOCK_RE, "url", carry)
-    nested = _parse_blocks(
-        sitemaps, "sitemap_xml", _SITEMAP_BLOCK_RE, "sitemap", carry
-    )
+    urls = _parse_blocks(sitemaps, _URL_BLOCK_RE, "url", carry)
+    nested = _parse_blocks(sitemaps, _SITEMAP_BLOCK_RE, "sitemap", carry)
     return urls.unionByName(nested)
 
 

@@ -16,13 +16,14 @@ from pyspark.sql.streaming import StreamingQuery
 from ..operators.extract_op import extract_pages
 from ..session import PAGES_SCHEMA
 
+MAX_FILES_PER_TRIGGER = 8
+
 
 def start_extract_stream(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 8,
 ) -> StreamingQuery:
     """File-source -> extract -> exactly-once parquet file sink.
 
@@ -30,13 +31,13 @@ def start_extract_stream(
     its source partitioning), so the records are identical to the batch
     path's: the golden byte-identity contract holds across batch and
     streaming execution. The ``availableNow`` trigger drains every file
-    present at start (at most ``max_files_per_trigger`` per micro-batch)
+    present at start (at most ``MAX_FILES_PER_TRIGGER`` per micro-batch)
     and then stops the query. Kill the query at any point and restart with
     the same checkpoint: no url is ever extracted into the sink twice, and
     files that arrived since are picked up (streaming resume contract)."""
     pages = (
         spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(input_dir)
     )
     return (

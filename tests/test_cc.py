@@ -3,6 +3,7 @@ adversarial components, partitioning invariance, and keeper selection."""
 
 import pytest
 
+from ocr_spark.operators import cc
 from ocr_spark.operators.cc import (
     cluster_representatives,
     connected_components,
@@ -23,18 +24,17 @@ def test_two_components_and_min_labels(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_chain_component_converges_logarithmically(spark):
+def test_chain_component_converges_logarithmically(spark, monkeypatch):
     """A 64-node path is the adversarial diameter case for label
     propagation (O(n) rounds); large-star/small-star must collapse it
     within the CC_MAX_ITER=24 alternation budget."""
+    monkeypatch.setattr(cc, "CC_LOCAL_EDGE_THRESHOLD", 0)
     path = [(i, i + 1) for i in range(63)]
-    got = _comp_map(
-        connected_components(_edges(spark, path), local_threshold=0)
-    )
+    got = _comp_map(connected_components(_edges(spark, path)))
     assert got == {i: 0 for i in range(64)}
 
 
-def test_local_and_distributed_paths_agree(spark):
+def test_local_and_distributed_paths_agree(spark, monkeypatch):
     """The adaptive local union-find fast path must produce the exact
     labeling of the star rounds — random graphs with chains, rings,
     singleton-adjacent edges, and duplicate/reversed pairs."""
@@ -46,9 +46,8 @@ def test_local_and_distributed_paths_agree(spark):
         (rng.choice(nodes), rng.choice(nodes)) for _ in range(300)
     ] + [(i, i + 3) for i in range(0, 60, 3)]
     local = _comp_map(connected_components(_edges(spark, pairs)))
-    dist = _comp_map(
-        connected_components(_edges(spark, pairs), local_threshold=0)
-    )
+    monkeypatch.setattr(cc, "CC_LOCAL_EDGE_THRESHOLD", 0)
+    dist = _comp_map(connected_components(_edges(spark, pairs)))
     assert local == dist
 
 

@@ -42,53 +42,10 @@ def test_hand_computed_score_matches(spark):
     assert got.kept == (want >= 0.5)
 
 
-def test_production_weights_equal_synthetic_when_materialized(spark):
-    """The broadcast-join production path scores identically to the
-    synthetic expression when the weight table materializes the same
-    synthetic model (the serving/training round-trip)."""
-    df = _docs(spark, [(i, t) for i, t in enumerate(
-        ["the quick brown fox", "jumps over", "", None, "the the the"]
-    )])
-    n = 1 << 18
-    from ocr_spark.functions.text import TOKEN_PATTERN
-
-    toks = F.regexp_extract_all(F.lower(F.coalesce("text", F.lit(""))), F.lit(TOKEN_PATTERN), F.lit(0))
-    bigrams = F.zip_with(
-        F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
-        F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-    weights_full = (
-        df.select(F.explode(F.concat(toks, bigrams)).alias("f"))
-        .select(feature_bucket(F.col("f"), n, "qclf-1").alias("bucket"))
-        .distinct()
-        .select("bucket", synthetic_weight(F.col("bucket"), "qclf-1").alias("weight"))
-    )
-    synth = {r.doc_id: r for r in classifier_score(df).collect()}
-    prod = {r.doc_id: r for r in classifier_score(df, weights_df=weights_full).collect()}
-    assert set(synth) == set(prod)
-    for k in synth:
-        assert synth[k].score == prod[k].score, k
-        assert synth[k].n_feats == prod[k].n_feats, k
-
-
-def test_sparse_model_absent_buckets_weigh_zero(spark):
-    df = _docs(spark, [(1, "zzz qqq")])
-    empty_weights = spark.createDataFrame([], "bucket long, weight double")
-    out = classifier_score(df, weights_df=empty_weights).collect()[0]
-    base = round(1.0 / (1.0 + math.exp(-DEFAULT_BIAS)), 4)
-    assert out.score == base and out.n_feats == 3
-
-
-def test_production_plan_broadcasts_weights_no_python(spark):
+def test_score_plan_no_python_map_side_combine(spark):
     df = _docs(spark, [(1, "a b c")])
-    weights = spark.createDataFrame([(0, 0.1)], "bucket long, weight double")
-    plan = (
-        classifier_score(df, weights_df=weights)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" not in plan
-    assert "Broadcast" in plan
+    plan = classifier_score(df)._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "Join" not in plan  # the synthetic weights are an expression
     # partial aggregation before the exchange (map-side combine)
-    assert "partial_count" in plan or "partial" in plan.lower()
+    assert "partial_count" in plan

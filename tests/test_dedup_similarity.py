@@ -93,22 +93,20 @@ def test_cosine_topk_order(vecs):
 
 
 def test_embedding_neardup_lsh(vecs):
-    pairs = embedding_neardup_pairs(vecs, threshold=0.95, n_planes=6, dim=4).toPandas()
+    pairs = embedding_neardup_pairs(vecs, threshold=0.95, dim=4).toPandas()
     got = {(a, b) for a, b in zip(pairs.id_a, pairs.id_b)}
     assert (0, 1) in got            # near-identical vectors share every bucket
     assert all(c >= 0.95 for c in pairs.cosine)
 
 
 def test_embedding_neardup_hot_bucket_capped(spark):
-    """A boilerplate-identical embedding cluster larger than max_bucket must
+    """A boilerplate-identical embedding cluster larger than MAX_BUCKET must
     be dropped before pairing (no quadratic bucket), while distinct near-dup
     pairs in other buckets are still found."""
     flood = [(i, [1.0, 1.0, 1.0, 1.0]) for i in range(600)]
     pair = [(1000, [-1.0, 0.5, -0.5, 0.25]), (1001, [-1.02, 0.51, -0.51, 0.255])]
     df = spark.createDataFrame(flood + pair, "vec_id long, embedding array<float>")
-    pairs = embedding_neardup_pairs(
-        df, threshold=0.95, n_planes=6, dim=4, max_bucket=256
-    ).toPandas()
+    pairs = embedding_neardup_pairs(df, threshold=0.95, dim=4).toPandas()
     got = {(a, b) for a, b in zip(pairs.id_a, pairs.id_b)}
     assert (1000, 1001) in got
     # every flood pair lives in the dropped hot bucket
@@ -116,21 +114,41 @@ def test_embedding_neardup_hot_bucket_capped(spark):
 
 
 def test_embedding_neardup_multiprobe_superset(spark):
-    """1-bit multiprobe can only add candidate pairs, never lose them."""
+    """1-bit multiprobe finds every same-bucket pair over the threshold and
+    also the pairs whose sign vectors differ in exactly one plane."""
+    import math
     import random
+    from itertools import combinations
+
+    from ocr_spark.operators.similarity import hyperplanes
+
+    planes = hyperplanes(4)
+
+    def dot(a, b):
+        return sum(x * y for x, y in zip(a, b))
+
+    def bucket(v):
+        return sum(1 << j for j, p in enumerate(planes) if dot(v, p) >= 0)
 
     rnd = random.Random(7)
     rows = [(i, [rnd.uniform(-1, 1) for _ in range(4)]) for i in range(80)]
     rows += [(1000 + i, [x * 1.02 for x in rows[i][1]]) for i in range(10)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    single = embedding_neardup_pairs(
-        df, threshold=0.9, n_planes=6, dim=4, multiprobe=False).toPandas()
-    multi = embedding_neardup_pairs(
-        df, threshold=0.9, n_planes=6, dim=4, multiprobe=True).toPandas()
-    s = {(a, b) for a, b in zip(single.id_a, single.id_b)}
-    m = {(a, b) for a, b in zip(multi.id_a, multi.id_b)}
-    assert s <= m
-    assert all((i, 1000 + i) in m for i in range(10))  # same-bucket planted dups
+    pairs = embedding_neardup_pairs(df, threshold=0.9, dim=4).toPandas()
+    got = {(a, b) for a, b in zip(pairs.id_a, pairs.id_b)}
+
+    same, one_flip = set(), set()
+    for (a, va), (b, vb) in combinations(rows, 2):
+        if round(dot(va, vb) / math.sqrt(dot(va, va) * dot(vb, vb)), 4) < 0.9:
+            continue
+        flips = bin(bucket(va) ^ bucket(vb)).count("1")
+        if flips == 0:
+            same.add((a, b))
+        elif flips == 1:
+            one_flip.add((a, b))
+    assert all((i, 1000 + i) in same for i in range(10))  # planted dups
+    assert one_flip                 # the input exercises the probe flips
+    assert same | one_flip <= got
 
 
 def test_simhash_pairs_crafted_truth(spark):
@@ -174,24 +192,24 @@ def test_ivf_topk_probes_subset(spark):
     rows = [(i, [float(i == j or (i % 4 == j)) for j in range(4)]) for i in range(12)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    full = ivf_topk(df, k=5, n_centroids=4, n_probe=4, query_id=0).toPandas()
+    full = ivf_topk(df, k=5, n_centroids=4, n_probe=4).toPandas()
     brute = cosine_topk(df, [1.0, 0.0, 0.0, 0.0], k=5).toPandas()
     assert list(full.vec_id) == list(brute.vec_id)
     assert list(full["rank"]) == [1, 2, 3, 4, 5]
 
-    one = ivf_topk(df, k=12, n_centroids=4, n_probe=1, query_id=0).toPandas()
+    one = ivf_topk(df, k=12, n_centroids=4, n_probe=1).toPandas()
     # probing one cell returns a subset of the full ranking
-    assert set(one.vec_id) <= set(ivf_topk(df, k=12, n_centroids=4, n_probe=4,
-                                           query_id=0).toPandas().vec_id)
+    assert set(one.vec_id) <= set(ivf_topk(df, k=12, n_centroids=4, n_probe=4)
+                                  .toPandas().vec_id)
     assert len(one) < 12
 
 
-def test_ivf_refined_centroids_recall(spark):
+def test_ivf_refinement_tracks_the_data(spark):
     """Seeded-Lloyd refinement must track the data distribution: on a
-    two-cluster corpus whose seeds all fall in cluster A, the refined
-    quantizer's recall@10 for a cluster-B query must beat (or match) the
-    raw-seed quantizer and clear 0.8."""
-    from ocr_spark.operators.similarity import ivf_topk
+    two-cluster corpus whose seeds (the first 16 vectors) all fall in
+    cluster A, no raw seed is near cluster B, and the one refinement
+    moves a centroid onto it."""
+    from ocr_spark.operators.similarity import ivf_centroids
 
     def jitter(i, j):
         return ((i * 31 + j * 17) % 13 - 6) / 40.0
@@ -202,18 +220,12 @@ def test_ivf_refined_centroids_recall(spark):
              for i in range(30)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    brute = set(cosine_topk(df, rows[30][1], k=10).toPandas().vec_id)
+    def toward_b(vectors):
+        return max(v[1] / sum(x * x for x in v) ** 0.5 for v in vectors)
 
-    def recall(n_iters):
-        got = set(
-            ivf_topk(df, k=10, n_centroids=16, n_probe=2, query_id=30,
-                     n_iters=n_iters).toPandas().vec_id
-        )
-        return len(got & brute) / len(brute)
-
-    r_seed, r_refined = recall(0), recall(1)
-    assert r_refined >= r_seed
-    assert r_refined >= 0.8
+    cents = [r.cv for r in ivf_centroids(df, n_centroids=16).collect()]
+    assert toward_b(v for _, v in rows[:16]) < 0.2
+    assert toward_b(cents) > 0.9
 
 
 def test_winnow_fingerprints_local_match_guarantee(spark):
@@ -260,8 +272,8 @@ def test_line_dedup_strips_corpus_boilerplate(spark):
         for i in range(20)
     ] + [(99, "BOILER NAV LINE")]  # a doc that is ALL boilerplate
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in line_dedup(df, max_df=5).collect()}
-    # boilerplate (df=21 and df=20 > 5) gone; unique content + the empty
+    out = {r["doc_id"]: r for r in line_dedup(df).collect()}
+    # boilerplate (df=21 and df=20 > LINE_MAX_DF) gone; unique content + the empty
     # structural line survive in order
     assert out[3]["text"] == "content 3 unique prose\n"
     assert out[3]["n_lines"] == 4 and out[3]["n_dropped"] == 2
@@ -269,22 +281,24 @@ def test_line_dedup_strips_corpus_boilerplate(spark):
 
 
 def test_line_dedup_keeps_rare_lines_untouched(spark):
-    from ocr_spark.operators.dedup import line_dedup
+    """A line in exactly LINE_MAX_DF documents is not boilerplate yet."""
+    from ocr_spark.operators.dedup import LINE_MAX_DF, line_dedup
 
-    rows = [(1, "alpha\nbeta"), (2, "gamma\ndelta")]
+    rows = [(i, f"alpha\nbody {i}") for i in range(LINE_MAX_DF)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r["text"] for r in line_dedup(df, max_df=1).collect()}
-    assert out == {1: "alpha\nbeta", 2: "gamma\ndelta"}
+    out = {r["doc_id"]: r["text"] for r in line_dedup(df).collect()}
+    assert out == dict(rows)
 
 
 def test_line_dedup_partitioning_invariance(spark):
     from ocr_spark.operators.dedup import line_dedup
 
-    rows = [(i, f"shared header\nbody {i}\nshared tail") for i in range(12)]
+    rows = [(i, f"shared header\nbody {i}\nshared tail") for i in range(20)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(line_dedup(df, max_df=3).collect())
-    b = sorted(line_dedup(df.repartition(5), max_df=3).collect())
+    a = sorted(line_dedup(df).collect())
+    b = sorted(line_dedup(df.repartition(5)).collect())
     assert a == b
+    assert all(r["n_dropped"] == 2 for r in a)
 
 
 def test_line_dedup_crlf_documents(spark):
@@ -293,9 +307,9 @@ def test_line_dedup_crlf_documents(spark):
     from ocr_spark.operators.dedup import line_dedup
 
     rows = [(i, "SHARED HEADER\r\n\r\nbody {}\r\nSHARED TAIL".format(i))
-            for i in range(10)] + [(99, "SHARED HEADER\nbody 99\nSHARED TAIL")]
+            for i in range(16)] + [(99, "SHARED HEADER\nbody 99\nSHARED TAIL")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in line_dedup(df, max_df=4).collect()}
+    out = {r["doc_id"]: r for r in line_dedup(df).collect()}
     assert out[2]["text"] == "\nbody 2"      # header+tail hot across BOTH forms
     assert out[2]["n_dropped"] == 2
     assert out[99]["text"] == "body 99"      # LF doc shares the hot lines
@@ -327,10 +341,10 @@ def test_semantic_dedup_flags_planted_copies(spark):
 
 
 def test_semantic_dedup_oversized_cluster_capped(spark):
-    """Clusters beyond max_cluster are excluded from pairing (disclosed
+    """Clusters beyond MAX_CLUSTER are excluded from pairing (disclosed
     cap): their members all come back keepers instead of exploding into a
     quadratic within-cluster join."""
-    from ocr_spark.operators.similarity import semantic_dedup
+    from ocr_spark.operators.similarity import MAX_CLUSTER, semantic_dedup
 
     seeds = [
         (0, [1.0, 0.0, 0.0, 0.0]),
@@ -338,20 +352,19 @@ def test_semantic_dedup_oversized_cluster_capped(spark):
         (2, [0.0, 0.0, 1.0, 0.0]),
         (3, [0.0, 0.0, 0.0, 1.0]),
     ]
-    flood = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(10, 50)]
-    pair = [(100, [0.0, 1.02, 0.0, 0.0])]
+    flood_ids = range(10, 10 + MAX_CLUSTER)
+    flood = [(i, [1.0, 0.0, 0.0, 0.0]) for i in flood_ids]
+    pair = [(5000, [0.0, 1.02, 0.0, 0.0])]
     df = spark.createDataFrame(
         seeds + flood + pair, "vec_id long, embedding array<float>"
     )
-    out = semantic_dedup(
-        df, threshold=0.99, n_centroids=4, max_cluster=10
-    ).toPandas()
+    out = semantic_dedup(df, threshold=0.99, n_centroids=4).toPandas()
     verdicts = {r.vec_id: (r.is_dup, r.dup_of) for r in out.itertuples()}
-    assert verdicts[100] == (True, 1)         # small cluster still paired
-    # capped cluster (seed 0 + 40 identical floods): all keepers, no pairing
+    assert verdicts[5000] == (True, 1)        # small cluster still paired
+    # capped cluster (seed 0 + MAX_CLUSTER identical floods): all keepers
     assert not verdicts[0][0]
-    assert not any(verdicts[i][0] for i in range(10, 50))
-    assert len(out) == 45
+    assert not any(verdicts[i][0] for i in flood_ids)
+    assert len(out) == len(seeds) + len(flood) + len(pair)
 
 
 def test_collapse_repeated_lines_counts(spark):
@@ -462,7 +475,7 @@ def test_ivf_assign_frozen_centroids_and_persistence(spark, tmp_path):
         [(100, [1.0, 0.05]), (101, [0.03, 1.0]), (102, [0.7, 0.7])],
         "vec_id long, embedding array<double>",
     )
-    cents = ivf_centroids(committed, n_centroids=2, n_iters=1)
+    cents = ivf_centroids(committed, n_centroids=2)
 
     direct = {r.vec_id: r for r in ivf_assign(newb, cents).collect()}
     assert direct[100].cent_id == 0 and direct[101].cent_id == 1

@@ -22,7 +22,7 @@ def golden():
 
 @pytest.fixture(scope="module")
 def extracted(spark):
-    df = extract_pages(synth_pages(spark, N), num_partitions=7, salt_buckets=4)
+    df = extract_pages(synth_pages(spark, N), num_partitions=7)
     return df.toPandas().set_index("url").sort_index()
 
 
@@ -59,7 +59,7 @@ def test_permutation_invariance(spark, golden):
     """Input row order / partitioning must not change any per-url output."""
     pages = synth_pages(spark, N).orderBy(F.reverse(F.col("url")))
     out = (
-        extract_pages(pages, num_partitions=3, salt_buckets=2)
+        extract_pages(pages, num_partitions=3)
         .toPandas()
         .set_index("url")
         .sort_index()
@@ -68,7 +68,7 @@ def test_permutation_invariance(spark, golden):
 
 
 def test_idempotent_rerun(spark, extracted):
-    df = extract_pages(synth_pages(spark, N), num_partitions=7, salt_buckets=4)
+    df = extract_pages(synth_pages(spark, N), num_partitions=7)
     again = df.toPandas().set_index("url").sort_index()
     assert (again["text"] == extracted["text"]).all()
 

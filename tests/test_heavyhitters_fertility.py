@@ -40,7 +40,7 @@ def _adversarial_corpus(spark, n_docs: int = 400, n_parts: int = 8):
 
 
 def _brute_force(df, m):
-    toks = df.select(F.explode(_canon_tokens("text")).alias("token"))
+    toks = df.select(F.explode(_canon_tokens()).alias("token"))
     total = toks.count()
     pdf = (
         toks.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
@@ -56,7 +56,7 @@ def test_mg_candidates_superset_and_bounded(spark):
     partition, despite a vocabulary ~150x the counter budget."""
     m = 8
     docs = _adversarial_corpus(spark)
-    toks = docs.select(_canon_tokens("text").alias("toks"))
+    toks = docs.select(_canon_tokens().alias("toks"))
     cand = set(r.token for r in mg_candidates(toks, m=m).collect())
     exact, total = _brute_force(docs, m)
     qualifying = {t for t, _ in exact}
@@ -65,7 +65,7 @@ def test_mg_candidates_superset_and_bounded(spark):
     n_parts = toks.rdd.getNumPartitions()
     assert len(cand) <= m * n_parts
     # non-vacuous eviction: the vocabulary is far wider than the budget
-    distinct = docs.select(F.explode(_canon_tokens("text"))).distinct().count()
+    distinct = docs.select(F.explode(_canon_tokens())).distinct().count()
     assert distinct > m * n_parts
 
 

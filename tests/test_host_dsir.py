@@ -65,7 +65,7 @@ def dsir_corpus(spark):
 
 def test_dsir_weights_separate_families(spark, dsir_corpus):
     target = dsir_corpus.where(F.col("doc_id") < 8)
-    picked = dsir_sample(dsir_corpus, target, k=40, n_buckets=256, seed="t-1")
+    picked = dsir_sample(dsir_corpus, target, k=40, n_buckets=256)
     w = {r.doc_id: r.log_weight for r in picked.collect()}
     assert len(w) == 40
     mean_in = sum(w[i] for i in range(20)) / 20
@@ -75,7 +75,7 @@ def test_dsir_weights_separate_families(spark, dsir_corpus):
 
 def test_dsir_topk_prefers_target_family(spark, dsir_corpus):
     target = dsir_corpus.where(F.col("doc_id") < 8)
-    picked = dsir_sample(dsir_corpus, target, k=10, n_buckets=256, seed="t-1")
+    picked = dsir_sample(dsir_corpus, target, k=10, n_buckets=256)
     rows = picked.collect()
     assert len(rows) == 10
     n_target_family = sum(1 for r in rows if r.doc_id < 20)
@@ -102,24 +102,24 @@ def test_dsir_apply_with_persisted_ratios_matches_one_shot(spark, dsir_corpus):
 
     target = dsir_corpus.where(F.col("doc_id") < 8)
     one_shot = dsir_sample(
-        dsir_corpus, target, k=12, n_buckets=256, seed="t-1"
+        dsir_corpus, target, k=12, n_buckets=256
     ).toPandas()
 
-    ratios = dsir_log_ratios(dsir_corpus, target, n_buckets=256, seed="t-1")
+    ratios = dsir_log_ratios(dsir_corpus, target, n_buckets=256)
     import tempfile
 
     with tempfile.TemporaryDirectory() as d:
         ratios.write.mode("overwrite").parquet(d)
         frozen = spark.read.parquet(d)
         applied = dsir_apply(
-            dsir_corpus, frozen, k=12, n_buckets=256, seed="t-1"
+            dsir_corpus, frozen, k=12, n_buckets=256
         ).toPandas()
         # and a NEW disjoint batch resamples against the same frozen table
         batch2 = dsir_corpus.select(
             (F.col("doc_id") + 1000).alias("doc_id"), "text"
         )
         rows2 = dsir_apply(
-            batch2, frozen, k=5, n_buckets=256, seed="t-1"
+            batch2, frozen, k=5, n_buckets=256
         ).collect()
     pd.testing.assert_frame_equal(
         one_shot.reset_index(drop=True), applied.reset_index(drop=True)

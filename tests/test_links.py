@@ -13,6 +13,7 @@ from ocr_spark.functions.links import (
     resolve_href,
     strip_fragment,
 )
+from ocr_spark.operators import links
 from ocr_spark.operators.links import (
     host_degree,
     host_graph,
@@ -154,39 +155,40 @@ def test_pagerank_is_distribution(spark, edge_fixture):
         assert again[h] == pytest.approx(v, abs=1e-12)
 
 
-def test_pagerank_local_and_distributed_paths_agree(spark, edge_fixture):
+def test_pagerank_local_and_distributed_paths_agree(spark, edge_fixture,
+                                                    monkeypatch):
     """The adaptive local power iteration must match the distributed loop
     well within the 6 dp the query layer rounds to (the two differ only
     in float accumulation order)."""
     g = host_graph(edge_fixture)
     local = {r["host"]: r["rank"]
              for r in pagerank_hosts(g, iterations=6).collect()}
+    monkeypatch.setattr(links, "PAGERANK_LOCAL_EDGE_THRESHOLD", 0)
     dist = {r["host"]: r["rank"]
-            for r in pagerank_hosts(g, iterations=6,
-                                    local_threshold=0).collect()}
+            for r in pagerank_hosts(g, iterations=6).collect()}
     assert set(local) == set(dist)
     for h in local:
         assert local[h] == pytest.approx(dist[h], rel=1e-9)
 
 
-def test_pagerank_releases_caches(spark, edge_fixture):
+def test_pagerank_releases_caches(spark, edge_fixture, monkeypatch):
     """Every persist() the loop takes must be released before returning.
     What may remain: the eager final checkpoint plus the intermediate
-    lazy localCheckpoints (one per checkpoint_every rounds) — checkpoint
-    blocks are reclaimed by the ContextCleaner once the JVM GCs the RDD,
-    not via unpersist()."""
+    lazy localCheckpoints (one per PAGERANK_CHECKPOINT_EVERY rounds) —
+    checkpoint blocks are reclaimed by the ContextCleaner once the JVM GCs
+    the RDD, not via unpersist()."""
+    # the cache discipline under test is the distributed loop's
+    monkeypatch.setattr(links, "PAGERANK_LOCAL_EDGE_THRESHOLD", 0)
     before = len(spark.sparkContext._jsc.getPersistentRDDs())
-    pagerank_hosts(
-        host_graph(edge_fixture), iterations=4, checkpoint_every=3,
-        local_threshold=0,  # the cache discipline under test is the loop's
-    ).collect()
+    pagerank_hosts(host_graph(edge_fixture), iterations=4).collect()
     after = len(spark.sparkContext._jsc.getPersistentRDDs())
-    # 4 rounds / checkpoint_every=3 -> 1 intermediate + 1 final checkpoint;
+    # 4 rounds / PAGERANK_CHECKPOINT_EVERY=3 -> 1 intermediate + 1 final;
     # the explicit persists (trans, hosts, 4x contrib) must all be gone
     assert after <= before + 2
 
 
-def test_trustrank_concentrates_on_seed_neighborhood(spark, edge_fixture):
+def test_trustrank_concentrates_on_seed_neighborhood(spark, edge_fixture,
+                                                    monkeypatch):
     """Seeded teleport: mass is a distribution, the seed outranks its
     classic-PageRank self, a host with no trust path still appears (rank
     ~0, never dropped), and local == distributed formula-for-formula."""
@@ -201,14 +203,14 @@ def test_trustrank_concentrates_on_seed_neighborhood(spark, edge_fixture):
     assert sum(tr.values()) == pytest.approx(1.0, abs=1e-9)
     # trust concentrates: the seed's rank exceeds its classic rank
     assert tr["a.org"] > pr["a.org"]
-    dist = {r["host"]: r["rank"]
-            for r in trustrank_hosts(g, seeds=["a.org"], iterations=6,
-                                     local_threshold=0).collect()}
-    for h in tr:
-        assert tr[h] == pytest.approx(dist[h], rel=1e-9)
     # a seed absent from the graph is an explicit error, not silence
     with pytest.raises(Exception, match="no seed host"):
         trustrank_hosts(g, seeds=["nowhere.example"], iterations=2).collect()
+    monkeypatch.setattr(links, "PAGERANK_LOCAL_EDGE_THRESHOLD", 0)
+    dist = {r["host"]: r["rank"]
+            for r in trustrank_hosts(g, seeds=["a.org"], iterations=6).collect()}
+    for h in tr:
+        assert tr[h] == pytest.approx(dist[h], rel=1e-9)
 
 
 def test_anchor_pairs_never_mispair(spark):

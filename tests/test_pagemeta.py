@@ -3,13 +3,13 @@
 import pytest
 from pyspark.sql import Row
 
-from ocr_spark.operators.pagemeta import page_meta
+from ocr_spark.operators.pagemeta import HEAD_BYTES, page_meta
 
 
-def _run(spark, html: str | bytes, head_bytes: int = 65536) -> Row:
+def _run(spark, html: str | bytes) -> Row:
     payload = html.encode("utf-8") if isinstance(html, str) else html
     df = spark.createDataFrame([("u", payload)], "url string, html binary")
-    return page_meta(df, head_bytes=head_bytes).collect()[0]
+    return page_meta(df).collect()[0]
 
 
 def test_full_head(spark):
@@ -71,9 +71,9 @@ def test_multiline_title_dotall(spark):
 
 def test_head_bytes_bound(spark):
     # title placed beyond the scanned slice is not found — the bound is real
-    page = "<head>" + " " * 128 + "<title>late</title></head>"
-    assert _run(spark, page, head_bytes=64).title is None
-    assert _run(spark, page, head_bytes=65536).title == "late"
+    pad = HEAD_BYTES - len("<head><title>late</title>")
+    assert _run(spark, "<head>" + " " * pad + "<title>late</title></head>").title == "late"
+    assert _run(spark, "<head>" + " " * (pad + 1) + "<title>late</title></head>").title is None
 
 
 def test_case_insensitive_tags(spark):

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from ocr_spark.operators.analytics import asof_prior_event, rollup_event_stats
 from ocr_spark.operators.chunking import STRIDE, WINDOW, WS_CLASS
 from ocr_spark.operators.extract_op import extract_pages
-from ocr_spark.plans.partitioning import ranged_repartition, salted_repartition
+from ocr_spark.plans.partitioning import salted_repartition
 from ocr_spark.sources.pages import synth_pages
 
 N_PARTS = 16
@@ -24,7 +24,7 @@ def _partition_counts(df):
 def test_salted_repartition_bounds_hot_host(spark):
     """The Zipf host skew motivates the salt: partitioning by bare host
     leaves the top host's pages in ONE partition; the salted key spreads
-    them over ~salt_buckets partitions and flattens the overall balance."""
+    them over ~SALT_BUCKETS partitions and flattens the overall balance."""
     pages = synth_pages(spark, 8000, num_partitions=8).select("url")
 
     top_host = (
@@ -34,13 +34,13 @@ def test_salted_repartition_bounds_hot_host(spark):
     assert top_host["count"] > 8000 / 20  # the skew is real (top host >5%)
 
     by_host = pages.repartition(N_PARTS, F.parse_url("url", F.lit("HOST")))
-    salted = salted_repartition(pages, N_PARTS, salt_buckets=16)
+    salted = salted_repartition(pages, N_PARTS)
 
     hot = pages.where(F.parse_url("url", F.lit("HOST")) == top_host["host"])
     hot_by_host = _partition_counts(
         hot.repartition(N_PARTS, F.parse_url("url", F.lit("HOST")))
     )
-    hot_salted = _partition_counts(salted_repartition(hot, N_PARTS, salt_buckets=16))
+    hot_salted = _partition_counts(salted_repartition(hot, N_PARTS))
     assert len(hot_by_host) == 1          # unsalted: entire host on one partition
     assert len(hot_salted) >= 8           # salted: spread over many partitions
 
@@ -48,39 +48,13 @@ def test_salted_repartition_bounds_hot_host(spark):
     assert _partition_counts(salted).max() < _partition_counts(by_host).max()
 
 
-def test_ranged_repartition_splits_hot_host_contiguously(spark):
-    """repartitionByRange(host, url): range bounds sampled on the COMPOSITE
-    key cut inside the top host (skew bounded), its chunks land on ADJACENT
-    partition ids (host-contiguous layout), and overall balance beats the
-    bare-host hash layout."""
-    pages = synth_pages(spark, 8000, num_partitions=8).select("url")
-    top_host = (
-        pages.withColumn("host", F.parse_url("url", F.lit("HOST")))
-        .groupBy("host").count().orderBy(F.desc("count")).first()
-    )
-    ranged = ranged_repartition(pages, N_PARTS)
-    hot_pids = sorted(
-        r["pid"]
-        for r in ranged.withColumn("pid", F.spark_partition_id())
-        .where(F.parse_url("url", F.lit("HOST")) == top_host["host"])
-        .select("pid").distinct().collect()
-    )
-    assert len(hot_pids) >= 2                       # hot host is split...
-    assert hot_pids == list(range(hot_pids[0], hot_pids[-1] + 1))  # ...adjacently
-
-    by_host = pages.repartition(N_PARTS, F.parse_url("url", F.lit("HOST")))
-    assert _partition_counts(ranged).max() < _partition_counts(by_host).max()
-
-    # rows are never duplicated or dropped by the sampling pass
-    assert ranged.count() == 8000
-
-
-def test_extract_range_strategy_matches_salted_bytes(spark):
-    """The pre-parse layout must not change extraction results: the range
-    strategy yields byte-identical (url, text) to the salted default."""
+def test_extract_unshuffled_matches_salted_bytes(spark):
+    """The pre-parse layout must not change extraction results: parsing
+    the input partitions as they are yields byte-identical (url, text) to
+    the salted shuffle."""
     pages = synth_pages(spark, 600, num_partitions=4)
     a = {(r.url, r.text) for r in extract_pages(pages, repartition=True).collect()}
-    b = {(r.url, r.text) for r in extract_pages(pages, repartition="range").collect()}
+    b = {(r.url, r.text) for r in extract_pages(pages, repartition=False).collect()}
     assert a == b and len(a) == 600
 
 
@@ -172,11 +146,13 @@ def test_chunk_documents_expression_matches_pure_chunker(spark):
     assert not any(k[0] in (3, 4) for k in got)
 
 
-def test_pack_sequences_two_pass_matches_global_cumsum(spark):
+def test_pack_sequences_two_pass_matches_global_cumsum(spark, monkeypatch):
     """The range-partitioned two-pass cumsum must equal the naive global
     computation at high partition counts (64 partitions over 600 chunks)."""
+    from ocr_spark import session
     from ocr_spark.operators.chunking import chunk_documents, pack_sequences
 
+    monkeypatch.setattr(session, "default_partitions", lambda spark: 64)
     docs = spark.createDataFrame(
         [(i, " ".join(f"w{i}_{j}" for j in range((i * 37) % 130 + 1)))
          for i in range(200)],
@@ -185,7 +161,7 @@ def test_pack_sequences_two_pass_matches_global_cumsum(spark):
     chunks = chunk_documents(docs)
     got = {
         (r.doc_id, r.chunk_idx): r.seq_id
-        for r in pack_sequences(chunks, num_partitions=64).collect()
+        for r in pack_sequences(chunks).collect()
     }
     rows = sorted(
         (r.doc_id, r.chunk_idx, r.n_tokens) for r in chunks.collect()

@@ -202,7 +202,7 @@ def test_extract_spans_single_salted_exchange(spark):
     assert "_span_batches(url" in plan
 
 
-@pytest.mark.parametrize("repartition", [True, False, "range"])
+@pytest.mark.parametrize("repartition", [True, False])
 def test_parse_entry_points_share_one_partition_policy(spark, repartition):
     """The text, markdown and span paths are one parse stage: for each
     repartition policy they plan the same exchanges, and only the four
@@ -375,8 +375,8 @@ def test_bucketed_join_is_exchange_free(spark, tmp_path):
         # broadcast them and skip bucketing; at the sizes bucketing exists
         # for, neither side is broadcastable — model that explicitly
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed(docs, "bkt_docs", str(tmp_path / "bd"), ["doc_id"], 8)
-        write_bucketed(sigs, "bkt_sigs", str(tmp_path / "bs"), ["doc_id"], 8)
+        write_bucketed(docs, "bkt_docs", str(tmp_path / "bd"), ["doc_id"])
+        write_bucketed(sigs, "bkt_sigs", str(tmp_path / "bs"), ["doc_id"])
         joined = spark.table("bkt_docs").join(spark.table("bkt_sigs"), "doc_id")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
@@ -422,7 +422,7 @@ def test_incremental_band_store_committed_side_no_exchange(spark, tmp_path):
     thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_band_store(state, "bkt_band_store", str(tmp_path / "bbs"), num_buckets=8)
+        write_band_store(state, "bkt_band_store", str(tmp_path / "bbs"))
         stored = spark.table("bkt_band_store")
         joined = probe.alias("l").join(
             stored.alias("r"), ["band", "bucket"]

@@ -1,19 +1,23 @@
 """The engine's surface has callers: names, parameters and constants.
 
-Three pure AST scans (no Spark), over one parse of the caller files:
+Four pure AST scans (no Spark), over one parse of the caller files (the
+engine, ``__spark_entry__.py``, ``bench.py`` and the non-test
+``perfbench/`` modules) and ``tests/``:
 
 - every public top-level def/class in ``ocr_spark/`` is spelt (``ast.Name``,
   ``ast.Attribute`` or an import alias) by a top-level statement other than
-  its own definition in the engine, ``__spark_entry__.py``, ``bench.py`` or
-  the non-test ``perfbench/`` modules. A function that only tests reach is
-  either a test oracle, which belongs in ``tests/``, or dead code;
+  its own definition in the caller files. A function that only tests reach
+  is either a test oracle, which belongs in ``tests/``, or dead code;
 - every defaulted parameter of a def or method in ``ocr_spark/`` is passed
-  by some call site in those files or in ``tests/``. A setting that no
-  caller sets is a constant;
+  by some call site in the caller files. Tests are not callers: a setting
+  that only a test sets is a test seam or a path no caller takes;
+- no required parameter of a def or method in ``ocr_spark/`` is passed the
+  same literal or UPPER_CASE constant by every call site, tests included.
+  A value that never varies is a constant;
 - every module-level assignment in ``ocr_spark/`` is read by some statement
   other than its own assignment (its own module counts).
 
-The ``EXEMPT`` modules are left out of the first two scans only.
+The ``EXEMPT`` modules are left out of the first three scans.
 """
 
 import ast
@@ -158,13 +162,81 @@ def defaulted_parameters():
             for name, _, _ in _defaulted(fn, cls)]
 
 
+def _required(fn, cls):
+    """``(name, positional index past self or None)`` of each parameter of
+    ``fn`` without a default, ``self``/``cls`` and ``*args``/``**kw`` aside."""
+    a = fn.args
+    positional = a.posonlyargs + a.args
+    offset = 1 if _is_method(fn, cls) else 0
+    out = [(p.arg, i - offset)
+           for i, p in enumerate(positional[:len(positional) - len(a.defaults)])
+           if i >= offset]
+    out += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+            if d is None]
+    return out
+
+
+def _constant_value(node):
+    """``ast.dump`` of ``node`` if it is a literal, a tuple or list of
+    literals, or an UPPER_CASE module constant; else None."""
+    if isinstance(node, (ast.Tuple, ast.List)):
+        parts = [_constant_value(e) for e in node.elts]
+        return None if None in parts else ast.dump(node)
+    name = getattr(node, "id", None) or getattr(node, "attr", None)
+    if isinstance(node, ast.Constant) or name and name.isupper():
+        return ast.dump(node)
+    return None
+
+
+def single_valued_parameters():
+    """``module:line function(parameter)`` of each required parameter that
+    every call site passes the same value: a literal, a tuple or list of
+    literals, or an UPPER_CASE module constant. Callees resolve by name,
+    as in ``unpassed_defaulted_parameters``. A function that is referenced
+    as a value (passed to ``mapInPandas``, ``udf``, a ``record_fn``, ...)
+    has call sites no scan sees, so it is skipped; so is a call made
+    through ``*args``/``**kw``."""
+    calls, as_value = {}, set()
+    for _, tree in _parsed():
+        funcs = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                f = n.func
+                callee = getattr(f, "id", None) or getattr(f, "attr", None)
+                starred = (any(isinstance(x, ast.Starred) for x in n.args)
+                           or any(k.arg is None for k in n.keywords))
+                if callee and not starred:
+                    calls.setdefault(callee, []).append(n)
+            elif (isinstance(n, (ast.Name, ast.Attribute)) and id(n) not in funcs
+                  and isinstance(n.ctx, ast.Load)):
+                as_value.add(getattr(n, "id", None) or n.attr)
+    found = []
+    for rel, tree in _engine_modules():
+        for fn, cls in _functions(tree):
+            callee = cls.name if fn.name == "__init__" and cls else fn.name
+            sites = calls.get(callee)
+            if not sites or callee in as_value:
+                continue
+            for name, pos in _required(fn, cls):
+                values = set()
+                for call in sites:
+                    given = [k.value for k in call.keywords if k.arg == name]
+                    if not given and pos is not None and pos < len(call.args):
+                        given = [call.args[pos]]
+                    values.add(_constant_value(given[0]) if given else None)
+                if len(values) == 1 and None not in values:
+                    found.append(f"{rel}:{fn.lineno} {fn.name}({name})")
+    return found
+
+
 def unpassed_defaulted_parameters():
     """``module:line function(parameter)`` of each defaulted parameter that
-    no call site passes, by keyword, by position (past ``self`` for
-    methods) or through ``*args``/``**kw``; ``ClassName(...)`` calls
-    ``__init__``. Callees resolve by name. A value forwarded from the
-    caller's own defaulted parameter with the same default counts only once
-    that parameter is itself passed, so the passed set is a fixpoint."""
+    no call site in the caller files (``tests/`` excluded) passes, by
+    keyword, by position (past ``self`` for methods) or through
+    ``*args``/``**kw``; ``ClassName(...)`` calls ``__init__``. Callees
+    resolve by name. A value forwarded from the caller's own defaulted
+    parameter with the same default counts only once that parameter is
+    itself passed, so the passed set is a fixpoint."""
     checked = {rel for rel, _ in _engine_modules()}
     by_callee = {}    # callee name -> [(param, positional index, id, default)]
     passes = []       # (callee, keywords, positions, forwarded (id, default))
@@ -174,7 +246,8 @@ def unpassed_defaulted_parameters():
             for name, pos, default in _defaulted(fn, cls):
                 by_callee.setdefault(callee, []).append(
                     (name, pos, (rel, fn.lineno, fn.name, name), ast.dump(default)))
-        _collect_passes(rel, tree, {}, None, passes)
+        if not rel.startswith("tests/"):
+            _collect_passes(rel, tree, {}, None, passes)
 
     passed = set()
     grew = True
@@ -254,8 +327,16 @@ def test_every_public_name_has_a_non_test_caller():
 def test_every_defaulted_parameter_is_passed():
     missing = unpassed_defaulted_parameters()
     assert not missing, (
-        "defaulted parameters in ocr_spark/ that no call site passes (fold "
-        "each into the value it defaults to):\n  " + "\n  ".join(missing))
+        "defaulted parameters in ocr_spark/ that no non-test call site "
+        "passes (fold each into the value it defaults to):\n  "
+        + "\n  ".join(missing))
+
+
+def test_every_required_parameter_takes_more_than_one_value():
+    found = single_valued_parameters()
+    assert not found, (
+        "required parameters in ocr_spark/ that every call site passes the "
+        "same value (fold each into that value):\n  " + "\n  ".join(found))
 
 
 def test_every_module_constant_is_read():

@@ -12,12 +12,13 @@ import io
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_spark import session
 from ocr_spark.operators.blocklist import blocklist_gate
 from ocr_spark.operators.ranking import distributed_ntile, perplexity_buckets
 from ocr_spark.operators.sampling import soft_sample
 
 
-def _ntile_rows(spark, num_partitions):
+def _ntile_rows(spark):
     # groups of size 7, 3, 1 — none divisible by 3
     rows = [("a", i, i * 10) for i in range(7)]
     rows += [("b", i, 100 - i) for i in range(3)]
@@ -28,14 +29,13 @@ def _ntile_rows(spark, num_partitions):
         n=3,
         group_col="g",
         order_cols=[F.desc("score"), F.asc("k")],
-        num_partitions=num_partitions,
     )
     return sorted(
         out.select("g", "k", "group_rank", "bucket_idx").collect()
     )
 
 
-def test_distributed_ntile_exact_and_partition_invariant(spark):
+def test_distributed_ntile_exact_and_partition_invariant(spark, monkeypatch):
     """Ranks/buckets equal the single-node answer at every partitioning
     (1 partition ... more partitions than rows)."""
     expected = {
@@ -50,9 +50,10 @@ def test_distributed_ntile_exact_and_partition_invariant(spark):
         ("c", 0, 1, 0),
     }
     for nparts in (1, 2, 5, 32):
+        monkeypatch.setattr(session, "default_partitions", lambda _, n=nparts: n)
         got = {
             (r.g, r.k, r.group_rank, r.bucket_idx)
-            for r in _ntile_rows(spark, nparts)
+            for r in _ntile_rows(spark)
         }
         assert got == expected, f"num_partitions={nparts}"
 
@@ -63,7 +64,7 @@ def test_perplexity_buckets_unscored_branch(spark):
     rows = [(i, "the cat sat on the mat " * (i + 1), "en") for i in range(6)]
     rows += [(100, "single", "en"), (101, None, "en")]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    out = perplexity_buckets(df, num_partitions=3).collect()
+    out = perplexity_buckets(df).collect()
     assert len(out) == 8
     by_id = {r.doc_id: r for r in out}
     for unscored_id in (100, 101):
@@ -104,23 +105,16 @@ def test_soft_sample_monotone_and_nulls(spark):
     but present; raising the weight never flips keep->drop."""
     rows = [(i, 0.0, 0.3, 1.0) for i in range(200)]
     df = spark.createDataFrame(rows, "doc_id long, w0 double, w3 double, w1 double")
-    got = (
-        soft_sample(
-            soft_sample(
-                soft_sample(df, "w0", out_col="k0"), "w3", out_col="k3"
-            ),
-            "w1",
-            out_col="k1",
-        )
-        .select("doc_id", "k0", "k3", "k1")
-        .collect()
+    k0, k3, k1 = (
+        {r.doc_id: r.kept for r in soft_sample(df, w).select("doc_id", "kept").collect()}
+        for w in ("w0", "w3", "w1")
     )
-    assert len(got) == 200
-    assert not any(r.k0 for r in got)
-    assert all(r.k1 for r in got)
-    n3 = sum(1 for r in got if r.k3)
+    assert len(k0) == len(k3) == len(k1) == 200
+    assert not any(k0.values())
+    assert all(k1.values())
+    n3 = sum(k3.values())
     assert 30 <= n3 <= 90  # ~0.3 of 200, deterministic hash draw
-    assert all(r.k1 for r in got if r.k3)  # monotone in the weight
+    assert all(k1[d] for d, kept in k3.items() if kept)  # monotone in the weight
 
     null_df = spark.createDataFrame(
         [(1, None)], "doc_id long, score double"
@@ -200,14 +194,12 @@ def test_top_fraction_gate_exact_count_ties_and_invariance(spark):
         F.col("id").alias("doc_id"),
         (F.col("id") % 3).cast("double").alias("score"),
     )
-    out = top_fraction_gate(df, frac=0.1, score_col="score").toPandas()
+    out = top_fraction_gate(df, frac=0.1).toPandas()
     assert len(out) == 100
     kept = out[out.kept]
     assert len(kept) == 10  # ceil(0.1 * 100)
     # the kept set: all score-2 rows ranked by id ascending
     want = sorted(i for i in range(100) if i % 3 == 2)[:10]
     assert sorted(kept.doc_id) == want
-    again = top_fraction_gate(
-        df.repartition(7), frac=0.1, score_col="score"
-    ).toPandas()
+    again = top_fraction_gate(df.repartition(7), frac=0.1).toPandas()
     assert sorted(again[again.kept].doc_id) == want

@@ -3,7 +3,9 @@ a crash mid-run must lose at most the uncommitted chunk, a resumed run must
 produce a final table byte-identical to an uninterrupted run, and orphan data
 from a crash between data-write and manifest-rename must stay invisible."""
 
+import contextlib
 import os
+import re
 
 import pyarrow.dataset as pads
 import pytest
@@ -13,6 +15,38 @@ from ocr_spark.sources.iceberg_lite import IcebergLiteTable
 from ocr_spark.sources.pages import synth_pages
 
 N = 400
+
+
+@contextlib.contextmanager
+def _crash_after_chunks(n):
+    """Expect a run to die once its ``n``-th metrics snapshot has committed:
+    the crash point between one chunk's last commit and the next chunk."""
+    real = IcebergLiteTable.append
+    commits = 0
+
+    def append(self, df, **kw):
+        nonlocal commits
+        snap = real(self, df, **kw)
+        if self.root.endswith("/metrics"):
+            commits += 1
+            if commits == n:
+                raise RuntimeError(f"injected crash after {n} chunks")
+        return snap
+
+    IcebergLiteTable.append = append
+    try:
+        with pytest.raises(RuntimeError, match="injected crash"):
+            yield
+    finally:
+        IcebergLiteTable.append = real
+
+
+def _age(path):
+    """Backdate ``path`` past remove_orphans' in-flight guard."""
+    from ocr_spark.sources.iceberg_lite import ORPHAN_AGE_S
+
+    old = os.path.getmtime(path) - ORPHAN_AGE_S - 60
+    os.utime(path, (old, old))
 
 
 def _final_texts(spark, root):
@@ -29,9 +63,8 @@ def test_crash_then_resume_matches_uninterrupted(spark, tmp_path):
     assert len(clean) == N
 
     crash_root = str(tmp_path / "crashy")
-    with pytest.raises(RuntimeError, match="injected crash"):
-        run_extract(spark, pages, crash_root, run_id="r1", chunks=4,
-                    num_partitions=4, fail_chunk_after=2)
+    with _crash_after_chunks(2):
+        run_extract(spark, pages, crash_root, run_id="r1", chunks=4, num_partitions=4)
     partial = _final_texts(spark, crash_root)
     assert 0 < len(partial) < N
 
@@ -83,9 +116,8 @@ def test_partial_resume_keeps_the_fresh_run_shuffle(spark, tmp_path, monkeypatch
 
     monkeypatch.setattr("ocr_spark.pipeline.extract_pages", traced)
     root = str(tmp_path / "t")
-    with pytest.raises(RuntimeError, match="injected crash"):
-        run_extract(spark, pages, root, run_id="r1", chunks=4,
-                    num_partitions=16, fail_chunk_after=1)
+    with _crash_after_chunks(1):
+        run_extract(spark, pages, root, run_id="r1", chunks=4, num_partitions=16)
     assert "RepartitionByExpression" in plans[0]  # the fresh run shuffles
     committed = IcebergLiteTable(f"{root}/extracted").read(spark).inputFiles()
     assert len(committed) >= spark.sparkContext.defaultParallelism
@@ -190,19 +222,27 @@ def _docs_df(spark, lo, hi):
     return spark.createDataFrame(rows, "doc_id long, text string, lang string")
 
 
+def _partition_filters(df):
+    """The ``PartitionFilters`` of the one file scan in ``df``'s plan,
+    attribute ids stripped."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.sub(r"#\d+", "", re.search(r"PartitionFilters: \[(.*?)\]", plan).group(1))
+
+
 def test_partitioned_append_prunes_by_partition_value(spark, tmp_path):
+    """A filter on the partition column prunes partition dirs in Spark's
+    own scan: ``read`` keeps the snapshot basePath, so the Hive column is
+    a partition column of the file index."""
     t = IcebergLiteTable(str(tmp_path / "t"))
     t.append(_docs_df(spark, 0, 90), partition_by="lang", stats_cols=("doc_id",))
     all_entries = t.entries()
     assert len(all_entries) == 3
     assert {e["partition"]["lang"] for e in all_entries} == {"en", "de", "fr"}
 
-    pruned = t.select_entries(partition_eq={"lang": "en"})
-    assert len(pruned) == 1 and len(pruned) < len(all_entries)
-
-    got = t.read(spark, partition_eq={"lang": "en"}).select("doc_id").collect()
-    want = t.read(spark).where("lang = 'en'").select("doc_id").collect()
-    assert sorted(r.doc_id for r in got) == sorted(r.doc_id for r in want)
+    en = t.read(spark).where("lang = 'en'")
+    assert _partition_filters(en) == "isnotnull(lang), (lang = en)"
+    got = sorted(r.doc_id for r in en.select("doc_id").collect())
+    assert got == list(range(0, 90, 3))
 
 
 def test_range_stats_prune_whole_snapshots(spark, tmp_path):
@@ -214,14 +254,8 @@ def test_range_stats_prune_whole_snapshots(spark, tmp_path):
     hit = t.select_entries(ranges={"doc_id": (150, 160)})
     assert len(hit) == 1
     assert hit[0]["stats"]["doc_id"] == [100, 199]
-
-    got = t.read(spark, ranges={"doc_id": (150, 160)})
-    # the pruned read sees only the second snapshot's rows
-    assert got.count() == 100
-    # everything pruned -> empty frame with the requested schema
-    empty = t.read(spark, schema="doc_id long, text string, lang string",
-                   ranges={"doc_id": (5000, 6000)})
-    assert empty.count() == 0
+    # a range past every entry's stats prunes them all
+    assert t.select_entries(ranges={"doc_id": (5000, 6000)}) == []
 
 
 def test_pre_stats_manifest_format_still_reads(spark, tmp_path):
@@ -242,7 +276,6 @@ def test_pre_stats_manifest_format_still_reads(spark, tmp_path):
 
     assert t.read(spark).count() == 30
     # unknown metadata is kept (conservative), never mistakenly pruned
-    assert len(t.select_entries(partition_eq={"lang": "en"})) == 1
     assert len(t.select_entries(ranges={"doc_id": (0, 1)})) == 1
 
 
@@ -254,14 +287,11 @@ def test_pipeline_writes_prunable_partitioned_snapshots(spark, tmp_path):
     entries = t.entries()
     assert all(e["partition"].get("content_kind") for e in entries)
     assert all("url" in e["stats"] for e in entries)
-    full = read_extracted(spark, root)
-    html_only = t.read(spark, partition_eq={"content_kind": "html"})
-    assert html_only.count() == full.where("content_kind = 'html'").count()
-    # pruning selected strictly fewer dirs than the full read when several
-    # kinds exist, and never more
-    kinds = {e["partition"]["content_kind"] for e in entries}
-    if len(kinds) > 1:
-        assert len(t.select_entries(partition_eq={"content_kind": "html"})) < len(entries)
+    html_only = read_extracted(spark, root).where("content_kind = 'html'")
+    assert _partition_filters(html_only) == (
+        "isnotnull(content_kind), (content_kind = html)")
+    kinds = [r.content_kind for r in html_only.select("content_kind").collect()]
+    assert kinds and set(kinds) == {"html"}
 
 
 def test_schema_evolution_add_column(spark, tmp_path):
@@ -335,7 +365,8 @@ def test_remove_orphans_only_touches_unreferenced(spark, tmp_path):
     # default age guard: a FRESH unreferenced dir is an in-flight append's
     # data, not a crash leftover — it must survive
     assert t.remove_orphans() == []
-    removed = t.remove_orphans(older_than_s=0)
+    _age(orphan)
+    removed = t.remove_orphans()
     assert [os.path.basename(d) for d in removed] == ["deadbeef"]
     assert [r["id"] for r in t.read(spark).collect()] == [1]
 
@@ -355,21 +386,22 @@ def test_tmp_manifest_crash_leftover_is_invisible_and_cleaned(spark, tmp_path):
         f.write('{"snapshot_id": "dead', )  # truncated json
     assert len(t.snapshots()) == 1          # tmp never parsed
     t.expire_snapshots(keep_last=1)         # maintenance unaffected
-    t.remove_orphans(older_than_s=0)
+    _age(broken)
+    t.remove_orphans()
     assert not os.path.exists(broken)
     assert [r["id"] for r in t.read(spark).collect()] == [1]
 
 
 def test_partition_pruning_survives_hive_escaping(spark, tmp_path):
     """Partition values with escapable chars ('a b' -> 'a%20b' on disk)
-    must still match partition_eq on the RAW value — a false prune
+    must still match a partition filter on the RAW value — a false prune
     silently returns zero rows for data that exists."""
     from ocr_spark.sources.iceberg_lite import IcebergLiteTable
 
     t = IcebergLiteTable(str(tmp_path / "esc"))
     df = spark.createDataFrame([(1, "a b"), (2, "plain")], "id long, cat string")
     t.append(df, partition_by="cat")
-    got = t.read(spark, partition_eq={"cat": "a b"})
+    got = t.read(spark).where("cat = 'a b'")
     assert [r["id"] for r in got.collect()] == [1]
 
 
@@ -416,23 +448,17 @@ def test_expire_after_compact_with_partitioned_entries(spark, tmp_path):
     t.append(_docs_df(spark, 60, 90), partition_by="lang", stats_cols=("doc_id",))
     before = sorted(r.doc_id for r in t.read(spark).select("doc_id").collect())
 
-    t.compact(spark, target_partitions=1, partition_by="lang",
-              stats_cols=("doc_id",))
+    t.compact(spark, target_partitions=1)
     res = t.expire_snapshots(keep_last=1)
     assert res["manifests_removed"] == 2
     assert res["dirs_removed"] >= 1
 
     after = sorted(r.doc_id for r in t.read(spark).select("doc_id").collect())
     assert after == before
-    # surviving entries are the compacted snapshot's partition subdirs,
-    # with pruning metadata intact
+    # the surviving entry is the compacted snapshot's one data dir
     entries = t.entries()
-    assert {e["partition"]["lang"] for e in entries} == {"en", "de", "fr"}
-    assert all(e["stats"].get("doc_id") for e in entries)
-    for e in entries:
-        assert os.path.isdir(e["dir"])
-    # only one read via pruning still works post-expire
-    assert t.read(spark, partition_eq={"lang": "en"}).count() == 30
+    assert len(entries) == 1 and os.path.isdir(entries[0]["dir"])
+    assert t.read(spark).where("lang = 'en'").count() == 30
 
 
 def test_merge_into_upserts_and_carries_untouched_entries_verbatim(spark, tmp_path):
@@ -455,7 +481,7 @@ def test_merge_into_upserts_and_carries_untouched_entries_verbatim(spark, tmp_pa
         [(110, "updated 110", "en"), (200, "brand new", "de")],
         "doc_id long, text string, lang string",
     )
-    t.merge_into(spark, src, key_cols=("doc_id",), stats_cols=("doc_id",))
+    t.merge_into(spark, src, stats_cols=("doc_id",))
 
     entries = t.entries()
     # the low segment's entry is carried VERBATIM; the high one is gone
@@ -473,27 +499,13 @@ def test_merge_into_upserts_and_carries_untouched_entries_verbatim(spark, tmp_pa
     assert rows[0] == "text 0" and rows[149] == "text 149"
 
 
-def test_merge_into_delete_mode_and_empty_table(spark, tmp_path):
+def test_merge_into_empty_table_inserts(spark, tmp_path):
     from ocr_spark.sources.iceberg_lite import IcebergLiteTable
 
     t = IcebergLiteTable(str(tmp_path / "t"))
     # merge on a table with no snapshot = plain insert
-    t.merge_into(spark, _docs_df(spark, 0, 10), key_cols=("doc_id",),
-                 stats_cols=("doc_id",))
+    t.merge_into(spark, _docs_df(spark, 0, 10), stats_cols=("doc_id",))
     assert t.read(spark).count() == 10
-
-    # delete mode removes matched keys, inserts nothing
-    src = spark.createDataFrame([(3, "x", "en"), (99, "y", "de")],
-                                "doc_id long, text string, lang string")
-    t.merge_into(spark, src, key_cols=("doc_id",), when_matched="delete")
-    left = sorted(r["doc_id"] for r in t.read(spark).collect())
-    assert left == [0, 1, 2, 4, 5, 6, 7, 8, 9]
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        IcebergLiteTable(str(tmp_path / "none")).merge_into(
-            spark, src, key_cols=("doc_id",), when_matched="delete")
 
 
 def test_merge_into_partition_pruning_with_time_travel(spark, tmp_path):
@@ -511,8 +523,7 @@ def test_merge_into_partition_pruning_with_time_travel(spark, tmp_path):
 
     src = spark.createDataFrame([(0, "rev en 0", "en")],
                                 "doc_id long, text string, lang string")
-    t.merge_into(spark, src, key_cols=("doc_id",), partition_by="lang",
-                 stats_cols=("doc_id",))
+    t.merge_into(spark, src, partition_by="lang", stats_cols=("doc_id",))
 
     assert other_dirs <= {e["dir"] for e in t.entries()}
     assert t.current_snapshot()["properties"]["entries_untouched"] == 2
@@ -525,10 +536,9 @@ def test_merge_into_partition_pruning_with_time_travel(spark, tmp_path):
 
 def test_partition_evolution_across_snapshots(spark, tmp_path):
     """Iceberg partition-evolution semantics: a table appended first
-    UNPARTITIONED and then partitioned-by-lang must read as the union,
-    and partition pruning must stay conservative — the unpartitioned
-    entry (no recorded lang) is always kept, the mismatched partitioned
-    entries are dropped."""
+    UNPARTITIONED and then partitioned-by-lang must read as the union, and
+    a filter on lang reads lang as a data column of the flat snapshot and
+    as a partition column of the Hive one."""
     from ocr_spark.sources.iceberg_lite import IcebergLiteTable
 
     t = IcebergLiteTable(str(tmp_path / "t"))
@@ -536,18 +546,10 @@ def test_partition_evolution_across_snapshots(spark, tmp_path):
     t.append(_docs_df(spark, 30, 90), partition_by="lang",
              stats_cols=("doc_id",))                                   # hive
     assert t.read(spark).count() == 90
-
-    kept = t.select_entries(partition_eq={"lang": "en"})
-    # conservative: 1 unpartitioned entry (unknown lang) + exactly the
-    # en subdir of the partitioned snapshot
-    langs = [e["partition"].get("lang") for e in kept]
-    assert sorted(x for x in langs if x) == ["en"]
-    assert langs.count(None) == 1
-
-    got = t.read(spark, partition_eq={"lang": "en"})
-    # rows: all 30 flat rows (conservative) + the 20 partitioned en rows
-    assert got.count() == 30 + 20
-    assert got.where("lang = 'en'").count() == 10 + 20
+    langs = sorted(str(e["partition"].get("lang")) for e in t.entries())
+    assert langs == ["None", "de", "en", "fr"]
+    # rows: the 10 flat en rows + the 20 partitioned en rows
+    assert t.read(spark).where("lang = 'en'").count() == 10 + 20
 
 
 def test_compact_by_target_file_size(spark, tmp_path):
@@ -564,7 +566,7 @@ def test_compact_by_target_file_size(spark, tmp_path):
     before = sorted(r.doc_id for r in t.read(spark).collect())
 
     # a target far above the table size -> exactly 1 output file dir
-    t.compact(spark, target_file_mb=1024, stats_cols=("doc_id",))
+    t.compact(spark, target_file_mb=1024)
     assert t.current_snapshot()["properties"]["target_partitions"] == 1
     assert sorted(r.doc_id for r in t.read(spark).collect()) == before
 

@@ -74,11 +74,11 @@ def test_robots_filter_prefix_semantics(spark):
 def test_cap_per_group_deterministic_and_bounded(spark):
     rows = [(i, f"h{i % 3}") for i in range(60)]
     df = spark.createDataFrame(rows, "doc_id long, host string")
-    out = cap_per_group(df, "host", k=5).toPandas()
+    out = cap_per_group(df, k=5).toPandas()
     kept = out[out.kept]
     assert len(out) == 60                       # nothing silently filtered
     assert kept.groupby("host").size().max() == 5
-    again = cap_per_group(df.repartition(7), "host", k=5).toPandas()
+    again = cap_per_group(df.repartition(7), k=5).toPandas()
     a = sorted(map(tuple, out[["doc_id", "cap_rank", "kept"]].values.tolist()))
     b = sorted(map(tuple, again[["doc_id", "cap_rank", "kept"]].values.tolist()))
     assert a == b
@@ -86,7 +86,7 @@ def test_cap_per_group_deterministic_and_bounded(spark):
 
 def test_cap_per_group_ranks_dense(spark):
     df = spark.createDataFrame([(i, "x") for i in range(10)], "doc_id long, host string")
-    out = cap_per_group(df, "host", k=3).toPandas()
+    out = cap_per_group(df, k=3).toPandas()
     assert sorted(out.cap_rank) == list(range(1, 11))
 
 
@@ -111,9 +111,10 @@ def test_crawl_delays_group_aware(spark):
 
     robots = spark.createDataFrame(
         [
+            # badbot's lower delay must not leak into '*' traffic
             ("a.com",
              "User-agent: *\nCrawl-delay: 2.5\n"
-             "User-agent: badbot\nCrawl-delay: 60"),
+             "User-agent: badbot\nCrawl-delay: 0.1"),
             # delay only in an agent-specific group: '*' traffic has none
             ("b.com", "User-agent: fastbot\nCrawl-delay: 0.5"),
             # ungrouped delay (before any UA line): ignored per the fold
@@ -126,14 +127,6 @@ def test_crawl_delays_group_aware(spark):
     star = {(r["host"], r["crawl_delay_s"])
             for r in robots_crawl_delays(robots).collect()}
     assert star == {("a.com", 2.5)}
-    bad = {(r["host"], r["crawl_delay_s"])
-           for r in robots_crawl_delays(robots, agent="badbot").collect()}
-    # badbot's exact group wins on a.com; b/c/d contribute nothing for it
-    assert bad == {("a.com", 60.0)}
-    fast = {(r["host"], r["crawl_delay_s"])
-            for r in robots_crawl_delays(robots, agent="fastbot").collect()}
-    # fastbot: exact group on b.com; falls back to '*' on a.com
-    assert fast == {("a.com", 2.5), ("b.com", 0.5)}
 
 
 def test_crawl_delays_min_across_groups_and_crlf(spark):

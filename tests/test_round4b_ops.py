@@ -188,13 +188,13 @@ def test_random_projection_jl_distance_preservation(spark):
 
     import numpy as np
 
-    from ocr_spark.operators.similarity import random_projection
+    from ocr_spark.operators.similarity import RP_K, random_projection
 
     df = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").limit(30)
     pdf = df.toPandas()
     orig = np.array([np.array(e, dtype=float) for e in pdf.embedding])
-    k = 16
-    long = random_projection(df, k=k).toPandas()
+    k = RP_K
+    long = random_projection(df).toPandas()
     assert len(long) == len(pdf) * k
     proj = np.zeros((len(pdf), k))
     idx = {v: i for i, v in enumerate(pdf.vec_id)}
@@ -207,9 +207,11 @@ def test_random_projection_jl_distance_preservation(spark):
         ratios.append(dp / do)
     ratios = np.array(ratios)
     assert 0.85 < ratios.mean() < 1.15      # unbiased in aggregate
-    assert ratios.min() > 0.4 and ratios.max() < 2.0
+    # per pair, k * ratio^2 is ~chi-square(k): at k = RP_K = 8 these bounds
+    # have per-pair tail probabilities of ~6e-5 below and ~1e-7 above
+    assert ratios.min() > 0.22 and ratios.max() < 2.45
     # rerun is bit-identical (seeded matrix, no RNG at eval time)
-    again = random_projection(df, k=k).toPandas()
+    again = random_projection(df).toPandas()
     pd.testing.assert_frame_equal(
         long.sort_values(["vec_id", "j"]).reset_index(drop=True),
         again.sort_values(["vec_id", "j"]).reset_index(drop=True),
@@ -258,7 +260,7 @@ def test_pq_codebooks_shape_and_codes_bounded(spark):
     assert set(cents["sub"]) == set(range(8))
     assert cents.groupby("sub").size().le(16).all()
     assert cents.cv.map(len).eq(8).all()
-    subs = _pq_subvectors(df, 8, 8, "embedding", "vec_id")
-    codes = _pq_assign(subs, spark.createDataFrame(cents), "vec_id").toPandas()
+    subs = _pq_subvectors(df)
+    codes = _pq_assign(subs, spark.createDataFrame(cents)).toPandas()
     assert len(codes) == 200 * 8  # every (vec, sub) encoded
     assert codes.cent_id.between(0, 15).all()

@@ -44,13 +44,15 @@ def test_contamination_finds_verbatim_and_embedded_copies(spark):
 
 def test_contamination_common_gram_cap(spark):
     """A gram present in many benchmark docs is not contamination evidence
-    and must be dropped before the join (max_df)."""
+    and must be dropped before the join (CONTAM_MAX_DF)."""
+    from ocr_spark.operators.dedup import CONTAM_MAX_DF
+
     common = "one two three four five six seven eight"
     bench = spark.createDataFrame(
-        [(i, common) for i in range(10)], "doc_id long, text string"
+        [(i, common) for i in range(CONTAM_MAX_DF + 1)], "doc_id long, text string"
     )
     corpus = spark.createDataFrame([(100, common)], "doc_id long, text string")
-    out = contamination_check(corpus, bench, max_df=5).collect()
+    out = contamination_check(corpus, bench).collect()
     assert out == []
 
 
@@ -65,19 +67,19 @@ def test_leakage_safe_split_group_atomic(spark):
     rows = [(i, f"host{i % 37}.org") for i in range(500)]
     df = spark.createDataFrame(rows, "doc_id long, host string").repartition(7)
 
-    out = leakage_safe_split(df, "host", eval_frac=0.2)
+    out = leakage_safe_split(df, eval_frac=0.2)
     per_group = out.groupBy("host").agg(
         F.countDistinct("split").alias("n_splits")
     )
     assert per_group.where(F.col("n_splits") > 1).count() == 0
 
     again = {r["doc_id"]: r["split"]
-             for r in leakage_safe_split(df, "host", eval_frac=0.2).collect()}
+             for r in leakage_safe_split(df, eval_frac=0.2).collect()}
     first = {r["doc_id"]: r["split"] for r in out.collect()}
     assert first == again
 
     wider = {r["doc_id"]: r["split"]
-             for r in leakage_safe_split(df, "host", eval_frac=0.5).collect()}
+             for r in leakage_safe_split(df, eval_frac=0.5).collect()}
     for doc, split in first.items():
         if split == "eval":
             assert wider[doc] == "eval"  # nested: eval only ever grows
@@ -89,6 +91,6 @@ def test_leakage_safe_split_zero_shuffle_plan(spark):
     df = spark.createDataFrame(
         [(1, "a.org"), (2, "b.org")], "doc_id long, host string"
     )
-    plan = leakage_safe_split(df, "host")._jdf.queryExecution() \
+    plan = leakage_safe_split(df)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "Exchange" not in plan and "Python" not in plan

@@ -120,6 +120,6 @@ def test_operator_never_drops_a_url(spark):
     from ocr_spark.sources.pages import synth_pages
 
     pages = synth_pages(spark, 200)
-    out = extract_page_spans(pages, num_partitions=5, repartition=True)
+    out = extract_page_spans(pages, repartition=True)
     urls = {r.url for r in out.select("url").distinct().collect()}
     assert len(urls) == 200

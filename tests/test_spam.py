@@ -1,13 +1,13 @@
 """Host-level spam signals: intra-host duplication, link-shape
 imbalance, the min_pages eligibility floor, and full-outer host merge."""
 
-from ocr_spark.operators.spam import spam_host_signals
+from ocr_spark.operators.spam import SPAM_MIN_PAGES, spam_host_signals
 
 
-def _out(spark, docs, edges, **kw):
+def _out(spark, docs, edges):
     d = spark.createDataFrame(docs, "host string, text string")
     e = spark.createDataFrame(edges, "src_host string, dst_host string")
-    return {r["host"]: r for r in spam_host_signals(d, e, **kw).collect()}
+    return {r["host"]: r for r in spam_host_signals(d, e).collect()}
 
 
 def test_template_farm_flags_spam_dup(spark):
@@ -50,9 +50,9 @@ def test_min_pages_floor_blocks_condemnation(spark):
     tiny = out["tiny"]
     assert tiny.dup_ratio == 0.5 and tiny.link_ratio == 9.0
     assert not tiny.spam_dup and not tiny.spam_farm and not tiny.is_spam
-    # ...and the same host IS condemned once min_pages admits it
-    relaxed = _out(spark, docs, edges, min_pages=2)["tiny"]
-    assert relaxed.spam_farm and relaxed.is_spam
+    # ...and the same shape IS condemned once the host has SPAM_MIN_PAGES
+    grown = _out(spark, [("tiny", "same")] * SPAM_MIN_PAGES, edges)["tiny"]
+    assert grown.spam_dup and grown.spam_farm and grown.is_spam
 
 
 def test_full_outer_hosts_without_pages_or_edges(spark):

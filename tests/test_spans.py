@@ -179,7 +179,7 @@ def test_decontaminate_spans_excises_benchmark_only(spark):
     ]
     corpus = spark.createDataFrame(rows, "doc_id long, text string")
     bench = spark.createDataFrame([(bench_text,)], "text string")
-    out = {r.doc_id: r for r in decontaminate_spans(corpus, bench, w=8).collect()}
+    out = {r.doc_id: r for r in decontaminate_spans(corpus, bench).collect()}
     assert len(out) == 4
     assert out[0].clean_text == "intro words here outro words conclude nicely"
     assert out[0].n_removed == 8
@@ -198,5 +198,5 @@ def test_decontaminate_spans_merges_touching_windows(spark):
         [(0, f"head {bench} tail")], "doc_id long, text string"
     )
     b = spark.createDataFrame([(bench,)], "text string")
-    r = decontaminate_spans(corpus, b, w=8).collect()[0]
+    r = decontaminate_spans(corpus, b).collect()[0]
     assert r.clean_text == "head tail" and r.n_removed == 10

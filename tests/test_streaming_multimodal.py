@@ -7,7 +7,10 @@ import pytest
 from ocr_spark.golden import golden_frame
 from ocr_spark.operators.multimodal import media_features, sniff_kind
 from ocr_spark.sources.pages import synth_pages
-from ocr_spark.streaming.extract_stream import start_extract_stream
+from ocr_spark.streaming.extract_stream import (
+    MAX_FILES_PER_TRIGGER,
+    start_extract_stream,
+)
 
 N = 200
 
@@ -15,14 +18,16 @@ N = 200
 @pytest.fixture(scope="module")
 def pages_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("pages_stream"))
-    synth_pages(spark, N, num_partitions=4).write.mode("overwrite").parquet(d)
+    # more files than one micro-batch takes, so a drain runs several
+    synth_pages(spark, N, num_partitions=2 * MAX_FILES_PER_TRIGGER).write.mode(
+        "overwrite").parquet(d)
     return d
 
 
 def test_stream_extract_matches_golden(spark, pages_dir, tmp_path):
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    q = start_extract_stream(spark, pages_dir, out, ckpt, max_files_per_trigger=2)
+    q = start_extract_stream(spark, pages_dir, out, ckpt)
     q.processAllAvailable()
     q.stop()
     got = spark.read.parquet(out).toPandas().set_index("url").sort_index()
@@ -34,7 +39,7 @@ def test_stream_extract_matches_golden(spark, pages_dir, tmp_path):
 def test_stream_restart_is_exactly_once(spark, pages_dir, tmp_path):
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    q = start_extract_stream(spark, pages_dir, out, ckpt, max_files_per_trigger=1)
+    q = start_extract_stream(spark, pages_dir, out, ckpt)
     q.processAllAvailable()
     q.stop()
     n1 = spark.read.parquet(out).count()

@@ -9,7 +9,7 @@ def _parse(spark, url):
     return df.select(
         U.url_scheme("url").alias("scheme"),
         U.url_host("url").alias("host"),
-        U.registered_domain("url").alias("domain"),
+        U.registered_domain().alias("domain"),
         U.url_path("url").alias("path"),
         U.url_query_canonical("url").alias("q"),
         U.url_canonicalize("url").alias("canon"),

@@ -2315,7 +2315,7 @@ def q_fix_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/encoding.py), scored by length shrinkage, and witnessed by
     the canonical md5 of the FULL repaired text. The oracle replays the
     identical chain generated from the same MOJIBAKE_MAP."""
-    from ocr_spark.functions.encoding import fix_mojibake, mojibake_score
+    from ocr_spark.functions.encoding import fix_mojibake
     from ocr_spark.functions.text import fingerprint_md5
 
     d = F.col("doc_id")

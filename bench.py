@@ -64,7 +64,6 @@ from __future__ import annotations
 import glob
 import json
 import os
-import queue
 import re
 import shutil
 import statistics

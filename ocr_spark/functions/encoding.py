@@ -79,17 +79,6 @@ def fix_mojibake(c) -> Column:
     return reduce(lambda acc, p: F.replace(acc, F.lit(p[0]), F.lit(p[1])), MOJIBAKE_MAP, _col(c))
 
 
-def mojibake_score(c) -> Column:
-    """Number of characters removed by one repair pass (0 = clean).
-
-    Each repaired digraph/trigraph shrinks the string by len(garbled)-1,
-    so length-before minus length-after counts garbled sequences
-    weighted by their byte excess — a cheap, monotone badness signal
-    computable in the same projection as the repair.
-    """
-    return (F.length(_col(c)) - F.length(fix_mojibake(c))).alias("mojibake_score")
-
-
 # --- exact SQL twin (DuckDB dialect) ---------------------------------------
 
 

@@ -19,6 +19,7 @@ metrics rows.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import uuid
 
@@ -253,8 +254,9 @@ def cmd_compact(args: argparse.Namespace) -> int:
         sid = t.compact(spark, target_file_mb=args.target_file_mb)
     else:
         sid = t.compact(spark, target_partitions=args.target_partitions)
-    files = t.current_snapshot()["properties"]["target_partitions"]
-    print(f"compacted into snapshot {sid} ({files} files)")
+    entries = t.entries()
+    files = sum(f.endswith(".parquet") for e in entries for f in os.listdir(e["dir"]))
+    print(f"compacted into snapshot {sid} ({files} files in {len(entries)} entries)")
     return 0
 
 

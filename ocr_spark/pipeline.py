@@ -5,7 +5,8 @@ batch_folder_process.py segment loop, SURVEY §3.2):
 
     pages ──left_anti(committed urls)──► todo ──groupBy(chunk).count()──►
     per chunk with pages left: url-hash filter ──► extract_pages("auto")
-    ──append snapshot(rows=count)──► its files ──► metrics ──append──► table
+    ──append snapshot(rows=count)──► table; then, once per run: the files
+    of every uncovered chunk snapshot ──► metrics ──append──► metrics table
 
 - Resume (north_rule "resumes from the last committed checkpoint"): urls
   already present in committed snapshots are skipped via a broadcast-friendly
@@ -25,10 +26,13 @@ batch_folder_process.py segment loop, SURVEY §3.2):
   fill the task slots; a well-split input is parsed where it lies. (A
   resumed chunk's input also lists the committed table's files behind the
   anti-join; they hold no page to parse, so they must not count.)
-- Metrics (FIXTURES.md §4): per-partition docs parsed / failures /
-  bytes in/out, read back from the four narrow columns of the files the
-  chunk just committed — the 识别成功率-and-run-counters analog
-  (one_key_process.py:890-894; batch_folder_process.py:977-1028).
+- Metrics (FIXTURES.md §4): per-partition docs parsed / failures / bytes
+  in/out of each chunk snapshot, under its own ``run_id``, read back from
+  four narrow columns of its files — the 识别成功率-and-run-counters analog
+  (one_key_process.py:890-894; batch_folder_process.py:977-1028). One job
+  and one commit after the chunk loop cover the chunk snapshots behind the
+  current files that no metrics ``snapshot_id`` partition names (manifests
+  only): a resume covers a crashed run's chunks; a no-op commits nothing.
 
 At 100 TB: chunks map to crawl segments (or partition predicates pushed to
 the Iceberg scan); the anti-join's right side is a url-only projection of the
@@ -37,7 +41,9 @@ output table — Bloom-filter-sized, and AQE picks broadcast when it fits.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,29 +67,25 @@ class ExtractResult:
     docs: int = 0
 
 
-def _partition_metrics(written: DataFrame, run_id: str, chunk: int, snap: str) -> DataFrame:
+def _metrics(spark: SparkSession, out_table: IcebergLiteTable, snaps: list[dict]) -> DataFrame:
+    """Per-partition counters of each chunk snapshot in ``snaps``, under its own ids."""
+    written = reduce(DataFrame.unionByName, [
+        out_table.read_added(spark, s["snapshot_id"], EXTRACTED_SCHEMA).select(
+            F.lit(s["properties"]["run_id"]).alias("run_id"),
+            F.lit(s["properties"]["chunk"]).alias("chunk"),
+            F.lit(s["snapshot_id"]).alias("snapshot_id"),
+            "partition_id", "extract_status", "bytes_in", "bytes_out")
+        for s in snaps])
     failed = F.col("extract_status").startswith("error")
-    return written.groupBy("partition_id").agg(
+    return written.groupBy("run_id", "chunk", "partition_id", "snapshot_id").agg(
         F.count(F.when(~failed, 1)).alias("docs_parsed"),
         F.count(F.when(failed, 1)).alias("parse_failures"),
-        F.sum("bytes_in").alias("bytes_in"),
-        F.sum("bytes_out").alias("bytes_out"),
-    ).select(
-        F.lit(run_id).alias("run_id"), F.lit(chunk).alias("chunk"), "partition_id",
-        "docs_parsed", "parse_failures", "bytes_in", "bytes_out",
-        F.lit(snap).alias("snapshot_id"),
-    )
+        F.sum("bytes_in").alias("bytes_in"), F.sum("bytes_out").alias("bytes_out"))
 
 
-def run_extract(
-    spark: SparkSession,
-    pages: DataFrame,
-    table_root: str,
-    run_id: str,
-    chunks: int = 4,
-    num_partitions: int | None = None,
-    resume: bool = True,
-) -> ExtractResult:
+def run_extract(spark: SparkSession, pages: DataFrame, table_root: str, run_id: str,
+                chunks: int = 4, num_partitions: int | None = None,
+                resume: bool = True) -> ExtractResult:
     """Run (or resume) the extraction batch over ``pages``.
 
     Output snapshots are Hive-partitioned by ``content_kind`` (the stated
@@ -98,10 +100,8 @@ def run_extract(
     metrics_table = IcebergLiteTable(f"{table_root}/metrics")
     res = ExtractResult(run_id=run_id)
 
-    todo = pages
-    if resume and out_table.exists():
-        committed = out_table.read(spark).select("url")
-        todo = pages.join(committed, "url", "left_anti")
+    todo = (pages.join(out_table.read(spark).select("url"), "url", "left_anti")
+            if resume and out_table.exists() else pages)
 
     shuffle = auto_repartition(pages)
     chunk_col = F.pmod(F.xxhash64("url"), F.lit(chunks))
@@ -112,20 +112,19 @@ def run_extract(
             res.chunks_skipped += 1
             continue
         extracted = extract_pages(todo.where(chunk_col == chunk),
-                                  num_partitions=num_partitions,
-                                  repartition=shuffle)
-        snap = out_table.append(
-            extracted,
-            properties={"run_id": run_id, "chunk": chunk, "rows": n},
-            partition_by="content_kind",
-            stats_cols=("url",),
-        )
-        written = out_table.read_added(spark, snap, EXTRACTED_SCHEMA)
-        metrics_table.append(_partition_metrics(written, run_id, chunk, snap),
-                             properties={"run_id": run_id, "chunk": chunk})
+                                  num_partitions=num_partitions, repartition=shuffle)
+        props = {"run_id": run_id, "chunk": chunk, "rows": n}
+        snap = out_table.append(extracted, properties=props,
+                                partition_by="content_kind", stats_cols=("url",))
         res.snapshots.append(snap)
         res.chunks_done += 1
         res.docs += n
+
+    covered = {e["partition"]["snapshot_id"] for e in metrics_table.entries()}
+    fresh = {os.path.basename(e["base"]) for e in out_table.entries()} - covered
+    snaps = [s for s in map(out_table.snapshot, sorted(fresh)) if s and "chunk" in s["properties"]]
+    if snaps:
+        metrics_table.append(_metrics(spark, out_table, snaps), partition_by="snapshot_id")
     return res
 
 

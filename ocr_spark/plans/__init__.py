@@ -1,5 +1,1 @@
 """Partitioning / skew strategies (north_rule: explicit partitioning)."""
-
-from .partitioning import salted_repartition, url_host
-
-__all__ = ["salted_repartition", "url_host"]

@@ -43,10 +43,9 @@ _RFC822_FMT = "dd MMM yyyy HH:mm:ss Z"
 _ISO_FMT = "yyyy-MM-dd'T'HH:mm:ssX"
 
 
-def _items(feeds: DataFrame, block_re: str, dialect: str,
-           carry: list[str]) -> DataFrame:
+def _items(feeds: DataFrame, block_re: str, dialect: str) -> DataFrame:
     exploded = feeds.select(
-        *carry,
+        "host",
         F.explode(
             F.regexp_extract_all(
                 F.coalesce(F.col("feed_xml"), F.lit("")),
@@ -73,7 +72,7 @@ def _items(feeds: DataFrame, block_re: str, dialect: str,
         return F.when(ok, c)
 
     return exploded.select(
-        *carry,
+        "host",
         F.lit(dialect).alias("dialect"),
         guard(link).alias("link"),
         guard(F.nullif(F.regexp_extract("block", _TITLE_RE, 1), F.lit("")))
@@ -86,11 +85,10 @@ def _items(feeds: DataFrame, block_re: str, dialect: str,
 
 
 def parse_feed_items(feeds: DataFrame) -> DataFrame:
-    """Feed documents -> (carry..., dialect, link, title, item_ts, guid,
+    """Feed documents -> (host, dialect, link, title, item_ts, guid,
     feed_ok), one row per RSS ``<item>`` plus one per Atom ``<entry>``.
     A document carrying both dialects (rare but legal after aggregator
     concatenation) contributes rows from both passes."""
-    carry = ["host"]
-    rss = _items(feeds, _ITEM_RE, "rss", carry)
-    atom = _items(feeds, _ENTRY_RE, "atom", carry)
+    rss = _items(feeds, _ITEM_RE, "rss")
+    atom = _items(feeds, _ENTRY_RE, "atom")
     return rss.unionByName(atom)

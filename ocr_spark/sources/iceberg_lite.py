@@ -41,6 +41,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 MERGE_KEY = "doc_id"  # merge_into's row key
@@ -75,17 +76,6 @@ class IcebergLiteTable:
     def _load(self, name: str) -> dict:
         with open(os.path.join(self._manifest_dir, name)) as f:
             return json.load(f)
-
-    @staticmethod
-    def _entries_of(snap: dict) -> list[dict]:
-        """Manifest entries, tolerating the pre-stats manifest format (bare
-        data_dirs) by synthesizing metadata-free entries."""
-        if "entries" in snap:
-            return snap["entries"]
-        return [
-            {"dir": d, "base": d, "partition": {}, "stats": {}}
-            for d in snap.get("data_dirs", [])
-        ]
 
     @staticmethod
     def _footer_stats(data_dir: str,
@@ -132,41 +122,39 @@ class IcebergLiteTable:
             if c in mins and c in maxs
         }
 
-    def _collect_entries(self, spark: SparkSession, out_dir: str,
-                         partition_by: str | None,
+    def _collect_entries(self, out_dir: str, partition_by: str | None,
                          stats_cols: tuple[str, ...]) -> list[dict]:
         """Metadata for a freshly-written data dir: one entry per partition
         subdir (Hive layout) or one for the whole dir, with min/max stats
         per requested column, read from parquet footers (``_footer_stats``).
         """
-        if partition_by:
-            subdirs = sorted(
-                d for d in os.listdir(out_dir)
-                if os.path.isdir(os.path.join(out_dir, d)) and "=" in d
-            )
-            return [
-                {
-                    "dir": os.path.join(out_dir, d),
-                    "base": out_dir,
-                    "partition": {d.split("=", 1)[0]: d.split("=", 1)[1]},
-                    "stats": (
-                        self._footer_stats(os.path.join(out_dir, d), stats_cols)
-                        if stats_cols else {}
-                    ),
-                }
-                for d in subdirs
-            ]
-        return [{
-            "dir": out_dir,
-            "base": out_dir,
-            "partition": {},
-            "stats": (
-                self._footer_stats(out_dir, stats_cols) if stats_cols else {}
-            ),
-        }]
+        subdirs = sorted(
+            d for d in os.listdir(out_dir)
+            if os.path.isdir(os.path.join(out_dir, d)) and "=" in d
+        ) if partition_by else [""]
+        return [
+            {
+                "dir": os.path.join(out_dir, d) if d else out_dir,
+                "base": out_dir,
+                "partition": dict([d.split("=", 1)]) if d else {},
+                "stats": (self._footer_stats(os.path.join(out_dir, d), stats_cols)
+                          if stats_cols else {}),
+            }
+            for d in subdirs
+        ]
 
-    def _commit(self, entries: list[dict], snapshot_id: str,
-                properties: dict | None) -> str:
+    def _commit(self, df: DataFrame, keep: list[dict], properties: dict | None,
+                partition_by: str | None, stats_cols: tuple[str, ...]) -> str:
+        """Write ``df`` as parquet into a fresh data dir, then atomically
+        publish a snapshot whose manifest holds ``keep`` plus the new
+        entries. Returns its snapshot_id."""
+        snapshot_id = uuid.uuid4().hex[:16]
+        out_dir = os.path.join(self._data_dir, snapshot_id)
+        writer = df.write.mode("errorifexists")
+        if partition_by:
+            writer = writer.partitionBy(partition_by)
+        writer.parquet(out_dir)
+        entries = keep + self._collect_entries(out_dir, partition_by, tuple(stats_cols))
         parent = self.current_snapshot()
         seq = (parent["sequence"] + 1) if parent else 0
         manifest = {
@@ -174,8 +162,6 @@ class IcebergLiteTable:
             "sequence": seq,
             "parent_id": parent["snapshot_id"] if parent else None,
             "entries": entries,
-            # kept for tooling/back-compat: the flat dir list
-            "data_dirs": [e["dir"] for e in entries],
             "properties": properties or {},
         }
         os.makedirs(self._manifest_dir, exist_ok=True)
@@ -196,15 +182,19 @@ class IcebergLiteTable:
     def snapshots(self) -> list[dict]:
         return [self._load(m) for m in self._manifests()]
 
+    def snapshot(self, snapshot_id: str) -> dict | None:
+        """Snapshot ``snapshot_id`` (one manifest read); None if it was
+        never committed or has been expired."""
+        name = next((m for m in self._manifests()
+                     if m.endswith(f"-{snapshot_id}.json")), None)
+        return self._load(name) if name else None
+
     def exists(self) -> bool:
         return bool(self._manifests())
 
     def entries(self) -> list[dict]:
         snap = self.current_snapshot()
-        return self._entries_of(snap) if snap else []
-
-    def data_dirs(self) -> list[str]:
-        return [e["dir"] for e in self.entries()]
+        return snap["entries"] if snap else []
 
     def append(self, df: DataFrame, properties: dict | None = None,
                partition_by: str | None = None,
@@ -214,31 +204,13 @@ class IcebergLiteTable:
         Hive-layout subdirs recorded as separate prunable entries;
         ``stats_cols`` records per-entry min/max for those columns.
         Returns snapshot_id."""
-        snapshot_id = uuid.uuid4().hex[:16]
-        out_dir = os.path.join(self._data_dir, snapshot_id)
-        writer = df.write.mode("errorifexists")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(out_dir)
-        new = self._collect_entries(df.sparkSession, out_dir, partition_by,
-                                    tuple(stats_cols))
-        parent = self.current_snapshot()
-        entries = (self._entries_of(parent) if parent else []) + new
-        return self._commit(entries, snapshot_id, properties)
+        return self._commit(df, self.entries(), properties, partition_by, stats_cols)
 
     def overwrite(self, df: DataFrame, properties: dict | None = None,
                   partition_by: str | None = None,
                   stats_cols: tuple[str, ...] = ()) -> str:
         """New snapshot that replaces all prior data (logical truncate+append)."""
-        snapshot_id = uuid.uuid4().hex[:16]
-        out_dir = os.path.join(self._data_dir, snapshot_id)
-        writer = df.write.mode("errorifexists")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(out_dir)
-        new = self._collect_entries(df.sparkSession, out_dir, partition_by,
-                                    tuple(stats_cols))
-        return self._commit(new, snapshot_id, properties)
+        return self._commit(df, [], properties, partition_by, stats_cols)
 
     def select_entries(self, ranges: dict | None) -> list[dict]:
         """Manifest entries that MAY hold rows inside ``ranges`` —
@@ -284,7 +256,7 @@ class IcebergLiteTable:
                       schema: str | None) -> DataFrame:
         by_base: dict[str, list[str]] = {}
         for e in entries:
-            by_base.setdefault(e.get("base", e["dir"]), []).append(e["dir"])
+            by_base.setdefault(e["base"], []).append(e["dir"])
         parts = []
         for base, dirs in sorted(by_base.items()):
             reader = spark.read.option("basePath", base)
@@ -309,7 +281,7 @@ class IcebergLiteTable:
         overwrites, or compactions committed after it."""
         for snap in self.snapshots():
             if snap["sequence"] == sequence:
-                entries = self._entries_of(snap)
+                entries = snap["entries"]
                 return self._read_entries(spark, entries, None) if entries else None
         raise ValueError(f"no snapshot with sequence {sequence}")
 
@@ -317,11 +289,10 @@ class IcebergLiteTable:
                    schema: str | None = None) -> DataFrame | None:
         """DataFrame over only the data files that snapshot ``snapshot_id``
         itself wrote (not its parent chain); None if it wrote none."""
-        name = next((m for m in self._manifests()
-                     if m.endswith(f"-{snapshot_id}.json")), None)
-        if name is None:
+        snap = self.snapshot(snapshot_id)
+        if snap is None:
             raise ValueError(f"no snapshot {snapshot_id!r}")
-        entries = self.added_entries(self._load(name))
+        entries = self.added_entries(snap)
         return self._read_entries(spark, entries, schema) if entries else None
 
     @staticmethod
@@ -330,8 +301,8 @@ class IcebergLiteTable:
         data/<snapshot_id>/, while its manifest also records the entries
         it carries from its parent chain."""
         sid = snap["snapshot_id"]
-        return [e for e in IcebergLiteTable._entries_of(snap)
-                if os.path.basename(e.get("base", e["dir"]).rstrip(os.sep)) == sid]
+        return [e for e in snap["entries"]
+                if os.path.basename(e["base"].rstrip(os.sep)) == sid]
 
     @staticmethod
     def is_append(snap: dict, parent: dict | None) -> bool:
@@ -339,8 +310,8 @@ class IcebergLiteTable:
         overwrite/compact/merge_into rewrite or drop parent files."""
         if parent is None:
             return True
-        cur = {e["dir"] for e in IcebergLiteTable._entries_of(snap)}
-        prev = {e["dir"] for e in IcebergLiteTable._entries_of(parent)}
+        cur = {e["dir"] for e in snap["entries"]}
+        prev = {e["dir"] for e in parent["entries"]}
         return prev <= cur
 
     def data_bytes(self) -> int:
@@ -365,12 +336,16 @@ class IcebergLiteTable:
         ``target_file_mb`` to size by bytes the way real Iceberg does —
         the file count is computed from the CURRENT snapshot's on-disk
         bytes (directory metadata, no extra scan), so a table that grew
-        10x compacts into 10x more files, not 10x bigger ones. The compacted
-        snapshot is one unpartitioned entry without stats. Readers are
-        never disturbed: the rewrite is
-        just another snapshot commit, and time-travel reads of
-        pre-compaction sequences still see the old dirs (nothing is
-        deleted)."""
+        10x compacts into 10x more files, not 10x bigger ones. The rewrite
+        keeps the newest entry's layout: its partition column and its stats
+        columns, so partition filters and ``select_entries`` still prune
+        after it. A partitioned rewrite range-partitions the rows by those
+        columns first, so a task's rows span few partition values: at most
+        ``target_partitions`` plus one file per value, none far below the
+        target size, with tight stats. Readers are never
+        disturbed: the rewrite is just another snapshot commit, and
+        time-travel reads of pre-compaction sequences still see the old
+        dirs (nothing is deleted)."""
         if target_partitions is None:
             if target_file_mb is None:
                 raise ValueError("pass target_partitions or target_file_mb")
@@ -380,9 +355,20 @@ class IcebergLiteTable:
         df = self.read(spark)
         if df is None:
             return None
+        newest = self.entries()[-1]
+        part, stats = next(iter(newest["partition"]), None), tuple(newest["stats"])
+        if part:
+            # read the partition dirs back verbatim: the schema-less read
+            # types a digits-only value such as "0123" as the number 123
+            df = self._read_entries(spark, self.entries(), T.StructType([
+                T.StructField(part, T.StringType()) if f.name == part else f
+                for f in df.schema]))
+            df = df.repartitionByRange(target_partitions, part, *stats)
+        else:
+            df = df.coalesce(target_partitions)
         return self.overwrite(
-            df.coalesce(target_partitions),
-            properties={"operation": "compact", "target_partitions": target_partitions},
+            df, properties={"operation": "compact", "target_partitions": target_partitions},
+            partition_by=part, stats_cols=stats,
         )
 
     def merge_into(self, spark: SparkSession, source: DataFrame,
@@ -437,8 +423,6 @@ class IcebergLiteTable:
         untouched = [e for e in self.entries() if e["dir"] not in affected_dirs]
 
         # -- rewrite only the affected files -------------------------------
-        snapshot_id = uuid.uuid4().hex[:16]
-        out_dir = os.path.join(self._data_dir, snapshot_id)
         src_keys = source.select(MERGE_KEY).dropDuplicates([MERGE_KEY])
         if candidates:
             target = self._read_entries(spark, candidates, None)
@@ -446,20 +430,13 @@ class IcebergLiteTable:
             result = survivors.unionByName(source.select(*survivors.columns))
         else:
             result = source
-        writer = result.write.mode("errorifexists")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(out_dir)
-        new_entries = self._collect_entries(
-            spark, out_dir, partition_by, tuple(stats_cols)
-        )
         props = {
             "operation": "merge",
             "key_cols": [MERGE_KEY],
             "entries_rewritten": len(candidates),
             "entries_untouched": len(untouched),
         }
-        return self._commit(untouched + new_entries, snapshot_id, props)
+        return self._commit(result, untouched, props, partition_by, stats_cols)
 
     # -- maintenance (Iceberg's expire_snapshots / remove_orphan_files) -------
     def expire_snapshots(self, keep_last: int = 1) -> dict:
@@ -477,11 +454,11 @@ class IcebergLiteTable:
         drop, keep = ms[:-keep_last], ms[-keep_last:]
         live = set()
         for name in keep:
-            for e in self._entries_of(self._load(name)):
+            for e in self._load(name)["entries"]:
                 live.add(os.path.realpath(e["dir"]))
         removed_dirs = 0
         for name in drop:
-            for e in self._entries_of(self._load(name)):
+            for e in self._load(name)["entries"]:
                 d = os.path.realpath(e["dir"])
                 if d not in live and os.path.isdir(d):
                     shutil.rmtree(d, ignore_errors=True)
@@ -508,10 +485,10 @@ class IcebergLiteTable:
 
         referenced = set()
         for snap in self.snapshots():
-            for e in self._entries_of(snap):
+            for e in snap["entries"]:
                 # entries may be partition subdirs: the snapshot dir is the
                 # unit of write, so protect each entry's base (and itself)
-                referenced.add(os.path.realpath(e.get("base", e["dir"])))
+                referenced.add(os.path.realpath(e["base"]))
                 referenced.add(os.path.realpath(e["dir"]))
         cutoff = time.time() - ORPHAN_AGE_S
         removed = []

@@ -41,13 +41,12 @@ _CHANGEFREQ_RE = r"(?s)<changefreq>\s*(.*?)\s*</changefreq>"
 _PRIORITY_RE = r"(?s)<priority>\s*(.*?)\s*</priority>"
 
 
-def _parse_blocks(df: DataFrame, block_re: str, entry_type: str,
-                  carry: list[str]) -> DataFrame:
+def _parse_blocks(df: DataFrame, block_re: str, entry_type: str) -> DataFrame:
     block = F.explode(
         F.regexp_extract_all(F.coalesce(F.col("sitemap_xml"), F.lit("")),
                              F.lit(block_re), F.lit(1))
     ).alias("block")
-    exploded = df.select(*carry, block)
+    exploded = df.select("host", block)
     loc = F.regexp_extract("block", _LOC_RE, 1)
     ok = loc != ""
 
@@ -55,7 +54,7 @@ def _parse_blocks(df: DataFrame, block_re: str, entry_type: str,
         return F.when(ok, c)
 
     return exploded.select(
-        *carry,
+        "host",
         F.lit(entry_type).alias("entry_type"),
         guard(loc).alias("loc"),
         guard(F.nullif(F.regexp_extract("block", _LASTMOD_RE, 1), F.lit("")))
@@ -71,15 +70,14 @@ def _parse_blocks(df: DataFrame, block_re: str, entry_type: str,
 
 
 def parse_sitemap_entries(sitemaps: DataFrame) -> DataFrame:
-    """Sitemap documents -> (carry..., entry_type, loc, lastmod,
+    """Sitemap documents -> (host, entry_type, loc, lastmod,
     changefreq, priority, sitemap_ok), one row per ``<url>`` block plus
     one per ``<sitemapindex>`` member (``entry_type='sitemap'``).
     ``lastmod`` stays the declared string (W3C datetime is a family of
     formats; callers cast at the comparison site). A block without
     ``<loc>`` yields sitemap_ok=false with NULL fields."""
-    carry = ["host"]
-    urls = _parse_blocks(sitemaps, _URL_BLOCK_RE, "url", carry)
-    nested = _parse_blocks(sitemaps, _SITEMAP_BLOCK_RE, "sitemap", carry)
+    urls = _parse_blocks(sitemaps, _URL_BLOCK_RE, "url")
+    nested = _parse_blocks(sitemaps, _SITEMAP_BLOCK_RE, "sitemap")
     return urls.unionByName(nested)
 
 

@@ -10,7 +10,6 @@ session needed — these are plain-Python helpers.
 
 import ast
 import os
-import statistics
 import time
 
 import pytest

@@ -1,8 +1,6 @@
 """Connected-components dedup clustering: crafted truth, chain-shaped
 adversarial components, partitioning invariance, and keeper selection."""
 
-import pytest
-
 from ocr_spark.operators import cc
 from ocr_spark.operators.cc import (
     cluster_representatives,

@@ -4,6 +4,8 @@ expire — against one tmp table root. jobs._spark() reuses the active
 test session via getOrCreate, so the chain runs exactly the shipped
 code path minus the JVM launch."""
 
+import os
+
 import pytest
 
 from ocr_spark import jobs
@@ -99,7 +101,13 @@ def test_cli_validate_compact_expire(roots, capsys):
     assert jobs.main([
         "compact", "--table-root", table_root, "--target-partitions", "2",
     ]) == 0
-    assert "compacted into snapshot" in capsys.readouterr().out
+    out = capsys.readouterr().out
+    from ocr_spark.sources.iceberg_lite import IcebergLiteTable
+
+    entries = IcebergLiteTable(f"{table_root}/extracted").entries()
+    files = sum(f.endswith(".parquet") for e in entries for f in os.listdir(e["dir"]))
+    assert f"({files} files in {len(entries)} entries)" in out
+    assert len(entries) > 1  # one per content_kind, as run_extract wrote it
     assert jobs.main([
         "expire", "--table-root", table_root, "--keep-last", "1",
     ]) == 0

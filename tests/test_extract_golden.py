@@ -7,7 +7,6 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_spark.core.synth import gen_pages
 from ocr_spark.golden import golden_frame
 from ocr_spark.operators.extract_op import extract_pages
 from ocr_spark.sources.pages import synth_pages

@@ -1,7 +1,6 @@
 """Round-4 additions: guaranteed heavy hitters (Misra-Gries two-pass) and
 the per-language tokenizer fertility audit — unit contracts + plan pins."""
 
-import pandas as pd
 import pyspark.sql.functions as F
 
 from ocr_spark.operators.heavyhitters import (

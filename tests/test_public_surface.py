@@ -1,6 +1,6 @@
-"""The engine's surface has callers: names, parameters and constants.
+"""The engine's surface has callers: names, parameters, constants and imports.
 
-Four pure AST scans (no Spark), over one parse of the caller files (the
+Five pure AST scans (no Spark), over one parse of the caller files (the
 engine, ``__spark_entry__.py``, ``bench.py`` and the non-test
 ``perfbench/`` modules) and ``tests/``:
 
@@ -15,12 +15,18 @@ engine, ``__spark_entry__.py``, ``bench.py`` and the non-test
   same literal or UPPER_CASE constant by every call site, tests included.
   A value that never varies is a constant;
 - every module-level assignment in ``ocr_spark/`` is read by some statement
-  other than its own assignment (its own module counts).
+  other than its own assignment (its own module counts);
+- every name imported in ``ocr_spark/``, ``__spark_entry__.py``,
+  ``bench.py`` and ``tests/`` is loaded in the scope that imports it, is
+  listed in ``__all__``, or is an availability probe marked
+  ``# noqa: F401``. ``perfbench/`` belongs to the benchmark and is left
+  out.
 
 The ``EXEMPT`` modules are left out of the first three scans.
 """
 
 import ast
+import collections
 import functools
 import pathlib
 
@@ -116,6 +122,36 @@ def unread_module_constants():
     return missing
 
 
+def unused_imports():
+    """``file:line name`` of each imported name that the module (or, for an
+    import inside a def, that def) never loads."""
+    found = []
+    for rel, tree in _parsed():
+        if rel.startswith("perfbench/"):
+            continue
+        lines = (ROOT / rel).read_text().splitlines()
+        exported = {e.value for n in tree.body if isinstance(n, ast.Assign)
+                    and any(getattr(t, "id", None) == "__all__" for t in n.targets)
+                    for e in n.value.elts}
+        scope = {}   # id(import) -> the innermost def (or module) holding it
+        for node in [tree] + [fn for fn, _ in _functions(tree)]:
+            scope.update((id(n), node) for n in ast.walk(node)
+                         if isinstance(n, (ast.Import, ast.ImportFrom)))
+        for n in ast.walk(tree):
+            if (not isinstance(n, (ast.Import, ast.ImportFrom))
+                    or getattr(n, "module", None) == "__future__"
+                    or any("noqa: F401" in line for line in lines[n.lineno - 1:n.end_lineno])):
+                continue
+            loaded = {m.id for m in ast.walk(scope[id(n)])
+                      if isinstance(m, ast.Name) and not isinstance(m.ctx, ast.Store)}
+            for a in n.names:
+                name = a.asname or (a.name.split(".")[0] if isinstance(n, ast.Import)
+                                    else a.name)
+                if name not in loaded | exported:
+                    found.append(f"{rel}:{n.lineno} {name}")
+    return found
+
+
 def _functions(tree):
     """``(def, enclosing class or None)`` for every def in ``tree``."""
     out = []
@@ -188,17 +224,38 @@ def _constant_value(node):
     return None
 
 
+def _bound_once(fn):
+    """Local name -> value of each name that ``fn`` binds exactly once, by a
+    plain ``name = value`` assignment (its parameters count as bindings)."""
+    a = fn.args
+    counts = collections.Counter(
+        p.arg for p in a.posonlyargs + a.args + a.kwonlyargs + [a.vararg, a.kwarg] if p)
+    values = {}
+    for n in ast.walk(fn):
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Load):
+            counts[n.id] += 1
+        if (isinstance(n, ast.Assign) and len(n.targets) == 1
+                and isinstance(n.targets[0], ast.Name)):
+            values[n.targets[0].id] = n.value
+    return {name: v for name, v in values.items() if counts[name] == 1}
+
+
 def single_valued_parameters():
     """``module:line function(parameter)`` of each required parameter that
     every call site passes the same value: a literal, a tuple or list of
-    literals, or an UPPER_CASE module constant. Callees resolve by name,
-    as in ``unpassed_defaulted_parameters``. A function that is referenced
-    as a value (passed to ``mapInPandas``, ``udf``, a ``record_fn``, ...)
-    has call sites no scan sees, so it is skipped; so is a call made
-    through ``*args``/``**kw``."""
+    literals, or an UPPER_CASE module constant, written at the call site or
+    bound to a local that the calling function assigns exactly once.
+    Callees resolve by name, as in ``unpassed_defaulted_parameters``. A
+    function that is referenced as a value (passed to ``mapInPandas``,
+    ``udf``, a ``record_fn``, ...) has call sites no scan sees, so it is
+    skipped; so is a call made through ``*args``/``**kw``."""
     calls, as_value = {}, set()
     for _, tree in _parsed():
         funcs = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+        local = {}   # id(call) -> the innermost enclosing def's _bound_once
+        for fn, _ in _functions(tree):
+            bound = _bound_once(fn)
+            local.update((id(n), bound) for n in ast.walk(fn) if isinstance(n, ast.Call))
         for n in ast.walk(tree):
             if isinstance(n, ast.Call):
                 f = n.func
@@ -206,7 +263,7 @@ def single_valued_parameters():
                 starred = (any(isinstance(x, ast.Starred) for x in n.args)
                            or any(k.arg is None for k in n.keywords))
                 if callee and not starred:
-                    calls.setdefault(callee, []).append(n)
+                    calls.setdefault(callee, []).append((n, local.get(id(n), {})))
             elif (isinstance(n, (ast.Name, ast.Attribute)) and id(n) not in funcs
                   and isinstance(n.ctx, ast.Load)):
                 as_value.add(getattr(n, "id", None) or n.attr)
@@ -219,10 +276,12 @@ def single_valued_parameters():
                 continue
             for name, pos in _required(fn, cls):
                 values = set()
-                for call in sites:
+                for call, bound in sites:
                     given = [k.value for k in call.keywords if k.arg == name]
                     if not given and pos is not None and pos < len(call.args):
                         given = [call.args[pos]]
+                    if given and isinstance(given[0], ast.Name):
+                        given = [bound.get(given[0].id, given[0])]
                     values.add(_constant_value(given[0]) if given else None)
                 if len(values) == 1 and None not in values:
                     found.append(f"{rel}:{fn.lineno} {fn.name}({name})")
@@ -344,3 +403,10 @@ def test_every_module_constant_is_read():
     assert not missing, (
         "module-level names in ocr_spark/ that nothing reads:\n  "
         + "\n  ".join(missing))
+
+
+def test_every_import_is_used():
+    found = unused_imports()
+    assert not found, (
+        "imported names that nothing loads (delete the import, or mark an "
+        "availability probe `# noqa: F401`):\n  " + "\n  ".join(found))

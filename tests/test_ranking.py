@@ -9,7 +9,6 @@ branch, gate monotonicity, and the no-SinglePartition plan shape.
 import contextlib
 import io
 
-import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark import session

@@ -19,15 +19,15 @@ N = 400
 
 @contextlib.contextmanager
 def _crash_after_chunks(n):
-    """Expect a run to die once its ``n``-th metrics snapshot has committed:
-    the crash point between one chunk's last commit and the next chunk."""
+    """Expect a run to die once its ``n``-th ``extracted`` snapshot has
+    committed: the one crash point between a chunk and the next."""
     real = IcebergLiteTable.append
     commits = 0
 
     def append(self, df, **kw):
         nonlocal commits
         snap = real(self, df, **kw)
-        if self.root.endswith("/metrics"):
+        if self.root.endswith("/extracted"):
             commits += 1
             if commits == n:
                 raise RuntimeError(f"injected crash after {n} chunks")
@@ -77,6 +77,22 @@ def test_crash_then_resume_matches_uninterrupted(spark, tmp_path):
     total = read_extracted(spark, crash_root).count()
     assert total == N
 
+    # the resume's one metrics commit also covers the crashed run's chunks,
+    # each extracted snapshot once, under the run_id that committed it
+    m = read_metrics(spark, crash_root).toPandas()
+    assert int(m["docs_parsed"].sum() + m["parse_failures"].sum()) == N
+    snaps = IcebergLiteTable(f"{crash_root}/extracted").snapshots()
+    assert [s["properties"]["run_id"] for s in snaps] == ["r1", "r1", "r2", "r2"]
+    per_snap = m.groupby("snapshot_id").agg(
+        run_ids=("run_id", "unique"), docs=("docs_parsed", "sum"),
+        failures=("parse_failures", "sum"))
+    assert {sid: (list(r.run_ids), r.docs + r.failures) for sid, r in per_snap.iterrows()} == {
+        s["snapshot_id"]: ([s["properties"]["run_id"]], s["properties"]["rows"]) for s in snaps}
+    metrics = IcebergLiteTable(f"{crash_root}/metrics")
+    assert len(metrics.snapshots()) == 1
+    assert sorted(e["partition"]["snapshot_id"] for e in metrics.entries()) == sorted(
+        s["snapshot_id"] for s in snaps)
+
 
 def test_rerun_after_completion_is_noop(spark, tmp_path, monkeypatch):
     pages = synth_pages(spark, 100)
@@ -88,9 +104,18 @@ def test_rerun_after_completion_is_noop(spark, tmp_path, monkeypatch):
         raise AssertionError("extract_pages called on a no-op resume")
 
     monkeypatch.setattr("ocr_spark.pipeline.extract_pages", no_parse)
+    extracted = IcebergLiteTable(f"{root}/extracted")
+    metrics = IcebergLiteTable(f"{root}/metrics")
+    before = len(extracted.snapshots()), len(metrics.snapshots())
+    # nothing is uncovered, so no metrics frame is built, let alone run
+    def no_metrics(*args, **kwargs):
+        raise AssertionError("read_added called on a no-op resume")
+
+    monkeypatch.setattr(IcebergLiteTable, "read_added", no_metrics)
     res = run_extract(spark, pages, root, run_id="b", chunks=2, num_partitions=2)
     assert res.chunks_done == 0 and res.docs == 0
     assert res.chunks_skipped == 2
+    assert (len(extracted.snapshots()), len(metrics.snapshots())) == before == (2, 1)
     assert read_extracted(spark, root).count() == 100
 
 
@@ -142,7 +167,7 @@ def test_orphan_data_invisible_without_manifest(spark, tmp_path):
     assert table.read(spark).count() == before  # orphan invisible
     # the orphan dir never appears among committed entries (the partitioned
     # layout may legitimately commit one entry per content kind)
-    assert not any(d.startswith(orphan) for d in table.data_dirs())
+    assert not any(e["dir"].startswith(orphan) for e in table.entries())
 
 
 def test_metrics_rows_per_partition(spark, tmp_path):
@@ -157,7 +182,12 @@ def test_metrics_rows_per_partition(spark, tmp_path):
     assert int(m["docs_parsed"].sum() + m["parse_failures"].sum()) == 200
     snaps = IcebergLiteTable(f"{root}/extracted").snapshots()
     assert len(snaps) == 2
-    assert set(m["snapshot_id"]) <= {s["snapshot_id"] for s in snaps}
+    assert set(m["snapshot_id"]) == {s["snapshot_id"] for s in snaps}
+    # one metrics snapshot per run, one snapshot_id partition per chunk snapshot
+    metrics = IcebergLiteTable(f"{root}/metrics")
+    assert len(metrics.snapshots()) == 1
+    assert sorted(e["partition"]["snapshot_id"] for e in metrics.entries()) == sorted(
+        s["snapshot_id"] for s in snaps)
     # each snapshot's `rows` (the run's pre-count of its chunk) equals the
     # rows it committed and the docs its chunk's metrics account for
     per_snap = m.groupby("snapshot_id")[["docs_parsed", "parse_failures"]].sum().sum(axis=1)
@@ -165,6 +195,34 @@ def test_metrics_rows_per_partition(spark, tmp_path):
         data = os.path.join(root, "extracted", "data", s["snapshot_id"])
         table_rows = pads.dataset(data, format="parquet").count_rows()
         assert s["properties"]["rows"] == table_rows == per_snap[s["snapshot_id"]]
+
+
+def test_metrics_coverage_survives_compact_and_expire(spark, tmp_path):
+    """Compacting and expiring the metrics table between two runs keeps its
+    snapshot_id partitions, so the next run covers only the new chunks and
+    every chunk snapshot is counted exactly once."""
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / "t")
+    pages = synth_pages(spark, 200)
+    run_extract(spark, pages.where(F.crc32("url") % 2 == 0), root, run_id="a",
+                chunks=2, num_partitions=2)
+    metrics = IcebergLiteTable(f"{root}/metrics")
+    metrics.compact(spark, target_partitions=1)
+    metrics.expire_snapshots(keep_last=1)
+    res = run_extract(spark, pages, root, run_id="b", chunks=2, num_partitions=2)
+    assert 0 < res.docs < 200
+
+    m = read_metrics(spark, root).toPandas()
+    assert not m.duplicated(["snapshot_id", "partition_id"]).any()
+    assert int(m["docs_parsed"].sum() + m["parse_failures"].sum()) == 200
+    snaps = IcebergLiteTable(f"{root}/extracted").snapshots()
+    assert [s["properties"]["run_id"] for s in snaps] == ["a", "a", "b", "b"]
+    per_snap = m.groupby("snapshot_id").agg(
+        run_ids=("run_id", "unique"), docs=("docs_parsed", "sum"),
+        failures=("parse_failures", "sum"))
+    assert {sid: (list(r.run_ids), r.docs + r.failures) for sid, r in per_snap.iterrows()} == {
+        s["snapshot_id"]: ([s["properties"]["run_id"]], s["properties"]["rows"]) for s in snaps}
 
 
 def test_time_travel_and_compaction(spark, tmp_path):
@@ -183,9 +241,9 @@ def test_time_travel_and_compaction(spark, tmp_path):
     after = {r[0] for r in t.read(spark).collect()}
     assert after == before == set(range(30))
     # compaction produced one data file in one fresh dir
-    dirs = t.data_dirs()
-    assert len(dirs) == 1
-    files = [f for f in os.listdir(dirs[0]) if f.endswith(".parquet")]
+    entries = t.entries()
+    assert len(entries) == 1
+    files = [f for f in os.listdir(entries[0]["dir"]) if f.endswith(".parquet")]
     assert len(files) == 1
     # pre-compaction snapshot still reads the old (multi-dir) layout
     assert {r[0] for r in t.read_at(spark, 1).collect()} == set(range(30))
@@ -256,27 +314,6 @@ def test_range_stats_prune_whole_snapshots(spark, tmp_path):
     assert hit[0]["stats"]["doc_id"] == [100, 199]
     # a range past every entry's stats prunes them all
     assert t.select_entries(ranges={"doc_id": (5000, 6000)}) == []
-
-
-def test_pre_stats_manifest_format_still_reads(spark, tmp_path):
-    """Back-compat: manifests written before entries/stats existed (bare
-    data_dirs) must read fine and survive pruning conservatively."""
-    import json
-
-    t = IcebergLiteTable(str(tmp_path / "t"))
-    t.append(_docs_df(spark, 0, 30))
-    # rewrite the manifest in the old format
-    mdir = os.path.join(t.root, "manifests")
-    name = sorted(os.listdir(mdir))[0]
-    with open(os.path.join(mdir, name)) as f:
-        m = json.load(f)
-    old = {k: v for k, v in m.items() if k != "entries"}
-    with open(os.path.join(mdir, name), "w") as f:
-        json.dump(old, f)
-
-    assert t.read(spark).count() == 30
-    # unknown metadata is kept (conservative), never mistakenly pruned
-    assert len(t.select_entries(ranges={"doc_id": (0, 1)})) == 1
 
 
 def test_pipeline_writes_prunable_partitioned_snapshots(spark, tmp_path):
@@ -448,17 +485,37 @@ def test_expire_after_compact_with_partitioned_entries(spark, tmp_path):
     t.append(_docs_df(spark, 60, 90), partition_by="lang", stats_cols=("doc_id",))
     before = sorted(r.doc_id for r in t.read(spark).select("doc_id").collect())
 
-    t.compact(spark, target_partitions=1)
+    t.compact(spark, target_partitions=2)
     res = t.expire_snapshots(keep_last=1)
     assert res["manifests_removed"] == 2
     assert res["dirs_removed"] >= 1
 
     after = sorted(r.doc_id for r in t.read(spark).select("doc_id").collect())
     assert after == before
-    # the surviving entry is the compacted snapshot's one data dir
+    # the compacted snapshot keeps the layout: one entry per lang, each
+    # with doc_id stats, and a lang filter still prunes partition dirs
     entries = t.entries()
-    assert len(entries) == 1 and os.path.isdir(entries[0]["dir"])
-    assert t.read(spark).where("lang = 'en'").count() == 30
+    assert sorted(e["partition"]["lang"] for e in entries) == ["de", "en", "fr"]
+    assert all(os.path.isdir(e["dir"]) and "doc_id" in e["stats"] for e in entries)
+    en = t.read(spark).where("lang = 'en'")
+    assert _partition_filters(en) == "isnotnull(lang), (lang = en)"
+    assert en.count() == 30
+    # rows are clustered by lang before the write: at most one file per
+    # target partition plus one per lang, not one per (task, lang) pair
+    files = sum(f.endswith(".parquet") for e in entries for f in os.listdir(e["dir"]))
+    assert files <= 2 + 3
+
+
+def test_compact_keeps_digits_only_partition_values(spark, tmp_path):
+    """A schema-less read would type the partition value "0123" as the
+    number 123; compact must write the partition dirs back verbatim."""
+    t = IcebergLiteTable(str(tmp_path / "t"))
+    t.append(spark.createDataFrame([(1, "0123")], "doc_id long, sid string"), partition_by="sid")
+    t.append(spark.createDataFrame([(2, "ab12")], "doc_id long, sid string"), partition_by="sid")
+    t.compact(spark, target_partitions=1)
+    assert sorted(e["partition"]["sid"] for e in t.entries()) == ["0123", "ab12"]
+    rows = t.read(spark, schema="doc_id long, sid string").collect()
+    assert sorted((r.doc_id, r.sid) for r in rows) == [(1, "0123"), (2, "ab12")]
 
 
 def test_merge_into_upserts_and_carries_untouched_entries_verbatim(spark, tmp_path):

@@ -1,7 +1,5 @@
 """Reciprocal-rank fusion."""
 
-from pyspark.sql import functions as F
-
 from ocr_spark.operators.index import RRF_K, rrf_fuse
 
 

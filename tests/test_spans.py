@@ -2,7 +2,6 @@
 known duplicated regions, interval-merge semantics, and the never-drop
 per-doc contract. Oracle parity at sf0.01 runs in test_oracle_parity.py."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.spans import SPAN_W, dup_span_stats, dup_spans

@@ -5,7 +5,6 @@ equal the batch output of the same operator on the same table,
 row-for-row — no rewritten streaming variant, the identical function."""
 
 import pytest
-from pyspark.sql import functions as F
 
 N = 300
 

@@ -4,10 +4,6 @@ documents reach the corpus; state + bloom grow by the admitted delta; a
 metrics ledger plus per-table snapshot stamps make every crash window
 replay-safe."""
 
-import pytest
-from pyspark.sql import functions as F
-
-from ocr_spark.sources.iceberg_lite import IcebergLiteTable
 from ocr_spark.streaming.ingest import DedupIngest, start_dedup_ingest
 
 SCHEMA = "doc_id long, text string"

@@ -328,7 +328,7 @@ def q_top_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization (lag + running sum) -> per-user session stats."""
-    return session_stats(_t(spark, sf_dir, "events"), gap_minutes=30)
+    return session_stats(_t(spark, sf_dir, "events"))
 
 
 def q_pivot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -386,7 +386,7 @@ def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     over pages built from the documents table (decode stubbed; see
     operators/multimodal.py)."""
     pages = pages_from_documents(spark, sf_dir)
-    return media_features(pages, binary_col="html", id_col="url")
+    return media_features(pages)
 
 
 def q_av_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -400,7 +400,7 @@ def q_av_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.sources.pages import av_pages_from_documents
 
     pages = av_pages_from_documents(spark, sf_dir)
-    return av_features(pages, binary_col="payload", id_col="url")
+    return av_features(pages, binary_col="payload")
 
 
 def q_media_hash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -416,7 +416,7 @@ def q_media_hash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bl = pages.where(did % 11 == 0).select(
         F.lower(F.sha2(F.col("html"), 256)).alias("sha256")
     )
-    return media_hash_gate(pages, bl, binary_col="html", id_col="url")
+    return media_hash_gate(pages, bl)
 
 
 def q_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -521,9 +521,7 @@ def q_epoch_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", synth_filename(F.col("doc_id")).alias("filename")
     )
-    return parse_epoch_filename(d, "filename").select(
-        "doc_id", "ts_parsed", "ts_precision"
-    )
+    return parse_epoch_filename(d).select("doc_id", "ts_parsed", "ts_precision")
 
 
 def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -571,9 +569,7 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.multimodal import frame_sample
 
     pages = pages_from_documents(spark, sf_dir)
-    return frame_sample(pages, binary_col="html", id_col="url").select(
-        "id", "frame_idx", "ts_ms", "decoder"
-    )
+    return frame_sample(pages).select("id", "frame_idx", "ts_ms", "decoder")
 
 
 def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -582,7 +578,7 @@ def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.multimodal import image_resize
 
     pages = pages_from_documents(spark, sf_dir)
-    return image_resize(pages, binary_col="html", id_col="url", max_side=512)
+    return image_resize(pages, max_side=512)
 
 
 def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -591,7 +587,7 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs (rows-only: the 61-bit polynomial rolling hash is engine-native)."""
     from ocr_spark.operators.dedup import winnow_pairs
 
-    return winnow_pairs(_t(spark, sf_dir, "documents"), min_shared=2)
+    return winnow_pairs(_t(spark, sf_dir, "documents"))
 
 
 def _messy_urls(df: DataFrame) -> DataFrame:
@@ -731,7 +727,7 @@ def q_pagerank_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.links import host_graph, outlinks, pagerank_hosts
 
     edges = outlinks(_linky_pages(_t(spark, sf_dir, "documents")))
-    ranks = pagerank_hosts(host_graph(edges), iterations=8, damping=0.85)
+    ranks = pagerank_hosts(host_graph(edges), iterations=8)
     return ranks.select("host", F.round("rank", 6).alias("rank"))
 
 
@@ -751,9 +747,7 @@ def q_trustrank_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.links import host_graph, outlinks, trustrank_hosts
 
     edges = outlinks(_linky_pages(_t(spark, sf_dir, "documents")))
-    ranks = trustrank_hosts(
-        host_graph(edges), seeds=TRUST_SEEDS, iterations=8, damping=0.85
-    )
+    ranks = trustrank_hosts(host_graph(edges), seeds=TRUST_SEEDS, iterations=8)
     return ranks.select("host", F.round("rank", 6).alias("rank"))
 
 
@@ -1170,7 +1164,7 @@ def q_common_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB twin."""
     from ocr_spark.operators.dedup import common_ngrams
 
-    return common_ngrams(_t(spark, sf_dir, "documents"), w=8, k=20)
+    return common_ngrams(_t(spark, sf_dir, "documents"), k=20)
 
 
 def q_host_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1209,7 +1203,7 @@ def q_host_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("\nall rights reserved "), host,
         ).alias("text"),
     )
-    return host_line_dedup(assembled, min_host_pages=5, min_ratio=0.5)
+    return host_line_dedup(assembled)
 
 
 def q_blockwords(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1587,7 +1581,7 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.array_join(mutated, " ").alias("text"))
         .select(vid.alias("doc_id"), "text")
     )
-    return lsh_recall_audit(d.unionByName(variants), threshold=0.5)
+    return lsh_recall_audit(d.unionByName(variants))
 
 
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1597,9 +1591,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any scale. Exact DuckDB twin."""
     from ocr_spark.operators.index import inverted_index
 
-    return inverted_index(
-        _t(spark, sf_dir, "documents"), min_df=2, max_df_frac=0.9
-    )
+    return inverted_index(_t(spark, sf_dir, "documents"))
 
 
 def q_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1633,12 +1625,7 @@ def q_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("merge").alias("source"),
         F.length(new_text).cast("long").alias("n_chars"),
     )
-    table.merge_into(
-        spark,
-        updates.unionByName(inserts),
-        partition_by="lang",
-        stats_cols=("doc_id",),
-    )
+    table.merge_into(spark, updates.unionByName(inserts), partition_by="lang")
     return table.read(spark).select(*cols)
 
 
@@ -1667,7 +1654,7 @@ def q_host_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = _messy_urls(d).select("doc_id", "url").join(
         d.select("doc_id", "text"), "doc_id"
     )
-    return domain_blocklist(pages, min_docs=5, min_kept_frac=0.85)
+    return domain_blocklist(pages, min_kept_frac=0.85)
 
 
 def q_host_quality_eb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1681,7 +1668,7 @@ def q_host_quality_eb(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = _messy_urls(d).select("doc_id", "url").join(
         d.select("doc_id", "text"), "doc_id"
     )
-    return domain_quality_eb(pages, prior_strength=20.0, min_smoothed_frac=0.85)
+    return domain_quality_eb(pages, min_smoothed_frac=0.85)
 
 
 def q_page_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2015,7 +2002,7 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmin assignments, 6-dp refined codebooks, ADC table, ordered sum."""
     from ocr_spark.operators.similarity import pq_topk
 
-    return pq_topk(_t(spark, sf_dir, "embeddings"), k=10)
+    return pq_topk(_t(spark, sf_dir, "embeddings"))
 
 
 def q_rp_project(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2095,7 +2082,7 @@ def q_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate join is gated to the query doc's own vocabulary."""
     from ocr_spark.operators.tfidf import more_like_this
 
-    return more_like_this(_t(spark, sf_dir, "documents"), k=10)
+    return more_like_this(_t(spark, sf_dir, "documents"))
 
 
 def q_search_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2231,13 +2218,11 @@ def q_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     newfp = newb.select("doc_id", fingerprint_md5("text").alias("fp"))
-    bloom = bloom_build(committed, "fp", n_blocks=BLOOM_GATE_NB)
-    probed = bloom_probe(newfp, bloom, "fp", n_blocks=BLOOM_GATE_NB).select(
+    bloom = bloom_build(committed, n_blocks=BLOOM_GATE_NB)
+    probed = bloom_probe(newfp, bloom, n_blocks=BLOOM_GATE_NB).select(
         "doc_id", "maybe_seen"
     )
-    gated = bloom_gate_exact(
-        newfp, committed, bloom, "fp", "doc_id", BLOOM_GATE_NB
-    )
+    gated = bloom_gate_exact(newfp, committed, bloom, n_blocks=BLOOM_GATE_NB)
     return probed.join(gated, "doc_id")
 
 

@@ -30,10 +30,11 @@ def synth_filename(id_col: Column) -> Column:
     return F.concat(F.lit("doc_"), id_col.cast("string"), F.lit("_"), stamp, F.lit(".jpg"))
 
 
-def parse_epoch_filename(df: DataFrame, fname_col: str = "filename") -> DataFrame:
-    """Extract the epoch run and format it — one row out per row in, empty
-    string when no run is found (P7: failure -> empty, never a dropped row)."""
-    digits = F.regexp_extract(F.col(fname_col), _EPOCH_RE, 1)
+def parse_epoch_filename(df: DataFrame) -> DataFrame:
+    """Extract the epoch run of the ``filename`` column and format it — one
+    row out per row in, empty string when no run is found (P7: failure ->
+    empty, never a dropped row)."""
+    digits = F.regexp_extract(F.col("filename"), _EPOCH_RE, 1)
     sec = F.when(F.length(digits) == 13, (digits.cast("long") / 1000).cast("long")).otherwise(
         digits.cast("long")
     )

@@ -163,8 +163,7 @@ def cmd_dedup(args: argparse.Namespace) -> int:
     )
     disp = (
         clean_corpus(
-            keyed, text_col="text", id_col="_did",
-            minhash_threshold=args.threshold,
+            keyed, id_col="_did", minhash_threshold=args.threshold,
         )
         .join(keyed.select("_did", "url"), "_did")
         .select("url", "stage")

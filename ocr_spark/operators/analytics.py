@@ -26,13 +26,13 @@ def topk_per_group(df: DataFrame) -> DataFrame:
     )
 
 
-def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Assign session ids: a session breaks when the gap to the previous
-    event of the same user exceeds ``gap_minutes`` (lag + running sum —
+    event of the same user exceeds 30 minutes (lag + running sum —
     the standard shuffle-once sessionization)."""
     w = Window.partitionBy("user_id").orderBy("ts")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    new_session = F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
+    new_session = F.when(gap.isNull() | (gap > 30 * 60), 1).otherwise(0)
     return events.withColumn(
         "session_id", F.sum(new_session).over(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -40,9 +40,9 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     )
 
 
-def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def session_stats(events: DataFrame) -> DataFrame:
     """Per-user session metrics from sessionize()."""
-    s = sessionize(events, gap_minutes)
+    s = sessionize(events)
     return (
         s.groupBy("user_id")
         .agg(

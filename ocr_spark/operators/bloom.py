@@ -39,11 +39,11 @@ strictly positive in both engines' signed BIGINT.
 
 Sizing: with keys spread over n_blocks blocks at load L = n_keys /
 n_blocks keys/block, a probe's false-positive rate is roughly
-(1 - e^(-kL/64))^k; the default L ≈ 6, k = 4 gives ~2% — good enough to
-kill ~98% of the exact-join traffic for novel keys. Per 10^9 keys the
-filter is ~170M rows * 16 B ≈ 2.7 GB as a table (≈1.3 GB of bitmap),
-scaling linearly; shard by block range if a single broadcast must stay
-under the executor limit.
+(1 - e^(-kL/64))^k; L ≈ 6 at k = 4 gives ~2% — good enough to kill ~98%
+of the exact-join traffic for novel keys — so the default 2^20 blocks
+suit about 6M committed keys. Choose ``n_blocks`` from the expected key
+count and persist it with the filter table: it is part of the filter's
+identity.
 
 Reference analog: the resume key-set check (one_key_process.py:820-826)
 loads the committed basename set into a dict — the O(1)-membership
@@ -59,7 +59,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 BLOOM_K = 4  # bits set per key (within the key's one block)
-BLOOM_LOAD = 6  # target keys per 64-bit block (~2% fpp at k=4)
 _BB_P = (1 << 31) - 1  # same Mersenne prime as the minhash family
 
 
@@ -71,12 +70,6 @@ def _bb_constants() -> list[tuple[int, int]]:
 
 
 BLOOM_AB = _bb_constants()
-
-
-def n_blocks_for(n_keys: int) -> int:
-    """Block-count sizing for an expected key count (min 64 blocks so
-    toy tables still exercise real block dispersion)."""
-    return max(64, int(n_keys // BLOOM_LOAD) + 1)
 
 
 def _block_and_mask(key_col, n_blocks: int):
@@ -111,17 +104,16 @@ def _mask_from_positions(df: DataFrame, pos_cols: list[Column]) -> DataFrame:
 
 def bloom_build(
     df: DataFrame,
-    key_col: str = "fp",
     n_blocks: int = 1 << 20,
 ) -> DataFrame:
-    """Build the (block, bits) filter table from a key column. ONE
+    """Build the (block, bits) filter table from the ``fp`` key column. ONE
     map-side pass plus one hash aggregation on block — the partial
     bit_or combines before the shuffle, so at most n_blocks rows move
     per input partition regardless of key count."""
-    block, pos = _block_and_mask(F.col(key_col), n_blocks)
+    block, pos = _block_and_mask(F.col("fp"), n_blocks)
     # keep the key column through the mask build — the position
     # expressions reference it — then project it away before the agg
-    masked = _mask_from_positions(df.select(key_col, block), pos)
+    masked = _mask_from_positions(df.select("fp", block), pos)
     return (
         masked.groupBy("block")
         .agg(F.bit_or("mask").alias("bits"))
@@ -131,20 +123,18 @@ def bloom_build(
 def bloom_probe(
     df: DataFrame,
     bloom: DataFrame,
-    key_col: str = "fp",
     n_blocks: int = 1 << 20,
 ) -> DataFrame:
-    """Append ``maybe_seen`` (boolean): False = key DEFINITELY absent from
-    the filter's build set; True = present or false positive (verify with
+    """Append ``maybe_seen`` (boolean): False = the ``fp`` key is
+    DEFINITELY absent from the filter's build set; True = present or false positive (verify with
     the exact join). ``n_blocks`` MUST match the build call — it is part
-    of the filter's identity, so persist it next to the
-    filter table (committed_bloom_meta in the ingest pipeline).
+    of the filter's identity.
 
     The probe side carries (original columns, block, mask) into a LEFT
     join on block; the filter side is n_blocks rows max, so AQE plans a
     broadcast at any realistic size and a shuffle join beyond it — the
     probe payload never amplifies either way."""
-    block, pos = _block_and_mask(F.col(key_col), n_blocks)
+    block, pos = _block_and_mask(F.col("fp"), n_blocks)
     probed = _mask_from_positions(df.select("*", block), pos)
     return (
         probed.join(bloom, "block", "left")
@@ -158,43 +148,26 @@ def bloom_probe(
     )
 
 
-def bloom_merge(*blooms: DataFrame) -> DataFrame:
-    """OR-combine filter tables built with the SAME (n_blocks, k): the
-    blocked layout makes the union a block-keyed bit_or — an ingest loop
-    extends its committed filter with each batch's delta instead of
-    rebuilding over the whole corpus (build cost stays O(batch))."""
-    if not blooms:
-        raise ValueError("bloom_merge needs at least one filter table")
-    merged = blooms[0]
-    for b in blooms[1:]:
-        merged = merged.unionByName(b)
-    return merged.groupBy("block").agg(F.bit_or("bits").alias("bits"))
-
-
 def bloom_gate_exact(
     new_df: DataFrame,
     committed_keys: DataFrame,
     bloom: DataFrame,
-    key_col: str = "fp",
-    id_col: str = "doc_id",
     n_blocks: int = 1 << 20,
 ) -> DataFrame:
-    """Exact membership verdict (id, seen) using the filter as a
+    """Exact membership verdict (doc_id, seen) using the filter as a
     prefilter: bloom-negative rows are 'seen = False' with no join;
     only bloom-positive rows join ``committed_keys`` (LEFT SEMI on the
-    key) to split true duplicates from false positives. Output is
+    ``fp`` key) to split true duplicates from false positives. Output is
     row-for-row over ``new_df`` — the never-drop contract."""
-    probed = bloom_probe(
-        new_df.select(id_col, key_col), bloom, key_col, n_blocks
-    )
+    probed = bloom_probe(new_df.select("doc_id", "fp"), bloom, n_blocks)
     pos = probed.where(F.col("maybe_seen"))
     confirmed = (
-        pos.join(committed_keys.select(key_col).distinct(), key_col, "left_semi")
-        .select(id_col)
+        pos.join(committed_keys.select("fp").distinct(), "fp", "left_semi")
+        .select("doc_id")
         .withColumn("_s", F.lit(True))
     )
     return (
-        probed.select(id_col)
-        .join(confirmed, id_col, "left")
-        .select(id_col, F.coalesce(F.col("_s"), F.lit(False)).alias("seen"))
+        probed.select("doc_id")
+        .join(confirmed, "doc_id", "left")
+        .select("doc_id", F.coalesce(F.col("_s"), F.lit(False)).alias("seen"))
     )

@@ -28,7 +28,6 @@ from .quality import quality_filter
 
 def clean_corpus(
     df: DataFrame,
-    text_col: str = "text",
     id_col: str = "doc_id",
     minhash_threshold: float = 0.5,
 ) -> DataFrame:
@@ -42,7 +41,7 @@ def clean_corpus(
     ids = df.select(F.col(id_col).alias("id"))
 
     q_kept = (
-        quality_filter(df, text_col=text_col, id_col=id_col)
+        quality_filter(df, text_col="text", id_col=id_col)
         .where("kept")
         .select(F.col(id_col).alias("id"))
     )
@@ -51,7 +50,7 @@ def clean_corpus(
     )
 
     fp = quality_docs.select(
-        F.col(id_col).alias("id"), fingerprint_md5(text_col).alias("fp")
+        F.col(id_col).alias("id"), fingerprint_md5("text").alias("fp")
     )
     exact_keep = fp.groupBy("fp").agg(F.min("id").alias("id")).select("id")
     exact_docs = quality_docs.join(
@@ -59,7 +58,7 @@ def clean_corpus(
     )
 
     pairs = minhash_lsh_pairs(
-        exact_docs, threshold=minhash_threshold, text_col=text_col, id_col=id_col
+        exact_docs, threshold=minhash_threshold, id_col=id_col
     )
     near = dedup_clusters(exact_docs, pairs, id_col=id_col).where("is_keeper")
     near_keep = near.select(F.col(id_col).alias("id"))

@@ -62,32 +62,24 @@ def release_cached() -> None:
         _CACHED.popitem()[1].unpersist()
 
 
-def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Hash-groupBy exact dedup: one row per distinct canonical text with the
     keeper id (min id — deterministic first-match-wins, the reference's
     ``matching_files[0]`` tie-break, one_key_process.py:871-874)."""
     return (
-        df.select(fingerprint_md5(text_col).alias("fp"), F.col(id_col))
+        df.select(fingerprint_md5("text").alias("fp"), F.col("doc_id"))
         .groupBy("fp")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Return df filtered to one keeper row per distinct canonical text."""
-    keep = exact_dedup_groups(df, text_col, id_col).select(
-        F.col("keep_id").alias(id_col)
-    )
-    return df.join(keep, id_col, "left_semi")
-
-
-def _shingles(text_col: str):
-    """Word n-gram shingle array, all JVM-side: lower -> split -> transform
-    over index range (no Python, no explode)."""
-    toks = F.split(normalized_for_fingerprint(text_col), " ")
+def _shingles():
+    """Word n-gram shingle array of the ``text`` column, all JVM-side:
+    lower -> split -> transform over index range (no Python, no explode)."""
+    toks = F.split(normalized_for_fingerprint("text"), " ")
     n = F.size(toks)
     idx = F.sequence(F.lit(0), F.greatest(n - SHINGLE_N, F.lit(0)))
     return F.when(n < SHINGLE_N, F.array(F.concat_ws(" ", toks))).otherwise(
@@ -132,18 +124,18 @@ def _base_hash(col):
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
+def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
                        extra: tuple = ()) -> DataFrame:
     """(id, [extra...], shingles, sig: array<long>[MINHASH_PERMS]) — min over
-    per-perm hashes. ``extra`` columns (e.g. a fingerprint) ride along in
-    the same single map pass.
+    per-perm hashes of the ``text`` column's shingles. ``extra`` columns
+    (e.g. a fingerprint) ride along in the same single map pass.
 
     One md5 per shingle; the perm family is linear arithmetic over that base
     hash. Entirely expression-level: computing a signature is a map stage
     with zero shuffle and zero Python.
     """
     base = df.select(
-        F.col(id_col), *extra, _shingles(text_col).alias("shingles")
+        F.col(id_col), *extra, _shingles().alias("shingles")
     ).withColumn("bh", F.transform(F.col("shingles"), _base_hash))
 
     def perm(a: int, b: int):
@@ -193,7 +185,6 @@ def band_buckets(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
 ) -> DataFrame:
@@ -211,7 +202,7 @@ def minhash_lsh_pairs(
       near-dup recall for dropped buckets is recovered by their OTHER bands.
     """
     sigs = _persist_scoped(
-        "minhash_sigs", minhash_signatures(df, text_col, id_col)
+        "minhash_sigs", minhash_signatures(df, id_col)
     )
 
     banded = band_buckets(sigs, id_col=id_col)
@@ -256,16 +247,16 @@ def minhash_lsh_pairs(
     return verified
 
 
-def lsh_recall_audit(df: DataFrame, threshold: float = 0.5) -> DataFrame:
+def lsh_recall_audit(df: DataFrame) -> DataFrame:
     """One-row self-audit of the banded-LSH candidate generator against
     EXACT shingle-jaccard ground truth: (n_truth, n_cand, n_hit, recall,
     precision). recall = truth pairs the band join surfaced; precision =
-    candidate pairs that really are >= threshold.
+    candidate pairs that really are >= 0.5.
 
     Ground truth is exact, not sampled: every pair with jaccard > 0
     shares >= 1 shingle, so the shingle-hash inverted-index join
     enumerates ALL such pairs, then exact set jaccard filters to
-    >= threshold. That join is O(sum df^2) over shingle document
+    >= 0.5. That join is O(sum df^2) over shingle document
     frequencies — quadratic on boilerplate shingles BY DESIGN (it is the
     brute-force baseline the LSH exists to avoid); at corpus scale this
     audit runs on a stratified sample, not the full table. The candidate
@@ -301,7 +292,7 @@ def lsh_recall_audit(df: DataFrame, threshold: float = 0.5) -> DataFrame:
         tc.join(dsh.alias("a"), F.col("id_a") == F.col("a.id"))
         .join(dsh.alias("b"), F.col("id_b") == F.col("b.id"))
         .select("id_a", "id_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= 0.5)
         .select("id_a", "id_b")
     )
 
@@ -685,8 +676,8 @@ def winnow_fingerprints(df: DataFrame) -> DataFrame:
     )
 
 
-def winnow_pairs(df: DataFrame, min_shared: int = 2) -> DataFrame:
-    """Candidate near-dup pairs sharing >= min_shared winnow fingerprints:
+def winnow_pairs(df: DataFrame) -> DataFrame:
+    """Candidate near-dup pairs sharing >= 2 winnow fingerprints:
     explode -> fingerprint equi-join -> count (the content-overlap join;
     at scale the exploded table is (id, fp) longs only).
 
@@ -712,7 +703,7 @@ def winnow_pairs(df: DataFrame, min_shared: int = 2) -> DataFrame:
         a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id") < F.col("b.id")))
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
+        .where(F.col("n_shared") >= 2)
     )
 
 
@@ -785,15 +776,13 @@ def line_dedup(df: DataFrame) -> DataFrame:
     )
 
 
-def host_line_dedup(df: DataFrame, min_host_pages: int = 5,
-                    min_ratio: float = 0.5) -> DataFrame:
+def host_line_dedup(df: DataFrame) -> DataFrame:
     """PER-HOST boilerplate removal (the site-chrome half of RefinedWeb's
     line cleaning; :func:`line_dedup` is the corpus-GLOBAL half): a line
-    is host-boilerplate when its host has at least ``min_host_pages``
-    pages AND the line appears on more than ``min_ratio`` of them — nav
-    bars, cookie banners, and footer chrome repeat across one SITE's
-    pages, not across the whole web, so a global document-frequency
-    cutoff either misses them (threshold too high) or nukes legitimately
+    is host-boilerplate when its host has at least 5 pages AND the line
+    appears on more than half of them — nav bars, cookie banners, and
+    footer chrome repeat across one SITE's pages, not across the whole
+    web, so a global document-frequency cutoff either misses them (threshold too high) or nukes legitimately
     common sentences (too low). Returns (id, host, text, n_lines,
     n_dropped); surviving lines reassemble in original order; every
     document comes back (NULL text included).
@@ -835,8 +824,8 @@ def host_line_dedup(df: DataFrame, min_host_pages: int = 5,
         # aggregates, far smaller than the corpus
         .join(host_pages, "hh")
         .where(
-            (F.col("n_pages") >= min_host_pages)
-            & (F.col("ldf") > F.col("n_pages") * min_ratio)
+            (F.col("n_pages") >= 5)
+            & (F.col("ldf") > F.col("n_pages") * 0.5)
         )
         .select("hh", "lh")
     )
@@ -921,7 +910,7 @@ def latest_capture(df: DataFrame) -> DataFrame:
     Shape: one hash aggregation on the canonical key — max_by and count
     combine map-side, so each partition forwards one row per canonical
     url it saw, never the capture payloads. At 10^12 captures this is the
-    same partial-agg scan shape as exact_dedup; no window, no sort."""
+    same partial-agg scan shape as exact_dedup_groups; no window, no sort."""
     from ..functions.urls import url_canonicalize
 
     return (
@@ -947,7 +936,7 @@ def paragraph_dedup(df: DataFrame, max_df: int = PARA_MAX_DF) -> DataFrame:
     pass's trim-only identity would) appears in more than ``max_df``
     documents is removed from every document; survivors reassemble in
     original order joined by blank lines. Completes the granularity
-    ladder: document (exact_dedup) / span (dup_spans) / paragraph (here)
+    ladder: document (exact_dedup_groups) / span (dup_spans) / paragraph (here)
     / line (line_dedup). Returns (id, text, n_paras, n_dropped).
 
     Shape: identical to :func:`line_dedup` — the df count and removal
@@ -1007,8 +996,8 @@ def paragraph_dedup(df: DataFrame, max_df: int = PARA_MAX_DF) -> DataFrame:
     )
 
 
-def common_ngrams(df: DataFrame, w: int = 8, k: int = 20) -> DataFrame:
-    """Corpus n-gram profile: the top ``k`` word ``w``-grams by document
+def common_ngrams(df: DataFrame, k: int = 20) -> DataFrame:
+    """Corpus n-gram profile: the top ``k`` word 8-grams by document
     frequency — the tuning instrument for every gram-threshold in this
     engine (span-dedup min_df, contamination max_df, boilerplate
     ratios): you look at THIS table before picking them. Returns
@@ -1028,13 +1017,13 @@ def common_ngrams(df: DataFrame, w: int = 8, k: int = 20) -> DataFrame:
     toks = F.split(norm, " ")
     grams = (
         df.select(F.col("doc_id").alias("id"), toks.alias("toks"))
-        .where(F.size("toks") >= w)
+        .where(F.size("toks") >= 8)
         .select(
             "id",
             F.explode(
                 F.transform(
-                    F.sequence(F.lit(0), F.size("toks") - w),
-                    lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i + 1, w)),
+                    F.sequence(F.lit(0), F.size("toks") - 8),
+                    lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i + 1, 8)),
                 )
             ).alias("gram"),
         )

@@ -14,12 +14,8 @@ table with zero reads of committed text. At 100 TB the state table is the
 difference between O(batch) and O(corpus) work per ingest.
 
 Shape: the exact check is a broadcast-friendly LEFT SEMI against the
-committed fingerprint set; pass ``bloom`` (a persisted blocked-Bloom
-table from operators/bloom.py, built from the state table's fp column at
-commit time) to prefilter it — bloom-negative rows are definitively new
-and never touch the committed table, so a mostly-novel batch's exact
-check is map-side. The near check band-joins the new
-batch's (band, bucket) rows against bucket keys derived from the STORED
+committed fingerprint set. The near check band-joins the new batch's
+(band, bucket) rows against bucket keys derived from the STORED
 committed signatures (xxhash64 over sig slices — no md5 over text), with
 the same union-wide bucket cap as ``minhash_lsh_pairs``, then verifies
 candidates with exact jaccard over stored distinct shingles. Intra-batch
@@ -38,11 +34,7 @@ from ..functions.text import fingerprint_md5
 from .dedup import LSH_MAX_BUCKET, band_buckets, minhash_signatures
 
 
-def committed_state(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def committed_state(df: DataFrame) -> DataFrame:
     """The per-document dedup state to persist at ingest-commit time:
     (id, fp, sh: array<string> distinct shingles, sig: array<long>).
     One map pass over the batch being committed — fingerprint, shingles,
@@ -56,11 +48,10 @@ def committed_state(
     drop ``sh`` and verify with signature agreement instead (estimated
     jaccard) — the banding/capping machinery is unchanged."""
     sigs = minhash_signatures(
-        df, text_col, id_col,
-        extra=(fingerprint_md5(text_col).alias("fp"),),
+        df, "doc_id", extra=(fingerprint_md5("text").alias("fp"),)
     )
     return sigs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         "fp",
         F.array_distinct("shingles").alias("sh"),
         "sig",
@@ -92,18 +83,12 @@ def write_band_store(state_df: DataFrame, table_name: str, path: str) -> None:
 def incremental_status_against_state(
     new_df: DataFrame,
     state_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    bloom: DataFrame | None = None,
-    bloom_n_blocks: int | None = None,
     band_store: DataFrame | None = None,
-    band_store_tail_state: DataFrame | None = None,
 ) -> DataFrame:
-    """(id_col, status) for every row of ``new_df`` checked against a
+    """(doc_id, status) for every row of ``new_df`` checked against a
     persisted :func:`committed_state` table: 'exact_seen' (fingerprint
     exists in the state), else 'near_seen' (minhash-LSH near-duplicate of
-    a committed document at ``threshold``), else 'new'. Ids must be
+    a committed document at jaccard 0.5), else 'new'. Ids must be
     disjoint across generations (they are different ingestion batches).
 
     Produces exactly the pairs ``minhash_lsh_pairs(new ∪ committed)``
@@ -113,32 +98,18 @@ def incremental_status_against_state(
     of committed text), and skips intra-side pairing up front instead of
     filtering it out afterwards.
 
-    ``band_store`` (a :func:`write_band_store` table), together with
-    ``band_store_tail_state`` when given, must hold exactly
+    ``band_store`` (a :func:`write_band_store` table) must hold exactly
     ``band_buckets(state_df)``'s rows. Nothing here checks that: a store
     that is stale against ``state_df`` silently loses near-duplicate
-    recall. The caller owns freshness — ``DedupIngest._band_probe``
-    compares the store's stamp against its meta table and falls back to
-    the full derive on any mismatch."""
-    new_state = committed_state(new_df, text_col, id_col)
+    recall. The caller owns freshness. Its one caller,
+    ``q_dedup_increment``, writes the store from the same
+    ``committed_state(old)`` it passes as ``state_df``, once per (Spark
+    application, ``sf_dir``), so the store is fresh by construction."""
+    new_state = committed_state(new_df)
     new_ids = new_state.select("id")
 
-    exact_probe = new_state.select("id", "fp")
-    if bloom is not None:
-        # scale path: the persisted blocked-Bloom filter (built once per
-        # commit from the state table's fp column, operators/bloom.py)
-        # sentences bloom-NEGATIVE rows to 'new' map-side — only the few
-        # positives (duplicates + ~2% false positives) reach the exact
-        # semi-join, so the committed fp projection is no longer joined
-        # against the whole batch every ingest
-        from .bloom import bloom_probe
-
-        exact_probe = bloom_probe(
-            exact_probe, bloom, "fp",
-            n_blocks=bloom_n_blocks if bloom_n_blocks is not None else 1 << 20,
-        ).where(F.col("maybe_seen")).select("id", "fp")
     exact = (
-        exact_probe
+        new_state.select("id", "fp")
         .join(state_df.select("fp").distinct(), "fp", "left_semi")
         .select("id")
         .withColumn("e", F.lit(True))
@@ -148,62 +119,39 @@ def incremental_status_against_state(
     # scale path: a persisted :func:`write_band_store` table is already
     # laid out (bucketed + sorted) on the band-join key, so the committed
     # side enters the candidate join with NO Exchange — only the batch's
-    # own band rows shuffle. With ``band_store_tail_state`` (the LSM-style
-    # streaming layout: bucketed BASE through the last refresh + the
-    # state rows appended SINCE, derived in-session) the committed side is
-    # the disjoint union base ∪ tail; the candidate join runs per part and
-    # unions RESULTS, so the base keeps its exchange-free scan while the
-    # tail — O(batches since refresh), not O(corpus) — pays the ordinary
-    # shuffle. Either layout must hold exactly band_buckets(state_df)'s
+    # own band rows shuffle. It must hold exactly band_buckets(state_df)'s
     # rows, so the pair set — and the DuckDB twin — are unchanged.
-    sb_parts: list[DataFrame]
     if band_store is not None:
-        sb_parts = [band_store.select("id", "band", "bucket")]
-        if band_store_tail_state is not None:
-            sb_parts.append(
-                band_buckets(
-                    band_store_tail_state, id_col="id",
-                )
-            )
+        sb = band_store.select("id", "band", "bucket")
     else:
-        sb_parts = [band_buckets(state_df, id_col="id")]
+        sb = band_buckets(state_df, id_col="id")
     # bucket cap over the UNION (identical semantics to the from-scratch
     # pass over new ∪ committed): a boilerplate bucket is oversized no
     # matter which generation its members arrived in. Counts are taken
-    # PER PART and re-summed so the bucketed base's count aggregation
+    # PER SIDE and re-summed so the bucketed store's count aggregation
     # stays exchange-free (its grouping keys are its bucket spec) and the
     # second-stage agg shuffles bucket-count rows, never band rows.
     def _cnt(df: DataFrame) -> DataFrame:
         return df.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("n"))
 
-    counts = _cnt(nb)
-    for part in sb_parts:
-        counts = counts.unionByName(_cnt(part))
     small = (
-        counts.groupBy("band", "bucket")
+        _cnt(nb).unionByName(_cnt(sb))
+        .groupBy("band", "bucket")
         .agg(F.sum("n").alias("n"))
         .where((F.col("n") > 1) & (F.col("n") <= LSH_MAX_BUCKET))
         .select("band", "bucket")
     )
     nb = nb.join(small, ["band", "bucket"], "left_semi")
-
-    def _cand(sb: DataFrame) -> DataFrame:
-        return (
-            nb.alias("l")
-            .join(
-                sb.join(small, ["band", "bucket"], "left_semi").alias("r"),
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.bucket") == F.col("r.bucket")),
-            )
-            .select(
-                F.col("l.id").alias("id_new"), F.col("r.id").alias("id_old")
-            )
+    cand = (
+        nb.alias("l")
+        .join(
+            sb.join(small, ["band", "bucket"], "left_semi").alias("r"),
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bucket") == F.col("r.bucket")),
         )
-
-    cand = _cand(sb_parts[0])
-    for part in sb_parts[1:]:
-        cand = cand.unionByName(_cand(part))
-    cand = cand.distinct()
+        .select(F.col("l.id").alias("id_new"), F.col("r.id").alias("id_old"))
+        .distinct()
+    )
     a = new_state.select(F.col("id").alias("id_new"), F.col("sh").alias("sh_a"))
     b = state_df.select(F.col("id").alias("id_old"), F.col("sh").alias("sh_b"))
     near = (
@@ -217,7 +165,7 @@ def incremental_status_against_state(
                 / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
                 4,
             )
-            >= threshold
+            >= 0.5
         )
         .select(F.col("id_new").alias("id"))
         .distinct()
@@ -228,7 +176,7 @@ def incremental_status_against_state(
         new_ids.join(exact, "id", "left")
         .join(near, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             F.when(F.col("e").isNotNull(), "exact_seen")
             .when(F.col("n").isNotNull(), "near_seen")
             .otherwise("new")

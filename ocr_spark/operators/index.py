@@ -32,18 +32,13 @@ from pyspark.sql import functions as F
 from ..functions.text import TOKEN_PATTERN
 
 
-def inverted_index(
-    df: DataFrame,
-    min_df: int = 2,
-    max_df_frac: float | None = None,
-) -> DataFrame:
+def inverted_index(df: DataFrame) -> DataFrame:
     """(term, df, cf, postings): documents per term (df), total
     occurrences (cf), and the comma-joined ascending doc-id posting list.
-    Terms with df < min_df are dropped (hapax noise); a ceiling comes from
-    ``max_df_frac`` (fraction of the corpus —
-    scale-invariant; costs one count() driver scalar, the same probe
-    tfidf_top_terms pays)."""
-    max_df = None if max_df_frac is None else int(max_df_frac * df.count())
+    Terms with df < 2 are dropped (hapax noise), and so are terms in more
+    than 90% of the corpus (a scale-invariant ceiling; costs one count()
+    driver scalar, the same probe tfidf_top_terms pays)."""
+    max_df = int(0.9 * df.count())
     toks = df.select(
         F.col("doc_id").alias("id"),
         F.explode(
@@ -65,10 +60,9 @@ def inverted_index(
             ",",
         ).alias("postings"),
     )
-    cond = F.col("df") >= min_df
-    if max_df is not None:
-        cond = cond & (F.col("df") <= max_df)
-    return inv.where(cond).select("term", "df", "cf", "postings")
+    return inv.where((F.col("df") >= 2) & (F.col("df") <= max_df)).select(
+        "term", "df", "cf", "postings"
+    )
 
 
 def positional_postings(df: DataFrame, vocab: list[str] | None = None) -> DataFrame:

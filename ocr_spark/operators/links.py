@@ -50,6 +50,7 @@ from ..functions.urls import url_host
 # time.
 PAGERANK_LOCAL_EDGE_THRESHOLD = 500_000
 PAGERANK_CHECKPOINT_EVERY = 3  # rounds between lazy localCheckpoints
+PAGERANK_DAMPING = 0.85  # share of rank that follows links each round
 
 
 def outlinks(pages: DataFrame) -> DataFrame:
@@ -238,13 +239,13 @@ def host_degree(edges: DataFrame) -> DataFrame:
 def pagerank_hosts(
     host_edges: DataFrame,
     iterations: int = 8,
-    damping: float = 0.85,
     seeds: list[str] | None = None,
 ) -> DataFrame:
-    """Damped PageRank over (src_host, dst_host, n_links) host edges.
-    Returns (host, rank) summing to 1 across all hosts that appear on
-    either side. Weighted by link multiplicity (n_links), dangling mass
-    redistributed by the teleport vector — the standard formulation.
+    """Damped PageRank (damping ``PAGERANK_DAMPING``) over (src_host,
+    dst_host, n_links) host edges. Returns (host, rank) summing to 1
+    across all hosts that appear on either side. Weighted by link
+    multiplicity (n_links), dangling mass redistributed by the teleport
+    vector — the standard formulation.
 
     ``seeds`` generalizes the teleport vector: None is classic PageRank
     (uniform 1/n teleport); a host list makes this TrustRank (Gyöngyi et
@@ -286,7 +287,7 @@ def pagerank_hosts(
         edges = edges.persist()
         edge_cache.append(edges)
         if edges.count() <= PAGERANK_LOCAL_EDGE_THRESHOLD:
-            out = _local_pagerank(edges, iterations, damping, seeds)
+            out = _local_pagerank(edges, iterations, seeds)
             edges.unpersist()
             return out
     out_w = edges.groupBy("src_host").agg(F.sum("n_links").alias("out_w"))
@@ -342,8 +343,8 @@ def pagerank_hosts(
         )
         if tele is None:
             new_rank = (
-                (1.0 - damping) / n_hosts
-                + damping
+                (1.0 - PAGERANK_DAMPING) / n_hosts
+                + PAGERANK_DAMPING
                 * (
                     F.coalesce("contrib", F.lit(0.0))
                     + (1.0 - F.col("flowed")) / n_hosts
@@ -351,8 +352,8 @@ def pagerank_hosts(
             )
         else:
             new_rank = (
-                F.lit(1.0 - damping) * tele
-                + damping
+                F.lit(1.0 - PAGERANK_DAMPING) * tele
+                + PAGERANK_DAMPING
                 * (
                     F.coalesce("contrib", F.lit(0.0))
                     + (1.0 - F.col("flowed")) * tele
@@ -374,8 +375,7 @@ def pagerank_hosts(
     return result
 
 
-def _local_pagerank(edges, iterations: int, damping: float,
-                    seeds: list[str] | None = None):
+def _local_pagerank(edges, iterations: int, seeds: list[str] | None = None):
     """Driver-local power iteration over a collected host-level transition
     table — only called when the edge count cleared
     ``PAGERANK_LOCAL_EDGE_THRESHOLD``.
@@ -411,14 +411,14 @@ def _local_pagerank(edges, iterations: int, damping: float,
         flowed = sum(contrib[h] for h in hosts)
         if tele is None:
             rank = {
-                h: (1.0 - damping) / n
-                + damping * (contrib[h] + (1.0 - flowed) / n)
+                h: (1.0 - PAGERANK_DAMPING) / n
+                + PAGERANK_DAMPING * (contrib[h] + (1.0 - flowed) / n)
                 for h in hosts
             }
         else:
             rank = {
-                h: (1.0 - damping) * tele[h]
-                + damping * (contrib[h] + (1.0 - flowed) * tele[h])
+                h: (1.0 - PAGERANK_DAMPING) * tele[h]
+                + PAGERANK_DAMPING * (contrib[h] + (1.0 - flowed) * tele[h])
                 for h in hosts
             }
     return edges.sparkSession.createDataFrame(
@@ -430,7 +430,6 @@ def trustrank_hosts(
     host_edges: DataFrame,
     seeds: list[str],
     iterations: int = 8,
-    damping: float = 0.85,
 ) -> DataFrame:
     """TrustRank (Gyöngyi, Garcia-Molina, Pedersen 2004): PageRank with
     the teleport vector concentrated on a hand-vetted trusted seed set —
@@ -438,9 +437,4 @@ def trustrank_hosts(
     classic PageRank by interlinking scores ~0 here unless a trust path
     from the seeds reaches it; honest hubs near the seeds score high.
     Same single-lazy-plan iteration machinery as ``pagerank_hosts``."""
-    return pagerank_hosts(
-        host_edges,
-        iterations=iterations,
-        damping=damping,
-        seeds=seeds,
-    )
+    return pagerank_hosts(host_edges, iterations=iterations, seeds=seeds)

@@ -77,12 +77,11 @@ def token_budget_select(df: DataFrame, budgets: dict[str, int]) -> DataFrame:
 
 def domain_blocklist(
     df: DataFrame,
-    min_docs: int = 5,
     min_kept_frac: float = 0.5,
 ) -> DataFrame:
     """Per-host quality profile + block decision.
 
-    A host is blocked when it has at least ``min_docs`` documents and
+    A host is blocked when it has at least 5 documents and
     fewer than ``min_kept_frac`` of them pass the per-document
     ``quality_filter``. The support floor keeps single-page hosts from
     being condemned by one bad document (mirroring the per-group support
@@ -106,7 +105,7 @@ def domain_blocklist(
             "n_docs",
             "kept_frac",
             (
-                (F.col("n_docs") >= min_docs)
+                (F.col("n_docs") >= 5)
                 & (F.col("kept_frac") < min_kept_frac)
             ).alias("blocked"),
         )
@@ -115,17 +114,16 @@ def domain_blocklist(
 
 def domain_quality_eb(
     df: DataFrame,
-    prior_strength: float = 20.0,
     min_smoothed_frac: float = 0.5,
 ) -> DataFrame:
     """Empirical-Bayes smoothed per-host quality — the web-scale fix for
     :func:`domain_blocklist`'s support floor: a floor EXEMPTS every host
-    below ``min_docs`` outright (a 4-page spam host passes forever),
+    below 5 documents outright (a 4-page spam host passes forever),
     while shrinkage judges every host, scaled by its evidence:
 
         smoothed = (n_kept + a * g) / (n_docs + a)
 
-    with ``g`` the corpus-wide kept rate and ``a = prior_strength`` the
+    with ``g`` the corpus-wide kept rate and ``a = 20`` the
     prior pseudo-count — a 2-page host sits near the prior, a 10k-page
     host at its own rate (the standard Beta-Binomial posterior mean).
 
@@ -154,8 +152,8 @@ def domain_quality_eb(
         .alias("g")
     )
     smoothed = F.round(
-        (F.col("n_kept") + F.lit(prior_strength) * F.col("g"))
-        / (F.col("n_docs") + F.lit(prior_strength)),
+        (F.col("n_kept") + F.lit(20.0) * F.col("g"))
+        / (F.col("n_docs") + F.lit(20.0)),
         4,
     )
     return per_host.crossJoin(F.broadcast(g)).select(

@@ -338,8 +338,7 @@ AV_FEATURES_SCHEMA = (
 )
 
 
-def av_features(df: DataFrame, binary_col: str = "html",
-                id_col: str = "url") -> DataFrame:
+def av_features(df: DataFrame, binary_col: str = "html") -> DataFrame:
     """Partition-parallel audio/video metadata over a binary column: the
     header-true fast path (``parse_av_header``) with the deterministic
     fake as fallback — same Arrow ``mapInPandas`` shape as
@@ -356,7 +355,7 @@ def av_features(df: DataFrame, binary_col: str = "html",
                 if meta is None:
                     meta = _fake_av(hashlib.sha256(b).digest())
                     decoder = "stub"
-                out["id"].append(pdf[id_col].iat[i])
+                out["id"].append(pdf["url"].iat[i])
                 out["kind"].append(meta["kind"])
                 out["n_bytes"].append(len(b))
                 out["duration_ms"].append(meta["duration_ms"])
@@ -365,7 +364,7 @@ def av_features(df: DataFrame, binary_col: str = "html",
                 out["decoder"].append(decoder)
             yield pd.DataFrame(out)
 
-    return df.select(id_col, binary_col).mapInPandas(feats, schema=AV_FEATURES_SCHEMA)
+    return df.select("url", binary_col).mapInPandas(feats, schema=AV_FEATURES_SCHEMA)
 
 
 def decode_image_tagged(data: bytes) -> tuple[int, int, str]:
@@ -420,19 +419,18 @@ def resize_dims(w: int, h: int, max_side: int) -> tuple[int, int]:
     return max(1, (w * max_side) // h), max_side
 
 
-def image_resize(df: DataFrame, binary_col: str = "html", id_col: str = "url",
-                 max_side: int = 512) -> DataFrame:
-    """Resize plumbing over binary payloads: decode (stubbed — no Pillow
-    here) -> aspect-preserving target dims. The real path would re-encode
-    bytes; the stub computes the exact output geometry from the fake
-    decoder's deterministic dimensions, so schema/batching/arithmetic are
-    all real and tested."""
+def image_resize(df: DataFrame, max_side: int = 512) -> DataFrame:
+    """Resize plumbing over the ``html`` binary payloads: decode (stubbed —
+    no Pillow here) -> aspect-preserving target dims. The real path would
+    re-encode bytes; the stub computes the exact output geometry from the
+    fake decoder's deterministic dimensions, so schema/batching/arithmetic
+    are all real and tested."""
     import hashlib
 
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {k: [] for k in ("id", "width", "height", "resized_w", "resized_h", "decoder")}
-            for i, blob in enumerate(pdf[binary_col].tolist()):
+            for i, blob in enumerate(pdf["html"].tolist()):
                 b = blob if blob is not None else b""
                 digest = hashlib.sha256(b).digest()
                 try:
@@ -443,7 +441,7 @@ def image_resize(df: DataFrame, binary_col: str = "html", id_col: str = "url",
                 except Exception:
                     w, h, decoder = -1, -1, "error"
                 rw, rh = resize_dims(w, h, max_side)
-                out["id"].append(pdf[id_col].iat[i])
+                out["id"].append(pdf["url"].iat[i])
                 out["width"].append(w)
                 out["height"].append(h)
                 out["resized_w"].append(rw)
@@ -451,7 +449,7 @@ def image_resize(df: DataFrame, binary_col: str = "html", id_col: str = "url",
                 out["decoder"].append(decoder)
             yield pd.DataFrame(out)
 
-    return df.select(id_col, binary_col).mapInPandas(resize, schema=RESIZE_SCHEMA)
+    return df.select("url", "html").mapInPandas(resize, schema=RESIZE_SCHEMA)
 
 
 FRAME_EVERY_MS = 1000  # frame_sample's sampling interval
@@ -484,12 +482,13 @@ def _fake_frames(digest: bytes):
     return frames
 
 
-def frame_sample(df: DataFrame, binary_col: str = "html", id_col: str = "url") -> DataFrame:
-    """1:N frame sampling over binary payloads — the multimodal analog of
-    the reference's document -> segments relation (one tall image split into
-    parts, split_image.py:192-194,302-307): one input row fans out to one
-    row per sampled frame, all inside a partition-parallel ``mapInPandas``
-    (Arrow batches in, variable-length batches out; no explode shuffle).
+def frame_sample(df: DataFrame) -> DataFrame:
+    """1:N frame sampling over the ``html`` binary payloads — the
+    multimodal analog of the reference's document -> segments relation
+    (one tall image split into parts, split_image.py:192-194,302-307): one
+    input row fans out to one row per sampled frame, all inside a
+    partition-parallel ``mapInPandas`` (Arrow batches in, variable-length
+    batches out; no explode shuffle).
     The frame DECODE is stubbed (no ffmpeg here); the Spark-side plumbing —
     1:N batch shape, schema, determinism — is real and tested."""
     import hashlib
@@ -497,7 +496,7 @@ def frame_sample(df: DataFrame, binary_col: str = "html", id_col: str = "url") -
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {k: [] for k in ("id", "frame_idx", "ts_ms", "frame_sha", "decoder")}
-            for i, blob in enumerate(pdf[binary_col].tolist()):
+            for i, blob in enumerate(pdf["html"].tolist()):
                 b = blob if blob is not None else b""
                 digest = hashlib.sha256(b).digest()
                 try:
@@ -506,7 +505,7 @@ def frame_sample(df: DataFrame, binary_col: str = "html", id_col: str = "url") -
                 except NotImplementedError:
                     frames = _fake_frames(digest)
                     decoder = "stub"
-                rid = pdf[id_col].iat[i]
+                rid = pdf["url"].iat[i]
                 for idx, ts_ms, fh in frames:
                     out["id"].append(rid)
                     out["frame_idx"].append(idx)
@@ -515,17 +514,17 @@ def frame_sample(df: DataFrame, binary_col: str = "html", id_col: str = "url") -
                     out["decoder"].append(decoder)
             yield pd.DataFrame(out)
 
-    return df.select(id_col, binary_col).mapInPandas(sample, schema=FRAME_SAMPLE_SCHEMA)
+    return df.select("url", "html").mapInPandas(sample, schema=FRAME_SAMPLE_SCHEMA)
 
 
-def media_features(df: DataFrame, binary_col: str = "html",
-                   id_col: str = "url") -> DataFrame:
-    """Partition-parallel media metadata extraction over a binary column."""
+def media_features(df: DataFrame) -> DataFrame:
+    """Partition-parallel media metadata extraction over the ``html``
+    binary column, keyed by ``url``."""
 
     def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf[id_col].tolist()
-            blobs = pdf[binary_col].tolist()
+            ids = pdf["url"].tolist()
+            blobs = pdf["html"].tolist()
             out = {k: [] for k in
                    ("id", "n_bytes", "kind", "sha256_prefix", "width", "height", "decoder")}
             for i, blob in enumerate(blobs):
@@ -547,20 +546,19 @@ def media_features(df: DataFrame, binary_col: str = "html",
                 out["decoder"].append(decoder)
             yield pd.DataFrame(out)
 
-    pruned = df.select(id_col, binary_col)
+    pruned = df.select("url", "html")
     return pruned.mapInPandas(feats, schema=MEDIA_FEATURES_SCHEMA)
 
 
-def media_hash_gate(df: DataFrame, blocklist: DataFrame,
-                    binary_col: str = "html", id_col: str = "url") -> DataFrame:
+def media_hash_gate(df: DataFrame, blocklist: DataFrame) -> DataFrame:
     """Known-bad media filtering by exact content hash — the mandatory
     safety gate of every production crawl pipeline (industry hash lists
-    of prohibited imagery; takedown/copyright lists): a binary payload
+    of prohibited imagery; takedown/copyright lists): an ``html`` payload
     whose sha256 appears in the blocklist is flagged, everything else
     passes. The MECHANISM is the operator; real deployments broadcast
     the vendor-supplied digest table (never vendored here).
 
-    Returns (id, sha256 hex, blocked) — one row per input row, never a
+    Returns (url, sha256 hex, blocked) — one row per input row, never a
     silent drop (the downstream sink decides suppression, keeping the
     audit trail).
 
@@ -569,13 +567,13 @@ def media_hash_gate(df: DataFrame, blocklist: DataFrame,
     broadcast; at list sizes beyond broadcast, swap in the blocked-Bloom
     prefilter (operators/bloom.py) in front of the exact join. Exact
     DuckDB twin (``__spark_entry__`` ``media_hash_gate``)."""
-    h = F.lower(F.sha2(F.col(binary_col), 256))
-    hashed = df.select(F.col(id_col), h.alias("sha256"))
+    h = F.lower(F.sha2(F.col("html"), 256))
+    hashed = df.select(F.col("url"), h.alias("sha256"))
     bl = (
         blocklist.select(F.lower(F.col("sha256")).alias("sha256"))
         .distinct()
         .withColumn("bad", F.lit(True))
     )
     return hashed.join(F.broadcast(bl), "sha256", "left").select(
-        id_col, "sha256", F.col("bad").isNotNull().alias("blocked")
+        "url", "sha256", F.col("bad").isNotNull().alias("blocked")
     )

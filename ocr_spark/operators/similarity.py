@@ -586,8 +586,8 @@ def pq_codebooks(df: DataFrame) -> DataFrame:
     )
 
 
-def pq_topk(df: DataFrame, k: int = 10) -> DataFrame:
-    """PQ asymmetric-distance top-k — the memory-scale ANN path: each
+def pq_topk(df: DataFrame) -> DataFrame:
+    """PQ asymmetric-distance top-10 — the memory-scale ANN path: each
     vector is stored as ``PQ_M`` small codes (8 bytes here vs 256 for the
     raw floats), and query scoring is a LOOKUP-TABLE sum, never a
     full-vector dot product. The query builds a (PQ_M x PQ_K) distance
@@ -616,6 +616,6 @@ def pq_topk(df: DataFrame, k: int = 10) -> DataFrame:
         .groupBy("vec_id")
         .agg(F.round(F.sum("d"), 4).alias("adist"))
     )
-    top = approx.orderBy(F.asc("adist"), F.asc("vec_id")).limit(k)
-    w = Window.orderBy(F.asc("adist"), F.asc("vec_id"))  # k rows: trivial
+    top = approx.orderBy(F.asc("adist"), F.asc("vec_id")).limit(10)
+    w = Window.orderBy(F.asc("adist"), F.asc("vec_id"))  # 10 rows: trivial
     return top.withColumn("rank", F.row_number().over(w))

@@ -55,8 +55,8 @@ def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
 MLT_QUERY_ID = 1  # the document more_like_this finds neighbours of
 
 
-def more_like_this(df: DataFrame, k: int = 10) -> DataFrame:
-    """Sparse tf-idf "more like this": the ``k`` documents most cosine-
+def more_like_this(df: DataFrame) -> DataFrame:
+    """Sparse tf-idf "more like this": the 10 documents most cosine-
     similar to ``MLT_QUERY_ID``'s tf-idf vector. Columns: doc_id, cosine
     (4dp), rank.
 
@@ -110,6 +110,6 @@ def more_like_this(df: DataFrame, k: int = 10) -> DataFrame:
     w = Window.orderBy(F.desc("cosine"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 10)
         .orderBy("rank")
     )

@@ -70,7 +70,7 @@ class ExtractResult:
 def _metrics(spark: SparkSession, out_table: IcebergLiteTable, snaps: list[dict]) -> DataFrame:
     """Per-partition counters of each chunk snapshot in ``snaps``, under its own ids."""
     written = reduce(DataFrame.unionByName, [
-        out_table.read_added(spark, s["snapshot_id"], EXTRACTED_SCHEMA).select(
+        out_table.read_added(spark, s["snapshot_id"]).select(
             F.lit(s["properties"]["run_id"]).alias("run_id"),
             F.lit(s["properties"]["chunk"]).alias("chunk"),
             F.lit(s["snapshot_id"]).alias("snapshot_id"),

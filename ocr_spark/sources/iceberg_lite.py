@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import EXTRACTED_SCHEMA
+
 
 MERGE_KEY = "doc_id"  # merge_into's row key
 ORPHAN_AGE_S = 3600.0  # remove_orphans' in-flight guard
@@ -285,15 +287,17 @@ class IcebergLiteTable:
                 return self._read_entries(spark, entries, None) if entries else None
         raise ValueError(f"no snapshot with sequence {sequence}")
 
-    def read_added(self, spark: SparkSession, snapshot_id: str,
-                   schema: str | None = None) -> DataFrame | None:
+    def read_added(self, spark: SparkSession, snapshot_id: str) -> DataFrame | None:
         """DataFrame over only the data files that snapshot ``snapshot_id``
-        itself wrote (not its parent chain); None if it wrote none."""
+        itself wrote (not its parent chain); None if it wrote none. Read
+        with the pipeline's ``EXTRACTED_SCHEMA``: its one caller reads the
+        extracted table, and a schema-less read would run one more Spark
+        job per snapshot to infer the schema."""
         snap = self.snapshot(snapshot_id)
         if snap is None:
             raise ValueError(f"no snapshot {snapshot_id!r}")
         entries = self.added_entries(snap)
-        return self._read_entries(spark, entries, schema) if entries else None
+        return self._read_entries(spark, entries, EXTRACTED_SCHEMA) if entries else None
 
     @staticmethod
     def added_entries(snap: dict) -> list[dict]:
@@ -372,8 +376,7 @@ class IcebergLiteTable:
         )
 
     def merge_into(self, spark: SparkSession, source: DataFrame,
-                   partition_by: str | None = None,
-                   stats_cols: tuple[str, ...] = ()) -> str:
+                   partition_by: str | None = None) -> str:
         """Iceberg-style MERGE INTO with copy-on-write at FILE granularity,
         keyed on ``MERGE_KEY``: an upsert (matched target rows replaced by
         the source row, unmatched source rows inserted). ``source`` must be
@@ -383,10 +386,9 @@ class IcebergLiteTable:
         The scale property (Iceberg's copy-on-write MERGE): only data
         files whose recorded metadata MIGHT contain a matching key are
         rewritten. Affected entries are chosen by manifest pruning —
-        min/max stats on the key (when recorded via
-        ``stats_cols``) against the source's key range, plus partition
-        values against the source's distinct partition values — and every
-        other entry is carried into the new snapshot VERBATIM, untouched
+        min/max stats on the key (every merge records them) against the
+        source's key range, plus partition values against the source's
+        distinct partition values — and every other entry is carried into the new snapshot VERBATIM, untouched
         and unread. At 10^12 rows an upsert batch touching one crawl
         segment rewrites that segment's files only; the pruning is
         conservative (entries without stats are treated as affected).
@@ -400,7 +402,7 @@ class IcebergLiteTable:
         """
         if not self.exists():
             return self.append(source, partition_by=partition_by,
-                               stats_cols=stats_cols)
+                               stats_cols=(MERGE_KEY,))
 
         # -- manifest pruning: which entries MIGHT hold a matching key? ----
         ranges = None
@@ -436,7 +438,7 @@ class IcebergLiteTable:
             "entries_rewritten": len(candidates),
             "entries_untouched": len(untouched),
         }
-        return self._commit(result, untouched, props, partition_by, stats_cols)
+        return self._commit(result, untouched, props, partition_by, (MERGE_KEY,))
 
     # -- maintenance (Iceberg's expire_snapshots / remove_orphan_files) -------
     def expire_snapshots(self, keep_last: int = 1) -> dict:

@@ -7,7 +7,6 @@ from ocr_spark.operators.bloom import (
     bloom_build,
     bloom_gate_exact,
     bloom_probe,
-    n_blocks_for,
 )
 
 NB = 256
@@ -22,8 +21,8 @@ def _keys(spark, lo, hi, tag="k"):
 
 def test_no_false_negatives_and_bounded_fpp(spark):
     committed = _keys(spark, 0, 300)
-    bloom = bloom_build(committed, "fp", n_blocks=NB)
-    probe = bloom_probe(_keys(spark, 0, 600), bloom, "fp", n_blocks=NB)
+    bloom = bloom_build(committed, n_blocks=NB)
+    probe = bloom_probe(_keys(spark, 0, 600), bloom, n_blocks=NB)
     rows = {r["doc_id"]: r["maybe_seen"] for r in probe.collect()}
     assert len(rows) == 600
     # every built key MUST report maybe_seen — Bloom negatives are definite
@@ -37,7 +36,7 @@ def test_gate_exact_matches_semi_join(spark):
     committed = _keys(spark, 0, 250)
     # new batch: 100 overlapping, 150 novel
     new = _keys(spark, 150, 400)
-    bloom = bloom_build(committed, "fp", n_blocks=NB)
+    bloom = bloom_build(committed, n_blocks=NB)
     got = {
         r["doc_id"]: r["seen"]
         for r in bloom_gate_exact(new, committed, bloom, n_blocks=NB).collect()
@@ -50,14 +49,14 @@ def test_gate_exact_matches_semi_join(spark):
 def test_build_is_partition_invariant(spark):
     a = _keys(spark, 0, 500).repartition(1)
     b = _keys(spark, 0, 500).repartition(13)
-    ta = sorted(map(tuple, bloom_build(a, "fp", n_blocks=NB).collect()))
-    tb = sorted(map(tuple, bloom_build(b, "fp", n_blocks=NB).collect()))
+    ta = sorted(map(tuple, bloom_build(a, n_blocks=NB).collect()))
+    tb = sorted(map(tuple, bloom_build(b, n_blocks=NB).collect()))
     assert ta == tb and len(ta) <= NB
 
 
 def test_probe_plan_broadcasts_filter(spark):
-    bloom = bloom_build(_keys(spark, 0, 300), "fp", n_blocks=NB)
-    probed = bloom_probe(_keys(spark, 0, 600), bloom, "fp", n_blocks=NB)
+    bloom = bloom_build(_keys(spark, 0, 300), n_blocks=NB)
+    probed = bloom_probe(_keys(spark, 0, 600), bloom, n_blocks=NB)
     plan = probed._jdf.queryExecution().executedPlan().toString()
     # the probe side must not be range/hash re-shuffled for the join —
     # the filter table is the build side of a broadcast join
@@ -67,7 +66,7 @@ def test_probe_plan_broadcasts_filter(spark):
 
 def test_build_plan_partial_aggregation(spark):
     plan = (
-        bloom_build(_keys(spark, 0, 300), "fp", n_blocks=NB)
+        bloom_build(_keys(spark, 0, 300), n_blocks=NB)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -76,51 +75,3 @@ def test_build_plan_partial_aggregation(spark):
     assert plan.count("HashAggregate") >= 2
     # no Python anywhere — the whole filter is JVM expressions
     assert "Python" not in plan and "ArrowEval" not in plan
-
-
-def test_incremental_gate_with_bloom_is_equivalent(spark):
-    from ocr_spark.functions.text import fingerprint_md5
-    from ocr_spark.operators.incremental import (
-        committed_state,
-        incremental_status_against_state,
-    )
-
-    def _docs(lo, hi, dup_from=None):
-        base = spark.range(lo, hi).select(
-            F.col("id").alias("doc_id"),
-            F.concat(
-                F.lit("words of document number "),
-                ((F.col("id") % 17) if dup_from is None else (F.col("id") % 5))
-                .cast("string"),
-            ).alias("text"),
-        )
-        return base
-
-    committed = _docs(0, 60)
-    new = _docs(100, 160, dup_from=True)  # %5 texts: all collide with committed
-    novel = spark.range(200, 240).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("unique fresh page "), F.col("id").cast("string")).alias("text"),
-    )
-    batch = new.unionByName(novel)
-    state = committed_state(committed)
-    base = {
-        r["doc_id"]: r["status"]
-        for r in incremental_status_against_state(batch, state).collect()
-    }
-    fps = committed.select(fingerprint_md5("text").alias("fp"))
-    bloom = bloom_build(fps, "fp", n_blocks=NB)
-    gated = {
-        r["doc_id"]: r["status"]
-        for r in incremental_status_against_state(
-            batch, state, bloom=bloom, bloom_n_blocks=NB
-        ).collect()
-    }
-    assert base == gated  # the prefilter must never change a verdict
-    assert all(v == "exact_seen" for k, v in gated.items() if k < 200)
-    assert all(v == "new" for k, v in gated.items() if k >= 200)
-
-
-def test_n_blocks_sizing():
-    assert n_blocks_for(0) == 64
-    assert n_blocks_for(6_000_000) >= 1_000_000

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from ocr_spark.operators.dedup import (
     _distinct_tokens,
-    exact_dedup,
     exact_dedup_groups,
     minhash_lsh_pairs,
     simhash64,
@@ -41,11 +40,6 @@ def test_exact_dedup_groups(docs):
     assert len(g) == 3
     big = g[g.n_copies == 3]
     assert len(big) == 1 and big.iloc[0].keep_id == 0
-
-
-def test_exact_dedup_keeps_min_id(docs):
-    kept = exact_dedup(docs).toPandas()
-    assert sorted(kept.doc_id) == [0, 2, 3]
 
 
 def test_token_jaccard_finds_near_dup(docs):
@@ -247,7 +241,7 @@ def test_winnow_fingerprints_local_match_guarantee(spark):
     assert not (fps[0] & fps[2])            # disjoint content -> no overlap
     assert fps[3] == set()                  # empty doc -> empty fingerprint set
 
-    pairs = winnow_pairs(df, min_shared=2).toPandas()
+    pairs = winnow_pairs(df).toPandas()
     assert {(a, b) for a, b in zip(pairs.id_a, pairs.id_b)} == {(0, 1)}
 
 
@@ -523,7 +517,7 @@ def test_common_ngrams_profile(spark):
     rows = [(i, f"doc {i} prefix {shared}") for i in range(5)]
     rows += [(10, "another page entirely different words here now")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = common_ngrams(df, w=8, k=3).collect()
+    out = common_ngrams(df, k=3).collect()
     assert out[0].df_docs == 5 and out[0].example == shared
     assert out[0].df_docs >= out[1].df_docs >= out[2].df_docs
 

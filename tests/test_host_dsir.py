@@ -31,7 +31,7 @@ def host_corpus(spark):
 def test_host_chrome_dropped_minority_kept(host_corpus):
     out = {
         r.doc_id: r
-        for r in host_line_dedup(host_corpus, min_host_pages=5, min_ratio=0.5).collect()
+        for r in host_line_dedup(host_corpus).collect()
     }
     assert len(out) == 9
     # host A chrome gone, content + minority promo kept in order
@@ -153,7 +153,7 @@ def test_cross_host_below_ratio_line_survives(spark):
                 text += "\npowered by examplecms"
             rows.append((hash(h) % 100 * 10 + i, h, text))
     df = spark.createDataFrame(rows, "doc_id long, host string, text string")
-    out = host_line_dedup(df, min_host_pages=5, min_ratio=0.5).collect()
+    out = host_line_dedup(df).collect()
     assert len(out) == 14
     survivors = [r for r in out if "powered by examplecms" in r.text]
     # the cross-host 1/7-ratio line survives on BOTH hosts...

@@ -78,11 +78,10 @@ def _host_rows():
 
 def test_domain_blocklist_support_floor(spark):
     df = spark.createDataFrame(_host_rows(), "doc_id long, url string, text string")
-    bl = {r["host"]: r for r in domain_blocklist(df, min_docs=5,
-                                                 min_kept_frac=0.5).collect()}
+    bl = {r["host"]: r for r in domain_blocklist(df, min_kept_frac=0.5).collect()}
     assert not bl["goodhost.com"]["blocked"] and bl["goodhost.com"]["kept_frac"] == 1.0
     assert bl["badhost.com"]["blocked"] and bl["badhost.com"]["n_docs"] == 6
-    # two failing docs but under min_docs -> spared
+    # two failing docs but under the 5-document floor -> spared
     assert not bl["smallhost.com"]["blocked"] and bl["smallhost.com"]["kept_frac"] == 0.0
 
 
@@ -120,8 +119,7 @@ def test_domain_quality_eb_shrinks_small_hosts(spark):
     rows += [(200 + i, f"https://tinybad.com/p{i}", "y y") for i in range(2)]
     df = spark.createDataFrame(rows, "doc_id long, url string, text string")
     out = {r.host: r for r in
-           domain_quality_eb(df, prior_strength=20.0,
-                             min_smoothed_frac=0.5).collect()}
+           domain_quality_eb(df, min_smoothed_frac=0.5).collect()}
     assert not out["good.com"].blocked
     assert out["good.com"].smoothed_frac > 0.8
     assert out["bad.com"].blocked            # 40 bad pages beat the prior

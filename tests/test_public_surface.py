@@ -11,9 +11,11 @@ engine, ``__spark_entry__.py``, ``bench.py`` and the non-test
 - every defaulted parameter of a def or method in ``ocr_spark/`` is passed
   by some call site in the caller files. Tests are not callers: a setting
   that only a test sets is a test seam or a path no caller takes;
-- no required parameter of a def or method in ``ocr_spark/`` is passed the
-  same literal or UPPER_CASE constant by every call site, tests included.
-  A value that never varies is a constant;
+- no parameter of a def or method in ``ocr_spark/`` is passed the same
+  literal or UPPER_CASE constant by every call site, tests included; a call
+  site that omits a defaulted parameter passes its default. A value that
+  never varies is a constant, whether it is written at every call site or
+  left to the default at every one;
 - every module-level assignment in ``ocr_spark/`` is read by some statement
   other than its own assignment (its own module counts);
 - every name imported in ``ocr_spark/``, ``__spark_entry__.py``,
@@ -22,7 +24,8 @@ engine, ``__spark_entry__.py``, ``bench.py`` and the non-test
   ``# noqa: F401``. ``perfbench/`` belongs to the benchmark and is left
   out.
 
-The ``EXEMPT`` modules are left out of the first three scans.
+The ``EXEMPT`` module, the serial oracle, is left out of the first three
+scans.
 """
 
 import ast
@@ -33,12 +36,10 @@ import pathlib
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PKG = ROOT / "ocr_spark"
 
-# Modules whose public names and parameters may have only test callers, each
-# with its reason.
+# The one module whose public names and parameters may have only test
+# callers, with its reason.
 EXEMPT = {
     "golden.py": "the serial oracle that the byte-identity tests compare against",
-    "streaming/ingest.py": "the streaming dedup ingest, whose job wiring waits "
-                           "on the url/doc_id input-key decision",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef)
@@ -241,11 +242,13 @@ def _bound_once(fn):
 
 
 def single_valued_parameters():
-    """``module:line function(parameter)`` of each required parameter that
-    every call site passes the same value: a literal, a tuple or list of
-    literals, or an UPPER_CASE module constant, written at the call site or
-    bound to a local that the calling function assigns exactly once.
-    Callees resolve by name, as in ``unpassed_defaulted_parameters``. A
+    """``module:line function(parameter)`` of each parameter that every call
+    site passes the same value: a literal, a tuple or list of literals, or
+    an UPPER_CASE module constant, written at the call site or bound to a
+    local that the calling function assigns exactly once. A call site that
+    omits a defaulted parameter passes its default, so a default that every
+    call site agrees on is flagged like a required parameter that takes one
+    value. Callees resolve by name, as in ``unpassed_defaulted_parameters``. A
     function that is referenced as a value (passed to ``mapInPandas``,
     ``udf``, a ``record_fn``, ...) has call sites no scan sees, so it is
     skipped; so is a call made through ``*args``/``**kw``."""
@@ -274,7 +277,8 @@ def single_valued_parameters():
             sites = calls.get(callee)
             if not sites or callee in as_value:
                 continue
-            for name, pos in _required(fn, cls):
+            params = [(name, pos, None) for name, pos in _required(fn, cls)]
+            for name, pos, default in params + _defaulted(fn, cls):
                 values = set()
                 for call, bound in sites:
                     given = [k.value for k in call.keywords if k.arg == name]
@@ -282,7 +286,8 @@ def single_valued_parameters():
                         given = [call.args[pos]]
                     if given and isinstance(given[0], ast.Name):
                         given = [bound.get(given[0].id, given[0])]
-                    values.add(_constant_value(given[0]) if given else None)
+                    value = given[0] if given else default
+                    values.add(None if value is None else _constant_value(value))
                 if len(values) == 1 and None not in values:
                     found.append(f"{rel}:{fn.lineno} {fn.name}({name})")
     return found
@@ -394,8 +399,9 @@ def test_every_defaulted_parameter_is_passed():
 def test_every_required_parameter_takes_more_than_one_value():
     found = single_valued_parameters()
     assert not found, (
-        "required parameters in ocr_spark/ that every call site passes the "
-        "same value (fold each into that value):\n  " + "\n  ".join(found))
+        "parameters in ocr_spark/ that every call site passes the same "
+        "value, a default left in place counting as passed (fold each into "
+        "that value):\n  " + "\n  ".join(found))
 
 
 def test_every_module_constant_is_read():

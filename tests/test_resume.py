@@ -538,7 +538,7 @@ def test_merge_into_upserts_and_carries_untouched_entries_verbatim(spark, tmp_pa
         [(110, "updated 110", "en"), (200, "brand new", "de")],
         "doc_id long, text string, lang string",
     )
-    t.merge_into(spark, src, stats_cols=("doc_id",))
+    t.merge_into(spark, src)
 
     entries = t.entries()
     # the low segment's entry is carried VERBATIM; the high one is gone
@@ -561,7 +561,7 @@ def test_merge_into_empty_table_inserts(spark, tmp_path):
 
     t = IcebergLiteTable(str(tmp_path / "t"))
     # merge on a table with no snapshot = plain insert
-    t.merge_into(spark, _docs_df(spark, 0, 10), stats_cols=("doc_id",))
+    t.merge_into(spark, _docs_df(spark, 0, 10))
     assert t.read(spark).count() == 10
 
 
@@ -580,7 +580,7 @@ def test_merge_into_partition_pruning_with_time_travel(spark, tmp_path):
 
     src = spark.createDataFrame([(0, "rev en 0", "en")],
                                 "doc_id long, text string, lang string")
-    t.merge_into(spark, src, partition_by="lang", stats_cols=("doc_id",))
+    t.merge_into(spark, src, partition_by="lang")
 
     assert other_dirs <= {e["dir"] for e in t.entries()}
     assert t.current_snapshot()["properties"]["entries_untouched"] == 2

@@ -237,13 +237,13 @@ def test_pq_topk_recall_and_self_rank(spark):
     from ocr_spark.operators.similarity import cosine_topk, pq_topk
 
     df = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    pq = pq_topk(df, k=10).toPandas()
+    pq = pq_topk(df).toPandas()
     assert pq.iloc[0].vec_id == 0  # the query itself
     exact = cosine_topk(df, [float(x) for x in df.where("vec_id = 0")
                              .toPandas().embedding.iloc[0]], k=10).toPandas()
     overlap = len(set(pq.vec_id) & set(exact.vec_id))
     assert overlap >= 3  # ANN: meaningful agreement, not exactness
-    again = pq_topk(df, k=10).toPandas()
+    again = pq_topk(df).toPandas()
     assert pq.equals(again)
 
 

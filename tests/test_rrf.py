@@ -45,7 +45,7 @@ def test_more_like_this_ranks_shared_vocab_docs(spark):
         ],
         "doc_id long, text string",
     )
-    out = more_like_this(docs, k=10).collect()
+    out = more_like_this(docs).collect()
     ids = [r["doc_id"] for r in out]
     assert ids[:3] == [2, 3, 4]
     assert out[0]["cosine"] == 1.0

@@ -112,7 +112,7 @@ def q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.extract_op import extract_page_spans
 
     pages = pages_from_documents(spark, sf_dir)
-    return extract_page_spans(pages, repartition=True)
+    return extract_page_spans(pages)
 
 
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -152,7 +152,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_token_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram/token-set jaccard near-dup pairs (exact, SQL-expressible)."""
-    return token_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.8)
+    return token_jaccard_pairs(_t(spark, sf_dir, "documents"))
 
 
 def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -173,7 +173,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k vs the vec_id=0 query embedding."""
     emb = _t(spark, sf_dir, "embeddings")
     qvec = emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
-    return cosine_topk(emb, [float(x) for x in qvec], k=20)
+    return cosine_topk(emb, [float(x) for x in qvec])
 
 
 def _neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,9 +195,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH embedding near-dup pairs with 1-bit multiprobe and
     hot-bucket caps; seeded planes are inlined into the DuckDB twin as
     literals, so this is fully oracle-checked."""
-    return embedding_neardup_pairs(
-        _neardup_corpus(spark, sf_dir), threshold=0.9, dim=64
-    )
+    return embedding_neardup_pairs(_neardup_corpus(spark, sf_dir))
 
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,7 +210,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zzmarker")).alias("text"),
     )
-    return simhash_pairs(d.unionByName(planted), max_hamming=3)
+    return simhash_pairs(d.unionByName(planted))
 
 
 def q_validate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -343,7 +341,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.sampling import stratified_sample
 
     d = _t(spark, sf_dir, "documents")
-    return stratified_sample(d, {"en": 0.5, "zh": 0.25}, default_rate=0.1).select(
+    return stratified_sample(d, {"en": 0.5, "zh": 0.25}).select(
         "doc_id", "lang"
     )
 
@@ -369,7 +367,7 @@ def q_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf -> df -> smoothed-idf join -> per-doc window top-k, all expressions)."""
     from ocr_spark.operators.tfidf import tfidf_top_terms
 
-    return tfidf_top_terms(_t(spark, sf_dir, "documents"), k=3)
+    return tfidf_top_terms(_t(spark, sf_dir, "documents"))
 
 
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -378,7 +376,7 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    return knn_brute_force(emb, probes, k=5)
+    return knn_brute_force(emb, probes)
 
 
 def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -400,7 +398,7 @@ def q_av_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.sources.pages import av_pages_from_documents
 
     pages = av_pages_from_documents(spark, sf_dir)
-    return av_features(pages, binary_col="payload")
+    return av_features(pages)
 
 
 def q_media_hash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -508,7 +506,7 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: deterministic coarse quantizer + nprobe cell probe +
     exact re-rank within probed cells (the 100 TB ANN scale path)."""
-    return ivf_topk(_t(spark, sf_dir, "embeddings"), k=10, n_centroids=16, n_probe=4)
+    return ivf_topk(_t(spark, sf_dir, "embeddings"))
 
 
 def q_error_top_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -578,7 +576,7 @@ def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.multimodal import image_resize
 
     pages = pages_from_documents(spark, sf_dir)
-    return image_resize(pages, max_side=512)
+    return image_resize(pages)
 
 
 def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -727,13 +725,8 @@ def q_pagerank_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.links import host_graph, outlinks, pagerank_hosts
 
     edges = outlinks(_linky_pages(_t(spark, sf_dir, "documents")))
-    ranks = pagerank_hosts(host_graph(edges), iterations=8)
+    ranks = pagerank_hosts(host_graph(edges))
     return ranks.select("host", F.round("rank", 6).alias("rank"))
-
-
-# TrustRank seed hosts — part of the answer's identity, shared with the
-# oracle so the teleport vector cannot drift
-TRUST_SEEDS = ["h1.example.org", "h5.example.org", "h9.example.org"]
 
 
 def q_trustrank_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -747,7 +740,7 @@ def q_trustrank_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.links import host_graph, outlinks, trustrank_hosts
 
     edges = outlinks(_linky_pages(_t(spark, sf_dir, "documents")))
-    ranks = trustrank_hosts(host_graph(edges), seeds=TRUST_SEEDS, iterations=8)
+    ranks = trustrank_hosts(host_graph(edges))
     return ranks.select("host", F.round("rank", 6).alias("rank"))
 
 
@@ -759,8 +752,7 @@ def q_anchor_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.links import anchor_terms, outlinks_with_text
 
     return anchor_terms(
-        outlinks_with_text(_linky_pages(_t(spark, sf_dir, "documents"))),
-        top_k=3,
+        outlinks_with_text(_linky_pages(_t(spark, sf_dir, "documents")))
     )
 
 
@@ -888,7 +880,7 @@ def q_soft_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     qc = classifier_score(_t(spark, sf_dir, "documents")).select(
         "doc_id", "score"
     )
-    return soft_sample(qc, weight_col="score")
+    return soft_sample(qc)
 
 
 def q_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -965,7 +957,7 @@ def q_cdx_fetch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("value")
     )
-    return fetch_plan(parse_cdxj(lines), batch_size=4)
+    return fetch_plan(parse_cdxj(lines))
 
 
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1071,7 +1063,7 @@ def q_host_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = _messy_urls(_t(spark, sf_dir, "documents")).select(
         "doc_id", U.url_host("url").alias("host")
     )
-    return cap_per_group(u, k=15)
+    return cap_per_group(u)
 
 
 def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1099,7 +1091,7 @@ def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit("")),
         ).alias("robots_txt"),
     )
-    rules = robots_disallow_rules(robots, agent="*")
+    rules = robots_disallow_rules(robots)
     return robots_filter(u, rules).select("doc_id", "host", "path", "allowed")
 
 
@@ -1155,7 +1147,7 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit("")),
         ).alias("text"),
     )
-    return paragraph_dedup(planted, max_df=8)
+    return paragraph_dedup(planted)
 
 
 def q_common_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1164,7 +1156,7 @@ def q_common_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB twin."""
     from ocr_spark.operators.dedup import common_ngrams
 
-    return common_ngrams(_t(spark, sf_dir, "documents"), k=20)
+    return common_ngrams(_t(spark, sf_dir, "documents"))
 
 
 def q_host_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1237,13 +1229,7 @@ def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact DuckDB twin (same tokenizer, same strict-prefix fold)."""
     from ocr_spark.operators.textprofile import vocab_growth
 
-    return vocab_growth(
-        _t(spark, sf_dir, "documents"), checkpoints=VOCAB_CHECKPOINTS
-    )
-
-
-# part of the query's identity, shared with the DuckDB twin
-VOCAB_CHECKPOINTS = [16, 64, 256, 1024, 4096]
+    return vocab_growth(_t(spark, sf_dir, "documents"))
 
 
 def q_script_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1323,7 +1309,7 @@ def q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     target = d.where((F.col("lang") == "en") & (F.col("doc_id") % 5 == 0))
-    return dsir_sample(d, target, k=50, n_buckets=512)
+    return dsir_sample(d, target)
 
 
 def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1354,7 +1340,7 @@ def q_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard + stable in-shard position. Exact DuckDB twin."""
     from ocr_spark.operators.sharding import shard_assignment
 
-    return shard_assignment(_t(spark, sf_dir, "documents"), n_shards=16)
+    return shard_assignment(_t(spark, sf_dir, "documents"))
 
 
 def q_dedup_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1625,13 +1611,8 @@ def q_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("merge").alias("source"),
         F.length(new_text).cast("long").alias("n_chars"),
     )
-    table.merge_into(spark, updates.unionByName(inserts), partition_by="lang")
+    table.merge_into(spark, updates.unionByName(inserts))
     return table.read(spark).select(*cols)
-
-
-# per-lang token budgets for q_token_budget_mix: ~60% of each language's
-# sf0.01 token mass, zh deliberately absent (a mixture is also an allowlist)
-MIX_BUDGETS = {"en": 7000, "de": 2000, "fr": 2200, "es": 2400}
 
 
 def q_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1641,7 +1622,7 @@ def q_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the allowlist semantics)."""
     from ocr_spark.operators.mixing import token_budget_select
 
-    return token_budget_select(_t(spark, sf_dir, "documents"), MIX_BUDGETS)
+    return token_budget_select(_t(spark, sf_dir, "documents"))
 
 
 def q_host_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1654,7 +1635,7 @@ def q_host_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = _messy_urls(d).select("doc_id", "url").join(
         d.select("doc_id", "text"), "doc_id"
     )
-    return domain_blocklist(pages, min_kept_frac=0.85)
+    return domain_blocklist(pages)
 
 
 def q_host_quality_eb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1668,7 +1649,7 @@ def q_host_quality_eb(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = _messy_urls(d).select("doc_id", "url").join(
         d.select("doc_id", "text"), "doc_id"
     )
-    return domain_quality_eb(pages, min_smoothed_frac=0.85)
+    return domain_quality_eb(pages)
 
 
 def q_page_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1755,7 +1736,7 @@ def q_train_eval_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _messy_urls(_t(spark, sf_dir, "documents"))
     pages = d.select("doc_id", U.url_host("url").alias("host"))
-    return leakage_safe_split(pages, eval_frac=0.1)
+    return leakage_safe_split(pages)
 
 
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1764,9 +1745,7 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter before any shuffle; df/N/avgdl as broadcast stats."""
     from ocr_spark.operators.index import bm25_topk
 
-    return bm25_topk(
-        _t(spark, sf_dir, "documents"), ["spark", "vector", "merge"], k=15
-    )
+    return bm25_topk(_t(spark, sf_dir, "documents"))
 
 
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1777,9 +1756,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup_of is coalesced to -1 for keepers so the twin compares ints."""
     from ocr_spark.operators.similarity import semantic_dedup
 
-    out = semantic_dedup(
-        _neardup_corpus(spark, sf_dir), threshold=0.95, n_centroids=16
-    )
+    out = semantic_dedup(_neardup_corpus(spark, sf_dir))
     return out.select(
         "vec_id",
         "cent_id",
@@ -1799,7 +1776,7 @@ def q_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     committed = emb.where(F.col("vec_id") < 1500)
     new_batch = emb.where(F.col("vec_id") >= 1500)
-    cents = ivf_centroids(committed, n_centroids=16)
+    cents = ivf_centroids(committed)
     return ivf_assign(new_batch, cents)
 
 
@@ -1831,30 +1808,12 @@ def q_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole draw is replayed in the DuckDB twin."""
     from ocr_spark.operators.similarity import cluster_balanced_sample
 
-    return cluster_balanced_sample(
-        _t(spark, sf_dir, "embeddings"), per_cluster=8, n_centroids=16
-    )
-
-
-# The BPE query's training artifact: a fixed exemplar word-count table
-# (the production shape — tokenizers are fit offline on a bounded sample
-# and shipped as an artifact). 24 of the corpus's 31 words with stylized
-# descending counts: the 7 absent words exercise the <unk> path
-# corpus-wide. Shared with the oracle so the fitted map cannot drift
-# between engines.
-BPE_TRAIN_COUNTS = {
-    "join": 96, "hash": 94, "row": 93, "batch": 92, "scan": 91,
-    "customer": 90, "column": 89, "filter": 88, "small": 87, "slow": 86,
-    "merge": 85, "order": 84, "vector": 83, "line": 82, "data": 81,
-    "table": 80, "agg": 79, "value": 78, "key": 77, "stream": 76,
-    "window": 75, "spark": 74, "group": 73, "part": 72,
-}
-BPE_N_MERGES = 40
+    return cluster_balanced_sample(_t(spark, sf_dir, "embeddings"))
 
 
 def q_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide BPE tokenization with the fixed shipped encoder
-    (BPE_TRAIN_COUNTS -> deterministic merges -> word->tokens map):
+    (core.bpe.BPE_TRAIN_COUNTS -> deterministic merges -> word->tokens map):
     per document the word count, token count, <unk> count, and the md5
     fingerprint of the full decoded token stream. The apply — tokenize,
     map lookup, '<unk>' fallback, fingerprint — is replayed exactly in
@@ -1862,7 +1821,7 @@ def q_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.core.bpe import build_word_map
     from ocr_spark.operators.tokenizer import bpe_encode
 
-    word_map = build_word_map(BPE_TRAIN_COUNTS, BPE_N_MERGES)
+    word_map = build_word_map()
     return bpe_encode(_t(spark, sf_dir, "documents"), word_map)
 
 
@@ -1876,7 +1835,7 @@ def q_token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.core.bpe import build_word_map
     from ocr_spark.operators.tokenizer import fertility_by_lang
 
-    word_map = build_word_map(BPE_TRAIN_COUNTS, BPE_N_MERGES)
+    word_map = build_word_map()
     return fertility_by_lang(_t(spark, sf_dir, "documents"), word_map)
 
 
@@ -1918,7 +1877,7 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (string_agg ORDER BY pos replays the array_sort fold)."""
     from ocr_spark.operators.sharding import shard_manifest
 
-    return shard_manifest(_t(spark, sf_dir, "documents"), n_shards=16)
+    return shard_manifest(_t(spark, sf_dir, "documents"))
 
 
 def q_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1934,7 +1893,7 @@ def q_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", quality_score("text").alias("score")
     )
-    return top_fraction_gate(d, frac=0.25)
+    return top_fraction_gate(d)
 
 
 def q_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2028,7 +1987,7 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     size state vs a full distinct shuffle per group)."""
     from ocr_spark.operators.sketches import hll_accuracy
 
-    return hll_accuracy(_t(spark, sf_dir, "documents"), "lang", "text")
+    return hll_accuracy(_t(spark, sf_dir, "documents"))
 
 
 def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2045,10 +2004,10 @@ def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
-    lex = bm25_topk(docs, ["spark", "vector", "merge"], k=15).select("doc_id", "rank")
+    lex = bm25_topk(docs).select("doc_id", "rank")
     qvec = emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
     dense = (
-        cosine_topk(emb, [float(x) for x in qvec], k=20)
+        cosine_topk(emb, [float(x) for x in qvec])
         .withColumn(
             "rank",
             F.row_number().over(
@@ -2057,7 +2016,7 @@ def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("vec_id").alias("doc_id"), "rank")
     )
-    return rrf_fuse([lex, dense], topk=10)
+    return rrf_fuse([lex, dense])
 
 
 def q_expansion_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2068,10 +2027,7 @@ def q_expansion_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     feedback CTE). The expanded query re-runs through bm25_topk."""
     from ocr_spark.operators.index import expansion_terms
 
-    return expansion_terms(
-        _t(spark, sf_dir, "documents"), ["spark", "vector", "merge"],
-        k_docs=15, k_terms=8,
-    )
+    return expansion_terms(_t(spark, sf_dir, "documents"))
 
 
 def q_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2096,9 +2052,7 @@ def q_search_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-start fan-out, same slice)."""
     from ocr_spark.operators.index import snippets
 
-    return snippets(
-        _t(spark, sf_dir, "documents"), ["spark", "vector", "merge"]
-    )
+    return snippets(_t(spark, sf_dir, "documents"))
 
 
 PHRASE_QUERY = ("big", "table")  # part of the query's identity, shared w/ twin
@@ -2126,9 +2080,7 @@ def q_sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded bucket histogram, never the data (operators/sketches.py)."""
     from ocr_spark.operators.sketches import dd_sketch_quantiles
 
-    return dd_sketch_quantiles(
-        _t(spark, sf_dir, "documents"), "lang", "n_chars"
-    )
+    return dd_sketch_quantiles(_t(spark, sf_dir, "documents"), "lang")
 
 
 def q_bitext_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2144,11 +2096,6 @@ def q_bitext_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bitext_pairs(
         d.select((F.col("doc_id") % 257).alias("slug"), "lang", "doc_id", "n_chars")
     )
-
-
-# Misra-Gries counter budget for q_heavy_hitters — part of the answer's
-# identity (threshold = n_total/(HH_M+1)), shared with the oracle
-HH_M = 32
 
 
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2177,12 +2124,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("text")
     )
-    return heavy_hitters(assembled, m=HH_M)
-
-
-# block count for q_bloom_gate's filter — part of the filter's identity,
-# shared with the oracle so the bit layout cannot drift
-BLOOM_GATE_NB = 1024
+    return heavy_hitters(assembled)
 
 
 def q_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2218,11 +2160,9 @@ def q_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     newfp = newb.select("doc_id", fingerprint_md5("text").alias("fp"))
-    bloom = bloom_build(committed, n_blocks=BLOOM_GATE_NB)
-    probed = bloom_probe(newfp, bloom, n_blocks=BLOOM_GATE_NB).select(
-        "doc_id", "maybe_seen"
-    )
-    gated = bloom_gate_exact(newfp, committed, bloom, n_blocks=BLOOM_GATE_NB)
+    bloom = bloom_build(committed)
+    probed = bloom_probe(newfp, bloom).select("doc_id", "maybe_seen")
+    gated = bloom_gate_exact(newfp, committed, bloom)
     return probed.join(gated, "doc_id")
 
 
@@ -2311,7 +2251,7 @@ def q_fix_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(t)
     )
     g = _t(spark, sf_dir, "documents").select("doc_id", raw.alias("raw"))
-    f = g.select("doc_id", "raw", fix_mojibake("raw").alias("fixed"))
+    f = g.select("doc_id", "raw", fix_mojibake().alias("fixed"))
     return f.select(
         "doc_id",
         (F.length("raw") - F.length("fixed")).cast("long").alias("mojibake_score"),
@@ -2672,9 +2612,7 @@ def q_fetch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.lit(1.0) + (F.col("hid") % 5).cast("double")).alias("crawl_delay_s"),
         )
     )
-    return fetch_schedule(
-        cands, delays, default_delay_s=2.0, max_per_host=15
-    )
+    return fetch_schedule(cands, delays)
 
 
 def q_crawl_delays(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2824,7 +2762,7 @@ def q_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     qvec = emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
     qvec = [float(x) for x in qvec]
-    return sq_topk(emb, qvec, k=10, dim=len(qvec))
+    return sq_topk(emb, qvec)
 
 
 def q_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2834,7 +2772,7 @@ def q_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the corpus, then languages-sized arithmetic)."""
     from ocr_spark.operators.mixing import temperature_mixture
 
-    return temperature_mixture(_t(spark, sf_dir, "documents"), alpha=0.3)
+    return temperature_mixture(_t(spark, sf_dir, "documents"))
 
 
 def q_markdown_render(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2846,7 +2784,7 @@ def q_markdown_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.extract_op import extract_page_markdown
 
     pages = pages_from_documents(spark, sf_dir)
-    return extract_page_markdown(pages, repartition=True)
+    return extract_page_markdown(pages)
 
 
 def q_ip_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3058,7 +2996,7 @@ def _embedding_neardup_oracle() -> str:
     uses list_dot_product + round(4), same as the other embedding oracles."""
     from ocr_spark.operators.similarity import N_PLANES, hyperplanes
 
-    planes = hyperplanes(64)
+    planes = hyperplanes()
 
     def dot(p: list[float]) -> str:
         return " + ".join(f"e[{i + 1}]*{p[i]!r}" for i in range(64))
@@ -3118,7 +3056,7 @@ def _minhash_oracle(src: str = "documents") -> str:
     """
 
 
-def _minhash_cte_body(src: str = "documents") -> str:
+def _minhash_cte_body(src: str) -> str:
     """Shared CTE chain (no WITH keyword, no final SELECT) computing the
     minhash LSH pipeline's intermediates from a (doc_id, text) relation:
     shin(gles), bhx (base hashes), sig(natures), banded, small (capped
@@ -3170,11 +3108,11 @@ def _minhash_cte_body(src: str = "documents") -> str:
         )"""
 
 
-def _lsh_recall_oracle(src: str = "documents", threshold: float = 0.5) -> str:
+def _lsh_recall_oracle(src: str) -> str:
     """DuckDB twin of dedup.lsh_recall_audit: the shared minhash CTE chain
     supplies the production candidate pairs (cand); exact ground truth
     comes from the shingle-hash inverted-index join over the same base
-    hashes (bhx), jaccard-verified at ``threshold``."""
+    hashes (bhx), jaccard-verified at 0.5."""
     jac = _MH_JAC
     return f"""
         WITH {_minhash_cte_body(src)},
@@ -3186,7 +3124,7 @@ def _lsh_recall_oracle(src: str = "documents", threshold: float = 0.5) -> str:
         ), truth AS (
             SELECT id_a, id_b
             FROM tc JOIN dsh a ON id_a = a.id JOIN dsh b ON id_b = b.id
-            WHERE {jac} >= {threshold}
+            WHERE {jac} >= 0.5
         ), m AS (
             SELECT t.id_a IS NOT NULL AS in_t, c.id_a IS NOT NULL AS in_c
             FROM truth t FULL OUTER JOIN cand c
@@ -3206,15 +3144,18 @@ def _lsh_recall_oracle(src: str = "documents", threshold: float = 0.5) -> str:
     """
 
 
-def _dup_spans_oracle(src: str = "documents", w: int = 8) -> str:
+def _dup_spans_oracle() -> str:
     """DuckDB twin of spans.dup_span_stats: same normalized tokenization
-    (NULL coalesced), same 60-bit md5 gram hashes, same touch-or-overlap
-    (gap <= w) interval merge via gaps-and-islands windows."""
+    (NULL coalesced), same 60-bit md5 gram hashes over ``SPAN_W``-word
+    grams, same touch-or-overlap (gap <= w) interval merge via
+    gaps-and-islands windows."""
+    from ocr_spark.operators.spans import SPAN_W as w
+
     canon_nn = ("trim(regexp_replace(lower(coalesce(text, '')), "
                 "'[ \t\n]+', ' ', 'g'))")
     return f"""
         WITH docs AS (
-            SELECT doc_id, {canon_nn} AS t FROM {src}
+            SELECT doc_id, {canon_nn} AS t FROM documents
         ), words AS (
             SELECT doc_id, string_split(t, ' ') AS w FROM docs WHERE t <> ''
         ), grams AS (
@@ -3262,15 +3203,17 @@ def _dup_spans_oracle(src: str = "documents", w: int = 8) -> str:
     """
 
 
-def _dup_span_removal_oracle(src: str = "documents", w: int = 8) -> str:
+def _dup_span_removal_oracle() -> str:
     """DuckDB twin of spans.remove_dup_spans: per-gram min-id owner, non-
     owned hit islands, and an indexed list-comprehension rewrite that
     matches the engine's filter/exists expression word for word."""
+    from ocr_spark.operators.spans import SPAN_W as w
+
     canon_nn = ("trim(regexp_replace(lower(coalesce(text, '')), "
                 "'[ \t\n]+', ' ', 'g'))")
     return f"""
         WITH docs AS (
-            SELECT doc_id, {canon_nn} AS t FROM {src}
+            SELECT doc_id, {canon_nn} AS t FROM documents
         ), words AS (
             SELECT doc_id, string_split(t, ' ') AS w FROM docs WHERE t <> ''
         ), grams AS (
@@ -3331,11 +3274,13 @@ def _dup_span_removal_oracle(src: str = "documents", w: int = 8) -> str:
     """
 
 
-def _decontam_spans_oracle(w: int = 8) -> str:
+def _decontam_spans_oracle() -> str:
     """DuckDB twin of q_decontam_spans: the dup_span_removal span chain
     with the hit set redefined as corpus grams ∩ benchmark grams (the
     first-12-token prefixes of every 9th document), no ownership
     exemption."""
+    from ocr_spark.operators.spans import SPAN_W as w
+
     canon_nn = ("trim(regexp_replace(lower(coalesce(text, '')), "
                 "'[ \t\n]+', ' ', 'g'))")
     return f"""
@@ -3814,10 +3759,9 @@ def _host_degree_oracle() -> str:
     """
 
 
-def _pagerank_oracle(iterations: int = 8, damping: float = 0.85,
-                     seeds: list[str] | None = None) -> str:
+def _pagerank_oracle(seeds: list[str] | None = None) -> str:
     """DuckDB twin of q_pagerank_hosts / q_trustrank_hosts: the power
-    iteration UNROLLED as ``iterations`` CTE triples (contrib -> flowed
+    iteration UNROLLED as ``PAGERANK_ITERATIONS`` CTE triples (contrib -> flowed
     -> ranks). ``seeds`` switches the teleport vector from uniform 1/n
     to the TrustRank CASE over the seed set (1/|seeds∩hosts|, the
     lk_sn scalar), mirroring the operator formula for formula. Float sum
@@ -3831,6 +3775,8 @@ def _pagerank_oracle(iterations: int = 8, damping: float = 0.85,
     finishes; materialization makes the chain linear, mirroring what
     the Spark side's localCheckpoint does for lineage."""
     from ocr_spark.functions import urls as U
+    from ocr_spark.operators.links import PAGERANK_DAMPING as damping
+    from ocr_spark.operators.links import PAGERANK_ITERATIONS as iterations
 
     if seeds is None:
         sn_cte = ""
@@ -4070,7 +4016,9 @@ def _quality_filter_oracle() -> str:
 def _token_budget_mix_oracle() -> str:
     """DuckDB twin of q_token_budget_mix: same token count, same quality
     arithmetic, same (quality DESC, doc_id) running-sum window per lang,
-    budgets imported from the query so they cannot drift."""
+    budgets imported from the operator so they cannot drift."""
+    from ocr_spark.operators.mixing import MIX_BUDGETS
+
     budgets = ", ".join(f"('{k}', {v})" for k, v in sorted(MIX_BUDGETS.items()))
     return f"""
         WITH scored AS (
@@ -4093,16 +4041,16 @@ def _token_budget_mix_oracle() -> str:
     """
 
 
-def _bloom_sql_parts(key: str, n_blocks: int) -> tuple[str, str]:
+def _bloom_sql_parts() -> tuple[str, str]:
     """DuckDB replay of ocr_spark.operators.bloom's (block, mask) pair for
-    a key expression: same md5 base, same Carter-Wegman constants (imported
-    so they cannot drift), same mod-63 bit positions. Returns SQL text for
-    (block, mask)."""
-    from ocr_spark.operators.bloom import _BB_P, BLOOM_AB
+    the ``fp`` key: same md5 base, same Carter-Wegman constants and block
+    count (imported so they cannot drift), same mod-63 bit positions.
+    Returns SQL text for (block, mask)."""
+    from ocr_spark.operators.bloom import _BB_P, BLOOM_AB, BLOOM_N_BLOCKS
 
-    base = f"(('0x' || substr(md5({key}), 1, 15))::BIGINT % {_BB_P})"
+    base = f"(('0x' || substr(md5(fp), 1, 15))::BIGINT % {_BB_P})"
     hs = [f"(({a} * {base} + {b}) % {_BB_P})" for a, b in BLOOM_AB]
-    block = f"({hs[0]} % {n_blocks})"
+    block = f"({hs[0]} % {BLOOM_N_BLOCKS})"
     mask = " | ".join(f"(1::BIGINT << ({h} % 63))" for h in hs[1:])
     return block, f"({mask})"
 
@@ -4111,7 +4059,7 @@ def _bloom_gate_oracle() -> str:
     """DuckDB twin of q_bloom_gate: replays the committed/new split, the
     recrawl text rewrite, the fingerprint, every bloom hash/bit, the
     bit_or block aggregation, and the probe's bits&mask check."""
-    block, mask = _bloom_sql_parts("fp", BLOOM_GATE_NB)
+    block, mask = _bloom_sql_parts()
     return f"""
         WITH committed AS (
             SELECT doc_id, md5({_CANON}) AS fp
@@ -5668,10 +5616,13 @@ def _paragraph_dedup_oracle() -> str:
     """
 
 
-def _common_ngrams_oracle(w: int = 8, k: int = 20) -> str:
-    """DuckDB twin of q_common_ngrams: same canonical tokenization, gram
-    text, 60-bit md5 key, (df desc, gh asc) top-k with min(gram) as the
-    representative."""
+def _common_ngrams_oracle() -> str:
+    """DuckDB twin of q_common_ngrams: same canonical tokenization, 8-word
+    gram text, 60-bit md5 key, (df desc, gh asc) top-k with min(gram) as
+    the representative."""
+    from ocr_spark.operators.dedup import COMMON_NGRAMS_TOP as k
+
+    w = 8
     return f"""
         WITH docs AS (
             SELECT doc_id, {_CANON} AS t FROM documents
@@ -5824,12 +5775,12 @@ def _signals_oracle() -> str:
 
 def _bpe_tokens_oracle() -> str:
     """DuckDB twin of q_bpe_tokens: the identical fitted word->tokens map
-    (built from the shared BPE_TRAIN_COUNTS constant by the same pure
+    (built from the shared bpe.BPE_TRAIN_COUNTS constant by the same pure
     core, embedded as VALUES), the same tokenize / lookup / '<unk>'
     fallback / ordered join / md5 fingerprint."""
     from ocr_spark.core.bpe import build_word_map
 
-    word_map = build_word_map(BPE_TRAIN_COUNTS, BPE_N_MERGES)
+    word_map = build_word_map()
     vals = ", ".join(
         "('{w}', '{t}')".format(w=w, t=t) for w, t in sorted(word_map.items())
     )
@@ -5871,7 +5822,7 @@ def _token_fertility_oracle() -> str:
     the same guarded 4-dp ratio arithmetic."""
     from ocr_spark.core.bpe import build_word_map
 
-    word_map = build_word_map(BPE_TRAIN_COUNTS, BPE_N_MERGES)
+    word_map = build_word_map()
     vals = ", ".join(
         "('{w}', '{t}')".format(w=w, t=t) for w, t in sorted(word_map.items())
     )
@@ -5928,6 +5879,8 @@ def _heavy_hitters_oracle() -> str:
     of the sketch: the Misra-Gries guarantee says the engine's
     bounded-memory two-pass path must produce exactly this set, so the
     parity check is an end-to-end proof the summary pass lost nothing."""
+    from ocr_spark.operators.heavyhitters import HH_M
+
     return f"""
         WITH asm AS (
             SELECT coalesce(text, '') || ' u' || doc_id
@@ -5957,6 +5910,8 @@ def _vocab_growth_oracle() -> str:
     """DuckDB twin of q_vocab_growth: identical tokenizer, the same
     first-occurrence fold (min doc per type), the same strict-prefix
     checkpoint semantics (doc < n_docs), 4-dp type/token ratio."""
+    from ocr_spark.operators.textprofile import VOCAB_CHECKPOINTS
+
     cps = ", ".join(str(c) for c in VOCAB_CHECKPOINTS)
     return f"""
         WITH toks AS (
@@ -6493,6 +6448,8 @@ def _ip_range_join_oracle() -> str:
 
 
 def _oracle_sql_all() -> dict[str, str]:
+    from ocr_spark.operators.links import TRUST_SEEDS
+
     d = {
         "minhash_pairs": _minhash_oracle(),
         "dup_spans": _dup_spans_oracle(),

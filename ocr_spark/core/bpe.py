@@ -25,6 +25,21 @@ from collections import Counter
 
 Pair = tuple[str, str]
 
+# The shipped encoder's fixed training counts: fit once on a frozen sample
+# (the production shape — tokenizers are fit offline on a bounded sample
+# and shipped as an artifact). 24 of the corpus's 31 words with stylized
+# descending counts: the 7 absent words exercise the <unk> path
+# corpus-wide. Shared by the queries and their DuckDB twins so the fitted
+# map cannot drift between engines.
+BPE_TRAIN_COUNTS = {
+    "join": 96, "hash": 94, "row": 93, "batch": 92, "scan": 91,
+    "customer": 90, "column": 89, "filter": 88, "small": 87, "slow": 86,
+    "merge": 85, "order": 84, "vector": 83, "line": 82, "data": 81,
+    "table": 80, "agg": 79, "value": 78, "key": 77, "stream": 76,
+    "window": 75, "spark": 74, "group": 73, "part": 72,
+}
+BPE_N_MERGES = 40
+
 
 def _apply_merge(syms: list[str], pair: Pair) -> list[str]:
     """Left-to-right non-overlapping rewrite of ``pair`` into one symbol."""
@@ -40,13 +55,15 @@ def _apply_merge(syms: list[str], pair: Pair) -> list[str]:
     return out
 
 
-def fit_bpe(word_counts: dict[str, int], n_merges: int) -> list[Pair]:
-    """Learn up to ``n_merges`` merge rules from ``word_counts``.
-    Deterministic: max pair count, ties to the lexicographically smallest
-    pair. Stops early when no pair occurs at least twice."""
+def fit_bpe() -> list[Pair]:
+    """Learn up to ``BPE_N_MERGES`` merge rules from ``BPE_TRAIN_COUNTS``
+    (both read at call time). Deterministic: max pair count, ties to the
+    lexicographically smallest pair. Stops early when no pair occurs at
+    least twice."""
+    word_counts = BPE_TRAIN_COUNTS
     vocab = {w: list(w) for w in word_counts}
     merges: list[Pair] = []
-    for _ in range(n_merges):
+    for _ in range(BPE_N_MERGES):
         pairs: Counter[Pair] = Counter()
         for w, syms in vocab.items():
             c = word_counts[w]
@@ -75,11 +92,11 @@ def encode_word(word: str, ranks: dict[Pair, int]) -> list[str]:
     return syms
 
 
-def build_word_map(word_counts: dict[str, int],
-                   n_merges: int) -> dict[str, str]:
-    """Fit on ``word_counts`` and return the memoized word -> space-joined
-    token string map for every fitted word — the broadcastable artifact
-    the distributed encoder serves (unfitted words encode to '<unk>')."""
-    merges = fit_bpe(word_counts, n_merges)
+def build_word_map() -> dict[str, str]:
+    """Fit (``fit_bpe``) and return the memoized word -> space-joined token
+    string map for every word of ``BPE_TRAIN_COUNTS`` — the broadcastable
+    artifact the distributed encoder serves (unfitted words encode to
+    '<unk>')."""
+    merges = fit_bpe()
     ranks = {p: i for i, p in enumerate(merges)}
-    return {w: " ".join(encode_word(w, ranks)) for w in word_counts}
+    return {w: " ".join(encode_word(w, ranks)) for w in BPE_TRAIN_COUNTS}

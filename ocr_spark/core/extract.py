@@ -216,7 +216,7 @@ def extract_span_rows(url: str, html: bytes | None, text: str | None,
                     "span_start": b.src_start,
                     "span_end": b.src_end,
                     "block_text": b.text,
-                    "heading": b.heading,
+                    "heading": b.level > 0,
                 }
                 for i, b in enumerate(kept)
             ]

@@ -106,16 +106,12 @@ class Block:
     text: str = ""
     link_chars: int = 0
     total_chars: int = 0
-    blocked: bool = False       # inside boilerplate tag or blocklisted class/id
-    heading: bool = False
-    depth: int = 0
     boiler_blocked: bool = False  # structural boilerplate tag (nav/footer/...)
     class_blocked: bool = False   # class/id blocklist hit (the heuristic part)
     src_start: int = -1           # span into the decoded html (char offsets)
     src_end: int = -1
     # structural rendering context, stamped from the open-block stack at
-    # flush time (core.markdown consumes these; `heading` == `level > 0`
-    # by construction — asserted in tests)
+    # flush time (core.markdown consumes these; a heading is level > 0)
     level: int = 0                # h1..h6 -> 1..6, else 0
     list_item: bool = False       # any <li> ancestor open
     quote: bool = False           # any <blockquote> ancestor open
@@ -133,8 +129,8 @@ def extract_blocks(html_text: str) -> list[Block]:
     """Tokenize HTML into candidate blocks. Never raises on malformed input.
 
     State: a stack of open (tag, boiler, classblocked, boundary) frames;
-    blocked/heading stamped at flush time BEFORE depth counters change, so
-    text keeps the state it was collected under.
+    blocked state and rendering context are stamped at flush time BEFORE
+    depth counters change, so text keeps the state it was collected under.
 
     Hot loop: the text-chunk path is inlined (no per-chunk function call)
     and ``parts`` keeps its identity across flushes so its bound ``append``
@@ -149,29 +145,24 @@ def extract_blocks(html_text: str) -> list[Block]:
     class_depth = 0
     anchor_depth = 0
     skip_depth = 0
-    block_stack: list[str] = []     # open boundary tags (for heading/depth)
+    block_stack: list[str] = []     # open boundary tags (rendering context)
     tag_stack: list[tuple[str, bool, bool, bool]] = []  # (tag, boiler, classb, boundary)
-    cur_heading = False
 
     def flush() -> None:
-        nonlocal link_chars, cur_heading, span_start, span_end
+        nonlocal link_chars, span_start, span_end
         if parts:
             text = normalize_inline("".join(parts))
             if text:
                 n = len(text)
                 # rendering context from the CURRENT stack top: every flush
                 # site runs before the stack transition it accompanies, so
-                # the top is the block the text was collected under (the
-                # same invariant cur_heading tracks incrementally)
+                # the top is the block the text was collected under
                 top = block_stack[-1] if block_stack else ""
                 blocks.append(
                     Block(
                         text=text,
                         link_chars=min(link_chars, n),
                         total_chars=n,
-                        blocked=boiler_depth > 0 or class_depth > 0,
-                        heading=cur_heading,
-                        depth=len(block_stack),
                         boiler_blocked=boiler_depth > 0,
                         class_blocked=class_depth > 0,
                         src_start=span_start,
@@ -184,7 +175,6 @@ def extract_blocks(html_text: str) -> list[Block]:
             parts.clear()
             span_start = span_end = -1
         link_chars = 0
-        cur_heading = bool(block_stack) and block_stack[-1] in HEADING_TAGS
 
     pos = 0
     n = len(html_text)
@@ -274,7 +264,6 @@ def extract_blocks(html_text: str) -> list[Block]:
                 class_depth += 1
             if boundary:
                 block_stack.append(tag)
-                cur_heading = tag in HEADING_TAGS
             if tag == "a":
                 anchor_depth += 1
             tag_stack.append((tag, boiler, classb, boundary))
@@ -307,7 +296,6 @@ def extract_blocks(html_text: str) -> list[Block]:
                 if boundary and block_stack:
                     block_stack.pop()
             del tag_stack[idx:]
-            cur_heading = bool(block_stack) and block_stack[-1] in HEADING_TAGS
 
     flush()
     return blocks
@@ -330,7 +318,7 @@ def score_blocks(blocks: list[Block],
         if b.class_blocked and not include_class_blocked:
             continue
         n = b.total_chars
-        if b.heading:
+        if b.level:
             if n >= min_heading_chars and (n == 0 or b.link_chars / n <= max_link_density):
                 kept.append(b)
             continue

@@ -159,7 +159,7 @@ def build_pdf(paragraphs: list[str], flate: bool) -> bytes:
     return bytes(out)
 
 
-def gen_page(i: int, seed: int = SEED) -> dict:
+def gen_page(i: int, seed: int) -> dict:
     """Row i -> one pages-table record (pure function of (seed, i))."""
     r = _rng(i, seed)
     lang = r.choice(_LANGS)

@@ -64,19 +64,16 @@ def _build_map() -> tuple[tuple[str, str], ...]:
 MOJIBAKE_MAP: tuple[tuple[str, str], ...] = _build_map()
 
 
-def _col(c) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
-def fix_mojibake(c) -> Column:
-    """Repair one level of UTF-8-as-cp1252 mojibake.
+def fix_mojibake() -> Column:
+    """Repair one level of UTF-8-as-cp1252 mojibake in the ``raw`` column.
 
     A single projection of chained literal replaces — no shuffle, no
     Python, codegen-friendly (Spark splits oversized generated methods
     automatically). Idempotent on already-clean text: clean text cannot
     contain a garbled digraph unless it genuinely was garbled.
     """
-    return reduce(lambda acc, p: F.replace(acc, F.lit(p[0]), F.lit(p[1])), MOJIBAKE_MAP, _col(c))
+    return reduce(lambda acc, p: F.replace(acc, F.lit(p[0]), F.lit(p[1])),
+                  MOJIBAKE_MAP, F.col("raw"))
 
 
 # --- exact SQL twin (DuckDB dialect) ---------------------------------------

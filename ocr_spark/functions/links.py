@@ -47,18 +47,20 @@ def _col(c) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-def extract_hrefs(html_text) -> Column:
-    """array<string> of raw href attribute values, document order."""
-    return F.regexp_extract_all(_col(html_text), F.lit(HREF_RE), F.lit(1))
+def extract_hrefs() -> Column:
+    """array<string> of raw href attribute values of the ``html_text``
+    column, document order."""
+    return F.regexp_extract_all(F.col("html_text"), F.lit(HREF_RE), F.lit(1))
 
 
-def anchor_pairs(html_text) -> Column:
-    """array<struct<href, anchor>> over WELL-FORMED anchors only
+def anchor_pairs() -> Column:
+    """array<struct<href, anchor>> of the ``html_text`` column over
+    WELL-FORMED anchors only
     (``<a href="...">text</a>``): each whole tag is matched first
     (group 0), then href and text are extracted from that one tag, so
     the two can never mis-pair the way independently-extracted parallel
     arrays would on a page mixing closed and self-closing anchors."""
-    tags = F.regexp_extract_all(_col(html_text), F.lit(ANCHOR_TAG_RE), F.lit(0))
+    tags = F.regexp_extract_all(F.col("html_text"), F.lit(ANCHOR_TAG_RE), F.lit(0))
     return F.transform(
         tags,
         lambda t: F.struct(
@@ -107,10 +109,11 @@ def meta_content(html_text, name: str) -> Column:
     return F.regexp_extract(_col(html_text), pat, 1)
 
 
-def canonical_link(html_text) -> Column:
-    """href of <link rel="canonical" ...>, '' when absent."""
+def canonical_link() -> Column:
+    """href of <link rel="canonical" ...> in the ``html_text`` column, ''
+    when absent."""
     return F.regexp_extract(
-        _col(html_text), r'<link\s[^>]*rel="canonical"[^>]*href="([^"]*)"', 1
+        F.col("html_text"), r'<link\s[^>]*rel="canonical"[^>]*href="([^"]*)"', 1
     )
 
 

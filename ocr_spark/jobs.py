@@ -231,7 +231,7 @@ def cmd_stats(args: argparse.Namespace) -> int:
         "extract_status", F.length(F.coalesce("text", F.lit(""))).alias("n_chars")
     )
     qs = sorted(
-        dd_sketch_quantiles(lens, "extract_status", "n_chars").collect(),
+        dd_sketch_quantiles(lens, "extract_status").collect(),
         key=lambda r: (r["grp"], r["q"]),
     )
     print(f"docs={sum(counts.values())} statuses={sorted(counts.items())}")

@@ -40,10 +40,10 @@ strictly positive in both engines' signed BIGINT.
 Sizing: with keys spread over n_blocks blocks at load L = n_keys /
 n_blocks keys/block, a probe's false-positive rate is roughly
 (1 - e^(-kL/64))^k; L ≈ 6 at k = 4 gives ~2% — good enough to kill ~98%
-of the exact-join traffic for novel keys — so the default 2^20 blocks
-suit about 6M committed keys. Choose ``n_blocks`` from the expected key
-count and persist it with the filter table: it is part of the filter's
-identity.
+of the exact-join traffic for novel keys. ``BLOOM_N_BLOCKS`` is part of
+the filter's identity (a build and its probes must agree on it) and is
+fixed, so the 1024 blocks suit about 6k committed keys; a larger key set
+needs a larger constant and a rebuilt filter.
 
 Reference analog: the resume key-set check (one_key_process.py:820-826)
 loads the committed basename set into a dict — the O(1)-membership
@@ -59,6 +59,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 BLOOM_K = 4  # bits set per key (within the key's one block)
+# blocks in the filter: part of its identity, shared with the DuckDB twin
+# of q_bloom_gate so the bit layout cannot drift
+BLOOM_N_BLOCKS = 1024
 _BB_P = (1 << 31) - 1  # same Mersenne prime as the minhash family
 
 
@@ -72,14 +75,15 @@ def _bb_constants() -> list[tuple[int, int]]:
 BLOOM_AB = _bb_constants()
 
 
-def _block_and_mask(key_col, n_blocks: int):
-    """(block, mask) expression pair for one key column. The base hash is
+def _block_and_mask(key_col):
+    """(block, mask) expression pair for one key column over
+    ``BLOOM_N_BLOCKS`` blocks (read at call time). The base hash is
     the first 15 hex digits of md5 (< 2^60, the largest prefix that stays
     signed-64 in both engines, like dedup.py's line hash); all family
     arithmetic stays non-negative so % == pmod in both engines."""
     base = F.conv(F.substring(F.md5(key_col), 1, 15), 16, 10).cast("long") % _BB_P
     hs = [(F.lit(a) * base + F.lit(b)) % _BB_P for a, b in BLOOM_AB]
-    block = (hs[0] % F.lit(n_blocks)).alias("block")
+    block = (hs[0] % F.lit(BLOOM_N_BLOCKS)).alias("block")
     return block, [(h % F.lit(63)).cast("int") for h in hs[1:]]
 
 
@@ -102,15 +106,12 @@ def _mask_from_positions(df: DataFrame, pos_cols: list[Column]) -> DataFrame:
     )
 
 
-def bloom_build(
-    df: DataFrame,
-    n_blocks: int = 1 << 20,
-) -> DataFrame:
+def bloom_build(df: DataFrame) -> DataFrame:
     """Build the (block, bits) filter table from the ``fp`` key column. ONE
     map-side pass plus one hash aggregation on block — the partial
-    bit_or combines before the shuffle, so at most n_blocks rows move
-    per input partition regardless of key count."""
-    block, pos = _block_and_mask(F.col("fp"), n_blocks)
+    bit_or combines before the shuffle, so at most BLOOM_N_BLOCKS rows
+    move per input partition regardless of key count."""
+    block, pos = _block_and_mask(F.col("fp"))
     # keep the key column through the mask build — the position
     # expressions reference it — then project it away before the agg
     masked = _mask_from_positions(df.select("fp", block), pos)
@@ -120,21 +121,16 @@ def bloom_build(
     )
 
 
-def bloom_probe(
-    df: DataFrame,
-    bloom: DataFrame,
-    n_blocks: int = 1 << 20,
-) -> DataFrame:
+def bloom_probe(df: DataFrame, bloom: DataFrame) -> DataFrame:
     """Append ``maybe_seen`` (boolean): False = the ``fp`` key is
     DEFINITELY absent from the filter's build set; True = present or false positive (verify with
-    the exact join). ``n_blocks`` MUST match the build call — it is part
-    of the filter's identity.
+    the exact join).
 
     The probe side carries (original columns, block, mask) into a LEFT
-    join on block; the filter side is n_blocks rows max, so AQE plans a
+    join on block; the filter side is BLOOM_N_BLOCKS rows max, so AQE plans a
     broadcast at any realistic size and a shuffle join beyond it — the
     probe payload never amplifies either way."""
-    block, pos = _block_and_mask(F.col("fp"), n_blocks)
+    block, pos = _block_and_mask(F.col("fp"))
     probed = _mask_from_positions(df.select("*", block), pos)
     return (
         probed.join(bloom, "block", "left")
@@ -152,14 +148,13 @@ def bloom_gate_exact(
     new_df: DataFrame,
     committed_keys: DataFrame,
     bloom: DataFrame,
-    n_blocks: int = 1 << 20,
 ) -> DataFrame:
     """Exact membership verdict (doc_id, seen) using the filter as a
     prefilter: bloom-negative rows are 'seen = False' with no join;
     only bloom-positive rows join ``committed_keys`` (LEFT SEMI on the
     ``fp`` key) to split true duplicates from false positives. Output is
     row-for-row over ``new_df`` — the never-drop contract."""
-    probed = bloom_probe(new_df.select("doc_id", "fp"), bloom, n_blocks)
+    probed = bloom_probe(new_df.select("doc_id", "fp"), bloom)
     pos = probed.where(F.col("maybe_seen"))
     confirmed = (
         pos.join(committed_keys.select("fp").distinct(), "fp", "left_semi")

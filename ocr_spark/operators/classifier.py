@@ -58,10 +58,10 @@ def feature_bucket(feat: Column, n_buckets: int, seed: str) -> Column:
     return F.pmod(_md5_long(F.concat(F.lit(seed + ":"), feat)), F.lit(n_buckets))
 
 
-def synthetic_weight(bucket: Column, seed: str) -> Column:
+def synthetic_weight(bucket: Column) -> Column:
     """Pure-expression model: weight(bucket) in [-0.5, 0.5), uniform-ish,
-    deterministic, replayable in SQL."""
-    h = _md5_long(F.concat(F.lit(seed + ":w:"), bucket.cast("string")))
+    deterministic, replayable in SQL, seeded with ``CLF_SEED``."""
+    h = _md5_long(F.concat(F.lit(CLF_SEED + ":w:"), bucket.cast("string")))
     return (h % 10000).cast("double") / 10000.0 - 0.5
 
 
@@ -100,7 +100,7 @@ def classifier_score(df: DataFrame) -> DataFrame:
         "doc_id",
         "bucket",
         F.when(
-            F.col("bucket").isNotNull(), synthetic_weight(F.col("bucket"), CLF_SEED)
+            F.col("bucket").isNotNull(), synthetic_weight(F.col("bucket"))
         ).alias("weight"),
     )
 

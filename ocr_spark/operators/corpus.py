@@ -41,7 +41,7 @@ def clean_corpus(
     ids = df.select(F.col(id_col).alias("id"))
 
     q_kept = (
-        quality_filter(df, text_col="text", id_col=id_col)
+        quality_filter(df, id_col=id_col)
         .where("kept")
         .select(F.col(id_col).alias("id"))
     )

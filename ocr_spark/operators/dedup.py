@@ -186,7 +186,8 @@ def band_buckets(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
-    threshold: float = 0.5,
+    *,
+    threshold: float,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash LSH, verified with
     exact shingle-set jaccard. Returns (id_a, id_b, jaccard) with id_a < id_b
@@ -346,17 +347,21 @@ def lsh_recall_audit(df: DataFrame) -> DataFrame:
     )
 
 
-def _distinct_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def _distinct_tokens(df: DataFrame) -> DataFrame:
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.explode(
-            F.array_distinct(F.split(normalized_for_fingerprint(text_col), " "))
+            F.array_distinct(F.split(normalized_for_fingerprint("text"), " "))
         ).alias("tok"),
     ).where(F.col("tok") != "")
 
 
-def token_jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """EXACT distinct-token jaccard pairs at ``jaccard >= threshold`` via
+TOKEN_JACCARD_THRESHOLD = 0.8   # token_jaccard_pairs keeps pairs at or above
+
+
+def token_jaccard_pairs(df: DataFrame) -> DataFrame:
+    """EXACT distinct-token jaccard pairs at ``jaccard >=
+    TOKEN_JACCARD_THRESHOLD`` (read at call time) via
     prefix filtering (Bayardo et al. AllPairs / PPJoin): order every
     document's tokens by ascending global document frequency (ties by
     token — one total order both for pruning and determinism), and join
@@ -386,7 +391,8 @@ def token_jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     candidate pair is the only way this differs from string identity —
     vocabulary-scale probability ~2^-40, and the exact oracle parity test
     would catch it)."""
-    toks = _distinct_tokens(df, "text", "doc_id").select(
+    threshold = TOKEN_JACCARD_THRESHOLD
+    toks = _distinct_tokens(df).select(
         "id", F.xxhash64("tok").alias("tok")
     )
     docfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("tok_df"))
@@ -537,16 +543,18 @@ def contamination_check(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
 
 
 SIMHASH_BANDS = 4           # 16-bit bands: hamming <= 3 guarantees a shared band
+SIMHASH_MAX_HAMMING = 3     # simhash_pairs keeps pairs at most this far apart
 
 
-def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
+def simhash_pairs(df: DataFrame) -> DataFrame:
     """Near-duplicate pairs from 64-bit SimHash signatures via hamming-band
     LSH: the signature splits into ``SIMHASH_BANDS`` equal bit-slices (JVM-side
     shiftright + mask), pairs sharing any slice are candidates, and
     candidates are verified with the exact popcount hamming distance
-    (``bit_count(a XOR b) <= max_hamming``). Pigeonhole guarantee: any pair
-    with hamming < ``SIMHASH_BANDS`` shares at least one band, so recall is
-    exact for ``max_hamming <= SIMHASH_BANDS - 1`` (the default).
+    (``bit_count(a XOR b) <= SIMHASH_MAX_HAMMING``, read at call time).
+    Pigeonhole guarantee: any pair with hamming < ``SIMHASH_BANDS`` shares
+    at least one band, so recall is exact for ``SIMHASH_MAX_HAMMING <=
+    SIMHASH_BANDS - 1``.
 
     Same shuffle discipline as minhash: the band join carries only
     (id, band, bucket) longs; buckets with more than ``LSH_MAX_BUCKET`` members
@@ -556,6 +564,7 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """
     width = 64 // SIMHASH_BANDS
     mask = (1 << width) - 1
+    max_hamming = SIMHASH_MAX_HAMMING
     sigs = simhash64(df).select(
         F.col("doc_id").alias("id"), F.col("simhash")
     )
@@ -928,14 +937,14 @@ def latest_capture(df: DataFrame) -> DataFrame:
 PARA_MAX_DF = 8         # paragraphs in more docs than this are boilerplate
 
 
-def paragraph_dedup(df: DataFrame, max_df: int = PARA_MAX_DF) -> DataFrame:
+def paragraph_dedup(df: DataFrame) -> DataFrame:
     """Paragraph-granularity boilerplate removal — the CCNet dedup unit
     (its shard pass hashes PARAGRAPHS, not lines): a paragraph whose
     CANONICAL form (lowercased, whitespace collapsed — reflows and
     indentation changes must not split identities the way the line
-    pass's trim-only identity would) appears in more than ``max_df``
-    documents is removed from every document; survivors reassemble in
-    original order joined by blank lines. Completes the granularity
+    pass's trim-only identity would) appears in more than ``PARA_MAX_DF``
+    documents (read at call time) is removed from every document;
+    survivors reassemble in original order joined by blank lines. Completes the granularity
     ladder: document (exact_dedup_groups) / span (dup_spans) / paragraph (here)
     / line (line_dedup). Returns (id, text, n_paras, n_dropped).
 
@@ -965,7 +974,7 @@ def paragraph_dedup(df: DataFrame, max_df: int = PARA_MAX_DF) -> DataFrame:
         paras.where(~F.col("blank"))
         .groupBy("ph")
         .agg(F.countDistinct("id").alias("pdf"))
-        .where(F.col("pdf") > max_df)
+        .where(F.col("pdf") > PARA_MAX_DF)
         .select("ph")
     )
     kept = paras.join(
@@ -996,10 +1005,13 @@ def paragraph_dedup(df: DataFrame, max_df: int = PARA_MAX_DF) -> DataFrame:
     )
 
 
-def common_ngrams(df: DataFrame, k: int = 20) -> DataFrame:
-    """Corpus n-gram profile: the top ``k`` word 8-grams by document
-    frequency — the tuning instrument for every gram-threshold in this
-    engine (span-dedup min_df, contamination max_df, boilerplate
+COMMON_NGRAMS_TOP = 20  # common_ngrams' profile length, shared with its twin
+
+
+def common_ngrams(df: DataFrame) -> DataFrame:
+    """Corpus n-gram profile: the top ``COMMON_NGRAMS_TOP`` word 8-grams by
+    document frequency — the tuning instrument for every gram-threshold in
+    this engine (span-dedup min_df, contamination max_df, boilerplate
     ratios): you look at THIS table before picking them. Returns
     (gh, df_docs, example) ordered by (df_docs desc, gh asc).
 
@@ -1037,5 +1049,5 @@ def common_ngrams(df: DataFrame, k: int = 20) -> DataFrame:
             F.min("gram").alias("example"),
         )
         .orderBy(F.desc("df_docs"), F.asc("gh"))
-        .limit(k)
+        .limit(COMMON_NGRAMS_TOP)
     )

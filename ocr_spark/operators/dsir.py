@@ -13,7 +13,7 @@ Spark shape (all expression-level, no Python):
   feature stream   (id, bucket) — the classifier's shared unigram+bigram
                    md5 hashed stream (classifier.hashed_feature_stream)
   count tables     groupBy(bucket) on raw and target streams — at most
-                   ``n_buckets`` rows each (default 8192): broadcast class
+                   ``DSIR_N_BUCKETS`` rows each (512): broadcast class
   log-ratio table  raw LEFT JOIN target on bucket + two broadcast 1-row
                    totals; Laplace-smoothed ln(p_tgt(b)) - ln(p_raw(b))
   doc weights      feature stream ⋈ broadcast(ratio) -> groupBy(id) sum
@@ -24,7 +24,7 @@ Spark shape (all expression-level, no Python):
 100 TB verdict: the one-shot ``dsir_sample`` scans the corpus feature
 stream twice — once to fit the raw bucket counts, once to apply the
 weights — each time as (id, long) rows with map-side-combined aggregates;
-every join against it is a broadcast of an n_buckets-bounded table. The
+every join against it is a broadcast of a DSIR_N_BUCKETS-bounded table. The
 deploy path is the fit/apply split: ``dsir_log_ratios`` once (target-
 distribution state, not per-batch work), persist the tiny table, then
 ``dsir_apply`` per ingest batch = ONE scan of that batch. The target
@@ -47,22 +47,21 @@ from pyspark.sql import functions as F
 
 from .classifier import _md5_long, hashed_feature_stream
 
-DSIR_N_BUCKETS = 8192
+# DSIR_N_BUCKETS and DSIR_K are read at call time: tests set smaller ones
+DSIR_N_BUCKETS = 512
+DSIR_K = 50          # documents dsir_sample / dsir_apply select
 DSIR_ALPHA = 0.5     # Laplace smoothing mass per bucket
 DSIR_SEED = "dsir-1"  # feature-hash and Gumbel-noise seed
 _GUMBEL_RES = 1_000_000
 
 
-def dsir_log_ratios(
-    raw: DataFrame,
-    target: DataFrame,
-    n_buckets: int = DSIR_N_BUCKETS,
-) -> DataFrame:
+def dsir_log_ratios(raw: DataFrame, target: DataFrame) -> DataFrame:
     """(bucket, log_ratio): ln(p_target(b)) - ln(p_raw(b)) over the hashed
     feature space, Laplace-smoothed so buckets unseen in the target still
-    get finite mass. At most ``n_buckets`` rows — the broadcast side of
+    get finite mass. At most ``DSIR_N_BUCKETS`` rows — the broadcast side of
     every downstream join. Buckets absent from the RAW stream are omitted:
     no raw document can reference them, so they can never be looked up."""
+    n_buckets = DSIR_N_BUCKETS
     raw_feats = hashed_feature_stream(raw, n_buckets, DSIR_SEED)
     tgt_feats = hashed_feature_stream(target, n_buckets, DSIR_SEED)
     raw_counts = (
@@ -97,23 +96,19 @@ def dsir_log_ratios(
     )
 
 
-def dsir_apply(
-    raw: DataFrame,
-    ratios: DataFrame,
-    k: int,
-    n_buckets: int = DSIR_N_BUCKETS,
-) -> DataFrame:
+def dsir_apply(raw: DataFrame, ratios: DataFrame) -> DataFrame:
     """The APPLY half of DSIR against an already-fitted log-ratio table —
     the deploy-scale entry point: fit ``dsir_log_ratios`` once (it is
     target-distribution state, not per-batch work), persist the at-most-
-    ``n_buckets``-row table, and resample every ingest batch with a SINGLE
+    ``DSIR_N_BUCKETS``-row table, and resample every ingest batch
+    (``DSIR_K`` documents) with a SINGLE
     scan of that batch's feature stream (the one-shot ``dsir_sample``
     scans its corpus twice: once to fit raw counts, once here). Same
     frozen-artifact pattern as similarity.ivf_assign. ``ratios`` must
     carry (bucket, log_ratio) and must have been fitted with the same
-    ``n_buckets`` (bucket ids are hash positions — a mismatch is a
+    ``DSIR_N_BUCKETS`` (bucket ids are hash positions — a mismatch is a
     different feature space)."""
-    feats = hashed_feature_stream(raw, n_buckets, DSIR_SEED)
+    feats = hashed_feature_stream(raw, DSIR_N_BUCKETS, DSIR_SEED)
     weights = (
         feats.join(F.broadcast(ratios), "bucket")
         .groupBy("doc_id")
@@ -141,17 +136,12 @@ def dsir_apply(
             F.round(F.coalesce("w_raw", F.lit(0.0)) + gumbel, 4).alias("sample_key"),
         )
         .orderBy(F.col("sample_key").desc(), F.col("doc_id"))
-        .limit(k)
+        .limit(DSIR_K)
     )
 
 
-def dsir_sample(
-    raw: DataFrame,
-    target: DataFrame,
-    k: int,
-    n_buckets: int = DSIR_N_BUCKETS,
-) -> DataFrame:
-    """Select ``k`` documents from ``raw`` by importance resampling toward
+def dsir_sample(raw: DataFrame, target: DataFrame) -> DataFrame:
+    """Select ``DSIR_K`` documents from ``raw`` by importance resampling toward
     ``target``'s hashed-ngram distribution (fit + apply in one shot).
     Returns (doc_id, n_feats, log_weight, sample_key) — the k selected
     rows in descending sample_key order.
@@ -167,5 +157,4 @@ def dsir_sample(
 
     For repeated ingest batches, fit :func:`dsir_log_ratios` once and call
     :func:`dsir_apply` per batch instead — one corpus scan per batch."""
-    ratios = dsir_log_ratios(raw, target, n_buckets)
-    return dsir_apply(raw, ratios, k, n_buckets)
+    return dsir_apply(raw, dsir_log_ratios(raw, target))

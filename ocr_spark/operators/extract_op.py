@@ -208,19 +208,21 @@ def extract_pages(
                         num_partitions, repartition)
 
 
-def extract_page_markdown(df: DataFrame, repartition: bool | str = "auto") -> DataFrame:
+def extract_page_markdown(df: DataFrame) -> DataFrame:
     """pages -> markdown records (MARKDOWN_SCHEMA): the structured-output
-    twin of :func:`extract_pages` — identical keep/drop decisions and
-    partitioning policy, but headings/list items/quotes render as markdown
-    instead of flattening (core.markdown). One row per input row, P7."""
-    return _parse_stage(df, _markdown_batches, MARKDOWN_SCHEMA, None, repartition)
+    twin of :func:`extract_pages` — identical keep/drop decisions and the
+    salted shuffle of ``repartition=True``, but headings/list items/quotes
+    render as markdown instead of flattening (core.markdown). One row per
+    input row, P7."""
+    return _parse_stage(df, _markdown_batches, MARKDOWN_SCHEMA, None, True)
 
 
-def extract_page_spans(df: DataFrame, repartition: bool | str = "auto") -> DataFrame:
+def extract_page_spans(df: DataFrame) -> DataFrame:
     """pages -> per-block span rows (SPANS_SCHEMA): the span-emitting twin
     of :func:`extract_pages` (1:N rows; N = kept blocks, exactly 1 NULL-span
-    row for non-HTML/failed/empty docs so no url ever disappears). Same
-    partitioning policy and Arrow batch shape as the text path; the output
+    row for non-HTML/failed/empty docs so no url ever disappears). The
+    salted shuffle of ``repartition=True`` and the text path's Arrow batch
+    shape; the output
     carries (int, int) spans + block text only, so the fan-out rows are
     narrow — at 100 TB the span table is a small fraction of the input."""
-    return _parse_stage(df, _span_batches, SPANS_SCHEMA, None, repartition)
+    return _parse_stage(df, _span_batches, SPANS_SCHEMA, None, True)

@@ -22,22 +22,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+FETCH_DEFAULT_DELAY_S = 2.0  # seconds between fetches of a host without robots
+FETCH_MAX_PER_HOST = 15      # slots per host in one crawl cycle
 
-def fetch_schedule(
-    candidates: DataFrame,
-    host_delays: DataFrame,
-    *,
-    default_delay_s: float = 1.0,
-    max_per_host: int | None = None,
-) -> DataFrame:
+
+def fetch_schedule(candidates: DataFrame, host_delays: DataFrame) -> DataFrame:
     """Candidates (host, url, priority) x per-host delays ->
     (host, url, priority, slot, scheduled_at_s).
 
     Slots go to higher priority first (url as the deterministic
     tie-break); ``scheduled_at_s = slot * delay_s`` with the host's
-    declared crawl delay, falling back to ``default_delay_s`` for hosts
-    with no robots entry (left join, never dropped). ``max_per_host``
-    truncates each host's schedule to its politeness budget — the rows
+    declared crawl delay, falling back to ``FETCH_DEFAULT_DELAY_S`` for
+    hosts with no robots entry (left join, never dropped).
+    ``FETCH_MAX_PER_HOST`` (read at call time) truncates each host's
+    schedule to its politeness budget — the rows
     beyond it belong to the NEXT crawl cycle, so dropping them here is
     the semantics, not a loss.
     """
@@ -48,8 +46,7 @@ def fetch_schedule(
         "host", "url", "priority",
         (F.row_number().over(w) - F.lit(1)).cast("long").alias("slot"),
     )
-    if max_per_host is not None:
-        ranked = ranked.filter(F.col("slot") < F.lit(int(max_per_host)))
+    ranked = ranked.filter(F.col("slot") < F.lit(FETCH_MAX_PER_HOST))
     delays = host_delays.select(
         F.col("host").alias("__dh"),
         F.col("crawl_delay_s").cast("double").alias("__delay"),
@@ -63,7 +60,7 @@ def fetch_schedule(
             "slot",
             (
                 F.col("slot")
-                * F.coalesce(F.col("__delay"), F.lit(float(default_delay_s)))
+                * F.coalesce(F.col("__delay"), F.lit(FETCH_DEFAULT_DELAY_S))
             ).alias("scheduled_at_s"),
         )
     )

@@ -49,6 +49,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Misra-Gries counter budget — part of the answer's identity (threshold =
+# n_total/(HH_M+1)), shared with the DuckDB twin; read at call time
+HH_M = 32
+
 
 def _canon_tokens() -> F.Column:
     """The engine's canonical whitespace tokenization of ``text`` (shared
@@ -61,13 +65,14 @@ def _canon_tokens() -> F.Column:
     return F.split(norm, " ")
 
 
-def mg_candidates(tokens_df: DataFrame, m: int = 32) -> DataFrame:
+def mg_candidates(tokens_df: DataFrame) -> DataFrame:
     """Per-partition Misra-Gries summaries over a column of token arrays:
-    one bounded table of ``m`` counters per partition, emitted as a
+    one bounded table of ``m = HH_M`` counters per partition, emitted as a
     distinct (token) candidate frame of <= m rows per input partition.
 
     The union over partitions is a SUPERSET of every token whose global
     frequency exceeds n_total/(m+1) (see module docstring)."""
+    m = HH_M   # bound on the driver: the summary runs in Python workers
 
     def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         counters: dict[str, int] = {}
@@ -93,18 +98,18 @@ def mg_candidates(tokens_df: DataFrame, m: int = 32) -> DataFrame:
     ).distinct()
 
 
-def heavy_hitters(df: DataFrame, m: int = 32) -> DataFrame:
-    """Every token with frequency > n_total/(m+1), with its EXACT count:
+def heavy_hitters(df: DataFrame) -> DataFrame:
+    """Every token with frequency > n_total/(HH_M+1), with its EXACT count:
     (token, freq, n_total) ordered by (freq desc, token asc).
 
     Two passes over the source: the bounded-memory summary (no shuffle)
     and the candidate-gated exact recount (shuffle carries only candidate
     rows). Output provably equals the exact one-pass SQL answer — the
-    DuckDB twin replays ``GROUP BY token HAVING freq*(m+1) > total``."""
+    DuckDB twin replays ``GROUP BY token HAVING freq*(HH_M+1) > total``."""
     toks = df.select(_canon_tokens().alias("toks")).where(
         F.array_join("toks", " ") != ""
     )
-    cand = mg_candidates(toks, m=m)
+    cand = mg_candidates(toks)
     stream = toks.select(F.explode("toks").alias("token"))
     total = stream.agg(F.count("*").alias("n_total"))
     return (
@@ -112,7 +117,7 @@ def heavy_hitters(df: DataFrame, m: int = 32) -> DataFrame:
         .groupBy("token")
         .agg(F.count("*").alias("freq"))
         .crossJoin(F.broadcast(total))
-        .where(F.col("freq") * (m + 1) > F.col("n_total"))
+        .where(F.col("freq") * (HH_M + 1) > F.col("n_total"))
         .select("token", "freq", "n_total")
         .orderBy(F.col("freq").desc(), "token")
     )

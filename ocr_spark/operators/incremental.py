@@ -77,13 +77,13 @@ def write_band_store(state_df: DataFrame, table_name: str, path: str) -> None:
     from ..plans.partitioning import write_bucketed
 
     rows = band_buckets(state_df, id_col="id")
-    write_bucketed(rows, table_name, path, ["band", "bucket"])
+    write_bucketed(rows, table_name, path)
 
 
 def incremental_status_against_state(
     new_df: DataFrame,
     state_df: DataFrame,
-    band_store: DataFrame | None = None,
+    band_store: DataFrame | None,
 ) -> DataFrame:
     """(doc_id, status) for every row of ``new_df`` checked against a
     persisted :func:`committed_state` table: 'exact_seen' (fingerprint

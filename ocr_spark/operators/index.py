@@ -65,7 +65,7 @@ def inverted_index(df: DataFrame) -> DataFrame:
     )
 
 
-def positional_postings(df: DataFrame, vocab: list[str] | None = None) -> DataFrame:
+def positional_postings(df: DataFrame, vocab: list[str]) -> DataFrame:
     """(term, id, pos) positional postings — the phrase-query sibling of
     ``inverted_index``. ``vocab`` prunes to the query's own terms BEFORE
     anything shuffles (the bm25 query-vocab-filter discipline): for a
@@ -81,9 +81,7 @@ def positional_postings(df: DataFrame, vocab: list[str] | None = None) -> DataFr
             )
         ).alias("pos", "term"),
     )
-    if vocab is not None:
-        toks = toks.where(F.col("term").isin(*sorted(set(vocab))))
-    return toks.select("term", "id", "pos")
+    return toks.where(F.col("term").isin(*sorted(set(vocab)))).select("term", "id", "pos")
 
 
 def phrase_search(df: DataFrame, phrase: list[str]) -> DataFrame:
@@ -117,9 +115,15 @@ def phrase_search(df: DataFrame, phrase: list[str]) -> DataFrame:
 
 
 RRF_K = 60  # the standard reciprocal-rank-fusion damping constant
+# The four settings below are read at call time.
+RRF_TOPK = 10  # fused ranks rrf_fuse keeps
+BM25_TOPK = 15  # documents bm25_topk ranks (expansion_terms' feedback set)
+EXPANSION_K_TERMS = 8  # terms expansion_terms returns
+# the search query bm25_topk, expansion_terms and snippets serve
+SEARCH_TERMS = ("spark", "vector", "merge")
 
 
-def rrf_fuse(rankings: list[DataFrame], topk: int = 10) -> DataFrame:
+def rrf_fuse(rankings: list[DataFrame]) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al., SIGIR'09) of ranked lists.
 
     Each input carries (doc_id, rank); fused score = sum over lists of
@@ -129,7 +133,7 @@ def rrf_fuse(rankings: list[DataFrame], topk: int = 10) -> DataFrame:
     the union + one groupBy is driver-free and broadcast-cheap at any
     corpus scale; determinism: ranks are ints, each doc sums at most
     len(rankings) identical-order dyadic terms, ties break by id.
-    Columns: doc_id, rrf_score (6dp), fused_rank."""
+    Columns: doc_id, rrf_score (6dp), fused_rank (the top ``RRF_TOPK``)."""
     from functools import reduce
 
     parts = [
@@ -144,32 +148,28 @@ def rrf_fuse(rankings: list[DataFrame], topk: int = 10) -> DataFrame:
     w = Window.orderBy(F.col("rrf_score").desc(), F.col("doc_id").asc())
     return (
         scored.withColumn("fused_rank", F.row_number().over(w))
-        .where(F.col("fused_rank") <= topk)
+        .where(F.col("fused_rank") <= RRF_TOPK)
         .orderBy("fused_rank")
     )
 
 
-def expansion_terms(
-    df: DataFrame,
-    query_terms: list[str],
-    k_docs: int = 10,
-    k_terms: int = 8,
-) -> DataFrame:
-    """RM3-style pseudo-relevance-feedback query expansion: terms that
-    characterize the seed query's BM25 top-``k_docs`` documents, scored
-    by feedback-tf x corpus-idf, excluding the seed terms and stopwords.
-    Columns: term, weight (4dp), rank — the expanded query is
-    seed + these terms, re-run through ``bm25_topk``.
+def expansion_terms(df: DataFrame) -> DataFrame:
+    """RM3-style pseudo-relevance-feedback query expansion: the
+    ``EXPANSION_K_TERMS`` terms that characterize the ``SEARCH_TERMS``
+    query's BM25 top-``BM25_TOPK`` documents, scored by feedback-tf x
+    corpus-idf, excluding the seed terms and stopwords. Columns: term,
+    weight (4dp), rank — the expanded query is seed + these terms, re-run
+    through ``bm25_topk``.
 
-    Scale shape: the feedback doc-id list is k_docs rows (broadcast
+    Scale shape: the feedback doc-id list is BM25_TOPK rows (broadcast
     semi-join gates the token stream), corpus df comes from the same
     single tokenize projection with map-side combine, and only the
     candidate-term rollup shuffles. idf = ln((N+1)/(df+1)) — the tfidf
     family convention, so the twin shares the literal formula."""
     from ..functions.text import STOPWORDS
 
-    seed = sorted({t.lower() for t in query_terms})
-    fb_ids = bm25_topk(df, seed, k=k_docs).select("doc_id")
+    seed = sorted({t.lower() for t in SEARCH_TERMS})
+    fb_ids = bm25_topk(df).select("doc_id")
     toks = df.select(
         F.col("doc_id").alias("id"),
         F.explode(
@@ -203,7 +203,7 @@ def expansion_terms(
     w = Window.orderBy(F.desc("weight"), F.asc("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k_terms)
+        .where(F.col("rank") <= EXPANSION_K_TERMS)
         .orderBy("rank")
     )
 
@@ -211,9 +211,9 @@ def expansion_terms(
 SNIPPET_WINDOW = 20  # tokens per snippet window
 
 
-def snippets(df: DataFrame, query_terms: list[str]) -> DataFrame:
-    """Search-result snippets: for each document containing any query
-    term, the densest ``SNIPPET_WINDOW``-token span drawn from the aligned AND
+def snippets(df: DataFrame) -> DataFrame:
+    """Search-result snippets: for each document containing any
+    ``SEARCH_TERMS`` term, the densest ``SNIPPET_WINDOW``-token span drawn from the aligned AND
     half-offset window grids (a sliding-span approximation: a dense run
     of hits straddling an aligned boundary — e.g. adjacent hits at
     positions 19 and 20 — lands whole in the half-offset window that
@@ -228,7 +228,7 @@ def snippets(df: DataFrame, query_terms: list[str]) -> DataFrame:
     and the snippet cut (array slice + join — the text never explodes);
     the per-doc argmax runs over span-count rows, bounded by
     2 * doclen / SNIPPET_WINDOW. Everything JVM-side."""
-    terms = sorted({t.lower() for t in query_terms})
+    terms = sorted({t.lower() for t in SEARCH_TERMS})
     half = SNIPPET_WINDOW // 2
     toks = df.select(
         F.col("doc_id").alias("id"),
@@ -281,9 +281,10 @@ def snippets(df: DataFrame, query_terms: list[str]) -> DataFrame:
     )
 
 
-def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 10) -> DataFrame:
-    """BM25 ranked retrieval: top-``k`` documents for a bag of query terms
-    (Robertson/Sparck Jones; the Lucene idf variant
+def bm25_topk(df: DataFrame) -> DataFrame:
+    """BM25 ranked retrieval: top-``BM25_TOPK`` documents for the
+    ``SEARCH_TERMS`` bag of query terms (Robertson/Sparck Jones; the Lucene
+    idf variant
     ln(1 + (N - df + 0.5)/(df + 0.5)), which stays positive for
     df > N/2). Output: (doc_id, score, rank), score rounded to 4 dp.
 
@@ -296,7 +297,7 @@ def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 10) -> DataFrame:
     discipline for the DuckDB twin: avgdl is rounded to 6 dp on both
     engines before it enters a score, scores to 4 dp before ranking.
     """
-    terms = sorted({t.lower() for t in query_terms})
+    terms = sorted({t.lower() for t in SEARCH_TERMS})
     toks = df.select(
         F.col("doc_id").alias("id"),
         F.regexp_extract_all(
@@ -335,7 +336,7 @@ def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 10) -> DataFrame:
     )
     top = (
         scored.orderBy(F.desc("score"), F.asc("id"))
-        .limit(k)
+        .limit(BM25_TOPK)
         .select(F.col("id").alias("doc_id"), "score")
     )
     from pyspark.sql.window import Window

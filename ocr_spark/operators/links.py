@@ -51,6 +51,11 @@ from ..functions.urls import url_host
 PAGERANK_LOCAL_EDGE_THRESHOLD = 500_000
 PAGERANK_CHECKPOINT_EVERY = 3  # rounds between lazy localCheckpoints
 PAGERANK_DAMPING = 0.85  # share of rank that follows links each round
+PAGERANK_ITERATIONS = 8  # power-iteration rounds
+# TrustRank seed hosts — part of the answer's identity, shared with the
+# DuckDB twin so the teleport vector cannot drift
+TRUST_SEEDS = ["h1.example.org", "h5.example.org", "h9.example.org"]
+ANCHOR_TOP_TERMS = 3  # anchor_terms' terms per target host
 
 
 def outlinks(pages: DataFrame) -> DataFrame:
@@ -62,7 +67,7 @@ def outlinks(pages: DataFrame) -> DataFrame:
     hrefs = pages.select(
         F.col("doc_id"),
         F.col("url"),
-        F.posexplode(extract_hrefs("html_text")).alias("pos", "href"),
+        F.posexplode(extract_hrefs()).alias("pos", "href"),
     )
     resolved = strip_fragment(resolve_href(F.col("url"), F.col("href")))
     return (
@@ -94,7 +99,7 @@ def outlinks_with_text(pages: DataFrame) -> DataFrame:
     pairs = pages.select(
         F.col("doc_id"),
         F.col("url"),
-        F.posexplode(anchor_pairs("html_text")).alias("pos", "pair"),
+        F.posexplode(anchor_pairs()).alias("pos", "pair"),
     ).select(
         "doc_id",
         "url",
@@ -119,14 +124,11 @@ def outlinks_with_text(pages: DataFrame) -> DataFrame:
     )
 
 
-def anchor_terms(
-    edges_with_text: DataFrame,
-    top_k: int = 3,
-) -> DataFrame:
+def anchor_terms(edges_with_text: DataFrame) -> DataFrame:
     """Per-target-host anchor-text term profile — the classic retrieval /
     quality signal (what OTHER sites call this host). Tokens of external
     anchors only (a site's self-description is not an endorsement),
-    lowercased, split on non-alphanumerics; top ``top_k`` terms per
+    lowercased, split on non-alphanumerics; top ``ANCHOR_TOP_TERMS`` terms per
     dst_host by link count with (count desc, term asc) deterministic
     tie-break. Shape: one (dst_host, term) hash aggregation (map-side
     pre-combined) + one bounded per-host window — scales: the key space
@@ -151,7 +153,7 @@ def anchor_terms(
     )
     return (
         counts.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_k)
+        .where(F.col("rank") <= ANCHOR_TOP_TERMS)
         .select("dst_host", "term", "n_links", "rank")
     )
 
@@ -167,7 +169,7 @@ def canonical_groups(pages: DataFrame) -> DataFrame:
     to that canonical, and the keeper is the self-declaring page when one
     exists, else the minimum id (deterministic). One hash aggregation on
     canonical_url + one broadcast-join back — scales."""
-    decl = F.nullif(canonical_link("html_text"), F.lit(""))
+    decl = F.nullif(canonical_link(), F.lit(""))
     pages_c = pages.select(
         F.col("doc_id"),
         F.col("url"),
@@ -238,10 +240,10 @@ def host_degree(edges: DataFrame) -> DataFrame:
 
 def pagerank_hosts(
     host_edges: DataFrame,
-    iterations: int = 8,
     seeds: list[str] | None = None,
 ) -> DataFrame:
-    """Damped PageRank (damping ``PAGERANK_DAMPING``) over (src_host,
+    """Damped PageRank (damping ``PAGERANK_DAMPING``, ``PAGERANK_ITERATIONS``
+    rounds, both read at call time) over (src_host,
     dst_host, n_links) host edges. Returns (host, rank) summing to 1
     across all hosts that appear on either side. Weighted by link
     multiplicity (n_links), dangling mass redistributed by the teleport
@@ -276,8 +278,9 @@ def pagerank_hosts(
     orders smaller than their page tables, so when the edge count clears
     ``PAGERANK_LOCAL_EDGE_THRESHOLD`` the transition table is collected and
     iterated driver-side in a fixed deterministic order — one job instead
-    of ``iterations`` x several scheduled stages; above it, the
+    of ``PAGERANK_ITERATIONS`` x several scheduled stages; above it, the
     distributed loop below runs."""
+    iterations = PAGERANK_ITERATIONS
     edges = host_edges.select("src_host", "dst_host", "n_links")
     edge_cache = []
     if PAGERANK_LOCAL_EDGE_THRESHOLD:
@@ -287,7 +290,7 @@ def pagerank_hosts(
         edges = edges.persist()
         edge_cache.append(edges)
         if edges.count() <= PAGERANK_LOCAL_EDGE_THRESHOLD:
-            out = _local_pagerank(edges, iterations, seeds)
+            out = _local_pagerank(edges, seeds)
             edges.unpersist()
             return out
     out_w = edges.groupBy("src_host").agg(F.sum("n_links").alias("out_w"))
@@ -375,7 +378,7 @@ def pagerank_hosts(
     return result
 
 
-def _local_pagerank(edges, iterations: int, seeds: list[str] | None = None):
+def _local_pagerank(edges, seeds: list[str] | None):
     """Driver-local power iteration over a collected host-level transition
     table — only called when the edge count cleared
     ``PAGERANK_LOCAL_EDGE_THRESHOLD``.
@@ -404,7 +407,7 @@ def _local_pagerank(edges, iterations: int, seeds: list[str] | None = None):
         t_val = 1.0 / len(seed_set)
         tele = {h: (t_val if h in seed_set else 0.0) for h in hosts}
         rank = dict(tele)
-    for _ in range(iterations):
+    for _ in range(PAGERANK_ITERATIONS):
         contrib = {h: 0.0 for h in hosts}
         for s, d, w in trans:
             contrib[d] += w * rank[s]
@@ -426,15 +429,12 @@ def _local_pagerank(edges, iterations: int, seeds: list[str] | None = None):
     )
 
 
-def trustrank_hosts(
-    host_edges: DataFrame,
-    seeds: list[str],
-    iterations: int = 8,
-) -> DataFrame:
+def trustrank_hosts(host_edges: DataFrame) -> DataFrame:
     """TrustRank (Gyöngyi, Garcia-Molina, Pedersen 2004): PageRank with
-    the teleport vector concentrated on a hand-vetted trusted seed set —
+    the teleport vector concentrated on the hand-vetted trusted seed set
+    ``TRUST_SEEDS`` (read at call time) —
     the standard web-spam demotion prior. A link farm that inflates its
     classic PageRank by interlinking scores ~0 here unless a trust path
     from the seeds reaches it; honest hubs near the seeds score high.
     Same single-lazy-plan iteration machinery as ``pagerank_hosts``."""
-    return pagerank_hosts(host_edges, iterations=iterations, seeds=seeds)
+    return pagerank_hosts(host_edges, seeds=TRUST_SEEDS)

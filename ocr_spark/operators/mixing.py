@@ -34,14 +34,23 @@ from ..functions.text import quality_score, token_count
 from ..functions.urls import url_host
 from .quality import quality_filter
 
+# Read at call time. Per-language token budgets of token_budget_select: ~60%
+# of each language's sf0.01 token mass, zh deliberately absent (a mixture is
+# also an allowlist); shared with the DuckDB twin.
+MIX_BUDGETS = {"en": 7000, "de": 2000, "fr": 2200, "es": 2400}
+# kept (or smoothed kept) fraction below which a host is blocked
+HOST_BLOCK_FRAC = 0.85
+TEMPERATURE_ALPHA = 0.3  # temperature_mixture's exponent
 
-def token_budget_select(df: DataFrame, budgets: dict[str, int]) -> DataFrame:
-    """Greedy per-language mixture selection under token budgets.
+
+def token_budget_select(df: DataFrame) -> DataFrame:
+    """Greedy per-language mixture selection under the ``MIX_BUDGETS``
+    token budgets.
 
     Within each language, documents are ranked by ``quality_score``
     descending (ties broken by id, so the cut is deterministic) and
     selected while the running token total stays within the language's
-    budget. Languages absent from ``budgets`` are excluded entirely —
+    budget. Languages absent from ``MIX_BUDGETS`` are excluded entirely —
     a mixture is also a language allowlist.
 
     Returns (id, lang, n_tokens, quality, cum_tokens, selected): the full
@@ -51,7 +60,7 @@ def token_budget_select(df: DataFrame, budgets: dict[str, int]) -> DataFrame:
     """
     spark = df.sparkSession
     b = spark.createDataFrame(
-        [(k, int(v)) for k, v in sorted(budgets.items())],
+        [(k, int(v)) for k, v in sorted(MIX_BUDGETS.items())],
         "lang string, budget long",
     )
     scored = df.select(
@@ -75,14 +84,11 @@ def token_budget_select(df: DataFrame, budgets: dict[str, int]) -> DataFrame:
     )
 
 
-def domain_blocklist(
-    df: DataFrame,
-    min_kept_frac: float = 0.5,
-) -> DataFrame:
+def domain_blocklist(df: DataFrame) -> DataFrame:
     """Per-host quality profile + block decision.
 
     A host is blocked when it has at least 5 documents and
-    fewer than ``min_kept_frac`` of them pass the per-document
+    fewer than ``HOST_BLOCK_FRAC`` of them pass the per-document
     ``quality_filter``. The support floor keeps single-page hosts from
     being condemned by one bad document (mirroring the per-group support
     threshold of the V7 banded check).
@@ -106,16 +112,13 @@ def domain_blocklist(
             "kept_frac",
             (
                 (F.col("n_docs") >= 5)
-                & (F.col("kept_frac") < min_kept_frac)
+                & (F.col("kept_frac") < HOST_BLOCK_FRAC)
             ).alias("blocked"),
         )
     )
 
 
-def domain_quality_eb(
-    df: DataFrame,
-    min_smoothed_frac: float = 0.5,
-) -> DataFrame:
+def domain_quality_eb(df: DataFrame) -> DataFrame:
     """Empirical-Bayes smoothed per-host quality — the web-scale fix for
     :func:`domain_blocklist`'s support floor: a floor EXEMPTS every host
     below 5 documents outright (a 4-page spam host passes forever),
@@ -128,8 +131,8 @@ def domain_quality_eb(
     host at its own rate (the standard Beta-Binomial posterior mean).
 
     Returns (host, n_docs, kept_frac, smoothed_frac, blocked) for every
-    host; ``blocked`` compares the 4-dp-rounded smoothed rate so both
-    engines decide on identical values.
+    host; ``blocked`` compares the 4-dp-rounded smoothed rate with
+    ``HOST_BLOCK_FRAC`` so both engines decide on identical values.
 
     Shape: the per-doc gate is the zero-shuffle quality_filter; one
     host aggregation; the global rate is a 1-row broadcast (never a
@@ -163,16 +166,17 @@ def domain_quality_eb(
             F.col("n_kept").cast("double") / F.col("n_docs").cast("double"), 4
         ).alias("kept_frac"),
         smoothed.alias("smoothed_frac"),
-        (smoothed < F.lit(min_smoothed_frac)).alias("blocked"),
+        (smoothed < F.lit(HOST_BLOCK_FRAC)).alias("blocked"),
     )
 
 
-def temperature_mixture(df: DataFrame, alpha: float = 0.3) -> DataFrame:
+def temperature_mixture(df: DataFrame) -> DataFrame:
     """Temperature-based multinomial mixture weights over languages (the
     mT5/XLM-R sampling rule): ``p_l  ∝  n_l^alpha`` where ``n_l`` is the
-    language's token mass. ``alpha < 1`` flattens the natural distribution —
-    low-resource languages get upsampled relative to their raw share,
-    high-resource ones downsampled — the standard knob a multilingual
+    language's token mass and ``alpha = TEMPERATURE_ALPHA``. ``alpha < 1``
+    flattens the natural distribution — low-resource languages get
+    upsampled relative to their raw share, high-resource ones downsampled
+    — the standard knob a multilingual
     training mixture turns before ``token_budget_select`` applies the
     resulting ratios as budgets.
 
@@ -189,7 +193,7 @@ def temperature_mixture(df: DataFrame, alpha: float = 0.3) -> DataFrame:
         F.sum(token_count(F.col("text"))).alias("n_tokens"),
     )
     powed = per_lang.withColumn(
-        "w", F.pow(F.col("n_tokens").cast("double"), F.lit(float(alpha)))
+        "w", F.pow(F.col("n_tokens").cast("double"), F.lit(float(TEMPERATURE_ALPHA)))
     )
     totals = powed.agg(
         F.sum("n_tokens").alias("tot_tokens"), F.sum("w").alias("tot_w")

@@ -338,8 +338,9 @@ AV_FEATURES_SCHEMA = (
 )
 
 
-def av_features(df: DataFrame, binary_col: str = "html") -> DataFrame:
-    """Partition-parallel audio/video metadata over a binary column: the
+def av_features(df: DataFrame) -> DataFrame:
+    """Partition-parallel audio/video metadata over the ``payload`` binary
+    column: the
     header-true fast path (``parse_av_header``) with the deterministic
     fake as fallback — same Arrow ``mapInPandas`` shape as
     ``media_features``, zero shuffle, streaming-safe."""
@@ -348,7 +349,7 @@ def av_features(df: DataFrame, binary_col: str = "html") -> DataFrame:
         for pdf in batches:
             out = {k: [] for k in ("id", "kind", "n_bytes", "duration_ms",
                                    "sample_rate", "channels", "decoder")}
-            for i, blob in enumerate(pdf[binary_col].tolist()):
+            for i, blob in enumerate(pdf["payload"].tolist()):
                 b = blob if blob is not None else b""
                 meta = parse_av_header(b)
                 decoder = "header"
@@ -364,7 +365,7 @@ def av_features(df: DataFrame, binary_col: str = "html") -> DataFrame:
                 out["decoder"].append(decoder)
             yield pd.DataFrame(out)
 
-    return df.select("url", binary_col).mapInPandas(feats, schema=AV_FEATURES_SCHEMA)
+    return df.select("url", "payload").mapInPandas(feats, schema=AV_FEATURES_SCHEMA)
 
 
 def decode_image_tagged(data: bytes) -> tuple[int, int, str]:
@@ -404,14 +405,17 @@ FRAME_SAMPLE_SCHEMA = (
     "id string, frame_idx int, ts_ms long, frame_sha string, decoder string"
 )
 
+RESIZE_MAX_SIDE = 512  # image_resize's bounding box side, in pixels
 RESIZE_SCHEMA = (
     "id string, width int, height int, resized_w int, resized_h int, decoder string"
 )
 
 
-def resize_dims(w: int, h: int, max_side: int) -> tuple[int, int]:
-    """Aspect-preserving fit into max_side x max_side (pure arithmetic —
-    shared by the real and stub decode paths; never upscales)."""
+def resize_dims(w: int, h: int) -> tuple[int, int]:
+    """Aspect-preserving fit into a ``RESIZE_MAX_SIDE`` square (pure
+    arithmetic — shared by the real and stub decode paths; never
+    upscales)."""
+    max_side = RESIZE_MAX_SIDE
     if w <= 0 or h <= 0 or max(w, h) <= max_side:
         return w, h
     if w >= h:
@@ -419,9 +423,10 @@ def resize_dims(w: int, h: int, max_side: int) -> tuple[int, int]:
     return max(1, (w * max_side) // h), max_side
 
 
-def image_resize(df: DataFrame, max_side: int = 512) -> DataFrame:
+def image_resize(df: DataFrame) -> DataFrame:
     """Resize plumbing over the ``html`` binary payloads: decode (stubbed —
-    no Pillow here) -> aspect-preserving target dims. The real path would
+    no Pillow here) -> aspect-preserving target dims within
+    ``RESIZE_MAX_SIDE``. The real path would
     re-encode bytes; the stub computes the exact output geometry from the
     fake decoder's deterministic dimensions, so schema/batching/arithmetic
     are all real and tested."""
@@ -440,7 +445,7 @@ def image_resize(df: DataFrame, max_side: int = 512) -> DataFrame:
                     decoder = "stub"
                 except Exception:
                     w, h, decoder = -1, -1, "error"
-                rw, rh = resize_dims(w, h, max_side)
+                rw, rh = resize_dims(w, h)
                 out["id"].append(pdf["url"].iat[i])
                 out["width"].append(w)
                 out["height"].append(h)

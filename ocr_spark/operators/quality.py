@@ -43,12 +43,9 @@ def _tokens(text_col: str):
     )
 
 
-def quality_filter(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Rule-based document filter with per-rule reason labels:
+def quality_filter(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Rule-based document filter over the ``text`` column with per-rule
+    reason labels:
     (id, n_words, mean_word_len, symbol_ratio, top_word_ratio, kept,
     drop_reason). ``drop_reason`` is the FIRST failing rule in a fixed
     order (too_short, too_long, word_len, symbol_heavy, repetitive) so
@@ -68,7 +65,7 @@ def quality_filter(
     quality gate, tested in test_streaming_multimodal.py). The DuckDB
     twin keeps the relational groupBy formulation: same semantics, and
     the parity test is exactly the proof the two formulations agree."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     canon = normalized_for_fingerprint(text)
     n = F.size("toks")
     sorted_toks = F.array_sort("toks")

@@ -45,12 +45,11 @@ def distributed_ntile(
     n: int,
     group_col: str,
     order_cols: list[Column],
-    rank_col: str = "group_rank",
-    bucket_col: str = "bucket_idx",
+    rank_col: str,
 ) -> DataFrame:
     """Exact ``ntile(n)`` within ``group_col`` under ``order_cols`` (MUST
     end in a unique tie-break), without any per-group global sort. Adds
-    ``rank_col`` (1-based exact rank within the group) and ``bucket_col``
+    ``rank_col`` (1-based exact rank within the group) and ``_b``
     (0..n-1, earliest ranks -> 0). See module docstring for the plan.
     """
     from .dedup import _persist_scoped
@@ -95,7 +94,7 @@ def distributed_ntile(
         .join(F.broadcast(meta), ["_pid", group_col])
         .withColumn(rank_col, (F.col("_off") + F.col("_local_rn")))
         .withColumn(
-            bucket_col,
+            "_b",
             F.least(
                 F.floor(F.lit(n) * (F.col(rank_col) - 1) / F.col("_tot")),
                 F.lit(n - 1),
@@ -139,7 +138,6 @@ def perplexity_buckets(df: DataFrame) -> DataFrame:
         group_col="lang",
         order_cols=[F.desc("lm_logprob"), F.asc("doc_id")],
         rank_col="lang_rank",
-        bucket_col="_b",
     )
     bucket = F.element_at(
         F.array(*[F.lit(b) for b in PPL_BUCKETS]), F.col("_b") + 1
@@ -160,9 +158,12 @@ def perplexity_buckets(df: DataFrame) -> DataFrame:
     )
 
 
-def top_fraction_gate(df: DataFrame, frac: float) -> DataFrame:
+TOP_FRACTION = 0.25  # share of documents top_fraction_gate keeps
+
+
+def top_fraction_gate(df: DataFrame) -> DataFrame:
     """DCLM/FineWeb-Edu-style top-fraction selection: keep exactly the
-    best ``ceil(frac * n)`` documents by ``score`` (ties broken by
+    best ``ceil(TOP_FRACTION * n)`` documents by ``score`` (ties broken by
     id, so the cut is total and reproducible). This is the calibration
     primitive behind "keep the top 10% by classifier score" — the
     threshold is discovered from the corpus's own score distribution,
@@ -183,10 +184,9 @@ def top_fraction_gate(df: DataFrame, frac: float) -> DataFrame:
         group_col="_g",
         order_cols=[F.desc("score"), F.asc("doc_id")],
         rank_col="rank",
-        bucket_col="_b",
     )
     total = df.agg(F.count(F.lit(1)).alias("n_total"))
-    cut = F.ceil(F.lit(float(frac)) * F.col("n_total")).cast("long")
+    cut = F.ceil(F.lit(float(TOP_FRACTION)) * F.col("n_total")).cast("long")
     return (
         ranked.crossJoin(F.broadcast(total))
         .select(

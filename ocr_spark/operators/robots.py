@@ -2,19 +2,16 @@
 
 Before a page enters the corpus, pipelines honor (or at least audit
 against) the host's robots.txt. This module implements the GROUP-AWARE
-reading of RFC 9309: lines fold into user-agent groups (one or more
-stacked ``User-agent:`` lines followed by rules), and a requesting agent
-obeys the group(s) naming it exactly, falling back to the ``*`` groups
-only when no exact group exists for that host. Rules appearing before
-any ``User-agent:`` line belong to no group and are ignored, per the RFC.
+reading of RFC 9309 for the ``*`` agent: lines fold into user-agent
+groups (one or more stacked ``User-agent:`` lines followed by rules), and
+only the groups that name ``*`` govern — a group naming some other agent
+never applies. Rules appearing before any ``User-agent:`` line belong to
+no group and are ignored, per the RFC.
 
 The fold is still pure expressions — the per-line "state machine" is a
 host-partitioned running sum over the exploded lines (a UA line STARTS a
 new group iff the previous line is not itself a UA line, so stacked UA
-lines share a group) — with an exact SQL twin. Agent matching is exact
-token equality (lowercased), not the RFC's product-token prefix match; a
-crawl audit pins its own agent string, so the simplification is safe and
-documented here.
+lines share a group) — with an exact SQL twin.
 
 Matching is prefix-based on the url path (the robots.txt core rule);
 empty ``Disallow:`` lines mean allow-everything and are dropped. The
@@ -57,33 +54,21 @@ def _grouped_lines(robots: DataFrame) -> DataFrame:
     )
 
 
-def _applicable_groups(marked: DataFrame, agent: str) -> DataFrame:
-    """(host, gid) of the group(s) governing ``agent``: the groups naming
-    it exactly, else that host's ``*`` groups."""
+def _applicable_groups(marked: DataFrame) -> DataFrame:
+    """(host, gid) of the ``*`` groups."""
     # strip the directive head by length, not split-on-colon — values may
     # legally contain ':' and must survive intact
     ua_val = F.lower(F.trim(F.substring(F.col("lt"), 12, 1 << 20)))
     uas = marked.where("is_ua").select("host", "gid", ua_val.alias("ua"))
-    star = uas.where(F.col("ua") == "*").select("host", "gid").distinct()
-    if agent == "*":
-        return star
-    exact = (
-        uas.where(F.col("ua") == agent.lower())
-        .select("host", "gid")
-        .distinct()
-    )
-    # exact groups win per host; '*' groups apply only where none exist
-    return exact.union(
-        star.join(exact.select("host").distinct(), "host", "left_anti")
-    ).distinct()
+    return uas.where(F.col("ua") == "*").select("host", "gid").distinct()
 
 
-def robots_disallow_rules(robots: DataFrame, agent: str = "*") -> DataFrame:
-    """(host, prefix) for every non-empty Disallow directive in the
-    user-agent group(s) governing ``agent`` (see :func:`_grouped_lines`
-    for the line/group fold and the CRLF contract)."""
+def robots_disallow_rules(robots: DataFrame) -> DataFrame:
+    """(host, prefix) for every non-empty Disallow directive in the ``*``
+    user-agent group(s) (see :func:`_grouped_lines` for the line/group
+    fold and the CRLF contract)."""
     marked = _grouped_lines(robots)
-    applicable = _applicable_groups(marked, agent)
+    applicable = _applicable_groups(marked)
     prefix = F.trim(F.substring(F.col("lt"), 10, 1 << 20))
     dis = (
         marked.where(F.lower("lt").startswith("disallow:"))
@@ -134,7 +119,7 @@ def robots_crawl_delays(robots: DataFrame) -> DataFrame:
     any applicable reading, and a tighter-than-necessary delay is always
     polite. Vocabulary-sized all the way down (hosts x robots lines)."""
     marked = _grouped_lines(robots)
-    applicable = _applicable_groups(marked, "*")
+    applicable = _applicable_groups(marked)
     # 'crawl-delay:' is 12 chars -> value starts at 13 (1-based substring);
     # try_cast, not cast: ANSI mode must not let one 'Crawl-delay: soon'
     # line abort the whole job — malformed means dropped

@@ -33,12 +33,17 @@ def sample_bucket(key_col, salt: str) -> Column:
     return F.pmod(h, F.lit(SAMPLE_DENOM))
 
 
-def stratified_sample(df: DataFrame, rates: dict[str, float],
-                      default_rate: float = 0.0) -> DataFrame:
+STRATIFIED_DEFAULT_RATE = 0.1  # keep fraction of strata stratified_sample does not list
+LEAKAGE_EVAL_FRAC = 0.1  # share of hosts leakage_safe_split sends to eval
+CAP_PER_GROUP = 15  # rows per host cap_per_group keeps
+# the three are read at call time
+
+
+def stratified_sample(df: DataFrame, rates: dict[str, float]) -> DataFrame:
     """Per-stratum deterministic sampling: ``rates`` maps stratum values to
-    keep fractions; unlisted strata keep ``default_rate``. One map-side
-    CASE + filter — the per-language corpus mixing shape."""
-    cutoff = F.lit(int(default_rate * SAMPLE_DENOM))
+    keep fractions; unlisted strata keep ``STRATIFIED_DEFAULT_RATE``. One
+    map-side CASE + filter — the per-language corpus mixing shape."""
+    cutoff = F.lit(int(STRATIFIED_DEFAULT_RATE * SAMPLE_DENOM))
     for value, rate in sorted(rates.items()):
         cutoff = F.when(
             F.col("lang") == value, F.lit(int(rate * SAMPLE_DENOM))
@@ -46,9 +51,9 @@ def stratified_sample(df: DataFrame, rates: dict[str, float],
     return df.where(sample_bucket("doc_id", "sample") < cutoff)
 
 
-def soft_sample(df: DataFrame, weight_col: str) -> DataFrame:
+def soft_sample(df: DataFrame) -> DataFrame:
     """Quality-weighted (soft) sampling — the DCLM/FineWeb-Edu move of
-    keeping a document with probability equal to its quality score
+    keeping a document with probability equal to its quality ``score``
     instead of thresholding: a hard cutoff throws away every borderline
     document and keeps every barely-passing one, while importance
     resampling preserves the score DISTRIBUTION (the kept corpus's
@@ -62,7 +67,7 @@ def soft_sample(df: DataFrame, weight_col: str) -> DataFrame:
     map-side projection: zero shuffle, streaming-safe. Returns the input
     + (sample_bucket, kept)."""
     w = F.least(
-        F.greatest(F.coalesce(F.col(weight_col), F.lit(0.0)), F.lit(0.0)),
+        F.greatest(F.coalesce(F.col("score"), F.lit(0.0)), F.lit(0.0)),
         F.lit(1.0),
     )
     b = sample_bucket("doc_id", "soft")
@@ -71,16 +76,16 @@ def soft_sample(df: DataFrame, weight_col: str) -> DataFrame:
     )
 
 
-def leakage_safe_split(df: DataFrame, eval_frac: float = 0.1) -> DataFrame:
+def leakage_safe_split(df: DataFrame) -> DataFrame:
     """Train/eval assignment at ``host`` granularity: every row of a host
     lands in the same split, so near-duplicate pages
     from one site can never straddle the train/eval boundary (the
     contamination vector document-level random splits leave open).
     The verdict hashes the host — a pure map-side projection, zero
     shuffle, reproducible across runs/partitionings/engines, and nested
-    the same way the sampler is (growing eval_frac only moves groups
-    train->eval, never reshuffles)."""
-    cut = int(eval_frac * SAMPLE_DENOM)
+    the same way the sampler is (growing ``LEAKAGE_EVAL_FRAC`` only moves
+    groups train->eval, never reshuffles)."""
+    cut = int(LEAKAGE_EVAL_FRAC * SAMPLE_DENOM)
     return df.withColumn(
         "split",
         F.when(sample_bucket("host", "split") < cut, F.lit("eval"))
@@ -88,13 +93,13 @@ def leakage_safe_split(df: DataFrame, eval_frac: float = 0.1) -> DataFrame:
     )
 
 
-def cap_per_group(df: DataFrame, k: int) -> DataFrame:
-    """Deterministic per-host downsampling cap: keep at most ``k`` rows
+def cap_per_group(df: DataFrame) -> DataFrame:
+    """Deterministic per-host downsampling cap: keep at most ``CAP_PER_GROUP`` rows
     per ``host`` (the over-represented-host control every crawl mix needs —
     without it one mega-host dominates whatever it touches). Which rows
     survive is a pure function of (id, salt): rows rank by the same
-    portable md5 bucket ``sample_bucket`` uses (ties by id), and rank > k
-    drops. One exchange on the group key; the per-group sort is bounded
+    portable md5 bucket ``sample_bucket`` uses (ties by id), and rank >
+    ``CAP_PER_GROUP`` drops. One exchange on the group key; the per-group sort is bounded
     by group size. Returns the input rows + (cap_rank, kept)."""
     from pyspark.sql.window import Window
 
@@ -102,5 +107,5 @@ def cap_per_group(df: DataFrame, k: int) -> DataFrame:
         sample_bucket("doc_id", "hostcap"), F.col("doc_id")
     )
     return df.withColumn("cap_rank", F.row_number().over(w)).withColumn(
-        "kept", F.col("cap_rank") <= k
+        "kept", F.col("cap_rank") <= CAP_PER_GROUP
     )

@@ -10,10 +10,10 @@ output partitioning of results per batch folder (SURVEY §2.1 K-family).
 
 Implementation: a seeded md5-derived sort key (the engine's portable hash
 family — replayable in any SQL engine) gives each document a
-pseudo-random position; shard = key mod n_shards, in-shard position =
+pseudo-random position; shard = key mod N_SHARDS, in-shard position =
 rank of key within the shard. One hash-partition exchange on shard, then
 a per-shard sort — exactly the movement the shard writer needs anyway, so
-the plan has zero wasted shuffles. At 100 TB, n_shards is thousands and
+the plan has zero wasted shuffles. At 100 TB, N_SHARDS is thousands and
 each shard sorts independently in one task (bounded by shard size, not
 corpus size)."""
 
@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 
 
 SHARD_SEED = "shard-seed-1"
+N_SHARDS = 16
 
 
 def shard_key() -> "F.Column":
@@ -35,21 +36,21 @@ def shard_key() -> "F.Column":
     return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
 
 
-def shard_assignment(df: DataFrame, n_shards: int = 16) -> DataFrame:
-    """(doc_id, shard, pos): a seeded global shuffle into ``n_shards``
+def shard_assignment(df: DataFrame) -> DataFrame:
+    """(doc_id, shard, pos): a seeded global shuffle into ``N_SHARDS``
     shards with a stable in-shard order. Ties in the 32-bit key break on
     id, so the full ordering is total and deterministic."""
     key = shard_key()
     w = Window.partitionBy("shard").orderBy("key", "doc_id")
     return (
         df.select(F.col("doc_id"), key.alias("key"))
-        .withColumn("shard", (F.col("key") % n_shards).cast("int"))
+        .withColumn("shard", (F.col("key") % N_SHARDS).cast("int"))
         .withColumn("pos", F.row_number().over(w) - 1)
         .select("doc_id", "shard", "pos")
     )
 
 
-def shard_manifest(df: DataFrame, n_shards: int = 16) -> DataFrame:
+def shard_manifest(df: DataFrame) -> DataFrame:
     """The export manifest a training-data release ships next to its
     shards: per shard the doc count, byte total, and an ORDER-SENSITIVE
     content fingerprint (md5 over the in-shard-position-ordered document
@@ -66,7 +67,7 @@ def shard_manifest(df: DataFrame, n_shards: int = 16) -> DataFrame:
     md5(string_agg(fp, '' ORDER BY pos))."""
     fp = F.md5(F.coalesce(F.col("text"), F.lit("")))
     nb = F.octet_length(F.coalesce(F.col("text"), F.lit(""))).cast("long")
-    asg = shard_assignment(df, n_shards=n_shards)
+    asg = shard_assignment(df)
     rows = asg.join(
         df.select(F.col("doc_id"), fp.alias("fp"), nb.alias("nb")), "doc_id"
     )

@@ -20,6 +20,17 @@ from pyspark.sql.window import Window
 N_PLANES = 12
 PLANE_SEED = 42
 MAX_BUCKET = 256  # embedding_neardup_pairs' hot-bucket cap
+# The settings below are read at call time.
+EMBED_DIM = 64  # embedding width (hyperplanes, SQ bounds, RP matrix, PQ)
+COSINE_TOPK = 20  # cosine_topk's hits
+NEARDUP_COSINE = 0.9  # embedding_neardup_pairs keeps pairs at or above
+N_CENTROIDS = 16  # seeded-Lloyd cells of ivf_centroids and every IVF user
+IVF_TOPK = 10  # ivf_topk's hits
+IVF_PROBES = 4  # cells ivf_topk's query probes
+SEMDEDUP_COSINE = 0.95  # semantic_dedup marks cluster-mates at or above
+CLUSTER_PICKS = 8  # cluster_balanced_sample's picks per cell
+KNN_K = 5  # knn_brute_force's hits per query
+SQ_TOPK = 10  # sq_topk's hits
 
 
 def _dot(a, b):
@@ -36,8 +47,8 @@ def cosine_col(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10) -> DataFrame:
-    """Brute-force cosine top-k against a constant query vector.
+def cosine_topk(df: DataFrame, query_vec: list[float]) -> DataFrame:
+    """Brute-force cosine top-``COSINE_TOPK`` against a constant query vector.
 
     Plan shape: scan -> project(score) -> TakeOrderedAndProject (no shuffle
     of the full table; each partition computes local top-k, driver merges).
@@ -48,29 +59,30 @@ def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10) -> DataFrame
         F.col("vec_id"),
         F.round(cosine_col(emb, q), 4).alias("cosine"),
     )
-    return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
+    return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(COSINE_TOPK)
 
 
-def hyperplanes(dim: int = 64) -> list[list[float]]:
-    """The seeded pseudo-random hyperplanes as plain Python floats — shared
-    by the Spark expression and the SQL oracle (which inlines them as
-    literals), so both engines bucket identically."""
+def hyperplanes() -> list[list[float]]:
+    """The seeded pseudo-random ``EMBED_DIM``-wide hyperplanes as plain
+    Python floats — shared by the Spark expression and the SQL oracle
+    (which inlines them as literals), so both engines bucket identically."""
     import numpy as np
 
     rng = np.random.RandomState(PLANE_SEED)
-    return [[float(x) for x in row] for row in rng.standard_normal((N_PLANES, dim))]
+    return [[float(x) for x in row]
+            for row in rng.standard_normal((N_PLANES, EMBED_DIM))]
 
 
-def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.95,
-                            dim: int = 64) -> DataFrame:
+def embedding_neardup_pairs(df: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via random-hyperplane LSH.
 
     Bucket key = integer of sign bits of <v, plane_j> for deterministic
-    seeded hyperplanes (``hyperplanes()``; ``dim`` is passed in — no driver
-    probe of the data). Candidate pairs share a bucket under 1-bit-flip
-    multiprobe (every vector probes its own bucket plus the ``N_PLANES``
-    buckets one sign-flip away, so any pair whose sign vectors differ in at
-    most one plane is found); candidates are verified with exact cosine.
+    seeded hyperplanes (``hyperplanes()``; the width is ``EMBED_DIM`` — no
+    driver probe of the data). Candidate pairs share a bucket under
+    1-bit-flip multiprobe (every vector probes its own bucket plus the
+    ``N_PLANES`` buckets one sign-flip away, so any pair whose sign vectors
+    differ in at most one plane is found); candidates are verified with
+    exact cosine at ``NEARDUP_COSINE``.
 
     Scale guards (the 100 TB shape):
     - buckets larger than ``MAX_BUCKET`` are dropped before pairing — a
@@ -80,7 +92,7 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.95,
     - the probe join carries only (id, bucket ints); vectors re-join only
       for the deduplicated candidate set.
     """
-    planes = hyperplanes(dim)
+    planes = hyperplanes()
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     bucket = sum(
         (
@@ -129,7 +141,7 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.95,
             "id_b",
             F.round(cosine_col(F.col("va"), F.col("vb")), 4).alias("cosine"),
         )
-        .where(F.col("cosine") >= threshold)
+        .where(F.col("cosine") >= NEARDUP_COSINE)
     )
 
 
@@ -147,22 +159,22 @@ def _assign_cells(corpus: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def ivf_centroids(df: DataFrame, n_centroids: int = 16) -> DataFrame:
-    """Coarse quantizer for IVF: seeded with the first ``n_centroids``
+def ivf_centroids(df: DataFrame) -> DataFrame:
+    """Coarse quantizer for IVF: seeded with the first ``N_CENTROIDS``
     corpus vectors, then refined with one fixed Lloyd iteration — assign
     every vector to its best-cosine cell, recompute each cell's centroid as
     the element-wise mean. Entirely DataFrame expressions
     (posexplode -> grouped avg -> array rebuild), so the result is a pure,
     SQL-replayable function of the data (no sampling, no RNG), yet the
     cells track the data distribution instead of whatever the first
-    ``n_centroids`` rows happened to be (the degenerate-quantizer fix).
+    ``N_CENTROIDS`` rows happened to be (the degenerate-quantizer fix).
 
     Centroid components are rounded to 6 dp on both engines so sub-ulp
     summation-order differences in the distributed mean cannot flip a
     downstream argmax. Cells that attract no vectors die (standard Lloyd).
     """
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    cents = df.where(F.col("vec_id") < n_centroids).select(
+    cents = df.where(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cent_id"), emb.alias("cv")
     )
     assigned = _assign_cells(df.select(F.col("vec_id"), emb.alias("v")), cents)
@@ -176,32 +188,32 @@ def ivf_centroids(df: DataFrame, n_centroids: int = 16) -> DataFrame:
     )
 
 
-def ivf_topk(df: DataFrame, k: int = 10, n_centroids: int = 16,
-             n_probe: int = 4) -> DataFrame:
+def ivf_topk(df: DataFrame) -> DataFrame:
     """IVF-style approximate nearest neighbour: the scale path for ANN.
 
     Coarse quantizer: ``ivf_centroids`` (deterministic seeded Lloyd — a
     pure function of the data, so the oracle replays it exactly). Every
     vector is assigned to its best-cosine cell via a broadcast join +
-    ``max_by`` partial aggregation. The query (vector 0) probes its ``n_probe``
-    nearest cells and re-ranks exactly within them — at 100 TB only
-    ~n_probe/n_centroids of the corpus is scored against the query instead
-    of all of it.
+    ``max_by`` partial aggregation. The query (vector 0) probes its
+    ``IVF_PROBES`` nearest cells and re-ranks exactly within them — at
+    100 TB only ~IVF_PROBES/N_CENTROIDS of the corpus is scored against the
+    query instead of all of it.
 
-    Output: (vec_id, cosine, rank) — top-``k`` within the probed cells.
+    Output: (vec_id, cosine, rank) — top-``IVF_TOPK`` within the probed
+    cells.
     """
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    cents = ivf_centroids(df, n_centroids)
+    cents = ivf_centroids(df)
     qv = df.where(F.col("vec_id") == 0).select(emb.alias("qv"))
 
     assigned = _assign_cells(df.select(F.col("vec_id"), emb.alias("v")), cents)
 
-    # probe selection: the query's n_probe nearest cells (16-row job)
+    # probe selection: the query's IVF_PROBES nearest cells (16-row job)
     probes = (
         cents.join(F.broadcast(qv))
         .select("cent_id", cosine_col(F.col("cv"), F.col("qv")).alias("qcos"))
         .orderBy(F.desc("qcos"), F.asc("cent_id"))
-        .limit(n_probe)
+        .limit(IVF_PROBES)
         .select("cent_id")
     )
 
@@ -212,7 +224,7 @@ def ivf_topk(df: DataFrame, k: int = 10, n_centroids: int = 16,
             F.col("vec_id"), F.round(cosine_col(F.col("v"), F.col("qv")), 4).alias("cosine")
         )
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
+        .limit(IVF_TOPK)
     )
     w = Window.orderBy(F.desc("cosine"), F.asc("vec_id"))  # k rows: trivial window
     return top.withColumn("rank", F.row_number().over(w))
@@ -221,21 +233,20 @@ def ivf_topk(df: DataFrame, k: int = 10, n_centroids: int = 16,
 MAX_CLUSTER = 1024  # semantic_dedup's hot-cluster cap
 
 
-def semantic_dedup(df: DataFrame, threshold: float = 0.95,
-                   n_centroids: int = 16) -> DataFrame:
+def semantic_dedup(df: DataFrame) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster embeddings with the deterministic seeded-Lloyd
     quantizer (:func:`ivf_centroids` — pure function of the data, so the
     DuckDB twin replays it exactly), then compare pairs ONLY within a
     cluster and mark every vector that has a lower-id cluster-mate with
-    cosine >= ``threshold`` as a duplicate of its lowest such mate
+    cosine >= ``SEMDEDUP_COSINE`` as a duplicate of its lowest such mate
     ("keep first" — deterministic, order-free).
 
     Output: one row per input vector (never-drop contract) —
     (vec_id, cent_id, is_dup, dup_of) with dup_of NULL for keepers.
 
     Scale shape: the quadratic step is per-cluster, so cost is
-    sum(c_i^2) — production sizes ``n_centroids ~ N / target_cluster`` so
+    sum(c_i^2) — production sizes ``N_CENTROIDS ~ N / target_cluster`` so
     clusters stay small (the paper runs 50k clusters for LAION-440M);
     clusters larger than ``MAX_CLUSTER`` are excluded from pairing (their
     members all come back as keepers) — the same disclosed hot-bucket cap
@@ -244,7 +255,7 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.95,
     (cent_id, id, vector) once; centroids move only by broadcast.
     """
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    cents = ivf_centroids(df, n_centroids)
+    cents = ivf_centroids(df)
     assigned = _assign_cells(df.select(F.col("vec_id"), emb.alias("v")), cents)
 
     ok = (
@@ -263,7 +274,7 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.95,
     dup_of = (
         a.join(b, "cent_id")
         .where(F.col("id_a") < F.col("id_b"))
-        .where(F.round(cosine_col(F.col("va"), F.col("vb")), 4) >= threshold)
+        .where(F.round(cosine_col(F.col("va"), F.col("vb")), 4) >= SEMDEDUP_COSINE)
         .groupBy("id_b")
         .agg(F.min("id_a").alias("dup_of"))
     )
@@ -308,13 +319,12 @@ def ivf_assign(df: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def cluster_balanced_sample(df: DataFrame, per_cluster: int = 8,
-                            n_centroids: int = 16) -> DataFrame:
+def cluster_balanced_sample(df: DataFrame) -> DataFrame:
     """Cluster-balanced corpus selection (the DCLM/DataComp curation shape:
     embed -> cluster -> sample per cluster so no dense region of embedding
     space dominates the training mix): assign every vector to its
     seeded-Lloyd cell (:func:`ivf_centroids` — a pure, SQL-replayable
-    function of the data), then keep at most ``per_cluster`` vectors per
+    function of the data), then keep at most ``CLUSTER_PICKS`` vectors per
     cell, chosen by a deterministic md5-uniform key so the draw is
     reproducible and engine-independent.
 
@@ -325,7 +335,7 @@ def cluster_balanced_sample(df: DataFrame, per_cluster: int = 8,
     Scale shape: clustering is the broadcast-centroid + ``max_by``
     assignment every IVF path here uses (one corpus shuffle); the
     per-cluster rank is a window partitioned by cent_id — production
-    sizes ``n_centroids ~ N / target_cluster`` (the SemDeDup deployment
+    sizes ``N_CENTROIDS ~ N / target_cluster`` (the SemDeDup deployment
     argument, arXiv:2303.09540 §3), so per-partition state is the bounded
     cluster size, never the corpus. The pick key is data-independent
     (pure function of the id), so sampling stays stable under re-runs
@@ -335,7 +345,7 @@ def cluster_balanced_sample(df: DataFrame, per_cluster: int = 8,
     candidate regions per layout class (one_key_process.py:1146-1165) —
     here the "layout class" is a learned embedding cell."""
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    cents = ivf_centroids(df, n_centroids)
+    cents = ivf_centroids(df)
     assigned = _assign_cells(df.select(F.col("vec_id"), emb.alias("v")), cents)
     key = F.pmod(
         F.conv(
@@ -351,13 +361,13 @@ def cluster_balanced_sample(df: DataFrame, per_cluster: int = 8,
     return (
         assigned.select("vec_id", "cent_id", key.alias("pick_key"))
         .withColumn("pick_rank", F.row_number().over(w).cast("long"))
-        .withColumn("picked", F.col("pick_rank") <= per_cluster)
+        .withColumn("picked", F.col("pick_rank") <= CLUSTER_PICKS)
     )
 
 
-def knn_brute_force(df: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
-    """Batch k-NN: broadcast the (small) query set, cross-score, window top-k
-    per query. The canonical 'scoring a probe set against the corpus' shape."""
+def knn_brute_force(df: DataFrame, queries: DataFrame) -> DataFrame:
+    """Batch k-NN: broadcast the (small) query set, cross-score, window
+    top-``KNN_K`` per query. The canonical 'scoring a probe set against the corpus' shape."""
     from pyspark.sql.window import Window
 
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -370,18 +380,20 @@ def knn_brute_force(df: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= KNN_K)
         .select("q_id", "vec_id", "cosine", "rank")
     )
 
 
-def sq_bounds(df: DataFrame, dim: int = 64) -> tuple[list[float], list[float]]:
-    """Per-dimension (min, scale) for int8 scalar quantization, computed in
+def sq_bounds(df: DataFrame) -> tuple[list[float], list[float]]:
+    """Per-dimension (min, scale) of the ``EMBED_DIM`` dimensions for int8
+    scalar quantization, computed in
     ONE pass as 2*dim agg expressions (partial aggregation map-side — no
     explode, no per-dim shuffle; the result is a single driver row of
     2*dim doubles, bounded by the embedding width, like the centroid
     collect in ``ivf_centroids``). ``scale = (max-min)/255`` per dim; a
     constant dimension gets scale 0 and quantizes to code 0."""
+    dim = EMBED_DIM
     row = df.agg(
         *[F.min(F.col("embedding")[i].cast("double")).alias(f"mn{i}") for i in range(dim)],
         *[F.max(F.col("embedding")[i].cast("double")).alias(f"mx{i}") for i in range(dim)],
@@ -436,18 +448,18 @@ def sq_scores(df: DataFrame, query_vec: list[float],
     )
 
 
-def sq_topk(df: DataFrame, query_vec: list[float], k: int = 10, dim: int = 64) -> DataFrame:
-    """Int8 scalar-quantized top-k with exact-rescore disclosure: rank by
+def sq_topk(df: DataFrame, query_vec: list[float]) -> DataFrame:
+    """Int8 scalar-quantized top-``SQ_TOPK`` with exact-rescore disclosure: rank by
     the quantized score (TakeOrderedAndProject — partition-local top-k,
     driver merge, no full-table shuffle), then join the k winners back to
     exact cosine so the output carries the quantization error per hit.
     Two passes over the corpus (bounds, then score) — both full scans with
     map-side-only work, the shape that survives 1000 executors."""
-    mins, scales = sq_bounds(df, dim=dim)
+    mins, scales = sq_bounds(df)
     approx = (
         sq_scores(df, query_vec, mins, scales)
         .orderBy(F.desc("score_sq"), F.asc("vec_id"))
-        .limit(k)
+        .limit(SQ_TOPK)
     )
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -478,7 +490,7 @@ def rp_matrix() -> list[list[float]]:
     rng = np.random.RandomState(RP_SEED)
     return [
         [1.0 if x >= 0 else -1.0 for x in row]
-        for row in rng.standard_normal((RP_K, 64))
+        for row in rng.standard_normal((RP_K, EMBED_DIM))
     ]
 
 
@@ -529,7 +541,7 @@ def _sq_l2(a, b):
 def _pq_subvectors(df: DataFrame) -> DataFrame:
     """(vec_id, sub, sv): each embedding split into ``PQ_M`` contiguous
     subvectors — one generate projection, no shuffle."""
-    sub_dim = 64 // PQ_M
+    sub_dim = EMBED_DIM // PQ_M
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     parts = F.array(*[
         F.struct(

@@ -135,28 +135,28 @@ DD_SUBS = 8          # linear sub-buckets per power-of-two octave
 DD_EXACT_MAX = 15    # values 0..15 are their own exact buckets (ids 0..15)
 
 
-def _dd_bucket_sql(v: str) -> str:
-    """Bucket id of nonnegative integer expression ``v`` (engine-neutral
-    integer arithmetic; the DuckDB twin swaps `div` for `//`)."""
-    base = f"shiftleft(CAST(1 AS BIGINT), length(bin({v})) - 1)"
-    return (
-        f"CASE WHEN {v} <= {DD_EXACT_MAX} THEN CAST({v} AS BIGINT) "
-        f"ELSE CAST({DD_EXACT_MAX + 1} + (length(bin({v})) - 5) * {DD_SUBS} "
-        f"+ (({v} - {base}) * {DD_SUBS}) div {base} AS BIGINT) END"
-    )
+# bucket id of the nonnegative integer column n_chars (engine-neutral
+# integer arithmetic; the DuckDB twin swaps `div` for `//`)
+_DD_BASE_SQL = "shiftleft(CAST(1 AS BIGINT), length(bin(n_chars)) - 1)"
+_DD_BUCKET_SQL = (
+    f"CASE WHEN n_chars <= {DD_EXACT_MAX} THEN CAST(n_chars AS BIGINT) "
+    f"ELSE CAST({DD_EXACT_MAX + 1} + (length(bin(n_chars)) - 5) * {DD_SUBS} "
+    f"+ ((n_chars - {_DD_BASE_SQL}) * {DD_SUBS}) div {_DD_BASE_SQL} AS BIGINT) END"
+)
 
 
-def dd_buckets(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
-    """(grp, bucket, cnt) histogram state — the mergeable sketch.
+def dd_buckets(df: DataFrame, group_col: str) -> DataFrame:
+    """(grp, bucket, cnt) histogram state of ``n_chars`` — the mergeable
+    sketch.
 
     One projection + one partial-agg groupBy; merge = union + re-sum.
     NULL/negative values are out of the sketch's domain and are dropped
     here (callers tracking them keep their own count column)."""
     return (
-        df.where(F.col(value_col).isNotNull() & (F.col(value_col) >= 0))
+        df.where(F.col("n_chars").isNotNull() & (F.col("n_chars") >= 0))
         .select(
             F.col(group_col).alias("grp"),
-            F.expr(_dd_bucket_sql(value_col)).alias("bucket"),
+            F.expr(_DD_BUCKET_SQL).alias("bucket"),
         )
         .groupBy("grp", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -209,25 +209,25 @@ def dd_quantiles(regs: DataFrame) -> DataFrame:
     )
 
 
-def dd_sketch_quantiles(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
-    """One-shot: histogram + quantile estimates in a single plan."""
-    return dd_quantiles(dd_buckets(df, group_col, value_col))
+def dd_sketch_quantiles(df: DataFrame, group_col: str) -> DataFrame:
+    """One-shot: histogram + quantile estimates of ``n_chars`` in a single
+    plan."""
+    return dd_quantiles(dd_buckets(df, group_col))
 
 
-def hll_accuracy(
-    df: DataFrame, group_col: str, key_col: str
-) -> DataFrame:
-    """Estimate vs exact per group — the self-audit query shape.
+def hll_accuracy(df: DataFrame) -> DataFrame:
+    """Estimate vs exact distinct ``text`` per ``lang`` — the self-audit
+    query shape.
 
     The exact side is the expensive path (full distinct shuffle); running
     both on a SAMPLE slice is how production validates the sketch before
     trusting it corpus-wide. rel_err is rounded to 4dp from two exact
     longs (deterministic).
     """
-    est = hll_distinct(df, group_col, key_col)
+    est = hll_distinct(df, "lang", "text")
     exact = (
-        df.groupBy(F.col(group_col).alias("grp"))
-        .agg(F.countDistinct(key_col).alias("exact_distinct"))
+        df.groupBy(F.col("lang").alias("grp"))
+        .agg(F.countDistinct("text").alias("exact_distinct"))
     )
     joined = est.join(exact, "grp")
     return joined.select(

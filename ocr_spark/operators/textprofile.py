@@ -154,9 +154,13 @@ def code_detect(df: DataFrame) -> DataFrame:
     )
 
 
-def vocab_growth(df: DataFrame, checkpoints: list[int] | None = None) -> DataFrame:
+# vocab_growth's prefix sizes (read at call time), shared with the DuckDB twin
+VOCAB_CHECKPOINTS = [16, 64, 256, 1024, 4096]
+
+
+def vocab_growth(df: DataFrame) -> DataFrame:
     """Vocabulary growth curve (Heaps'-law checkpoints): for each
-    checkpoint prefix of the corpus in ``doc_id`` order, the cumulative
+    ``VOCAB_CHECKPOINTS`` prefix of the corpus in ``doc_id`` order, the cumulative
     token count and distinct-type count, plus the type/token ratio.
     Columns: n_docs, n_tokens, vocab_size, type_token_ratio (4 dp).
 
@@ -178,8 +182,6 @@ def vocab_growth(df: DataFrame, checkpoints: list[int] | None = None) -> DataFra
     those bounded histograms with map-side conditional sums. Nothing
     ever sorts globally; the widest shuffle key is a token.
     """
-    if checkpoints is None:
-        checkpoints = [1 << k for k in range(4, 20)]
     toks = df.select(
         F.col("doc_id").alias("doc"),
         F.explode(
@@ -201,7 +203,7 @@ def vocab_growth(df: DataFrame, checkpoints: list[int] | None = None) -> DataFra
         .agg(F.count(F.lit(1)).alias("n_new"))
     )
     cps = df.sparkSession.createDataFrame(
-        [(int(c),) for c in sorted(set(checkpoints))], "n_docs long"
+        [(int(c),) for c in sorted(set(VOCAB_CHECKPOINTS))], "n_docs long"
     )
     vocab = (
         F.broadcast(cps)

@@ -29,8 +29,11 @@ from pyspark.sql.window import Window
 from ..functions.text import TOKEN_PATTERN
 
 
-def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
-    """(doc_id, term, tfidf, rank): top-``k`` terms per document."""
+TFIDF_TOP_TERMS = 3  # terms tfidf_top_terms keeps per document
+
+
+def tfidf_top_terms(df: DataFrame) -> DataFrame:
+    """(doc_id, term, tfidf, rank): top-``TFIDF_TOP_TERMS`` terms per document."""
     n_docs = df.count()  # single aggregate probe; the only driver scalar
     toks = df.select(
         F.col("doc_id"),
@@ -47,7 +50,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TFIDF_TOP_TERMS)
         .select("doc_id", "term", "tfidf", "rank")
     )
 

@@ -84,7 +84,7 @@ def _metrics(spark: SparkSession, out_table: IcebergLiteTable, snaps: list[dict]
 
 
 def run_extract(spark: SparkSession, pages: DataFrame, table_root: str, run_id: str,
-                chunks: int = 4, num_partitions: int | None = None,
+                chunks: int, num_partitions: int | None = None,
                 resume: bool = True) -> ExtractResult:
     """Run (or resume) the extraction batch over ``pages``.
 

@@ -25,31 +25,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def url_host(col="url"):
-    """Extract the host from a url column (JVM-side, codegen-friendly)."""
-    return F.parse_url(F.col(col) if isinstance(col, str) else col, F.lit("HOST"))
-
-
 SALT_BUCKETS = 16  # salt values per host: the most partitions one host spans
 NUM_BUCKETS = 16  # write_bucketed's bucket files per partition
+BUCKET_COLS = ("band", "bucket")  # write_bucketed's key: the LSH band join
 
 
 def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Repartition by salt-hashed url host (deterministic skew-breaker)."""
+    """Repartition by salt-hashed url host (deterministic skew-breaker; the
+    host is ``parse_url``'s, JVM-side and codegen-friendly)."""
     salt = F.pmod(F.xxhash64(F.col("url")), F.lit(SALT_BUCKETS))
-    key = F.xxhash64(url_host("url"), salt)
+    key = F.xxhash64(F.parse_url(F.col("url"), F.lit("HOST")), salt)
     return df.repartition(num_partitions, key)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    path: str,
-    bucket_cols: list[str],
-) -> None:
+def write_bucketed(df: DataFrame, table_name: str, path: str) -> None:
     """Persist ``df`` as a BUCKETED parquet table (external, at ``path``):
     rows are hash-clustered into ``NUM_BUCKETS`` files per partition by
-    ``bucket_cols`` and optionally sorted within each bucket.
+    ``BUCKET_COLS`` and sorted by them within each bucket.
 
     Why at 100 TB: two tables bucketed the same way on the same key join
     with ZERO exchange — Spark's bucketing metadata proves co-location, so
@@ -69,7 +61,7 @@ def write_bucketed(
     ``spark.sql.sources.bucketing.enabled`` (default true).
     """
     writer = df.write.format("parquet").option("path", path)
-    writer = writer.bucketBy(NUM_BUCKETS, *bucket_cols)
-    writer.sortBy(*bucket_cols).mode(
+    writer = writer.bucketBy(NUM_BUCKETS, *BUCKET_COLS)
+    writer.sortBy(*BUCKET_COLS).mode(
         "overwrite"
     ).saveAsTable(table_name)

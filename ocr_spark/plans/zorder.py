@@ -106,7 +106,7 @@ def write_zordered(
     df: DataFrame,
     table_root: str,
     cols: list[str],
-    n_buckets: int = 16,
+    n_buckets: int,
 ) -> IcebergLiteTable:
     """Write ``df`` z-order-clustered into ``n_buckets`` prunable entries.
 

@@ -50,13 +50,11 @@ def apply_engine_conf(spark: SparkSession) -> SparkSession:
 
 
 def get_spark(
-    master: str | None = None,
-    app_name: str = "ocr-spark",
+    master: str,
+    app_name: str,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    if master is None:
-        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     if shuffle_partitions is None:
         # two per core this process may run on
         shuffle_partitions = len(os.sched_getaffinity(0)) * 2

@@ -78,9 +78,12 @@ def parse_cdxj(lines: DataFrame) -> DataFrame:
     )
 
 
-def fetch_plan(captures: DataFrame, batch_size: int = 1000) -> DataFrame:
+FETCH_BATCH_SIZE = 4  # records per fetch_plan batch
+
+
+def fetch_plan(captures: DataFrame) -> DataFrame:
     """Captures -> one row per (warc_path, batch): records ordered by
-    offset within each WARC file and cut into ``batch_size`` batches
+    offset within each WARC file and cut into ``FETCH_BATCH_SIZE``-record batches
     (offset order => each batch is one near-sequential range scan).
     Returns (warc_path, batch, n_records, bytes_total, min_offset,
     max_offset). Unparseable captures (NULL warc_path) form their own
@@ -90,7 +93,7 @@ def fetch_plan(captures: DataFrame, batch_size: int = 1000) -> DataFrame:
     )
     batched = captures.withColumn(
         "batch",
-        F.floor((F.row_number().over(w) - 1) / batch_size).cast("int"),
+        F.floor((F.row_number().over(w) - 1) / FETCH_BATCH_SIZE).cast("int"),
     )
     return batched.groupBy("warc_path", "batch").agg(
         F.count(F.lit(1)).alias("n_records"),

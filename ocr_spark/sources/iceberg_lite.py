@@ -29,8 +29,17 @@ reachable from it. A crash between data write and manifest rename leaves an
 orphan data dir that no reader ever sees — no partial visibility (tested by
 crash injection in tests/test_resume.py).
 
-Concurrency: single-writer per table (the batch driver), like the reference's
-sequential outer segment loop. Sequence numbers make last-writer-wins explicit.
+Concurrency: ONE writer per table (the batch driver), like the reference's
+sequential outer segment loop; nothing enforces it. A commit reads its
+parent after writing its data and publishes sequence parent + 1, so two
+writers whose commits read the same parent both publish the SAME sequence.
+Readers take the manifest whose file name sorts last, i.e. the one with
+the larger random snapshot id: the other writer's rows drop out of the
+current state and of every later snapshot without an error. Its manifest
+stays on disk until ``expire_snapshots`` drops it and deletes the data
+it alone referenced. Overlapping ``jobs.py`` runs (extract, compact,
+expire) on one table are therefore unsafe. ROADMAP direction 4
+replaces the rename with an exclusive claim of the sequence slot.
 """
 
 from __future__ import annotations
@@ -47,6 +56,7 @@ from ..session import EXTRACTED_SCHEMA
 
 
 MERGE_KEY = "doc_id"  # merge_into's row key
+MERGE_PARTITION = "lang"  # merge_into's partition column
 ORPHAN_AGE_S = 3600.0  # remove_orphans' in-flight guard
 
 
@@ -276,17 +286,6 @@ class IcebergLiteTable:
             df = df.unionByName(p, allowMissingColumns=True)
         return df
 
-    def read_at(self, spark: SparkSession, sequence: int) -> DataFrame | None:
-        """Time travel: DataFrame over the data visible at snapshot
-        ``sequence`` (Iceberg's VERSION AS OF). Snapshots are immutable —
-        an old sequence reads identically forever, regardless of appends,
-        overwrites, or compactions committed after it."""
-        for snap in self.snapshots():
-            if snap["sequence"] == sequence:
-                entries = snap["entries"]
-                return self._read_entries(spark, entries, None) if entries else None
-        raise ValueError(f"no snapshot with sequence {sequence}")
-
     def read_added(self, spark: SparkSession, snapshot_id: str) -> DataFrame | None:
         """DataFrame over only the data files that snapshot ``snapshot_id``
         itself wrote (not its parent chain); None if it wrote none. Read
@@ -307,16 +306,6 @@ class IcebergLiteTable:
         sid = snap["snapshot_id"]
         return [e for e in snap["entries"]
                 if os.path.basename(e["base"].rstrip(os.sep)) == sid]
-
-    @staticmethod
-    def is_append(snap: dict, parent: dict | None) -> bool:
-        """Append <=> every parent entry survives into ``snap``;
-        overwrite/compact/merge_into rewrite or drop parent files."""
-        if parent is None:
-            return True
-        cur = {e["dir"] for e in snap["entries"]}
-        prev = {e["dir"] for e in parent["entries"]}
-        return prev <= cur
 
     def data_bytes(self) -> int:
         """Total on-disk bytes of the current snapshot's data files —
@@ -375,13 +364,13 @@ class IcebergLiteTable:
             partition_by=part, stats_cols=stats,
         )
 
-    def merge_into(self, spark: SparkSession, source: DataFrame,
-                   partition_by: str | None = None) -> str:
+    def merge_into(self, spark: SparkSession, source: DataFrame) -> str:
         """Iceberg-style MERGE INTO with copy-on-write at FILE granularity,
         keyed on ``MERGE_KEY``: an upsert (matched target rows replaced by
         the source row, unmatched source rows inserted). ``source`` must be
         unique on the key (MERGE's standard precondition) and carry the
-        target's columns.
+        target's columns; the files it writes are partitioned by
+        ``MERGE_PARTITION``.
 
         The scale property (Iceberg's copy-on-write MERGE): only data
         files whose recorded metadata MIGHT contain a matching key are
@@ -401,7 +390,7 @@ class IcebergLiteTable:
         the old or the new snapshot, never a mix.
         """
         if not self.exists():
-            return self.append(source, partition_by=partition_by,
+            return self.append(source, partition_by=MERGE_PARTITION,
                                stats_cols=(MERGE_KEY,))
 
         # -- manifest pruning: which entries MIGHT hold a matching key? ----
@@ -438,10 +427,10 @@ class IcebergLiteTable:
             "entries_rewritten": len(candidates),
             "entries_untouched": len(untouched),
         }
-        return self._commit(result, untouched, props, partition_by, (MERGE_KEY,))
+        return self._commit(result, untouched, props, MERGE_PARTITION, (MERGE_KEY,))
 
     # -- maintenance (Iceberg's expire_snapshots / remove_orphan_files) -------
-    def expire_snapshots(self, keep_last: int = 1) -> dict:
+    def expire_snapshots(self, keep_last: int) -> dict:
         """Drop all but the newest ``keep_last`` snapshots and delete data
         dirs no surviving snapshot references (Iceberg's expire_snapshots).
         Time travel to expired sequences stops working — that is the point:

@@ -50,7 +50,7 @@ def test_fetch_plan_batches_by_offset(spark):
     rows = [
         (f'k{i} 20260203040506 {{"url": "u{i}", "length": "10", '
          f'"offset": "{1000 - i * 10}", "filename": "w1"}}')
-        for i in range(12)
+        for i in range(10)
     ]
     rows += [
         ('kx 20260203040506 {"url": "ux", "length": "7", '
@@ -59,16 +59,16 @@ def test_fetch_plan_batches_by_offset(spark):
     ]
     plan = {
         (r.warc_path, r.batch): r
-        for r in fetch_plan(parse_cdxj(_lines(spark, rows)), batch_size=5)
-        .collect()
+        for r in fetch_plan(parse_cdxj(_lines(spark, rows))).collect()
     }
-    assert plan[("w1", 0)].n_records == 5
-    assert plan[("w1", 1)].n_records == 5
+    # FETCH_BATCH_SIZE = 4: the 10 w1 records cut into 4 + 4 + 2
+    assert plan[("w1", 0)].n_records == 4
+    assert plan[("w1", 1)].n_records == 4
     assert plan[("w1", 2)].n_records == 2
-    # offset-ordered: batch 0 holds the five SMALLEST offsets
+    # offset-ordered: batch 0 holds the four SMALLEST offsets
     assert plan[("w1", 0)].max_offset < plan[("w1", 1)].min_offset
     assert plan[("w1", 1)].max_offset < plan[("w1", 2)].min_offset
-    assert plan[("w1", 0)].bytes_total == 50
+    assert plan[("w1", 0)].bytes_total == 40
     assert plan[("w2", 0)].n_records == 1
     audit = plan[(None, 0)]
     assert audit.n_records == 1 and audit.bytes_total is None

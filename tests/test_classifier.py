@@ -33,7 +33,7 @@ def test_hand_computed_score_matches(spark):
     # replicate: feats = [aa, bb, 'aa bb']
     feats = ["aa", "bb", "aa bb"]
     probe = spark.createDataFrame([(f,) for f in feats], "feat string").select(
-        synthetic_weight(feature_bucket(F.col("feat"), 1 << 18, "qclf-1"), "qclf-1").alias("w")
+        synthetic_weight(feature_bucket(F.col("feat"), 1 << 18, "qclf-1")).alias("w")
     )
     mean_w = sum(r.w for r in probe.collect()) / len(feats)
     want = round(1.0 / (1.0 + math.exp(-(mean_w + DEFAULT_BIAS))), 4)

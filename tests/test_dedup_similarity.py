@@ -5,6 +5,7 @@ known answers)."""
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_spark.operators import dedup
 from ocr_spark.operators.dedup import (
     _distinct_tokens,
     exact_dedup_groups,
@@ -12,6 +13,7 @@ from ocr_spark.operators.dedup import (
     simhash64,
     token_jaccard_pairs,
 )
+from ocr_spark.operators import similarity
 from ocr_spark.operators.similarity import (
     cosine_topk,
     embedding_neardup_pairs,
@@ -42,8 +44,9 @@ def test_exact_dedup_groups(docs):
     assert len(big) == 1 and big.iloc[0].keep_id == 0
 
 
-def test_token_jaccard_finds_near_dup(docs):
-    pairs = token_jaccard_pairs(docs, threshold=0.7).toPandas()
+def test_token_jaccard_finds_near_dup(docs, monkeypatch):
+    monkeypatch.setattr(dedup, "TOKEN_JACCARD_THRESHOLD", 0.7)
+    pairs = token_jaccard_pairs(docs).toPandas()
     got = {(a, b) for a, b in zip(pairs.id_a, pairs.id_b)}
     # all pairs among {0,1,4} have jaccard 1.0; 2 is near (18/19 tokens)
     assert {(0, 1), (0, 4), (1, 4), (0, 2), (1, 2), (2, 4)} == got
@@ -68,6 +71,12 @@ def test_simhash_similarity_structure(docs):
     assert hamming(sh[0], sh[3]) > hamming(sh[0], sh[2])  # unrelated: farther
 
 
+@pytest.fixture
+def dim4(monkeypatch):
+    """The crafted vectors below are 4-wide."""
+    monkeypatch.setattr(similarity, "EMBED_DIM", 4)
+
+
 @pytest.fixture(scope="module")
 def vecs(spark):
     rows = [
@@ -81,33 +90,33 @@ def vecs(spark):
 
 
 def test_cosine_topk_order(vecs):
-    top = cosine_topk(vecs, [1.0, 0.0, 0.0, 0.0], k=3).toPandas()
-    assert list(top.vec_id) == [0, 1, 4]
+    top = cosine_topk(vecs, [1.0, 0.0, 0.0, 0.0]).toPandas()
+    assert list(top.vec_id) == [0, 1, 4, 2, 3]
     assert top.cosine.iloc[0] == 1.0 and abs(top.cosine.iloc[2] - 0.7071) < 1e-4
 
 
-def test_embedding_neardup_lsh(vecs):
-    pairs = embedding_neardup_pairs(vecs, threshold=0.95, dim=4).toPandas()
+def test_embedding_neardup_lsh(vecs, dim4):
+    pairs = embedding_neardup_pairs(vecs).toPandas()
     got = {(a, b) for a, b in zip(pairs.id_a, pairs.id_b)}
     assert (0, 1) in got            # near-identical vectors share every bucket
-    assert all(c >= 0.95 for c in pairs.cosine)
+    assert all(c >= similarity.NEARDUP_COSINE for c in pairs.cosine)
 
 
-def test_embedding_neardup_hot_bucket_capped(spark):
+def test_embedding_neardup_hot_bucket_capped(spark, dim4):
     """A boilerplate-identical embedding cluster larger than MAX_BUCKET must
     be dropped before pairing (no quadratic bucket), while distinct near-dup
     pairs in other buckets are still found."""
     flood = [(i, [1.0, 1.0, 1.0, 1.0]) for i in range(600)]
     pair = [(1000, [-1.0, 0.5, -0.5, 0.25]), (1001, [-1.02, 0.51, -0.51, 0.255])]
     df = spark.createDataFrame(flood + pair, "vec_id long, embedding array<float>")
-    pairs = embedding_neardup_pairs(df, threshold=0.95, dim=4).toPandas()
+    pairs = embedding_neardup_pairs(df).toPandas()
     got = {(a, b) for a, b in zip(pairs.id_a, pairs.id_b)}
     assert (1000, 1001) in got
     # every flood pair lives in the dropped hot bucket
     assert not any(a < 600 and b < 600 for a, b in got)
 
 
-def test_embedding_neardup_multiprobe_superset(spark):
+def test_embedding_neardup_multiprobe_superset(spark, dim4):
     """1-bit multiprobe finds every same-bucket pair over the threshold and
     also the pairs whose sign vectors differ in exactly one plane."""
     import math
@@ -116,7 +125,7 @@ def test_embedding_neardup_multiprobe_superset(spark):
 
     from ocr_spark.operators.similarity import hyperplanes
 
-    planes = hyperplanes(4)
+    planes = hyperplanes()
 
     def dot(a, b):
         return sum(x * y for x, y in zip(a, b))
@@ -128,7 +137,7 @@ def test_embedding_neardup_multiprobe_superset(spark):
     rows = [(i, [rnd.uniform(-1, 1) for _ in range(4)]) for i in range(80)]
     rows += [(1000 + i, [x * 1.02 for x in rows[i][1]]) for i in range(10)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    pairs = embedding_neardup_pairs(df, threshold=0.9, dim=4).toPandas()
+    pairs = embedding_neardup_pairs(df).toPandas()   # NEARDUP_COSINE = 0.9
     got = {(a, b) for a, b in zip(pairs.id_a, pairs.id_b)}
 
     same, one_flip = set(), set()
@@ -145,7 +154,7 @@ def test_embedding_neardup_multiprobe_superset(spark):
     assert same | one_flip <= got
 
 
-def test_simhash_pairs_crafted_truth(spark):
+def test_simhash_pairs_crafted_truth(spark, monkeypatch):
     from ocr_spark.operators.dedup import simhash_pairs
 
     rows = [
@@ -160,25 +169,27 @@ def test_simhash_pairs_crafted_truth(spark):
     # flips 5 bits here (deterministic under the md5 family), so verify with
     # a wider budget — the <= bands-1 pigeonhole guarantee is about recall,
     # not precision
-    pairs = simhash_pairs(df, max_hamming=8).toPandas()
+    monkeypatch.setattr(dedup, "SIMHASH_MAX_HAMMING", 8)
+    pairs = simhash_pairs(df).toPandas()
     got = {(a, b): h for a, b, h in zip(pairs.id_a, pairs.id_b, pairs.hamming)}
     assert got[(0, 1)] == 0
     assert (0, 2) in got and got[(0, 2)] == 5
     assert not any(3 in p for p in got)
 
 
-def test_knn_brute_force(spark, vecs):
+def test_knn_brute_force(spark, vecs, monkeypatch):
     queries = spark.createDataFrame(
         [(100, [1.0, 0.0, 0.0, 0.0]), (200, [0.0, 1.0, 0.0, 0.0])],
         "q_id long, q_vec array<float>",
     )
-    out = knn_brute_force(vecs, queries, k=2).toPandas()
+    monkeypatch.setattr(similarity, "KNN_K", 2)
+    out = knn_brute_force(vecs, queries).toPandas()
     by_q = {q: list(g.sort_values("rank").vec_id) for q, g in out.groupby("q_id")}
     assert by_q[100] == [0, 1]
     assert by_q[200] == [2, 4]
 
 
-def test_ivf_topk_probes_subset(spark):
+def test_ivf_topk_probes_subset(spark, monkeypatch):
     """IVF with all cells probed == brute force; with 1 probe it returns
     only the query's own cell (deterministic assignment, ties to low id)."""
     from ocr_spark.operators.similarity import ivf_topk
@@ -186,15 +197,20 @@ def test_ivf_topk_probes_subset(spark):
     rows = [(i, [float(i == j or (i % 4 == j)) for j in range(4)]) for i in range(12)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    full = ivf_topk(df, k=5, n_centroids=4, n_probe=4).toPandas()
-    brute = cosine_topk(df, [1.0, 0.0, 0.0, 0.0], k=5).toPandas()
+    for name, value in (("N_CENTROIDS", 4), ("IVF_PROBES", 4), ("IVF_TOPK", 5),
+                        ("COSINE_TOPK", 5)):
+        monkeypatch.setattr(similarity, name, value)
+    full = ivf_topk(df).toPandas()
+    brute = cosine_topk(df, [1.0, 0.0, 0.0, 0.0]).toPandas()
     assert list(full.vec_id) == list(brute.vec_id)
     assert list(full["rank"]) == [1, 2, 3, 4, 5]
 
-    one = ivf_topk(df, k=12, n_centroids=4, n_probe=1).toPandas()
+    monkeypatch.setattr(similarity, "IVF_TOPK", 12)
+    every = ivf_topk(df).toPandas()
+    monkeypatch.setattr(similarity, "IVF_PROBES", 1)
+    one = ivf_topk(df).toPandas()
     # probing one cell returns a subset of the full ranking
-    assert set(one.vec_id) <= set(ivf_topk(df, k=12, n_centroids=4, n_probe=4)
-                                  .toPandas().vec_id)
+    assert set(one.vec_id) <= set(every.vec_id)
     assert len(one) < 12
 
 
@@ -217,7 +233,7 @@ def test_ivf_refinement_tracks_the_data(spark):
     def toward_b(vectors):
         return max(v[1] / sum(x * x for x in v) ** 0.5 for v in vectors)
 
-    cents = [r.cv for r in ivf_centroids(df, n_centroids=16).collect()]
+    cents = [r.cv for r in ivf_centroids(df).collect()]   # N_CENTROIDS = 16
     assert toward_b(v for _, v in rows[:16]) < 0.2
     assert toward_b(cents) > 0.9
 
@@ -309,7 +325,14 @@ def test_line_dedup_crlf_documents(spark):
     assert out[99]["text"] == "body 99"      # LF doc shares the hot lines
 
 
-def test_semantic_dedup_flags_planted_copies(spark):
+@pytest.fixture
+def semdedup4(monkeypatch):
+    """Four cells and a 0.99 cosine for the crafted 4-wide corpora."""
+    monkeypatch.setattr(similarity, "N_CENTROIDS", 4)
+    monkeypatch.setattr(similarity, "SEMDEDUP_COSINE", 0.99)
+
+
+def test_semantic_dedup_flags_planted_copies(spark, semdedup4):
     """SemDeDup: scaled copies land in their original's cluster and come
     back is_dup with dup_of = the lowest matching cluster-mate; distinct
     vectors survive as keepers. One row per input (never-drop)."""
@@ -326,7 +349,7 @@ def test_semantic_dedup_flags_planted_copies(spark):
     df = spark.createDataFrame(
         base + copies, "vec_id long, embedding array<float>"
     )
-    out = semantic_dedup(df, threshold=0.99, n_centroids=4).toPandas()
+    out = semantic_dedup(df).toPandas()
     assert len(out) == len(base) + len(copies)
     verdicts = {r.vec_id: (r.is_dup, r.dup_of) for r in out.itertuples()}
     assert verdicts[100] == (True, 0)
@@ -334,7 +357,7 @@ def test_semantic_dedup_flags_planted_copies(spark):
     assert not verdicts[2][0] and not verdicts[3][0] and not verdicts[4][0]
 
 
-def test_semantic_dedup_oversized_cluster_capped(spark):
+def test_semantic_dedup_oversized_cluster_capped(spark, semdedup4):
     """Clusters beyond MAX_CLUSTER are excluded from pairing (disclosed
     cap): their members all come back keepers instead of exploding into a
     quadratic within-cluster join."""
@@ -352,7 +375,7 @@ def test_semantic_dedup_oversized_cluster_capped(spark):
     df = spark.createDataFrame(
         seeds + flood + pair, "vec_id long, embedding array<float>"
     )
-    out = semantic_dedup(df, threshold=0.99, n_centroids=4).toPandas()
+    out = semantic_dedup(df).toPandas()
     verdicts = {r.vec_id: (r.is_dup, r.dup_of) for r in out.itertuples()}
     assert verdicts[5000] == (True, 1)        # small cluster still paired
     # capped cluster (seed 0 + MAX_CLUSTER identical floods): all keepers
@@ -419,7 +442,7 @@ def test_latest_capture_keeps_newest_per_canonical_url(spark):
     assert plan.count("Exchange") == 1
 
 
-def test_cluster_balanced_sample_caps_per_cell(spark):
+def test_cluster_balanced_sample_caps_per_cell(spark, monkeypatch):
     """Two well-separated embedding families; per_cluster=3 must keep
     exactly 3 per cell, every vector comes back, and the draw is a pure
     function of the ids (re-run identical)."""
@@ -430,7 +453,9 @@ def test_cluster_balanced_sample_caps_per_cell(spark):
     rows += [(12 + i, [0.01 * i, 1.0]) for i in range(10)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    out = cluster_balanced_sample(df, per_cluster=3, n_centroids=2)
+    monkeypatch.setattr(similarity, "CLUSTER_PICKS", 3)
+    monkeypatch.setattr(similarity, "N_CENTROIDS", 2)
+    out = cluster_balanced_sample(df)
     got = out.collect()
     assert len(got) == 22                      # never-drop
     by_cell: dict[int, list] = {}
@@ -448,11 +473,11 @@ def test_cluster_balanced_sample_caps_per_cell(spark):
                 assert (r.pick_key, r.vec_id) > cutoff
 
     again = {r.vec_id: r.picked for r in
-             cluster_balanced_sample(df, per_cluster=3, n_centroids=2).collect()}
+             cluster_balanced_sample(df).collect()}
     assert again == {r.vec_id: r.picked for r in got}
 
 
-def test_ivf_assign_frozen_centroids_and_persistence(spark, tmp_path):
+def test_ivf_assign_frozen_centroids_and_persistence(spark, tmp_path, monkeypatch):
     """Incremental ANN maintenance: new vectors assign to the committed
     corpus's frozen centroids; persisting the centroid table through
     iceberg-lite and reading it back yields the identical assignment
@@ -469,7 +494,8 @@ def test_ivf_assign_frozen_centroids_and_persistence(spark, tmp_path):
         [(100, [1.0, 0.05]), (101, [0.03, 1.0]), (102, [0.7, 0.7])],
         "vec_id long, embedding array<double>",
     )
-    cents = ivf_centroids(committed, n_centroids=2)
+    monkeypatch.setattr(similarity, "N_CENTROIDS", 2)
+    cents = ivf_centroids(committed)
 
     direct = {r.vec_id: r for r in ivf_assign(newb, cents).collect()}
     assert direct[100].cent_id == 0 and direct[101].cent_id == 1
@@ -485,7 +511,7 @@ def test_ivf_assign_frozen_centroids_and_persistence(spark, tmp_path):
         {k: (v.cent_id, v.cosine) for k, v in again.items()}
 
 
-def test_paragraph_dedup_canonical_identity(spark):
+def test_paragraph_dedup_canonical_identity(spark, monkeypatch):
     """Reflowed whitespace/case variants of the same paragraph share one
     identity; hot paragraphs vanish everywhere; rare ones and blanks
     survive; NULL text comes back."""
@@ -499,7 +525,8 @@ def test_paragraph_dedup_canonical_identity(spark):
     ]
     rows += [(10, "unique body ten\n\nrare paragraph here"), (11, None)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in paragraph_dedup(df, max_df=3).collect()}
+    monkeypatch.setattr(dedup, "PARA_MAX_DF", 3)
+    out = {r.doc_id: r for r in paragraph_dedup(df).collect()}
     assert len(out) == 8
     for i in range(6):                      # footer df=6 > 3: dropped
         assert out[i].text == f"unique body {i}" and out[i].n_dropped == 1
@@ -517,18 +544,17 @@ def test_common_ngrams_profile(spark):
     rows = [(i, f"doc {i} prefix {shared}") for i in range(5)]
     rows += [(10, "another page entirely different words here now")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = common_ngrams(df, k=3).collect()
+    out = common_ngrams(df).collect()
     assert out[0].df_docs == 5 and out[0].example == shared
     assert out[0].df_docs >= out[1].df_docs >= out[2].df_docs
 
 
-def token_jaccard_pairs_naive(df, text_col="text", id_col="doc_id",
-                              threshold=0.5):
+def token_jaccard_pairs_naive(df, threshold):
     """The quadratic join-on-every-shared-token formulation: the
     equivalence oracle for ``token_jaccard_pairs``' prefix filter. One
     common token shared by k docs emits k^2/2 join rows, which is why
     the engine does not use it."""
-    toks = _distinct_tokens(df, text_col, id_col)
+    toks = _distinct_tokens(df)
     sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("n_tok"))
     a = toks.alias("a")
     b = toks.alias("b")
@@ -555,7 +581,7 @@ def token_jaccard_pairs_naive(df, text_col="text", id_col="doc_id",
     )
 
 
-def test_token_jaccard_prefix_filter_equals_naive(spark):
+def test_token_jaccard_prefix_filter_equals_naive(spark, monkeypatch):
     """The AllPairs prefix-filtered plan returns EXACTLY the naive
     quadratic join's rows, across thresholds and adversarial shapes:
     ubiquitous stopwords (the blowup driver), docs whose overlap lives
@@ -575,8 +601,9 @@ def test_token_jaccard_prefix_filter_equals_naive(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     for t in (0.3, 0.5, 0.8, 1.0):
+        monkeypatch.setattr(dedup, "TOKEN_JACCARD_THRESHOLD", t)
         fast = sorted(
-            map(tuple, token_jaccard_pairs(docs, threshold=t)
+            map(tuple, token_jaccard_pairs(docs)
                 .toPandas().itertuples(index=False))
         )
         naive = sorted(
@@ -584,8 +611,9 @@ def test_token_jaccard_prefix_filter_equals_naive(spark):
                 .toPandas().itertuples(index=False))
         )
         assert fast == naive, t
-    # sanity: the interesting pairs actually appear at 0.8
-    got = {(a, b) for a, b, _ in token_jaccard_pairs(docs, threshold=0.8)
+    # sanity: the interesting pairs actually appear at the shipped 0.8
+    monkeypatch.undo()
+    got = {(a, b) for a, b, _ in token_jaccard_pairs(docs)
            .toPandas().itertuples(index=False)}
     assert (0, 8) in got and (5, 6) in got
 
@@ -599,7 +627,7 @@ def test_token_jaccard_plan_joins_prefixes_not_all_tokens(spark):
     docs = spark.createDataFrame(
         [(0, "a b c"), (1, "a b d")], "doc_id long, text string"
     )
-    plan = token_jaccard_pairs(docs, threshold=0.8) \
+    plan = token_jaccard_pairs(docs) \
         ._jdf.queryExecution().optimizedPlan().toString()
     assert "slice(" in plan
     assert "array_intersect" in plan

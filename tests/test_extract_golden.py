@@ -91,14 +91,14 @@ def test_pinned_golden_snapshot():
     import os
 
     from ocr_spark.core.extract import extract_record
-    from ocr_spark.core.synth import gen_page
+    from ocr_spark.core.synth import SEED, gen_page
 
     pin_path = os.path.join(os.path.dirname(__file__), "golden_pins.json")
     with open(pin_path) as f:
         pins = json.load(f)
     assert len(pins) == 400
     for i in range(400):
-        p = gen_page(i)
+        p = gen_page(i, SEED)
         r = extract_record(p["url"], p["html"], p["text"], p["lang"])
         pin = pins[r["url"]]
         assert hashlib.sha256(r["text"].encode()).hexdigest()[:16] == pin["sha256"], r["url"]

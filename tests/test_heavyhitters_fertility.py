@@ -3,6 +3,7 @@ the per-language tokenizer fertility audit — unit contracts + plan pins."""
 
 import pyspark.sql.functions as F
 
+from ocr_spark.operators import heavyhitters as hh
 from ocr_spark.operators.heavyhitters import (
     heavy_hitters,
     mg_candidates,
@@ -49,14 +50,15 @@ def _brute_force(df, m):
     return {(r.token, r.freq) for r in pdf.itertuples()}, total
 
 
-def test_mg_candidates_superset_and_bounded(spark):
+def test_mg_candidates_superset_and_bounded(spark, monkeypatch):
     """The summary union must contain every token above the global
     threshold (the MG guarantee) while staying small: <= m rows per input
     partition, despite a vocabulary ~150x the counter budget."""
     m = 8
+    monkeypatch.setattr(hh, "HH_M", m)
     docs = _adversarial_corpus(spark)
     toks = docs.select(_canon_tokens().alias("toks"))
-    cand = set(r.token for r in mg_candidates(toks, m=m).collect())
+    cand = set(r.token for r in mg_candidates(toks).collect())
     exact, total = _brute_force(docs, m)
     qualifying = {t for t, _ in exact}
     assert qualifying  # non-vacuous: something actually qualifies
@@ -68,12 +70,13 @@ def test_mg_candidates_superset_and_bounded(spark):
     assert distinct > m * n_parts
 
 
-def test_heavy_hitters_equals_exact_answer(spark):
+def test_heavy_hitters_equals_exact_answer(spark, monkeypatch):
     """End-to-end: the bounded-memory two-pass result IS the exact SQL
     answer — same tokens, same exact counts."""
     m = 8
+    monkeypatch.setattr(hh, "HH_M", m)
     docs = _adversarial_corpus(spark)
-    got = heavy_hitters(docs, m=m).collect()
+    got = heavy_hitters(docs).collect()
     exact, total = _brute_force(docs, m)
     assert {(r.token, r.freq) for r in got} == exact
     assert all(r.n_total == total for r in got)
@@ -82,7 +85,7 @@ def test_heavy_hitters_equals_exact_answer(spark):
     assert keys == sorted(keys)
 
 
-def test_heavy_hitters_threshold_is_strict(spark):
+def test_heavy_hitters_threshold_is_strict(spark, monkeypatch):
     """freq*(m+1) > n_total is strict: a token at EXACTLY n_total/(m+1)
     does not qualify. 4 tokens x 25 each = 100 total, m=3 -> threshold
     25; nothing qualifies."""
@@ -90,14 +93,16 @@ def test_heavy_hitters_threshold_is_strict(spark):
         [(" ".join(w for w in ("a", "b", "c", "d") for _ in range(25)),)],
         "text string",
     )
-    assert heavy_hitters(docs, m=3).count() == 0
+    monkeypatch.setattr(hh, "HH_M", 3)
+    assert heavy_hitters(docs).count() == 0
 
 
-def test_heavy_hitters_recount_shuffle_is_candidate_gated(spark):
+def test_heavy_hitters_recount_shuffle_is_candidate_gated(spark, monkeypatch):
     """Plan pin: the exact recount joins the BROADCAST candidate set
     before the count aggregation, so the shuffle carries only candidate
     rows — the answer's size, not the corpus's."""
-    plan = _plan(heavy_hitters(_adversarial_corpus(spark), m=8))
+    monkeypatch.setattr(hh, "HH_M", 8)
+    plan = _plan(heavy_hitters(_adversarial_corpus(spark)))
     assert "BroadcastHashJoin" in plan
     # Python appears once: the bounded-memory summary pass
     assert plan.count("ArrowEvalPython") + plan.count("MapInPandas") == 1

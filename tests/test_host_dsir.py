@@ -7,6 +7,7 @@ corpora where the right answer is known by construction."""
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_spark.operators import dsir
 from ocr_spark.operators.dedup import host_line_dedup
 from ocr_spark.operators.dsir import dsir_log_ratios, dsir_sample
 
@@ -65,7 +66,7 @@ def dsir_corpus(spark):
 
 def test_dsir_weights_separate_families(spark, dsir_corpus):
     target = dsir_corpus.where(F.col("doc_id") < 8)
-    picked = dsir_sample(dsir_corpus, target, k=40, n_buckets=256)
+    picked = dsir_sample(dsir_corpus, target)   # DSIR_K >= 40: every doc
     w = {r.doc_id: r.log_weight for r in picked.collect()}
     assert len(w) == 40
     mean_in = sum(w[i] for i in range(20)) / 20
@@ -73,9 +74,10 @@ def test_dsir_weights_separate_families(spark, dsir_corpus):
     assert mean_in > mean_out + 0.5, (mean_in, mean_out)
 
 
-def test_dsir_topk_prefers_target_family(spark, dsir_corpus):
+def test_dsir_topk_prefers_target_family(spark, dsir_corpus, monkeypatch):
+    monkeypatch.setattr(dsir, "DSIR_K", 10)
     target = dsir_corpus.where(F.col("doc_id") < 8)
-    picked = dsir_sample(dsir_corpus, target, k=10, n_buckets=256)
+    picked = dsir_sample(dsir_corpus, target)
     rows = picked.collect()
     assert len(rows) == 10
     n_target_family = sum(1 for r in rows if r.doc_id < 20)
@@ -85,13 +87,15 @@ def test_dsir_topk_prefers_target_family(spark, dsir_corpus):
     assert keys == sorted(keys, reverse=True)
 
 
-def test_dsir_ratio_table_bounded(spark, dsir_corpus):
+def test_dsir_ratio_table_bounded(spark, dsir_corpus, monkeypatch):
+    monkeypatch.setattr(dsir, "DSIR_N_BUCKETS", 64)
     target = dsir_corpus.where(F.col("doc_id") < 8)
-    ratios = dsir_log_ratios(dsir_corpus, target, n_buckets=64)
+    ratios = dsir_log_ratios(dsir_corpus, target)
     assert ratios.count() <= 64
 
 
-def test_dsir_apply_with_persisted_ratios_matches_one_shot(spark, dsir_corpus):
+def test_dsir_apply_with_persisted_ratios_matches_one_shot(spark, dsir_corpus,
+                                                          monkeypatch):
     """The deploy seam: a fitted log-ratio table written to disk and read
     back (the cross-batch persistence path) selects EXACTLY what the
     one-shot fit+apply selects — so batches can reuse the frozen artifact
@@ -100,27 +104,23 @@ def test_dsir_apply_with_persisted_ratios_matches_one_shot(spark, dsir_corpus):
 
     from ocr_spark.operators.dsir import dsir_apply
 
+    monkeypatch.setattr(dsir, "DSIR_K", 12)
     target = dsir_corpus.where(F.col("doc_id") < 8)
-    one_shot = dsir_sample(
-        dsir_corpus, target, k=12, n_buckets=256
-    ).toPandas()
+    one_shot = dsir_sample(dsir_corpus, target).toPandas()
 
-    ratios = dsir_log_ratios(dsir_corpus, target, n_buckets=256)
+    ratios = dsir_log_ratios(dsir_corpus, target)
     import tempfile
 
     with tempfile.TemporaryDirectory() as d:
         ratios.write.mode("overwrite").parquet(d)
         frozen = spark.read.parquet(d)
-        applied = dsir_apply(
-            dsir_corpus, frozen, k=12, n_buckets=256
-        ).toPandas()
+        applied = dsir_apply(dsir_corpus, frozen).toPandas()
         # and a NEW disjoint batch resamples against the same frozen table
         batch2 = dsir_corpus.select(
             (F.col("doc_id") + 1000).alias("doc_id"), "text"
         )
-        rows2 = dsir_apply(
-            batch2, frozen, k=5, n_buckets=256
-        ).collect()
+        monkeypatch.setattr(dsir, "DSIR_K", 5)
+        rows2 = dsir_apply(batch2, frozen).collect()
     pd.testing.assert_frame_equal(
         one_shot.reset_index(drop=True), applied.reset_index(drop=True)
     )
@@ -133,7 +133,7 @@ def test_dsir_empty_text_survives(spark):
         [(1, "alpha beta gamma delta useful"), (2, None), (3, "")],
         "doc_id long, text string",
     )
-    picked = dsir_sample(df, df.where("doc_id = 1"), k=3, n_buckets=64)
+    picked = dsir_sample(df, df.where("doc_id = 1"))
     rows = {r.doc_id: r for r in picked.collect()}
     assert set(rows) == {1, 2, 3}
     assert rows[2].n_feats == 0 and rows[2].log_weight == 0.0

@@ -69,11 +69,11 @@ def test_strip_fragment_and_harvest(spark):
         '<a class="z" href="y.html">two</a></body></html>'
     )
     row = (
-        spark.createDataFrame([Row(h=html)])
+        spark.createDataFrame([Row(html_text=html)])
         .select(
-            extract_hrefs("h").alias("hrefs"),
-            meta_content("h", "robots").alias("robots"),
-            canonical_link("h").alias("canon"),
+            extract_hrefs().alias("hrefs"),
+            meta_content("html_text", "robots").alias("robots"),
+            canonical_link().alias("canon"),
             strip_fragment(F.lit("https://e.org/x#frag")).alias("nofrag"),
         )
         .first()
@@ -138,7 +138,7 @@ def test_host_degree_conservation(edge_fixture):
 
 
 def test_pagerank_is_distribution(spark, edge_fixture):
-    ranks = pagerank_hosts(host_graph(edge_fixture), iterations=6).collect()
+    ranks = pagerank_hosts(host_graph(edge_fixture)).collect()
     total = sum(r["rank"] for r in ranks)
     assert total == pytest.approx(1.0, abs=1e-9)
     assert all(r["rank"] > 0 for r in ranks)
@@ -149,7 +149,7 @@ def test_pagerank_is_distribution(spark, edge_fixture):
     # deterministic across invocations (seeded by structure only)
     again = {
         r["host"]: r["rank"]
-        for r in pagerank_hosts(host_graph(edge_fixture), iterations=6).collect()
+        for r in pagerank_hosts(host_graph(edge_fixture)).collect()
     }
     for h, v in by_host.items():
         assert again[h] == pytest.approx(v, abs=1e-12)
@@ -162,10 +162,10 @@ def test_pagerank_local_and_distributed_paths_agree(spark, edge_fixture,
     in float accumulation order)."""
     g = host_graph(edge_fixture)
     local = {r["host"]: r["rank"]
-             for r in pagerank_hosts(g, iterations=6).collect()}
+             for r in pagerank_hosts(g).collect()}
     monkeypatch.setattr(links, "PAGERANK_LOCAL_EDGE_THRESHOLD", 0)
     dist = {r["host"]: r["rank"]
-            for r in pagerank_hosts(g, iterations=6).collect()}
+            for r in pagerank_hosts(g).collect()}
     assert set(local) == set(dist)
     for h in local:
         assert local[h] == pytest.approx(dist[h], rel=1e-9)
@@ -179,8 +179,9 @@ def test_pagerank_releases_caches(spark, edge_fixture, monkeypatch):
     the RDD, not via unpersist()."""
     # the cache discipline under test is the distributed loop's
     monkeypatch.setattr(links, "PAGERANK_LOCAL_EDGE_THRESHOLD", 0)
+    monkeypatch.setattr(links, "PAGERANK_ITERATIONS", 4)
     before = len(spark.sparkContext._jsc.getPersistentRDDs())
-    pagerank_hosts(host_graph(edge_fixture), iterations=4).collect()
+    pagerank_hosts(host_graph(edge_fixture)).collect()
     after = len(spark.sparkContext._jsc.getPersistentRDDs())
     # 4 rounds / PAGERANK_CHECKPOINT_EVERY=3 -> 1 intermediate + 1 final;
     # the explicit persists (trans, hosts, 4x contrib) must all be gone
@@ -195,20 +196,23 @@ def test_trustrank_concentrates_on_seed_neighborhood(spark, edge_fixture,
     from ocr_spark.operators.links import trustrank_hosts
 
     g = host_graph(edge_fixture)
+    monkeypatch.setattr(links, "TRUST_SEEDS", ["a.org"])
     tr = {r["host"]: r["rank"]
-          for r in trustrank_hosts(g, seeds=["a.org"], iterations=6).collect()}
+          for r in trustrank_hosts(g).collect()}
     pr = {r["host"]: r["rank"]
-          for r in pagerank_hosts(g, iterations=6).collect()}
+          for r in pagerank_hosts(g).collect()}
     assert set(tr) == set(pr)
     assert sum(tr.values()) == pytest.approx(1.0, abs=1e-9)
     # trust concentrates: the seed's rank exceeds its classic rank
     assert tr["a.org"] > pr["a.org"]
     # a seed absent from the graph is an explicit error, not silence
-    with pytest.raises(Exception, match="no seed host"):
-        trustrank_hosts(g, seeds=["nowhere.example"], iterations=2).collect()
+    with monkeypatch.context() as m:
+        m.setattr(links, "TRUST_SEEDS", ["nowhere.example"])
+        with pytest.raises(Exception, match="no seed host"):
+            trustrank_hosts(g).collect()
     monkeypatch.setattr(links, "PAGERANK_LOCAL_EDGE_THRESHOLD", 0)
     dist = {r["host"]: r["rank"]
-            for r in trustrank_hosts(g, seeds=["a.org"], iterations=6).collect()}
+            for r in trustrank_hosts(g).collect()}
     for h in tr:
         assert tr[h] == pytest.approx(dist[h], rel=1e-9)
 
@@ -223,8 +227,8 @@ def test_anchor_pairs_never_mispair(spark):
         '<a class="x" href="/b">beta</a>'
     )
     pairs = (
-        spark.createDataFrame([Row(h=html)])
-        .select(anchor_pairs("h").alias("p"))
+        spark.createDataFrame([Row(html_text=html)])
+        .select(anchor_pairs().alias("p"))
         .first()["p"]
     )
     assert [(p["href"], p["anchor"]) for p in pairs] == [
@@ -233,7 +237,7 @@ def test_anchor_pairs_never_mispair(spark):
     ]
 
 
-def test_anchor_terms_top_k(spark):
+def test_anchor_terms_top_k(spark, monkeypatch):
     from ocr_spark.operators.links import anchor_terms, outlinks_with_text
 
     pages = spark.createDataFrame(
@@ -247,7 +251,8 @@ def test_anchor_terms_top_k(spark):
             for i in range(3)
         ]
     )
-    rows = anchor_terms(outlinks_with_text(pages), top_k=2).collect()
+    monkeypatch.setattr(links, "ANCHOR_TOP_TERMS", 2)
+    rows = anchor_terms(outlinks_with_text(pages)).collect()
     by_rank = {r["rank"]: r for r in rows if r["dst_host"] == "t.org"}
     assert by_rank[1]["term"] == "widgets" and by_rank[1]["n_links"] == 6
     # 'great' and 'shop' tie at 3; term asc tie-break -> 'great'

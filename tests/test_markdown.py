@@ -42,21 +42,21 @@ def test_heading_levels_stamped():
     assert got == {"One": 1, "Three": 3, "Six": 6, "para": 0}
 
 
-def test_level_consistent_with_heading_flag_adversarial():
-    """`heading` (the incrementally-tracked flag) and `level > 0` (derived
-    from the stack at flush) must agree on every block, including stray
-    closes, nesting violations, and text outside any block."""
-    cases = [
-        "<h2>a<div>b</h2>c</div>tail",
-        "<h1><span>x</span>y</h1>z",
-        "loose text <h4>h</h4> more",
-        "<li><h2>heading in li</h2>item</li>",
-        "</h3>stray<h3>real</h3>",
-        "<blockquote><h2>quoted h</h2><p>quoted p</p></blockquote>",
-    ]
-    for html in cases:
-        for b in extract_blocks(html):
-            assert b.heading == (b.level > 0), (html, b.text, b.level, b.heading)
+def test_level_stamped_adversarial():
+    """`level` (a heading is level > 0) comes from the open-block stack at
+    flush time, including after stray closes, nesting violations, and text
+    outside any block."""
+    cases = {
+        "<h2>a<div>b</h2>c</div>tail": [("a", 2), ("b", 0), ("ctail", 0)],
+        "<h1><span>x</span>y</h1>z": [("xy", 1), ("z", 0)],
+        "loose text <h4>h</h4> more": [("loose text", 0), ("h", 4), ("more", 0)],
+        "<li><h2>heading in li</h2>item</li>": [("heading in li", 2), ("item", 0)],
+        "</h3>stray<h3>real</h3>": [("stray", 0), ("real", 3)],
+        "<blockquote><h2>quoted h</h2><p>quoted p</p></blockquote>":
+            [("quoted h", 2), ("quoted p", 0)],
+    }
+    for html, want in cases.items():
+        assert [(b.text, b.level) for b in extract_blocks(html)] == want, html
 
 
 def test_list_and_quote_context():

@@ -183,7 +183,9 @@ def test_parse_feed_items_rss_and_atom(spark):
 
 # -------------------------------------------------------------- frontier
 
-def test_fetch_schedule_slots_cap_and_default_delay(spark):
+def test_fetch_schedule_slots_cap_and_default_delay(spark, monkeypatch):
+    from ocr_spark.operators import frontier
+
     cands = spark.createDataFrame(
         [("a", "u1", 1), ("a", "u2", 9), ("a", "u3", 9), ("b", "v1", 5)],
         "host string, url string, priority long",
@@ -191,13 +193,14 @@ def test_fetch_schedule_slots_cap_and_default_delay(spark):
     delays = spark.createDataFrame([("a", 3.0)], "host string, crawl_delay_s double")
     got = {
         r["url"]: r.asDict()
-        for r in fetch_schedule(cands, delays, default_delay_s=2.0).collect()
+        for r in fetch_schedule(cands, delays).collect()
     }
     # priority desc, url asc tie-break
     assert got["u2"]["slot"] == 0 and got["u3"]["slot"] == 1
     assert got["u1"]["slot"] == 2 and got["u1"]["scheduled_at_s"] == 6.0
     # host with no declared delay takes the default, never dropped
     assert got["v1"]["slot"] == 0 and got["v1"]["scheduled_at_s"] == 0.0
-    capped = fetch_schedule(cands, delays, max_per_host=2)
+    monkeypatch.setattr(frontier, "FETCH_MAX_PER_HOST", 2)
+    capped = fetch_schedule(cands, delays)
     assert capped.count() == 3  # a truncated to its 2-slot budget + b
     assert "u1" not in {r["url"] for r in capped.collect()}

@@ -2,7 +2,16 @@
 determinism) and domain-level quality gates (support floor, empirical-Bayes
 shrinkage)."""
 
+import pytest
+
+from ocr_spark.operators import mixing
 from ocr_spark.operators.mixing import domain_blocklist, token_budget_select
+
+
+@pytest.fixture
+def budgets(monkeypatch):
+    """Sets ``MIX_BUDGETS`` for the test."""
+    return lambda b: monkeypatch.setattr(mixing, "MIX_BUDGETS", b)
 
 
 def _doc(i, lang, words, word="tok"):
@@ -10,14 +19,14 @@ def _doc(i, lang, words, word="tok"):
     return (i, lang, " ".join(f"{word}{i}x{j}" for j in range(words)))
 
 
-def test_token_budget_greedy_cut(spark):
+def test_token_budget_greedy_cut(spark, budgets):
     # en budget 25 tokens; docs of 10 tokens each -> exactly 2 selected,
     # the 3rd crosses the budget, the 4th stays unselected too (greedy
     # running-sum semantics, not knapsack).
     rows = [_doc(i, "en", 10) for i in range(4)]
+    budgets({"en": 25})
     out = token_budget_select(
         spark.createDataFrame(rows, "doc_id long, lang string, text string"),
-        {"en": 25},
     ).collect()
     sel = {r["doc_id"]: r for r in out}
     assert len(out) == 4
@@ -28,17 +37,17 @@ def test_token_budget_greedy_cut(spark):
     assert all(sel[r["doc_id"]]["n_tokens"] == 10 for r in out)
 
 
-def test_token_budget_lang_allowlist(spark):
+def test_token_budget_lang_allowlist(spark, budgets):
     rows = [_doc(0, "en", 5), _doc(1, "zz", 5)]
+    budgets({"en": 100})
     out = token_budget_select(
         spark.createDataFrame(rows, "doc_id long, lang string, text string"),
-        {"en": 100},
     ).collect()
     # zz has no budget -> excluded entirely, not just unselected
     assert {r["lang"] for r in out} == {"en"}
 
 
-def test_token_budget_quality_ordering(spark):
+def test_token_budget_quality_ordering(spark, budgets):
     # same token count, different quality: doc 1 sits in the good length
     # band and carries stopwords (quality 1.0); doc 0 is short with none
     # (quality 0.5). The budget fits one doc -> the better one wins even
@@ -48,11 +57,11 @@ def test_token_budget_quality_ordering(spark):
         (1, "en", "the quick brown foxhound vaulted over the sleepy "
                   "gardener and trotted away down the long gravel lane"),
     ]
+    budgets({"en": 17})  # fits doc 1 (17 tokens) alone; doc 0 would also fit
     out = {
         r["doc_id"]: r
         for r in token_budget_select(
             spark.createDataFrame(rows, "doc_id long, lang string, text string"),
-            {"en": 17},  # fits doc 1 (17 tokens) alone; doc 0 would also fit
         ).collect()
     }
     assert out[1]["selected"] and not out[0]["selected"]
@@ -76,29 +85,31 @@ def _host_rows():
     return rows
 
 
-def test_domain_blocklist_support_floor(spark):
+def test_domain_blocklist_support_floor(spark, monkeypatch):
+    monkeypatch.setattr(mixing, "HOST_BLOCK_FRAC", 0.5)
     df = spark.createDataFrame(_host_rows(), "doc_id long, url string, text string")
-    bl = {r["host"]: r for r in domain_blocklist(df, min_kept_frac=0.5).collect()}
+    bl = {r["host"]: r for r in domain_blocklist(df).collect()}
     assert not bl["goodhost.com"]["blocked"] and bl["goodhost.com"]["kept_frac"] == 1.0
     assert bl["badhost.com"]["blocked"] and bl["badhost.com"]["n_docs"] == 6
     # two failing docs but under the 5-document floor -> spared
     assert not bl["smallhost.com"]["blocked"] and bl["smallhost.com"]["kept_frac"] == 0.0
 
 
-def test_token_budget_plan_single_lang_shuffle(spark):
+def test_token_budget_plan_single_lang_shuffle(spark, budgets):
     # budgets broadcast; the only exchange is the lang hash partitioning
     # feeding the window — no SinglePartition anywhere.
     df = spark.createDataFrame(
         [_doc(i, "en", 8) for i in range(10)],
         "doc_id long, lang string, text string",
     )
-    out = token_budget_select(df, {"en": 50})
+    budgets({"en": 50})
+    out = token_budget_select(df)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
     assert "BroadcastHashJoin" in plan
 
 
-def test_domain_quality_eb_shrinks_small_hosts(spark):
+def test_domain_quality_eb_shrinks_small_hosts(spark, monkeypatch):
     """A 2-page all-bad host must NOT be blocked (posterior near the
     prior), while a 40-page all-bad host must be — the evidence-scaled
     behavior the support floor cannot express; a large good host stays
@@ -118,8 +129,8 @@ def test_domain_quality_eb_shrinks_small_hosts(spark):
     # prior-shrunk (not blocked) here
     rows += [(200 + i, f"https://tinybad.com/p{i}", "y y") for i in range(2)]
     df = spark.createDataFrame(rows, "doc_id long, url string, text string")
-    out = {r.host: r for r in
-           domain_quality_eb(df, min_smoothed_frac=0.5).collect()}
+    monkeypatch.setattr(mixing, "HOST_BLOCK_FRAC", 0.5)
+    out = {r.host: r for r in domain_quality_eb(df).collect()}
     assert not out["good.com"].blocked
     assert out["good.com"].smoothed_frac > 0.8
     assert out["bad.com"].blocked            # 40 bad pages beat the prior

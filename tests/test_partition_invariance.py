@@ -46,7 +46,7 @@ def _canon(df):
         ), id="host_line_dedup"),
         pytest.param(lambda df: __import__(
             "ocr_spark.operators.dsir", fromlist=["dsir_sample"]
-        ).dsir_sample(df, df.where("doc_id % 5 = 0"), k=20, n_buckets=128),
+        ).dsir_sample(df, df.where("doc_id % 5 = 0")),
             id="dsir_sample"),
         pytest.param(lambda df: __import__(
             "ocr_spark.operators.quality", fromlist=["blockword_filter"]
@@ -80,15 +80,17 @@ def test_layout_invariance(spark, make):
     assert len(a) > 0
 
 
-def test_bpe_tokens_layout_invariance(spark):
-    from ocr_spark.core.bpe import build_word_map
+def test_bpe_tokens_layout_invariance(spark, monkeypatch):
+    from ocr_spark.core import bpe
     from ocr_spark.operators.tokenizer import bpe_encode
 
     # the corpus's ten most frequent words, with their counts
     counts = {"scan": 984, "column": 978, "window": 976, "order": 975,
               "sort": 974, "part": 963, "agg": 953, "value": 950,
               "line": 946, "key": 945}
-    wm = build_word_map(counts, n_merges=20)
+    monkeypatch.setattr(bpe, "BPE_TRAIN_COUNTS", counts)
+    monkeypatch.setattr(bpe, "BPE_N_MERGES", 20)
+    wm = bpe.build_word_map()
     a = _canon(bpe_encode(_docs(spark, 1, 5), wm))
     b = _canon(bpe_encode(_docs(spark, 13, 23), wm))
     assert a == b

@@ -204,8 +204,9 @@ def test_extract_spans_single_salted_exchange(spark):
 
 @pytest.mark.parametrize("repartition", [True, False])
 def test_parse_entry_points_share_one_partition_policy(spark, repartition):
-    """The text, markdown and span paths are one parse stage: for each
-    repartition policy they plan the same exchanges, and only the four
+    """The text, markdown and span paths are one parse stage: they plan the
+    salted shuffle the same way (the markdown and span paths always take
+    it, the text path when ``repartition`` asks for it), and only the four
     input columns cross into the Python node."""
     from ocr_spark.operators.extract_op import (
         extract_page_markdown,
@@ -217,15 +218,17 @@ def test_parse_entry_points_share_one_partition_policy(spark, repartition):
     pages = spark.createDataFrame(
         [("https://a.example/x", None, b"<p>hi</p>", "hi", "en")], PAGES_SCHEMA
     )
-    exchanges = set()
-    for entry in (extract_pages, extract_page_markdown, extract_page_spans):
-        plan = _explain(entry(pages, repartition=repartition))
-        exchanges.add(_tree(plan).count("Exchange"))
+    frames = {"extract_pages": (extract_pages(pages, repartition=repartition),
+                                repartition),
+              "extract_page_markdown": (extract_page_markdown(pages), True),
+              "extract_page_spans": (extract_page_spans(pages), True)}
+    for name, (frame, shuffled) in frames.items():
+        plan = _explain(frame)
+        assert _tree(plan).count("Exchange") == int(shuffled), name
         python_input = re.search(r"\) MapInPandas\nInput \[\d+\]: \[(.*?)\]", plan)
         assert re.sub(r"#\d+L?", "", python_input.group(1)).split(", ") == [
             "url", "html", "text", "lang"
-        ], entry.__name__
-    assert exchanges == {0 if repartition is False else 1}
+        ], name
 
 
 def _pages_files(spark, path: str, n_files: int, rows_per_file: int):
@@ -363,11 +366,11 @@ def test_bucketed_join_is_exchange_free(spark, tmp_path):
 
     from ocr_spark.plans.partitioning import write_bucketed
 
-    docs = spark.range(0, 1000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 97).alias("feature")
-    )
+    # keyed like the band store it serves: (band, bucket)
+    key = [(F.col("id") % 8).alias("band"), F.col("id").alias("bucket")]
+    docs = spark.range(0, 1000).select(*key, (F.col("id") % 97).alias("feature"))
     sigs = spark.range(0, 1000).select(
-        F.col("id").alias("doc_id"), F.md5(F.col("id").cast("string")).alias("fp")
+        *key, F.md5(F.col("id").cast("string")).alias("fp")
     )
     thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -375,15 +378,15 @@ def test_bucketed_join_is_exchange_free(spark, tmp_path):
         # broadcast them and skip bucketing; at the sizes bucketing exists
         # for, neither side is broadcastable — model that explicitly
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed(docs, "bkt_docs", str(tmp_path / "bd"), ["doc_id"])
-        write_bucketed(sigs, "bkt_sigs", str(tmp_path / "bs"), ["doc_id"])
-        joined = spark.table("bkt_docs").join(spark.table("bkt_sigs"), "doc_id")
+        write_bucketed(docs, "bkt_docs", str(tmp_path / "bd"))
+        write_bucketed(sigs, "bkt_sigs", str(tmp_path / "bs"))
+        joined = spark.table("bkt_docs").join(spark.table("bkt_sigs"), ["band", "bucket"])
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
         assert "SortMergeJoin" in plan and "Bucketed: true" in plan
         assert joined.count() == 1000
         # control: the same join over the raw (unbucketed) frames shuffles
-        control = docs.join(sigs, "doc_id")
+        control = docs.join(sigs, ["band", "bucket"])
         cplan = control._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" in cplan
     finally:

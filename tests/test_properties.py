@@ -84,10 +84,18 @@ def test_bpe_fit_deterministic_and_encode_total(counts, n_merges):
     """BPE core invariants: the fit is a pure function of its input; every
     encoded word re-concatenates to itself (lossless); token count never
     exceeds word length; encoding is idempotent under re-encode."""
+    from unittest import mock
+
+    from ocr_spark.core import bpe
     from ocr_spark.core.bpe import encode_word, fit_bpe
 
-    m1 = fit_bpe(counts, n_merges)
-    m2 = fit_bpe(dict(reversed(list(counts.items()))), n_merges)
+    def fit(word_counts):
+        with mock.patch.multiple(bpe, BPE_TRAIN_COUNTS=word_counts,
+                                 BPE_N_MERGES=n_merges):
+            return fit_bpe()
+
+    m1 = fit(counts)
+    m2 = fit(dict(reversed(list(counts.items()))))
     assert m1 == m2                       # insertion-order independent
     assert len(m1) <= n_merges
     ranks = {p: i for i, p in enumerate(m1)}

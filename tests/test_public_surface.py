@@ -1,21 +1,26 @@
 """The engine's surface has callers: names, parameters, constants and imports.
 
-Five pure AST scans (no Spark), over one parse of the caller files (the
+Six pure AST scans (no Spark), over one parse of the caller files (the
 engine, ``__spark_entry__.py``, ``bench.py`` and the non-test
-``perfbench/`` modules) and ``tests/``:
+``perfbench/`` modules) and ``tests/``. Tests are not callers: a value
+that only a test sets is a test seam (a module constant the code reads at
+call time and the test monkeypatches) or a path no caller takes.
 
 - every public top-level def/class in ``ocr_spark/`` is spelt (``ast.Name``,
   ``ast.Attribute`` or an import alias) by a top-level statement other than
-  its own definition in the caller files. A function that only tests reach
-  is either a test oracle, which belongs in ``tests/``, or dead code;
+  its own definition in the caller files, and so is every public method of
+  such a class. A function that only tests reach is either a test oracle,
+  which belongs in ``tests/``, or dead code;
 - every defaulted parameter of a def or method in ``ocr_spark/`` is passed
-  by some call site in the caller files. Tests are not callers: a setting
-  that only a test sets is a test seam or a path no caller takes;
-- no parameter of a def or method in ``ocr_spark/`` is passed the same
-  literal or UPPER_CASE constant by every call site, tests included; a call
-  site that omits a defaulted parameter passes its default. A value that
-  never varies is a constant, whether it is written at every call site or
-  left to the default at every one;
+  by some call site in the caller files;
+- no parameter of a def or method in ``ocr_spark/`` or
+  ``__spark_entry__.py`` is passed the same literal or UPPER_CASE constant
+  by every call site in the caller files, tests excluded; a call site that
+  omits a defaulted parameter passes its default. A value that never
+  varies is a constant, whether it is written at every call site or left
+  to the default at every one;
+- no defaulted parameter there is passed explicitly by every call site in
+  the caller files: such a default serves only tests;
 - every module-level assignment in ``ocr_spark/`` is read by some statement
   other than its own assignment (its own module counts);
 - every name imported in ``ocr_spark/``, ``__spark_entry__.py``,
@@ -24,8 +29,9 @@ engine, ``__spark_entry__.py``, ``bench.py`` and the non-test
   ``# noqa: F401``. ``perfbench/`` belongs to the benchmark and is left
   out.
 
-The ``EXEMPT`` module, the serial oracle, is left out of the first three
-scans.
+The ``EXEMPT`` module, the serial oracle, is left out of the first four
+scans. A failure of the two value scans prints the value every caller
+agrees on, i.e. the constant to write.
 """
 
 import ast
@@ -68,6 +74,13 @@ def _engine_modules():
             and rel[len("ocr_spark/"):] not in EXEMPT]
 
 
+def _checked_modules():
+    """The engine modules plus ``__spark_entry__.py``, whose DuckDB twins
+    and registry helpers are engine code too."""
+    return _engine_modules() + [(rel, tree) for rel, tree in _parsed()
+                                if rel == "__spark_entry__.py"]
+
+
 def _names(node):
     """Names spelt by ``ast.Name``, ``ast.Attribute`` or an import alias."""
     out = set()
@@ -83,19 +96,30 @@ def _names(node):
 
 def unreferenced_public_names():
     """``module:line name`` of each public top-level def/class in
-    ``ocr_spark/`` that no top-level statement other than its own
-    definition references."""
+    ``ocr_spark/`` that no top-level statement of the caller files other
+    than its own definition references, and ``module:line Class.method``
+    of each public method of such a class that nothing in the caller files
+    other than the method itself references."""
     statements = [(rel, s) for rel, tree in _parsed()
                   if not rel.startswith("tests/") for s in tree.body]
     spelt = [(s, _names(s)) for _, s in statements]
     missing = []
     for rel, node in statements:
         if (not rel.startswith("ocr_spark/") or rel[len("ocr_spark/"):] in EXEMPT
-                or not isinstance(node, (*_DEFS, ast.ClassDef))
-                or node.name.startswith("_")):
+                or not isinstance(node, (*_DEFS, ast.ClassDef))):
             continue
-        if not any(node.name in names for s, names in spelt if s is not node):
+        if (not node.name.startswith("_")
+                and not any(node.name in names for s, names in spelt if s is not node)):
             missing.append(f"{rel}:{node.lineno} {node.name}")
+        if not isinstance(node, ast.ClassDef):
+            continue
+        for method in node.body:
+            if not isinstance(method, _DEFS) or method.name.startswith("_"):
+                continue
+            siblings = set().union(*(_names(m) for m in node.body if m is not method))
+            if not any(method.name in (siblings if s is node else names)
+                       for s, names in spelt):
+                missing.append(f"{rel}:{method.lineno} {node.name}.{method.name}")
     return missing
 
 
@@ -214,14 +238,14 @@ def _required(fn, cls):
 
 
 def _constant_value(node):
-    """``ast.dump`` of ``node`` if it is a literal, a tuple or list of
+    """``ast.unparse`` of ``node`` if it is a literal, a tuple or list of
     literals, or an UPPER_CASE module constant; else None."""
     if isinstance(node, (ast.Tuple, ast.List)):
         parts = [_constant_value(e) for e in node.elts]
-        return None if None in parts else ast.dump(node)
+        return None if None in parts else ast.unparse(node)
     name = getattr(node, "id", None) or getattr(node, "attr", None)
     if isinstance(node, ast.Constant) or name and name.isupper():
-        return ast.dump(node)
+        return ast.unparse(node)
     return None
 
 
@@ -241,19 +265,16 @@ def _bound_once(fn):
     return {name: v for name, v in values.items() if counts[name] == 1}
 
 
-def single_valued_parameters():
-    """``module:line function(parameter)`` of each parameter that every call
-    site passes the same value: a literal, a tuple or list of literals, or
-    an UPPER_CASE module constant, written at the call site or bound to a
-    local that the calling function assigns exactly once. A call site that
-    omits a defaulted parameter passes its default, so a default that every
-    call site agrees on is flagged like a required parameter that takes one
-    value. Callees resolve by name, as in ``unpassed_defaulted_parameters``. A
-    function that is referenced as a value (passed to ``mapInPandas``,
-    ``udf``, a ``record_fn``, ...) has call sites no scan sees, so it is
-    skipped; so is a call made through ``*args``/``**kw``."""
+@functools.lru_cache(maxsize=None)
+def _call_sites():
+    """``(calls, as_value)`` over the caller files (``tests/`` excluded):
+    callee name -> ``[(call, bound)]``, ``bound`` being the enclosing def's
+    ``_bound_once``, for each call not made through ``*args``/``**kw``; and
+    the names loaded other than as a call's callee."""
     calls, as_value = {}, set()
-    for _, tree in _parsed():
+    for rel, tree in _parsed():
+        if rel.startswith("tests/"):
+            continue
         funcs = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
         local = {}   # id(call) -> the innermost enclosing def's _bound_once
         for fn, _ in _functions(tree):
@@ -270,27 +291,68 @@ def single_valued_parameters():
             elif (isinstance(n, (ast.Name, ast.Attribute)) and id(n) not in funcs
                   and isinstance(n.ctx, ast.Load)):
                 as_value.add(getattr(n, "id", None) or n.attr)
-    found = []
-    for rel, tree in _engine_modules():
+    return calls, as_value
+
+
+def _scanned_functions():
+    """``(rel, def, [(call, bound)], parameters)`` of each def in the checked
+    modules that has call sites and is never referenced as a value;
+    ``parameters`` is ``[(name, positional index or None, default or None)]``."""
+    calls, as_value = _call_sites()
+    for rel, tree in _checked_modules():
         for fn, cls in _functions(tree):
             callee = cls.name if fn.name == "__init__" and cls else fn.name
             sites = calls.get(callee)
-            if not sites or callee in as_value:
-                continue
-            params = [(name, pos, None) for name, pos in _required(fn, cls)]
-            for name, pos, default in params + _defaulted(fn, cls):
-                values = set()
-                for call, bound in sites:
-                    given = [k.value for k in call.keywords if k.arg == name]
-                    if not given and pos is not None and pos < len(call.args):
-                        given = [call.args[pos]]
-                    if given and isinstance(given[0], ast.Name):
-                        given = [bound.get(given[0].id, given[0])]
-                    value = given[0] if given else default
-                    values.add(None if value is None else _constant_value(value))
-                if len(values) == 1 and None not in values:
-                    found.append(f"{rel}:{fn.lineno} {fn.name}({name})")
+            if sites and callee not in as_value:
+                params = [(name, pos, None) for name, pos in _required(fn, cls)]
+                yield rel, fn, sites, params + _defaulted(fn, cls)
+
+
+def _given(call, name, pos):
+    """The argument ``call`` passes for parameter ``name``, or None."""
+    given = [k.value for k in call.keywords if k.arg == name]
+    if not given and pos is not None and pos < len(call.args):
+        given = [call.args[pos]]
+    return given[0] if given else None
+
+
+def single_valued_parameters():
+    """``module:line function(parameter) = value`` of each parameter that
+    every call site in the caller files (``tests/`` excluded) passes the
+    same value: a literal, a tuple or list of literals, or an UPPER_CASE
+    module constant, written at the call site or bound to a local that the
+    calling function assigns exactly once. A call site that omits a
+    defaulted parameter passes its default, so a default that every call
+    site agrees on is flagged like a required parameter that takes one
+    value. Callees resolve by name, as in ``unpassed_defaulted_parameters``.
+    A function that is referenced as a value (passed to ``mapInPandas``,
+    ``udf``, a ``record_fn``, ...) has call sites no scan sees, so it is
+    skipped; so is a call made through ``*args``/``**kw``."""
+    found = []
+    for rel, fn, sites, params in _scanned_functions():
+        for name, pos, default in params:
+            values = set()
+            for call, bound in sites:
+                value = _given(call, name, pos)
+                if isinstance(value, ast.Name):
+                    value = bound.get(value.id, value)
+                value = default if value is None else value
+                values.add(None if value is None else _constant_value(value))
+            if len(values) == 1 and None not in values:
+                found.append(f"{rel}:{fn.lineno} {fn.name}({name}) = {values.pop()}")
     return found
+
+
+def explicitly_passed_defaults():
+    """``module:line function(parameter) = default`` of each defaulted
+    parameter that every call site in the caller files (``tests/``
+    excluded) passes itself, so that only tests rely on the default. The
+    call sites are those of ``single_valued_parameters``."""
+    return [f"{rel}:{fn.lineno} {fn.name}({name}) = {ast.unparse(default)}"
+            for rel, fn, sites, params in _scanned_functions()
+            for name, pos, default in params
+            if default is not None
+            and all(_given(call, name, pos) is not None for call, _ in sites)]
 
 
 def unpassed_defaulted_parameters():
@@ -384,8 +446,8 @@ def test_every_public_name_has_a_non_test_caller():
     assert not stale, f"exempt modules that no longer exist: {stale}"
     missing = unreferenced_public_names()
     assert not missing, (
-        "public names in ocr_spark/ that only tests reach (move an oracle "
-        "into tests/, delete dead code):\n  " + "\n  ".join(missing))
+        "public names and methods in ocr_spark/ that only tests reach (move "
+        "an oracle into tests/, delete dead code):\n  " + "\n  ".join(missing))
 
 
 def test_every_defaulted_parameter_is_passed():
@@ -399,9 +461,18 @@ def test_every_defaulted_parameter_is_passed():
 def test_every_required_parameter_takes_more_than_one_value():
     found = single_valued_parameters()
     assert not found, (
-        "parameters in ocr_spark/ that every call site passes the same "
-        "value, a default left in place counting as passed (fold each into "
-        "that value):\n  " + "\n  ".join(found))
+        "parameters in ocr_spark/ and __spark_entry__.py that every non-test "
+        "call site passes the same value, a default left in place counting "
+        "as passed (fold each into the value shown; a test that needs "
+        "another value monkeypatches a module constant):\n  " + "\n  ".join(found))
+
+
+def test_every_default_is_relied_on():
+    found = explicitly_passed_defaults()
+    assert not found, (
+        "defaults in ocr_spark/ and __spark_entry__.py that every non-test "
+        "call site overrides, so only tests rely on them (delete each "
+        "default shown; tests pass the value themselves):\n  " + "\n  ".join(found))
 
 
 def test_every_module_constant_is_read():

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ocr_spark import session
 from ocr_spark.operators.blocklist import blocklist_gate
+from ocr_spark.operators import ranking
 from ocr_spark.operators.ranking import distributed_ntile, perplexity_buckets
 from ocr_spark.operators.sampling import soft_sample
 
@@ -28,9 +29,10 @@ def _ntile_rows(spark):
         n=3,
         group_col="g",
         order_cols=[F.desc("score"), F.asc("k")],
+        rank_col="group_rank",
     )
     return sorted(
-        out.select("g", "k", "group_rank", "bucket_idx").collect()
+        out.select("g", "k", "group_rank", "_b").collect()
     )
 
 
@@ -51,7 +53,7 @@ def test_distributed_ntile_exact_and_partition_invariant(spark, monkeypatch):
     for nparts in (1, 2, 5, 32):
         monkeypatch.setattr(session, "default_partitions", lambda _, n=nparts: n)
         got = {
-            (r.g, r.k, r.group_rank, r.bucket_idx)
+            (r.g, r.k, r.group_rank, r._b)
             for r in _ntile_rows(spark)
         }
         assert got == expected, f"num_partitions={nparts}"
@@ -105,7 +107,8 @@ def test_soft_sample_monotone_and_nulls(spark):
     rows = [(i, 0.0, 0.3, 1.0) for i in range(200)]
     df = spark.createDataFrame(rows, "doc_id long, w0 double, w3 double, w1 double")
     k0, k3, k1 = (
-        {r.doc_id: r.kept for r in soft_sample(df, w).select("doc_id", "kept").collect()}
+        {r.doc_id: r.kept for r in soft_sample(df.select("doc_id", F.col(w).alias("score")))
+         .select("doc_id", "kept").collect()}
         for w in ("w0", "w3", "w1")
     )
     assert len(k0) == len(k3) == len(k1) == 200
@@ -118,7 +121,7 @@ def test_soft_sample_monotone_and_nulls(spark):
     null_df = spark.createDataFrame(
         [(1, None)], "doc_id long, score double"
     )
-    r = soft_sample(null_df, "score").collect()[0]
+    r = soft_sample(null_df).collect()[0]
     assert r.kept is False  # NULL weight clamps to 0; the row survives
 
 
@@ -180,7 +183,7 @@ def test_blocklist_gate_zero_corpus_shuffle(spark):
     assert "Exchange SinglePartition" not in plan.split("\n\n")[0]
 
 
-def test_top_fraction_gate_exact_count_ties_and_invariance(spark):
+def test_top_fraction_gate_exact_count_ties_and_invariance(spark, monkeypatch):
     """Exactly ceil(frac*n) rows kept even when the score is massively
     tied (the id tie-break decides); every input row returned; the same
     cut under a different physical partitioning."""
@@ -193,12 +196,13 @@ def test_top_fraction_gate_exact_count_ties_and_invariance(spark):
         F.col("id").alias("doc_id"),
         (F.col("id") % 3).cast("double").alias("score"),
     )
-    out = top_fraction_gate(df, frac=0.1).toPandas()
+    monkeypatch.setattr(ranking, "TOP_FRACTION", 0.1)
+    out = top_fraction_gate(df).toPandas()
     assert len(out) == 100
     kept = out[out.kept]
     assert len(kept) == 10  # ceil(0.1 * 100)
     # the kept set: all score-2 rows ranked by id ascending
     want = sorted(i for i in range(100) if i % 3 == 2)[:10]
     assert sorted(kept.doc_id) == want
-    again = top_fraction_gate(df.repartition(7), frac=0.1).toPandas()
+    again = top_fraction_gate(df.repartition(7)).toPandas()
     assert sorted(again[again.kept].doc_id) == want

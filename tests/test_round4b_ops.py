@@ -4,6 +4,7 @@ weights, prefix-bucketed interval join — unit contracts + plan pins."""
 import math
 
 import pandas as pd
+import pytest
 
 import pyspark.sql.functions as F
 
@@ -36,19 +37,28 @@ def _emb_frame(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def test_sq_bounds_per_dim_and_constant_dim(spark):
-    mins, scales = sq_bounds(_emb_frame(spark), dim=4)
+@pytest.fixture
+def dim4(monkeypatch):
+    """``_emb_frame``'s vectors are 4-wide."""
+    from ocr_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "EMBED_DIM", 4)
+    return similarity
+
+
+def test_sq_bounds_per_dim_and_constant_dim(spark, dim4):
+    mins, scales = sq_bounds(_emb_frame(spark))
     assert mins == [-1.0, 0.0, 5.0, -2.0]
     assert scales[0] == (1.0 - -1.0) / 255.0
     # a constant dimension quantizes with scale 0 (code 0, recon = min)
     assert scales[2] == 0.0
 
 
-def test_sq_quantization_error_is_bounded(spark):
+def test_sq_quantization_error_is_bounded(spark, dim4):
     """Asymmetric reconstruction error per dim is at most scale/2, so the
     quantized dot differs from the exact dot by at most sum(|q_d|*sc_d/2)."""
     df = _emb_frame(spark)
-    mins, scales = sq_bounds(df, dim=4)
+    mins, scales = sq_bounds(df)
     q = [1.0, -2.0, 0.5, 3.0]
     got = {
         r["vec_id"]: r["score_sq"]
@@ -60,9 +70,10 @@ def test_sq_quantization_error_is_bounded(spark):
         assert abs(got[vid] - exact) <= budget, (vid, got[vid], exact)
 
 
-def test_sq_topk_self_hit_and_plan(spark):
+def test_sq_topk_self_hit_and_plan(spark, dim4, monkeypatch):
+    monkeypatch.setattr(dim4, "SQ_TOPK", 2)
     df = _emb_frame(spark)
-    out = sq_topk(df, [1.0, 0.0, 5.0, 2.0], k=2, dim=4)
+    out = sq_topk(df, [1.0, 0.0, 5.0, 2.0])
     rows = out.collect()
     # the query IS row 0: it must rank first, and its exact cosine is 1
     assert rows[0]["vec_id"] == 0
@@ -73,9 +84,9 @@ def test_sq_topk_self_hit_and_plan(spark):
     assert "SortMergeJoin" not in plan and "Python" not in plan
 
 
-def test_sq_scores_zero_shuffle(spark):
+def test_sq_scores_zero_shuffle(spark, dim4):
     df = _emb_frame(spark)
-    mins, scales = sq_bounds(df, dim=4)
+    mins, scales = sq_bounds(df)
     plan = _plan(sq_scores(df, [1.0, 0.0, 0.0, 0.0], mins, scales))
     assert "Exchange" not in plan and "Python" not in plan
 
@@ -83,11 +94,14 @@ def test_sq_scores_zero_shuffle(spark):
 # --- temperature mixture -----------------------------------------------------
 
 
-def test_temperature_mixture_math(spark):
+def test_temperature_mixture_math(spark, monkeypatch):
+    from ocr_spark.operators import mixing
+
+    monkeypatch.setattr(mixing, "TEMPERATURE_ALPHA", 0.5)
     rows = [(0, "one two three four five six seven eight nine ten", "en"),
             (1, "uno dos", "es")]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    out = {r["lang"]: r for r in temperature_mixture(df, alpha=0.5).collect()}
+    out = {r["lang"]: r for r in temperature_mixture(df).collect()}
     tot = 12.0
     tw = math.sqrt(10) + math.sqrt(2)
     assert out["en"]["n_tokens"] == 10 and out["es"]["n_tokens"] == 2
@@ -99,10 +113,13 @@ def test_temperature_mixture_math(spark):
     assert abs(sum(shares) - 1.0) < 1e-5
 
 
-def test_temperature_mixture_alpha_one_is_identity(spark):
+def test_temperature_mixture_alpha_one_is_identity(spark, monkeypatch):
+    from ocr_spark.operators import mixing
+
+    monkeypatch.setattr(mixing, "TEMPERATURE_ALPHA", 1.0)
     rows = [(0, "a b c", "en"), (1, "x y", "de")]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    for r in temperature_mixture(df, alpha=1.0).collect():
+    for r in temperature_mixture(df).collect():
         assert abs(r["boost"] - 1.0) < 1e-6
 
 
@@ -230,17 +247,20 @@ def test_random_projection_plan_no_python_no_shuffle(spark):
 # --- product quantization -----------------------------------------------------
 
 
-def test_pq_topk_recall_and_self_rank(spark):
+def test_pq_topk_recall_and_self_rank(spark, monkeypatch):
     """The query vector ranks itself first (its own codes reproduce it up
     to quantization residual); PQ top-10 overlaps the exact cosine top-10
     — measured, deterministic for the seeded codebooks."""
+    from ocr_spark.operators import similarity
     from ocr_spark.operators.similarity import cosine_topk, pq_topk
+
+    monkeypatch.setattr(similarity, "COSINE_TOPK", 10)
 
     df = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     pq = pq_topk(df).toPandas()
     assert pq.iloc[0].vec_id == 0  # the query itself
     exact = cosine_topk(df, [float(x) for x in df.where("vec_id = 0")
-                             .toPandas().embedding.iloc[0]], k=10).toPandas()
+                             .toPandas().embedding.iloc[0]]).toPandas()
     overlap = len(set(pq.vec_id) & set(exact.vec_id))
     assert overlap >= 3  # ANN: meaningful agreement, not exactness
     again = pq_topk(df).toPandas()

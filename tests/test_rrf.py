@@ -1,5 +1,6 @@
-"""Reciprocal-rank fusion."""
+"""Reciprocal-rank fusion, query expansion, more-like-this and snippets."""
 
+from ocr_spark.operators import index
 from ocr_spark.operators.index import RRF_K, rrf_fuse
 
 
@@ -10,7 +11,7 @@ def _ranked(spark, rows):
 def test_rrf_doc_in_both_lists_beats_single_list_winners(spark):
     a = _ranked(spark, [(1, 1), (2, 2), (3, 3)])
     b = _ranked(spark, [(3, 1), (4, 2)])
-    out = rrf_fuse([a, b], topk=10).collect()
+    out = rrf_fuse([a, b]).collect()
     assert out[0]["doc_id"] == 3  # rank 3 + rank 1 beats any single list
     scores = {r["doc_id"]: r["rrf_score"] for r in out}
     assert scores[3] == round(1 / (RRF_K + 3) + 1 / (RRF_K + 1), 6)
@@ -20,15 +21,16 @@ def test_rrf_doc_in_both_lists_beats_single_list_winners(spark):
 def test_rrf_tie_breaks_by_id(spark):
     a = _ranked(spark, [(7, 1), (5, 2)])
     b = _ranked(spark, [(5, 1), (7, 2)])
-    out = rrf_fuse([a, b], topk=2).collect()
+    out = rrf_fuse([a, b]).collect()
     # identical fused scores: lower id first
     assert [r["doc_id"] for r in out] == [5, 7]
     assert [r["fused_rank"] for r in out] == [1, 2]
 
 
-def test_rrf_topk_bound(spark):
+def test_rrf_topk_bound(spark, monkeypatch):
+    monkeypatch.setattr(index, "RRF_TOPK", 5)
     a = _ranked(spark, [(i, i) for i in range(1, 30)])
-    out = rrf_fuse([a], topk=5).collect()
+    out = rrf_fuse([a]).collect()
     assert len(out) == 5 and [r["fused_rank"] for r in out] == [1, 2, 3, 4, 5]
 
 
@@ -53,7 +55,7 @@ def test_more_like_this_ranks_shared_vocab_docs(spark):
     assert [r["rank"] for r in out] == list(range(1, len(out) + 1))
 
 
-def test_expansion_terms_prefers_feedback_cooccurring_terms(spark):
+def test_expansion_terms_prefers_feedback_cooccurring_terms(spark, monkeypatch):
     from ocr_spark.operators.index import expansion_terms
 
     docs = spark.createDataFrame(
@@ -69,7 +71,10 @@ def test_expansion_terms_prefers_feedback_cooccurring_terms(spark):
         ],
         "doc_id long, text string",
     )
-    out = expansion_terms(docs, ["query"], k_docs=3, k_terms=3).collect()
+    monkeypatch.setattr(index, "SEARCH_TERMS", ("query",))
+    monkeypatch.setattr(index, "BM25_TOPK", 3)
+    monkeypatch.setattr(index, "EXPANSION_K_TERMS", 3)
+    out = expansion_terms(docs).collect()
     assert out[0]["term"] == "cooc" and out[0]["rank"] == 1
     terms = {r["term"] for r in out}
     assert "query" not in terms          # seed excluded
@@ -77,7 +82,7 @@ def test_expansion_terms_prefers_feedback_cooccurring_terms(spark):
     assert "common" not in terms         # not in the feedback docs
 
 
-def test_snippets_densest_window_and_tiebreak(spark):
+def test_snippets_densest_window_and_tiebreak(spark, monkeypatch):
     from ocr_spark.operators.index import snippets
 
     filler = " ".join(f"f{i}" for i in range(20))
@@ -92,7 +97,8 @@ def test_snippets_densest_window_and_tiebreak(spark):
         ],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r for r in snippets(docs, ["alpha", "beta"]).collect()}
+    monkeypatch.setattr(index, "SEARCH_TERMS", ("alpha", "beta"))
+    out = {r["doc_id"]: r for r in snippets(docs).collect()}
     assert set(out) == {1, 2}
     assert out[1]["start"] == 40 and out[1]["n_hits"] == 2
     assert out[1]["snippet"].startswith("alpha beta")
@@ -100,7 +106,7 @@ def test_snippets_densest_window_and_tiebreak(spark):
     assert out[2]["snippet"].split()[0] == "beta"
 
 
-def test_snippets_straddling_run_scores_whole(spark):
+def test_snippets_straddling_run_scores_whole(spark, monkeypatch):
     """ADVICE r4 index.py item: two adjacent hits at positions 19 and 20
     straddle the aligned window boundary; the half-offset grid's [10,30)
     span must score them together (n_hits=2), not as two 1-hit windows."""
@@ -112,7 +118,8 @@ def test_snippets_straddling_run_scores_whole(spark):
     docs = spark.createDataFrame(
         [(1, " ".join(words))], "doc_id long, text string"
     )
-    out = snippets(docs, ["alpha"]).collect()
+    monkeypatch.setattr(index, "SEARCH_TERMS", ("alpha",))
+    out = snippets(docs).collect()
     assert len(out) == 1
     r = out[0]
     assert r["n_hits"] == 2 and r["start"] == 10
@@ -120,7 +127,7 @@ def test_snippets_straddling_run_scores_whole(spark):
     assert toks[9] == "alpha" and toks[10] == "alpha" and len(toks) == 20
 
 
-def test_snippets_dominate_aligned_windows_property(spark):
+def test_snippets_dominate_aligned_windows_property(spark, monkeypatch):
     """Property over a batch of constructed docs: the reported span's hit
     count is >= every aligned window's hit count (the half-offset grid
     can only improve on the old aligned-only scoring), and n_hits equals
@@ -138,7 +145,8 @@ def test_snippets_dominate_aligned_windows_property(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     from ocr_spark.operators.index import SNIPPET_WINDOW, snippets
 
-    out = {r["doc_id"]: r for r in snippets(docs, ["hit"]).collect()}
+    monkeypatch.setattr(index, "SEARCH_TERMS", ("hit",))
+    out = {r["doc_id"]: r for r in snippets(docs).collect()}
     w = SNIPPET_WINDOW
     for did, text in rows:
         toks = text.split()

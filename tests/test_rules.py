@@ -66,4 +66,4 @@ def test_pipeline_entry_calls_the_layer(monkeypatch, spark, tmp_path):
 
     _with(monkeypatch, "HEADING_TAGS", frozenset())
     with pytest.raises(RuleSanityError):
-        run_extract(spark, synth_pages(spark, 10), str(tmp_path / "t"), "run1")
+        run_extract(spark, synth_pages(spark, 10), str(tmp_path / "t"), "run1", chunks=4)

@@ -13,14 +13,14 @@ def _docs(spark, n=2000):
 
 def test_stratified_rates(spark):
     d = _docs(spark, 3000)
-    out = stratified_sample(d, {"en": 0.5, "zh": 0.25}, default_rate=0.05)
+    out = stratified_sample(d, {"en": 0.5, "zh": 0.25})
     frac = {
         r.lang: r.n / 1000
         for r in out.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     assert 0.4 < frac["en"] < 0.6
     assert 0.17 < frac["zh"] < 0.33
-    assert frac.get("de", 0) < 0.11
+    assert 0.05 < frac.get("de", 0) < 0.15   # STRATIFIED_DEFAULT_RATE = 0.1
 
 
 def test_contamination_finds_verbatim_and_embedded_copies(spark):
@@ -56,30 +56,33 @@ def test_contamination_common_gram_cap(spark):
     assert out == []
 
 
-def test_leakage_safe_split_group_atomic(spark):
+def test_leakage_safe_split_group_atomic(spark, monkeypatch):
     """Every group lands wholly in one split; the split is a deterministic
     function of the group key (rerun-identical), and eval_frac growth only
     moves whole groups train -> eval (nested, never reshuffled)."""
     from pyspark.sql import functions as F
 
+    from ocr_spark.operators import sampling
     from ocr_spark.operators.sampling import leakage_safe_split
 
     rows = [(i, f"host{i % 37}.org") for i in range(500)]
     df = spark.createDataFrame(rows, "doc_id long, host string").repartition(7)
 
-    out = leakage_safe_split(df, eval_frac=0.2)
+    monkeypatch.setattr(sampling, "LEAKAGE_EVAL_FRAC", 0.2)
+    out = leakage_safe_split(df)
     per_group = out.groupBy("host").agg(
         F.countDistinct("split").alias("n_splits")
     )
     assert per_group.where(F.col("n_splits") > 1).count() == 0
 
     again = {r["doc_id"]: r["split"]
-             for r in leakage_safe_split(df, eval_frac=0.2).collect()}
+             for r in leakage_safe_split(df).collect()}
     first = {r["doc_id"]: r["split"] for r in out.collect()}
     assert first == again
 
+    monkeypatch.setattr(sampling, "LEAKAGE_EVAL_FRAC", 0.5)
     wider = {r["doc_id"]: r["split"]
-             for r in leakage_safe_split(df, eval_frac=0.5).collect()}
+             for r in leakage_safe_split(df).collect()}
     for doc, split in first.items():
         if split == "eval":
             assert wider[doc] == "eval"  # nested: eval only ever grows

@@ -4,7 +4,7 @@ from ocr_spark.operators.incremental import (
     committed_state,
     incremental_status_against_state,
 )
-from ocr_spark.operators.sharding import shard_assignment
+from ocr_spark.operators.sharding import N_SHARDS, shard_assignment
 
 BASE = ("the quick brown fox jumps over the lazy dog and keeps going with "
         "plenty of additional prose so shingles and fingerprints are stable")
@@ -16,15 +16,15 @@ def _ids(spark, n):
 
 def test_shard_assignment_total_and_deterministic(spark):
     df = _ids(spark, 200)
-    a = sorted(shard_assignment(df, n_shards=8).collect())
-    b = sorted(shard_assignment(df.repartition(7), n_shards=8).collect())
+    a = sorted(shard_assignment(df).collect())
+    b = sorted(shard_assignment(df.repartition(7)).collect())
     assert a == b                                  # partitioning-invariant
     assert len(a) == 200
-    assert {r["shard"] for r in a} <= set(range(8))
+    assert {r["shard"] for r in a} <= set(range(N_SHARDS))
 
 
 def test_shard_positions_are_dense_per_shard(spark):
-    out = shard_assignment(_ids(spark, 300), n_shards=4).collect()
+    out = shard_assignment(_ids(spark, 300)).collect()
     by_shard = {}
     for r in out:
         by_shard.setdefault(r["shard"], []).append(r["pos"])
@@ -35,9 +35,9 @@ def test_shard_positions_are_dense_per_shard(spark):
 def test_shard_scatter_breaks_input_locality(spark):
     """Consecutive ids must not land in the same shard en masse."""
     out = {r["doc_id"]: r["shard"] for r in
-           shard_assignment(_ids(spark, 64), n_shards=8).collect()}
+           shard_assignment(_ids(spark, 64)).collect()}
     runs = sum(1 for i in range(1, 64) if out[i] == out[i - 1])
-    assert runs < 20      # E[runs] = 63/8 ~ 8 for a uniform scatter
+    assert runs < 20      # E[runs] = 63/16 ~ 4 for a uniform scatter
 
 
 def test_shard_seed_changes_assignment(spark):
@@ -49,10 +49,10 @@ def test_shard_seed_changes_assignment(spark):
     from ocr_spark.operators.sharding import SHARD_SEED
 
     def md5_shard(prefix, i):
-        return int(hashlib.md5(f"{prefix}{i}".encode()).hexdigest()[:8], 16) % 8
+        return int(hashlib.md5(f"{prefix}{i}".encode()).hexdigest()[:8], 16) % N_SHARDS
 
     got = {r["doc_id"]: r["shard"] for r in
-           shard_assignment(_ids(spark, 100), n_shards=8).collect()}
+           shard_assignment(_ids(spark, 100)).collect()}
     assert got == {i: md5_shard(SHARD_SEED + ":", i) for i in range(100)}
     assert got != {i: md5_shard("", i) for i in range(100)}
 
@@ -73,7 +73,8 @@ def test_incremental_statuses(spark):
         "doc_id long, text string",
     )
     got = {r["doc_id"]: r["status"] for r in
-           incremental_status_against_state(new, committed_state(committed)).collect()}
+           incremental_status_against_state(new, committed_state(committed), None)
+           .collect()}
     assert got == {100: "exact_seen", 101: "near_seen",
                    102: "new", 103: "exact_seen"}
 
@@ -105,7 +106,7 @@ def test_persisted_state_path_never_rereads_committed_text(spark, tmp_path):
     )
     state = spark.read.parquet(state_dir)
     assert "text" not in state.columns
-    out = incremental_status_against_state(new, state)
+    out = incremental_status_against_state(new, state, None)
     files = out.inputFiles()
     assert any(state_dir in f for f in files)           # state IS scanned
     assert not any(committed_dir in f for f in files)   # committed text is NOT
@@ -125,7 +126,8 @@ def test_intra_batch_duplicates_stay_new(spark):
         [(200, BASE), (201, BASE)], "doc_id long, text string"
     )
     got = {r["doc_id"]: r["status"] for r in
-           incremental_status_against_state(new, committed_state(committed)).collect()}
+           incremental_status_against_state(new, committed_state(committed), None)
+           .collect()}
     assert got == {200: "new", 201: "new"}
 
 
@@ -142,17 +144,17 @@ def test_shard_manifest_detects_order_and_content_drift(spark):
         F.col("id").alias("doc_id"),
         F.concat(F.lit("text "), F.col("id").cast("string")).alias("text"),
     )
-    base = shard_manifest(docs, n_shards=8).toPandas().set_index("shard")
+    base = shard_manifest(docs).toPandas().set_index("shard")
     assert base.n_docs.sum() == 300
-    again = shard_manifest(docs.repartition(7), n_shards=8).toPandas().set_index("shard")
+    again = shard_manifest(docs.repartition(7)).toPandas().set_index("shard")
     assert base.equals(again)
 
     mutated = docs.withColumn(
         "text",
         F.when(F.col("doc_id") == 5, F.lit("changed")).otherwise(F.col("text")),
     )
-    mut = shard_manifest(mutated, n_shards=8).toPandas().set_index("shard")
-    hit = shard_assignment(docs, n_shards=8).where("doc_id = 5").collect()[0].shard
+    mut = shard_manifest(mutated).toPandas().set_index("shard")
+    hit = shard_assignment(docs).where("doc_id = 5").collect()[0].shard
     for s in base.index:
         if s == hit:
             assert mut.loc[s, "content_fp"] != base.loc[s, "content_fp"]
@@ -187,7 +189,7 @@ def test_incremental_band_store_path_row_identical(spark, tmp_path):
     state = committed_state(committed)
     base = sorted(
         (r["doc_id"], r["status"])
-        for r in incremental_status_against_state(batch, state).collect()
+        for r in incremental_status_against_state(batch, state, None).collect()
     )
     write_band_store(state, "bkt_band_eq", str(tmp_path / "beq"))
     try:

@@ -66,10 +66,10 @@ def test_hll_duplicates_do_not_move_the_estimate(spark):
 
 def test_hll_accuracy_columns(spark):
     df = spark.range(200).select(
-        (F.col("id") % 2).cast("string").alias("grp"),
-        F.concat(F.lit("k"), F.col("id")).alias("key"),
+        (F.col("id") % 2).cast("string").alias("lang"),
+        F.concat(F.lit("k"), F.col("id")).alias("text"),
     )
-    rows = {r["grp"]: r for r in hll_accuracy(df, "grp", "key").collect()}
+    rows = {r["grp"]: r for r in hll_accuracy(df).collect()}
     assert set(rows) == {"0", "1"}
     for r in rows.values():
         assert r["exact_distinct"] == 100
@@ -142,10 +142,10 @@ def test_dd_quantiles_within_relative_error_bound(spark):
 
     rng = np.random.RandomState(7)
     vals = np.exp(rng.normal(5, 1.5, 20_000)).astype("int64")
-    df = spark.createDataFrame([(int(v),) for v in vals], "x long").select(
-        F.lit("g").alias("g"), "x"
+    df = spark.createDataFrame([(int(v),) for v in vals], "n_chars long").select(
+        F.lit("g").alias("g"), "n_chars"
     )
-    for r in dd_sketch_quantiles(df, "g", "x").collect():
+    for r in dd_sketch_quantiles(df, "g").collect():
         exact = float(np.percentile(vals, r["q"] * 100, method="inverted_cdf"))
         assert abs(r["est_value"] - exact) / exact <= 0.0625, (r["q"], r["est_value"], exact)
         assert r["n"] == 20_000
@@ -155,9 +155,9 @@ def test_dd_small_values_are_exact(spark):
     from ocr_spark.operators.sketches import dd_sketch_quantiles
 
     df = spark.createDataFrame(
-        [("g", v) for v in (0, 1, 2, 3, 4, 5, 6, 7, 8, 9)], "g string, x long"
+        [("g", v) for v in (0, 1, 2, 3, 4, 5, 6, 7, 8, 9)], "g string, n_chars long"
     )
-    got = {r["q"]: r["est_value"] for r in dd_sketch_quantiles(df, "g", "x").collect()}
+    got = {r["q"]: r["est_value"] for r in dd_sketch_quantiles(df, "g").collect()}
     assert got[0.5] == 4.0   # ceil(0.5*10) = 5th smallest (inverted CDF) = 4
     assert got[0.99] == 9.0  # ceil(0.99*10) = 10th smallest = 9
 
@@ -166,9 +166,9 @@ def test_dd_nulls_and_negatives_out_of_domain(spark):
     from ocr_spark.operators.sketches import dd_buckets
 
     df = spark.createDataFrame(
-        [("g", 5), ("g", None), ("g", -3)], "g string, x long"
+        [("g", 5), ("g", None), ("g", -3)], "g string, n_chars long"
     )
-    regs = dd_buckets(df, "g", "x").collect()
+    regs = dd_buckets(df, "g").collect()
     assert len(regs) == 1 and regs[0]["bucket"] == 5 and regs[0]["cnt"] == 1
 
 

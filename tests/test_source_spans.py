@@ -40,7 +40,7 @@ def test_exact_spans_crafted():
     assert (hello.src_start, hello.src_end) == (h.index("<p>") + 3, h.index("</p>"))
     title = by_text["Title"]
     assert h[title.src_start:title.src_end] == "Title"
-    assert title.heading
+    assert title.level == 1
     x = by_text["x"]
     assert h[x.src_start:x.src_end] == "x"
 
@@ -120,6 +120,6 @@ def test_operator_never_drops_a_url(spark):
     from ocr_spark.sources.pages import synth_pages
 
     pages = synth_pages(spark, 200)
-    out = extract_page_spans(pages, repartition=True)
+    out = extract_page_spans(pages)
     urls = {r.url for r in out.select("url").distinct().collect()}
     assert len(urls) == 200

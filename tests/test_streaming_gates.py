@@ -75,11 +75,13 @@ def test_code_detect_streams(spark, docs_dir, tmp_path):
     _stream_vs_batch(spark, docs_dir, tmp_path, code_detect, "code")
 
 
-def test_bpe_encode_streams(spark, docs_dir, tmp_path):
-    from ocr_spark.core.bpe import build_word_map
+def test_bpe_encode_streams(spark, docs_dir, tmp_path, monkeypatch):
+    from ocr_spark.core import bpe
     from ocr_spark.operators.tokenizer import bpe_encode
 
-    wm = build_word_map({"data": 5, "table": 4, "join": 3}, n_merges=10)
+    monkeypatch.setattr(bpe, "BPE_TRAIN_COUNTS", {"data": 5, "table": 4, "join": 3})
+    monkeypatch.setattr(bpe, "BPE_N_MERGES", 10)
+    wm = bpe.build_word_map()
     _stream_vs_batch(
         spark, docs_dir, tmp_path, lambda df: bpe_encode(df, wm), "bpe"
     )

@@ -128,10 +128,10 @@ class TestMultimodal:
 
         df = spark.createDataFrame(
             [("png", self.PNG_800x600)], "url string, html binary")
-        out = image_resize(df, max_side=400).toPandas().iloc[0]
+        out = image_resize(df).toPandas().iloc[0]
         assert out.decoder == "header"
         assert (out.width, out.height) == (800, 600)
-        assert (out.resized_w, out.resized_h) == (400, 300)
+        assert (out.resized_w, out.resized_h) == (512, 384)
 
     def test_media_features_deterministic(self, spark):
         df = synth_pages(spark, 60)
@@ -160,13 +160,14 @@ def test_image_resize_geometry(spark):
     from ocr_spark.operators.multimodal import image_resize, resize_dims
 
     # pure arithmetic invariants
-    assert resize_dims(1000, 500, 512) == (512, 256)
-    assert resize_dims(500, 1000, 512) == (256, 512)
-    assert resize_dims(100, 50, 512) == (100, 50)      # never upscale
-    assert resize_dims(10000, 3, 512) == (512, 1)      # floor >= 1
+    # RESIZE_MAX_SIDE = 512
+    assert resize_dims(1000, 500) == (512, 256)
+    assert resize_dims(500, 1000) == (256, 512)
+    assert resize_dims(100, 50) == (100, 50)      # never upscale
+    assert resize_dims(10000, 3) == (512, 1)      # floor >= 1
 
     pages = synth_pages(spark, 30, num_partitions=2)
-    out = image_resize(pages, max_side=512).toPandas()
+    out = image_resize(pages).toPandas()
     assert len(out) == 30
     assert (out[["resized_w", "resized_h"]].max(axis=1) <= 512).all()
     ok = out[out.decoder == "stub"]
@@ -292,7 +293,7 @@ class TestAVHeaders:
 
         rows = [("w", self.WAV_1S), ("v", self.MP4_2500MS),
                 ("m", self.MP3_100MS), ("x", b"not media"), ("n", None)]
-        df = spark.createDataFrame(rows, "url string, html binary")
+        df = spark.createDataFrame(rows, "url string, payload binary")
         out = av_features(df).toPandas().set_index("id")
         assert out.loc["w", "decoder"] == "header"
         assert int(out.loc["w", "duration_ms"]) == 1000

@@ -3,6 +3,7 @@
 answer is known by construction; exact cross-engine parity runs in
 test_oracle_parity (script_stats / code_detect)."""
 
+from ocr_spark.operators import textprofile
 from ocr_spark.operators.textprofile import code_detect, script_stats
 
 
@@ -76,7 +77,7 @@ def test_token_exact_keywords_no_substring_hits(spark):
     assert r.kw_hits == 0 and not r.is_code
 
 
-def test_vocab_growth_construction_truth(spark):
+def test_vocab_growth_construction_truth(spark, monkeypatch):
     """Known tiny corpus: checkpoints count types by FIRST occurrence and
     tokens by strict document prefix."""
     from ocr_spark.operators.textprofile import vocab_growth
@@ -90,10 +91,8 @@ def test_vocab_growth_construction_truth(spark):
         ],
         "doc_id long, text string",
     )
-    out = {
-        r["n_docs"]: r
-        for r in vocab_growth(docs, checkpoints=[1, 2, 4, 8]).collect()
-    }
+    monkeypatch.setattr(textprofile, "VOCAB_CHECKPOINTS", [1, 2, 4, 8])
+    out = {r["n_docs"]: r for r in vocab_growth(docs).collect()}
     assert (out[1]["n_tokens"], out[1]["vocab_size"]) == (3, 3)
     assert (out[2]["n_tokens"], out[2]["vocab_size"]) == (7, 4)
     assert (out[4]["n_tokens"], out[4]["vocab_size"]) == (8, 5)
@@ -114,14 +113,14 @@ def test_vocab_growth_plan_no_python_broadcast_checkpoints(spark):
         F.concat(F.lit("tok"), (F.col("id") % 37)).alias("text"),
     )
     plan = (
-        vocab_growth(docs, checkpoints=[16, 64])
+        vocab_growth(docs)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Python" not in plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_vocab_growth_monotone_property(spark):
+def test_vocab_growth_monotone_property(spark, monkeypatch):
     """Property: both cumulative counts are non-decreasing in n_docs and
     vocab_size never exceeds n_tokens."""
     import pyspark.sql.functions as F
@@ -135,7 +134,8 @@ def test_vocab_growth_monotone_property(spark):
     )
     from ocr_spark.operators.textprofile import vocab_growth
 
-    rows = vocab_growth(docs, checkpoints=[1, 4, 16, 64, 256, 1024]).collect()
+    monkeypatch.setattr(textprofile, "VOCAB_CHECKPOINTS", [1, 4, 16, 64, 256, 1024])
+    rows = vocab_growth(docs).collect()
     for prev, cur in zip(rows, rows[1:]):
         assert cur["n_tokens"] >= prev["n_tokens"]
         assert cur["vocab_size"] >= prev["vocab_size"]

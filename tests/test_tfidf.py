@@ -12,7 +12,7 @@ def test_tfidf_distinctive_terms_rank_first(spark):
         (2, "common words there too"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = tfidf_top_terms(df, k=2).toPandas()
+    out = tfidf_top_terms(df).toPandas()
     by_doc = {d: list(g.sort_values("rank").term) for d, g in out.groupby("doc_id")}
     # 'zebra' appears only in doc 0: highest idf there; 'common' is in every
     # doc so its smoothed idf is 0 and it can never outrank a unique term

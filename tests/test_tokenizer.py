@@ -3,6 +3,9 @@
 encode projection's contracts. Exact cross-engine parity of the apply
 runs in test_oracle_parity (bpe_tokens)."""
 
+from unittest import mock
+
+from ocr_spark.core import bpe
 from ocr_spark.core.bpe import (
     _apply_merge,
     build_word_map,
@@ -11,18 +14,25 @@ from ocr_spark.core.bpe import (
 )
 
 
+def fitted(fn, counts, n_merges):
+    """``fn()`` (``fit_bpe`` or ``build_word_map``) trained on ``counts``
+    and ``n_merges`` instead of the shipped ones."""
+    with mock.patch.multiple(bpe, BPE_TRAIN_COUNTS=counts, BPE_N_MERGES=n_merges):
+        return fn()
+
+
 def test_fit_bpe_hand_computed():
     # counts: 'aab' x3, 'ab' x2. Pair counts round 1:
     #   (a,a)=3, (a,b)=3+2=5 -> merge ('a','b')
     # round 2: 'a ab' x3, 'ab' x2 -> (a,ab)=3 -> merge ('a','ab')
     # round 3: 'aab' whole, 'ab' whole -> no pair with count >= 2 -> stop
-    merges = fit_bpe({"aab": 3, "ab": 2}, n_merges=10)
+    merges = fitted(fit_bpe, {"aab": 3, "ab": 2}, 10)
     assert merges == [("a", "b"), ("a", "ab")]
 
 
 def test_fit_bpe_tie_breaks_lexicographically():
     # 'xy' x2 and 'ab' x2: both pairs count 2 -> smallest pair first
-    merges = fit_bpe({"xy": 2, "ab": 2}, n_merges=1)
+    merges = fitted(fit_bpe, {"xy": 2, "ab": 2}, 1)
     assert merges == [("a", "b")]
 
 
@@ -40,7 +50,7 @@ def test_encode_word_rank_order():
 
 
 def test_build_word_map_covers_fitted_words():
-    wm = build_word_map({"hash": 5, "has": 3}, n_merges=10)
+    wm = fitted(build_word_map, {"hash": 5, "has": 3}, 10)
     assert set(wm) == {"hash", "has"}
     # every token re-concatenates to the word
     for w, t in wm.items():
@@ -50,7 +60,7 @@ def test_build_word_map_covers_fitted_words():
 def test_bpe_encode_contracts(spark):
     from ocr_spark.operators.tokenizer import bpe_encode
 
-    wm = build_word_map({"spark": 4, "merge": 3}, n_merges=10)
+    wm = fitted(build_word_map, {"spark": 4, "merge": 3}, 10)
     rows = [(0, "spark merge"), (1, "spark UNKNOWNWORD"), (2, None)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {r.doc_id: r for r in bpe_encode(df, wm).collect()}

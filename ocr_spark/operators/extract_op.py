@@ -98,13 +98,10 @@ def _span_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def _bytes_conf(spark, key: str, default: int) -> int:
-    """Parse a Spark byte-size conf ('134217728b', '128m', plain int)."""
-    raw = str(spark.conf.get(key, str(default))).strip().lower()
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "b": 1}
-    mult = units.get(raw[-1:], None)
-    if mult is not None and raw[:-1].isdigit():
-        return int(raw[:-1]) * mult
-    return int(raw) if raw.isdigit() else default
+    """A Spark byte-size conf in bytes, parsed by the JVM's own parser
+    ('134217728b', '128m', '64mb', '1g', plain int = bytes)."""
+    raw = spark.conf.get(key, str(default))
+    return int(spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw))
 
 
 def _estimated_scan_partitions(df: DataFrame) -> int:

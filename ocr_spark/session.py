@@ -9,6 +9,11 @@ Defaults are chosen for the 100 TB design point and scale down to local:
 - Arrow batch 4096 rows ≈ 16 MB of html payloads: pipelines the
   Python workers and caps their peak memory; measured at parity with
   larger batches on the pinned scaling levels.
+- Python workers forked from the engine's daemon (``ocr_spark._daemon``),
+  which skips the per-task import-cache flush when a task changed nothing
+  on the import path. ``spark.python.daemon.module`` is a static conf: only
+  ``get_spark``, which builds the context, can set it; ``apply_engine_conf``
+  cannot, and a spark-submit session gets it from ``--conf``.
 """
 
 from __future__ import annotations
@@ -44,6 +49,9 @@ def default_partitions(spark: SparkSession) -> int:
 
 
 def apply_engine_conf(spark: SparkSession) -> SparkSession:
+    """Apply ``ENGINE_SQL_CONF`` to a running session. The worker daemon key
+    (``spark.python.daemon.module``) is static, so it cannot be set here;
+    pass it to spark-submit with ``--conf``."""
     for k, v in ENGINE_SQL_CONF.items():
         spark.conf.set(k, v)
     return spark
@@ -66,6 +74,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("OCR_SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "ocr_spark._daemon")
     )
     for k, v in {**ENGINE_SQL_CONF, **(extra_conf or {})}.items():
         b = b.config(k, v)

@@ -268,6 +268,23 @@ def test_scan_estimate_is_a_lower_bound_that_auto_trusts(spark, tmp_path, layout
     assert exchanges == (1 if layout == "one_file" else 0)
 
 
+@pytest.mark.parametrize("raw,expected", [
+    ("128m", 128 << 20), ("64mb", 64 << 20), ("256kb", 256 << 10),
+    ("1gb", 1 << 30), ("134217728b", 134217728), ("4194304", 4194304),
+])
+def test_bytes_conf_reads_every_spark_size_suffix(spark, raw, expected):
+    """The "auto" probe reads ``maxPartitionBytes`` as Spark does, two-letter
+    suffixes included."""
+    from ocr_spark.operators.extract_op import _bytes_conf
+
+    key = "spark.sql.files.maxPartitionBytes"
+    spark.conf.set(key, raw)
+    try:
+        assert _bytes_conf(spark, key, 1) == expected
+    finally:
+        spark.conf.unset(key)
+
+
 def test_blockwords_zero_shuffle(spark):
     # the C4 wordlist gate is a stateless projection: streaming-safe,
     # no exchange at any scale

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ocr_spark.functions.text import (
     TOKEN_PATTERN,
+    canonical_words,
     fingerprint_md5,
     lang_id,
     punct_ratio,
@@ -979,16 +980,7 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     toks = F.filter(
-        F.split(
-            F.trim(
-                F.regexp_replace(
-                    F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                    "[ \t\n]+", " ",
-                )
-            ),
-            " ",
-        ),
-        lambda x: x != "",
+        canonical_words(F.coalesce(F.col("text"), F.lit(""))), lambda x: x != ""
     )
     boost = F.slice(toks, 1, 10)
     toks_b = F.when(
@@ -1545,10 +1537,7 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where("doc_id < 1000")
         .select("doc_id", "text")
     )
-    norm = F.trim(
-        F.regexp_replace(F.lower(F.coalesce(F.col("text"), F.lit(""))), "[ \t\n]+", " ")
-    )
-    toks = F.split(norm, " ")
+    toks = canonical_words(F.coalesce(F.col("text"), F.lit("")))
     vid = F.col("doc_id") + 500000
     p = F.lit(4) + (F.col("doc_id") % 8) * 6
     mutated = F.transform(
@@ -1786,17 +1775,11 @@ def q_decontam_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents (and any document sharing one of the 8-grams) must come
     back with exactly that region excised and everything else intact.
     Exact DuckDB twin."""
-    from ocr_spark.functions.text import normalized_for_fingerprint
     from ocr_spark.operators.spans import decontaminate_spans
 
     d = _t(spark, sf_dir, "documents")
     bench = d.where(F.col("doc_id") % 9 == 0).select(
-        F.concat_ws(
-            " ",
-            F.slice(
-                F.split(normalized_for_fingerprint(F.col("text")), " "), 1, 12
-            ),
-        ).alias("text")
+        F.concat_ws(" ", F.slice(canonical_words(F.col("text")), 1, 12)).alias("text")
     )
     return decontaminate_spans(d, bench)
 

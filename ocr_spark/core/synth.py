@@ -159,13 +159,18 @@ def build_pdf(paragraphs: list[str], flate: bool) -> bytes:
     return bytes(out)
 
 
+def page_ts(i: int) -> dt.datetime:
+    """Capture time of row i: a function of i alone, the same under every seed."""
+    return _EPOCH + dt.timedelta(seconds=(i * 37) % 2_592_000)
+
+
 def gen_page(i: int, seed: int) -> dict:
     """Row i -> one pages-table record (pure function of (seed, i))."""
     r = _rng(i, seed)
     lang = r.choice(_LANGS)
     host = _host(r)
     url = f"https://{host}/p/{seed}/{i}"
-    ts = _EPOCH + dt.timedelta(seconds=(i * 37) % 2_592_000)
+    ts = page_ts(i)
     kind = r.random()
     text_col = None
     if kind < 0.55:

@@ -31,9 +31,21 @@ def _col(c) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
+def _regex_tokens(c: Column) -> Column:
+    return F.regexp_extract_all(c, F.lit(TOKEN_PATTERN), F.lit(0))
+
+
 def token_count(c) -> Column:
     """Number of word tokens (BPE-ish regex token counting)."""
-    return F.size(F.regexp_extract_all(_col(c), F.lit(TOKEN_PATTERN), F.lit(0))).cast("long")
+    return F.size(_regex_tokens(_col(c))).cast("long")
+
+
+def word_tokens(c) -> Column:
+    """The lowercased ``TOKEN_PATTERN`` token array every word-level
+    operator (stopwords, tf-idf, BM25, feature hashing, vocab encoding)
+    reads. NULL text gives NULL; callers that need a row per document
+    pass a coalesced column."""
+    return _regex_tokens(F.lower(_col(c)))
 
 
 def whitespace_token_count(c) -> Column:
@@ -55,7 +67,7 @@ def punct_ratio(c) -> Column:
 
 def stopword_ratio(c) -> Column:
     """Stopword tokens / word tokens (0.0 when no tokens)."""
-    toks = F.regexp_extract_all(F.lower(_col(c)), F.lit(TOKEN_PATTERN), F.lit(0))
+    toks = word_tokens(c)
     stops = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
     n = F.size(toks)
     return F.when(n == 0, F.lit(0.0)).otherwise(stops.cast("double") / n.cast("double"))
@@ -97,10 +109,32 @@ def normalized_for_fingerprint(c) -> Column:
     return F.trim(F.regexp_replace(F.lower(_col(c)), "[ \t\n]+", " "))
 
 
+def canonical_words(c) -> Column:
+    """``normalized_for_fingerprint`` split on single spaces: the word
+    stream of the dedup, span and n-gram operators ('' gives [''])."""
+    return F.split(normalized_for_fingerprint(c), " ")
+
+
 def fingerprint_md5(c) -> Column:
     """Deterministic document fingerprint (hex md5 of canonical form) —
     engine-portable (same value in DuckDB: md5(...))."""
     return F.md5(F.encode(normalized_for_fingerprint(c), "UTF-8"))
+
+
+def md5_prefix_long(c, digits: int) -> Column:
+    """The first ``digits`` hex digits of md5 as a signed long: the
+    engine's portable hash family (DuckDB:
+    ``('0x' || substr(md5(x), 1, digits))::BIGINT``). 8 digits give the
+    32-bit base hash; 15 is the largest prefix whose conv() to decimal
+    stays inside signed 64-bit in both engines."""
+    return F.conv(F.substring(F.md5(_col(c)), 1, digits), 16, 10).cast("long")
+
+
+def ordered_collect(entry: Column, field: str) -> Column:
+    """Aggregate: ``field`` of each collected ``(pos, field)`` struct in
+    pos order. collect_list skips NULLs, so a ``when(keep, struct(...))``
+    entry collects the kept units only."""
+    return F.transform(F.array_sort(F.collect_list(entry)), lambda s: s[field])
 
 
 # Sentence = a maximal run of non-terminators plus its trailing

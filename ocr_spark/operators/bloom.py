@@ -30,8 +30,8 @@ broadcasts when it fits and shuffle-joins when it doesn't — either way
 the probe side moves only (id, block, mask), never the payload.
 
 Hashing is the same md5-seeded Carter-Wegman family as the minhash
-pipeline (operators/dedup.py:98-115) — base = first 15 hex digits of
-md5(key), h_i = (a_i * (base mod P) + b_i) mod P over P = 2^31-1 —
+pipeline (``dedup.MINHASH_AB``) — base = ``md5_prefix_long(key, 15)``, the
+first 15 hex digits of md5(key), h_i = (a_i * (base mod P) + b_i) mod P over P = 2^31-1 —
 chosen so every step (md5, substr, hex cast, *, +, %, <<, &, bit_or)
 exists verbatim in DuckDB and the whole filter has an exact SQL twin.
 Bit positions are taken mod 63 (bits 0..62) so shifted masks stay
@@ -58,6 +58,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import md5_prefix_long
+
 BLOOM_K = 4  # bits set per key (within the key's one block)
 # blocks in the filter: part of its identity, shared with the DuckDB twin
 # of q_bloom_gate so the bit layout cannot drift
@@ -79,9 +81,9 @@ def _block_and_mask(key_col):
     """(block, mask) expression pair for one key column over
     ``BLOOM_N_BLOCKS`` blocks (read at call time). The base hash is
     the first 15 hex digits of md5 (< 2^60, the largest prefix that stays
-    signed-64 in both engines, like dedup.py's line hash); all family
+    signed-64 in both engines); all family
     arithmetic stays non-negative so % == pmod in both engines."""
-    base = F.conv(F.substring(F.md5(key_col), 1, 15), 16, 10).cast("long") % _BB_P
+    base = md5_prefix_long(key_col, 15) % _BB_P
     hs = [(F.lit(a) * base + F.lit(b)) % _BB_P for a, b in BLOOM_AB]
     block = (hs[0] % F.lit(BLOOM_N_BLOCKS)).alias("block")
     return block, [(h % F.lit(63)).cast("int") for h in hs[1:]]

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import TOKEN_PATTERN
+from ..functions.text import md5_prefix_long, word_tokens
 
 DEFAULT_N_BUCKETS = 1 << 18
 CLF_SEED = "qclf-1"  # feature hashing and the synthetic weights share it
@@ -48,20 +48,14 @@ DEFAULT_BIAS = 0.0
 DEFAULT_THRESHOLD = 0.5
 
 
-def _md5_long(c: Column) -> Column:
-    """First 32 bits of md5 as a long — the portable hash family
-    (DuckDB: ('0x' || substr(md5(x), 1, 8))::BIGINT)."""
-    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
-
-
 def feature_bucket(feat: Column, n_buckets: int, seed: str) -> Column:
-    return F.pmod(_md5_long(F.concat(F.lit(seed + ":"), feat)), F.lit(n_buckets))
+    return F.pmod(md5_prefix_long(F.concat(F.lit(seed + ":"), feat), 8), F.lit(n_buckets))
 
 
 def synthetic_weight(bucket: Column) -> Column:
     """Pure-expression model: weight(bucket) in [-0.5, 0.5), uniform-ish,
     deterministic, replayable in SQL, seeded with ``CLF_SEED``."""
-    h = _md5_long(F.concat(F.lit(CLF_SEED + ":w:"), bucket.cast("string")))
+    h = md5_prefix_long(F.concat(F.lit(CLF_SEED + ":w:"), bucket.cast("string")), 8)
     return (h % 10000).cast("double") / 10000.0 - 0.5
 
 
@@ -74,8 +68,7 @@ def hashed_feature_stream(
     stream shared by the classifier gate and the DSIR importance weights.
     ``explode_outer`` keeps empty/NULL-text documents as one NULL-bucket
     row, so no document ever vanishes from a downstream aggregate."""
-    text = F.coalesce(F.col("text"), F.lit(""))
-    toks = F.regexp_extract_all(F.lower(text), F.lit(TOKEN_PATTERN), F.lit(0))
+    toks = word_tokens(F.coalesce(F.col("text"), F.lit("")))
     bigrams = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
         F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),

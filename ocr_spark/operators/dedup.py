@@ -29,7 +29,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from ..functions.text import fingerprint_md5, normalized_for_fingerprint
+from ..functions.text import (
+    canonical_words,
+    fingerprint_md5,
+    md5_prefix_long,
+    normalized_for_fingerprint,
+    ordered_collect,
+)
 
 MINHASH_PERMS = 32          # signature length
 LSH_BANDS = 8               # bands of 4 -> catches jaccard >~ 0.6
@@ -79,7 +85,7 @@ def exact_dedup_groups(df: DataFrame) -> DataFrame:
 def _shingles():
     """Word n-gram shingle array of the ``text`` column, all JVM-side:
     lower -> split -> transform over index range (no Python, no explode)."""
-    toks = F.split(normalized_for_fingerprint("text"), " ")
+    toks = canonical_words("text")
     n = F.size(toks)
     idx = F.sequence(F.lit(0), F.greatest(n - SHINGLE_N, F.lit(0)))
     return F.when(n < SHINGLE_N, F.array(F.concat_ws(" ", toks))).otherwise(
@@ -119,11 +125,6 @@ def _mh_constants() -> list[tuple[int, int]]:
 MINHASH_AB = _mh_constants()
 
 
-def _base_hash(col):
-    """First 32 bits of md5 as a long — portable across Spark and SQL."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
                        extra: tuple = ()) -> DataFrame:
     """(id, [extra...], shingles, sig: array<long>[MINHASH_PERMS]) — min over
@@ -136,7 +137,7 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     """
     base = df.select(
         F.col(id_col), *extra, _shingles().alias("shingles")
-    ).withColumn("bh", F.transform(F.col("shingles"), _base_hash))
+    ).withColumn("bh", F.transform(F.col("shingles"), lambda s: md5_prefix_long(s, 8)))
 
     def perm(a: int, b: int):
         # closure factory: pyspark infers lambda arity from the FULL python
@@ -271,7 +272,7 @@ def lsh_recall_audit(df: DataFrame) -> DataFrame:
     shh = sigs.select(
         F.col("doc_id").alias("id"),
         F.explode(
-            F.array_distinct(F.transform("shingles", _base_hash))
+            F.array_distinct(F.transform("shingles", lambda s: md5_prefix_long(s, 8)))
         ).alias("shh"),
     )
     tc = (
@@ -351,7 +352,7 @@ def _distinct_tokens(df: DataFrame) -> DataFrame:
     return df.select(
         F.col("doc_id").alias("id"),
         F.explode(
-            F.array_distinct(F.split(normalized_for_fingerprint("text"), " "))
+            F.array_distinct(canonical_words("text"))
         ).alias("tok"),
     ).where(F.col("tok") != "")
 
@@ -487,9 +488,7 @@ def simhash64(df: DataFrame) -> DataFrame:
             out[i] = np.int64(sig.astype(np.int64))
         return pd.Series(out)
 
-    toks = F.filter(
-        F.split(normalized_for_fingerprint("text"), " "), lambda x: x != ""
-    )
+    toks = F.filter(canonical_words("text"), lambda x: x != "")
     return df.select(F.col("doc_id"), _simhash(toks).alias("simhash"))
 
 
@@ -515,7 +514,7 @@ def contamination_check(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     corpus document.
     """
     def grams(df: DataFrame, out_id: str) -> DataFrame:
-        toks = F.split(normalized_for_fingerprint("text"), " ")
+        toks = canonical_words("text")
         cnt = F.size(toks)
         idx = F.sequence(F.lit(0), F.greatest(cnt - CONTAM_NGRAM, F.lit(0)))
         arr = F.when(cnt < CONTAM_NGRAM, F.array().cast("array<string>")).otherwise(
@@ -523,7 +522,7 @@ def contamination_check(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
         )
         return df.select(
             F.col("doc_id").alias(out_id), F.explode(arr).alias("gram")
-        ).select(out_id, _base_hash(F.col("gram")).alias("g"))
+        ).select(out_id, md5_prefix_long("gram", 8).alias("g"))
 
     bench = grams(benchmark, "bench_id").distinct()
     rare = (
@@ -716,6 +715,24 @@ def winnow_pairs(df: DataFrame) -> DataFrame:
     )
 
 
+def _drop_hot_units(units: DataFrame, hot: DataFrame, key, unit: str,
+                    sep: str, group: list) -> DataFrame:
+    """The removal half of the boilerplate family: left-join the
+    ``(id, pos, unit)`` rows to the ``hot`` key set on ``key``, drop every
+    hot non-blank unit (blank units are structure, never dropped) and
+    reassemble each ``group``'s survivors in pos order joined by ``sep``.
+    Returns (*group, text, n_units, n_dropped)."""
+    kept = units.join(hot.withColumn("hot", F.lit(True)), key, "left").withColumn(
+        "drop", F.col("hot").isNotNull() & (F.trim(unit) != "")
+    )
+    survivor = F.when(~F.col("drop"), F.struct(F.col("pos"), F.col(unit)))
+    return kept.groupBy(*group).agg(
+        F.array_join(ordered_collect(survivor, unit), sep).alias("text"),
+        F.count(F.lit(1)).alias("n_units"),
+        F.sum(F.col("drop").cast("long")).alias("n_dropped"),
+    )
+
+
 LINE_MAX_DF = 16        # lines in more docs than this are boilerplate
 
 
@@ -736,7 +753,7 @@ def line_dedup(df: DataFrame) -> DataFrame:
     re-aggregation per document. Empty/whitespace-only lines are
     structural, not content: they are never counted and never dropped.
     Exactly SQL-replayable (``__spark_entry__._line_dedup_oracle``)."""
-    lh = F.conv(F.substring(F.md5(F.trim(F.col("line"))), 1, 15), 16, 10).cast("long")
+    lh = md5_prefix_long(F.trim(F.col("line")), 15)
     lines = df.select(
         F.col("doc_id").alias("id"),
         # \r?\n: CRLF documents would otherwise carry a trailing \r on
@@ -757,31 +774,9 @@ def line_dedup(df: DataFrame) -> DataFrame:
         .where(F.col("ldf") > LINE_MAX_DF)
         .select("lh")
     )
-    kept = lines.join(
-        hot.withColumn("hot", F.lit(True)), "lh", "left"
-    ).withColumn("drop", F.col("hot").isNotNull() & (F.trim("line") != ""))
-
-    return (
-        kept.groupBy("id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                ~F.col("drop"),
-                                F.struct(F.col("pos"), F.col("line")),
-                            )
-                        )
-                    ),
-                    lambda s: s.getField("line"),
-                ),
-                "\n",
-            ).alias("text"),
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum(F.col("drop").cast("long")).alias("n_dropped"),
-        )
-        .select(F.col("id").alias("doc_id"), "text", "n_lines", "n_dropped")
+    return _drop_hot_units(lines, hot, "lh", "line", "\n", ["id"]).select(
+        F.col("id").alias("doc_id"), "text",
+        F.col("n_units").alias("n_lines"), "n_dropped",
     )
 
 
@@ -803,8 +798,7 @@ def host_line_dedup(df: DataFrame) -> DataFrame:
     the removal is a left join on the two longs. Host page counts come
     from a countDistinct per host (hosts ≪ documents). Exactly
     SQL-replayable (``__spark_entry__._host_line_dedup_oracle``)."""
-    hh = F.conv(F.substring(F.md5(F.col("host")), 1, 15), 16, 10).cast("long")
-    lh = F.conv(F.substring(F.md5(F.trim(F.col("line"))), 1, 15), 16, 10).cast("long")
+    hh = md5_prefix_long("host", 15)
     lines = df.select(
         F.col("doc_id").alias("id"),
         F.col("host"),
@@ -812,16 +806,12 @@ def host_line_dedup(df: DataFrame) -> DataFrame:
         F.posexplode(
             F.split(F.coalesce(F.col("text"), F.lit("")), "\r?\n")
         ).alias("pos", "line"),
-    ).withColumn("lh", lh)
+    ).withColumn("lh", md5_prefix_long(F.trim(F.col("line")), 15))
 
     host_pages = (
         df.groupBy(F.col("host"))
         .agg(F.countDistinct("doc_id").alias("n_pages"))
-        .select(
-            F.conv(F.substring(F.md5(F.col("host")), 1, 15), 16, 10)
-            .cast("long").alias("hh"),
-            "n_pages",
-        )
+        .select(hh.alias("hh"), "n_pages")
     )
     hot = (
         lines.where(F.trim("line") != "")
@@ -838,34 +828,9 @@ def host_line_dedup(df: DataFrame) -> DataFrame:
         )
         .select("hh", "lh")
     )
-    kept = lines.join(
-        hot.withColumn("hot", F.lit(True)), ["hh", "lh"], "left"
-    ).withColumn("drop", F.col("hot").isNotNull() & (F.trim("line") != ""))
-
-    return (
-        kept.groupBy("id", "host")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                ~F.col("drop"),
-                                F.struct(F.col("pos"), F.col("line")),
-                            )
-                        )
-                    ),
-                    lambda s: s.getField("line"),
-                ),
-                "\n",
-            ).alias("text"),
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum(F.col("drop").cast("long")).alias("n_dropped"),
-        )
-        .select(
-            F.col("id").alias("doc_id"), F.col("host"),
-            "text", "n_lines", "n_dropped",
-        )
+    return _drop_hot_units(lines, hot, ["hh", "lh"], "line", "\n", ["id", "host"]).select(
+        F.col("id").alias("doc_id"), F.col("host"), "text",
+        F.col("n_units").alias("n_lines"), "n_dropped",
     )
 
 
@@ -954,10 +919,7 @@ def paragraph_dedup(df: DataFrame) -> DataFrame:
     documents split identically. Empty/whitespace-only paragraphs are
     structural: never counted, never dropped. Exactly SQL-replayable
     (``__spark_entry__._paragraph_dedup_oracle``)."""
-    from ..functions.text import normalized_for_fingerprint
-
-    canon = normalized_for_fingerprint(F.col("para"))
-    ph = F.conv(F.substring(F.md5(canon), 1, 15), 16, 10).cast("long")
+    ph = md5_prefix_long(normalized_for_fingerprint(F.col("para")), 15)
     paras = df.select(
         F.col("doc_id").alias("id"),
         F.posexplode(
@@ -968,40 +930,18 @@ def paragraph_dedup(df: DataFrame) -> DataFrame:
                 "\n{2,}",
             )
         ).alias("pos", "para"),
-    ).withColumn("ph", ph).withColumn("blank", F.trim("para") == "")
+    ).withColumn("ph", ph)
 
     hot = (
-        paras.where(~F.col("blank"))
+        paras.where(F.trim("para") != "")
         .groupBy("ph")
         .agg(F.countDistinct("id").alias("pdf"))
         .where(F.col("pdf") > PARA_MAX_DF)
         .select("ph")
     )
-    kept = paras.join(
-        hot.withColumn("hot", F.lit(True)), "ph", "left"
-    ).withColumn("drop", F.col("hot").isNotNull() & ~F.col("blank"))
-
-    return (
-        kept.groupBy("id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                ~F.col("drop"),
-                                F.struct(F.col("pos"), F.col("para")),
-                            )
-                        )
-                    ),
-                    lambda s: s.getField("para"),
-                ),
-                "\n\n",
-            ).alias("text"),
-            F.count(F.lit(1)).alias("n_paras"),
-            F.sum(F.col("drop").cast("long")).alias("n_dropped"),
-        )
-        .select(F.col("id").alias("doc_id"), "text", "n_paras", "n_dropped")
+    return _drop_hot_units(paras, hot, "ph", "para", "\n\n", ["id"]).select(
+        F.col("id").alias("doc_id"), "text",
+        F.col("n_units").alias("n_paras"), "n_dropped",
     )
 
 
@@ -1021,12 +961,7 @@ def common_ngrams(df: DataFrame) -> DataFrame:
     hash) survives the map-side combine, so full gram text never floods
     the shuffle; the result is a TakeOrderedAndProject top-k. Exactly
     SQL-replayable (``__spark_entry__._common_ngrams_oracle``)."""
-    norm = F.trim(
-        F.regexp_replace(
-            F.lower(F.coalesce(F.col("text"), F.lit(""))), "[ \t\n]+", " "
-        )
-    )
-    toks = F.split(norm, " ")
+    toks = canonical_words(F.coalesce(F.col("text"), F.lit("")))
     grams = (
         df.select(F.col("doc_id").alias("id"), toks.alias("toks"))
         .where(F.size("toks") >= 8)
@@ -1040,7 +975,7 @@ def common_ngrams(df: DataFrame) -> DataFrame:
             ).alias("gram"),
         )
     )
-    gh = F.conv(F.substring(F.md5("gram"), 1, 15), 16, 10).cast("long")
+    gh = md5_prefix_long("gram", 15)
     return (
         grams.withColumn("gh", gh)
         .groupBy("gh")

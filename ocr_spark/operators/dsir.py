@@ -45,7 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .classifier import _md5_long, hashed_feature_stream
+from ..functions.text import md5_prefix_long
+from .classifier import hashed_feature_stream
 
 # DSIR_N_BUCKETS and DSIR_K are read at call time: tests set smaller ones
 DSIR_N_BUCKETS = 512
@@ -119,7 +120,9 @@ def dsir_apply(raw: DataFrame, ratios: DataFrame) -> DataFrame:
     )
     u = (
         F.pmod(
-            _md5_long(F.concat(F.lit(DSIR_SEED + ":g:"), F.col("doc_id").cast("string"))),
+            md5_prefix_long(
+                F.concat(F.lit(DSIR_SEED + ":g:"), F.col("doc_id").cast("string")), 8
+            ),
             F.lit(_GUMBEL_RES),
         ).cast("double")
         + F.lit(0.5)

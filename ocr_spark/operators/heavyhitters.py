@@ -49,20 +49,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import canonical_words
+
 # Misra-Gries counter budget — part of the answer's identity (threshold =
 # n_total/(HH_M+1)), shared with the DuckDB twin; read at call time
 HH_M = 32
-
-
-def _canon_tokens() -> F.Column:
-    """The engine's canonical whitespace tokenization of ``text`` (shared
-    with common_ngrams / token_jaccard and their SQL twins)."""
-    norm = F.trim(
-        F.regexp_replace(
-            F.lower(F.coalesce(F.col("text"), F.lit(""))), "[ \t\n]+", " "
-        )
-    )
-    return F.split(norm, " ")
 
 
 def mg_candidates(tokens_df: DataFrame) -> DataFrame:
@@ -106,9 +97,9 @@ def heavy_hitters(df: DataFrame) -> DataFrame:
     and the candidate-gated exact recount (shuffle carries only candidate
     rows). Output provably equals the exact one-pass SQL answer — the
     DuckDB twin replays ``GROUP BY token HAVING freq*(HH_M+1) > total``."""
-    toks = df.select(_canon_tokens().alias("toks")).where(
-        F.array_join("toks", " ") != ""
-    )
+    toks = df.select(
+        canonical_words(F.coalesce(F.col("text"), F.lit(""))).alias("toks")
+    ).where(F.array_join("toks", " ") != "")
     cand = mg_candidates(toks)
     stream = toks.select(F.explode("toks").alias("token"))
     total = stream.agg(F.count("*").alias("n_total"))

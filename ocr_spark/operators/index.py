@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import TOKEN_PATTERN
+from ..functions.text import word_tokens
 
 
 def inverted_index(df: DataFrame) -> DataFrame:
@@ -41,13 +41,7 @@ def inverted_index(df: DataFrame) -> DataFrame:
     max_df = int(0.9 * df.count())
     toks = df.select(
         F.col("doc_id").alias("id"),
-        F.explode(
-            F.regexp_extract_all(
-                F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                F.lit(TOKEN_PATTERN),
-                F.lit(0),
-            )
-        ).alias("term"),
+        F.explode(word_tokens(F.coalesce(F.col("text"), F.lit("")))).alias("term"),
     )
     tf = toks.groupBy("term", "id").agg(F.count(F.lit(1)).alias("tf"))
     inv = tf.groupBy("term").agg(
@@ -73,13 +67,7 @@ def positional_postings(df: DataFrame, vocab: list[str]) -> DataFrame:
     terms, not its whole token stream."""
     toks = df.select(
         F.col("doc_id").alias("id"),
-        F.posexplode(
-            F.regexp_extract_all(
-                F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                F.lit(TOKEN_PATTERN),
-                F.lit(0),
-            )
-        ).alias("pos", "term"),
+        F.posexplode(word_tokens(F.coalesce(F.col("text"), F.lit("")))).alias("pos", "term"),
     )
     return toks.where(F.col("term").isin(*sorted(set(vocab)))).select("term", "id", "pos")
 
@@ -172,13 +160,7 @@ def expansion_terms(df: DataFrame) -> DataFrame:
     fb_ids = bm25_topk(df).select("doc_id")
     toks = df.select(
         F.col("doc_id").alias("id"),
-        F.explode(
-            F.regexp_extract_all(
-                F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                F.lit(TOKEN_PATTERN),
-                F.lit(0),
-            )
-        ).alias("term"),
+        F.explode(word_tokens(F.coalesce(F.col("text"), F.lit("")))).alias("term"),
     )
     n_docs = df.count()
     dft = (
@@ -232,11 +214,7 @@ def snippets(df: DataFrame) -> DataFrame:
     half = SNIPPET_WINDOW // 2
     toks = df.select(
         F.col("doc_id").alias("id"),
-        F.regexp_extract_all(
-            F.lower(F.coalesce(F.col("text"), F.lit(""))),
-            F.lit(TOKEN_PATTERN),
-            F.lit(0),
-        ).alias("tk"),
+        word_tokens(F.coalesce(F.col("text"), F.lit(""))).alias("tk"),
     )
     pos = toks.select(
         "id", F.posexplode("tk").alias("pos", "term")
@@ -300,11 +278,7 @@ def bm25_topk(df: DataFrame) -> DataFrame:
     terms = sorted({t.lower() for t in SEARCH_TERMS})
     toks = df.select(
         F.col("doc_id").alias("id"),
-        F.regexp_extract_all(
-            F.lower(F.coalesce(F.col("text"), F.lit(""))),
-            F.lit(TOKEN_PATTERN),
-            F.lit(0),
-        ).alias("toks"),
+        word_tokens(F.coalesce(F.col("text"), F.lit(""))).alias("toks"),
     )
     doclen = toks.select("id", F.size("toks").cast("long").alias("dl"))
     stats = doclen.agg(

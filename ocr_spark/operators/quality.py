@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import normalized_for_fingerprint
+from ..functions.text import canonical_words, normalized_for_fingerprint, word_tokens
 
 # Rule thresholds (Gopher-style, tuned to fire non-vacuously on the shared
 # corpus: ~7% too_short, ~15% repetitive at sf0.01 — and kept docs remain
@@ -38,9 +38,7 @@ LM_ALPHA = 0.4      # additive smoothing for the bigram model
 
 
 def _tokens(text_col: str):
-    return F.filter(
-        F.split(normalized_for_fingerprint(text_col), " "), lambda x: x != ""
-    )
+    return F.filter(canonical_words(text_col), lambda x: x != "")
 
 
 def quality_filter(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -169,13 +167,8 @@ def blockword_filter(df: DataFrame) -> DataFrame:
     size (~400 terms) the intersect is still per-row bounded work.
     Reference analog: the rule-table blocklist choosing which regions
     carry signal (one_key_process.py:1146-1165), applied at page level."""
-    from ..functions.text import TOKEN_PATTERN
-
     # regex tokens (not the whitespace split): 'xbadwordx.' must still hit
-    toks = F.regexp_extract_all(
-        F.lower(F.coalesce(F.col("text"), F.lit(""))),
-        F.lit(TOKEN_PATTERN), F.lit(0),
-    )
+    toks = word_tokens(F.coalesce(F.col("text"), F.lit("")))
     bad = F.array(*[F.lit(w.lower()) for w in DEFAULT_BLOCKWORDS])
     n_bad = F.size(F.array_intersect(toks, bad))
     return df.select(

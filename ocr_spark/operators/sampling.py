@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import md5_prefix_long
+
 SAMPLE_DENOM = 10_000
 
 
@@ -29,8 +31,7 @@ def sample_bucket(key_col, salt: str) -> Column:
     SQL twin: ('0x' || substr(md5(key || ':' || salt), 1, 8))::BIGINT % 10000.
     """
     key = F.concat_ws(":", F.col(key_col).cast("string"), F.lit(salt))
-    h = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
-    return F.pmod(h, F.lit(SAMPLE_DENOM))
+    return F.pmod(md5_prefix_long(key, 8), F.lit(SAMPLE_DENOM))
 
 
 STRATIFIED_DEFAULT_RATE = 0.1  # keep fraction of strata stratified_sample does not list

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.text import md5_prefix_long, ordered_collect
 
 SHARD_SEED = "shard-seed-1"
 N_SHARDS = 16
@@ -33,7 +34,7 @@ def shard_key() -> "F.Column":
     md5(SHARD_SEED || ':' || doc_id) — portable (DuckDB:
     ('0x' || substr(md5(...), 1, 8))::BIGINT)."""
     key = F.concat(F.lit(SHARD_SEED + ":"), F.col("doc_id").cast("string"))
-    return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
+    return md5_prefix_long(key, 8)
 
 
 def shard_assignment(df: DataFrame) -> DataFrame:
@@ -71,10 +72,7 @@ def shard_manifest(df: DataFrame) -> DataFrame:
     rows = asg.join(
         df.select(F.col("doc_id"), fp.alias("fp"), nb.alias("nb")), "doc_id"
     )
-    ordered_fps = F.transform(
-        F.array_sort(F.collect_list(F.struct("pos", "fp"))),
-        lambda s: s["fp"],
-    )
+    ordered_fps = ordered_collect(F.struct("pos", "fp"), "fp")
     return (
         rows.groupBy("shard")
         .agg(

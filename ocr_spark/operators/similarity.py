@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.text import md5_prefix_long, ordered_collect
+
 N_PLANES = 12
 PLANE_SEED = 42
 MAX_BUCKET = 256  # embedding_neardup_pairs' hot-bucket cap
@@ -182,9 +184,7 @@ def ivf_centroids(df: DataFrame) -> DataFrame:
         "cent_id", F.posexplode("v").alias("pos", "x")
     ).groupBy("cent_id", "pos").agg(F.round(F.avg("x"), 6).alias("m"))
     return by_dim.groupBy("cent_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-        ).alias("cv")
+        ordered_collect(F.struct("pos", "m"), "m").alias("cv")
     )
 
 
@@ -348,13 +348,7 @@ def cluster_balanced_sample(df: DataFrame) -> DataFrame:
     cents = ivf_centroids(df)
     assigned = _assign_cells(df.select(F.col("vec_id"), emb.alias("v")), cents)
     key = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("cbal-1:"), F.col("vec_id").cast("string"))),
-                1, 8,
-            ),
-            16, 10,
-        ).cast("long"),
+        md5_prefix_long(F.concat(F.lit("cbal-1:"), F.col("vec_id").cast("string")), 8),
         F.lit(1_000_000),
     )
     w = Window.partitionBy("cent_id").orderBy(F.asc("pick_key"), F.asc("vec_id"))
@@ -591,10 +585,7 @@ def pq_codebooks(df: DataFrame) -> DataFrame:
         F.round(F.avg("x"), 6).alias("mv")
     )
     return by_dim.groupBy("sub", "cent_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "mv"))),
-            lambda s: s["mv"],
-        ).alias("cv")
+        ordered_collect(F.struct("pos", "mv"), "mv").alias("cv")
     )
 
 

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import md5_prefix_long
+
 # p=8 -> m=256 registers/group: ~6.5% standard error, 256-row group state.
 HLL_P = 8
 HLL_M = 1 << HLL_P
@@ -57,7 +59,7 @@ def hll_registers(
     at most ``groups x 256`` rows before the shuffle. Registers from
     different corpus slices union + re-max to merge (HLL's whole point).
     """
-    h = F.conv(F.substring(F.md5(F.col(key_col)), 1, 13), 16, 10).cast("long")
+    h = md5_prefix_long(key_col, 13)
     bucket = (h % F.lit(HLL_M)).cast("int")
     rest = F.shiftright(h, HLL_P)
     rho = F.when(rest == 0, F.lit(RHO_MAX)).otherwise(

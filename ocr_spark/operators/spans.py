@@ -30,8 +30,9 @@ granularity):
             (pos - prev_pos <= w), so per-span word counts never
             double-count and the per-doc duplicated-word total is exact.
 
-All hashes are the portable 60-bit md5 prefix (signed-64 safe in Spark
-and ANSI SQL), so the whole pipeline has an exact DuckDB twin.
+All hashes are the portable 60-bit md5 prefix (``md5_prefix_long(g, 15)``:
+signed-64 safe in Spark and ANSI SQL), so the whole pipeline has an exact
+DuckDB twin.
 
 At 100 TB: step 2's shuffle carries ~1 long per corpus word — the same
 order as the minhash shingle pass; step 4's state is per-document and
@@ -44,16 +45,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import normalized_for_fingerprint
+from ..functions.text import (
+    canonical_words,
+    md5_prefix_long,
+    normalized_for_fingerprint,
+)
 
 SPAN_W = 8  # words per gram == minimum detectable duplicated-span length
-
-
-def _gram_hash60(g) -> F.Column:
-    """First 60 bits of md5 as a long (same idiom as line_dedup's line
-    hash, dedup.py:596): 15 hex chars keep conv() inside signed 64-bit in
-    both engines."""
-    return F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
 
 
 def dup_gram_positions(df: DataFrame) -> DataFrame:
@@ -113,8 +111,7 @@ def _doc_grams(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(base, grams): base = every document as (id, toks); grams = one
     (id, pos, gh) row per ``SPAN_W``-gram (docs shorter than that emit
     none) — the shared front half of the span-rewrite family."""
-    norm = normalized_for_fingerprint(F.coalesce(F.col("text"), F.lit("")))
-    toks = F.split(norm, " ")
+    toks = canonical_words(F.coalesce(F.col("text"), F.lit("")))
     base = df.select(F.col("doc_id").alias("id"), toks.alias("toks"))
     grams = (
         base.where(F.size("toks") >= SPAN_W)
@@ -125,8 +122,8 @@ def _doc_grams(df: DataFrame) -> tuple[DataFrame, DataFrame]:
                     F.sequence(F.lit(0), F.size("toks") - SPAN_W),
                     lambda i: F.struct(
                         i.cast("long").alias("pos"),
-                        _gram_hash60(
-                            F.concat_ws(" ", F.slice(F.col("toks"), i + 1, SPAN_W))
+                        md5_prefix_long(
+                            F.concat_ws(" ", F.slice(F.col("toks"), i + 1, SPAN_W)), 15
                         ).alias("gh"),
                     ),
                 )
@@ -237,9 +234,9 @@ def dup_span_stats(df: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n_dup_spans"),
         F.sum("span_words").alias("dup_words"),
     )
-    norm = normalized_for_fingerprint(F.coalesce(F.col("text"), F.lit("")))
-    n_words = F.when(F.length(norm) == 0, F.lit(0)).otherwise(
-        F.size(F.split(norm, " "))
+    text = F.coalesce(F.col("text"), F.lit(""))
+    n_words = F.when(F.length(normalized_for_fingerprint(text)) == 0, F.lit(0)).otherwise(
+        F.size(canonical_words(text))
     ).cast("long")
     base = df.select(F.col("doc_id").alias("id"), n_words.alias("n_words"))
     return (
@@ -280,10 +277,7 @@ def decontaminate_spans(df: DataFrame, benchmark: DataFrame) -> DataFrame:
     span union, same as remove_dup_spans. Exact DuckDB twin
     (``__spark_entry__._decontam_spans_oracle``)."""
     base, grams = _doc_grams(df)
-    bench_norm = normalized_for_fingerprint(
-        F.coalesce(F.col("text"), F.lit(""))
-    )
-    btoks = F.split(bench_norm, " ")
+    btoks = canonical_words(F.coalesce(F.col("text"), F.lit("")))
     bench_gh = (
         benchmark.select(btoks.alias("toks"))
         .where(F.size("toks") >= SPAN_W)
@@ -291,8 +285,8 @@ def decontaminate_spans(df: DataFrame, benchmark: DataFrame) -> DataFrame:
             F.explode(
                 F.transform(
                     F.sequence(F.lit(0), F.size("toks") - SPAN_W),
-                    lambda i: _gram_hash60(
-                        F.concat_ws(" ", F.slice(F.col("toks"), i + 1, SPAN_W))
+                    lambda i: md5_prefix_long(
+                        F.concat_ws(" ", F.slice(F.col("toks"), i + 1, SPAN_W)), 15
                     ),
                 )
             ).alias("gh")

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import TOKEN_PATTERN
+from ..functions.text import word_tokens
 
 # Explicit code-point ranges (identical semantics in Java regex and RE2).
 SCRIPT_RANGES = {
@@ -120,7 +120,7 @@ def code_columns(text: Column) -> dict[str, Column]:
         ),
         4,
     )
-    toks = F.regexp_extract_all(F.lower(text), F.lit(TOKEN_PATTERN), F.lit(0))
+    toks = word_tokens(text)
     kw_hits = F.size(
         F.array_intersect(toks, F.array(*[F.lit(k) for k in CODE_KEYWORDS]))
     ).cast("long")
@@ -184,13 +184,7 @@ def vocab_growth(df: DataFrame) -> DataFrame:
     """
     toks = df.select(
         F.col("doc_id").alias("doc"),
-        F.explode(
-            F.regexp_extract_all(
-                F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                F.lit(TOKEN_PATTERN),
-                F.lit(0),
-            )
-        ).alias("tok"),
+        F.explode(word_tokens(F.coalesce(F.col("text"), F.lit("")))).alias("tok"),
     )
     # per-doc token counts (docs-bounded)
     doc_tokens = toks.groupBy("doc").agg(F.count(F.lit(1)).alias("n_tok"))

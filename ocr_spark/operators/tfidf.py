@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import TOKEN_PATTERN
+from ..functions.text import word_tokens
 
 
 TFIDF_TOP_TERMS = 3  # terms tfidf_top_terms keeps per document
@@ -37,9 +37,7 @@ def tfidf_top_terms(df: DataFrame) -> DataFrame:
     n_docs = df.count()  # single aggregate probe; the only driver scalar
     toks = df.select(
         F.col("doc_id"),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_PATTERN), F.lit(0))
-        ).alias("term"),
+        F.explode(word_tokens("text")).alias("term"),
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -75,12 +73,7 @@ def more_like_this(df: DataFrame) -> DataFrame:
     n_docs = df.count()  # single aggregate probe (tfidf_top_terms discipline)
     toks = df.select(
         F.col("doc_id").alias("id"),
-        F.explode(
-            F.regexp_extract_all(
-                F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                F.lit(TOKEN_PATTERN), F.lit(0),
-            )
-        ).alias("term"),
+        F.explode(word_tokens(F.coalesce(F.col("text"), F.lit("")))).alias("term"),
     )
     tf = toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))

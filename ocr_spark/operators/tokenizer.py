@@ -36,7 +36,7 @@ from itertools import chain
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import TOKEN_PATTERN
+from ..functions.text import word_tokens
 
 UNK = "<unk>"
 
@@ -50,10 +50,7 @@ def _map_literal(word_map: dict[str, str]) -> Column:
 def _encode_cols(word_map: dict[str, str]) -> tuple[Column, Column, Column, Column, Column]:
     """The shared apply expressions: (full token stream, n_words,
     n_tokens, n_unk, n_bytes) for one document's ``text`` — all pure JVM."""
-    toks = F.regexp_extract_all(
-        F.lower(F.coalesce(F.col("text"), F.lit(""))),
-        F.lit(TOKEN_PATTERN), F.lit(0),
-    )
+    toks = word_tokens(F.coalesce(F.col("text"), F.lit("")))
     m = _map_literal(word_map)
     mapped = F.transform(toks, lambda w: F.coalesce(F.element_at(m, w), F.lit(UNK)))
     full = F.array_join(mapped, " ")

@@ -14,7 +14,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..core.synth import SEED, gen_page
+from ..core.synth import SEED, gen_page, page_ts
 from ..session import PAGES_SCHEMA
 
 
@@ -63,20 +63,14 @@ def pages_from_documents(spark: SparkSession, sf_dir: str,
         docs = docs.where(docs["doc_id"] < max_doc_id)
 
     def to_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..core.synth import gen_page
-
         for pdf in batches:
             rows = []
             for doc_id, text, lang in zip(pdf["doc_id"], pdf["text"], pdf["lang"]):
                 i = int(doc_id)
-                # reuse the synth machinery for boilerplate, then splice the
-                # document text in as the article body (deterministic by i)
-                base = gen_page(i, seed=7)
-                body = "".join(f"<p>{text}</p>" for _ in range(1))
                 html = (
                     f'<html lang="{lang}"><head><title>doc {i}</title></head><body>'
                     f'<nav class="menu"><a href="/a">home</a> <a href="/b">about</a></nav>'
-                    f"<article><h2>Document {i}</h2>{body}</article>"
+                    f"<article><h2>Document {i}</h2><p>{text}</p></article>"
                     f'<footer class="footer"><p>boilerplate footer text that is long enough'
                     f" to be kept if the blocklist ever regresses</p></footer>"
                     f"</body></html>"
@@ -84,7 +78,7 @@ def pages_from_documents(spark: SparkSession, sf_dir: str,
                 rows.append(
                     {
                         "url": f"https://docs.example.com/{i}",
-                        "warc_ts": base["warc_ts"],
+                        "warc_ts": page_ts(i),
                         "html": html,
                         "text": None,
                         "lang": lang,

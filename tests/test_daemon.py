@@ -61,6 +61,13 @@ def _imported(spark, module: str) -> set:
 
 
 def test_files_added_mid_session_import_on_reused_workers(spark, tmp_path):
+    """Pins only that ``addPyFile`` files import on the session's reused
+    workers, which run ``SetupSparkFiles``. It does not pin the skip rule:
+    it still passes with a daemon that compares only ``sys.path`` or never
+    flushes, because a ``FileFinder`` refreshes its listing when its
+    directory's mtime changes (on a filesystem with fine-grained mtimes)
+    and a new ``sys.path`` entry gets a fresh finder. The Spark-free test
+    above is what pins the rule."""
     def setup_kind(batches):
         kind = type(sys.modules["pyspark.worker"].setup_spark_files).__name__
         for pdf in batches:

@@ -3,12 +3,9 @@ the per-language tokenizer fertility audit — unit contracts + plan pins."""
 
 import pyspark.sql.functions as F
 
+from ocr_spark.functions.text import canonical_words
 from ocr_spark.operators import heavyhitters as hh
-from ocr_spark.operators.heavyhitters import (
-    heavy_hitters,
-    mg_candidates,
-    _canon_tokens,
-)
+from ocr_spark.operators.heavyhitters import heavy_hitters, mg_candidates
 from ocr_spark.operators.tokenizer import fertility_by_lang
 
 
@@ -40,7 +37,7 @@ def _adversarial_corpus(spark, n_docs: int = 400, n_parts: int = 8):
 
 
 def _brute_force(df, m):
-    toks = df.select(F.explode(_canon_tokens()).alias("token"))
+    toks = df.select(F.explode(canonical_words("text")).alias("token"))
     total = toks.count()
     pdf = (
         toks.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
@@ -57,7 +54,7 @@ def test_mg_candidates_superset_and_bounded(spark, monkeypatch):
     m = 8
     monkeypatch.setattr(hh, "HH_M", m)
     docs = _adversarial_corpus(spark)
-    toks = docs.select(_canon_tokens().alias("toks"))
+    toks = docs.select(canonical_words("text").alias("toks"))
     cand = set(r.token for r in mg_candidates(toks).collect())
     exact, total = _brute_force(docs, m)
     qualifying = {t for t, _ in exact}
@@ -66,7 +63,7 @@ def test_mg_candidates_superset_and_bounded(spark, monkeypatch):
     n_parts = toks.rdd.getNumPartitions()
     assert len(cand) <= m * n_parts
     # non-vacuous eviction: the vocabulary is far wider than the budget
-    distinct = docs.select(F.explode(_canon_tokens())).distinct().count()
+    distinct = docs.select(F.explode(canonical_words("text"))).distinct().count()
     assert distinct > m * n_parts
 
 

@@ -1,6 +1,6 @@
 """The engine's surface has callers: names, parameters, constants and imports.
 
-Six pure AST scans (no Spark), over one parse of the caller files (the
+Seven pure AST scans (no Spark), over one parse of the caller files (the
 engine, ``__spark_entry__.py``, ``bench.py`` and the non-test
 ``perfbench/`` modules) and ``tests/``. Tests are not callers: a value
 that only a test sets is a test seam (a module constant the code reads at
@@ -27,7 +27,10 @@ call time and the test monkeypatches) or a path no caller takes.
   ``bench.py`` and ``tests/`` is loaded in the scope that imports it, is
   listed in ``__all__``, or is an availability probe marked
   ``# noqa: F401``. ``perfbench/`` belongs to the benchmark and is left
-  out.
+  out;
+- no ``ocr_spark/`` module but ``functions/text.py`` builds the md5-prefix
+  long (``conv(substring(md5(...)))``) or loads ``TOKEN_PATTERN``: the
+  rules that turn text into keys and tokens have one definition each.
 
 The ``EXEMPT`` module, the serial oracle, is left out of the first four
 scans. A failure of the two value scans prints the value every caller
@@ -441,6 +444,34 @@ def _forwarded(value, own):
     return own.get(value.id) if isinstance(value, ast.Name) else None
 
 
+TEXT_PRIMITIVES = "ocr_spark/functions/text.py"
+
+
+def _callee(node):
+    """The called name of ``node`` if it is a call, else None."""
+    f = getattr(node, "func", None)
+    return getattr(f, "id", None) or getattr(f, "attr", None)
+
+
+def inline_text_primitives():
+    """``module:line primitive`` of each ``conv(substring(md5(...)))`` and
+    each load of ``TOKEN_PATTERN`` in ``ocr_spark/`` outside
+    ``functions/text.py``."""
+    found = []
+    for rel, tree in _parsed():
+        if not rel.startswith("ocr_spark/") or rel == TEXT_PRIMITIVES:
+            continue
+        for n in ast.walk(tree):
+            inner = n.args[0] if _callee(n) == "conv" and n.args else None
+            if (_callee(inner) == "substring" and inner.args
+                    and _callee(inner.args[0]) == "md5"):
+                found.append(f"{rel}:{n.lineno} conv(substring(md5(...)))")
+            if (isinstance(n, (ast.Name, ast.Attribute)) and isinstance(n.ctx, ast.Load)
+                    and getattr(n, "id", getattr(n, "attr", None)) == "TOKEN_PATTERN"):
+                found.append(f"{rel}:{n.lineno} TOKEN_PATTERN")
+    return found
+
+
 def test_every_public_name_has_a_non_test_caller():
     stale = [rel for rel in EXEMPT if not (PKG / rel).is_file()]
     assert not stale, f"exempt modules that no longer exist: {stale}"
@@ -487,3 +518,11 @@ def test_every_import_is_used():
     assert not found, (
         "imported names that nothing loads (delete the import, or mark an "
         "availability probe `# noqa: F401`):\n  " + "\n  ".join(found))
+
+
+def test_text_primitives_have_one_definition():
+    found = inline_text_primitives()
+    assert not found, (
+        "md5-prefix keys or word tokens built outside "
+        f"{TEXT_PRIMITIVES} (call md5_prefix_long / word_tokens):\n  "
+        + "\n  ".join(found))

@@ -140,6 +140,30 @@ class TestMultimodal:
         pd.testing.assert_frame_equal(a, b)
 
 
+def test_documents_wrapper_capture_times_match_gen_page(spark, tmp_path):
+    """``pages_from_documents`` stamps page i with ``gen_page(i, 7)``'s
+    capture time without building that page, and its html stays the
+    one-paragraph article template the multimodal oracles replay."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.core.synth import gen_page
+    from ocr_spark.sources.pages import pages_from_documents
+
+    ids = [0, 1, 2, 36, 70_054, 70_055, 1_000_003]
+    spark.createDataFrame(
+        [(i, f"doc text {i}", "en") for i in ids], "doc_id long, text string, lang string"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    got = pages_from_documents(spark, str(tmp_path)).select(
+        "url", F.date_format("warc_ts", "yyyy-MM-dd HH:mm:ss").alias("ts"), "html"
+    ).collect()
+    by_url = {r["url"]: r for r in got}
+    assert len(by_url) == len(ids)
+    for i in ids:
+        r = by_url[f"https://docs.example.com/{i}"]
+        assert r["ts"] == gen_page(i, 7)["warc_ts"].strftime("%Y-%m-%d %H:%M:%S")
+        assert f"<h2>Document {i}</h2><p>doc text {i}</p></article>".encode() in r["html"]
+
+
 def test_frame_sample_fanout_deterministic(spark):
     from ocr_spark.operators.multimodal import frame_sample
 

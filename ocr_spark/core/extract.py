@@ -10,7 +10,8 @@ Both execution paths import THIS function:
 - golden fixture generator (serial, driver-side) — ocr_spark.golden
 - distributed Arrow-batched path — ocr_spark.operators.extract_op
 
-Dispatch (deterministic):
+Dispatch (deterministic; ``_dispatch`` makes it once per document, and the
+text, markdown and span record shapes all render from its result):
   html is NULL/empty  -> text-column fallback (E4 analog,
                          optimized_ocr_processor.py:350-385) else 'empty'
   html starts %PDF    -> pdf branch (core.pdfparse)
@@ -29,7 +30,7 @@ from __future__ import annotations
 
 import re as _re
 
-from .htmlparse import extract_html_text_cascade, extract_kept_blocks_cascade
+from .htmlparse import extract_kept_blocks_cascade
 from .normalize import normalize_text
 from .pdfparse import extract_pdf_text
 
@@ -93,57 +94,56 @@ def _decode(html: bytes) -> str:
         return html.decode("latin-1")
 
 
+def _dispatch(html: bytes | None, text: str | None) -> tuple[list | None, str, str, str, int]:
+    """The one per-document decision every record shape renders from:
+    (kept HTML blocks or None, text, status, content kind, n_blocks).
+    ``kept`` is set exactly when the HTML cascade kept something (every
+    kept block has non-empty text, so ``text`` is non-empty then too); the
+    pdf, fallback, empty and error outcomes carry None. Total: never
+    raises."""
+    fallback = normalize_text(text) if text else ""
+    status = STATUS_EMPTY
+    if html is None or len(html) == 0:
+        kind = "text" if fallback else "none"
+    else:
+        kind = "pdf" if html[:4] == b"%PDF" else "html"
+        try:
+            if kind == "pdf":
+                out = normalize_text(extract_pdf_text(html))
+                if out:
+                    return None, out, STATUS_OK, kind, out.count("\n") + 1
+            else:
+                # F14 cascade: strict strategy with early exit, lenient
+                # rescore only when strict keeps nothing (one tokenize pass)
+                kept, strategy = extract_kept_blocks_cascade(_decode(html))
+                if kept:
+                    # tokenizer output is normalize_text-canonical by
+                    # construction: every block is normalize_inline'd (single
+                    # spaces, mapped chars removed, stripped) and non-empty
+                    # blocks join with one LF — asserted as an invariant in
+                    # tests. Skipping the redundant pass saves ~7% of the parse.
+                    return (kept, "\n".join(b.text for b in kept),
+                            STATUS_OK if strategy == "strict" else STATUS_OK_LENIENT,
+                            kind, len(kept))
+        except Exception as e:  # noqa: BLE001 — P7: failure -> empty, row retained
+            status = f"error:{type(e).__name__}"
+    if fallback:
+        return None, fallback, STATUS_FALLBACK, kind, 0
+    return None, "", status, kind, 0
+
+
 def extract_record(url: str, html: bytes | None, text: str | None, lang: str | None) -> dict:
     """Extract one document. Total function: never raises."""
-    bytes_in = len(html) if html is not None else 0
-    fallback = normalize_text(text) if text else ""
-
-    def result(out_text: str, status: str, kind: str, n_blocks: int) -> dict:
-        return {
-            "url": url,
-            "text": out_text,
-            "extract_status": status,
-            "content_kind": kind,
-            "n_blocks": n_blocks,
-            "bytes_in": bytes_in,
-            "bytes_out": len(out_text.encode("utf-8")),
-        }
-
-    if html is None or len(html) == 0:
-        if fallback:
-            return result(fallback, STATUS_FALLBACK, "text", 0)
-        return result("", STATUS_EMPTY, "none", 0)
-
-    kind = "pdf" if html[:4] == b"%PDF" else "html"
-    status_ok = STATUS_OK
-    try:
-        if kind == "pdf":
-            raw, n_blocks = extract_pdf_text(html), -1
-            out = normalize_text(raw)
-        else:
-            # F14 cascade: strict strategy with early exit, lenient rescore
-            # only when strict keeps nothing (one tokenize pass either way)
-            raw, n_blocks, strategy = extract_html_text_cascade(_decode(html))
-            if strategy == "lenient" and raw:
-                status_ok = STATUS_OK_LENIENT
-            # tokenizer output is normalize_text-canonical by construction:
-            # every block is normalize_inline'd (single spaces, mapped chars
-            # removed, stripped) and non-empty blocks join with one LF —
-            # asserted as an invariant in tests. Skipping the redundant pass
-            # saves ~7% of the parse.
-            out = raw
-        if n_blocks < 0:
-            n_blocks = out.count("\n") + 1 if out else 0
-    except Exception as e:  # noqa: BLE001 — P7: failure -> empty, row retained
-        if fallback:
-            return result(fallback, STATUS_FALLBACK, kind, 0)
-        return result("", f"error:{type(e).__name__}", kind, 0)
-
-    if not out:
-        if fallback:
-            return result(fallback, STATUS_FALLBACK, kind, 0)
-        return result("", STATUS_EMPTY, kind, 0)
-    return result(out, status_ok, kind, n_blocks)
+    _kept, out, status, kind, n_blocks = _dispatch(html, text)
+    return {
+        "url": url,
+        "text": out,
+        "extract_status": status,
+        "content_kind": kind,
+        "n_blocks": n_blocks,
+        "bytes_in": len(html) if html is not None else 0,
+        "bytes_out": len(out.encode("utf-8")),
+    }
 
 
 MARKDOWN_COLUMNS = ("url", "markdown", "extract_status", "content_kind", "n_blocks")
@@ -153,35 +153,19 @@ def extract_markdown_record(url: str, html: bytes | None, text: str | None,
                             lang: str | None) -> dict:
     """Extract one document as MARKDOWN (core.markdown rendering of the
     kept blocks — headings/list items/quotes keep their structure instead
-    of flattening). Status/kind semantics mirror :func:`extract_record`
-    exactly: the HTML cascade's strict/lenient strategies map to
-    ok/ok_lenient; pdf/fallback/empty/error paths delegate to
-    ``extract_record`` and emit its plain text as paragraph-only markdown
-    (no structure is available there to render). Total, never raises,
-    never drops a row (P7)."""
+    of flattening). Status, kind and n_blocks are :func:`extract_record`'s:
+    the pdf/fallback/empty/error outcomes emit its plain text as
+    paragraph-only markdown (no structure is available there to render).
+    Total, never raises, never drops a row (P7)."""
     from .markdown import blocks_to_markdown
 
-    if html is not None and len(html) > 0 and html[:4] != b"%PDF":
-        try:
-            kept, strategy = extract_kept_blocks_cascade(_decode(html))
-        except Exception:  # noqa: BLE001 — P7: fall through to the record path
-            kept = []
-        if kept:
-            return {
-                "url": url,
-                "markdown": blocks_to_markdown(kept),
-                "extract_status": STATUS_OK if strategy == "strict"
-                else STATUS_OK_LENIENT,
-                "content_kind": "html",
-                "n_blocks": len(kept),
-            }
-    r = extract_record(url, html, text, lang)
+    kept, out, status, kind, n_blocks = _dispatch(html, text)
     return {
         "url": url,
-        "markdown": r["text"],
-        "extract_status": r["extract_status"],
-        "content_kind": r["content_kind"],
-        "n_blocks": r["n_blocks"],
+        "markdown": blocks_to_markdown(kept) if kept else out,
+        "extract_status": status,
+        "content_kind": kind,
+        "n_blocks": n_blocks,
     }
 
 
@@ -203,32 +187,27 @@ def extract_span_rows(url: str, html: bytes | None, text: str | None,
     (pdf / text fallback / empty / error) emit ONE row with NULL spans so
     every input url appears in the output (P7 contract).
     """
-    if html is not None and len(html) > 0 and html[:4] != b"%PDF":
-        try:
-            kept, _strategy = extract_kept_blocks_cascade(_decode(html))
-        except Exception:  # noqa: BLE001 — P7: fall through to the record path
-            kept = []
-        if kept:
-            return [
-                {
-                    "url": url,
-                    "block_idx": i,
-                    "span_start": b.src_start,
-                    "span_end": b.src_end,
-                    "block_text": b.text,
-                    "heading": b.level > 0,
-                }
-                for i, b in enumerate(kept)
-            ]
+    kept, out, _status, _kind, _n_blocks = _dispatch(html, text)
+    if kept:
+        return [
+            {
+                "url": url,
+                "block_idx": i,
+                "span_start": b.src_start,
+                "span_end": b.src_end,
+                "block_text": b.text,
+                "heading": b.level > 0,
+            }
+            for i, b in enumerate(kept)
+        ]
     # pdf / fallback / empty / error: one whole-document row, NULL span
-    r = extract_record(url, html, text, lang)
     return [
         {
             "url": url,
             "block_idx": 0,
             "span_start": None,
             "span_end": None,
-            "block_text": r["text"],
+            "block_text": out,
             "heading": False,
         }
     ]

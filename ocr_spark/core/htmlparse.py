@@ -330,9 +330,9 @@ def score_blocks(blocks: list[Block],
     return kept
 
 
-def extract_html_text_cascade(html_text: str) -> tuple[str, int, str]:
-    """HTML -> (text, kept-block count, strategy) through the two-strategy
-    cascade (F14 analog with confidence early-exit):
+def extract_kept_blocks_cascade(html_text: str) -> tuple[list[Block], str]:
+    """HTML -> (kept :class:`Block` list, strategy) through the
+    two-strategy cascade (F14 analog with confidence early-exit):
 
     1. 'strict'  — the production thresholds above; a non-empty result
        exits immediately (the reference's confidence early-exit).
@@ -344,18 +344,11 @@ def extract_html_text_cascade(html_text: str) -> tuple[str, int, str]:
        misclassify — short-paragraph pages, content inside a 'related'-
        classed container — instead of dropping them to empty.
 
-    Tokenization runs ONCE; the cascade only rescans the block list.
+    Tokenization runs ONCE; the cascade only rescans the block list. Each
+    kept block carries the char span of the source region it was drawn
+    from, so the text, markdown and span record shapes all render from
+    this one result.
     """
-    kept, strategy = extract_kept_blocks_cascade(html_text)
-    return "\n".join(b.text for b in kept), len(kept), strategy
-
-
-def extract_kept_blocks_cascade(html_text: str) -> tuple[list[Block], str]:
-    """The cascade of :func:`extract_html_text_cascade`, returning the kept
-    :class:`Block` list itself (with source spans) instead of the joined
-    text — the span-emitting extraction path (the north-rule "extracted
-    text/spans per document" contract: each kept block carries the char
-    span of the source region it was drawn from)."""
     blocks = extract_blocks(html_text)
     kept = score_blocks(blocks)
     if kept:

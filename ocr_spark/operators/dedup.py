@@ -16,6 +16,14 @@ At corpus scale that generalizes to the family below. Shuffle discipline:
 - embedding near-dup: cosine >= threshold within LSH buckets (see
   operators/similarity.py for the bucketing).
 
+Every candidate-pair path here (minhash and simhash bands, the
+token-jaccard prefix join, and both sides of ``lsh_recall_audit``) is the
+one equi-self-join :func:`_self_join_pairs`: ids sharing a key, oversized
+key groups optionally dropped first, ``id_a < id_b``, distinct. The minhash
+and simhash band rows come from the one banding step :func:`_band_rows`,
+and every shingle-set verification (here and in ``incremental``) is
+:func:`shingle_jaccard`.
+
 At 100 TB: minhash bands replace the O(n^2) pair space with per-bucket
 pairs; skewed buckets (boilerplate-heavy corpora) are handled by AQE skew
 join + the deterministic salt in plans/partitioning.
@@ -151,6 +159,56 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     return base.select(*keep, sig)
 
 
+def _band_rows(sigs: DataFrame, id_col, buckets: list) -> DataFrame:
+    """(id, band, bucket) rows: one per entry of ``buckets``, band ``b``
+    keyed by ``buckets[b]`` — the banding step of both LSH families."""
+    return sigs.select(
+        id_col,
+        F.explode(
+            F.array(
+                *[F.struct(F.lit(b).alias("band"), k.alias("bucket"))
+                  for b, k in enumerate(buckets)]
+            )
+        ).alias("bb"),
+    ).select("id", "bb.band", "bb.bucket")
+
+
+def _self_join_pairs(rows: DataFrame, keys: list, cap: int | None) -> DataFrame:
+    """Distinct (id_a, id_b) with id_a < id_b over the ``(id, *keys)`` rows
+    that share every key: the candidate-pair join of the whole
+    near-duplicate family. With a ``cap``, key groups of fewer than 2 or
+    more than ``cap`` ids are dropped before pairing — a group of k ids
+    contributes k^2/2 pairs, so boilerplate-identical buckets would
+    otherwise quadratic-bomb one partition."""
+    if cap is not None:
+        kept = (
+            rows.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("n"))
+            .where((F.col("n") > 1) & (F.col("n") <= cap))
+            .select(*keys)
+        )
+        rows = rows.join(kept, keys, "left_semi")
+    on = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+    return (
+        rows.alias("l")
+        .join(rows.alias("r"), on + [F.col("l.id") < F.col("r.id")])
+        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
+        .distinct()
+    )
+
+
+def shingle_jaccard(a: str, b: str):
+    """Exact jaccard of two distinct-shingle array columns, rounded to 4
+    places: the one verification of every minhash pair path, so the batch
+    pass, its recall audit and the incremental gate (and their SQL twins)
+    agree on every boundary pair."""
+    return F.round(
+        F.size(F.array_intersect(a, b)).cast("double")
+        / F.size(F.array_union(a, b)).cast("double"),
+        4,
+    )
+
+
 def band_buckets(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, band, bucket) rows from a signature table (``sig`` array<long>).
 
@@ -166,22 +224,10 @@ def band_buckets(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     from storage — the incremental-ingest path derives committed buckets
     from persisted ``sig`` arrays without touching committed text."""
     rows_per_band = MINHASH_PERMS // LSH_BANDS
-    return sigs.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(LSH_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
+    return _band_rows(sigs, F.col(id_col).alias("id"), [
+        F.xxhash64(*[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)])
+        for b in range(LSH_BANDS)
+    ])
 
 
 def minhash_lsh_pairs(
@@ -207,27 +253,8 @@ def minhash_lsh_pairs(
         "minhash_sigs", minhash_signatures(df, id_col)
     )
 
-    banded = band_buckets(sigs, id_col=id_col)
-
-    small_buckets = (
-        banded.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where((F.col("n") > 1) & (F.col("n") <= LSH_MAX_BUCKET))
-        .select("band", "bucket")
-    )
-    banded = banded.join(small_buckets, ["band", "bucket"], "left_semi")
-
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
+    cand = _self_join_pairs(
+        band_buckets(sigs, id_col=id_col), ["band", "bucket"], LSH_MAX_BUCKET
     )
 
     sh = sigs.select(F.col(id_col).alias("id"), F.array_distinct("shingles").alias("sh"))
@@ -238,11 +265,7 @@ def minhash_lsh_pairs(
         .select(
             "id_a",
             "id_b",
-            F.round(
-                F.size(F.array_intersect("a.sh", "b.sh")).cast("double")
-                / F.size(F.array_union("a.sh", "b.sh")).cast("double"),
-                4,
-            ).alias("jaccard"),
+            shingle_jaccard("a.sh", "b.sh").alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
     )
@@ -262,9 +285,10 @@ def lsh_recall_audit(df: DataFrame) -> DataFrame:
     frequencies — quadratic on boilerplate shingles BY DESIGN (it is the
     brute-force baseline the LSH exists to avoid); at corpus scale this
     audit runs on a stratified sample, not the full table. The candidate
-    side reuses the production path verbatim (same signatures, bands,
-    and ``LSH_MAX_BUCKET`` cap as ``minhash_lsh_pairs``), so the reported recall
-    prices the cap's true cost instead of an idealized uncapped join.
+    side is the production path itself (the same ``band_buckets`` and
+    capped :func:`_self_join_pairs` call as ``minhash_lsh_pairs``), so the
+    reported recall prices the cap's true cost instead of an idealized
+    uncapped join.
     """
     sigs = minhash_signatures(df)
 
@@ -275,49 +299,18 @@ def lsh_recall_audit(df: DataFrame) -> DataFrame:
             F.array_distinct(F.transform("shingles", lambda s: md5_prefix_long(s, 8)))
         ).alias("shh"),
     )
-    tc = (
-        shh.alias("l")
-        .join(
-            shh.alias("r"),
-            (F.col("l.shh") == F.col("r.shh")) & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
+    tc = _self_join_pairs(shh, ["shh"], None)
     dsh = sigs.select(F.col("doc_id").alias("id"), F.array_distinct("shingles").alias("sh"))
-    jac = F.round(
-        F.size(F.array_intersect("a.sh", "b.sh")).cast("double")
-        / F.size(F.array_union("a.sh", "b.sh")).cast("double"),
-        4,
-    )
     truth = (
         tc.join(dsh.alias("a"), F.col("id_a") == F.col("a.id"))
         .join(dsh.alias("b"), F.col("id_b") == F.col("b.id"))
-        .select("id_a", "id_b", jac.alias("jaccard"))
+        .select("id_a", "id_b", shingle_jaccard("a.sh", "b.sh").alias("jaccard"))
         .where(F.col("jaccard") >= 0.5)
         .select("id_a", "id_b")
     )
 
-    # production candidate set: same bands + bucket cap as the real path
-    banded = band_buckets(sigs)
-    small = (
-        banded.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where((F.col("n") > 1) & (F.col("n") <= LSH_MAX_BUCKET))
-        .select("band", "bucket")
-    )
-    kept = banded.join(small, ["band", "bucket"], "left_semi")
-    cand = (
-        kept.alias("l")
-        .join(
-            kept.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
+    # the production candidate set: minhash_lsh_pairs' own band join
+    cand = _self_join_pairs(band_buckets(sigs), ["band", "bucket"], LSH_MAX_BUCKET)
 
     t = truth.select("id_a", "id_b", F.lit(1).alias("in_truth"))
     c = cand.select("id_a", "id_b", F.lit(1).alias("in_cand"))
@@ -416,15 +409,7 @@ def token_jaccard_pairs(df: DataFrame) -> DataFrame:
     pref = arrs.select(
         "id", F.explode(F.slice("toks", F.lit(1), prefix_len)).alias("tok")
     )
-    cand = (
-        pref.alias("a")
-        .join(
-            pref.alias("b"),
-            (F.col("a.tok") == F.col("b.tok")) & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    cand = _self_join_pairs(pref, ["tok"], None)
     a = arrs.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"),
                     F.col("n_tok").alias("n_a"))
     b = arrs.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"),
@@ -569,42 +554,11 @@ def simhash_pairs(df: DataFrame) -> DataFrame:
     )
     sigs = _persist_scoped("simhash_sigs", sigs)
 
-    banded = sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("simhash", b * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bucket"),
-                    )
-                    for b in range(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-
-    small_buckets = (
-        banded.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where((F.col("n") > 1) & (F.col("n") <= LSH_MAX_BUCKET))
-        .select("band", "bucket")
-    )
-    banded = banded.join(small_buckets, ["band", "bucket"], "left_semi")
-
-    left, right = banded.alias("l"), banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
+    banded = _band_rows(sigs, "id", [
+        F.shiftright("simhash", b * width).bitwiseAND(F.lit(mask))
+        for b in range(SIMHASH_BANDS)
+    ])
+    cand = _self_join_pairs(banded, ["band", "bucket"], LSH_MAX_BUCKET)
     a = sigs.select(F.col("id").alias("id_a"), F.col("simhash").alias("sig_a"))
     b = sigs.select(F.col("id").alias("id_b"), F.col("simhash").alias("sig_b"))
     return (
@@ -733,6 +687,17 @@ def _drop_hot_units(units: DataFrame, hot: DataFrame, key, unit: str,
     )
 
 
+def _text_lines():
+    """The ``text`` column split into lines, shared by the line passes.
+    ``\\r?\\n``: CRLF documents would otherwise carry a trailing \\r on
+    every line — Spark trim strips spaces only, so "blank" lines ('\\r')
+    would count as content and the same line would hash differently in
+    CRLF vs LF documents. coalesce: ``split(NULL)`` is NULL, which
+    posexplodes to zero rows and would silently DROP a NULL-text document
+    from the output — every document must come back."""
+    return F.split(F.coalesce(F.col("text"), F.lit("")), "\r?\n")
+
+
 LINE_MAX_DF = 16        # lines in more docs than this are boilerplate
 
 
@@ -756,15 +721,7 @@ def line_dedup(df: DataFrame) -> DataFrame:
     lh = md5_prefix_long(F.trim(F.col("line")), 15)
     lines = df.select(
         F.col("doc_id").alias("id"),
-        # \r?\n: CRLF documents would otherwise carry a trailing \r on
-        # every line — Spark trim strips spaces only, so "blank" lines
-        # ('\r') would count as content and the same line would hash
-        # differently in CRLF vs LF documents. coalesce: split(NULL)
-        # posexplodes to zero rows, which would silently DROP a NULL-text
-        # document from the output — every document must come back.
-        F.posexplode(
-            F.split(F.coalesce(F.col("text"), F.lit("")), "\r?\n")
-        ).alias("pos", "line"),
+        F.posexplode(_text_lines()).alias("pos", "line"),
     ).withColumn("lh", lh)
 
     hot = (
@@ -803,9 +760,7 @@ def host_line_dedup(df: DataFrame) -> DataFrame:
         F.col("doc_id").alias("id"),
         F.col("host"),
         hh.alias("hh"),
-        F.posexplode(
-            F.split(F.coalesce(F.col("text"), F.lit("")), "\r?\n")
-        ).alias("pos", "line"),
+        F.posexplode(_text_lines()).alias("pos", "line"),
     ).withColumn("lh", md5_prefix_long(F.trim(F.col("line")), 15))
 
     host_pages = (
@@ -849,7 +804,7 @@ def collapse_repeated_lines(df: DataFrame) -> DataFrame:
     by document size, embarrassingly parallel, streaming-safe — no state,
     no exchange at any scale. Replayed expression-for-expression in the
     DuckDB twin (same index-lambda + prefix-slice semantics)."""
-    arr = F.split(F.coalesce(F.col("text"), F.lit("")), "\r?\n")
+    arr = _text_lines()
     kept = F.filter(
         arr,
         lambda x, i: (F.trim(x) == "")

@@ -18,7 +18,11 @@ committed fingerprint set. The near check band-joins the new batch's
 (band, bucket) rows against bucket keys derived from the STORED
 committed signatures (xxhash64 over sig slices — no md5 over text), with
 the same union-wide bucket cap as ``minhash_lsh_pairs``, then verifies
-candidates with exact jaccard over stored distinct shingles. Intra-batch
+candidates over stored distinct shingles with ``dedup.shingle_jaccard``,
+the verification ``minhash_lsh_pairs`` uses, so both keep the same pair
+set (and the same SQL twin). The union-wide cap counts each side's
+buckets on its own and re-sums them, so the bucketed store's count stays
+exchange-free; that is why this join is not ``_self_join_pairs``. Intra-batch
 duplicates are deliberately NOT grounds for dropping here — they are the
 batch's own clustering problem (``dedup_clusters``), and an ingest gate
 that silently collapsed them would hide data-quality signal. Every new
@@ -31,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint_md5
-from .dedup import LSH_MAX_BUCKET, band_buckets, minhash_signatures
+from .dedup import LSH_MAX_BUCKET, band_buckets, minhash_signatures, shingle_jaccard
 
 
 def committed_state(df: DataFrame) -> DataFrame:
@@ -157,16 +161,7 @@ def incremental_status_against_state(
     near = (
         cand.join(a, "id_new")
         .join(b, "id_old")
-        .where(
-            # rounded exactly like minhash_lsh_pairs' verification so the
-            # state path keeps the same pair set (and the same SQL twin)
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
-                4,
-            )
-            >= 0.5
-        )
+        .where(shingle_jaccard("sh_a", "sh_b") >= 0.5)
         .select(F.col("id_new").alias("id"))
         .distinct()
         .withColumn("n", F.lit(True))

@@ -140,10 +140,11 @@ class TestPdf:
 
 class TestLenientCascade:
     def test_strict_success_exits_early(self):
-        from ocr_spark.core.htmlparse import extract_html_text_cascade
+        from ocr_spark.core.htmlparse import extract_kept_blocks_cascade
 
         html = "<p>" + "real article content " * 3 + "</p>"
-        text, n, strategy = extract_html_text_cascade(html)
+        kept, strategy = extract_kept_blocks_cascade(html)
+        text, n = "\n".join(b.text for b in kept), len(kept)
         assert strategy == "strict" and n == 1 and "real article" in text
 
     def test_lenient_recovers_class_blocklisted_content(self):
@@ -151,11 +152,12 @@ class TestLenientCascade:
         'related'-classed container) drops to empty under strict; the
         lenient pass recovers it with status ok_lenient."""
         from ocr_spark.core.extract import extract_record
-        from ocr_spark.core.htmlparse import extract_html_text_cascade
+        from ocr_spark.core.htmlparse import extract_kept_blocks_cascade
 
         html = ('<div class="related"><p>this is the entire article body, '
                 "long enough to keep and clearly prose</p></div>")
-        text, n, strategy = extract_html_text_cascade(html)
+        kept, strategy = extract_kept_blocks_cascade(html)
+        text, n = "\n".join(b.text for b in kept), len(kept)
         assert strategy == "lenient" and n == 1 and "entire article" in text
 
         r = extract_record("u", html.encode(), None, "en")

